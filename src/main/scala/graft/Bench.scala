@@ -1,21 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional args = query names to bench (local iteration); the driver
     // runs with no args = the full board
     val only = args.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is ns
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.cpus(32)
+    val spark = Sessions.create("graft-bench", Sessions.master(32))
     spark.sparkContext.setLogLevel("WARN")
     // warmup: JIT + codegen + parquet footer/schema caches for every
     // table, so per-query numbers aren't dominated by first-read costs

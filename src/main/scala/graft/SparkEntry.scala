@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dfl.DflFrame
+import graft.llm.Ann
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -620,9 +621,9 @@ object SparkEntry {
       val model = llm.Embeddings.pcaFit(corpus, "vec_id", "embedding", k = 16)
       val proj = llm.Embeddings.pcaProject(corpus, "vec_id", "embedding", model)
       val q = proj.filter(col("id") === 0).head().getSeq[Double](1)
-      llm.Similarity.lshTopKIndexed(proj, "id", "proj",
-        s"$dir#ann_pca_lsh", q, 10, nBits = 8, minCandidates = 20,
-        partitionBits = 4)
+      Ann.probe(Ann.Cached(proj, "id", "proj", s"$dir#ann_pca_lsh",
+          Ann.Build("lsh", nBits = 8, partitionBits = 4)),
+        Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(20)))
     }),
     "pca_norms" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
@@ -1354,7 +1355,8 @@ object SparkEntry {
       val idxDir = memoIndexDir(dir, "ivfpq")(
         llm.Pq.ivfPqBuild(corpus, "vec_id", "embedding", _,
           kLists = 8, m = 8, k = 16))
-      val top = llm.Pq.ivfPqQuery(s, idxDir, q, 11, nprobe = 1)
+      val top = Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(11), tuning = Some(1)))
         .collect().map(_.getLong(0)).toSet
       val clique = Set(0L) ++ (1L to 10L).map(_ + 100000L)
       Seq(Tuple1(top == clique)).toDF("clique_exact")
@@ -1372,7 +1374,8 @@ object SparkEntry {
       val idxDir = memoIndexDir(dir, "opq")(
         llm.Pq.ivfPqBuild(corpus, "vec_id", "embedding", _,
           kLists = 8, m = 8, k = 16, opq = true))
-      val top = llm.Pq.ivfPqQuery(s, idxDir, q, 11, nprobe = 1)
+      val top = Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(11), tuning = Some(1)))
         .collect().map(_.getLong(0)).toSet
       val clique = Set(0L) ++ (1L to 10L).map(_ + 100000L)
       val enc = s.read.parquet(s"$idxDir/codebooks")
@@ -1390,7 +1393,8 @@ object SparkEntry {
       val idxDir = memoIndexDir(dir, "ivfpq-refined")(
         llm.Pq.ivfPqBuild(corpus, "vec_id", "embedding", _,
           kLists = 8, m = 8, k = 16, keepVectors = true))
-      llm.Pq.ivfPqQueryRefined(s, idxDir, q, 10, nprobe = 1)
+      Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(1), refine = Some(4)))
     }),
     "ann_opq_refined" -> ((s, dir) => {
       // OPQ hash-anchored END-TO-END: the rotated-codes index nominates
@@ -1404,7 +1408,8 @@ object SparkEntry {
       val idxDir = memoIndexDir(dir, "opq-refined")(
         llm.Pq.ivfPqBuild(corpus, "vec_id", "embedding", _,
           kLists = 8, m = 8, k = 16, opq = true, keepVectors = true))
-      llm.Pq.ivfPqQueryRefined(s, idxDir, q, 10, nprobe = 1)
+      Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(1), refine = Some(4)))
     }),
     "ann_ivfpq_filtered_refined" -> ((s, dir) => {
       // the FILTERED + REFINED serving shape (closes the refine matrix):
@@ -1419,8 +1424,9 @@ object SparkEntry {
           corpus.withColumn("flag", (col("vec_id") % 2).cast("int")),
           "vec_id", "embedding", _, kLists = 8, m = 8, k = 16,
           keepVectors = true, metaCols = Seq("flag")))
-      llm.Pq.ivfPqQueryFilteredRefined(s, idxDir, q, 5,
-        col("flag") === 0, nprobe = 1, rerankFactor = 4)
+      Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 0), tuning = Some(1),
+          refine = Some(4)))
     }),
     "ann_ivfpq_range_refined" -> ((s, dir) => {
       // the REFINED range contract: ADC nominates at a LOOSENED
@@ -1435,7 +1441,8 @@ object SparkEntry {
       val idxDir = memoIndexDir(dir, "ivfpq-refined")(
         llm.Pq.ivfPqBuild(corpus, "vec_id", "embedding", _,
           kLists = 8, m = 8, k = 16, keepVectors = true))
-      llm.Pq.ivfPqRangeRefined(s, idxDir, q, 0.99, nprobe = 1, slack = 0.5)
+      Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.Range(0.99), tuning = Some(1), refine = Some(10)))
     }),
     "ann_ivfpq_filtered" -> ((s, dir) => {
       // the compressed FILTERED serving shape: flag metadata rides into
@@ -1450,8 +1457,8 @@ object SparkEntry {
           corpus.withColumn("flag", (col("vec_id") % 2).cast("int")),
           "vec_id", "embedding", _, kLists = 8, m = 8, k = 16,
           metaCols = Seq("flag")))
-      val top = llm.Pq.ivfPqQueryFiltered(s, idxDir, q, 6,
-        col("flag") === 0, nprobe = 1)
+      val top = Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(6), filter = Some(col("flag") === 0), tuning = Some(1)))
         .collect().map(_.getLong(0)).toSet
       val evenClique = Set(0L) ++ (1L to 5L).map(r => 100000L + 2 * r)
       Seq(Tuple1(top == evenClique)).toDF("filtered_clique_exact")
@@ -1470,7 +1477,8 @@ object SparkEntry {
         (prefix, d) => llm.Pq.ivfPqBuild(prefix, "vec_id", "embedding", d,
           kLists = 8, m = 8, k = 16),
         (rest, d) => llm.Pq.ivfPqAppend(rest, "vec_id", "embedding", d))
-      val top = llm.Pq.ivfPqQuery(s, idxDir, q, 11, nprobe = 1)
+      val top = Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(11), tuning = Some(1)))
         .collect().map(_.getLong(0)).toSet
       val clique = Set(0L) ++ (1L to 10L).map(_ + 100000L)
       Seq(Tuple1(top == clique)).toDF("clique_exact")
@@ -1479,7 +1487,7 @@ object SparkEntry {
       // BATCHED compressed serving: one pruned union read over all
       // queries' nprobe lists, every code row ADC-scored against the
       // whole query matrix in one native PqAdcDots loop, per-query
-      // membership filters (batch ≡ per-query ivfPqQuery). Contract (as
+      // membership filters (batch ≡ per-query ivfpq probes). Contract (as
       // the other ivfpq rows — codebooks aren't engine-replayable): each
       // query's planted clique shares its codes AND rank-0 list, so each
       // per-qid top-11 at nprobe=1 is exactly that query's clique.
@@ -1488,7 +1496,8 @@ object SparkEntry {
       val idxDir = memoIndexDir(dir, "ivfpq-batch")(
         llm.Pq.ivfPqBuild(corpus, "vec_id", "embedding", _,
           kLists = 8, m = 8, k = 16))
-      val got = llm.Pq.ivfPqQueryBatch(s, idxDir, queries, 11, nprobe = 1)
+      val got = Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.Batch(queries), Ann.TopK(11), tuning = Some(1)))
         .collect().groupBy(_.getLong(0))
         .view.mapValues(_.map(_.getLong(1)).toSet).toMap
       val ok = queries.forall { case (qid, _) =>
@@ -1538,7 +1547,8 @@ object SparkEntry {
       val rn = math.sqrt(qRecon.map(x => x * x).sum)
       val cliqueCos = qArr.zip(qRecon).map { case (a, b) => a * b }.sum / (qn * rn)
       val minCos = math.max(-0.99, cliqueCos - 0.05)
-      val got = llm.Pq.ivfPqRange(s, idxDir, q, minCos, nprobe)
+      val got = Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.Range(minCos), tuning = Some(nprobe)))
       // independent engine-side verify: full decode of the probed lists
       val lists = llm.Similarity.nearestLists(idx.centroids, qArr, nprobe)
       val cbLit = typedLit(idx.model.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
@@ -2015,7 +2025,7 @@ object SparkEntry {
       // LSH recall is covered by LlmSpec's gate).
       // Index lifecycle, same as ann_ivf_topk: first call pays the
       // one-pass lshBuild (signatures + prefix-partitioned write); later
-      // calls are partition-pruned lshQuery probes. nBits = 8 keeps the
+      // calls are partition-pruned lsh probes. nBits = 8 keeps the
       // signature dense enough for this small corpus that the radius-1
       // ball already holds candidates; partitionBits = 4 sizes the
       // LAYOUT to the corpus — 16 partition dirs for ~2k vectors, not
@@ -2025,9 +2035,9 @@ object SparkEntry {
       // 0.3 s at sf0.1); minCandidates = 20 makes the warm probe ONE
       // pruned read (no expansion jobs).
       val (corpus, q) = plantedCliqueCorpus(s, dir)
-      llm.Similarity.lshTopKIndexed(corpus, "vec_id", "embedding",
-        s"$dir#ann_lsh_topk", q, 10, nBits = 8, minCandidates = 20,
-        partitionBits = 4)
+      Ann.probe(Ann.Cached(corpus, "vec_id", "embedding", s"$dir#ann_lsh_topk",
+          Ann.Build("lsh", nBits = 8, partitionBits = 4)),
+        Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(20)))
     }),
     // FILTERED ANN (predicate + top-k), the "nearest k WHERE …" serving
     // shape: a `flag = vec_id % 2` metadata column rides INTO the index
@@ -2039,18 +2049,16 @@ object SparkEntry {
     // clique shares the query's rank-0 list / Hamming-0 bucket).
     "ann_filtered_topk" -> ((s, dir) => {
       val (corpus, q) = plantedCliqueCorpus(s, dir)
-      llm.Similarity.ivfTopKFilteredIndexed(
-        corpus.withColumn("flag", (col("vec_id") % 2).cast("int")),
-        "vec_id", "embedding", s"$dir#ann_filtered", q, 5,
-        col("flag") === 0, metaCols = Seq("flag"))
+      Ann.probe(Ann.Cached(corpus.withColumn("flag", (col("vec_id") % 2).cast("int")), "vec_id",
+          "embedding", s"$dir#ann_filtered", Ann.Build("ivf", metaCols = Seq("flag"))),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 0)))
     }),
     "ann_lsh_filtered_topk" -> ((s, dir) => {
       val (corpus, q) = plantedCliqueCorpus(s, dir)
-      llm.Similarity.lshTopKFilteredIndexed(
-        corpus.withColumn("flag", (col("vec_id") % 2).cast("int")),
-        "vec_id", "embedding", s"$dir#ann_lsh_filtered", q, 5,
-        col("flag") === 0, metaCols = Seq("flag"), nBits = 8,
-        minCandidates = 20, partitionBits = 4)
+      Ann.probe(Ann.Cached(corpus.withColumn("flag", (col("vec_id") % 2).cast("int")), "vec_id",
+          "embedding", s"$dir#ann_lsh_filtered",
+          Ann.Build("lsh", nBits = 8, partitionBits = 4, metaCols = Seq("flag"))),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 0), tuning = Some(20)))
     }),
     // BATCH filtered serving: per query the even-id clique slice ties at
     // cos 1.0 (query 1's own odd-id row is predicate-excluded — its
@@ -2059,18 +2067,17 @@ object SparkEntry {
     // closed-form per query
     "ann_filtered_batch" -> ((s, dir) => {
       val (corpus, queries) = plantedBatchCorpus(s, dir)
-      llm.Similarity.ivfTopKBatchFilteredIndexed(
-        corpus.withColumn("flag", (col("vec_id") % 2).cast("int")),
-        "vec_id", "embedding", s"$dir#ann_filtered_batch", queries, 5,
-        col("flag") === 0, metaCols = Seq("flag"))
+      Ann.probe(Ann.Cached(corpus.withColumn("flag", (col("vec_id") % 2).cast("int")), "vec_id",
+          "embedding", s"$dir#ann_filtered_batch", Ann.Build("ivf", metaCols = Seq("flag"))),
+        Ann.Probe(Ann.Batch(queries), Ann.TopK(5), filter = Some(col("flag") === 0)))
     }),
     "ann_lsh_filtered_batch" -> ((s, dir) => {
       val (corpus, queries) = plantedBatchCorpus(s, dir)
-      llm.Similarity.lshTopKBatchFilteredIndexed(
-        corpus.withColumn("flag", (col("vec_id") % 2).cast("int")),
-        "vec_id", "embedding", s"$dir#ann_lsh_filtered_batch", queries, 5,
-        col("flag") === 0, metaCols = Seq("flag"), nBits = 8,
-        minCandidates = 20, partitionBits = 4)
+      Ann.probe(Ann.Cached(corpus.withColumn("flag", (col("vec_id") % 2).cast("int")), "vec_id",
+          "embedding", s"$dir#ann_lsh_filtered_batch",
+          Ann.Build("lsh", nBits = 8, partitionBits = 4, metaCols = Seq("flag"))),
+        Ann.Probe(Ann.Batch(queries), Ann.TopK(5), filter = Some(col("flag") === 0),
+          tuning = Some(20)))
     }),
     // FILTERED range: the predicate composes with the threshold verify
     // (no widening — range has no k); SHARES the topk rows' cache keys
@@ -2078,18 +2085,16 @@ object SparkEntry {
     // filtered probes. Expected: the six even-id clique members at 1.0.
     "ann_filtered_range" -> ((s, dir) => {
       val (corpus, q) = plantedCliqueCorpus(s, dir)
-      llm.Similarity.ivfRangeFilteredIndexed(
-        corpus.withColumn("flag", (col("vec_id") % 2).cast("int")),
-        "vec_id", "embedding", s"$dir#ann_filtered", q, minCos = 0.99,
-        col("flag") === 0, metaCols = Seq("flag"))
+      Ann.probe(Ann.Cached(corpus.withColumn("flag", (col("vec_id") % 2).cast("int")), "vec_id",
+          "embedding", s"$dir#ann_filtered", Ann.Build("ivf", metaCols = Seq("flag"))),
+        Ann.Probe(Ann.One(q), Ann.Range(0.99), filter = Some(col("flag") === 0)))
     }),
     "ann_lsh_filtered_range" -> ((s, dir) => {
       val (corpus, q) = plantedCliqueCorpus(s, dir)
-      llm.Similarity.lshRangeFilteredIndexed(
-        corpus.withColumn("flag", (col("vec_id") % 2).cast("int")),
-        "vec_id", "embedding", s"$dir#ann_lsh_filtered", q, minCos = 0.99,
-        col("flag") === 0, metaCols = Seq("flag"), nBits = 8,
-        partitionBits = 4)
+      Ann.probe(Ann.Cached(corpus.withColumn("flag", (col("vec_id") % 2).cast("int")), "vec_id",
+          "embedding", s"$dir#ann_lsh_filtered",
+          Ann.Build("lsh", nBits = 8, partitionBits = 4, metaCols = Seq("flag"))),
+        Ann.Probe(Ann.One(q), Ann.Range(0.99), filter = Some(col("flag") === 0)))
     }),
     // the same filtered serving shape through the DFL dispatch: the
     // predicate's attribute set ('@flag') IS the metadata column list
@@ -2108,9 +2113,9 @@ object SparkEntry {
     // cache key and params — one build serves top-k and range.
     "ann_lsh_range" -> ((s, dir) => {
       val (corpus, q) = plantedCliqueCorpus(s, dir)
-      llm.Similarity.lshRangeIndexed(corpus, "vec_id", "embedding",
-        s"$dir#ann_lsh_topk", q, minCos = 0.99, nBits = 8,
-        partitionBits = 4)
+      Ann.probe(Ann.Cached(corpus, "vec_id", "embedding", s"$dir#ann_lsh_topk",
+          Ann.Build("lsh", nBits = 8, partitionBits = 4)),
+        Ann.Probe(Ann.One(q), Ann.Range(0.99)))
     }),
     // the IVF range sibling: probes the query's nprobe nearest lists and
     // exact-verifies the threshold. SHARES ann_ivf_topk's cache key and
@@ -2118,8 +2123,8 @@ object SparkEntry {
     // (top-k | range) × (lsh | ivf) indexed serving matrix.
     "ann_ivf_range" -> ((s, dir) => {
       val (corpus, q) = plantedCliqueCorpus(s, dir)
-      llm.Similarity.ivfRangeIndexed(corpus, "vec_id", "embedding",
-        s"$dir#ann_ivf_topk", q, minCos = 0.99)
+      Ann.probe(Ann.Cached(corpus, "vec_id", "embedding", s"$dir#ann_ivf_topk", Ann.Build("ivf")),
+        Ann.Probe(Ann.One(q), Ann.Range(0.99)))
     }),
     // indexed RANGE serving through the DFL front door: the annRange
     // stage's 'lsh' method dispatch against the same planted corpus —
@@ -2145,7 +2150,7 @@ object SparkEntry {
         (prefix, d) => llm.Similarity.lshBuild(prefix, "vec_id", "embedding",
           d, nBits = 8, dim = 64, partitionBits = 4),
         (rest, d) => llm.Similarity.lshAppend(rest, "vec_id", "embedding", d))
-      llm.Similarity.lshQuery(s, idxDir, q, 10, minCandidates = 20)
+      Ann.probe(Ann.Dir(s, idxDir), Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(20)))
     }),
     "ann_ivf_append" -> ((s, dir) => {
       // the IVF append lifecycle under the hard oracle. Unlike LSH,
@@ -2162,7 +2167,7 @@ object SparkEntry {
         (prefix, d) => { llm.Similarity.ivfBuild(prefix, "vec_id",
           "embedding", d); () },
         (rest, d) => llm.Similarity.ivfAppend(rest, "vec_id", "embedding", d))
-      llm.Similarity.ivfQuery(s, idxDir, q, 10, nprobe = 8)
+      Ann.probe(Ann.Dir(s, idxDir), Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(8)))
     }),
     "dedup_cosine_bucketed" -> ((s, dir) => {
       // banded-LSH cosine dedup, oracle-checkable: plant near-identical
@@ -2192,7 +2197,7 @@ object SparkEntry {
         llm.Similarity.ivfBuild(corpus, "vec_id", "embedding", d)
         llm.Similarity.annDelete(s, d, annDeletedIds); ()
       }
-      llm.Similarity.ivfQuery(s, idxDir, q, 6, nprobe = 8)
+      Ann.probe(Ann.Dir(s, idxDir), Ann.Probe(Ann.One(q), Ann.TopK(6), tuning = Some(8)))
     }),
     "ann_lsh_delete" -> ((s, dir) => {
       // the LSH twin — additionally exercises the occupancy-histogram
@@ -2204,7 +2209,7 @@ object SparkEntry {
         llm.Similarity.lshBuild(corpus, "vec_id", "embedding", d)
         llm.Similarity.annDelete(s, d, annDeletedIds); ()
       }
-      llm.Similarity.lshQuery(s, idxDir, q, 6)
+      Ann.probe(Ann.Dir(s, idxDir), Ann.Probe(Ann.One(q), Ann.TopK(6)))
     }),
     "ann_ivfpq_delete" -> ((s, dir) => {
       // the compressed-family delete under the REAL brute-force oracle:
@@ -2218,7 +2223,8 @@ object SparkEntry {
           kLists = 8, m = 8, k = 16, keepVectors = true)
         llm.Similarity.annDelete(s, d, annDeletedIds); ()
       }
-      llm.Pq.ivfPqQueryRefined(s, idxDir, q, 6, nprobe = 1)
+      Ann.probe(Ann.Dir(s, idxDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(6), tuning = Some(1), refine = Some(4)))
     }),
     "ann_ivf_topk" -> ((s, dir) => {
       // shared planted clique (plantedCliqueCorpus): the copies share the
@@ -2228,10 +2234,10 @@ object SparkEntry {
       // Index lifecycle: the FIRST call for this corpus pays ivfBuild
       // (train distributed + list-partitioned write); every later call —
       // warm bench passes, repeated serving — is a partition-pruned
-      // ivfQuery probe of nprobe lists. Train-once-at-ingest, concretely.
+      // ivf probe of nprobe lists. Train-once-at-ingest, concretely.
       val (corpus, q) = plantedCliqueCorpus(s, dir)
-      llm.Similarity.ivfTopKIndexed(corpus, "vec_id", "embedding",
-        s"$dir#ann_ivf_topk", q, 10)
+      Ann.probe(Ann.Cached(corpus, "vec_id", "embedding", s"$dir#ann_ivf_topk", Ann.Build("ivf")),
+        Ann.Probe(Ann.One(q), Ann.TopK(10)))
     }),
     // probeMeta runs the REAL decode path (ImageIO header sniff per row —
     // text bytes fail the sniff fast and keep null dims); the registered
@@ -2242,8 +2248,9 @@ object SparkEntry {
       // list, so every query's top-10 provably equals brute force. One
       // pruned union read scores the whole query matrix.
       val (corpus, queries) = plantedBatchCorpus(s, dir)
-      llm.Similarity.ivfTopKBatchIndexed(corpus,
-        "vec_id", "embedding", s"$dir#ann_ivf_batch", queries, 10)
+      Ann.probe(Ann.Cached(corpus, "vec_id", "embedding", s"$dir#ann_ivf_batch",
+          Ann.Build("ivf")),
+        Ann.Probe(Ann.Batch(queries), Ann.TopK(10)))
     }),
     // batched RANGE against the same cached IVF index (shared key and
     // params with ann_ivf_batch — one build serves top-k and range): one
@@ -2251,17 +2258,18 @@ object SparkEntry {
     // threshold verify, no aggregation at all
     "ann_ivf_range_batch" -> ((s, dir) => {
       val (corpus, queries) = plantedBatchCorpus(s, dir)
-      llm.Similarity.ivfRangeBatchIndexed(corpus,
-        "vec_id", "embedding", s"$dir#ann_ivf_batch", queries, minCos = 0.99)
+      Ann.probe(Ann.Cached(corpus, "vec_id", "embedding", s"$dir#ann_ivf_batch",
+          Ann.Build("ivf")),
+        Ann.Probe(Ann.Batch(queries), Ann.Range(0.99)))
     }),
     // the LSH twin: union-of-Hamming-balls pruned read at the
     // threshold-derived radius; the bit-identical planted cliques sit at
     // Hamming 0, so recall is guaranteed and brute force is the oracle
     "ann_lsh_range_batch" -> ((s, dir) => {
       val (corpus, queries) = plantedBatchCorpus(s, dir)
-      llm.Similarity.lshRangeBatchIndexed(corpus,
-        "vec_id", "embedding", s"$dir#ann_lsh_range_batch", queries,
-        minCos = 0.99, nBits = 8, partitionBits = 4)
+      Ann.probe(Ann.Cached(corpus, "vec_id", "embedding", s"$dir#ann_lsh_range_batch",
+          Ann.Build("lsh", nBits = 8, partitionBits = 4)),
+        Ann.Probe(Ann.Batch(queries), Ann.Range(0.99)))
     }),
     // batched range serving through the DFL front door ('lsh' dispatch,
     // ad-hoc-vs-indexed resolution exactly as annTopKBatch)

@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 import graft.io.DataStoreIO
+import graft.util.Sessions
 
 /** `gss convert` mirror (reference: cli/convert.go:23-50): deserialize the
   * input in one format, serialize to another — no DFL, pure format
@@ -112,14 +113,7 @@ object ConvertCli {
   def main(args: Array[String]): Unit = {
     val c0 = parseArgs(args)
     val c = if (c0.inputUri == "-" || c0.inputUri == "stdin") spoolStdin(c0) else c0
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-convert")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-convert", Sessions.master(4))
     spark.sparkContext.setLogLevel("ERROR")
     try convert(spark, c) finally spark.stop()
   }

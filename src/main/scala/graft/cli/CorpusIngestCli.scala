@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.DataStoreIO
+import graft.util.Sessions
 
 /** `ingest-corpus`: the WHOLE incremental training-corpus ingest as one
   * command — the batch product surface tying this library's pipeline
@@ -145,15 +146,7 @@ object CorpusIngestCli {
 
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-ingest-corpus")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-ingest-corpus", Sessions.master(4))
     spark.sparkContext.setLogLevel("ERROR")
     if (c.stream) {
       // continuous mode: --new-uri is the watched dir; retained/bench

@@ -1,6 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** `dfl eval` command: evaluate a DFL expression against a JSON context;
   * a Boolean result sets the process exit code (0=true, 1=false) exactly
@@ -23,13 +24,7 @@ object EvalCli {
       }
       i += 1
     }
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-eval")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-eval", Sessions.master(2))
     spark.sparkContext.setLogLevel("ERROR")
     try {
       import spark.implicits._

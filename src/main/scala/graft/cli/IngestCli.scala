@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamRunner
+import graft.util.Sessions
 
 /** `ingest-ann` / `ingest-bm25` command: keep a live index fresh from a
   * stream of corpus files — the ingest counterpart of [[ServeCli]]'s
@@ -155,15 +156,7 @@ object IngestCli {
 
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-ingest-ann")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-ingest-ann", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
     try {
       val q = run(spark, c)

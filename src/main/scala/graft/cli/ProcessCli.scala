@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.dfl.DflFrame
 import graft.io.{DataStoreIO, FormatInfer}
 import graft.streaming.StreamRunner
+import graft.util.Sessions
 
 /** `process` command: read → DFL pipeline → write. The Spark-native
   * mirror of the reference CLI (reference: cli/process.go:519-945):
@@ -286,15 +287,7 @@ object ProcessCli {
   def main(args: Array[String]): Unit = {
     val c0 = parseArgs(args)
     val c = if (c0.inputUri == "-" || c0.inputUri == "stdin") spoolStdin(c0) else c0
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-process")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-process", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
     try {
       val out = run(spark, c)

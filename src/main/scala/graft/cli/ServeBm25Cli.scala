@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamRunner
+import graft.util.Sessions
 
 /** `serve-bm25` command — the lexical twin of [[ServeCli]]'s `serve-ann`:
   * drive the streaming BM25 serving job from the command line — a
@@ -125,15 +126,7 @@ object ServeBm25Cli {
 
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-serve-bm25")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-serve-bm25", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
     try {
       val q = run(spark, c)

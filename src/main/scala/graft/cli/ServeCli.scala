@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamRunner
+import graft.util.Sessions
 
 /** `serve-ann` command: drive the streaming ANN serving job from the
   * command line — a watched directory of query files in, answer files
@@ -192,15 +193,7 @@ object ServeCli {
 
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-serve-ann")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-serve-ann", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
     try {
       val q = run(spark, c)

@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamRunner
+import graft.util.Sessions
 
 /** `serve-hybrid` command — the FUSED serving verb completing the
   * [[ServeCli]] (`serve-ann`) / [[ServeBm25Cli]] (`serve-bm25`) family:
@@ -178,15 +179,7 @@ object ServeHybridCli {
 
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-serve-hybrid")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-serve-hybrid", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
     try {
       val q = run(spark, c)

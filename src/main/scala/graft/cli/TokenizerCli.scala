@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.llm.{Bpe, TokenizerStore, Unigram, WordPiece}
+import graft.util.Sessions
 
 /** Tokenizer lifecycle as a product surface — the train-once /
   * serve-everywhere loop the [[graft.llm.TokenizerStore]] artifacts
@@ -125,14 +126,7 @@ object TokenizerCli {
 
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-tokenizer")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-tokenizer", Sessions.master(4))
     spark.sparkContext.setLogLevel("ERROR")
     try {
       if (c.mode == "train") train(spark, c)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import Node._
+import graft.llm.Ann
 
 /** Executes a DFL pipeline against a DataFrame.
   *
@@ -508,6 +509,25 @@ object DflFrame {
         s"expected query-batch var arg: ${Node.render(other)}")
     }
     // a query vector: a $var bound to a numeric Seq, or an inline array
+    def optIntArg(i: Int): Option[Int] = if (args.size > i) Some(intArg(i)) else None
+    // the probe stages' optional `refine` factor (ivfpq + keepVectors)
+    def refineArg(stage: String, i: Int): Option[Int] = {
+      val r = optIntArg(i)
+      r.foreach(f => if (f < 1) throw new DflParseException(
+        s"$stage: refine factor must be >= 1, got $f"))
+      r
+    }
+    // a PREBUILT index dir as a probe source: bm25 and non-index dirs
+    // keep their stage-specific errors (the ANN family itself comes from
+    // the layout inside Ann.probe)
+    def annDir(stage: String, dir: String, bm25Stage: String): Ann.Source =
+      graft.llm.Similarity.indexKind(df.sparkSession, dir) match {
+        case Some("bm25") => throw new DflParseException(
+          s"$stage: '$dir' is a bm25 index — use $bm25Stage")
+        case None => throw new DflParseException(
+          s"$stage: '$dir' is not a built index dir")
+        case _ => Ann.Dir(df.sparkSession, dir)
+      }
     def vecArg(i: Int): Seq[Double] = argAt(i) match {
       case Var(n2) => vars.getOrElse(n2,
         throw new DflParseException(s"unbound $$$n2")) match {
@@ -1372,61 +1392,26 @@ object DflFrame {
         }
 
       case "annProbe" =>
-        // `annProbe(@, $idx, $q, k[, tuning])` — top-k cosine probe of a
-        // PREBUILT, PERSISTENT ANN index: `$idx` is an `index:REF`
-        // catalog var (catalog/Exec resolves + validates it) or a
-        // literal built dir; the method dispatches on the index's OWN
-        // layout (Similarity.indexKind — lsh | ivf | ivfpq). The piped
-        // dataset is NOT scanned: the index already is the corpus
-        // (built by ingest-ann / ensureIndex / serve-ann --build-from),
-        // so a catalog service probes at zero build cost — no
-        // fingerprint-cache rebuild, the partition-pruned warm probe
-        // directly. `tuning`: lsh → minCandidates, ivf/ivfpq → nprobe.
-        // One frozen query → stream-fenced (serve-ann answers query
-        // STREAMS).
+        // `annProbe(@, $idx, $q, k[, tuning[, refine]])` — top-k cosine
+        // probe of a PREBUILT, PERSISTENT ANN index: `$idx` is an
+        // `index:REF` catalog var (catalog/Exec resolves + validates it)
+        // or a literal built dir; the family comes from the index's OWN
+        // layout (lsh | ivf | ivfpq). The piped dataset is NOT scanned:
+        // the index already is the corpus (built by ingest-ann /
+        // ensureIndex / serve-ann --build-from), so a catalog service
+        // probes at zero build cost. `tuning`: lsh → minCandidates,
+        // ivf/ivfpq → nprobe. `refine` N (ivfpq + keepVectors only):
+        // compressed ADC nominates k×N candidates, TRUE cosines from the
+        // float sidecar rerank. One frozen query → stream-fenced
+        // (serve-ann answers query STREAMS).
         if (args.size < 4 || args.size > 6) throw new DflParseException(
           "annProbe takes (@, $indexDir, $query, k[, tuning[, refine]])")
-        val apDir = strArg(1)
-        val apQ = vecArg(2)
         val apK = intArg(3)
         if (apK <= 0) throw new DflParseException("annProbe: k must be positive")
-        // `refine` (6th arg, ivfpq + keepVectors only): compressed ADC
-        // nominates k×refine candidates, TRUE cosines from the float
-        // sidecar rerank — the FAISS refine pattern at probe cost
-        val apRefine = if (args.size > 5) Some(intArg(5)) else None
-        apRefine.foreach(f => if (f < 1) throw new DflParseException(
-          s"annProbe: refine factor must be >= 1, got $f"))
-        val apSpark = df.sparkSession
-        val apKind = graft.llm.Similarity.indexKind(apSpark, apDir)
-        // gate refine only for the FLOAT ANN layouts — a bm25 dir or a
-        // non-index path must keep its own self-describing error below
-        if (apRefine.isDefined &&
-            (apKind.contains("lsh") || apKind.contains("ivf")))
-          throw new DflParseException(
-            "annProbe: refine applies only to an ivfpq index (float " +
-              "layouts already rank by true cosines)")
-        apKind match {
-          case Some("lsh") => graft.llm.Similarity.lshQuery(apSpark, apDir,
-            apQ, apK, minCandidates = if (args.size > 4) intArg(4) else 100)
-          case Some("ivf") => graft.llm.Similarity.ivfQuery(apSpark, apDir,
-            apQ, apK, nprobe = if (args.size > 4) intArg(4) else 8)
-          case Some("ivfpq") => apRefine match {
-            case Some(f) =>
-              if (!graft.llm.Pq.hasVectorSidecar(apSpark, apDir))
-                throw new DflParseException(
-                  "annProbe: refine needs the float sidecar (index " +
-                    "built without keepVectors)")
-              graft.llm.Pq.ivfPqQueryRefined(apSpark, apDir, apQ, apK,
-                nprobe = if (args.size > 4) intArg(4) else 8,
-                rerankFactor = f)
-            case None => graft.llm.Pq.ivfPqQuery(apSpark, apDir,
-              apQ, apK, nprobe = if (args.size > 4) intArg(4) else 8)
-          }
-          case Some("bm25") => throw new DflParseException(
-            s"annProbe: '$apDir' is a bm25 index — use bm25Probe")
-          case _ => throw new DflParseException(
-            s"annProbe: '$apDir' is not a built index dir")
-        }
+        val apRefine = refineArg("annProbe", 5)
+        annStage("annProbe", annDir("annProbe", strArg(1), "bm25Probe"),
+          Ann.Probe(Ann.One(vecArg(2)),
+            Ann.TopK(apK), tuning = optIntArg(4), refine = apRefine))
 
       case "annProbeFiltered" =>
         // `annProbeFiltered(@, $idx, $q, k, 'pred'[, tuning[, refine]])`
@@ -1437,107 +1422,39 @@ object DflFrame {
         // k ELIGIBLE candidates survive (the serving `--filter` shape,
         // exposed to catalog/process users). With `refine` N (ivfpq +
         // keepVectors) the widening loop NOMINATES at k×N eligible per
-        // round and the float sidecar reranks with TRUE cosines — the
-        // round-19 filtered+refined serving shape as a DFL stage. One
-        // frozen query → stream-fenced (serve-ann --filter [--refine]
-        // answers query STREAMS).
+        // round and the float sidecar reranks with TRUE cosines. One
+        // frozen query → stream-fenced.
         if (args.size < 5 || args.size > 7) throw new DflParseException(
           "annProbeFiltered takes (@, $indexDir, $query, k, 'pred'" +
             "[, tuning[, refine]])")
-        val afDir = strArg(1)
-        val afQ = vecArg(2)
         val afK = intArg(3)
         if (afK <= 0)
           throw new DflParseException("annProbeFiltered: k must be positive")
         val afPred = indexPredicate(strArg(4))
-        val afRefine = if (args.size > 6) Some(intArg(6)) else None
-        afRefine.foreach(f => if (f < 1) throw new DflParseException(
-          s"annProbeFiltered: refine factor must be >= 1, got $f"))
-        val afSpark = df.sparkSession
-        val afKind = graft.llm.Similarity.indexKind(afSpark, afDir)
-        if (afRefine.isDefined &&
-            (afKind.contains("lsh") || afKind.contains("ivf")))
-          throw new DflParseException(
-            "annProbeFiltered: refine applies only to an ivfpq index " +
-              "(float layouts already rank by true cosines)")
-        afKind match {
-          case Some("lsh") => graft.llm.Similarity.lshQueryFiltered(afSpark,
-            afDir, afQ, afK, afPred,
-            minCandidates = if (args.size > 5) intArg(5) else 100)
-          case Some("ivf") => graft.llm.Similarity.ivfQueryFiltered(afSpark,
-            afDir, afQ, afK, afPred,
-            nprobe = if (args.size > 5) intArg(5) else 8)
-          case Some("ivfpq") => afRefine match {
-            case Some(f) =>
-              if (!graft.llm.Pq.hasVectorSidecar(afSpark, afDir))
-                throw new DflParseException(
-                  "annProbeFiltered: refine needs the float sidecar " +
-                    "(index built without keepVectors)")
-              graft.llm.Pq.ivfPqQueryFilteredRefined(afSpark, afDir, afQ,
-                afK, afPred, nprobe = if (args.size > 5) intArg(5) else 8,
-                rerankFactor = f)
-            case None => graft.llm.Pq.ivfPqQueryFiltered(afSpark, afDir,
-              afQ, afK, afPred,
-              nprobe = if (args.size > 5) intArg(5) else 8)
-          }
-          case Some("bm25") => throw new DflParseException(
-            s"annProbeFiltered: '$afDir' is a bm25 index — use bm25Probe")
-          case _ => throw new DflParseException(
-            s"annProbeFiltered: '$afDir' is not a built index dir")
-        }
+        val afRefine = refineArg("annProbeFiltered", 6)
+        annStage("annProbeFiltered",
+          annDir("annProbeFiltered", strArg(1), "bm25Probe"),
+          Ann.Probe(Ann.One(vecArg(2)),
+            Ann.TopK(afK), Some(afPred), optIntArg(5), afRefine))
 
       case "annRangeProbe" =>
         // `annRangeProbe(@, $idx, $q, minCos[, tuning[, refine]])` —
         // RANGE probe of a PREBUILT, PERSISTENT index (`index:REF` var
-        // or literal dir): every id whose cosine clears `minCos` — the
-        // threshold-bound sibling of annProbe, completing the DFL probe
-        // family (top-k / batch / hybrid / range). Layout dispatch from
-        // the dir: lsh | ivf score TRUE cosines; ivfpq thresholds its
-        // reconstruction-cosine contract, or with `refine` N (requires
-        // the keepVectors sidecar) nominates at a loosened threshold
-        // (0.05·N slack, the serve-ann contract) and verifies TRUE
-        // cosines exactly. `tuning`: lsh → slackBits, ivf/ivfpq →
-        // nprobe. One frozen query → stream-fenced (serve-ann
-        // --min-cos answers range-query STREAMS).
+        // or literal dir): every id whose cosine clears `minCos`. lsh |
+        // ivf score TRUE cosines; ivfpq thresholds its reconstruction-
+        // cosine contract, or with `refine` N (requires the keepVectors
+        // sidecar) nominates at a loosened threshold (0.05·N slack, the
+        // serve-ann contract) and verifies TRUE cosines exactly.
+        // `tuning`: lsh → slackBits, ivf/ivfpq → nprobe. One frozen
+        // query → stream-fenced.
         if (args.size < 4 || args.size > 6) throw new DflParseException(
           "annRangeProbe takes (@, $indexDir, $query, minCos[, tuning[, refine]])")
-        val arDir = strArg(1)
-        val arQ = vecArg(2)
-        val arT = numArg(3)
-        val arRefine = if (args.size > 5) Some(intArg(5)) else None
-        arRefine.foreach(f => if (f < 1) throw new DflParseException(
-          s"annRangeProbe: refine factor must be >= 1, got $f"))
-        val arSpark = df.sparkSession
-        val arKind = graft.llm.Similarity.indexKind(arSpark, arDir)
-        // same gate scoping as annProbe: wrong-family/non-index dirs
-        // keep their self-describing errors below
-        if (arRefine.isDefined &&
-            (arKind.contains("lsh") || arKind.contains("ivf")))
-          throw new DflParseException(
-            "annRangeProbe: refine applies only to an ivfpq index " +
-              "(float layouts already threshold true cosines)")
-        arKind match {
-          case Some("lsh") => graft.llm.Similarity.lshRange(arSpark, arDir,
-            arQ, arT, slackBits = if (args.size > 4) intArg(4) else 4)
-          case Some("ivf") => graft.llm.Similarity.ivfRange(arSpark, arDir,
-            arQ, arT, nprobe = if (args.size > 4) intArg(4) else 8)
-          case Some("ivfpq") => arRefine match {
-            case Some(f) =>
-              if (!graft.llm.Pq.hasVectorSidecar(arSpark, arDir))
-                throw new DflParseException(
-                  "annRangeProbe: refine needs the float sidecar (index " +
-                    "built without keepVectors)")
-              graft.llm.Pq.ivfPqRangeRefined(arSpark, arDir, arQ, arT,
-                nprobe = if (args.size > 4) intArg(4) else 8,
-                slack = 0.05 * f)
-            case None => graft.llm.Pq.ivfPqRange(arSpark, arDir, arQ, arT,
-              nprobe = if (args.size > 4) intArg(4) else 8)
-          }
-          case Some("bm25") => throw new DflParseException(
-            s"annRangeProbe: '$arDir' is a bm25 index — use bm25Probe")
-          case _ => throw new DflParseException(
-            s"annRangeProbe: '$arDir' is not a built index dir")
-        }
+        val arRefine = refineArg("annRangeProbe", 5)
+        annStage("annRangeProbe",
+          annDir("annRangeProbe", strArg(1), "bm25Probe"),
+          Ann.Probe(Ann.One(vecArg(2)),
+            Ann.Range(numArg(3)), tuning = optIntArg(4),
+            refine = arRefine))
 
       case "bm25Probe" =>
         // `bm25Probe(@, $idx, 'terms', k[, k1, b])` — BM25 top-k probe
@@ -1566,56 +1483,22 @@ object DflFrame {
         }
 
       case "annProbeBatch" =>
-        // `annProbeBatch(@, $idx, $qs, k[, tuning])` — the BATCH twin of
-        // annProbe: every (qid, vector) of `$qs` (the annTopKBatch
-        // [id, vector]-pair request shape) probes the PREBUILT index in
-        // ONE pruned union read, method from the layout (lsh | ivf |
-        // ivfpq), batch ≡ per-query by the family contract. The piped
-        // dataset is never scanned. Stream-fenced (serve-ann answers
-        // query STREAMS).
+        // `annProbeBatch(@, $idx, $qs, k[, tuning[, refine]])` — the
+        // BATCH twin of annProbe: every (qid, vector) of `$qs` (the
+        // annTopKBatch [id, vector]-pair request shape) probes the
+        // PREBUILT index in ONE pruned union read, batch ≡ per-query by
+        // the family contract. The piped dataset is never scanned.
+        // Stream-fenced (serve-ann answers query STREAMS).
         if (args.size < 4 || args.size > 6) throw new DflParseException(
           "annProbeBatch takes (@, $indexDir, $queries, k[, tuning[, refine]])")
-        val abDir = strArg(1)
-        val abQs = queryBatchArg(2)
         val abK = intArg(3)
         if (abK <= 0)
           throw new DflParseException("annProbeBatch: k must be positive")
-        // refine (6th arg): the annProbe contract — ivfpq + keepVectors
-        val abRefine = if (args.size > 5) Some(intArg(5)) else None
-        abRefine.foreach(f => if (f < 1) throw new DflParseException(
-          s"annProbeBatch: refine factor must be >= 1, got $f"))
-        val abSpark = df.sparkSession
-        val abKind = graft.llm.Similarity.indexKind(abSpark, abDir)
-        // same gate scoping as annProbe: wrong-family/non-index dirs
-        // keep their self-describing errors
-        if (abRefine.isDefined &&
-            (abKind.contains("lsh") || abKind.contains("ivf")))
-          throw new DflParseException(
-            "annProbeBatch: refine applies only to an ivfpq index (float " +
-              "layouts already rank by true cosines)")
-        abKind match {
-          case Some("lsh") => graft.llm.Similarity.lshQueryBatch(abSpark,
-            abDir, abQs, abK,
-            minCandidates = if (args.size > 4) intArg(4) else 100)
-          case Some("ivf") => graft.llm.Similarity.ivfQueryBatch(abSpark,
-            abDir, abQs, abK, nprobe = if (args.size > 4) intArg(4) else 8)
-          case Some("ivfpq") => abRefine match {
-            case Some(f) =>
-              if (!graft.llm.Pq.hasVectorSidecar(abSpark, abDir))
-                throw new DflParseException(
-                  "annProbeBatch: refine needs the float sidecar (index " +
-                    "built without keepVectors)")
-              graft.llm.Pq.ivfPqQueryBatchRefined(abSpark, abDir, abQs, abK,
-                nprobe = if (args.size > 4) intArg(4) else 8,
-                rerankFactor = f)
-            case None => graft.llm.Pq.ivfPqQueryBatch(abSpark,
-              abDir, abQs, abK, nprobe = if (args.size > 4) intArg(4) else 8)
-          }
-          case Some("bm25") => throw new DflParseException(
-            s"annProbeBatch: '$abDir' is a bm25 index — use bm25ProbeBatch")
-          case _ => throw new DflParseException(
-            s"annProbeBatch: '$abDir' is not a built index dir")
-        }
+        val abRefine = refineArg("annProbeBatch", 5)
+        annStage("annProbeBatch",
+          annDir("annProbeBatch", strArg(1), "bm25ProbeBatch"),
+          Ann.Probe(Ann.Batch(queryBatchArg(2)),
+            Ann.TopK(abK), tuning = optIntArg(4), refine = abRefine))
 
       case "bm25ProbeBatch" =>
         // `bm25ProbeBatch(@, $idx, $queries, k[, k1, b])` — batched BM25
@@ -1677,25 +1560,19 @@ object DflFrame {
             s"hybridProbe: '$hpBmDir' is not a bm25 index (got $other)")
         }
         val hpAnnKind = graft.llm.Similarity.indexKind(hpSpark, hpAnnDir)
-        val hpSemCos = hpAnnKind match {
-          case Some("lsh") => graft.llm.Similarity.lshQuery(hpSpark,
-            hpAnnDir, hpQ, hpPool)
-          case Some("ivf") => graft.llm.Similarity.ivfQuery(hpSpark,
-            hpAnnDir, hpQ, hpPool)
-          case Some("ivfpq") =>
-            // the MMR penalty cosines need floats: a keepVectors index
-            // serves them from its vectors_f32 sidecar (the serve-hybrid
-            // posture); a codes-only index rejects lambda loudly
-            if (hpLambda.isDefined &&
-                !graft.llm.Pq.hasVectorSidecar(hpSpark, hpAnnDir))
-              throw new DflParseException(
-                "hybridProbe: lambda (MMR) needs float vectors; this " +
-                  "ivfpq index carries no vectors_f32 sidecar — build " +
-                  "it with keepVectors, or use a float layout (lsh | ivf)")
-            graft.llm.Pq.ivfPqQuery(hpSpark, hpAnnDir, hpQ, hpPool)
-          case other => throw new DflParseException(
-            s"hybridProbe: '$hpAnnDir' is not an ANN index (got $other)")
-        }
+        if (hpAnnKind.forall(_ == "bm25")) throw new DflParseException(
+          s"hybridProbe: '$hpAnnDir' is not an ANN index (got $hpAnnKind)")
+        // the MMR penalty cosines need floats: a keepVectors index
+        // serves them from its vectors_f32 sidecar (the serve-hybrid
+        // posture); a codes-only index rejects lambda loudly
+        if (hpLambda.isDefined && hpAnnKind.contains("ivfpq") &&
+            !graft.llm.Pq.hasVectorSidecar(hpSpark, hpAnnDir))
+          throw new DflParseException(
+            "hybridProbe: lambda (MMR) needs float vectors; this " +
+              "ivfpq index carries no vectors_f32 sidecar — build " +
+              "it with keepVectors, or use a float layout (lsh | ivf)")
+        val hpSemCos = annStage("hybridProbe", Ann.Dir(hpSpark, hpAnnDir),
+          Ann.Probe(Ann.One(hpQ), Ann.TopK(hpPool)))
         // where an MMR vector fetch reads from: the index's own rows for
         // float layouts, the float sidecar for a keepVectors ivfpq index
         val hpVecDir =
@@ -1985,7 +1862,7 @@ object DflFrame {
       case "annRange" =>
         // `annRange(@, '@id', '@vec', $query, minCos[, method[, tuning]])`
         // — cosine RANGE search (every id at or above the threshold),
-        // mirroring annTopK's method dispatch. method: exact (default,
+        // mirroring annTopK's method resolution. method: exact (default,
         // one map-only scoring scan, no ordering, no limit), ivf | lsh
         // (the same build-once/probe-many cached-index lifecycles as
         // annTopK — a corpus served for top-k and range shares ONE
@@ -2004,24 +1881,10 @@ object DflFrame {
         rMethod match {
           case "exact" =>
             graft.llm.Similarity.bruteForceRange(rBase, "id", "v", rq, minCos)
-          case "ivf" =>
-            val nprobe = if (args.size > 6) intArg(6) else 8
-            if (dflIndexable(rBase))
-              graft.llm.Similarity.ivfRangeIndexed(
-                rBase, "id", "v", dflCorpusKey(rBase, "ivf"), rq, minCos,
-                nprobe = nprobe)
-            else // in-memory corpus: ad-hoc, never a schema-keyed cache
-              graft.llm.Similarity.ivfRangeAdhoc(rBase, "id", "v", rq, minCos,
-                nprobe = nprobe)
-          case "lsh" =>
-            val slack = if (args.size > 6) intArg(6) else 4
-            if (dflIndexable(rBase))
-              graft.llm.Similarity.lshRangeIndexed(
-                rBase, "id", "v", dflCorpusKey(rBase, "lsh"), rq, minCos,
-                slackBits = slack)
-            else
-              graft.llm.Similarity.lshRangeAdhoc(rBase, "id", "v", rq, minCos,
-                slackBits = slack)
+          case m if Ann.corpusMethods.contains(m) =>
+            annStage("annRange", annCorpus(rBase, m, m),
+              Ann.Probe(Ann.One(rq),
+                Ann.Range(minCos), tuning = optIntArg(6)))
           case other => throw new DflParseException(s"unknown annRange method $other")
         }
 
@@ -2031,11 +1894,10 @@ object DflFrame {
         // variable or an inline array). method: exact (default, one scan
         // + bounded top-k), ivf | lsh (build-once/probe-many cached index
         // lifecycles — repeated service execs over the same corpus probe
-        // a partition-pruned index instead of rescanning). `tuning` is
-        // the method's query-time knob, same meaning as the Scala API:
-        // ivf → nprobe (probed lists; never forces a rebuild), lsh →
-        // minCandidates (the radius-expansion floor). Defaults match the
-        // recall-gated Scala defaults.
+        // a partition-pruned index instead of rescanning; in-memory
+        // corpora probe ad hoc). `tuning` is the method's query-time
+        // knob: ivf → nprobe (probed lists; never forces a rebuild), lsh
+        // → minCandidates (the radius-expansion floor).
         val q = vecArg(3)
         val k = intArg(4)
         val method = if (args.size > 5) strArg(5) else "exact"
@@ -2051,32 +1913,20 @@ object DflFrame {
             "annTopK takes at most (@, id, vec, query, k, method, tuning)")
         method match {
           case "exact" => graft.llm.Similarity.bruteForceTopK(base, "id", "v", q, k)
-          case "ivf"   =>
-            val nprobe = if (args.size > 6) intArg(6) else 8
-            if (dflIndexable(base))
-              graft.llm.Similarity.ivfTopKIndexed(
-                base, "id", "v", dflCorpusKey(base, "ivf"), q, k, nprobe = nprobe)
-            else // in-memory corpus: ad-hoc, never a schema-keyed cache
-              graft.llm.Similarity.ivfTopK(base, "id", "v", q, k, nprobe = nprobe)
-          case "lsh"   =>
-            val minCands = if (args.size > 6) intArg(6) else 100
-            if (dflIndexable(base))
-              graft.llm.Similarity.lshTopKIndexed(
-                base, "id", "v", dflCorpusKey(base, "lsh"), q, k,
-                minCandidates = minCands)
-            else
-              graft.llm.Similarity.lshTopK(base, "id", "v", q, k,
-                minCandidates = minCands)
           case "pq" =>
             // compressed ad-hoc serving: seeded PQ codebooks trained on
             // a bounded sample per call (driver-side, deterministic),
             // ADC scoring over m-byte codes. tuning = codewords per
-            // subspace (k). The persisted/pruned variant is the Scala
-            // ivfPqBuild/ivfPqQuery lifecycle.
+            // subspace (k). The persisted/pruned variant is an ivfpq
+            // index probed through annProbe.
             val kw = if (args.size > 6) intArg(6) else 64
             val model = graft.llm.Pq.pqTrain(base, "id", "v", m = 8, k = kw)
             graft.llm.Pq.pqTopK(
               graft.llm.Pq.pqEncode(base, "id", "v", model), model, q, k)
+          case m if Ann.corpusMethods.contains(m) =>
+            annStage("annTopK", annCorpus(base, m, m),
+              Ann.Probe(Ann.One(q), Ann.TopK(k),
+                tuning = optIntArg(6)))
           case other => throw new DflParseException(s"unknown annTopK method $other")
         }
 
@@ -2087,11 +1937,10 @@ object DflFrame {
         // names, which are exactly the columns that ride into the index
         // layout (the predicate's attribute set IS the metaCols list).
         // Indexed corpora serve via the widening pruned probes
-        // (Similarity.*TopKFilteredIndexed — predicate in PushedFilters,
-        // nprobe/radius widen until k eligible survive); in-memory
-        // corpora pre-filter and run the exact/ad-hoc paths (equal or
-        // better recall, no cache key to collide). method: ivf (default)
-        // | lsh | exact; tuning as in annTopK.
+        // (predicate in PushedFilters, nprobe/radius widen until k
+        // eligible survive); in-memory corpora pre-filter and probe ad
+        // hoc (equal or better recall, no cache key to collide).
+        // method: ivf (default) | lsh | exact; tuning as in annTopK.
         if (args.size < 6 || args.size > 8) throw new DflParseException(
           "annTopKFiltered takes (@, id, vec, query, k, pred[, method[, tuning]])")
         val fq = vecArg(3)
@@ -2115,22 +1964,12 @@ object DflFrame {
           case "exact" =>
             graft.llm.Similarity.bruteForceTopK(
               fBase.filter(pred), "id", "v", fq, fk)
-          case "ivf" =>
-            val nprobe = if (args.size > 7) intArg(7) else 8
-            if (dflIndexable(fBase))
-              graft.llm.Similarity.ivfTopKFilteredIndexed(fBase, "id", "v",
-                dflCorpusKey(fBase, s"ivf-filtered|${metaCols.mkString(",")}"),
-                fq, fk, pred, metaCols, nprobe = nprobe)
-            else graft.llm.Similarity.ivfTopK(
-              fBase.filter(pred), "id", "v", fq, fk, nprobe = nprobe)
-          case "lsh" =>
-            val minCands = if (args.size > 7) intArg(7) else 100
-            if (dflIndexable(fBase))
-              graft.llm.Similarity.lshTopKFilteredIndexed(fBase, "id", "v",
-                dflCorpusKey(fBase, s"lsh-filtered|${metaCols.mkString(",")}"),
-                fq, fk, pred, metaCols, minCandidates = minCands)
-            else graft.llm.Similarity.lshTopK(
-              fBase.filter(pred), "id", "v", fq, fk, minCandidates = minCands)
+          case m if Ann.corpusMethods.contains(m) =>
+            annStage("annTopKFiltered",
+              annCorpus(fBase, m, s"$m-filtered|${metaCols.mkString(",")}",
+                metaCols),
+              Ann.Probe(Ann.One(fq), Ann.TopK(fk),
+                Some(pred), optIntArg(7)))
           case other => throw new DflParseException(
             s"unknown annTopKFiltered method $other")
         }
@@ -2156,24 +1995,10 @@ object DflFrame {
           case "exact" =>
             graft.llm.Similarity.bruteForceRangeBatch(rbBase, "id", "v",
               rbQueries, rbMinCos)
-          case "ivf" =>
-            val nprobe = if (args.size > 6) intArg(6) else 8
-            if (dflIndexable(rbBase))
-              graft.llm.Similarity.ivfRangeBatchIndexed(
-                rbBase, "id", "v", dflCorpusKey(rbBase, "ivf"), rbQueries,
-                rbMinCos, nprobe = nprobe)
-            else // in-memory corpus: ad-hoc, never a schema-keyed cache
-              graft.llm.Similarity.ivfRangeAdhocBatch(rbBase, "id", "v",
-                rbQueries, rbMinCos, nprobe = nprobe)
-          case "lsh" =>
-            val slack = if (args.size > 6) intArg(6) else 4
-            if (dflIndexable(rbBase))
-              graft.llm.Similarity.lshRangeBatchIndexed(
-                rbBase, "id", "v", dflCorpusKey(rbBase, "lsh"), rbQueries,
-                rbMinCos, slackBits = slack)
-            else
-              graft.llm.Similarity.lshRangeAdhocBatch(rbBase, "id", "v",
-                rbQueries, rbMinCos, slackBits = slack)
+          case m if Ann.corpusMethods.contains(m) =>
+            annStage("annRangeBatch", annCorpus(rbBase, m, m),
+              Ann.Probe(Ann.Batch(rbQueries),
+                Ann.Range(rbMinCos), tuning = optIntArg(6)))
           case other => throw new DflParseException(s"unknown annRangeBatch method $other")
         }
 
@@ -2199,29 +2024,37 @@ object DflFrame {
         method match {
           case "exact" =>
             graft.llm.Similarity.bruteForceTopKBatch(base, "id", "v", queries, k)
-          case "ivf" =>
-            val nprobe = if (args.size > 6) intArg(6) else 8
-            if (dflIndexable(base))
-              graft.llm.Similarity.ivfTopKBatchIndexed(
-                base, "id", "v", dflCorpusKey(base, "ivf"), queries, k,
-                nprobe = nprobe)
-            else // in-memory corpus: ad-hoc, never a schema-keyed cache
-              graft.llm.Similarity.ivfTopKBatch(base, "id", "v", queries, k,
-                nprobe = nprobe)
-          case "lsh" =>
-            val minCands = if (args.size > 6) intArg(6) else 100
-            if (dflIndexable(base))
-              graft.llm.Similarity.lshTopKBatchIndexed(
-                base, "id", "v", dflCorpusKey(base, "lsh"), queries, k,
-                minCandidates = minCands)
-            else
-              graft.llm.Similarity.lshTopKBatch(base, "id", "v", queries, k,
-                minCandidates = minCands)
+          case m if Ann.corpusMethods.contains(m) =>
+            annStage("annTopKBatch", annCorpus(base, m, m),
+              Ann.Probe(Ann.Batch(queries),
+                Ann.TopK(k), tuning = optIntArg(6)))
           case other => throw new DflParseException(s"unknown annTopKBatch method $other")
         }
 
       case other => throw new DflParseException(s"unknown dataset function $other")
     }
+  }
+
+  /** One Ann probe for a DFL stage: a probe the index cannot serve as
+    * asked (refine on a float layout, a missing float sidecar) surfaces
+    * as the stage's parse error. */
+  private def annStage(stage: String, src: Ann.Source,
+                       p: Ann.Probe): DataFrame =
+    try Ann.probe(src, p)
+    catch {
+      case e: Ann.Rejected =>
+        throw new DflParseException(s"$stage: ${e.getMessage}")
+    }
+
+  /** A DFL corpus stage's probe source: the cached index lifecycle for a
+    * file-backed corpus past the [[dflIndexable]] size bound, else the
+    * ad-hoc in-memory path (never a schema-keyed cache). */
+  private def annCorpus(base: DataFrame, method: String, keyTag: String,
+                        metaCols: Seq[String] = Nil): Ann.Source = {
+    val b = Ann.Build(method, metaCols = metaCols)
+    if (dflIndexable(base))
+      Ann.Cached(base, "id", "v", dflCorpusKey(base, keyTag), b)
+    else Ann.Adhoc(base, "id", "v", b)
   }
 
   /** Stable index-cache key for a DFL-invoked ANN stage (DFL callers have

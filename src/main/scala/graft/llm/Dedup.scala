@@ -135,27 +135,7 @@ object Dedup {
     * Returns (id_a < id_b, jaccard). */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, n: Int = 3,
-                   maxDocFreq: Long = 1000L): DataFrame =
-    jaccardStages(df, idCol, textCol, threshold, n, maxDocFreq).pairs
-
-  /** Every intermediate of the PPJoin pipeline, in execution order — the
-    * diagnostic surface [[graft.tools.JaccardProfile]] times. Exposing the
-    * REAL stages (rather than letting the profiler inline a copy) means
-    * the profile can never silently desynchronize from the operator it
-    * profiles. */
-  private[graft] final case class JaccardStages(
-    sh: DataFrame,       // (id, hs): sorted distinct shingle hashes per doc
-    exploded: DataFrame, // one (id, h) row per shingle
-    dfh: DataFrame,      // (h, dfh): per-shingle document frequency
-    capped: DataFrame,   // (id, h, dfh) surviving the df-cap
-    prefixes: DataFrame, // prefix-filtered (id, h, rn, sz)
-    buckets: DataFrame,  // (h, xs): per-shingle candidate buckets
-    cands: DataFrame,    // distinct candidate (id_a, id_b)
-    pairs: DataFrame)    // verified (id_a, id_b, jaccard)
-
-  private[graft] def jaccardStages(df: DataFrame, idCol: String, textCol: String,
-                                   threshold: Double, n: Int = 3,
-                                   maxDocFreq: Long = 1000L): JaccardStages = {
+                   maxDocFreq: Long = 1000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // sh feeds the inverted index AND both verify joins — three
     // consumers of one heavy shingle-hash projection; see [[shared]]
@@ -234,11 +214,10 @@ object Dedup {
     val inter = graft.functions.SortedIntersectF
       .count(col("sh_a"), col("sh_b")).cast(DoubleType)
     val union = (size(col("sh_a")) + size(col("sh_b"))).cast(DoubleType) - inter
-    val pairs = withSh
+    withSh
       .withColumn("jaccard", inter / union)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-    JaccardStages(sh, ex, dfh, capped, exploded, buckets, cands, pairs)
   }
 
   // Fixed-seed affine hash family over the 61-bit Mersenne prime: the
@@ -352,7 +331,7 @@ object Dedup {
       .withColumn("sz", count(lit(1)).over(Window.partitionBy("id"))))
     // contained-side probe: the prefix lemma on A (overlap ≥ ⌈t·|A|⌉ must
     // touch A's first |A|−⌈t·|A|⌉+1 shingles under the global order);
-    // same ceil-epsilon guard as jaccardStages
+    // same ceil-epsilon guard as jaccardPairs
     val probe = withPos
       .filter(col("rn") <= col("sz") - ceil(col("sz") * threshold - 1e-9) + 1)
       .select(col("id").as("id_a"), col("h"),
@@ -443,7 +422,7 @@ object Dedup {
     val prefixes = capped
       .withColumn("rn", row_number().over(w))
       .withColumn("sz", count(lit(1)).over(Window.partitionBy("side", "id")))
-      // prefix length |x| - ⌈t·|x|⌉ + 1, epsilon as in jaccardStages
+      // prefix length |x| - ⌈t·|x|⌉ + 1, epsilon as in jaccardPairs
       .filter(col("rn") <= col("sz") - ceil(col("sz") * threshold - 1e-9) + 1)
       .select("side", "id", "h", "rn", "sz")
     val buckets = prefixes.groupBy("h")
@@ -457,7 +436,7 @@ object Dedup {
       .select(col("a"), explode(col("xs")).as("b"))
       // ONLY across sides — this replaces the self-join's a.id < b.id
       .filter(col("a.side") === 0 && col("b.side") === 1)
-      // length filter (PPJoin), as in jaccardStages
+      // length filter (PPJoin), as in jaccardPairs
       .filter(greatest(col("a.sz"), col("b.sz")).cast(DoubleType) * threshold
         <= least(col("a.sz"), col("b.sz")).cast(DoubleType) + 1e-9)
       // positional filter (PPJoin): both sides sorted by the shared

@@ -905,20 +905,20 @@ object Pq {
       }
     }
 
-  /** The shared per-(row, query) ADC COSINE scoring of every IVFPQ
-    * probe: per-row [[graft.functions.PqAdcDots]] against the group's
-    * ADC tables (ONE native loop scores a code row for every query), the
-    * per-query probe-list membership filter (pure column math, the
-    * [[Similarity]] scoreIvfGroup posture), the residual additive
-    * constant when the index quantizes residuals, and the closed-form
-    * reconstructed norm as denominator. The score is the EXACT cosine of
-    * the query against the PQ reconstruction v̂ — the metric every other
-    * graft ANN family ranks by (cos(q, v̂) → cos(q, v) as quantization
-    * error → 0; a raw ADC dot would rank large-norm reconstructions
-    * above true cosine neighbors). Returns (pos, id, cos) rows. */
-  private def adcCosScored(vecs: DataFrame, idx: IvfPqIndex,
-                           queries: Seq[(Long, Seq[Double])],
-                           probeLists: Seq[Seq[Int]]): DataFrame = {
+  /** The ivfpq family's score hook ([[Ann]]): per-row
+    * [[graft.functions.PqAdcDots]] against the group's ADC tables (ONE
+    * native loop scores a code row for every query), the group's
+    * probe-list membership predicate `keep` (pure column math over pos
+    * and list), the residual additive constant when the index quantizes
+    * residuals, and the closed-form reconstructed norm as denominator.
+    * The score is the EXACT cosine of the query against the PQ
+    * reconstruction v̂ — the metric every other graft ANN family ranks
+    * by (cos(q, v̂) → cos(q, v) as quantization error → 0; a raw ADC dot
+    * would rank large-norm reconstructions above true cosine
+    * neighbors). Returns (pos, id, cos) rows. */
+  private[llm] def adcCosScored(vecs: DataFrame, idx: IvfPqIndex,
+                                queries: Seq[(Long, Seq[Double])],
+                                keep: Column): DataFrame = {
     import graft.functions.PqF
     val model = idx.model
     // OPQ: codes live in rotated space, so the query-side tables pair
@@ -930,7 +930,6 @@ object Pq {
     }
     val tables = adcTables(model, tableQs)
     val qNorms = queries.map { case (_, q) => math.sqrt(q.map(x => x * x).sum) }
-    val probeLit = array(probeLists.map(ls => array(ls.map(lit): _*)): _*)
     val qcTerm =
       if (idx.residual)
         element_at(element_at(
@@ -943,335 +942,63 @@ object Pq {
       .select(col("id"), col("list"), col("rnorm"),
         posexplode(PqF.adcDots(col("codes"), tables,
           queries.size, model.m, model.k)))
-      .filter(array_contains(element_at(probeLit, col("pos") + 1), col("list")))
+      .filter(keep)
       .select(col("pos"), col("id"),
         round((qcTerm + col("col")) / (col("rnorm") *
           element_at(array(qNorms.map(lit): _*), col("pos") + 1)), 6).as("cos"))
       .filter(col("cos").isNotNull && !isnan(col("cos")))
   }
 
-  /** The shared top-k tail: [[adcCosScored]] + bounded-heap top-k per
-    * query (batch ≡ per-query by construction). Returns (qid, id, cos). */
-  private def scoreAdcGroup(vecs: DataFrame, idx: IvfPqIndex,
-                            queries: Seq[(Long, Seq[Double])],
-                            probeLists: Seq[Seq[Int]], k: Int): DataFrame = {
-    import graft.functions.TopKF
-    val qIds = queries.map(_._1)
-    adcCosScored(vecs, idx, queries, probeLists)
-      .groupBy("pos")
-      .agg(TopKF.topKByScore(col("cos"), col("id"), k).as("topk"))
-      .select(element_at(array(qIds.map(lit): _*), col("pos") + 1).as("qid"),
-        explode(col("topk")).as("hit"))
-      .select(col("qid"), col("hit.id").as("id"), col("hit.score").as("cos"))
-  }
-
-  /** IVF+PQ probe: nearest `nprobe` lists chosen driver-side against
-    * the centroid sidecar (memoized — zero Spark jobs warm), a
-    * partition-pruned read of those lists, ADC cosine scoring
-    * (residual-aware, reconstructed-norm denominator — see
-    * [[adcCosScored]]), bounded-heap top-k. Returns (id, cos). */
-  def ivfPqQuery(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                 query: Seq[Double], topK: Int, nprobe: Int = 8): DataFrame = {
-    val idx = ivfPqMeta(spark, indexDir)
-    require(query.size == idx.model.m * idx.model.subDim,
-      s"ivfPqQuery: query dim ${query.size} != index dim ${idx.model.m * idx.model.subDim}")
-    val lists = Similarity.nearestLists(idx.centroids, query.toArray, nprobe)
-    val probe = idx.vectors
-      .filter(col("list").isin(lists.map(Integer.valueOf): _*))
-    scoreAdcGroup(probe, idx, Seq((0L, query)), Seq(lists), topK)
-      .select("id", "cos")
-  }
-
-  /** QUERY a built IVFPQ index with a BATCH of query vectors in ONE
-    * pruned code pass — the compressed member of the batched serving
-    * matrix ([[Similarity.ivfQueryBatch]]'s shape at 32× smaller reads):
-    * one read over the UNION of all queries' nprobe lists, each code row
-    * ADC-scored against the whole batch via ONE native
-    * [[graft.functions.PqAdcDots]] loop, a per-row membership filter
-    * keeping each query's candidates to ITS OWN lists (batch ≡ per-query
-    * [[ivfPqQuery]]), bounded-heap top-k per query. Returns (qid, id,
-    * cos). Same `chunkSize` plan-literal bound as every batch entry
-    * point (the ADC-table reference object is chunk × m × k doubles). */
-  def ivfPqQueryBatch(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String, queries: Seq[(Long, Seq[Double])],
-                      k: Int, nprobe: Int = 8,
-                      chunkSize: Int = 256): DataFrame = {
-    // ONE telemetry leg per logical probe call (the chunk recursion and
-    // the refined wrapper both go through the un-recording core)
-    ProbeStats.record("ivfpq", queries.size, nprobe, nprobe, 0)
-    ivfPqQueryBatchCore(spark, indexDir, queries, k, nprobe, chunkSize)
-  }
-
-  private def ivfPqQueryBatchCore(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String, queries: Seq[(Long, Seq[Double])],
-                      k: Int, nprobe: Int,
-                      chunkSize: Int): DataFrame = {
-    require(queries.nonEmpty, "ivfPqQueryBatch: empty query batch")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"ivfPqQueryBatch: ragged query dims $dims")
-    require(chunkSize > 0, "ivfPqQueryBatch: chunkSize must be positive")
-    if (queries.size > chunkSize)
-      return queries.grouped(chunkSize)
-        .map(c => ivfPqQueryBatchCore(spark, indexDir, c, k, nprobe, chunkSize))
-        .reduce(_ unionByName _)
-    val idx = ivfPqMeta(spark, indexDir)
-    require(dims.head == idx.model.m * idx.model.subDim,
-      s"ivfPqQueryBatch: query dim ${dims.head} != index dim ${idx.model.m * idx.model.subDim}")
-    val probeLists = queries.map { case (_, q) =>
-      Similarity.nearestLists(idx.centroids, q.toArray, nprobe)
-    }
-    val allLists = probeLists.flatten.distinct
-    scoreAdcGroup(
-      idx.vectors.filter(col("list").isin(allLists.map(Integer.valueOf): _*)),
-      idx, queries, probeLists, k)
-  }
-
-  /** FILTERED ADC probe — the compressed member of the filtered-ANN
-    * family ([[Similarity.ivfQueryFiltered]]'s shape at 32× smaller
-    * reads): the predicate (over id + the metadata columns the build
-    * carried) pushes into the list-pruned parquet read BEFORE ADC
-    * scoring, and `nprobe` doubles until `topK` eligible candidates
-    * survive or every list is probed — the widening answer to the
-    * filtered-recall caveat, identical to the float probes'. At 100 TB
-    * this is the serving shape: compressed codes, pruned lists, predicate
-    * row groups skipped by parquet stats. */
-  def ivfPqQueryFiltered(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String, query: Seq[Double], topK: Int,
-                         pred: Column, nprobe: Int = 8): DataFrame = {
-    val idx = ivfPqMeta(spark, indexDir)
-    require(query.size == idx.model.m * idx.model.subDim,
-      s"ivfPqQueryFiltered: query dim ${query.size} != index dim ${idx.model.m * idx.model.subDim}")
-    val kLists = idx.centroids.length
-    var probe = math.min(math.max(1, nprobe), kLists)
-    while (true) {
-      val lists = Similarity.nearestLists(idx.centroids, query.toArray, probe)
-      val res = scoreAdcGroup(
-        idx.vectors.filter(col("list").isin(lists.map(Integer.valueOf): _*))
-          .filter(pred),
-        idx, Seq((0L, query)), Seq(lists), topK)
-        .select("id", "cos")
-      // ONE job per widening round: the ≤topK answer rows ARE the
-      // satisfied-count, so collect them and decide — a separate
-      // res.count() pass doubled probe latency exactly when the filter
-      // was most selective, and the satisfied case re-ran the scoring
-      // at consumption. The local return is the batch variant's posture.
-      val rows = res.collect()
-      if (probe >= kLists || rows.length >= topK)
-        return Similarity.localFrame(spark, rows, res.schema)
-      probe = math.min(probe * 2, kLists)
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** BATCH filtered top-k against a built IVFPQ index —
-    * [[ivfPqQueryFiltered]] for a query stream, the
-    * [[Similarity.ivfQueryBatchFiltered]] machinery over codes: each
-    * round scores ALL still-unsatisfied queries in ONE pred-filtered
-    * pruned ADC pass, finalizes every query with k eligible survivors
-    * (or a full-width probe), and doubles the probe width for the rest —
-    * per-query answers equal [[ivfPqQueryFiltered]] at the same starting
-    * `nprobe`. Returns (qid, id, cos), qid-then-rank ordered. */
-  def ivfPqQueryBatchFiltered(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String,
-                              queries: Seq[(Long, Seq[Double])], k: Int,
-                              pred: Column, nprobe: Int = 8,
-                              chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "ivfPqQueryBatchFiltered: empty query batch")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"ivfPqQueryBatchFiltered: ragged query dims $dims")
-    require(chunkSize > 0, "ivfPqQueryBatchFiltered: chunkSize must be positive")
-    // qid-keyed widening loop — duplicates would conflate two queries'
-    // pools and double-emit rows (the float twin's guard)
-    require(queries.map(_._1).distinct.size == queries.size,
-      "ivfPqQueryBatchFiltered: duplicate qids in one batch")
-    val idx = ivfPqMeta(spark, indexDir)
-    require(dims.head == idx.model.m * idx.model.subDim,
-      s"ivfPqQueryBatchFiltered: query dim ${dims.head} != index dim ${idx.model.m * idx.model.subDim}")
-    val kLists = idx.centroids.length
-    val eligible = idx.vectors.filter(pred)
-    val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var pending = queries
-    var width = math.min(math.max(1, nprobe), kLists)
-    val widthStart = width
-    var widthUsed = width
-    var rounds = 0
-    while (pending.nonEmpty) {
-      widthUsed = width
-      rounds += 1
-      val rows = pending.grouped(chunkSize).toSeq.flatMap { chunk =>
-        val probeLists = chunk.map(q =>
-          Similarity.nearestLists(idx.centroids, q._2.toArray, width))
-        // full-width bypass, as the float twin: once the union covers
-        // every list the isin buys nothing on the most expensive rounds
-        val allLists = probeLists.flatten.distinct
-        val pruned =
-          if (allLists.size >= kLists) eligible
-          else eligible.filter(col("list").isin(allLists.map(Integer.valueOf): _*))
-        scoreAdcGroup(pruned, idx, chunk, probeLists, k).collect()
-      }
-      val byQ = rows.groupBy(_.getLong(0))
-      val (done, todo) = pending.partition(q =>
-        width >= kLists || byQ.getOrElse(q._1, Seq.empty).size >= k)
-      acc ++= done.flatMap(q => byQ.getOrElse(q._1, Seq.empty)
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
-      pending = todo
-      width = math.min(width * 2, kLists)
-    }
-    ProbeStats.record("ivfpq_filtered", queries.size, widthStart, widthUsed,
-      rounds - 1)
-    import spark.implicits._
-    acc.toSeq.sortBy { case (qid, id, c) => (qid, -c, id) }
-      .toDF("qid", "id", "cos")
-  }
-
-  /** REFINED probe — the FAISS refine/rerank pattern over a keepVectors
-    * index: the compressed ADC pass nominates `k × rerankFactor`
-    * candidates (list-pruned, 32× smaller reads — the cheap wide net),
-    * then the EXACT cosine reranks just those candidates from the
-    * `vectors_f32` sidecar (an answer-sized id-join, never a corpus
-    * scan) and keeps the true top-k. Recall approaches exact search as
-    * `rerankFactor` grows while the scan cost stays the compressed
-    * probe's; precision within the candidate set is EXACT (true
-    * cosines, not reconstructions). Requires the float sidecar — a
-    * codes-only index cannot refine and fails with the build advice. */
-  def ivfPqQueryRefined(spark: org.apache.spark.sql.SparkSession,
-                        indexDir: String, query: Seq[Double], k: Int,
-                        nprobe: Int = 8, rerankFactor: Int = 4): DataFrame = {
-    val batch = ivfPqQueryBatchRefined(spark, indexDir, Seq((0L, query)), k,
-      nprobe, rerankFactor)
-    batch.select("id", "cos")
-  }
-
-  /** Batch twin of [[ivfPqQueryRefined]]: ONE pruned ADC pass nominates
-    * every query's widened candidate set, ONE sidecar join fetches the
-    * union's floats, exact cosines rerank per query. Returns
-    * (qid, id, cos); within each qid the exploded top-k is rank-ordered,
-    * global qid order is unspecified (group by qid to slice). */
-  def ivfPqQueryBatchRefined(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String,
-                             queries: Seq[(Long, Seq[Double])], k: Int,
-                             nprobe: Int = 8,
-                             rerankFactor: Int = 4,
-                             chunkSize: Int = 256): DataFrame = {
-    // ONE telemetry leg PER CHUNK — the engine-wide refined convention
-    // (ivfpq_filtered_refined and ivfpq_range_refined both book per
-    // chunk), so ServeStats 'calls' rollups are comparable across the
-    // refined ops. The leaf core records AFTER its nomination collect
-    // succeeds, so a rejected call (bad params, missing sidecar, ragged
-    // dims) or a failed nomination books no phantom leg in an active
-    // serving buffer.
-    ivfPqQueryBatchRefinedCore(spark, indexDir, queries, k,
-      nprobe, rerankFactor, chunkSize)
-  }
-
-  private def ivfPqQueryBatchRefinedCore(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      queries: Seq[(Long, Seq[Double])], k: Int, nprobe: Int,
-      rerankFactor: Int, chunkSize: Int): DataFrame = {
-    require(queries.nonEmpty, "ivfPqQueryBatchRefined: empty query batch")
-    require(k > 0, s"ivfPqQueryBatchRefined: k must be positive, got $k")
-    require(rerankFactor >= 1,
-      s"ivfPqQueryBatchRefined: rerankFactor must be >= 1, got $rerankFactor")
-    require(chunkSize > 0, "ivfPqQueryBatchRefined: chunkSize must be positive")
-    // the rerank is keyed by QID (the qid→pos map literal) — a
-    // duplicated qid would score one query's nominees against the
-    // other's vector and merge their pools; reject loudly (the filtered
-    // twin's guard; the pos-keyed unrefined path tolerates duplicates)
-    require(queries.map(_._1).distinct.size == queries.size,
-      "ivfPqQueryBatchRefined: duplicate qids in one batch")
-    // same plan-literal bound as every batch entry point: the rerank's
-    // query matrix (MatVecDots) and qid→pos map are chunk-sized literals
-    if (queries.size > chunkSize)
-      return queries.grouped(chunkSize)
-        .map(c => ivfPqQueryBatchRefinedCore(spark, indexDir, c, k, nprobe,
-          rerankFactor, chunkSize))
-        .reduce(_ unionByName _)
-    require(hasVectorSidecar(spark, indexDir),
-      s"ivfPqQueryBatchRefined: $indexDir carries no $vectorSidecarDir " +
-        "float sidecar (built without keepVectors) — exact reranking " +
-        "needs the true vectors; probe unrefined or rebuild with " +
-        "keepVectors")
-    // candidate nomination: the compressed batch probe at widened k.
-    // Its answers are driver-sized ((k·factor)×queries rows max), so
-    // collecting the nominee ids is the serving-sized read the refine
-    // contract allows.
-    val nominees = ivfPqQueryBatchCore(spark, indexDir, queries,
-        k * rerankFactor, nprobe, chunkSize)
-      .select("qid", "id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    ProbeStats.record("ivfpq_refined", queries.size, nprobe, nprobe, 0)
-    if (nominees.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "cos")
-    }
-    val idx = ivfPqMeta(spark, indexDir)
-    val allLists = queries
-      .flatMap(q => Similarity.nearestLists(idx.centroids, q._2.toArray, nprobe))
-      .distinct
-    topKPerQid(
-      nomineeTrueCosines(spark, indexDir, queries, nominees.toSeq, allLists),
-      k)
-  }
-
   /** TRUE-cosine scores for a driver-collected nominee set against the
-    * float sidecar — the shared rerank read of every refined probe: ONE
+    * float sidecar — the rerank read of a refined top-k probe: ONE
     * sidecar pass LIST-PRUNED to the union of the nominees' probed lists
     * (lossless — every nominee came from one of them) AND id-In-pruned
     * to the nominee ids, broadcast nominee join, ONE native dot per
     * (query, candidate). Returns (qid, id, cos) with cos EXACT
     * (rounded 6).
     *
-    * Pushdown caveat: the nominee id set can reach
-    * chunkSize(256)×k×rerankFactor — far above parquet's default
-    * in-filter pushdown threshold (10), past which Spark pushes only the
-    * id min/max RANGE, degrading exact row-group skips toward a probed-
-    * list scan when nominee ids scatter. [[ensureInPushdown]] raises the
-    * session threshold once (default-valued sessions only) so the id set
-    * is pushed verbatim; the (list, id) sort order of the sidecar files
-    * keeps the min/max fallback useful in sessions that pin their own
-    * threshold. The In literal itself is plan-sized — bounded by the
-    * nomination budget, the price of a driver-nominated rerank. */
-  private def nomineeTrueCosines(spark: org.apache.spark.sql.SparkSession,
-                                 indexDir: String,
-                                 queries: Seq[(Long, Seq[Double])],
-                                 nominees: Seq[(Long, Long)],
-                                 lists: Seq[Int]): DataFrame = {
+    * The nominee id set can reach chunkSize(256)×k×refine — far above
+    * parquet's default in-filter pushdown threshold (10), past which
+    * Spark pushes only the id min/max RANGE. Sessions built by
+    * [[graft.util.Sessions]] raise that threshold once at startup so the
+    * id set is pushed verbatim; elsewhere the (list, id) sort order of
+    * the sidecar files keeps the min/max fallback useful. */
+  private[llm] def nomineeTrueCosines(spark: org.apache.spark.sql.SparkSession,
+                                      indexDir: String,
+                                      queries: Seq[(Long, Seq[Double])],
+                                      nominees: Seq[(Long, Long)],
+                                      lists: Seq[Int]): DataFrame = {
     import spark.implicits._
-    ensureInPushdown(spark)
     val nomDf = nominees.toDF("qid", "id")
     val nomIds = nominees.map(_._2).distinct
-    val floats = spark.read.parquet(s"$indexDir/$vectorSidecarDir")
-      .filter(col("list").isin(lists.map(Integer.valueOf): _*))
-      .filter(col("id").isin(nomIds: _*))
-      .select(col("id"), col("v"))
-      .join(broadcast(nomDf), Seq("id"))
-    exactCosAgainst(queries, floats)
+    sidecarCosines(spark, indexDir, queries,
+      Some(col("id").isin(nomIds: _*)), broadcast(nomDf), lists)
   }
 
-  /** Raise `spark.sql.parquet.pushdown.inFilterThreshold` to cover the
-    * refined rerank's nominee-id In set (see [[nomineeTrueCosines]]) —
-    * ONCE per session, and ONLY when the conf still holds Spark's
-    * default (10): an operator who pinned a value keeps it. Idempotent;
-    * the raised value covers the largest nomination budget a chunked
-    * refined probe emits (256-query chunks × k × rerankFactor).
-    *
-    * Scoping the override to the rerank scan alone is not possible from
-    * here — the conf is consulted when the returned (lazy) DataFrame is
-    * planned at action time, after this method has returned — so the
-    * session-wide change is logged ONCE at WARN: an operator seeing
-    * unrelated scans evaluate a large In per row group gets the
-    * breadcrumb instead of an invisible side effect. */
-  private val inPushdownLogged = new java.util.concurrent.atomic.AtomicBoolean
-  private def ensureInPushdown(
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val key = "spark.sql.parquet.pushdown.inFilterThreshold"
-    if (spark.conf.get(key, "10") == "10") {
-      spark.conf.set(key, "262144")
-      if (inPushdownLogged.compareAndSet(false, true))
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"refined probe raised session conf $key 10 -> 262144 (covers " +
-            "the nominee-id In pushdown; set the conf explicitly to pin)")
-    }
+  /** TRUE cosines of a (qid, id) nominee FRAME — the verify read of a
+    * refined range probe. Range answers are output-bound, not k-bound,
+    * so the nominee set is never collected: the verify is a distributed
+    * id-join against the list-pruned sidecar, which AQE demotes to a
+    * broadcast when the loosened nomination lands small (a static
+    * broadcast would have to hold a loose threshold's whole output). */
+  private[llm] def trueCosinesOf(spark: org.apache.spark.sql.SparkSession,
+                                 indexDir: String,
+                                 queries: Seq[(Long, Seq[Double])],
+                                 nominated: DataFrame,
+                                 lists: Seq[Int]): DataFrame =
+    sidecarCosines(spark, indexDir, queries, None, nominated, lists)
+
+  private def sidecarCosines(spark: org.apache.spark.sql.SparkSession,
+                             indexDir: String,
+                             queries: Seq[(Long, Seq[Double])],
+                             idFilter: Option[Column], nominated: DataFrame,
+                             lists: Seq[Int]): DataFrame = {
+    val sidecar = spark.read.parquet(s"$indexDir/$vectorSidecarDir")
+      .filter(col("list").isin(lists.map(Integer.valueOf): _*))
+    val floats = idFilter.fold(sidecar)(sidecar.filter)
+      .select(col("id"), col("v"))
+      .join(nominated, Seq("id"))
+    exactCosAgainst(queries, floats)
   }
 
   /** Exact-cosine scoring of (qid, id, v) candidate rows against a
@@ -1296,124 +1023,14 @@ object Pq {
       .filter(col("cos").isNotNull && !isnan(col("cos")))
   }
 
-  /** Bounded-heap top-k per qid over (qid, id, cos) rows — the shared
-    * finalize of the refined probes. */
-  private def topKPerQid(scored: DataFrame, k: Int): DataFrame = {
+  /** Bounded-heap top-k per qid over (qid, id, cos) rows — the finalize
+    * of a refined top-k probe. */
+  private[llm] def topKPerQid(scored: DataFrame, k: Int): DataFrame = {
     import graft.functions.TopKF
     scored.groupBy("qid")
       .agg(TopKF.topKByScore(col("cos"), col("id"), k).as("topk"))
       .select(col("qid"), explode(col("topk")).as("hit"))
       .select(col("qid"), col("hit.id").as("id"), col("hit.score").as("cos"))
-  }
-
-  /** FILTERED + REFINED probe — closes the refine matrix's last empty
-    * cell: the widening loop of [[ivfPqQueryFiltered]] NOMINATES with
-    * compressed ADC, the float sidecar reranks with TRUE cosines (the
-    * [[ivfPqQueryRefined]] contract under a predicate). Each round's
-    * pred-filtered pruned ADC pass targets `k × rerankFactor` eligible
-    * nominees per query — the widening target is the full nomination
-    * budget, not k: a round that satisfied k but not k×factor would
-    * hand the exact rerank a truncated candidate set and silently cap
-    * refined recall exactly when the filter is most selective. Queries
-    * that hit the budget (or the full-width probe) finalize; ONE sidecar
-    * read then reranks every finalized nominee. Answers are EXACT
-    * cosines over eligible rows, so brute-force oracles apply (the
-    * unfiltered refined rows' contract). Requires the float sidecar. */
-  def ivfPqQueryFilteredRefined(spark: org.apache.spark.sql.SparkSession,
-                                indexDir: String, query: Seq[Double],
-                                topK: Int, pred: Column, nprobe: Int = 8,
-                                rerankFactor: Int = 4): DataFrame =
-    ivfPqQueryBatchFilteredRefined(spark, indexDir, Seq((0L, query)), topK,
-      pred, nprobe, rerankFactor).select("id", "cos")
-
-  /** BATCH twin of [[ivfPqQueryFilteredRefined]] — the serving shape
-    * behind serve-ann/serve-hybrid `--filter-dfl --refine`: each
-    * widening round scores ALL still-unsatisfied queries in ONE
-    * pred-filtered pruned ADC pass at the nomination budget, finalized
-    * queries bank their nominees, and ONE sidecar read reranks every
-    * nominee with true cosines. Returns (qid, id, cos), cos EXACT.
-    * Chunked at entry like the unfiltered refined batch (the rerank's
-    * query matrix and qid→pos map are chunk-sized plan literals) — one
-    * telemetry leg per chunk, each chunk running its own widening loop
-    * with its own observed widths. */
-  def ivfPqQueryBatchFilteredRefined(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      queries: Seq[(Long, Seq[Double])], k: Int, pred: Column,
-      nprobe: Int = 8, rerankFactor: Int = 4,
-      chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "ivfPqQueryBatchFilteredRefined: empty query batch")
-    require(k > 0, s"ivfPqQueryBatchFilteredRefined: k must be positive, got $k")
-    require(rerankFactor >= 1,
-      s"ivfPqQueryBatchFilteredRefined: rerankFactor must be >= 1, got $rerankFactor")
-    require(chunkSize > 0,
-      "ivfPqQueryBatchFilteredRefined: chunkSize must be positive")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1,
-      s"ivfPqQueryBatchFilteredRefined: ragged query dims $dims")
-    // qid-keyed widening AND qid-keyed rerank — duplicates would merge
-    // two queries' pools (both parents' guard)
-    require(queries.map(_._1).distinct.size == queries.size,
-      "ivfPqQueryBatchFilteredRefined: duplicate qids in one batch")
-    require(hasVectorSidecar(spark, indexDir),
-      s"ivfPqQueryBatchFilteredRefined: $indexDir carries no " +
-        s"$vectorSidecarDir float sidecar (built without keepVectors) — " +
-        "exact reranking needs the true vectors; probe unrefined or " +
-        "rebuild with keepVectors")
-    if (queries.size > chunkSize)
-      return queries.grouped(chunkSize)
-        .map(c => ivfPqQueryBatchFilteredRefined(spark, indexDir, c, k,
-          pred, nprobe, rerankFactor, chunkSize))
-        .reduce(_ unionByName _)
-    val idx = ivfPqMeta(spark, indexDir)
-    require(dims.head == idx.model.m * idx.model.subDim,
-      s"ivfPqQueryBatchFilteredRefined: query dim ${dims.head} != index dim ${idx.model.m * idx.model.subDim}")
-    val kLists = idx.centroids.length
-    val eligible = idx.vectors.filter(pred)
-    val budget = k * rerankFactor
-    val nomAcc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    // the union of the lists each query had probed when it finalized —
-    // every banked nominee came from one of them, so pruning the
-    // sidecar rerank read to this union is lossless
-    val listAcc = scala.collection.mutable.LinkedHashSet.empty[Int]
-    var pending = queries
-    var width = math.min(math.max(1, nprobe), kLists)
-    val widthStart = width
-    var widthUsed = width
-    var rounds = 0
-    while (pending.nonEmpty) {
-      widthUsed = width
-      rounds += 1
-      val listsByQ = pending.map(q => q._1 ->
-        Similarity.nearestLists(idx.centroids, q._2.toArray, width)).toMap
-      val allLists = listsByQ.valuesIterator.flatten.toSeq.distinct
-      // full-width bypass, as the filtered parents: once the union
-      // covers every list the isin buys nothing on the widest rounds
-      val pruned =
-        if (allLists.size >= kLists) eligible
-        else eligible.filter(col("list").isin(allLists.map(Integer.valueOf): _*))
-      val rows = scoreAdcGroup(pruned, idx, pending,
-        pending.map(q => listsByQ(q._1).toSeq), budget).collect().toSeq
-      val byQ = rows.groupBy(_.getLong(0))
-      val (done, todo) = pending.partition(q =>
-        width >= kLists || byQ.getOrElse(q._1, Seq.empty).size >= budget)
-      done.foreach { q =>
-        nomAcc ++= byQ.getOrElse(q._1, Seq.empty)
-          .map(r => (r.getLong(0), r.getLong(1)))
-        listAcc ++= listsByQ(q._1)
-      }
-      pending = todo
-      width = math.min(width * 2, kLists)
-    }
-    ProbeStats.record("ivfpq_filtered_refined", queries.size, widthStart,
-      widthUsed, rounds - 1)
-    if (nomAcc.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "cos")
-    }
-    topKPerQid(
-      nomineeTrueCosines(spark, indexDir, queries, nomAcc.toSeq,
-        listAcc.toSeq),
-      k)
   }
 
   /** Per-row reconstructed-norm column ‖v̂‖ from codes alone — the range
@@ -1439,158 +1056,6 @@ object Pq {
           col("list") + 1) +
         rNorm2)
     }
-  }
-
-  /** The shared map-only tail of the IVFPQ RANGE probes: the SAME
-    * [[adcCosScored]] reconstructed cosine the top-k probes rank by,
-    * thresholded instead of heaped — no aggregation at all (the
-    * [[Similarity]] scoreIvfRangeGroup posture over codes). */
-  private def scoreAdcRangeGroup(vecs: DataFrame, idx: IvfPqIndex,
-                                 queries: Seq[(Long, Seq[Double])],
-                                 probeLists: Seq[Seq[Int]],
-                                 minCos: Double): DataFrame = {
-    val qIds = queries.map(_._1)
-    adcCosScored(vecs, idx, queries, probeLists)
-      .filter(col("cos") >= minCos)
-      .select(element_at(array(qIds.map(lit): _*), col("pos") + 1).as("qid"),
-        col("id"), col("cos"))
-  }
-
-  /** RANGE probe of a built IVFPQ index: every id in the query's
-    * `nprobe` nearest lists whose RECONSTRUCTED-vector cosine clears
-    * `minCos` — the documented approximate contract: cos(q, v̂) where
-    * v̂ = centroid[list] + codeword-concat (residual) or the codeword
-    * concat alone (raw), computed EXACTLY from the codes via ADC table
-    * algebra (numerator = dot tables + residual constant; denominator =
-    * the closed-form reconstructed norm, [[reconNormCol]]). v̂ → v as
-    * quantization error → 0; identical vectors share v̂ exactly. The
-    * plan is a partition-pruned map-only scan — no shuffle at all.
-    * Returns (id, cos). */
-  def ivfPqRange(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                 query: Seq[Double], minCos: Double,
-                 nprobe: Int = 8): DataFrame = {
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"ivfPqRange: minCos must be in (-1, 1], got $minCos")
-    val idx = ivfPqMeta(spark, indexDir)
-    require(query.size == idx.model.m * idx.model.subDim,
-      s"ivfPqRange: query dim ${query.size} != index dim ${idx.model.m * idx.model.subDim}")
-    val lists = Similarity.nearestLists(idx.centroids, query.toArray, nprobe)
-    scoreAdcRangeGroup(
-      idx.vectors.filter(col("list").isin(lists.map(Integer.valueOf): _*)),
-      idx, Seq((0L, query)), Seq(lists), minCos)
-      .select("id", "cos")
-  }
-
-  /** RANGE probe for a BATCH of queries in ONE pruned code pass —
-    * [[ivfPqRange]]'s contract (reconstructed cosine ≥ minCos) through
-    * [[Similarity.ivfRangeBatch]]'s shape: union-of-lists pruned read,
-    * per-query membership filter (batch ≡ per-query), map-only. Returns
-    * (qid, id, cos). */
-  def ivfPqRangeBatch(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String, queries: Seq[(Long, Seq[Double])],
-                      minCos: Double, nprobe: Int = 8,
-                      chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "ivfPqRangeBatch: empty query batch")
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"ivfPqRangeBatch: minCos must be in (-1, 1], got $minCos")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"ivfPqRangeBatch: ragged query dims $dims")
-    require(chunkSize > 0, "ivfPqRangeBatch: chunkSize must be positive")
-    if (queries.size > chunkSize)
-      return queries.grouped(chunkSize)
-        .map(c => ivfPqRangeBatch(spark, indexDir, c, minCos, nprobe, chunkSize))
-        .reduce(_ unionByName _)
-    val idx = ivfPqMeta(spark, indexDir)
-    require(dims.head == idx.model.m * idx.model.subDim,
-      s"ivfPqRangeBatch: query dim ${dims.head} != index dim ${idx.model.m * idx.model.subDim}")
-    val probeLists = queries.map { case (_, q) =>
-      Similarity.nearestLists(idx.centroids, q.toArray, nprobe)
-    }
-    val allLists = probeLists.flatten.distinct
-    ProbeStats.record("ivfpq_range", queries.size, nprobe, nprobe, 0)
-    scoreAdcRangeGroup(
-      idx.vectors.filter(col("list").isin(allLists.map(Integer.valueOf): _*)),
-      idx, queries, probeLists, minCos)
-  }
-
-  /** REFINED range probe — [[ivfPqRange]] with an EXACT threshold (the
-    * contract upgrade the top-k path got from [[ivfPqQueryRefined]]):
-    * compressed ADC NOMINATES every probed id whose reconstructed
-    * cosine clears `minCos - slack` (the loosened net — quantization
-    * error can push a true ≥ minCos row just below the reconstruction
-    * threshold), then TRUE cosines from the float sidecar VERIFY
-    * `≥ minCos` exactly (the PPJoin filter-verify posture). Precision
-    * is exact; recall approaches exact search as `slack` grows while
-    * the nomination scan stays the compressed pruned read. Returns
-    * (id, cos) with cos EXACT — brute-force range oracles apply. */
-  def ivfPqRangeRefined(spark: org.apache.spark.sql.SparkSession,
-                        indexDir: String, query: Seq[Double],
-                        minCos: Double, nprobe: Int = 8,
-                        slack: Double = 0.05): DataFrame =
-    ivfPqRangeBatchRefined(spark, indexDir, Seq((0L, query)), minCos,
-      nprobe, slack).select("id", "cos")
-
-  /** BATCH twin of [[ivfPqRangeRefined]]: ONE loosened pruned ADC pass
-    * nominates, ONE list-pruned sidecar join verifies with true cosines.
-    * Range answers are output-bound, not k-bound, so the nominee set is
-    * NEVER collected to the driver — the verify is a distributed id-join
-    * of the nominee frame against the list-pruned sidecar (the id-In
-    * pushdown of the top-k rerank needs driver-side ids and does not
-    * apply). Shuffle honesty: the SCAN is probe-proportional (the
-    * probed-lists slice, the prune range semantics allow) and only the
-    * JOIN is nominee-proportional — a static plan sort-merges that
-    * slice, and AQE (on by default in Spark 4) demotes it to a broadcast
-    * of the nominee side at runtime when the loosened nomination lands
-    * small, which a tight minCos makes the common case. Forcing
-    * broadcast(nominated) statically is deliberately NOT done: range
-    * output is unbounded, and a loose threshold would OOM the driver
-    * exactly when the distributed verify matters most. Returns
-    * (qid, id, cos) with cos EXACT (≥ minCos). */
-  def ivfPqRangeBatchRefined(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String,
-                             queries: Seq[(Long, Seq[Double])],
-                             minCos: Double, nprobe: Int = 8,
-                             slack: Double = 0.05,
-                             chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "ivfPqRangeBatchRefined: empty query batch")
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"ivfPqRangeBatchRefined: minCos must be in (-1, 1], got $minCos")
-    require(slack >= 0.0,
-      s"ivfPqRangeBatchRefined: slack must be >= 0 (it only widens the " +
-        s"nomination net), got $slack")
-    require(chunkSize > 0, "ivfPqRangeBatchRefined: chunkSize must be positive")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"ivfPqRangeBatchRefined: ragged query dims $dims")
-    // the verify is qid-keyed (qid→pos map literal) — the refined guard
-    require(queries.map(_._1).distinct.size == queries.size,
-      "ivfPqRangeBatchRefined: duplicate qids in one batch")
-    require(hasVectorSidecar(spark, indexDir),
-      s"ivfPqRangeBatchRefined: $indexDir carries no $vectorSidecarDir " +
-        "float sidecar (built without keepVectors) — exact thresholds " +
-        "need the true vectors; probe unrefined (reconstruction-cosine " +
-        "contract) or rebuild with keepVectors")
-    if (queries.size > chunkSize)
-      return queries.grouped(chunkSize)
-        .map(c => ivfPqRangeBatchRefined(spark, indexDir, c, minCos,
-          nprobe, slack, chunkSize))
-        .reduce(_ unionByName _)
-    val idx = ivfPqMeta(spark, indexDir)
-    require(dims.head == idx.model.m * idx.model.subDim,
-      s"ivfPqRangeBatchRefined: query dim ${dims.head} != index dim ${idx.model.m * idx.model.subDim}")
-    val probeLists = queries.map { case (_, q) =>
-      Similarity.nearestLists(idx.centroids, q.toArray, nprobe)
-    }
-    val allLists = probeLists.flatten.distinct
-    ProbeStats.record("ivfpq_range_refined", queries.size, nprobe, nprobe, 0)
-    val nominated = scoreAdcRangeGroup(
-        idx.vectors.filter(col("list").isin(allLists.map(Integer.valueOf): _*)),
-        idx, queries, probeLists.map(_.toSeq), minCos - slack)
-      .select("qid", "id")
-    val floats = spark.read.parquet(s"$indexDir/$vectorSidecarDir")
-      .filter(col("list").isin(allLists.map(Integer.valueOf): _*))
-      .select(col("id"), col("v"))
-      .join(nominated, Seq("id"))
-    exactCosAgainst(queries, floats).filter(col("cos") >= minCos)
   }
 
   /** ADC top-k: score = Σ_m table[m][codes[m]] where table[m][k] =

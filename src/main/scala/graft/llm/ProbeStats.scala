@@ -3,8 +3,8 @@ package graft.llm
 /** Per-batch probe telemetry for the serving jobs — the observability a
   * 100-TB operator tunes `nprobe` / `minCandidates` / `minCos` from.
   *
-  * The batch probes ([[Similarity.ivfQueryBatch]] family,
-  * [[Pq.ivfPqQueryBatch]] family, [[Retrieval.bm25TopKIndexedBatch]])
+  * The probes ([[Ann.probe]] for ivf | lsh | ivfpq,
+  * [[Retrieval.bm25TopKIndexedBatch]])
   * RECORD one [[ProbeStats.Leg]] per probe PASS — a batch larger than
   * the probe's `chunkSize` (256) chunk-recurses and records one leg
   * per chunk, so sum `queries` across legs (never count legs) to

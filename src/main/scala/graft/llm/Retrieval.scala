@@ -595,7 +595,7 @@ object Retrieval {
   }
 
   /** BM25 top-k through the fingerprint-fenced cached-index lifecycle
-    * ([[Similarity.cachedIndex]] — the ivfTopKIndexed posture): first
+    * ([[Similarity.cachedIndex]] — the Ann.Cached posture): first
     * call per `cacheKey` pays a [[bm25Build]]; unchanged corpora are
     * pure cache hits; a corpus grown by FILE ADDITION appends just the
     * new files via [[bm25Append]]; any other change (or growth past the
@@ -628,7 +628,7 @@ object Retrieval {
                              pred: org.apache.spark.sql.Column,
                              metaCols: Seq[String], pbands: Int = 64,
                              k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // validate BEFORE resolving the cache (the lshTopKBatchFilteredIndexed
+    // validate BEFORE resolving the cache (the Ann.probe
     // rule): bad arguments — or a predicate naming a column that will
     // never ride into the postings — must not pay a full index build
     // they could never use

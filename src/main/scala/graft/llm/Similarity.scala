@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.DoubleType
   *  - [[bruteForceTopK]]: exact cosine top-k — one scan, one
   *    `TakeOrderedAndProject`; the correctness baseline and fine whenever
   *    k·queries is small relative to the corpus.
-  *  - [[lshTopK]]: random-hyperplane LSH — a deterministic 16-bit signature
+  *  - random-hyperplane LSH ([[Ann]] over an `lsh` index) — a deterministic 16-bit signature
   *    per vector (fixed seed), candidates restricted to the query's bucket
   *    and all buckets at Hamming distance ≤ 1. At 100 TB the signature is
   *    computed once at ingest and the bucket id becomes a partition
@@ -356,7 +356,7 @@ object Similarity {
     * threshold is nBits·acos(minCos)/π; `slackBits` widens past the
     * expectation and the radius caps at nBits. ONE implementation — the
     * rule used to be copy-pasted at five probe sites. */
-  private def rangeRadius(nBits: Int, minCos: Double, slackBits: Int): Int = {
+  private[llm] def rangeRadius(nBits: Int, minCos: Double, slackBits: Int): Int = {
     val expected = nBits * math.acos(math.max(-1.0, math.min(1.0, minCos))) / math.Pi
     math.min(nBits, math.ceil(expected).toInt + slackBits)
   }
@@ -396,27 +396,17 @@ object Similarity {
       }
       .take(nprobe)
 
-  private def rerank(cands: DataFrame, query: Seq[Double], k: Int): DataFrame = {
-    val qLit = array(query.map(lit): _*)
-    cands
-      .select(col("id"), round(cosine(col("v"), qLit), 6).as("cos"))
-      // same unscorable-row exclusion as bruteForceTopK (null or NaN cos)
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .orderBy(col("cos").desc, col("id").asc)
-      .limit(k)
-  }
-
   /** BUILD an IVF index once, at ingest: train the coarse quantizer
     * distributed, write the corpus `partitionBy("list")` so a probe reads
     * only its lists (partition pruning, spec-pinned), and persist the
     * centroids as a small sidecar table under the same directory. At
-    * 100 TB this is the one full pass; every [[ivfQuery]] after it touches
+    * 100 TB this is the one full pass; every [[Ann.probe]] after it touches
     * `nprobe`/`kLists` of the data. Returns the trained centroids.
     *
     * The build COMMITS ATOMICALLY: vectors and centroids are written to a
     * sibling staging directory, then renamed into place (rename is atomic
     * on HDFS and local FS). A failure mid-build leaves any previous index
-    * at `indexDir` untouched — never a half-built index where [[ivfQuery]]
+    * at `indexDir` untouched — never a half-built index where a probe
     * would pair new vectors with old centroids. `indexDir` should be a
     * qualified URI on the cluster's shared filesystem in any non-local
     * deployment. */
@@ -1268,16 +1258,16 @@ object Similarity {
     * job on EVERY probe) and the resolved vectors DataFrame (whose
     * re-resolution re-lists partitions and re-reads the footer schema per
     * probe). Invalidated by the same pure FS-metadata stamp idea, over
-    * the centroids dir (every rebuild rewrites it). Warm [[ivfQuery]] /
-    * [[ivfQueryBatch]] planning after this touches no Spark job at all —
+    * the centroids dir (every rebuild rewrites it). Warm [[Ann.probe]]
+    * planning after this touches no Spark job at all —
     * serving latency is the pruned read itself. */
-  private final case class IvfMeta(centroids: Array[Array[Double]],
+  private[llm] final case class IvfMeta(centroids: Array[Array[Double]],
                                    vectors: DataFrame)
 
   private val ivfMetaCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, IvfMeta)]()
 
-  private def ivfMeta(spark: org.apache.spark.sql.SparkSession,
+  private[llm] def ivfMeta(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String): IvfMeta = {
     val key = s"${sessionTag(spark)}|$indexDir"
     // "vectors" is in the stamp so an APPEND invalidates the memoized
@@ -1302,356 +1292,9 @@ object Similarity {
     }
   }
 
-  /** QUERY a built IVF index: read the centroid sidecar, pick the `nprobe`
-    * nearest lists, and rerank exactly by cosine over a partition-PRUNED
-    * read of just those list directories. No training, no full scan —
-    * the serving-path counterpart of [[ivfBuild]].
-    *
-    * `nprobe` defaults to 8 = kLists/2 at the default kLists: measured
-    * recall@10 ≈ 0.8 on the natural test corpus (vs ≈ 0.62 at nprobe 4,
-    * for half the probed read) — the LlmSpec recall gate pins ≥ 0.8 so
-    * the default can't silently regress. Scale both together: recall
-    * tracks the PROBED FRACTION nprobe/kLists, so a 100 TB corpus with
-    * kLists grown to √N keeps its recall by holding the ratio. */
-  def ivfQuery(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-               query: Seq[Double], k: Int, nprobe: Int = 8): DataFrame = {
-    val idx = ivfMeta(spark, indexDir)
-    // mirror lshQuery's guard: a LONGER query would run nearestLists off
-    // the end of every centroid (AIOOBE), a SHORTER one would silently
-    // truncate the centroid-distance loop and return garbage lists
-    require(query.size == idx.centroids.head.length,
-      s"ivfQuery: query dim ${query.size} != index dim ${idx.centroids.head.length}")
-    val probeLists = nearestLists(idx.centroids, query.toArray, nprobe)
-    rerank(idx.vectors.filter(col("list").isin(probeLists: _*)), query, k)
-  }
-
-  /** FILTERED top-k against a built IVF index: `pred` (a predicate over
-    * the index's columns — id and any metadata columns the build
-    * carried) applies BEFORE the top-k heap, and PUSHES INTO the pruned
-    * parquet read (a plain column predicate lands in PushedFilters, so
-    * row groups the metadata excludes never decompress). The retrieval
-    * serving shape "nearest k docs WHERE lang = 'en'".
-    *
-    * RECALL CAVEAT, and the widening loop that answers it: filtering
-    * shrinks the candidate set — the `nprobe` nearest lists may hold
-    * fewer than k ELIGIBLE rows even when the unfiltered probe is well
-    * tuned. The probe doubles `nprobe` until k eligible candidates
-    * survive or every list is probed, so a selective predicate degrades
-    * gracefully toward the EXACT filtered scan instead of silently
-    * returning short/far results. Each widening step costs one pruned
-    * read (survivor count); the common case returns in one. */
-  def ivfQueryFiltered(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, query: Seq[Double], k: Int,
-                       pred: Column, nprobe: Int = 8): DataFrame = {
-    val idx = ivfMeta(spark, indexDir)
-    require(query.size == idx.centroids.head.length,
-      s"ivfQueryFiltered: query dim ${query.size} != index dim ${idx.centroids.head.length}")
-    val kLists = idx.centroids.length
-    var probe = math.min(math.max(1, nprobe), kLists)
-    while (true) {
-      val lists = nearestLists(idx.centroids, query.toArray, probe)
-      val res = rerank(
-        idx.vectors.filter(col("list").isin(lists: _*)).filter(pred),
-        query, k)
-      // ONE job per widening round: the ≤k answer rows ARE the
-      // satisfied-count — collect them and decide, returning a local
-      // frame (the batch variant's posture). The old count-then-return
-      // ran the pruned scoring twice in the satisfied case and once
-      // more per widening round.
-      val rows = res.collect()
-      if (probe >= kLists || rows.length >= k)
-        return localFrame(spark, rows, res.schema)
-      probe = math.min(probe * 2, kLists)
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Indexed cosine RANGE search against a built IVF index: every id with
-    * `cos >= minCos` among the `nprobe` nearest lists — the IVF sibling
-    * of [[lshRange]], completing the serving matrix (top-k / range ×
-    * brute / ivf / lsh). The probe reads only its lists via partition
-    * pruning and EXACT-verifies the threshold on the candidates, so
-    * precision is exact and recall is bounded by the probed lists (a
-    * neighbor assigned to an unprobed list is missed — the same recall
-    * contract as [[ivfQuery]], tuned by the same `nprobe` knob;
-    * `nprobe = kLists` degenerates to the exact full scan). Unlike the
-    * top-k probe there is no heap and no aggregation: one map-only
-    * filter scan of the pruned read, so serving cost tracks
-    * `nprobe/kLists` of the corpus regardless of how many rows pass. */
-  def ivfRange(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-               query: Seq[Double], minCos: Double, nprobe: Int = 8): DataFrame = {
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"ivfRange: minCos must be in (-1, 1], got $minCos")
-    val idx = ivfMeta(spark, indexDir)
-    require(query.size == idx.centroids.head.length,
-      s"ivfRange: query dim ${query.size} != index dim ${idx.centroids.head.length}")
-    val probeLists = nearestLists(idx.centroids, query.toArray, nprobe)
-    val qLit = array(query.map(lit): _*)
-    idx.vectors.filter(col("list").isin(probeLists: _*))
-      .select(col("id"), round(cosine(col("v"), qLit), 6).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")) &&
-        col("cos") >= minCos)
-  }
-
-  /** FILTERED indexed range search: [[ivfRange]] with the predicate
-    * pushed into the pruned read. Unlike the filtered top-k probes there
-    * is NO widening loop to need — a range answer has no k to satisfy,
-    * precision stays exact (the threshold verify), and recall is the
-    * same probed-lists contract as the unfiltered probe (the predicate
-    * only removes rows, never changes which lists hold the survivors). */
-  def ivfRangeFiltered(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, query: Seq[Double], minCos: Double,
-                       pred: Column, nprobe: Int = 8): DataFrame = {
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"ivfRangeFiltered: minCos must be in (-1, 1], got $minCos")
-    val idx = ivfMeta(spark, indexDir)
-    require(query.size == idx.centroids.head.length,
-      s"ivfRangeFiltered: query dim ${query.size} != index dim ${idx.centroids.head.length}")
-    val probeLists = nearestLists(idx.centroids, query.toArray, nprobe)
-    val qLit = array(query.map(lit): _*)
-    idx.vectors.filter(col("list").isin(probeLists: _*)).filter(pred)
-      .select(col("id"), round(cosine(col("v"), qLit), 6).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")) &&
-        col("cos") >= minCos)
-  }
-
-  /** Ad-hoc (index-less) IVF range search for IN-MEMORY corpora: train
-    * the coarse quantizer (deterministic, as [[ivfTopK]]), assign in the
-    * same plan, keep the `nprobe` nearest lists, exact-verify the
-    * threshold. One full corpus pass per call — a serving path should
-    * [[ivfBuild]] once and [[ivfRange]] against the pruned layout.
-    * Same probed-lists recall contract as [[ivfRange]] at equal params. */
-  def ivfRangeAdhoc(df: DataFrame, idCol: String, vecCol: String,
-                    query: Seq[Double], minCos: Double, kLists: Int = 16,
-                    nprobe: Int = 8, trainSample: Int = 2048): DataFrame = {
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"ivfRangeAdhoc: minCos must be in (-1, 1], got $minCos")
-    val centroids = trainCentroids(df, idCol, vecCol, kLists, trainSample)
-    val probeLists = nearestLists(centroids, query.toArray, nprobe)
-    val qLit = array(query.map(lit): _*)
-    ivfAssign(df, idCol, vecCol, centroids)
-      .filter(col("list").isin(probeLists: _*))
-      .select(col("id"), round(cosine(col("v"), qLit), 6).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")) &&
-        col("cos") >= minCos)
-  }
-
-  /** QUERY a built IVF index with a BATCH of query vectors in ONE pruned
-    * corpus pass — the indexed serving shape for query streams: one read
-    * over the UNION of all queries' probe lists, each vector scored
-    * against the whole query matrix via the native
-    * [[graft.functions.MatVecDots]], a per-row membership filter keeping
-    * each query's candidates to ITS OWN nprobe lists (so results are
-    * row-for-row identical to a [[ivfQuery]] per query), and a bounded-
-    * heap [[graft.functions.TopKF]] top-k per query — the only shuffle
-    * carries ≤ partitions × |queries| × k rows, exactly like
-    * [[bruteForceTopKBatch]]. Returns (qid, id, cos).
-    *
-    * Same plan-literal bound as [[bruteForceTopKBatch]]: batches beyond
-    * `chunkSize` split into independent chunk plans (each with its own
-    * pruned union read over just ITS queries' probe lists — often TIGHTER
-    * pruning than one giant union) and the results union; per-query
-    * answers are unchanged. The centroid sidecar re-read per chunk is
-    * kLists × dim doubles — noise. */
-  def ivfQueryBatch(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                    queries: Seq[(Long, Seq[Double])], k: Int,
-                    nprobe: Int = 8, chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "ivfQueryBatch: empty query batch")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"ivfQueryBatch: ragged query dims $dims")
-    require(chunkSize > 0, "ivfQueryBatch: chunkSize must be positive")
-    if (queries.size > chunkSize)
-      return queries.grouped(chunkSize)
-        .map(c => ivfQueryBatch(spark, indexDir, c, k, nprobe, chunkSize))
-        .reduce(_ unionByName _)
-    val idx = ivfMeta(spark, indexDir)
-    // same guard as lshQueryBatch: without it a longer query dies with an
-    // AIOOBE in nearestLists (an error class serving streams don't catch)
-    // and a shorter one silently truncates the centroid loop
-    require(dims.head == idx.centroids.head.length,
-      s"ivfQueryBatch: query dim ${dims.head} != index dim ${idx.centroids.head.length}")
-    val probeLists = queries.map { case (_, q) =>
-      nearestLists(idx.centroids, q.toArray, nprobe)
-    }
-    val allLists = probeLists.flatten.distinct
-    ProbeStats.record("ivf", queries.size, nprobe, nprobe, 0)
-    scoreIvfGroup(
-      idx.vectors.filter(col("list").isin(allLists: _*)), // pruned union read
-      queries, probeLists, k)
-  }
-
-  /** RANGE probe of a built IVF index for a BATCH of queries in ONE
-    * pruned corpus pass — the range member of the batched serving matrix,
-    * mirroring [[ivfQueryBatch]]: one read over the UNION of all queries'
-    * nprobe lists, every vector scored against the whole query matrix
-    * via the native [[graft.functions.MatVecDots]], a per-row membership
-    * filter keeping each query's candidates to ITS OWN lists (batch ≡
-    * per-query [[ivfRange]]), then the exact threshold verify. NO top-k
-    * heap and NO aggregation: the output (qid, id, cos) is map-only
-    * after the pruned read, so the plan has no shuffle at all. Same
-    * `chunkSize` plan-literal bound as every batch entry point. */
-  def ivfRangeBatch(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                    queries: Seq[(Long, Seq[Double])], minCos: Double,
-                    nprobe: Int = 8, chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "ivfRangeBatch: empty query batch")
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"ivfRangeBatch: minCos must be in (-1, 1], got $minCos")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"ivfRangeBatch: ragged query dims $dims")
-    require(chunkSize > 0, "ivfRangeBatch: chunkSize must be positive")
-    if (queries.size > chunkSize)
-      return queries.grouped(chunkSize)
-        .map(c => ivfRangeBatch(spark, indexDir, c, minCos, nprobe, chunkSize))
-        .reduce(_ unionByName _)
-    val idx = ivfMeta(spark, indexDir)
-    require(dims.head == idx.centroids.head.length,
-      s"ivfRangeBatch: query dim ${dims.head} != index dim ${idx.centroids.head.length}")
-    val probeLists = queries.map { case (_, q) =>
-      nearestLists(idx.centroids, q.toArray, nprobe)
-    }
-    val allLists = probeLists.flatten.distinct
-    ProbeStats.record("ivf_range", queries.size, nprobe, nprobe, 0)
-    scoreIvfRangeGroup(
-      idx.vectors.filter(col("list").isin(allLists: _*)),
-      queries, probeLists, minCos)
-  }
-
-  /** Ad-hoc (index-less) batched IVF range for IN-MEMORY corpora: train
-    * + assign in-plan (as [[ivfTopKBatch]]), score through the shared
-    * range tail. One full corpus pass per call. */
-  def ivfRangeAdhocBatch(df: DataFrame, idCol: String, vecCol: String,
-                         queries: Seq[(Long, Seq[Double])], minCos: Double,
-                         kLists: Int = 16, nprobe: Int = 8,
-                         trainSample: Int = 2048,
-                         chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "ivfRangeAdhocBatch: empty query batch")
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"ivfRangeAdhocBatch: minCos must be in (-1, 1], got $minCos")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"ivfRangeAdhocBatch: ragged query dims $dims")
-    val centroids = trainCentroids(df, idCol, vecCol, kLists, trainSample)
-    val assigned = ivfAssign(df, idCol, vecCol, centroids)
-    queries.grouped(chunkSize).map { chunk =>
-      val probeLists = chunk.map { case (_, q) =>
-        nearestLists(centroids, q.toArray, nprobe)
-      }
-      val allLists = probeLists.flatten.distinct
-      scoreIvfRangeGroup(assigned.filter(col("list").isin(allLists: _*)),
-        chunk, probeLists, minCos)
-    }.reduce(_ unionByName _)
-  }
-
-  /** [[ivfRangeBatch]] through the fingerprint-fenced cached-index
-    * lifecycle — same params string as every ivf-indexed entry point, so
-    * one build serves single/batch top-k and range alike. */
-  def ivfRangeBatchIndexed(df: DataFrame, idCol: String, vecCol: String,
-                           cacheKey: String, queries: Seq[(Long, Seq[Double])],
-                           minCos: Double, kLists: Int = 16, nprobe: Int = 8,
-                           trainSample: Int = 2048): DataFrame = {
-    require(queries.nonEmpty, "ivfRangeBatchIndexed: empty query batch")
-    require(queries.map(_._2.size).distinct.size == 1,
-      s"ivfRangeBatchIndexed: ragged query dims ${queries.map(_._2.size).distinct}")
-    val dir = cachedIndex(df, cacheKey, s"ivf|k=$kLists|t=$trainSample",
-      Some((newRows, d) => ivfAppend(newRows, idCol, vecCol, d))) { d =>
-      ivfBuild(df, idCol, vecCol, d, kLists, trainSample); ()
-    }
-    ivfRangeBatch(df.sparkSession, dir, queries, minCos, nprobe)
-  }
-
-  /** The shared scoring tail of the batched IVF RANGE paths: per-row
-    * [[graft.functions.MatVecDots]] against the group's query matrix, a
-    * per-query probe-list membership filter (pure column math — batch ≡
-    * per-query [[ivfRange]]), then the exact `cos >= minCos` verify.
-    * Unlike [[scoreIvfGroup]] there is no heap and no groupBy: the
-    * answer is a map-only projection of the pruned read. */
-  private def scoreIvfRangeGroup(vecs: DataFrame,
-                                 queries: Seq[(Long, Seq[Double])],
-                                 probeLists: Seq[Seq[Int]],
-                                 minCos: Double): DataFrame = {
-    import graft.functions.{MatVecF, VectorF}
-    val qNorms = queries.map { case (_, q) => math.sqrt(q.map(x => x * x).sum) }
-    val qIds = queries.map(_._1)
-    val probeLit = array(probeLists.map(ls => array(ls.map(lit): _*)): _*)
-    vecs
-      .withColumn("vnorm", VectorF.norm(col("v")))
-      .filter(col("vnorm").isNotNull && !isnan(col("vnorm")) && col("vnorm") > 0)
-      .select(col("id"), col("list"), col("vnorm"),
-        posexplode(MatVecF.dots(col("v"), queries.map(_._2))))
-      .filter(array_contains(element_at(probeLit, col("pos") + 1), col("list")))
-      .select(element_at(array(qIds.map(lit): _*), col("pos") + 1).as("qid"),
-        col("id"),
-        round(col("col") / (col("vnorm") *
-          element_at(array(qNorms.map(lit): _*), col("pos") + 1)), 6).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")) &&
-        col("cos") >= minCos)
-  }
-
-  /** The shared matrix-scoring tail of the batched IVF paths (indexed
-    * [[ivfQueryBatch]] and ad-hoc [[ivfTopKBatch]]): score one group of
-    * queries against a candidate frame carrying (id, v, list) — per-row
-    * [[graft.functions.MatVecDots]] against the group's query matrix, a
-    * per-query probe-list membership filter (pure column math, no join:
-    * batch ≡ per-query [[ivfQuery]]), degenerate-query exclusion exactly
-    * as in [[bruteForceTopKBatch]], and the bounded-heap top-k per
-    * query. Returns (qid, id, cos). */
-  private def scoreIvfGroup(vecs: DataFrame, queries: Seq[(Long, Seq[Double])],
-                            probeLists: Seq[Seq[Int]], k: Int): DataFrame = {
-    import graft.functions.{MatVecF, TopKF, VectorF}
-    val qNorms = queries.map { case (_, q) => math.sqrt(q.map(x => x * x).sum) }
-    val qIds = queries.map(_._1)
-    val probeLit = array(probeLists.map(ls => array(ls.map(lit): _*)): _*)
-    val scored = vecs
-      .withColumn("vnorm", VectorF.norm(col("v")))
-      .filter(col("vnorm").isNotNull && !isnan(col("vnorm")) && col("vnorm") > 0)
-      .select(col("id"), col("list"), col("vnorm"),
-        posexplode(MatVecF.dots(col("v"), queries.map(_._2))))
-      .filter(array_contains(element_at(probeLit, col("pos") + 1), col("list")))
-      .select(col("pos"),
-        round(col("col") / (col("vnorm") *
-          element_at(array(qNorms.map(lit): _*), col("pos") + 1)), 6).as("cos"),
-        col("id"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-    scored
-      .groupBy("pos")
-      .agg(TopKF.topKByScore(col("cos"), col("id"), k).as("topk"))
-      .select(element_at(array(qIds.map(lit): _*), col("pos") + 1).as("qid"),
-        explode(col("topk")).as("hit"))
-      .select(col("qid"), col("hit.id").as("id"), col("hit.score").as("cos"))
-  }
-
-  /** Ad-hoc (index-less) IVF ANN top-k for a BATCH of queries: train the
-    * coarse quantizer once (deterministic, as [[ivfTopK]]), assign in the
-    * same plan, and score every chunk through the shared
-    * [[scoreIvfGroup]] tail. For one-shot exploration and IN-MEMORY
-    * corpora — no index dir, nothing cached, one full corpus pass per
-    * call; a serving path should [[ivfBuild]] once and [[ivfQueryBatch]]
-    * against the partition-pruned layout instead. Returns (qid, id,
-    * cos), row-identical to an [[ivfTopK]] per query at equal params. */
-  def ivfTopKBatch(df: DataFrame, idCol: String, vecCol: String,
-                   queries: Seq[(Long, Seq[Double])], k: Int,
-                   kLists: Int = 16, nprobe: Int = 8,
-                   trainSample: Int = 2048, chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "ivfTopKBatch: empty query batch")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"ivfTopKBatch: ragged query dims $dims")
-    require(chunkSize > 0, "ivfTopKBatch: chunkSize must be positive")
-    val centroids = trainCentroids(df, idCol, vecCol, kLists, trainSample)
-    require(dims.head == centroids.head.length,
-      s"ivfTopKBatch: query dim ${dims.head} != corpus dim ${centroids.head.length}")
-    val assigned = ivfAssign(df, idCol, vecCol, centroids)
-    queries.grouped(chunkSize).map { chunk =>
-      val probeLists = chunk.map { case (_, q) =>
-        nearestLists(centroids, q.toArray, nprobe)
-      }
-      val allLists = probeLists.flatten.distinct
-      scoreIvfGroup(assigned.filter(col("list").isin(allLists: _*)),
-        chunk, probeLists, k)
-    }.reduce(_ unionByName _)
-  }
-
-  /** One-per-process index registry for [[ivfTopKIndexed]]: the first call
+  /** One-per-process index registry for [[Ann.Cached]] sources: the first call
     * for a corpus key pays the [[ivfBuild]]; every later call (warm bench
-    * passes, repeated serving queries) is a pruned [[ivfQuery]] probe.
+    * passes, repeated serving queries) is a pruned probe.
     * Entries carry a (corpus fingerprint, build params) stamp — a stamp
     * mismatch on a later call triggers a rebuild, so a corpus regenerated
     * under the same path/key can never silently serve a stale index.
@@ -1685,7 +1328,7 @@ object Similarity {
   private val indexCache =
     new java.util.concurrent.ConcurrentHashMap[String, IndexSlot]()
 
-  // Temp-dir indexes created by ivfTopKIndexed, deleted at JVM exit —
+  // Temp-dir indexes created for Ann.Cached sources, deleted at JVM exit —
   // without this, one directory leaked per corpus key per process.
   private val tempIndexDirs = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
@@ -1896,191 +1539,6 @@ object Similarity {
       }).dir
   }
 
-  /** IVF ANN top-k against a cached index keyed by `cacheKey` (use the
-    * corpus path + construction name). Builds on first use; probes after.
-    * Rebuilds — not serves stale — when the corpus input files or the
-    * build parameters (`kLists`, `trainSample`) change under the same key.
-    * `nprobe` is a pure query-time parameter and never forces a rebuild. */
-  def ivfTopKIndexed(df: DataFrame, idCol: String, vecCol: String, cacheKey: String,
-                     query: Seq[Double], k: Int, kLists: Int = 16,
-                     nprobe: Int = 8, trainSample: Int = 2048): DataFrame = {
-    val dir = cachedIndex(df, cacheKey, s"ivf|k=$kLists|t=$trainSample",
-      Some((newRows, d) => ivfAppend(newRows, idCol, vecCol, d))) { d =>
-      ivfBuild(df, idCol, vecCol, d, kLists, trainSample); ()
-    }
-    ivfQuery(df.sparkSession, dir, query, k, nprobe)
-  }
-
-  /** [[ivfQueryFiltered]] through the fingerprint-fenced cached-index
-    * lifecycle: first call per key pays an [[ivfBuild]] that CARRIES
-    * `metaCols` into the layout; later calls are widening pruned probes.
-    * metaCols participate in the param stamp (an index without them
-    * cannot serve the predicate), so filtered and plain serving of one
-    * corpus are distinct cached indexes by construction. */
-  def ivfTopKFilteredIndexed(df: DataFrame, idCol: String, vecCol: String,
-                             cacheKey: String, query: Seq[Double], k: Int,
-                             pred: Column, metaCols: Seq[String],
-                             kLists: Int = 16, nprobe: Int = 8,
-                             trainSample: Int = 2048): DataFrame = {
-    val dir = cachedIndex(df, cacheKey,
-      s"ivf|k=$kLists|t=$trainSample|m=${metaCols.mkString(",")}",
-      Some((newRows, d) => ivfAppend(newRows, idCol, vecCol, d))) { d =>
-      ivfBuild(df, idCol, vecCol, d, kLists, trainSample, metaCols); ()
-    }
-    ivfQueryFiltered(df.sparkSession, dir, query, k, pred, nprobe)
-  }
-
-  /** BATCH filtered top-k against a built IVF index — [[ivfQueryFiltered]]
-    * for a query stream: each round scores ALL still-unsatisfied queries
-    * in ONE pred-filtered pruned pass (the [[ivfQueryBatch]] machinery:
-    * list-pruned union read, native MatVecDots, per-query membership
-    * filter, bounded-heap top-k), finalizes every query with k eligible
-    * survivors (or a full-width probe), and doubles the probe width for
-    * the rest. Per-query answers equal [[ivfQueryFiltered]] at the same
-    * starting `nprobe` — the widening schedule is identical. Results are
-    * ≤ |queries| × k rows, collected per round (the same driver-size
-    * bound as every batch entry point's output). Returns (qid, id, cos),
-    * qid-then-rank ordered. */
-  def ivfQueryBatchFiltered(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String, queries: Seq[(Long, Seq[Double])],
-                            k: Int, pred: Column, nprobe: Int = 8,
-                            chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "ivfQueryBatchFiltered: empty query batch")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"ivfQueryBatchFiltered: ragged query dims $dims")
-    require(chunkSize > 0, "ivfQueryBatchFiltered: chunkSize must be positive")
-    // results are keyed by QID here (the widening loop tracks per-query
-    // satisfaction) — a duplicated qid would conflate two queries'
-    // candidate pools and double-emit rows; reject loudly (the serving
-    // jobs already drop in-batch duplicates, the pos-keyed unfiltered
-    // path tolerates them)
-    require(queries.map(_._1).distinct.size == queries.size,
-      "ivfQueryBatchFiltered: duplicate qids in one batch")
-    val idx = ivfMeta(spark, indexDir)
-    require(dims.head == idx.centroids.head.length,
-      s"ivfQueryBatchFiltered: query dim ${dims.head} != index dim ${idx.centroids.head.length}")
-    val kLists = idx.centroids.length
-    val eligible = idx.vectors.filter(pred)
-    val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var pending = queries
-    var width = math.min(math.max(1, nprobe), kLists)
-    val widthStart = width
-    var widthUsed = width
-    var rounds = 0
-    while (pending.nonEmpty) {
-      widthUsed = width
-      rounds += 1
-      val rows = pending.grouped(chunkSize).toSeq.flatMap { chunk =>
-        val probeLists = chunk.map(q =>
-          nearestLists(idx.centroids, q._2.toArray, width))
-        // prune the read to THIS round's union of probe lists (the
-        // ivfQueryBatch posture) — scoreIvfGroup's per-query membership
-        // filter keeps answers identical, but without the partition
-        // pruning every widening round re-scanned ALL kLists partitions
-        // and the index bought nothing on the filtered path
-        val allLists = probeLists.flatten.distinct
-        val pruned =
-          if (allLists.size >= kLists) eligible
-          else eligible.filter(col("list").isin(allLists: _*))
-        scoreIvfGroup(pruned, chunk, probeLists, k).collect()
-      }
-      val byQ = rows.groupBy(_.getLong(0))
-      val (done, todo) = pending.partition(q =>
-        width >= kLists || byQ.getOrElse(q._1, Seq.empty).size >= k)
-      acc ++= done.flatMap(q => byQ.getOrElse(q._1, Seq.empty)
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
-      pending = todo
-      width = math.min(width * 2, kLists)
-    }
-    ProbeStats.record("ivf_filtered", queries.size, widthStart, widthUsed,
-      rounds - 1)
-    import spark.implicits._
-    acc.toSeq.sortBy { case (qid, id, cos) => (qid, -cos, id) }
-      .toDF("qid", "id", "cos")
-  }
-
-  /** [[ivfRangeFiltered]] through the cached-index lifecycle — the SAME
-    * stamp as [[ivfTopKFilteredIndexed]], so one metadata-carrying build
-    * serves filtered top-k and filtered range. */
-  def ivfRangeFilteredIndexed(df: DataFrame, idCol: String, vecCol: String,
-                              cacheKey: String, query: Seq[Double],
-                              minCos: Double, pred: Column,
-                              metaCols: Seq[String], kLists: Int = 16,
-                              nprobe: Int = 8,
-                              trainSample: Int = 2048): DataFrame = {
-    val dir = cachedIndex(df, cacheKey,
-      s"ivf|k=$kLists|t=$trainSample|m=${metaCols.mkString(",")}",
-      Some((newRows, d) => ivfAppend(newRows, idCol, vecCol, d))) { d =>
-      ivfBuild(df, idCol, vecCol, d, kLists, trainSample, metaCols); ()
-    }
-    ivfRangeFiltered(df.sparkSession, dir, query, minCos, pred, nprobe)
-  }
-
-  /** Batch counterpart of [[ivfTopKFilteredIndexed]] — same cache stamp,
-    * so single and batch filtered serving of one corpus share one
-    * metadata-carrying build. */
-  def ivfTopKBatchFilteredIndexed(df: DataFrame, idCol: String, vecCol: String,
-                                  cacheKey: String,
-                                  queries: Seq[(Long, Seq[Double])], k: Int,
-                                  pred: Column, metaCols: Seq[String],
-                                  kLists: Int = 16, nprobe: Int = 8,
-                                  trainSample: Int = 2048): DataFrame = {
-    require(queries.nonEmpty, "ivfTopKBatchFilteredIndexed: empty query batch")
-    require(queries.map(_._2.size).distinct.size == 1,
-      s"ivfTopKBatchFilteredIndexed: ragged query dims ${queries.map(_._2.size).distinct}")
-    val dir = cachedIndex(df, cacheKey,
-      s"ivf|k=$kLists|t=$trainSample|m=${metaCols.mkString(",")}",
-      Some((newRows, d) => ivfAppend(newRows, idCol, vecCol, d))) { d =>
-      ivfBuild(df, idCol, vecCol, d, kLists, trainSample, metaCols); ()
-    }
-    ivfQueryBatchFiltered(df.sparkSession, dir, queries, k, pred, nprobe)
-  }
-
-  /** Batch counterpart of [[ivfTopKIndexed]]: resolves the SAME cached
-    * index (same cache stamp — single-query and batch calls under one
-    * `cacheKey` share one build), then runs the one-pass pruned
-    * [[ivfQueryBatch]]. */
-  def ivfTopKBatchIndexed(df: DataFrame, idCol: String, vecCol: String,
-                          cacheKey: String, queries: Seq[(Long, Seq[Double])],
-                          k: Int, kLists: Int = 16, nprobe: Int = 8,
-                          trainSample: Int = 2048): DataFrame = {
-    val dir = cachedIndex(df, cacheKey, s"ivf|k=$kLists|t=$trainSample",
-      Some((newRows, d) => ivfAppend(newRows, idCol, vecCol, d))) { d =>
-      ivfBuild(df, idCol, vecCol, d, kLists, trainSample); ()
-    }
-    ivfQueryBatch(df.sparkSession, dir, queries, k, nprobe)
-  }
-
-  /** [[ivfRange]] through the same fingerprint-fenced cached-index
-    * lifecycle as [[ivfTopKIndexed]] — identical params string, so a
-    * corpus served for top-k and range probes shares ONE build (the
-    * lsh twin is [[lshRangeIndexed]]). */
-  def ivfRangeIndexed(df: DataFrame, idCol: String, vecCol: String,
-                      cacheKey: String, query: Seq[Double], minCos: Double,
-                      kLists: Int = 16, nprobe: Int = 8,
-                      trainSample: Int = 2048): DataFrame = {
-    val dir = cachedIndex(df, cacheKey, s"ivf|k=$kLists|t=$trainSample",
-      Some((newRows, d) => ivfAppend(newRows, idCol, vecCol, d))) { d =>
-      ivfBuild(df, idCol, vecCol, d, kLists, trainSample); ()
-    }
-    ivfRange(df.sparkSession, dir, query, minCos, nprobe)
-  }
-
-  /** Ad-hoc (index-less) IVF ANN top-k: train, assign, and probe in one
-    * plan without materializing an index — for one-shot exploration. A
-    * serving path should [[ivfBuild]] once and [[ivfQuery]] per query
-    * (or use [[ivfTopKIndexed]]), which replaces this full corpus pass
-    * with a partition-pruned read. */
-  def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
-              query: Seq[Double], k: Int, kLists: Int = 16,
-              nprobe: Int = 8, trainSample: Int = 2048): DataFrame = {
-    val centroids = trainCentroids(df, idCol, vecCol, kLists, trainSample)
-    val probeLists = nearestLists(centroids, query.toArray, nprobe)
-    rerank(
-      ivfAssign(df, idCol, vecCol, centroids).filter(col("list").isin(probeLists: _*)),
-      query, k)
-  }
-
   /** Driver-side signature of one query vector under the same fixed-seed
     * plane family as [[lshBuckets]]/[[signature]]. */
   private[llm] def querySignature(query: Seq[Double],
@@ -2089,47 +1547,6 @@ object Similarity {
       val d = p.zip(query).map { case (a, b) => a * b }.sum
       if (d > 0) 1L << i else 0L
     }.reduce(_ | _)
-
-  /** ANN top-k via adaptive multi-probe LSH: start at the query's bucket
-    * and expand the probe Hamming radius until at least `minCandidates`
-    * vectors are in scope, then rerank by exact cosine.
-    *
-    * Ad-hoc form — radius selection runs against a ONE-JOB bucket
-    * histogram (`groupBy(bucket).count()`, ≤ min(2^nBits, distinct
-    * signatures) rows) replayed driver-side, then ONE final filtered
-    * signature pass reranks: exactly two corpus passes, where the old
-    * expansion loop recomputed the signature pass per radius step (up to
-    * 1 + log₂ nBits passes). Radius choice is identical to the loop's —
-    * histogram mass within Hamming r IS the loop's candidate count — so
-    * results are unchanged. A histogram wider than [[maxHistogramBuckets]]
-    * (nBits ≫ 20 over a huge corpus) falls back to the counting loop.
-    * The serving path is still [[lshBuild]] + [[lshQuery]] (or
-    * [[lshTopKIndexed]]), where probes are partition-PRUNED reads of the
-    * built index, not corpus scans. */
-  def lshTopK(df: DataFrame, idCol: String, vecCol: String,
-              query: Seq[Double], k: Int, nBits: Int = 16,
-              minCandidates: Int = 100): DataFrame = {
-    val planes = hyperplanes(nBits, query.size)
-    val qSig = querySignature(query, planes)
-    val q = array(query.map(lit): _*)
-    val bucketed = lshBuckets(df, idCol, vecCol, nBits, query.size)
-    val hamming = bit_count(col("bucket").bitwiseXOR(lit(qSig)))
-    val hist = bucketed.filter(col("bucket").isNotNull)
-      .groupBy("bucket").count()
-      .limit(maxHistogramBuckets + 1).collect()
-    val histogram =
-      if (hist.length <= maxHistogramBuckets)
-        Some((hist.map(_.getLong(0)), hist.map(_.getLong(1))))
-      else None
-    val radius = chooseRadius(histogram, qSig, nBits, minCandidates)(r =>
-      bucketed.filter(hamming <= r).limit(minCandidates).count())
-    bucketed.filter(hamming <= radius)
-      .select(col("id"), round(cosine(col("v"), q), 6).as("cos"))
-      // same unscorable-row exclusion as bruteForceTopK (null or NaN cos)
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-      .orderBy(col("cos").desc, col("id").asc)
-      .limit(k)
-  }
 
   // ---------- LSH index lifecycle (mirrors the IVF one) ----------
 
@@ -2186,7 +1603,7 @@ object Similarity {
       // bucket-OCCUPANCY sidecar: rows-per-populated-bucket, read back
       // from the just-staged index (a column-pruned scan of the bucket
       // column only — not a second signature pass over the corpus).
-      // lshQuery replays its radius-expansion loop against this histogram
+      // an lsh probe replays its radius-expansion loop against this histogram
       // DRIVER-SIDE, so a warm probe costs zero candidate-count Spark
       // jobs. Size is bounded by min(2^nBits, distinct signatures) —
       // 65536 rows at the default width; a query facing an oversized
@@ -2272,11 +1689,14 @@ object Similarity {
     * the warm path). Histogram is None when the index predates the
     * occupancy sidecar or exceeds [[maxHistogramBuckets]] rows — those
     * probes fall back to the counting loop, correctness unchanged. */
-  private final case class LshMeta(nBits: Int, dim: Int, pBits: Int,
-                                   histogram: Option[(Array[Long], Array[Long])],
-                                   vectors: DataFrame)
+  private[llm] final class LshMeta(val nBits: Int, val dim: Int, val pBits: Int,
+                                   hist: => Option[(Array[Long], Array[Long])],
+                                   val vectors: DataFrame,
+                                   val partitioned: Boolean = true) {
+    lazy val histogram: Option[(Array[Long], Array[Long])] = hist
+  }
 
-  private val maxHistogramBuckets = 1 << 20
+  private[llm] val maxHistogramBuckets = 1 << 20
 
   // Meta caches hold histograms and resolved DataFrames per
   // (session, indexDir). A long-lived process cycling through many
@@ -2313,7 +1733,7 @@ object Similarity {
     })
   }
 
-  private def lshMeta(spark: org.apache.spark.sql.SparkSession,
+  private[llm] def lshMeta(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String): LshMeta = {
     // session-scoped key: a resolved DataFrame must not leak across
     // SparkSessions
@@ -2339,7 +1759,7 @@ object Similarity {
           else Some((rows.map(_.getAs[Long]("bucket")),
                      rows.map(_.getAs[Long]("count"))))
         } catch { case scala.util.control.NonFatal(_) => None }
-      val m = LshMeta(nBits, dim, pBits, histogram,
+      val m = new LshMeta(nBits, dim, pBits, histogram,
         antiTombstoned(spark, indexDir,
           spark.read.parquet(s"$indexDir/vectors")))
       capCache(lshMetaCache)
@@ -2356,155 +1776,6 @@ object Similarity {
       (0 until nBits).combinations(r)
         .map(_.foldLeft(sig)((s, b) => s ^ (1L << b))))
 
-  /** QUERY a built LSH index: start at the query's bucket and expand the
-    * probe Hamming radius until `minCandidates` vectors are in scope, then
-    * rerank by exact cosine — same adaptive semantics (and same candidate
-    * sets) as [[lshTopK]], but each probe step reads ONLY the partitions
-    * in the radius ball's PREFIX projection (partition pruning over the
-    * `pband` layout column), with the exact Hamming filter on the full
-    * signature applied inside. When even the prefix ball outgrows
-    * `maxEnumBuckets` ids (the corpus is genuinely spread out), the probe
-    * falls back to a Hamming-filtered scan — correctness unchanged,
-    * pruning honestly abandoned. */
-  def lshQuery(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-               query: Seq[Double], k: Int, minCandidates: Int = 100,
-               maxEnumBuckets: Int = 4096): DataFrame = {
-    val idx = lshMeta(spark, indexDir)
-    val (nBits, dim, pBits) = (idx.nBits, idx.dim, idx.pBits)
-    require(query.size == dim,
-      s"lshQuery: query dim ${query.size} != index dim $dim")
-    val qSig = querySignature(query, hyperplanes(nBits, dim))
-    val vectors = idx.vectors
-    def candsAt(radius: Int): DataFrame =
-      prunedCandidates(vectors, idx, qSig, radius, maxEnumBuckets)
-    // Radius selection via the shared chooseRadius: with the occupancy
-    // histogram (memoized; every index built since it exists has one) the
-    // expansion replays DRIVER-SIDE at zero Spark jobs; without it, the
-    // counting loop runs one job per step. Either way the decision — and
-    // therefore the candidate set and results — is identical.
-    val radius = chooseRadius(idx.histogram, qSig, nBits, minCandidates)(r =>
-      candsAt(r).limit(minCandidates).count())
-    rerank(candsAt(radius), query, k)
-  }
-
-  /** FILTERED top-k against a built LSH index — the LSH sibling of
-    * [[ivfQueryFiltered]]: `pred` applies before the heap and pushes
-    * into the Hamming-ball-pruned parquet read. Same recall caveat,
-    * same answer: the occupancy histogram plans the UNFILTERED radius
-    * (it cannot see predicate selectivity), then the ball WIDENS —
-    * doubling, capped at nBits = the exact filtered full scan — until k
-    * eligible candidates survive. One survivor-count read per widening
-    * step; a predicate loose enough for the planned ball returns in
-    * one. */
-  def lshQueryFiltered(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, query: Seq[Double], k: Int,
-                       pred: Column, minCandidates: Int = 100,
-                       maxEnumBuckets: Int = 4096): DataFrame = {
-    val idx = lshMeta(spark, indexDir)
-    require(query.size == idx.dim,
-      s"lshQueryFiltered: query dim ${query.size} != index dim ${idx.dim}")
-    val qSig = querySignature(query, hyperplanes(idx.nBits, idx.dim))
-    def candsAt(radius: Int): DataFrame =
-      prunedCandidates(idx.vectors, idx, qSig, radius, maxEnumBuckets)
-        .filter(pred)
-    var radius = chooseRadius(idx.histogram, qSig, idx.nBits, minCandidates)(r =>
-      candsAt(r).limit(minCandidates).count())
-    while (true) {
-      val res = rerank(candsAt(radius), query, k)
-      // one job per widening round — collect the ≤k answer rows and
-      // decide on their count (the ivfQueryFiltered posture)
-      val rows = res.collect()
-      if (radius >= idx.nBits || rows.length >= k)
-        return localFrame(spark, rows, res.schema)
-      radius = math.min(radius * 2, idx.nBits)
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Indexed cosine RANGE search against a built LSH index: every id
-    * with `cos >= minCos`, served by a PRUNED Hamming-ball read instead
-    * of a corpus scan. The probe radius derives from the sign-LSH
-    * collision geometry — a pair at angle θ flips each hyperplane bit
-    * with probability θ/π, so a cosine-`minCos` neighbor sits at
-    * expected Hamming distance `nBits·acos(minCos)/π`; the probe reads
-    * `that + slackBits` (slack buys recall at read-amplification cost)
-    * and then EXACT-verifies `cos >= minCos` on the candidates.
-    *
-    * Semantics: precision is EXACT (the verify filter), recall is
-    * approximate — a true neighbor whose signature landed beyond the
-    * slack radius is missed (tail probability decays binomially in the
-    * slack). `slackBits = nBits` degenerates to the exact full scan.
-    * High thresholds (the retrieval-filter regime this exists for) probe
-    * a small ball of a partition-pruned layout: serving cost tracks the
-    * ball, not the corpus — the [[bruteForceRange]] scan stays the
-    * exact baseline for low thresholds. */
-  def lshRange(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-               query: Seq[Double], minCos: Double, slackBits: Int = 4,
-               maxEnumBuckets: Int = 4096): DataFrame = {
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"lshRange: minCos must be in (-1, 1], got $minCos")
-    require(slackBits >= 0, s"lshRange: slackBits must be >= 0, got $slackBits")
-    val idx = lshMeta(spark, indexDir)
-    require(query.size == idx.dim,
-      s"lshRange: query dim ${query.size} != index dim ${idx.dim}")
-    val qSig = querySignature(query, hyperplanes(idx.nBits, idx.dim))
-    val radius = rangeRadius(idx.nBits, minCos, slackBits)
-    val qLit = array(query.map(lit): _*)
-    prunedCandidates(idx.vectors, idx, qSig, radius, maxEnumBuckets)
-      .select(col("id"), round(cosine(col("v"), qLit), 6).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")) &&
-        col("cos") >= minCos)
-  }
-
-  /** FILTERED indexed LSH range — the LSH sibling of
-    * [[ivfRangeFiltered]]: the predicate pushes into the Hamming-ball-
-    * pruned read, exact precision, the same geometry-derived-radius
-    * recall contract (the predicate only removes rows). No widening
-    * needed — range has no k to satisfy. */
-  def lshRangeFiltered(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, query: Seq[Double], minCos: Double,
-                       pred: Column, slackBits: Int = 4,
-                       maxEnumBuckets: Int = 4096): DataFrame = {
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"lshRangeFiltered: minCos must be in (-1, 1], got $minCos")
-    require(slackBits >= 0, s"lshRangeFiltered: slackBits must be >= 0, got $slackBits")
-    val idx = lshMeta(spark, indexDir)
-    require(query.size == idx.dim,
-      s"lshRangeFiltered: query dim ${query.size} != index dim ${idx.dim}")
-    val qSig = querySignature(query, hyperplanes(idx.nBits, idx.dim))
-    val radius = rangeRadius(idx.nBits, minCos, slackBits)
-    val qLit = array(query.map(lit): _*)
-    prunedCandidates(idx.vectors, idx, qSig, radius, maxEnumBuckets)
-      .filter(pred)
-      .select(col("id"), round(cosine(col("v"), qLit), 6).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")) &&
-        col("cos") >= minCos)
-  }
-
-  /** Ad-hoc (index-less) LSH range search for IN-MEMORY corpora: one
-    * corpus pass computing signatures in-plan, a Hamming-radius filter
-    * derived by the SAME collision-geometry rule as [[lshRange]]
-    * (`ceil(nBits·acos(minCos)/π) + slackBits`), then the exact verify.
-    * Identical candidate-inclusion semantics to [[lshRange]] at equal
-    * params — just unpruned; a serving path should [[lshBuild]] once
-    * and probe the partition-pruned layout instead. */
-  def lshRangeAdhoc(df: DataFrame, idCol: String, vecCol: String,
-                    query: Seq[Double], minCos: Double, nBits: Int = 16,
-                    slackBits: Int = 4): DataFrame = {
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"lshRangeAdhoc: minCos must be in (-1, 1], got $minCos")
-    require(slackBits >= 0, s"lshRangeAdhoc: slackBits must be >= 0, got $slackBits")
-    val dim = query.size
-    val qSig = querySignature(query, hyperplanes(nBits, dim))
-    val radius = rangeRadius(nBits, minCos, slackBits)
-    val qLit = array(query.map(lit): _*)
-    lshBuckets(df, idCol, vecCol, nBits, dim)
-      .filter(bit_count(col("bucket").bitwiseXOR(lit(qSig))) <= radius)
-      .select(col("id"), round(cosine(col("v"), qLit), 6).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")) &&
-        col("cos") >= minCos)
-  }
-
   /** The pband ids a radius-`radius` probe of signature `qSig` must read
     * — the prefix projection of the Hamming ball (lossless: full-sig
     * Hamming ≤ r implies prefix Hamming ≤ r) — or None when the ball
@@ -2513,7 +1784,7 @@ object Similarity {
     * C(n, r) sum overflows Long long before any enumerable radius. ONE
     * implementation shared by the single and batch probes — their
     * batch ≡ per-query contract depends on identical ball decisions. */
-  private def prefixBall(qSig: Long, nBits: Int, pBits: Int, radius: Int,
+  private[llm] def prefixBall(qSig: Long, nBits: Int, pBits: Int, radius: Int,
                          maxEnumBuckets: Int): Option[Seq[Long]] = {
     def choose(n: Int, r: Int): Long =
       (1 to r).foldLeft(1L)((a, i) => a * (n - i + 1) / i)
@@ -2528,7 +1799,7 @@ object Similarity {
   /** pband IN (...) literals typed to match the read-back partition
     * column — the column is type-INFERRED (int when values fit), and a
     * mistyped literal adds a cast that silently drops PartitionFilters. */
-  private def pbandLiterals(idx: LshMeta, ids: Seq[Long]): Seq[Any] =
+  private[llm] def pbandLiterals(idx: LshMeta, ids: Seq[Long]): Seq[Any] =
     if (idx.vectors.schema("pband").dataType ==
         org.apache.spark.sql.types.IntegerType) ids.map(_.toInt)
     else ids
@@ -2538,10 +1809,12 @@ object Similarity {
     * by the single probe, and by the batch probe's counting fallback so
     * a legacy no-histogram index never costs the batch path unpruned
     * full-index counting scans. */
-  private def prunedCandidates(vectors: DataFrame, idx: LshMeta, qSig: Long,
+  private[llm] def prunedCandidates(vectors: DataFrame, idx: LshMeta, qSig: Long,
                                radius: Int, maxEnumBuckets: Int): DataFrame = {
     val isHamming = bit_count(col("bucket").bitwiseXOR(lit(qSig)))
-    prefixBall(qSig, idx.nBits, idx.pBits, radius, maxEnumBuckets) match {
+    (if (idx.partitioned)
+       prefixBall(qSig, idx.nBits, idx.pBits, radius, maxEnumBuckets)
+     else None) match {
       case Some(ids) =>
         vectors.filter(col("pband").isin(pbandLiterals(idx, ids): _*) &&
           isHamming <= radius)
@@ -2568,7 +1841,7 @@ object Similarity {
     * pre-bucketed form is bounded by cap × chunk ≈ 2.7×10⁸ popcounts
     * per chunk (≲0.3 s driver CPU) regardless of how many expansion
     * steps the queries take. */
-  private def chooseRadius(histogram: Option[(Array[Long], Array[Long])],
+  private[llm] def chooseRadius(histogram: Option[(Array[Long], Array[Long])],
                            qSig: Long, nBits: Int, minCandidates: Int)
                           (countAt: Int => Long): Int = {
     val count: Int => Long = histogram match {
@@ -2590,453 +1863,6 @@ object Similarity {
     var r = 1
     while (r < nBits && count(r) < minCandidates) r = math.min(r * 2, nBits)
     r
-  }
-
-  /** LSH ANN top-k against a cached index keyed by `cacheKey` — the
-    * train-free counterpart of [[ivfTopKIndexed]]: first call per key
-    * pays the one-pass [[lshBuild]]; every later call is a bucket-pruned
-    * [[lshQuery]] probe. Same fingerprint fencing: a changed corpus or
-    * nBits under the same key rebuilds instead of serving stale. */
-  def lshTopKIndexed(df: DataFrame, idCol: String, vecCol: String, cacheKey: String,
-                     query: Seq[Double], k: Int, nBits: Int = 16,
-                     minCandidates: Int = 100, partitionBits: Int = 8): DataFrame = {
-    val dim = query.size
-    val dir = cachedIndex(df, cacheKey, s"lsh|b=$nBits|d=$dim|p=$partitionBits",
-      Some((newRows, d) => lshAppend(newRows, idCol, vecCol, d))) { d =>
-      lshBuild(df, idCol, vecCol, d, nBits, dim, partitionBits)
-    }
-    lshQuery(df.sparkSession, dir, query, k, minCandidates)
-  }
-
-  /** [[lshQueryFiltered]] through the cached-index lifecycle — the LSH
-    * sibling of [[ivfTopKFilteredIndexed]], same metaCols-in-stamp
-    * contract. */
-  def lshTopKFilteredIndexed(df: DataFrame, idCol: String, vecCol: String,
-                             cacheKey: String, query: Seq[Double], k: Int,
-                             pred: Column, metaCols: Seq[String],
-                             nBits: Int = 16, minCandidates: Int = 100,
-                             partitionBits: Int = 8): DataFrame = {
-    val dim = query.size
-    val dir = cachedIndex(df, cacheKey,
-      s"lsh|b=$nBits|d=$dim|p=$partitionBits|m=${metaCols.mkString(",")}",
-      Some((newRows, d) => lshAppend(newRows, idCol, vecCol, d))) { d =>
-      lshBuild(df, idCol, vecCol, d, nBits, dim, partitionBits, metaCols)
-    }
-    lshQueryFiltered(df.sparkSession, dir, query, k, pred, minCandidates)
-  }
-
-  /** [[lshRangeFiltered]] through the cached-index lifecycle — shared
-    * stamp with [[lshTopKFilteredIndexed]], one build for both. */
-  def lshRangeFilteredIndexed(df: DataFrame, idCol: String, vecCol: String,
-                              cacheKey: String, query: Seq[Double],
-                              minCos: Double, pred: Column,
-                              metaCols: Seq[String], nBits: Int = 16,
-                              slackBits: Int = 4,
-                              partitionBits: Int = 8): DataFrame = {
-    val dim = query.size
-    val dir = cachedIndex(df, cacheKey,
-      s"lsh|b=$nBits|d=$dim|p=$partitionBits|m=${metaCols.mkString(",")}",
-      Some((newRows, d) => lshAppend(newRows, idCol, vecCol, d))) { d =>
-      lshBuild(df, idCol, vecCol, d, nBits, dim, partitionBits, metaCols)
-    }
-    lshRangeFiltered(df.sparkSession, dir, query, minCos, pred, slackBits)
-  }
-
-  /** Batch counterpart of [[lshTopKFilteredIndexed]] — shared stamp,
-    * one metadata-carrying build for single and batch filtered probes. */
-  def lshTopKBatchFilteredIndexed(df: DataFrame, idCol: String, vecCol: String,
-                                  cacheKey: String,
-                                  queries: Seq[(Long, Seq[Double])], k: Int,
-                                  pred: Column, metaCols: Seq[String],
-                                  nBits: Int = 16, minCandidates: Int = 100,
-                                  partitionBits: Int = 8): DataFrame = {
-    // validate the batch BEFORE resolving the cache (the
-    // lshTopKBatchIndexed rule): a ragged batch must not cost a full
-    // index build it could never use
-    require(queries.nonEmpty, "lshTopKBatchFilteredIndexed: empty query batch")
-    require(queries.map(_._2.size).distinct.size == 1,
-      s"lshTopKBatchFilteredIndexed: ragged query dims ${queries.map(_._2.size).distinct}")
-    val dim = queries.head._2.size
-    val dir = cachedIndex(df, cacheKey,
-      s"lsh|b=$nBits|d=$dim|p=$partitionBits|m=${metaCols.mkString(",")}",
-      Some((newRows, d) => lshAppend(newRows, idCol, vecCol, d))) { d =>
-      lshBuild(df, idCol, vecCol, d, nBits, dim, partitionBits, metaCols)
-    }
-    lshQueryBatchFiltered(df.sparkSession, dir, queries, k, pred, minCandidates)
-  }
-
-  /** [[lshRange]] through the same fingerprint-fenced cached-index
-    * lifecycle as [[lshTopKIndexed]] — an identical params string, so a
-    * corpus served for top-k and for range probes shares ONE build. */
-  def lshRangeIndexed(df: DataFrame, idCol: String, vecCol: String,
-                      cacheKey: String, query: Seq[Double], minCos: Double,
-                      nBits: Int = 16, slackBits: Int = 4,
-                      partitionBits: Int = 8): DataFrame = {
-    val dim = query.size
-    val dir = cachedIndex(df, cacheKey, s"lsh|b=$nBits|d=$dim|p=$partitionBits",
-      Some((newRows, d) => lshAppend(newRows, idCol, vecCol, d))) { d =>
-      lshBuild(df, idCol, vecCol, d, nBits, dim, partitionBits)
-    }
-    lshRange(df.sparkSession, dir, query, minCos, slackBits)
-  }
-
-  /** BATCH filtered top-k against a built LSH index — the LSH sibling of
-    * [[ivfQueryBatchFiltered]]: per-query starting radii come from the
-    * shared [[chooseRadius]] planning (histogram-driven when available,
-    * with the pred-filtered counting fallback [[lshQueryFiltered]] uses),
-    * each round reads ONE pruned union of the still-unsatisfied queries'
-    * prefix balls (unpruned only if any pending ball outgrows the
-    * enumeration cap) filtered by `pred`, scores with the batched
-    * machinery, finalizes queries with k eligible survivors, and doubles
-    * the radii of the rest (capped at nBits = the exact filtered scan).
-    * Returns (qid, id, cos), qid-then-rank ordered. */
-  def lshQueryBatchFiltered(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String, queries: Seq[(Long, Seq[Double])],
-                            k: Int, pred: Column, minCandidates: Int = 100,
-                            maxEnumBuckets: Int = 4096,
-                            chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "lshQueryBatchFiltered: empty query batch")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"lshQueryBatchFiltered: ragged query dims $dims")
-    require(chunkSize > 0, "lshQueryBatchFiltered: chunkSize must be positive")
-    // qid-keyed widening loop — duplicates would conflate two queries'
-    // pools (the ivfQueryBatchFiltered note); reject loudly
-    require(queries.map(_._1).distinct.size == queries.size,
-      "lshQueryBatchFiltered: duplicate qids in one batch")
-    val idx = lshMeta(spark, indexDir)
-    require(dims.head == idx.dim,
-      s"lshQueryBatchFiltered: query dim ${dims.head} != index dim ${idx.dim}")
-    val planes = hyperplanes(idx.nBits, idx.dim)
-    val eligible = idx.vectors.filter(pred)
-    val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var pending = queries.map { case (qid, q) =>
-      val sig = querySignature(q, planes)
-      val r0 = chooseRadius(idx.histogram, sig, idx.nBits, minCandidates)(r =>
-        prunedCandidates(eligible, idx, sig, r, maxEnumBuckets)
-          .limit(minCandidates).count())
-      (qid, q, sig, r0)
-    }
-    val radiusStart =
-      if (pending.isEmpty) 0 else pending.map(_._4).min
-    var radiusUsed = radiusStart
-    var lshRounds = 0
-    while (pending.nonEmpty) {
-      radiusUsed = math.max(radiusUsed, pending.map(_._4).max)
-      lshRounds += 1
-      val rows = pending.grouped(chunkSize).toSeq.flatMap { chunk =>
-        // union prefix-ball pruning, lossless under the per-query
-        // full-signature Hamming filter inside scoreLshGroup. PER-GROUP
-        // split (the lshQueryBatch posture): one adversarial wide-ball
-        // query must not cost every other query its pruned read —
-        // enumerable queries share one union-pruned read, overflow
-        // queries share one unpruned scan, the answers union
-        val balls = chunk.map { case (_, _, sig, r) =>
-          prefixBall(sig, idx.nBits, idx.pBits, r, maxEnumBuckets) }
-        val (enumC, scanC) = chunk.zip(balls).partition(_._2.isDefined)
-        val parts = Seq(
-          if (enumC.isEmpty) None else Some {
-            val ids = enumC.flatMap(_._2.get).distinct
-            scoreLshGroup(
-              eligible.filter(col("pband").isin(pbandLiterals(idx, ids): _*)),
-              enumC.map(c => (c._1._1, c._1._2)), enumC.map(_._1._3),
-              enumC.map(_._1._4), k)
-          },
-          if (scanC.isEmpty) None else Some(
-            scoreLshGroup(eligible, scanC.map(c => (c._1._1, c._1._2)),
-              scanC.map(_._1._3), scanC.map(_._1._4), k))
-        ).flatten
-        parts.flatMap(_.collect())
-      }
-      val byQ = rows.groupBy(_.getLong(0))
-      val (done, todo) = pending.partition { case (qid, _, _, r) =>
-        r >= idx.nBits || byQ.getOrElse(qid, Seq.empty).size >= k }
-      acc ++= done.flatMap { case (qid, _, _, _) =>
-        byQ.getOrElse(qid, Seq.empty)
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) }
-      pending = todo.map { case (qid, q, sig, r) =>
-        (qid, q, sig, math.min(r * 2, idx.nBits)) }
-    }
-    ProbeStats.record("lsh_filtered", queries.size, radiusStart, radiusUsed,
-      lshRounds - 1)
-    import spark.implicits._
-    acc.toSeq.sortBy { case (qid, id, cos) => (qid, -cos, id) }
-      .toDF("qid", "id", "cos")
-  }
-
-  /** QUERY a built LSH index with a BATCH of query vectors in ONE pruned
-    * read — the LSH member of the batched serving matrix, mirroring
-    * [[ivfQueryBatch]]: each query's Hamming radius comes from the
-    * memoized occupancy histogram DRIVER-SIDE (zero counting jobs —
-    * identical radii, hence identical per-query candidate sets and
-    * results, to a [[lshQuery]] per query), the read is pruned to the
-    * UNION of all queries' prefix balls (lossless: full-signature Hamming
-    * ≤ r implies prefix Hamming ≤ r, so each query's exact in-scope
-    * filter below is a subset of its enumerated ball), every candidate
-    * row scores against the whole query matrix via the native
-    * [[graft.functions.MatVecDots]], a per-row per-query Hamming
-    * membership filter keeps each query to ITS candidates, and the
-    * bounded-heap [[graft.functions.TopKF]] keeps k per query — the only
-    * shuffle carries ≤ partitions × |queries| × k rows. A query whose
-    * ball outgrows `maxEnumBuckets` falls back to an unpruned scan
-    * WITHOUT dragging the rest of the chunk with it (per-group pruning:
-    * enumerable queries keep their one union-pruned read, overflow
-    * queries share one scan, the answers union); per-step counting jobs
-    * happen only for a legacy index with no occupancy sidecar. Same
-    * plan-literal `chunkSize` bound as the other batch entry points.
-    * Returns (qid, id, cos). */
-  def lshQueryBatch(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                    queries: Seq[(Long, Seq[Double])], k: Int,
-                    minCandidates: Int = 100, maxEnumBuckets: Int = 4096,
-                    chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "lshQueryBatch: empty query batch")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"lshQueryBatch: ragged query dims $dims")
-    require(chunkSize > 0, "lshQueryBatch: chunkSize must be positive")
-    if (queries.size > chunkSize)
-      return queries.grouped(chunkSize)
-        .map(c => lshQueryBatch(spark, indexDir, c, k, minCandidates,
-          maxEnumBuckets, chunkSize))
-        .reduce(_ unionByName _)
-    val idx = lshMeta(spark, indexDir)
-    val nBits = idx.nBits
-    require(dims.head == idx.dim,
-      s"lshQueryBatch: query dim ${dims.head} != index dim ${idx.dim}")
-    val planes = hyperplanes(nBits, idx.dim)
-    val vectors = idx.vectors
-    val qSigs = queries.map { case (_, q) => querySignature(q, planes) }
-    // the counting fallback (legacy index, no occupancy sidecar) probes
-    // through the same pruned per-query candidate read as lshQuery
-    val radii = qSigs.map(qSig =>
-      chooseRadius(idx.histogram, qSig, nBits, minCandidates)(r =>
-        prunedCandidates(vectors, idx, qSig, r, maxEnumBuckets)
-          .limit(minCandidates).count()))
-    // per-query prefix balls (shared prefixBall — identical ball
-    // decisions to the single-query path); None = unpruned read
-    val balls: Seq[Option[Seq[Long]]] = qSigs.zip(radii).map {
-      case (qSig, radius) =>
-        prefixBall(qSig, nBits, idx.pBits, radius, maxEnumBuckets)
-    }
-    ProbeStats.record("lsh", queries.size, radii.min, radii.max, 0)
-    // PER-GROUP pruning: one adversarial wide-ball query must not cost
-    // every other query its pruned read. Queries split into the
-    // ball-enumerable group (ONE union-pruned read over their balls) and
-    // the overflow group (one unpruned scan); each query's own Hamming
-    // membership filter defines its candidate set, so the split cannot
-    // change any query's answer — the groups' results simply union.
-    val (enumIdx, scanIdx) = queries.indices.partition(i => balls(i).isDefined)
-    def slice[T](xs: Seq[T], ix: Seq[Int]): Seq[T] = ix.map(xs)
-    val parts = Seq(
-      if (enumIdx.isEmpty) None else Some {
-        val ids = enumIdx.flatMap(i => balls(i).get).distinct
-        scoreLshGroup(
-          vectors.filter(col("pband").isin(pbandLiterals(idx, ids): _*)),
-          slice(queries, enumIdx), slice(qSigs, enumIdx),
-          slice(radii, enumIdx), k)
-      },
-      if (scanIdx.isEmpty) None
-      else Some(scoreLshGroup(vectors, slice(queries, scanIdx),
-        slice(qSigs, scanIdx), slice(radii, scanIdx), k))
-    ).flatten
-    parts.reduce(_ unionByName _)
-  }
-
-  /** RANGE probe of a built LSH index for a BATCH of queries in ONE
-    * pruned read — the range member of the batched LSH serving matrix,
-    * mirroring [[lshQueryBatch]]: the probe radius is THRESHOLD-derived
-    * (the [[lshRange]] collision-geometry rule — one radius for the
-    * whole batch, no occupancy replay needed), the read prunes to the
-    * union of the enumerable queries' prefix balls with the same
-    * per-group overflow split as the top-k batch, each candidate row
-    * scores against the whole query matrix, a per-query Hamming
-    * membership filter keeps batch ≡ per-query [[lshRange]], and the
-    * exact threshold verify bounds precision. No heap, no aggregation —
-    * map-only output (qid, id, cos) after the pruned read. */
-  def lshRangeBatch(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                    queries: Seq[(Long, Seq[Double])], minCos: Double,
-                    slackBits: Int = 4, maxEnumBuckets: Int = 4096,
-                    chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "lshRangeBatch: empty query batch")
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"lshRangeBatch: minCos must be in (-1, 1], got $minCos")
-    require(slackBits >= 0, s"lshRangeBatch: slackBits must be >= 0, got $slackBits")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"lshRangeBatch: ragged query dims $dims")
-    require(chunkSize > 0, "lshRangeBatch: chunkSize must be positive")
-    if (queries.size > chunkSize)
-      return queries.grouped(chunkSize)
-        .map(c => lshRangeBatch(spark, indexDir, c, minCos, slackBits,
-          maxEnumBuckets, chunkSize))
-        .reduce(_ unionByName _)
-    val idx = lshMeta(spark, indexDir)
-    require(dims.head == idx.dim,
-      s"lshRangeBatch: query dim ${dims.head} != index dim ${idx.dim}")
-    val nBits = idx.nBits
-    val planes = hyperplanes(nBits, idx.dim)
-    val qSigs = queries.map { case (_, q) => querySignature(q, planes) }
-    val radius = rangeRadius(nBits, minCos, slackBits)
-    val balls: Seq[Option[Seq[Long]]] = qSigs.map(qSig =>
-      prefixBall(qSig, nBits, idx.pBits, radius, maxEnumBuckets))
-    ProbeStats.record("lsh_range", queries.size, radius, radius, 0)
-    val (enumIdx, scanIdx) = queries.indices.partition(i => balls(i).isDefined)
-    def slice[T](xs: Seq[T], ix: Seq[Int]): Seq[T] = ix.map(xs)
-    val parts = Seq(
-      if (enumIdx.isEmpty) None else Some {
-        val ids = enumIdx.flatMap(i => balls(i).get).distinct
-        scoreLshRangeGroup(
-          idx.vectors.filter(col("pband").isin(pbandLiterals(idx, ids): _*)),
-          slice(queries, enumIdx), slice(qSigs, enumIdx), radius, minCos)
-      },
-      if (scanIdx.isEmpty) None
-      else Some(scoreLshRangeGroup(idx.vectors, slice(queries, scanIdx),
-        slice(qSigs, scanIdx), radius, minCos))
-    ).flatten
-    parts.reduce(_ unionByName _)
-  }
-
-  /** Ad-hoc (index-less) batched LSH range for IN-MEMORY corpora: one
-    * signature pass buckets the corpus, the shared range tail scores
-    * each chunk — candidate-inclusion identical to [[lshRangeAdhoc]]
-    * per query at equal params. */
-  def lshRangeAdhocBatch(df: DataFrame, idCol: String, vecCol: String,
-                         queries: Seq[(Long, Seq[Double])], minCos: Double,
-                         nBits: Int = 16, slackBits: Int = 4,
-                         chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "lshRangeAdhocBatch: empty query batch")
-    require(minCos > -1.0 && minCos <= 1.0,
-      s"lshRangeAdhocBatch: minCos must be in (-1, 1], got $minCos")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"lshRangeAdhocBatch: ragged query dims $dims")
-    val dim = dims.head
-    val planes = hyperplanes(nBits, dim)
-    val bucketed = lshBuckets(df, idCol, vecCol, nBits, dim)
-    val radius = rangeRadius(nBits, minCos, slackBits)
-    queries.grouped(chunkSize).map { chunk =>
-      scoreLshRangeGroup(bucketed, chunk,
-        chunk.map { case (_, q) => querySignature(q, planes) }, radius, minCos)
-    }.reduce(_ unionByName _)
-  }
-
-  /** [[lshRangeBatch]] through the fingerprint-fenced cached-index
-    * lifecycle — identical params string to [[lshTopKIndexed]], so one
-    * build serves single/batch top-k and range alike. */
-  def lshRangeBatchIndexed(df: DataFrame, idCol: String, vecCol: String,
-                           cacheKey: String, queries: Seq[(Long, Seq[Double])],
-                           minCos: Double, nBits: Int = 16, slackBits: Int = 4,
-                           partitionBits: Int = 8): DataFrame = {
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"lshRangeBatchIndexed: ragged query dims $dims")
-    val dim = dims.head
-    val dir = cachedIndex(df, cacheKey, s"lsh|b=$nBits|d=$dim|p=$partitionBits",
-      Some((newRows, d) => lshAppend(newRows, idCol, vecCol, d))) { d =>
-      lshBuild(df, idCol, vecCol, d, nBits, dim, partitionBits)
-    }
-    lshRangeBatch(df.sparkSession, dir, queries, minCos, slackBits)
-  }
-
-  /** The shared scoring tail of the batched LSH RANGE paths: per-row
-    * [[graft.functions.MatVecDots]] against the group's query matrix,
-    * per-query exact Hamming membership at the threshold-derived radius
-    * (batch ≡ per-query [[lshRange]]; NULL-bucket rows fail every
-    * comparison), then the exact `cos >= minCos` verify. No heap, no
-    * groupBy — a map-only projection. */
-  private def scoreLshRangeGroup(vecs: DataFrame,
-                                 queries: Seq[(Long, Seq[Double])],
-                                 qSigs: Seq[Long], radius: Int,
-                                 minCos: Double): DataFrame = {
-    import graft.functions.{MatVecF, VectorF}
-    val qNorms = queries.map { case (_, q) => math.sqrt(q.map(x => x * x).sum) }
-    val qIds = queries.map(_._1)
-    val sigLit = array(qSigs.map(lit): _*)
-    vecs
-      .withColumn("vnorm", VectorF.norm(col("v")))
-      .filter(col("vnorm").isNotNull && !isnan(col("vnorm")) && col("vnorm") > 0)
-      .select(col("id"), col("bucket"), col("vnorm"),
-        posexplode(MatVecF.dots(col("v"), queries.map(_._2))))
-      .filter(bit_count(col("bucket").bitwiseXOR(
-        element_at(sigLit, col("pos") + 1))) <= radius)
-      .select(element_at(array(qIds.map(lit): _*), col("pos") + 1).as("qid"),
-        col("id"),
-        round(col("col") / (col("vnorm") *
-          element_at(array(qNorms.map(lit): _*), col("pos") + 1)), 6).as("cos"))
-      .filter(col("cos").isNotNull && !isnan(col("cos")) &&
-        col("cos") >= minCos)
-  }
-
-  /** The shared matrix-scoring tail of the batched LSH paths (indexed
-    * pruned group, indexed overflow group, ad-hoc [[lshTopKBatch]]):
-    * score one group of queries against a candidate frame carrying
-    * (id, v, bucket) — per-row [[graft.functions.MatVecDots]] against
-    * the group's query matrix, per-query exact Hamming membership
-    * (batch ≡ per-query [[lshQuery]]; NULL-bucket rows fail every
-    * comparison), degenerate-query exclusion, and the bounded-heap
-    * [[graft.functions.TopKF]] top-k per query — the only shuffle
-    * carries ≤ partitions × |group| × k rows. Returns (qid, id, cos). */
-  private def scoreLshGroup(vecs: DataFrame, queries: Seq[(Long, Seq[Double])],
-                            qSigs: Seq[Long], radii: Seq[Int],
-                            k: Int): DataFrame = {
-    import graft.functions.{MatVecF, TopKF, VectorF}
-    val qNorms = queries.map { case (_, q) => math.sqrt(q.map(x => x * x).sum) }
-    val qIds = queries.map(_._1)
-    val sigLit = array(qSigs.map(lit): _*)
-    val radiusLit = array(radii.map(lit): _*)
-    val scored = vecs
-      .withColumn("vnorm", VectorF.norm(col("v")))
-      .filter(col("vnorm").isNotNull && !isnan(col("vnorm")) && col("vnorm") > 0)
-      .select(col("id"), col("bucket"), col("vnorm"),
-        posexplode(MatVecF.dots(col("v"), queries.map(_._2))))
-      .filter(bit_count(col("bucket").bitwiseXOR(
-          element_at(sigLit, col("pos") + 1))) <=
-        element_at(radiusLit, col("pos") + 1))
-      .select(col("pos"),
-        round(col("col") / (col("vnorm") *
-          element_at(array(qNorms.map(lit): _*), col("pos") + 1)), 6).as("cos"),
-        col("id"))
-      // degenerate QUERY guard, as in the other batch paths
-      .filter(col("cos").isNotNull && !isnan(col("cos")))
-    scored
-      .groupBy("pos")
-      .agg(TopKF.topKByScore(col("cos"), col("id"), k).as("topk"))
-      .select(element_at(array(qIds.map(lit): _*), col("pos") + 1).as("qid"),
-        explode(col("topk")).as("hit"))
-      .select(col("qid"), col("hit.id").as("id"), col("hit.score").as("cos"))
-  }
-
-  /** Ad-hoc (index-less) LSH ANN top-k for a BATCH of queries: one
-    * signature pass buckets the corpus, ONE bucket-histogram job feeds
-    * every query's driver-side radius choice (same decisions as
-    * [[lshTopK]] per query), and the shared [[scoreLshGroup]] tail
-    * scores each chunk in one corpus pass. For one-shot exploration and
-    * IN-MEMORY corpora — no index dir, nothing cached, the whole corpus
-    * is scanned per call; a serving path should [[lshBuild]] once and
-    * [[lshQueryBatch]] against the pruned layout instead. Returns
-    * (qid, id, cos), row-identical to a [[lshTopK]] per query. */
-  def lshTopKBatch(df: DataFrame, idCol: String, vecCol: String,
-                   queries: Seq[(Long, Seq[Double])], k: Int,
-                   nBits: Int = 16, minCandidates: Int = 100,
-                   chunkSize: Int = 256): DataFrame = {
-    require(queries.nonEmpty, "lshTopKBatch: empty query batch")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"lshTopKBatch: ragged query dims $dims")
-    require(chunkSize > 0, "lshTopKBatch: chunkSize must be positive")
-    val dim = dims.head
-    val planes = hyperplanes(nBits, dim)
-    val bucketed = lshBuckets(df, idCol, vecCol, nBits, dim)
-    // same one-job histogram as lshTopK, replayed driver-side per query
-    val hist = bucketed.filter(col("bucket").isNotNull)
-      .groupBy("bucket").count()
-      .limit(maxHistogramBuckets + 1).collect()
-    val histogram =
-      if (hist.length <= maxHistogramBuckets)
-        Some((hist.map(_.getLong(0)), hist.map(_.getLong(1))))
-      else None
-    queries.grouped(chunkSize).map { chunk =>
-      val qSigs = chunk.map { case (_, q) => querySignature(q, planes) }
-      val radii = qSigs.map(qSig =>
-        chooseRadius(histogram, qSig, nBits, minCandidates)(r =>
-          bucketed.filter(bit_count(col("bucket").bitwiseXOR(lit(qSig))) <= r)
-            .limit(minCandidates).count()))
-      scoreLshGroup(bucketed, chunk, qSigs, radii, k)
-    }.reduce(_ unionByName _)
   }
 
   /** The embedding dimension a built index expects — from the memoized
@@ -3136,23 +1962,4 @@ object Similarity {
     }
   }
 
-  /** Batch counterpart of [[lshTopKIndexed]]: resolves the SAME cached
-    * index (single-query and batch calls under one `cacheKey` share one
-    * build), then runs the one-pass pruned [[lshQueryBatch]]. */
-  def lshTopKBatchIndexed(df: DataFrame, idCol: String, vecCol: String,
-                          cacheKey: String, queries: Seq[(Long, Seq[Double])],
-                          k: Int, nBits: Int = 16, minCandidates: Int = 100,
-                          partitionBits: Int = 8): DataFrame = {
-    // validate the batch BEFORE resolving the cache: a ragged batch must
-    // not cost a full index build it could never use
-    require(queries.nonEmpty, "lshTopKBatchIndexed: empty query batch")
-    val dims = queries.map(_._2.size).distinct
-    require(dims.size == 1, s"lshTopKBatchIndexed: ragged query dims $dims")
-    val dim = dims.head
-    val dir = cachedIndex(df, cacheKey, s"lsh|b=$nBits|d=$dim|p=$partitionBits",
-      Some((newRows, d) => lshAppend(newRows, idCol, vecCol, d))) { d =>
-      lshBuild(df, idCol, vecCol, d, nBits, dim, partitionBits)
-    }
-    lshQueryBatch(df.sparkSession, dir, queries, k, minCandidates)
-  }
 }

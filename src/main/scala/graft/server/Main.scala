@@ -1,7 +1,7 @@
 package graft.server
 
-import org.apache.spark.sql.SparkSession
 import graft.catalog._
+import graft.util.Sessions
 
 /** `serve` entry point: load (or demo-build) a catalog and serve it.
   * Usage: runMain graft.server.Main [--port N] [--catalog path.json]
@@ -21,14 +21,7 @@ object Main {
       }
       i += 1
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-serve", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
 
     val catalog =

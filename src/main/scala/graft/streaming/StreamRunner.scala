@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
 import org.apache.spark.sql.types.StructType
 import graft.dfl.DflFrame
+import graft.llm.Ann
 
 /** Batch/stream parity on ONE logical plan.
   *
@@ -853,11 +854,57 @@ object StreamRunner {
     finally out.close()
   }
 
+  /** One serving attempt of micro-batch `batchId`, re-run while it fails
+    * on a stale read (at most [[staleReadAttempts]] attempts). A
+    * maintenance rewrite (compaction / retrain / in-place rebuild)
+    * atomically swaps index files UNDER a running serving stream: a
+    * probe whose memoized snapshot references the pre-swap files dies
+    * mid-scan on FileNotFound, and a re-resolution that lands inside the
+    * swap itself finds the index dir momentarily absent (PATH_NOT_FOUND).
+    * Both are self-healing — re-resolving the stamp-invalidated snapshot
+    * sees the post-swap index — but ONE retry is not enough when
+    * maintenance runs as often as a serving attempt takes (a compaction
+    * every other ingest batch can land under the retry too), so each
+    * re-run backs off a little longer. A serving sink is keyed by
+    * batchId, so a re-run sink call overwrites its own output.
+    * Everything else, and a stale read on the last attempt (index
+    * genuinely gone), propagates — after discarding the begin()'d
+    * [[graft.llm.ProbeStats]] buffer, which must not outlive a FAILED
+    * batch on the foreachBatch thread. */
+  private def serveRetryingStaleRead[T](what: String, batchId: Long,
+                                        where: String, metrics: Boolean)
+                                       (attempt: => T): T = {
+    def staleRead(e: Throwable): Boolean = e match {
+      case null => false
+      case _: java.io.FileNotFoundException => true
+      case a: org.apache.spark.sql.AnalysisException
+          if a.getCondition == "PATH_NOT_FOUND" => true
+      case _ => staleRead(e.getCause)
+    }
+    var n = 1
+    while (true) {
+      try return attempt
+      catch {
+        case scala.util.control.NonFatal(e) if staleRead(e) && n < staleReadAttempts =>
+          log.warn(s"$what: batch $batchId read a mid-rewrite index at " +
+            s"$where (attempt $n of $staleReadAttempts); re-resolving", e)
+          Thread.sleep(100L * n)
+          n += 1
+        case t: Throwable =>
+          if (metrics) { graft.llm.ProbeStats.end(); () }
+          throw t
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  private val staleReadAttempts = 3
+
   /** Streaming ANN serving: answer a STREAM of query vectors against a
     * built, static index (LSH, IVF, or IVFPQ) — the streaming member of the
     * serving matrix (single / batch / stream × brute / ivf / lsh). Each
-    * micro-batch becomes ONE [[graft.llm.Similarity.lshQueryBatch]] /
-    * [[graft.llm.Similarity.ivfQueryBatch]] call: the query vectors
+    * micro-batch becomes ONE batched [[Ann.probe]] call (the
+    * family read from the index layout): the query vectors
     * collect to the driver (bounded by the micro-batch, and they are the
     * SMALL side — a few k×dim doubles; the corpus never moves), probe
     * selection runs at zero Spark jobs against the memoized sidecars
@@ -938,9 +985,9 @@ object StreamRunner {
       .parquet(s"$indexDir/vectors").filter(p).queryExecution.analyzed)
     // RANGE serving: `minCos = Some(t)` answers every id at `cos >= t`
     // instead of the top-k (k is ignored). Each micro-batch is ONE
-    // batched pruned probe — lshRangeBatch's union-of-Hamming-balls /
-    // ivfRangeBatch's union-of-nprobe-lists read, per-query membership
-    // filters keeping batch ≡ per-query lshRange/ivfRange. `tuning`
+    // batched pruned probe — a union-of-Hamming-balls (lsh) or
+    // union-of-nprobe-lists (ivf, ivfpq) read, per-query membership
+    // filters keeping batch ≡ per-query range probes. `tuning`
     // re-keys to the range probes' knob: lsh → slackBits, ivf → nprobe
     // (as the DFL annRange stage).
     minCos.foreach(t => require(t > -1.0 && t <= 1.0,
@@ -1012,91 +1059,22 @@ object StreamRunner {
                   s"$dim != index dim $expectDim (qids " +
                   s"${group.take(5).map(_._1).mkString(", ")}${if (group.size > 5) ", …" else ""})")
               else {
-                val answer = (method, minCos, pred) match {
-                  case ("lsh", Some(t), _) => graft.llm.Similarity.lshRangeBatch(
-                    batch.sparkSession, indexDir, group, t,
-                    slackBits = tuning.getOrElse(4))
-                  // the compressed index's range contract thresholds the
-                  // RECONSTRUCTED cosine (Pq.ivfPqRange's documented
-                  // approximation) — the only cosine codes can produce;
-                  // --refine N upgrades it to an EXACT threshold
-                  // (loosened ADC nomination at slack 0.05·N, true-cosine
-                  // verify from the sidecar) — N widens the nomination
-                  // net, the range counterpart of the top-k k×N budget
-                  case ("ivfpq", Some(t), _) => refine match {
-                    case Some(f) => graft.llm.Pq.ivfPqRangeBatchRefined(
-                      batch.sparkSession, indexDir, group, t,
-                      nprobe = tuning.getOrElse(8), slack = 0.05 * f)
-                    case None => graft.llm.Pq.ivfPqRangeBatch(
-                      batch.sparkSession, indexDir, group, t,
-                      nprobe = tuning.getOrElse(8))
-                  }
-                  case (_, Some(t), _) => graft.llm.Similarity.ivfRangeBatch(
-                    batch.sparkSession, indexDir, group, t,
-                    nprobe = tuning.getOrElse(8))
-                  case ("lsh", None, Some(p)) =>
-                    graft.llm.Similarity.lshQueryBatchFiltered(
-                      batch.sparkSession, indexDir, group, k, p,
-                      tuning.getOrElse(100))
-                  case ("ivfpq", None, Some(p)) => refine match {
-                    case Some(f) => graft.llm.Pq.ivfPqQueryBatchFilteredRefined(
-                      batch.sparkSession, indexDir, group, k, p,
-                      tuning.getOrElse(8), f)
-                    case None => graft.llm.Pq.ivfPqQueryBatchFiltered(
-                      batch.sparkSession, indexDir, group, k, p,
-                      tuning.getOrElse(8))
-                  }
-                  case (_, None, Some(p)) =>
-                    graft.llm.Similarity.ivfQueryBatchFiltered(
-                      batch.sparkSession, indexDir, group, k, p,
-                      tuning.getOrElse(8))
-                  case ("lsh", None, None) => graft.llm.Similarity.lshQueryBatch(
-                    batch.sparkSession, indexDir, group, k, tuning.getOrElse(100))
-                  case ("ivfpq", None, None) => refine match {
-                    case Some(f) => graft.llm.Pq.ivfPqQueryBatchRefined(
-                      batch.sparkSession, indexDir, group, k,
-                      tuning.getOrElse(8), f)
-                    case None => graft.llm.Pq.ivfPqQueryBatch(
-                      batch.sparkSession, indexDir, group, k, tuning.getOrElse(8))
-                  }
-                  case _ => graft.llm.Similarity.ivfQueryBatch(
-                    batch.sparkSession, indexDir, group, k, tuning.getOrElse(8))
-                }
+                // ONE probe per dim group; the family comes from the
+                // index layout. Range thresholds the ivfpq RECONSTRUCTED
+                // cosine unless --refine N upgrades it to an exact
+                // threshold (0.05·N loosened nomination, true-cosine
+                // verify from the sidecar)
+                val answer = Ann.probe(Ann.Dir(batch.sparkSession, indexDir),
+                  Ann.Probe(Ann.Batch(group),
+                    minCos.fold[Ann.Bound](Ann.TopK(k))(Ann.Range(_)),
+                    pred, tuning, refine))
                 served += group.size
                 sink(answer, batchId) // sink failures still surface — deliberately
               }
             }
           }
-          // a maintenance rewrite (compaction / retrain / in-place
-          // rebuild) atomically swaps the index dir UNDER a running
-          // serving stream: a probe whose memoized snapshot references
-          // the pre-swap files dies mid-scan on FileNotFound. That is
-          // the ONE failure shape that is self-healing — re-resolving
-          // the (stamp-invalidated) snapshot sees the post-swap index —
-          // so it gets exactly one retry; at most one sink call can have
-          // run, and it re-runs under the same batchId (idempotent by
-          // the batch-keyed overwrite contract). Everything else, and a
-          // retry that fails again (index genuinely gone), propagates.
-          def staleRead(e: Throwable): Boolean =
-            e != null && (e.isInstanceOf[java.io.FileNotFoundException] ||
-              staleRead(e.getCause))
-          try {
-            try serveBatch()
-            catch {
-              case scala.util.control.NonFatal(e) if staleRead(e) =>
-                log.warn(s"annServe: batch $batchId read a mid-rewrite index " +
-                  s"at $indexDir; re-resolving and retrying once", e)
-                serveBatch()
-            }
-          } catch {
-            // the begin()'d recording buffer must not outlive a FAILED
-            // batch on this foreachBatch thread — a later batch would
-            // otherwise record into the stale buffer (the documented
-            // begin/end contract); discard the legs and rethrow
-            case t: Throwable =>
-              if (metricsSink.isDefined) { graft.llm.ProbeStats.end(); () }
-              throw t
-          }
+          serveRetryingStaleRead("annServe", batchId, indexDir,
+            metricsSink.isDefined)(serveBatch())
         }
         // metrics only when answers were actually sunk: the sidecar
         // lands INSIDE the batch dir, so an all-malformed batch must not
@@ -1197,8 +1175,8 @@ object StreamRunner {
     * are SKIPPED with a warning — a serving stream must not die on one
     * bad record — while genuine probe failures propagate. A probe that
     * dies on FileNotFound mid-scan raced a maintenance rewrite
-    * ([[graft.llm.Retrieval.bm25Compact]]'s atomic dir swap) and gets
-    * exactly one retry, the [[annServeBatches]] self-heal shape. The
+    * ([[graft.llm.Retrieval.bm25Compact]]'s atomic dir swap) and is
+    * re-resolved ([[serveRetryingStaleRead]], shared with annServe). The
     * index must outlive the stream (single-writer rebuild contract). */
   def bm25ServeBatches(queries: DataFrame, qidCol: String, termsCol: String,
                indexDir: String, k: Int, k1: Double = 1.2, b: Double = 0.75,
@@ -1267,25 +1245,8 @@ object StreamRunner {
                 batch.sparkSession, indexDir, qs, k, k1, b)
             }, batchId)
           }
-          // one retry on a mid-rewrite FileNotFound — see annServeBatches
-          def staleRead(e: Throwable): Boolean =
-            e != null && (e.isInstanceOf[java.io.FileNotFoundException] ||
-              staleRead(e.getCause))
-          try {
-            try serveBatch()
-            catch {
-              case scala.util.control.NonFatal(e) if staleRead(e) =>
-                log.warn(s"bm25Serve: batch $batchId read a mid-rewrite index " +
-                  s"at $indexDir; retrying once", e)
-                serveBatch()
-            }
-          } catch {
-            // discard the begin()'d buffer on a failed batch — see
-            // annServeBatches (stale-buffer leak on the foreachBatch thread)
-            case t: Throwable =>
-              if (metricsSink.isDefined) { graft.llm.ProbeStats.end(); () }
-              throw t
-          }
+          serveRetryingStaleRead("bm25Serve", batchId, indexDir,
+            metricsSink.isDefined)(serveBatch())
         }
         // sidecar only when the batch dir exists (answers were sunk)
         if (qs.nonEmpty) metricsSink.foreach { ms =>
@@ -1372,7 +1333,7 @@ object StreamRunner {
     * with warnings, duplicate qids within a batch keep first, a
     * wrong-dim group skips without poisoning the rest, the batch size
     * guard fails loudly before the driver collect, and a mid-rewrite
-    * FileNotFound gets exactly one re-resolve retry. Exactly-once via
+    * stale read is re-resolved ([[serveRetryingStaleRead]]). Exactly-once via
     * batch-keyed sinks. Single-reader contract as the other serving
     * jobs: rebuilds of either index belong to their owning writers. */
   def hybridServeBatches(queries: DataFrame, qidCol: String,
@@ -1504,36 +1465,9 @@ object StreamRunner {
                 spark, bm25IndexDir, good.map(q => q._1 -> q._2), pool,
                 k1, b)
             }).select("qid", "id", "rnk")
-            val semCos = (annMethod, pred) match {
-              case ("lsh", Some(p)) => graft.llm.Similarity.lshQueryBatchFiltered(
-                spark, annIndexDir, good.map(q => q._1 -> q._3), pool, p,
-                tuning.getOrElse(100))
-              case ("lsh", None) => graft.llm.Similarity.lshQueryBatch(
-                spark, annIndexDir, good.map(q => q._1 -> q._3), pool,
-                tuning.getOrElse(100))
-              case ("ivfpq", Some(p)) => refine match {
-                case Some(f) => graft.llm.Pq.ivfPqQueryBatchFilteredRefined(
-                  spark, annIndexDir, good.map(q => q._1 -> q._3), pool, p,
-                  tuning.getOrElse(8), f)
-                case None => graft.llm.Pq.ivfPqQueryBatchFiltered(
-                  spark, annIndexDir, good.map(q => q._1 -> q._3), pool, p,
-                  tuning.getOrElse(8))
-              }
-              case ("ivfpq", None) => refine match {
-                case Some(f) => graft.llm.Pq.ivfPqQueryBatchRefined(
-                  spark, annIndexDir, good.map(q => q._1 -> q._3), pool,
-                  tuning.getOrElse(8), f)
-                case None => graft.llm.Pq.ivfPqQueryBatch(
-                  spark, annIndexDir, good.map(q => q._1 -> q._3), pool,
-                  tuning.getOrElse(8))
-              }
-              case (_, Some(p)) => graft.llm.Similarity.ivfQueryBatchFiltered(
-                spark, annIndexDir, good.map(q => q._1 -> q._3), pool, p,
-                tuning.getOrElse(8))
-              case _ => graft.llm.Similarity.ivfQueryBatch(
-                spark, annIndexDir, good.map(q => q._1 -> q._3), pool,
-                tuning.getOrElse(8))
-            }
+            val semCos = Ann.probe(Ann.Dir(spark, annIndexDir),
+              Ann.Probe(Ann.Batch(good.map(q => q._1 -> q._3)),
+                Ann.TopK(pool), pred, tuning, refine))
             val semW = org.apache.spark.sql.expressions.Window
               .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
             val sem = semCos
@@ -1593,24 +1527,8 @@ object StreamRunner {
             val rows = answer.collect()
             Some(graft.llm.Similarity.localFrame(spark, rows, answer.schema))
           }
-          def staleRead(e: Throwable): Boolean =
-            e != null && (e.isInstanceOf[java.io.FileNotFoundException] ||
-              staleRead(e.getCause))
-          val answer = try {
-            try computeAnswer()
-            catch {
-              case scala.util.control.NonFatal(e) if staleRead(e) =>
-                log.warn(s"hybridServe: batch $batchId read a mid-rewrite " +
-                  s"index ($bm25IndexDir | $annIndexDir); retrying once", e)
-                computeAnswer()
-            }
-          } catch {
-            // discard the begin()'d buffer on a failed batch — see
-            // annServeBatches (stale-buffer leak on the foreachBatch thread)
-            case t: Throwable =>
-              if (metricsSink.isDefined) { graft.llm.ProbeStats.end(); () }
-              throw t
-          }
+          val answer = serveRetryingStaleRead("hybridServe", batchId,
+            s"$bm25IndexDir | $annIndexDir", metricsSink.isDefined)(computeAnswer())
           // exactly ONE sink call per batch, over a LOCAL frame — no
           // index read can fail under the caller's write (a sink failure
           // still discards the begin()'d buffer before propagating)

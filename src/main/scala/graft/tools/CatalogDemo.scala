@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.catalog._
 import graft.geo.{TileMath, TileService}
 import java.nio.file.{Files, Paths}
+import graft.util.Sessions
 
 /** Runtime demo of the catalog → exec → tile-service path: builds a
   * catalog over a GeoJSONL fixture, runs a service exec with variable
@@ -11,12 +11,7 @@ import java.nio.file.{Files, Paths}
   * mask. Run: `sbt "runMain graft.tools.CatalogDemo"`. */
 object CatalogDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-catalog-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-catalog-demo", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
 
     val dir = Files.createTempDirectory("graft-demo").toString

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Ops entry point for [[graft.llm.Similarity.compactIndex]] and
   * [[graft.llm.Retrieval.bm25Compact]]: rewrite an appended index's data
@@ -30,12 +30,7 @@ object IndexCompact {
       }
     }
     require(indexDir.nonEmpty, "--index-dir is required")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-index-compact")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-index-compact", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
     try {
       val dataDir = if (method == "bm25") "postings" else "vectors"

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Ops CLI for the id-DELETE lifecycle verb — the takedown tool
   * (copyright / PII / GDPR removal without a rebuild), completing the
@@ -36,13 +36,7 @@ object IndexDelete {
     require(indexDir.nonEmpty, "--index-dir is required")
     require(ids.nonEmpty ^ idsUri.nonEmpty,
       "exactly one of --ids (comma-separated) or --ids-uri is required")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-index-delete")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-index-delete", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
     try {
       val kind = graft.llm.Similarity.indexKind(spark, indexDir).getOrElse(

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Retention sweep for the stamp-named ANN index directories the cached
   * index lifecycle materializes under `graft.ivf.indexBase`: every corpus
@@ -124,10 +125,7 @@ object IndexGc {
     val base = args(0)
     val keep = if (args.length > 1) args(1).toInt else 2
     val minAge = if (args.length > 2) args(2).toLong else 3600000L
-    val spark = SparkSession.builder()
-      .appName("graft-index-gc").master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-index-gc", Sessions.master(2))
     try {
       val r = sweep(spark, base, keep, minAge)
       r.restored.foreach(d => println(s"restored $d"))

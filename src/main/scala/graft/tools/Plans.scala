@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Physical-plan audit: print `explain("formatted")` for registered
   * queries and flag anti-patterns (cartesian products outside the
@@ -15,14 +15,7 @@ object Plans {
       else Seq("q2_join_agg", "dedup_minhash_pairs", "dedup_survivors",
         "dedup_simhash_pairs", "ann_topk", "ann_lsh_topk", "ann_ivf_topk",
         "filter_eq", "tile_hist")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-plans", Sessions.master(4))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)
@@ -219,14 +212,7 @@ object PlanLint {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-planlint")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-planlint", Sessions.master(4))
     spark.sparkContext.setLogLevel("ERROR")
     var bad = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

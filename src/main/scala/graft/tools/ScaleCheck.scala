@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.llm.Ann
 import org.apache.spark.sql.functions._
+import graft.util.Sessions
 
 /** Scale sanity: run the near-dup pipeline at 1×/4×/20× the sf0.1 corpus
   * (ids shifted per copy so copies are near-dup pairs of each other) and
@@ -14,13 +15,7 @@ import org.apache.spark.sql.functions._
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("graft-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-scale", Sessions.master(32))
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val base = docs.count()
@@ -293,26 +288,27 @@ object ScaleCheck {
           .select(col("vec_id"), col("q_codes"))
         graft.llm.Similarity.bruteForceTopK(qz, "vec_id", "q_codes", q, 10).count()
       })
-      // ad-hoc lshTopK recomputes signatures (one corpus scan); its
+      // the ad-hoc lsh probe recomputes signatures (one corpus scan); its
       // ingest posture — bucket as partition column — is spec-pinned
       // partition-pruned in LlmSpec. Time must grow at most linearly.
-      time("lsh_topk")(graft.llm.Similarity.lshTopK(
-        big, "vec_id", "embedding", q, 10).count())
+      time("lsh_topk")(Ann.probe(Ann.Adhoc(big, "vec_id", "embedding", Ann.Build("lsh")),
+        Ann.Probe(Ann.One(q), Ann.TopK(10))).count())
       // the indexed LSH serving shape: untimed one-pass lshBuild, then a
       // bucket-pruned probe that must stay ~flat in mult. 8-bit layout:
       // 256 bucket dirs keeps rows-per-bucket high (see lshBuild scaladoc)
       val lshDir = java.nio.file.Files
         .createTempDirectory("graft-scale-lsh").toString + "/idx"
       graft.llm.Similarity.lshBuild(big, "vec_id", "embedding", lshDir, nBits = 8)
-      time("lsh_probe")(graft.llm.Similarity.lshQuery(
-        spark, lshDir, q, 10).count())
+      time("lsh_probe")(Ann.probe(Ann.Dir(spark, lshDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(10))).count())
       // the true serving shape: ivfBuild is the untimed one-off ingest
       // pass; the probe reads nprobe/kLists of the data via partition
       // pruning and must stay ~flat in mult
       val idxDir = java.nio.file.Files
         .createTempDirectory("graft-scale-ivf").toString + "/idx"
       graft.llm.Similarity.ivfBuild(big, "vec_id", "embedding", idxDir)
-      time("ivf_probe")(graft.llm.Similarity.ivfQuery(spark, idxDir, q, 10).count())
+      time("ivf_probe")(Ann.probe(Ann.Dir(spark, idxDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(10))).count())
       // FILTERED serving: a metadata-carrying build probed with a
       // half-selective predicate — the probe must stay ~flat like its
       // unfiltered sibling (the predicate prunes row groups, never adds
@@ -322,8 +318,8 @@ object ScaleCheck {
       graft.llm.Similarity.ivfBuild(
         big.withColumn("flag", (col("vec_id") % 2).cast("int")),
         "vec_id", "embedding", fDir, metaCols = Seq("flag"))
-      time("ivf_probe_filtered")(graft.llm.Similarity.ivfQueryFiltered(
-        spark, fDir, q, 10, col("flag") === 0).count())
+      time("ivf_probe_filtered")(Ann.probe(Ann.Dir(spark, fDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(10), filter = Some(col("flag") === 0))).count())
       // PQ: encoding is a linear row-local scan (m·k native dots per
       // row); the IVF+PQ probe reads nprobe lists partition-pruned over
       // m-byte codes — near-flat in mult like the float probes
@@ -334,7 +330,8 @@ object ScaleCheck {
           kLists = 16, m = 8, k = 16)
         big.count()
       })
-      time("ivfpq_probe")(graft.llm.Pq.ivfPqQuery(spark, pqDir, q, 10).count())
+      time("ivfpq_probe")(Ann.probe(Ann.Dir(spark, pqDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(10))).count())
       // the APPEND posture: a FIXED-SIZE increment appended to the
       // mult× index must cost ~the same at every mult — appends are one
       // pass over the NEW rows plus a bounded occupancy/sidecar merge,
@@ -372,18 +369,18 @@ object ScaleCheck {
       time("ivfpq_retrain")(
         graft.llm.Pq.ivfPqRetrain(spark, kvDir).length.toLong)
       time("ivfpq_probe_retrained")(
-        graft.llm.Pq.ivfPqQuery(spark, kvDir, q, 10).count())
+        Ann.probe(Ann.Dir(spark, kvDir), Ann.Probe(Ann.One(q), Ann.TopK(10))).count())
       // the REFINED probe must stay probe-flat too: the rerank touches
       // k×factor sidecar rows regardless of corpus size
       time("ivfpq_probe_refined")(
-        graft.llm.Pq.ivfPqQueryRefined(spark, kvDir, q, 10,
-          rerankFactor = 4).count())
+        Ann.probe(Ann.Dir(spark, kvDir),
+          Ann.Probe(Ann.One(q), Ann.TopK(10), refine = Some(4))).count())
       // the MMR candidate-vector fetch posture (the serving stack's
       // diversification input): the pool's ids push into the id-SORTED
       // sidecar read as In(id, …), so parquet row-group stats prune the
       // scan to the candidate row groups — ~flat in mult. Without the
       // pushdown this was a full corpus scan per serving batch.
-      val mmrPoolIds = graft.llm.Pq.ivfPqQuery(spark, kvDir, q, 20)
+      val mmrPoolIds = Ann.probe(Ann.Dir(spark, kvDir), Ann.Probe(Ann.One(q), Ann.TopK(20)))
         .collect().map(_.getLong(0)).toSeq
       time("mmr_fetch")({
         import spark.implicits._
@@ -399,8 +396,8 @@ object ScaleCheck {
       // output-bound), so at a tight threshold the curve stays ~flat
       // while the corpus grows
       time("ivfpq_range_refined")(
-        graft.llm.Pq.ivfPqRangeRefined(spark, kvDir, q, 0.99,
-          nprobe = 4, slack = 0.2).count())
+        Ann.probe(Ann.Dir(spark, kvDir),
+          Ann.Probe(Ann.One(q), Ann.Range(0.99), tuning = Some(4), refine = Some(4))).count())
       // the DELETE posture (takedown without rebuild): annDelete costs
       // the takedown list — fence-id agg + one staged tombstone write —
       // never a corpus pass, and the probe AFTER it pays only a
@@ -410,8 +407,8 @@ object ScaleCheck {
       time("ivfpq_delete")(
         graft.llm.Similarity.annDelete(spark, kvDir, (1L to 64L).toSeq))
       time("ivfpq_probe_deleted")(
-        graft.llm.Pq.ivfPqQueryRefined(spark, kvDir, q, 10,
-          rerankFactor = 4).count())
+        Ann.probe(Ann.Dir(spark, kvDir),
+          Ann.Probe(Ann.One(q), Ann.TopK(10), refine = Some(4))).count())
       // the COMPACTION posture: rewrite cost is one clustered pass over
       // the index (so it may grow ~linearly in mult — it is the RARE
       // maintenance op), but the probe after it must return to the
@@ -421,8 +418,8 @@ object ScaleCheck {
         val st = graft.llm.Similarity.compactIndex(spark, lshDir, "lsh")
         st.filesBefore - st.filesAfter
       })
-      time("lsh_probe_compacted")(graft.llm.Similarity.lshQuery(
-        spark, lshDir, q, 10).count())
+      time("lsh_probe_compacted")(Ann.probe(Ann.Dir(spark, lshDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(10))).count())
       big.unpersist()
     }
 
@@ -475,8 +472,8 @@ object ScaleCheck {
             spark, bmDir, qset, pool).select("qid", "id", "rnk")
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
-          val sem = graft.llm.Similarity.ivfQueryBatch(spark, annDir,
-              qset.map(q => q._1 -> qv), pool)
+          val sem = Ann.probe(Ann.Dir(spark, annDir),
+            Ann.Probe(Ann.Batch(qset.map(q => q._1 -> qv)), Ann.TopK(pool)))
             .withColumn("rnk", row_number().over(w).cast("long"))
             .select("qid", "id", "rnk")
           graft.llm.Retrieval.rrfFuseBatch(Seq(lex, sem), pool)

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.dfl.DflFrame
+import graft.util.Sessions
 
 /** Runtime smoke driver: exercises the public DFL API against the real
   * testdata parquet, printing results and the physical plan so pushdown
@@ -9,15 +9,7 @@ import graft.dfl.DflFrame
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is ns
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create("graft-smoke", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(s"$sf/documents.parquet")

@@ -5,15 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for the whole test JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is ns // DFL coercion is lenient
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.util.Sessions.create("graft-test", "local[4]")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

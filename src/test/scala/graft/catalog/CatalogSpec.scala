@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.llm.Ann
 import java.nio.file.{Files, Paths}
 
 class CatalogSpec extends AnyFunSuite {
@@ -220,7 +221,7 @@ class CatalogSpec extends AnyFunSuite {
     val exec = new Exec(spark, c)
     val got = exec.serviceExec("annsvc", Map("q" -> q)).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val want = graft.llm.Similarity.ivfQuery(spark, annDir, q, 5).collect()
+    val want = Ann.probe(Ann.Dir(spark, annDir), Ann.Probe(Ann.One(q), Ann.TopK(5))).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == want && got.head._1 == 0L)
     // bm25 probe through a datastore-NAME indirection

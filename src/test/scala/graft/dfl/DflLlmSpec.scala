@@ -3,7 +3,7 @@ package graft.dfl
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import graft.llm.{Dedup, Similarity}
+import graft.llm.{Ann, Dedup, Similarity}
 
 /** The LLM dataset operators THROUGH the DFL surface (parser → DflFrame
   * dataset-op dispatch): each stage must produce exactly what the backing
@@ -351,11 +351,13 @@ class DflLlmSpec extends AnyFunSuite {
     // training), so the DFL indexed probe equals the ad-hoc Scala form
     val ivfDfl = ids(DflFrame.pipeline(emb,
       "annTopK(@, '@vec_id', '@embedding', $q, 10, 'ivf')", Map("q" -> q)))
-    val ivfApi = ids(Similarity.ivfTopK(emb, "vec_id", "embedding", q, 10))
+    val ivfApi = ids(Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding", Ann.Build("ivf")),
+      Ann.Probe(Ann.One(q), Ann.TopK(10))))
     assert(ivfDfl == ivfApi)
     val lshDfl = ids(DflFrame.pipeline(emb,
       "annTopK(@, '@vec_id', '@embedding', $q, 10, 'lsh')", Map("q" -> q)))
-    val lshApi = ids(Similarity.lshTopK(emb, "vec_id", "embedding", q, 10))
+    val lshApi = ids(Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding", Ann.Build("lsh")),
+      Ann.Probe(Ann.One(q), Ann.TopK(10))))
     assert(lshDfl == lshApi)
     assert(ivfDfl.contains(0L) && lshDfl.contains(0L))
     // the optional tuning arg is the Scala API's query-time knob: ivf →
@@ -363,12 +365,12 @@ class DflLlmSpec extends AnyFunSuite {
     // NON-default value
     val ivfT = ids(DflFrame.pipeline(emb,
       "annTopK(@, '@vec_id', '@embedding', $q, 10, 'ivf', 2)", Map("q" -> q)))
-    assert(ivfT == ids(Similarity.ivfTopK(emb, "vec_id", "embedding", q, 10,
-      nprobe = 2)))
+    assert(ivfT == ids(Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding", Ann.Build("ivf")),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(2)))))
     val lshT = ids(DflFrame.pipeline(emb,
       "annTopK(@, '@vec_id', '@embedding', $q, 10, 'lsh', 5)", Map("q" -> q)))
-    assert(lshT == ids(Similarity.lshTopK(emb, "vec_id", "embedding", q, 10,
-      minCandidates = 5)))
+    assert(lshT == ids(Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding", Ann.Build("lsh")),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(5)))))
   }
 
   test("annTopKBatch(@) equals per-query answers; ivf shares annTopK's cached index") {
@@ -427,7 +429,7 @@ class DflLlmSpec extends AnyFunSuite {
       qtext.split(" ").toSeq, 10).select("id", "rnk")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cos").desc, col("id").asc)
-    val sem = graft.llm.Similarity.ivfQuery(spark, ivfDir, qvec, 10)
+    val sem = Ann.probe(Ann.Dir(spark, ivfDir), Ann.Probe(Ann.One(qvec), Ann.TopK(10)))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .select("id", "rnk")
     val want = graft.llm.Retrieval.rrfFuse(Seq(lex, sem), 5)
@@ -493,14 +495,14 @@ class DflLlmSpec extends AnyFunSuite {
     val gotIvf = rows(DflFrame.pipeline(emb,
       "annRangeProbe(@, $idx, $q, 0.8, 2)",
       Map[String, Any]("idx" -> ivfDir, "q" -> q)))
-    assert(gotIvf == rows(graft.llm.Similarity.ivfRange(spark, ivfDir, q,
-      0.8, nprobe = 2)) && gotIvf.contains((3L, 1.0)), gotIvf.toString)
+    assert(gotIvf == rows(Ann.probe(Ann.Dir(spark, ivfDir),
+      Ann.Probe(Ann.One(q), Ann.Range(0.8), tuning = Some(2)))) && gotIvf.contains((3L, 1.0)), gotIvf.toString)
     val lshDir = s"$root/lsh"
     graft.llm.Similarity.lshBuild(vecs, "vec_id", "embedding", lshDir,
       nBits = 8, dim = 64)
     assert(rows(DflFrame.pipeline(emb, "annRangeProbe(@, $idx, $q, 0.8)",
       Map[String, Any]("idx" -> lshDir, "q" -> q)))
-      == rows(graft.llm.Similarity.lshRange(spark, lshDir, q, 0.8)))
+      == rows(Ann.probe(Ann.Dir(spark, lshDir), Ann.Probe(Ann.One(q), Ann.Range(0.8)))))
     // ivfpq: unrefined thresholds the reconstruction contract; refined
     // (keepVectors) verifies TRUE cosines at the 0.05·N loosened net
     val pqDir = s"$root/pq"
@@ -508,12 +510,13 @@ class DflLlmSpec extends AnyFunSuite {
       kLists = 4, m = 8, k = 16, keepVectors = true)
     assert(rows(DflFrame.pipeline(emb, "annRangeProbe(@, $idx, $q, 0.8, 2)",
       Map[String, Any]("idx" -> pqDir, "q" -> q)))
-      == rows(graft.llm.Pq.ivfPqRange(spark, pqDir, q, 0.8, nprobe = 2)))
+      == rows(Ann.probe(Ann.Dir(spark, pqDir),
+        Ann.Probe(Ann.One(q), Ann.Range(0.8), tuning = Some(2)))))
     val gotRef = rows(DflFrame.pipeline(emb,
       "annRangeProbe(@, $idx, $q, 0.8, 2, 4)",
       Map[String, Any]("idx" -> pqDir, "q" -> q)))
-    assert(gotRef == rows(graft.llm.Pq.ivfPqRangeRefined(spark, pqDir, q,
-      0.8, nprobe = 2, slack = 0.2)), gotRef.toString)
+    assert(gotRef == rows(Ann.probe(Ann.Dir(spark, pqDir),
+      Ann.Probe(Ann.One(q), Ann.Range(0.8), tuning = Some(2), refine = Some(4)))), gotRef.toString)
     assert(gotRef.contains((3L, 1.0)),
       "refined range scores are TRUE cosines — the self id verifies at 1.0")
     // fences: refine on a float layout, refine without the sidecar,
@@ -558,8 +561,8 @@ class DflLlmSpec extends AnyFunSuite {
     val gotIvf = rows(DflFrame.pipeline(emb,
       "annProbeFiltered(@, $idx, $q, 5, '@flag == 1', 2)",
       Map[String, Any]("idx" -> ivfDir, "q" -> q)))
-    assert(gotIvf == rows(graft.llm.Similarity.ivfQueryFiltered(spark,
-      ivfDir, q, 5, col("flag") === 1, nprobe = 2)), gotIvf.toString)
+    assert(gotIvf == rows(Ann.probe(Ann.Dir(spark, ivfDir),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 1), tuning = Some(2)))), gotIvf.toString)
     assert(gotIvf.contains((3L, 1.0)) && gotIvf.forall(_._1 % 2 == 1),
       s"every hit must satisfy the predicate: $gotIvf")
     val lshDir = s"$root/lsh"
@@ -568,8 +571,8 @@ class DflLlmSpec extends AnyFunSuite {
     assert(rows(DflFrame.pipeline(emb,
       "annProbeFiltered(@, $idx, $q, 5, '@flag == 1')",
       Map[String, Any]("idx" -> lshDir, "q" -> q)))
-      == rows(graft.llm.Similarity.lshQueryFiltered(spark, lshDir, q, 5,
-        col("flag") === 1)))
+      == rows(Ann.probe(Ann.Dir(spark, lshDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 1)))))
     // ivfpq: plain thresholds the reconstruction contract; refined
     // (keepVectors) reranks TRUE cosines over eligible rows — the
     // round-19 --filter --refine serving shape as a stage
@@ -579,13 +582,14 @@ class DflLlmSpec extends AnyFunSuite {
     assert(rows(DflFrame.pipeline(emb,
       "annProbeFiltered(@, $idx, $q, 5, '@flag == 1', 2)",
       Map[String, Any]("idx" -> pqDir, "q" -> q)))
-      == rows(graft.llm.Pq.ivfPqQueryFiltered(spark, pqDir, q, 5,
-        col("flag") === 1, nprobe = 2)))
+      == rows(Ann.probe(Ann.Dir(spark, pqDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 1), tuning = Some(2)))))
     val gotRef = rows(DflFrame.pipeline(emb,
       "annProbeFiltered(@, $idx, $q, 5, '@flag == 1', 2, 4)",
       Map[String, Any]("idx" -> pqDir, "q" -> q)))
-    assert(gotRef == rows(graft.llm.Pq.ivfPqQueryFilteredRefined(spark,
-      pqDir, q, 5, col("flag") === 1, nprobe = 2, rerankFactor = 4)),
+    assert(gotRef == rows(Ann.probe(Ann.Dir(spark, pqDir),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 1), tuning = Some(2),
+        refine = Some(4)))),
       gotRef.toString)
     assert(gotRef.contains((3L, 1.0)),
       "refined scores are TRUE cosines — the eligible self id reranks at 1.0")
@@ -892,9 +896,9 @@ class DflLlmSpec extends AnyFunSuite {
       val b = DflFrame.pipeline(corpus,
         "annTopK(@, '@vec_id', '@embedding_neg', $q, 1, 'ivf')", Map("q" -> q))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val bApi = Similarity.ivfTopK(
-        corpus.select(col("vec_id").as("id"), col("embedding_neg").as("v")),
-        "id", "v", q, 1).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val bApi = Ann.probe(Ann.Adhoc(corpus.select(col("vec_id").as("id"), col("embedding_neg").as("v")),
+          "id", "v", Ann.Build("ivf")),
+        Ann.Probe(Ann.One(q), Ann.TopK(1))).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(b == bApi && b != a,
         s"negated-corpus ANN answered from the wrong index: $b vs $bApi")
     } finally spark.conf.set("spark.sql.debug.maxToStringFields", prev)

@@ -95,12 +95,19 @@ class ParserSpec extends AnyFunSuite {
   }
 
   test("geonames.dfl full source parses") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/examples/geonames.dfl")))
-    val n = Parser.parse(src)
-    n match {
-      case Pipe(stages) => assert(stages.size == 4)
-      case other        => fail(s"expected pipe, got $other")
+    // the repo's own geonames-style fixture (src/test/resources/dfl):
+    // comments, a chained null-drop ternary, dict build/merge/removal,
+    // a variable binding and a tile-stamp augmented assignment
+    val src = scala.io.Source.fromResource("dfl/geonames.dfl").mkString
+    Parser.parse(src) match {
+      case Pipe(stages) =>
+        assert(stages.size == 4)
+        assert(stages(0).isInstanceOf[Ternary], stages(0))
+        assert(stages(1).isInstanceOf[DictLit], stages(1))
+        assert(stages(2) == Assign("c", Prop(Attr("geometry"), "coordinates",
+          nullSafe = true)))
+        assert(stages(3).isInstanceOf[AugAssign], stages(3))
+      case other => fail(s"expected pipe, got $other")
     }
   }
 

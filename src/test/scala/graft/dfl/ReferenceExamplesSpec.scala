@@ -22,6 +22,11 @@ class ReferenceExamplesSpec extends AnyFunSuite {
       val ast = Parser.parse(example(f))
       assert(Parser.parse(Node.render(ast)) == ast, s"round-trip failed for $f")
     }
+    // the verbatim geonames.dfl is a four-stage pipe
+    Parser.parse(example("geonames.dfl")) match {
+      case Node.Pipe(stages) => assert(stages.size == 4)
+      case other             => fail(s"expected pipe, got $other")
+    }
   }
 
   test("verbatim geonames.dfl ingest: chained null-drops, dict ops, tile stamp") {

@@ -33,33 +33,39 @@ class DeleteSpec extends AnyFunSuite {
     val corpus = emb.filter($"vec_id" < 400)
     Similarity.ivfBuild(corpus, "vec_id", "embedding", dir, kLists = 4)
     val q = qVec(0)
-    val before = ids(Similarity.ivfQuery(spark, dir, q, 10, nprobe = 4))
+    val before = ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(4))))
     assert(before.contains(0L), "query-self must be its own nearest")
     val victims = (before - 0L).take(3).toSeq
     assert(Similarity.annDelete(spark, dir, victims) == victims.size)
     // every probe shape reads through ivfMeta — all must exclude them
-    val topk = ids(Similarity.ivfQuery(spark, dir, q, 10, nprobe = 4))
+    val topk = ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(4))))
     assert(victims.forall(v => !topk.contains(v)), s"leaked into topk: $topk")
-    val rng = ids(Similarity.ivfRange(spark, dir, q, minCos = -0.9, nprobe = 4))
+    val rng = ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.Range(-0.9), tuning = Some(4))))
     assert(victims.forall(v => !rng.contains(v)), "leaked into range")
-    val batch = Similarity.ivfQueryBatch(spark, dir, Seq((7L, q)), 10, 4)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(Seq((7L, q))), Ann.TopK(10), tuning = Some(4)))
     assert(victims.forall(v => !batch.collect().map(_.getLong(1)).contains(v)),
       "leaked into batch")
-    val filtered = Similarity.ivfQueryFiltered(spark, dir, q, 10,
-      col("id") >= 0L, nprobe = 4)
+    val filtered = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), filter = Some(col("id") >= 0L), tuning = Some(4)))
     assert(victims.forall(v =>
       !filtered.collect().map(_.getLong(0)).contains(v)), "leaked into filtered")
     // the top-k equals brute force over the SURVIVING corpus at full width
     val surv = corpus.filter(!$"vec_id".isin(victims: _*))
     val brute = Similarity.bruteForceTopK(surv, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
-    assert(ids(Similarity.ivfQuery(spark, dir, q, 10, nprobe = 4)) == brute)
+    assert(ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(4)))) == brute)
     // repeated and overlapping deletes never double-apply
     assert(Similarity.annDelete(spark, dir, victims) == 0L)
     assert(Similarity.annDelete(spark, dir, victims :+ 399L) == 1L)
     // absent ids tombstone harmlessly
     assert(Similarity.annDelete(spark, dir, Seq(999999L)) == 1L)
-    assert(ids(Similarity.ivfQuery(spark, dir, q, 10, nprobe = 4)) == brute)
+    assert(ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(4)))) == brute)
   }
 
   test("lsh delete: occupancy histogram subtracts exactly (the additive sidecar's negative leg)") {
@@ -74,7 +80,7 @@ class DeleteSpec extends AnyFunSuite {
     assert(Similarity.annDelete(spark, dir, Seq(5L, 6L, 7L)) == 3L)
     assert(occTotal() == 297L, "occupancy must subtract the deleted rows")
     // and the probe no longer returns them
-    val got = ids(Similarity.lshQuery(spark, dir, qVec(5), 10))
+    val got = ids(Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(qVec(5)), Ann.TopK(10))))
     assert(!got.contains(5L) && !got.contains(6L) && !got.contains(7L))
     // a delete of ids NOT in the index subtracts nothing
     assert(Similarity.annDelete(spark, dir, Seq(888888L)) == 1L)
@@ -88,7 +94,7 @@ class DeleteSpec extends AnyFunSuite {
       nBits = 8, dim = 64, partitionBits = 4)
     Similarity.annDelete(spark, dir, Seq(3L, 4L, 5L))
     val q = qVec(0)
-    val before = Similarity.lshQuery(spark, dir, q, 10)
+    val before = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val st = Similarity.compactIndex(spark, dir, "lsh")
     assert(st.tombstonesCleared == 3L)
@@ -98,7 +104,7 @@ class DeleteSpec extends AnyFunSuite {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(raw.size == 297 && !raw.contains(3L) && !raw.contains(4L),
       "tombstoned rows must be physically gone after compaction")
-    assert(Similarity.lshQuery(spark, dir, q, 10)
+    assert(Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == before,
       "probe answers changed across the physical drop")
     // occupancy recount over the survivors agrees with the live rows
@@ -127,11 +133,12 @@ class DeleteSpec extends AnyFunSuite {
     // the documented supported sequence: re-append after the clear
     Similarity.lshAppend(corpus.filter($"vec_id".isin(victims: _*)),
       "vec_id", "embedding", dir)
-    assert(ids(Similarity.lshQuery(spark, dir, qVec(5), 10)).contains(5L),
+    assert(ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(qVec(5)), Ann.TopK(10)))).contains(5L),
       "re-appended row must serve again")
     // the same takedown re-issued (idempotent GDPR pipeline shape)
     assert(Similarity.annDelete(spark, dir, victims) == 3L)
-    val got = ids(Similarity.lshQuery(spark, dir, qVec(5), 10))
+    val got = ids(Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(qVec(5)), Ann.TopK(10))))
     assert(victims.forall(v => !got.contains(v)),
       s"re-issued delete must tombstone the re-appended ids, got $got")
   }
@@ -166,10 +173,12 @@ class DeleteSpec extends AnyFunSuite {
     val victims = Seq(1001L, 1003L, 1005L, 1007L, 1009L, 17L)
     assert(Similarity.annDelete(spark, dir, victims) == victims.size)
     val expected = Set(0L, 1002L, 1004L, 1006L, 1008L, 1010L)
-    val refined = ids(Pq.ivfPqQueryRefined(spark, dir, q, 6, nprobe = 4))
+    val refined = ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(6), tuning = Some(4), refine = Some(4))))
     assert(refined == expected,
       s"refined top-6 over survivors must be the clique remnant: $refined")
-    val plain = ids(Pq.ivfPqQuery(spark, dir, q, 10, nprobe = 4))
+    val plain = ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(4))))
     assert(victims.forall(v => !plain.contains(v)), "leaked into ADC topk")
     // compaction drops the rows from BOTH the codes and the float sidecar
     val st = Similarity.compactIndex(spark, dir, "ivfpq")
@@ -180,7 +189,8 @@ class DeleteSpec extends AnyFunSuite {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(victims.forall(v => !rawCodes.contains(v) && !rawF32.contains(v)),
       "compaction left tombstoned rows in codes or sidecar")
-    assert(ids(Pq.ivfPqQueryRefined(spark, dir, q, 6, nprobe = 4)) == expected,
+    assert(ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(6), tuning = Some(4), refine = Some(4)))) == expected,
       "refined answers changed across the physical drop")
   }
 
@@ -198,7 +208,8 @@ class DeleteSpec extends AnyFunSuite {
     assert(!new java.io.File(staging).exists(), "stranded staging not swept")
     assert(new java.io.File(s"$dir/vectors/_append-del-crashed").exists(),
       "healed delete must leave its replay fence")
-    val got = ids(Similarity.ivfQuery(spark, dir, qVec(5), 10, nprobe = 4))
+    val got = ids(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(qVec(5)), Ann.TopK(10), tuning = Some(4))))
     assert(!got.contains(5L) && !got.contains(9L),
       s"both the healed and the live delete must filter: $got")
   }
@@ -282,8 +293,8 @@ class DeleteSpec extends AnyFunSuite {
     assert(Similarity.annDelete(spark, dir, Seq(2L, 4L, 6L)) == 3L)
     // the filtered probe's predicate AND the tombstone anti-join both
     // apply — equals filtered brute force over the surviving corpus
-    val got = Similarity.ivfQueryFiltered(spark, dir, q, 8,
-        col("flag") === 0, nprobe = 4)
+    val got = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(8), filter = Some(col("flag") === 0), tuning = Some(4)))
       .collect().map(_.getLong(0)).toSet
     val surv = corpus.filter(!$"vec_id".isin(2L, 4L, 6L) && $"flag" === 0)
     val brute = Similarity.bruteForceTopK(surv, "vec_id", "embedding", q, 8)
@@ -293,8 +304,8 @@ class DeleteSpec extends AnyFunSuite {
     Similarity.compactIndex(spark, dir, "ivf")
     val cols = spark.read.parquet(s"$dir/vectors").columns.toSet
     assert(cols.contains("flag"))
-    assert(Similarity.ivfQueryFiltered(spark, dir, q, 8,
-        col("flag") === 0, nprobe = 4)
+    assert(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(8), filter = Some(col("flag") === 0), tuning = Some(4)))
       .collect().map(_.getLong(0)).toSet == brute)
   }
 

@@ -951,9 +951,9 @@ class LlmSpec extends AnyFunSuite {
     Similarity.lshBuild(emb.select($"vec_id", $"embedding"),
       "vec_id", "embedding", fDir, nBits = 16, partitionBits = 4)
     Similarity.lshBuild(qz, "vec_id", "q_codes", qDir, nBits = 16, partitionBits = 4)
-    val fTop = Similarity.lshQuery(spark, fDir, q, 10)
+    val fTop = Ann.probe(Ann.Dir(spark, fDir), Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(_.getLong(0)).toSet
-    val qTop = Similarity.lshQuery(spark, qDir, q, 10)
+    val qTop = Ann.probe(Ann.Dir(spark, qDir), Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(_.getLong(0)).toSet
     assert((fTop & qTop).size >= 7, s"overlap ${(fTop & qTop).size}")
     // the quantized index is genuinely smaller at rest (codes are 1/4
@@ -966,7 +966,7 @@ class LlmSpec extends AnyFunSuite {
           .select(($"vec_id" + 900000L).as("vec_id"), $"embedding"), "embedding")
       .select($"vec_id", $"q_codes")
     Similarity.lshAppend(inc, "vec_id", "q_codes", qDir)
-    assert(Similarity.lshQuery(spark, qDir, q, 3)
+    assert(Ann.probe(Ann.Dir(spark, qDir), Ann.Probe(Ann.One(q), Ann.TopK(3)))
       .collect().map(_.getLong(0)).contains(900000L))
     // IVF: kmeans + assignment + probe over codes run mechanically, but
     // the per-vector scale DISTORTS the euclidean list geometry (every
@@ -979,7 +979,8 @@ class LlmSpec extends AnyFunSuite {
     Similarity.ivfBuild(qz, "vec_id", "q_codes", iDir)
     val bTop = Similarity.bruteForceTopK(qz, "vec_id", "q_codes", q, 10)
       .collect().map(_.getLong(0)).toSet
-    val iTopWide = Similarity.ivfQuery(spark, iDir, q, 10, nprobe = 24)
+    val iTopWide = Ann.probe(Ann.Dir(spark, iDir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(24)))
       .collect().map(_.getLong(0)).toSet
     assert((iTopWide & bTop).size >= 7, s"ivf recall ${(iTopWide & bTop).size}")
   }
@@ -1023,7 +1024,7 @@ class LlmSpec extends AnyFunSuite {
       nBits = 8, dim = 32, partitionBits = 4)
     val q = emb.filter(col("vec_id") === 0).select("embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    val hits = Similarity.lshQuery(spark, dir, q, 2)
+    val hits = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(2)))
       .collect().map(r => r.getLong(0) -> r.getDouble(1))
     assert(hits.map(_._1).toSet == Set(0L, 900000L))
     assert(hits.forall(_._2 == 1.0))
@@ -1291,7 +1292,8 @@ class LlmSpec extends AnyFunSuite {
       .head().getSeq[Float](0).map(_.toDouble)
     val brute = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
-    val lsh = Similarity.lshTopK(emb, "vec_id", "embedding", q, 10)
+    val lsh = Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding", Ann.Build("lsh")),
+      Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(_.getLong(0)).toSet
     val recall = brute.count(lsh.contains).toDouble / brute.size
     assert(recall >= 0.5, s"LSH recall $recall (lsh=$lsh brute=$brute)")
@@ -1367,7 +1369,7 @@ class LlmSpec extends AnyFunSuite {
       .select((col("r") + 100000L).as("vec_id"), $"embedding")
     val clique = emb.select($"vec_id", $"embedding").unionByName(planted)
     Similarity.lshBuild(clique, "vec_id", "embedding", dir, nBits = 16, dim = 64)
-    val got = Similarity.lshRange(spark, dir, q, minCos = 0.9)
+    val got = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.Range(0.9)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     // every planted copy (cos 1.0) and the query itself recalled at the
     // tight threshold — expected Hamming 0, well inside the slack ball
@@ -1378,15 +1380,15 @@ class LlmSpec extends AnyFunSuite {
       q, 0.9).collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(got.subsetOf(brute))
     // full slack degenerates to the exact answer
-    val full = Similarity.lshRange(spark, dir, q, minCos = 0.9,
-      slackBits = 16).collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+    val full = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.Range(0.9), tuning = Some(16))).collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(full == brute)
     // the tight-threshold probe reads a pruned ball, not the corpus
-    val plan = Similarity.lshRange(spark, dir, q, minCos = 0.9)
+    val plan = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.Range(0.9)))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [pband"), plan.take(2000))
     intercept[IllegalArgumentException](
-      Similarity.lshRange(spark, dir, Seq(1.0, 2.0), 0.9))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(Seq(1.0, 2.0)), Ann.Range(0.9))))
   }
 
   test("ivfRange: exact precision, planted clique recalled, full probe degenerates") {
@@ -1399,7 +1401,7 @@ class LlmSpec extends AnyFunSuite {
       .select((col("r") + 100000L).as("vec_id"), $"embedding")
     val clique = emb.select($"vec_id", $"embedding").unionByName(planted)
     Similarity.ivfBuild(clique, "vec_id", "embedding", dir)
-    val got = Similarity.ivfRange(spark, dir, q, minCos = 0.9)
+    val got = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.Range(0.9)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     // the clique shares the query's rank-0 list: recalled at any nprobe
     assert((1 to 5).forall(i => got.exists(_._1 == 100000L + i)) &&
@@ -1409,22 +1411,25 @@ class LlmSpec extends AnyFunSuite {
       q, 0.9).collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(got.subsetOf(brute))
     // probing every list degenerates to the exact answer
-    val full = Similarity.ivfRange(spark, dir, q, minCos = 0.9, nprobe = 16)
+    val full = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.Range(0.9), tuning = Some(16)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(full == brute)
     // the probe reads its lists via partition pruning, not a corpus scan
-    val plan = Similarity.ivfRange(spark, dir, q, minCos = 0.9)
+    val plan = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.Range(0.9)))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [list"), plan.take(2000))
     intercept[IllegalArgumentException](
-      Similarity.ivfRange(spark, dir, Seq(1.0, 2.0), 0.9))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(Seq(1.0, 2.0)), Ann.Range(0.9))))
     intercept[IllegalArgumentException](
-      Similarity.ivfRange(spark, dir, q, minCos = 1.5))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.Range(1.5))))
     // the ad-hoc (index-less) forms obey the same contracts: exact
     // precision and guaranteed self/clique recall
     Seq(
-      Similarity.ivfRangeAdhoc(clique, "vec_id", "embedding", q, 0.9),
-      Similarity.lshRangeAdhoc(clique, "vec_id", "embedding", q, 0.9),
+      Ann.probe(Ann.Adhoc(clique, "vec_id", "embedding", Ann.Build("ivf")),
+        Ann.Probe(Ann.One(q), Ann.Range(0.9))),
+      Ann.probe(Ann.Adhoc(clique, "vec_id", "embedding", Ann.Build("lsh")),
+        Ann.Probe(Ann.One(q), Ann.Range(0.9))),
     ).foreach { df =>
       val s = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(s.subsetOf(brute) && s.exists(_._1 == 0L) &&
@@ -1477,8 +1482,8 @@ class LlmSpec extends AnyFunSuite {
       .head().getSeq[Float](0).map(_.toDouble)
     val brute = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
-    val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding", q, 10,
-      kLists = 16, nprobe = 6)
+    val ivf = Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding", Ann.Build("ivf", kLists = 16)),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(6)))
       .collect().map(_.getLong(0)).toSet
     val recall = brute.count(ivf.contains).toDouble / brute.size
     assert(recall >= 0.5, s"IVF recall $recall (ivf=$ivf brute=$brute)")
@@ -1841,15 +1846,17 @@ class LlmSpec extends AnyFunSuite {
     val q = emb.filter($"vec_id" === 0).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
     // the REAL ivfQuery read of the built index is partition-pruned on `list`
-    val probe = Similarity.ivfQuery(spark, dir, q, 10, nprobe = 3)
+    val probe = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(3)))
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
       (plan.contains("list#") || plan.contains("list =")), plan.take(2000))
     // built-index probe ≡ ad-hoc ivfTopK at identical build/query params
     // (training is deterministic, so both paths pick the same lists)
     val viaIndex = probe.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val adHoc = Similarity.ivfTopK(base, "vec_id", "embedding", q, 10,
-        kLists = 8, nprobe = 3, trainSample = 256)
+    val adHoc = Ann.probe(Ann.Adhoc(base, "vec_id", "embedding",
+        Ann.Build("ivf", kLists = 8, trainSample = 256)),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(3)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(viaIndex == adHoc)
     assert(viaIndex.nonEmpty && viaIndex.head._1 == 0L) // query is its own 1-NN
@@ -1870,15 +1877,16 @@ class LlmSpec extends AnyFunSuite {
     val clique = base.unionByName(planted)
     Similarity.lshBuild(clique, "vec_id", "embedding", dir, nBits = 16, dim = 64)
     assert(!new java.io.File(s"$root/.idx.staging").exists())
-    val probe = Similarity.lshQuery(spark, dir, q, 10, minCandidates = 5)
+    val probe = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(5)))
     val plan = probe.queryExecution.executedPlan.toString
     // the layout column is the signature PREFIX (pband); the full-width
     // Hamming predicate then runs inside the pruned partitions
     assert(plan.contains("PartitionFilters") &&
       (plan.contains("pband#") || plan.contains("pband =")), plan.take(2000))
     val viaIndex = probe.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val adHoc = Similarity.lshTopK(clique, "vec_id", "embedding", q, 10,
-        minCandidates = 5)
+    val adHoc = Ann.probe(Ann.Adhoc(clique, "vec_id", "embedding", Ann.Build("lsh")),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(5)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(viaIndex == adHoc)
     assert(viaIndex.forall(_._2 == 1.0)) // the 11-clique is the whole top-10
@@ -1887,15 +1895,16 @@ class LlmSpec extends AnyFunSuite {
     // ad-hoc path (same candidate semantics, pruning honestly abandoned)
     val dir2 = s"$root/idx2"
     Similarity.lshBuild(base, "vec_id", "embedding", dir2, nBits = 16, dim = 64)
-    val wide = Similarity.lshQuery(spark, dir2, q, 10)
+    val wide = Ann.probe(Ann.Dir(spark, dir2), Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val wideAdHoc = Similarity.lshTopK(base, "vec_id", "embedding", q, 10)
+    val wideAdHoc = Ann.probe(Ann.Adhoc(base, "vec_id", "embedding", Ann.Build("lsh")),
+      Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(wide == wideAdHoc)
     // the sidecar pins the plane family: a wrong-dimension query is
     // rejected up front, never silently probed with mismatched planes
     intercept[IllegalArgumentException](
-      Similarity.lshQuery(spark, dir2, Seq(1.0, 2.0, 3.0), 5))
+      Ann.probe(Ann.Dir(spark, dir2), Ann.Probe(Ann.One(Seq(1.0, 2.0, 3.0)), Ann.TopK(5))))
   }
 
   test("filtered ANN: predicate pushes into the pruned read; probe widens until k eligible survive") {
@@ -1948,18 +1957,20 @@ class LlmSpec extends AnyFunSuite {
       last
     }
     // warm the memoized index meta so neither measured call pays it
-    Similarity.ivfQuery(spark, ivfDir, q, 5, nprobe = 3).collect()
+    Ann.probe(Ann.Dir(spark, ivfDir),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(3))).collect()
     spark.listenerManager.register(ql)
     spark.sparkContext.addSparkListener(jl)
     val (got, jobsFiltered, jobsConsume, jobsBaseline) =
       try {
         val j0 = awaitStable(jobs.get())
-        val probe = Similarity.ivfQueryFiltered(spark, ivfDir, q, 5,
-          col("flag") === 0, nprobe = 3)
+        val probe = Ann.probe(Ann.Dir(spark, ivfDir),
+          Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 0), tuning = Some(3)))
         val j1 = awaitStable(jobs.get())
         val rows = probe.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         val j2 = awaitStable(jobs.get())
-        Similarity.ivfQuery(spark, ivfDir, q, 5, nprobe = 3).collect()
+        Ann.probe(Ann.Dir(spark, ivfDir),
+          Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(3))).collect()
         val j3 = awaitStable(jobs.get())
         (rows, j1 - j0, j2 - j1, j3 - j2)
       } finally {
@@ -1992,8 +2003,8 @@ class LlmSpec extends AnyFunSuite {
     val eligible = corpus.filter(col("vec_id") % 100 === 37L)
     val want = Similarity.bruteForceTopK(eligible, "vec_id", "embedding", q, 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val gotSel = Similarity.ivfQueryFiltered(spark, ivfDir, q, 5,
-      selective, nprobe = 1)
+    val gotSel = Ann.probe(Ann.Dir(spark, ivfDir),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(selective), tuning = Some(1)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(gotSel == want, s"widened probe $gotSel != brute $want")
 
@@ -2005,8 +2016,8 @@ class LlmSpec extends AnyFunSuite {
     Similarity.ivfAppend(extra, "vec_id", "embedding", ivfDir)
     // all 7 eligible clique members — the appended 200002 included —
     // now serve at cos 1.0
-    val afterAppend = Similarity.ivfQueryFiltered(spark, ivfDir, q, 7,
-      col("flag") === 0, nprobe = 3)
+    val afterAppend = Ann.probe(Ann.Dir(spark, ivfDir),
+      Ann.Probe(Ann.One(q), Ann.TopK(7), filter = Some(col("flag") === 0), tuning = Some(3)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(afterAppend == Seq(0L, 100002L, 100004L, 100006L, 100008L,
       100010L, 200002L).map(id => (id, 1.0)), s"after append: $afterAppend")
@@ -2025,8 +2036,8 @@ class LlmSpec extends AnyFunSuite {
     plans.clear()
     spark.listenerManager.register(ql)
     val lgot =
-      try Similarity.lshQueryFiltered(spark, lshDir, q, 5,
-          col("flag") === 0, minCandidates = 5)
+      try Ann.probe(Ann.Dir(spark, lshDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 0), tuning = Some(5)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       finally spark.listenerManager.unregister(ql)
     val lplanOk = awaitStable(plans.asScala.exists(_.matches(
@@ -2036,8 +2047,8 @@ class LlmSpec extends AnyFunSuite {
       .map(id => (id, 1.0)), s"lsh got $lgot")
     // selective predicate widens the Hamming ball up to the full scan —
     // exact filtered brute force in the limit
-    val lgotSel = Similarity.lshQueryFiltered(spark, lshDir, q, 5,
-      selective, minCandidates = 5)
+    val lgotSel = Ann.probe(Ann.Dir(spark, lshDir),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(selective), tuning = Some(5)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(lgotSel == want, s"lsh widened probe $lgotSel != brute $want")
     // reserved-name guard
@@ -2051,14 +2062,14 @@ class LlmSpec extends AnyFunSuite {
     val wantRange = Similarity.bruteForceRange(
       corpus.filter(col("flag") === 0), "vec_id", "embedding", q, 0.99)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val ivfR = Similarity.ivfRangeFiltered(spark, ivfDir, q, 0.99,
-      col("flag") === 0, nprobe = 3)
+    val ivfR = Ann.probe(Ann.Dir(spark, ivfDir),
+      Ann.Probe(Ann.One(q), Ann.Range(0.99), filter = Some(col("flag") === 0), tuning = Some(3)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     // the ivf index additionally holds the row THIS test appended above
     assert(ivfR == wantRange + ((200002L, 1.0)),
       s"ivf filtered range: $ivfR vs $wantRange")
-    val lshR = Similarity.lshRangeFiltered(spark, lshDir, q, 0.99,
-      col("flag") === 0)
+    val lshR = Ann.probe(Ann.Dir(spark, lshDir),
+      Ann.Probe(Ann.One(q), Ann.Range(0.99), filter = Some(col("flag") === 0)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(lshR == wantRange, s"lsh filtered range: $lshR vs $wantRange")
   }
@@ -2085,18 +2096,20 @@ class LlmSpec extends AnyFunSuite {
         .sortBy { case (qid, id, cos) => (qid, -cos, id) }
     for (pred <- Seq(col("flag") === 0, col("id") % 100 === 37L)) {
       // IVF: batch == per-query single filtered probe, row for row
-      val ivfBatch = rows(Similarity.ivfQueryBatchFiltered(
-        spark, ivfDir, qs, 5, pred, nprobe = 2))
+      val ivfBatch = rows(Ann.probe(Ann.Dir(spark, ivfDir),
+        Ann.Probe(Ann.Batch(qs), Ann.TopK(5), filter = Some(pred), tuning = Some(2))))
       val ivfSingle = qs.flatMap { case (qid, q) =>
-        Similarity.ivfQueryFiltered(spark, ivfDir, q, 5, pred, nprobe = 2)
+        Ann.probe(Ann.Dir(spark, ivfDir),
+          Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(pred), tuning = Some(2)))
           .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
       }.sortBy { case (qid, id, cos) => (qid, -cos, id) }
       assert(ivfBatch == ivfSingle, s"ivf batch/single diverged under $pred")
       // LSH likewise
-      val lshBatch = rows(Similarity.lshQueryBatchFiltered(
-        spark, lshDir, qs, 5, pred, minCandidates = 5))
+      val lshBatch = rows(Ann.probe(Ann.Dir(spark, lshDir),
+        Ann.Probe(Ann.Batch(qs), Ann.TopK(5), filter = Some(pred), tuning = Some(5))))
       val lshSingle = qs.flatMap { case (qid, q) =>
-        Similarity.lshQueryFiltered(spark, lshDir, q, 5, pred, minCandidates = 5)
+        Ann.probe(Ann.Dir(spark, lshDir),
+          Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(pred), tuning = Some(5)))
           .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
       }.sortBy { case (qid, id, cos) => (qid, -cos, id) }
       assert(lshBatch == lshSingle, s"lsh batch/single diverged under $pred")
@@ -2109,15 +2122,15 @@ class LlmSpec extends AnyFunSuite {
       Similarity.bruteForceTopK(eligible, "vec_id", "embedding", q, 5)
         .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
     }.sortBy { case (qid, id, cos) => (qid, -cos, id) }
-    assert(rows(Similarity.ivfQueryBatchFiltered(
-      spark, ivfDir, qs, 5, selective, nprobe = 1)) == want)
-    assert(rows(Similarity.lshQueryBatchFiltered(
-      spark, lshDir, qs, 5, selective, minCandidates = 5)) == want)
+    assert(rows(Ann.probe(Ann.Dir(spark, ivfDir),
+      Ann.Probe(Ann.Batch(qs), Ann.TopK(5), filter = Some(selective), tuning = Some(1)))) == want)
+    assert(rows(Ann.probe(Ann.Dir(spark, lshDir),
+      Ann.Probe(Ann.Batch(qs), Ann.TopK(5), filter = Some(selective), tuning = Some(5)))) == want)
     // the permissive predicate satisfies at the first probe: per query
     // the even-id clique slice ties at 1.0 (query 1's own odd row is
     // excluded, so its clique slice is exactly 5)
-    val fast = rows(Similarity.ivfQueryBatchFiltered(
-      spark, ivfDir, qs, 5, col("flag") === 0, nprobe = 2))
+    val fast = rows(Ann.probe(Ann.Dir(spark, ivfDir),
+      Ann.Probe(Ann.Batch(qs), Ann.TopK(5), filter = Some(col("flag") === 0), tuning = Some(2))))
     assert(fast.count(_._3 == 1.0) == 15, s"cliques must fill all 15 slots: $fast")
   }
 
@@ -2158,11 +2171,13 @@ class LlmSpec extends AnyFunSuite {
     val queries = emb.filter($"vec_id" < 3)
       .select("vec_id", "embedding").orderBy("vec_id").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-    val batch = Similarity.ivfQueryBatch(spark, dir, queries, 7, nprobe = 3)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(7), tuning = Some(3)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
     queries.foreach { case (qid, q) =>
-      val single = Similarity.ivfQuery(spark, dir, q, 7, nprobe = 3)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(7), tuning = Some(3)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       // the per-row membership filter keeps each query to ITS probe
       // lists, so batching changes nothing about any query's answer
@@ -2170,26 +2185,28 @@ class LlmSpec extends AnyFunSuite {
     }
     // ragged or empty batches are rejected up front
     intercept[IllegalArgumentException](
-      Similarity.ivfQueryBatch(spark, dir, Seq.empty, 3))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.Batch(Seq.empty), Ann.TopK(3))))
     intercept[IllegalArgumentException](
-      Similarity.ivfQueryBatch(spark, dir,
-        Seq(1L -> Seq(1.0), 2L -> Seq(1.0, 2.0)), 3))
+      Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.Batch(Seq(1L -> Seq(1.0), 2L -> Seq(1.0, 2.0))), Ann.TopK(3))))
     // wrong-dim queries are rejected against the index's OWN dim,
     // mirroring lshQueryBatch: a LONGER query would otherwise throw
     // ArrayIndexOutOfBounds inside centroid selection (an error class
     // serving layers don't treat as "bad input"), a SHORTER one would
     // silently truncate the distance loop and return garbage lists
     intercept[IllegalArgumentException](
-      Similarity.ivfQueryBatch(spark, dir, Seq(1L -> Seq.fill(65)(0.1)), 3))
+      Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.Batch(Seq(1L -> Seq.fill(65)(0.1))), Ann.TopK(3))))
     intercept[IllegalArgumentException](
-      Similarity.ivfQueryBatch(spark, dir, Seq(1L -> Seq(1.0, 2.0)), 3))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.Batch(Seq(1L -> Seq(1.0, 2.0))), Ann.TopK(3))))
     intercept[IllegalArgumentException](
-      Similarity.ivfQuery(spark, dir, Seq(1.0, 2.0), 3))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(Seq(1.0, 2.0)), Ann.TopK(3))))
     // the serving layers' pre-check reads the same memoized meta
     assert(Similarity.indexDim(spark, dir, "ivf") == 64)
     // one pruned union read feeding the bounded-heap aggregate — never a
     // per-query window sort
-    val plan = Similarity.ivfQueryBatch(spark, dir, queries, 7, nprobe = 3)
+    val plan = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(7), tuning = Some(3)))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("topk_by_score") &&
       !plan.contains("Window"), plan.take(2000))
@@ -2202,9 +2219,9 @@ class LlmSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(corpusDir)
     val q = emb.filter($"vec_id" === 0).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    def topk() = Similarity.ivfTopKIndexed(
-      spark.read.parquet(corpusDir), "vec_id", "embedding", key, q, 5,
-      kLists = 4, nprobe = 2, trainSample = 64)
+    def topk() = Ann.probe(Ann.Cached(spark.read.parquet(corpusDir), "vec_id", "embedding", key,
+        Ann.Build("ivf", kLists = 4, trainSample = 64)),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(2)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val r1 = topk()
     assert(r1.nonEmpty && r1.forall(_._1 < 100L))
@@ -2445,8 +2462,8 @@ class LlmSpec extends AnyFunSuite {
       val mean = recalls.sum / recalls.length
       assert(mean >= 0.8, s"$name default recall@10 $mean < 0.8 (${recalls.mkString(",")})")
     }
-    gate("ivf")(q => Similarity.ivfQuery(spark, s"$root/ivf", q, 10))
-    gate("lsh")(q => Similarity.lshQuery(spark, s"$root/lsh", q, 10))
+    gate("ivf")(q => Ann.probe(Ann.Dir(spark, s"$root/ivf"), Ann.Probe(Ann.One(q), Ann.TopK(10))))
+    gate("lsh")(q => Ann.probe(Ann.Dir(spark, s"$root/lsh"), Ann.Probe(Ann.One(q), Ann.TopK(10))))
   }
 
   test("warm lsh probe plans with zero Spark jobs; histogram radius equals counting-loop radius") {
@@ -2457,7 +2474,7 @@ class LlmSpec extends AnyFunSuite {
     val q = emb.filter($"vec_id" === 0).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
     // first probe loads + memoizes the meta/occupancy sidecars
-    val r1 = Similarity.lshQuery(spark, dir, q, 10)
+    val r1 = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // a WARM probe picks its radius driver-side from the histogram: the
     // lshQuery call itself (plan construction) must launch NO Spark job —
@@ -2472,7 +2489,7 @@ class LlmSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     val probe =
       try {
-        val p = Similarity.lshQuery(spark, dir, q, 10)
+        val p = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(10)))
         Thread.sleep(1000) // listener bus is async; jobs (if any) already ran
         p
       } finally spark.sparkContext.removeSparkListener(listener)
@@ -2482,7 +2499,8 @@ class LlmSpec extends AnyFunSuite {
     // candidate set: results identical to the ad-hoc path
     val viaIndex = probe.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(viaIndex == r1)
-    val adHoc = Similarity.lshTopK(base, "vec_id", "embedding", q, 10)
+    val adHoc = Ann.probe(Ann.Adhoc(base, "vec_id", "embedding", Ann.Build("lsh")),
+      Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(viaIndex == adHoc)
   }
@@ -2493,7 +2511,7 @@ class LlmSpec extends AnyFunSuite {
     Similarity.ivfBuild(base, "vec_id", "embedding", dir, kLists = 8, trainSample = 256)
     val q = emb.filter($"vec_id" === 0).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    val r1 = Similarity.ivfQuery(spark, dir, q, 10, nprobe = 3)
+    val r1 = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(3)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // warm probes must not re-read the centroid sidecar (a Spark job per
     // probe before memoization) nor re-resolve the vectors parquet
@@ -2507,7 +2525,8 @@ class LlmSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     val probe =
       try {
-        val p = Similarity.ivfQuery(spark, dir, q, 10, nprobe = 3)
+        val p = Ann.probe(Ann.Dir(spark, dir),
+          Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(3)))
         Thread.sleep(1000)
         p
       } finally spark.sparkContext.removeSparkListener(listener)
@@ -2524,31 +2543,34 @@ class LlmSpec extends AnyFunSuite {
     val queries = emb.filter($"vec_id" < 3)
       .select("vec_id", "embedding").orderBy("vec_id").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-    val batch = Similarity.lshQueryBatch(spark, dir, queries, 7, minCandidates = 20)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(7), tuning = Some(20)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
     queries.foreach { case (qid, q) =>
-      val single = Similarity.lshQuery(spark, dir, q, 7, minCandidates = 20)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(7), tuning = Some(20)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       // same histogram-chosen radius per query, hence same candidates —
       // batching changes nothing about any query's answer
       assert(batch(qid) == single, s"query $qid")
     }
     // chunked ≡ unchunked, and degenerate batches are rejected up front
-    val chunked = Similarity.lshQueryBatch(spark, dir, queries, 7,
-      minCandidates = 20, chunkSize = 2)
+    val chunked = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(7), tuning = Some(20), chunkSize = 2))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
     assert(chunked == batch)
     intercept[IllegalArgumentException](
-      Similarity.lshQueryBatch(spark, dir, Seq.empty, 3))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.Batch(Seq.empty), Ann.TopK(3))))
     intercept[IllegalArgumentException](
-      Similarity.lshQueryBatch(spark, dir,
-        Seq(1L -> Seq(1.0), 2L -> Seq(1.0, 2.0)), 3))
+      Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.Batch(Seq(1L -> Seq(1.0), 2L -> Seq(1.0, 2.0))), Ann.TopK(3))))
     assert(Similarity.indexDim(spark, dir, "lsh") == 64)
     // one pruned union read feeding the bounded-heap aggregate — never a
     // per-query window sort
-    val plan = Similarity.lshQueryBatch(spark, dir, queries, 7, minCandidates = 20)
+    val plan = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(7), tuning = Some(20)))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("topk_by_score") &&
       !plan.contains("Window"), plan.take(2000))
@@ -2570,10 +2592,10 @@ class LlmSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfchunk").toString + "/idx"
     Similarity.ivfBuild(emb.select($"vec_id", $"embedding"), "vec_id", "embedding",
       dir, kLists = 8, trainSample = 256)
-    val oneIvf = norm(Similarity.ivfQueryBatch(spark, dir, queries, 5,
-      nprobe = 3).collect())
-    val chunkedIvf = norm(Similarity.ivfQueryBatch(spark, dir, queries, 5,
-      nprobe = 3, chunkSize = 2).collect())
+    val oneIvf = norm(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5), tuning = Some(3))).collect())
+    val chunkedIvf = norm(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5), tuning = Some(3), chunkSize = 2)).collect())
     assert(chunkedIvf == oneIvf)
   }
 
@@ -2591,7 +2613,8 @@ class LlmSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfdegen").toString + "/idx"
     Similarity.ivfBuild(emb.select($"vec_id", $"embedding"), "vec_id", "embedding",
       dir, kLists = 8, trainSample = 256)
-    val ivf = Similarity.ivfQueryBatch(spark, dir, queries, 5, nprobe = 3)
+    val ivf = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5), tuning = Some(3)))
       .collect().map(_.getLong(0)).toSeq
     assert(ivf.nonEmpty && ivf.forall(_ == 0L), ivf.mkString(","))
   }
@@ -2611,7 +2634,7 @@ class LlmSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$root/.idx.old").exists())
     val q = emb.filter($"vec_id" === 25).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    val got = Similarity.lshQuery(spark, dir, q, 5, minCandidates = 3)
+    val got = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(3)))
       .collect().map(_.getLong(0)).toSeq
     assert(got.nonEmpty && got.forall(id => id >= 20 && id < 40),
       s"swap served stale ids: ${got.mkString(",")}")
@@ -2636,9 +2659,9 @@ class LlmSpec extends AnyFunSuite {
     Seq(0L, 42L, 150L, 199L).foreach { qid =>
       val q = emb.filter($"vec_id" === qid).select($"embedding")
         .head().getSeq[Float](0).map(_.toDouble)
-      val inc = Similarity.lshQuery(spark, s"$root/inc", q, 7)
+      val inc = Ann.probe(Ann.Dir(spark, s"$root/inc"), Ann.Probe(Ann.One(q), Ann.TopK(7)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val full = Similarity.lshQuery(spark, s"$root/full", q, 7)
+      val full = Ann.probe(Ann.Dir(spark, s"$root/full"), Ann.Probe(Ann.One(q), Ann.TopK(7)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(inc == full, s"query $qid diverged after append")
       assert(inc.head == ((qid, 1.0)), s"query $qid must find itself")
@@ -2652,8 +2675,10 @@ class LlmSpec extends AnyFunSuite {
     def grouped(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
-    assert(grouped(Similarity.lshQueryBatch(spark, s"$root/inc", queries, 5)) ==
-      grouped(Similarity.lshQueryBatch(spark, s"$root/full", queries, 5)))
+    assert(grouped(Ann.probe(Ann.Dir(spark, s"$root/inc"),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5)))) ==
+      grouped(Ann.probe(Ann.Dir(spark, s"$root/full"),
+        Ann.Probe(Ann.Batch(queries), Ann.TopK(5)))))
     // appending a mismatched vector type is rejected before any write
     intercept[IllegalArgumentException](Similarity.lshAppend(
       emb.select($"vec_id", $"embedding".cast("array<double>").as("embedding")),
@@ -2682,14 +2707,15 @@ class LlmSpec extends AnyFunSuite {
     // the coarse quantizer is untouched
     assert(Similarity.readCentroids(spark, dir).map(_.toSeq).toSeq ==
       centroidsBefore.map(_.toSeq).toSeq)
-    val hits = Similarity.ivfQuery(spark, dir, q, 5, nprobe = 2)
+    val hits = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(2)))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(Set(0L, 9001L, 9002L, 9003L)
         .subsetOf(hits.filter(_._2 == 1.0).map(_._1).toSet),
       s"planted appended duplicates not all found: ${hits.mkString(",")}")
     // batch path sees them through the same pruned read
-    val batchHits = Similarity.ivfQueryBatch(spark, dir, Seq(0L -> q.toSeq), 5,
-      nprobe = 2).collect().map(r => (r.getLong(1), r.getDouble(2)))
+    val batchHits = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(Seq(0L -> q.toSeq)), Ann.TopK(5), tuning = Some(2))).collect().map(r => (r.getLong(1), r.getDouble(2)))
     assert(Set(0L, 9001L, 9002L, 9003L)
       .subsetOf(batchHits.filter(_._2 == 1.0).map(_._1).toSet))
     // list stats cover every appended row: counts sum to the grown corpus
@@ -2707,9 +2733,9 @@ class LlmSpec extends AnyFunSuite {
       .repartition(4).write.mode("overwrite").parquet(corpusDir)
     val q = emb.filter($"vec_id" === 0).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    def topk() = Similarity.ivfTopKIndexed(
-      spark.read.parquet(corpusDir), "vec_id", "embedding", key, q, 5,
-      kLists = 4, nprobe = 2, trainSample = 64)
+    def topk() = Ann.probe(Ann.Cached(spark.read.parquet(corpusDir), "vec_id", "embedding", key,
+        Ann.Build("ivf", kLists = 4, trainSample = 64)),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(2)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     def idxDirs() = new java.io.File(idxBase).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("idx-")).map(_.getName)
@@ -2834,7 +2860,8 @@ class LlmSpec extends AnyFunSuite {
     // and the index still probes
     val q = emb.filter($"vec_id" === 3).select($"embedding").head()
       .getSeq[Float](0).map(_.toDouble)
-    assert(Similarity.lshQuery(spark, dir, q, 3).collect().head.getLong(0) == 3L)
+    assert(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(3))).collect().head.getLong(0) == 3L)
     // same on the IVF side
     val ivfDir = s"$root/ivf"
     Similarity.ivfBuild(emb.select($"vec_id", $"embedding"),
@@ -2897,7 +2924,7 @@ class LlmSpec extends AnyFunSuite {
     // probes stay duplicate-free end to end
     val q = emb.filter($"vec_id" === 199).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    val hits = Similarity.lshQuery(spark, dir, q, 10)
+    val hits = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(_.getLong(0)).toSeq
     assert(hits.distinct == hits)
   }
@@ -2954,7 +2981,7 @@ class LlmSpec extends AnyFunSuite {
     def probe(qid: Long) = {
       val q = emb.filter($"vec_id" === qid).select($"embedding")
         .head().getSeq[Float](0).map(_.toDouble)
-      Similarity.lshQuery(spark, dir, q, 7)
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(7)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
     val (qids, occBefore) = (Seq(5L, 250L, 499L), occ())
@@ -2991,7 +3018,8 @@ class LlmSpec extends AnyFunSuite {
     val centroidsBefore = Similarity.readCentroids(spark, dir).map(_.toSeq).toSeq
     val q = emb.filter($"vec_id" === 450).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    val before = Similarity.ivfQuery(spark, dir, q, 5, nprobe = 8)
+    val before = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(8)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val st = Similarity.compactIndex(spark, dir, "ivf")
     assert(st.filesAfter < st.filesBefore)
@@ -2999,7 +3027,7 @@ class LlmSpec extends AnyFunSuite {
     // frozen centroids stay frozen — compaction must never retrain
     assert(Similarity.readCentroids(spark, dir).map(_.toSeq).toSeq ==
       centroidsBefore)
-    assert(Similarity.ivfQuery(spark, dir, q, 5, nprobe = 8)
+    assert(Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(8)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == before)
     assert(before.head == ((450L, 1.0)), "appended row must find itself")
   }
@@ -3023,7 +3051,8 @@ class LlmSpec extends AnyFunSuite {
     val q = emb.filter($"vec_id" === 0).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
     val clique = Set(0L) ++ (1L to 10L).map(_ + 100000L)
-    val full = Pq.ivfPqQuery(spark, s"$root/full", q, 11, nprobe = 1)
+    val full = Ann.probe(Ann.Dir(spark, s"$root/full"),
+      Ann.Probe(Ann.One(q), Ann.TopK(11), tuning = Some(1)))
       .collect().map(_.getLong(0)).toSet
     assert(full == clique, s"full-build probe: $full")
     // build-on-prefix + append-the-rest: frozen centroids and codebooks
@@ -3034,7 +3063,8 @@ class LlmSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/vectors").count() == corpus.count())
     // the bit-identical appended clique encodes to vec 0's codes and
     // lands in its list: nprobe=1 still serves the whole clique exactly
-    val probe = Pq.ivfPqQuery(spark, dir, q, 11, nprobe = 1)
+    val probe = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(11), tuning = Some(1)))
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
       (plan.contains("list#") || plan.contains("list =")), plan.take(2000))
@@ -3050,7 +3080,7 @@ class LlmSpec extends AnyFunSuite {
     assert(cb.count() == 8L * 16L)
     // dim guard on the probe
     intercept[IllegalArgumentException] {
-      Pq.ivfPqQuery(spark, dir, q :+ 0.0, 5)
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q :+ 0.0), Ann.TopK(5)))
     }
   }
 
@@ -3090,7 +3120,8 @@ class LlmSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/.append-$id").exists())
     val q = emb.filter($"vec_id" === 300).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    val served = Pq.ivfPqQuery(spark, dir, q, 5, nprobe = 8)
+    val served = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(8)))
       .collect().map(_.getLong(0)).toSeq
     assert(served.nonEmpty && served.distinct == served)
     // a SECOND retry (fence now durable) is a pure no-op
@@ -3103,7 +3134,7 @@ class LlmSpec extends AnyFunSuite {
     assert(new java.io.File(dir).renameTo(new java.io.File(s"$root/.idx.old")))
     graft.tools.IndexGc.sweep(spark, root, keepPerKey = 2, minAgeMs = 0L)
     assert(new java.io.File(dir).isDirectory, "orphaned .old must be restored")
-    assert(Pq.ivfPqQuery(spark, dir, q, 5, nprobe = 8)
+    assert(Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(8)))
       .collect().map(_.getLong(0)).toSeq == served)
     // COMPACTION — method "ivfpq": fewer files, centroids+codebooks
     // carried verbatim, probe-for-probe identical, replay fence survives
@@ -3120,7 +3151,7 @@ class LlmSpec extends AnyFunSuite {
         "(values AND the enc marker)")
     assert(new java.io.File(s"$dir/vectors/_append-$id").exists(),
       "replay fences must survive compaction")
-    assert(Pq.ivfPqQuery(spark, dir, q, 5, nprobe = 8)
+    assert(Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(8)))
       .collect().map(_.getLong(0)).toSeq == served)
     Pq.ivfPqAppend(bDf, "vec_id", "embedding", dir) // replay across compact
     assert(spark.read.parquet(s"$dir/vectors").count() == postCount)
@@ -3159,7 +3190,8 @@ class LlmSpec extends AnyFunSuite {
     // rows 1007, 1000, 1014 are bit-identical to the query (the
     // perturbation has period 7 in i), so top-3 is that cos-1.0 tie
     // set in id order
-    val got = Similarity.ivfQuery(spark, dir, q.toSeq, 3, nprobe = 8)
+    val got = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q.toSeq), Ann.TopK(3), tuning = Some(8)))
       .collect().map(_.getLong(0))
     assert(got.toSeq == Seq(1000L, 1007L, 1014L),
       s"planted clique must be served exactly, got ${got.toSeq}")
@@ -3213,9 +3245,9 @@ class LlmSpec extends AnyFunSuite {
     Seq(5L, 250L, 499L).foreach { qid =>
       val q = emb.filter($"vec_id" === qid).select($"embedding")
         .head().getSeq[Float](0).map(_.toDouble)
-      def topk(d: String) = Similarity.lshQuery(spark, d, q, 7)
+      def topk(d: String) = Ann.probe(Ann.Dir(spark, d), Ann.Probe(Ann.One(q), Ann.TopK(7)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      def range(d: String) = Similarity.lshRange(spark, d, q, 0.9)
+      def range(d: String) = Ann.probe(Ann.Dir(spark, d), Ann.Probe(Ann.One(q), Ann.Range(0.9)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(topk(dir) == topk(freshDir), s"topk diverged for qid $qid")
       assert(range(dir) == range(freshDir), s"range diverged for qid $qid")
@@ -3246,7 +3278,8 @@ class LlmSpec extends AnyFunSuite {
     val freshIvf = java.nio.file.Files
       .createTempDirectory("graft-opsloop-ivffresh").toString + "/idx"
     Similarity.ivfBuild(clique, "vec_id", "embedding", freshIvf)
-    def ivfTop(d: String) = Similarity.ivfQuery(spark, d, q0, 10, nprobe = 8)
+    def ivfTop(d: String) = Ann.probe(Ann.Dir(spark, d),
+      Ann.Probe(Ann.One(q0), Ann.TopK(10), tuning = Some(8)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val (ops, fresh) = (ivfTop(ivfDir), ivfTop(freshIvf))
     assert(ops == fresh, s"ivf ops-loop probe diverged: $ops vs $fresh")
@@ -3265,9 +3298,9 @@ class LlmSpec extends AnyFunSuite {
       .map(_.getName).toSeq
     val q = emb.filter($"vec_id" === 0).select($"embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    def topk() = Similarity.ivfTopKIndexed(
-      spark.read.parquet(corpusDir), "vec_id", "embedding", key, q, 5,
-      kLists = 4, nprobe = 2, trainSample = 64)
+    def topk() = Ann.probe(Ann.Cached(spark.read.parquet(corpusDir), "vec_id", "embedding", key,
+        Ann.Build("ivf", kLists = 4, trainSample = 64)),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(2)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     spark.conf.set("graft.ivf.indexBase", idxBase)
     spark.conf.set("graft.ivf.gcKeep", "1")
@@ -3323,8 +3356,8 @@ class LlmSpec extends AnyFunSuite {
     val queries = (1L to 3L).map(qid => qid ->
       emb.filter($"vec_id" === qid).select($"embedding")
         .head().getSeq[Float](0).map(_.toDouble).toSeq)
-    def refined() = graft.llm.Pq.ivfPqQueryBatchRefined(spark, dir,
-        queries, 10, nprobe = 8, rerankFactor = 4)
+    def refined() = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(10), tuning = Some(8), refine = Some(4)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
     def f32Rows() = spark.read
@@ -3404,11 +3437,11 @@ class LlmSpec extends AnyFunSuite {
     def grouped(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
-    val batch = grouped(Similarity.lshRangeBatch(spark, dir, queries, 0.5,
-      maxEnumBuckets = 20))
+    val batch = grouped(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.Range(0.5), maxEnumBuckets = 20)))
     queries.foreach { case (qid, q) =>
-      val single = Similarity.lshRange(spark, dir, q, 0.5,
-          maxEnumBuckets = 20)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.Range(0.5), maxEnumBuckets = 20))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(batch.getOrElse(qid, Set.empty) == single, s"lsh qid $qid")
     }
@@ -3416,39 +3449,40 @@ class LlmSpec extends AnyFunSuite {
     // ivf: batch ≡ per-query at equal nprobe
     val ivfDir = s"$root/ivf"
     Similarity.ivfBuild(clique, "vec_id", "embedding", ivfDir)
-    val ivfBatch = grouped(Similarity.ivfRangeBatch(spark, ivfDir, queries,
-      0.5, nprobe = 4))
+    val ivfBatch = grouped(Ann.probe(Ann.Dir(spark, ivfDir),
+      Ann.Probe(Ann.Batch(queries), Ann.Range(0.5), tuning = Some(4))))
     queries.foreach { case (qid, q) =>
-      val single = Similarity.ivfRange(spark, ivfDir, q, 0.5, nprobe = 4)
+      val single = Ann.probe(Ann.Dir(spark, ivfDir),
+        Ann.Probe(Ann.One(q), Ann.Range(0.5), tuning = Some(4)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(ivfBatch.getOrElse(qid, Set.empty) == single, s"ivf qid $qid")
     }
     // ad-hoc (index-less) batch forms ≡ their per-query ad-hoc forms
-    val adhocLsh = grouped(Similarity.lshRangeAdhocBatch(clique, "vec_id",
-      "embedding", queries, 0.5))
+    val adhocLsh = grouped(Ann.probe(Ann.Adhoc(clique, "vec_id", "embedding", Ann.Build("lsh")),
+      Ann.Probe(Ann.Batch(queries), Ann.Range(0.5))))
     queries.foreach { case (qid, q) =>
-      val single = Similarity.lshRangeAdhoc(clique, "vec_id", "embedding",
-          q, 0.5)
+      val single = Ann.probe(Ann.Adhoc(clique, "vec_id", "embedding", Ann.Build("lsh")),
+        Ann.Probe(Ann.One(q), Ann.Range(0.5)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(adhocLsh.getOrElse(qid, Set.empty) == single, s"adhoc lsh qid $qid")
     }
-    val adhocIvf = grouped(Similarity.ivfRangeAdhocBatch(clique, "vec_id",
-      "embedding", queries, 0.5, nprobe = 4))
+    val adhocIvf = grouped(Ann.probe(Ann.Adhoc(clique, "vec_id", "embedding", Ann.Build("ivf")),
+      Ann.Probe(Ann.Batch(queries), Ann.Range(0.5), tuning = Some(4))))
     queries.foreach { case (qid, q) =>
-      val single = Similarity.ivfRangeAdhoc(clique, "vec_id", "embedding",
-          q, 0.5, nprobe = 4)
+      val single = Ann.probe(Ann.Adhoc(clique, "vec_id", "embedding", Ann.Build("ivf")),
+        Ann.Probe(Ann.One(q), Ann.Range(0.5), tuning = Some(4)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(adhocIvf.getOrElse(qid, Set.empty) == single, s"adhoc ivf qid $qid")
     }
     // no aggregation anywhere in the indexed batch range plan: the
     // answer is map-only after the pruned read
-    val plan = Similarity.lshRangeBatch(spark, dir, queries, 0.5)
+    val plan = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.Batch(queries), Ann.Range(0.5)))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("HashAggregate"), plan.take(2000))
     intercept[IllegalArgumentException](
-      Similarity.lshRangeBatch(spark, dir, Seq.empty, 0.5))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.Batch(Seq.empty), Ann.Range(0.5))))
     intercept[IllegalArgumentException](
-      Similarity.ivfRangeBatch(spark, ivfDir, queries, 1.5))
+      Ann.probe(Ann.Dir(spark, ivfDir), Ann.Probe(Ann.Batch(queries), Ann.Range(1.5))))
   }
 
   test("lshQueryBatch per-group pruning: an overflow query doesn't cost the others their pruned read") {
@@ -3467,8 +3501,8 @@ class LlmSpec extends AnyFunSuite {
       nBits = 16, dim = 64)
     val qSparse = (0 until 64).map(i => if (i == 7) 1.0 else 0.0)
     val queries = Seq(0L -> q0.toSeq, 1L -> qSparse)
-    val batch = Similarity.lshQueryBatch(spark, dir, queries, 5,
-      minCandidates = 12, maxEnumBuckets = 20)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5), tuning = Some(12), maxEnumBuckets = 20))
     val plan = batch.queryExecution.executedPlan.toString
     // the enumerable group keeps its partition-pruned scan even though
     // the overflow query forces a full scan for ITS group
@@ -3481,8 +3515,8 @@ class LlmSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
     queries.foreach { case (qid, q) =>
-      val single = Similarity.lshQuery(spark, dir, q, 5,
-        minCandidates = 12, maxEnumBuckets = 20)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(12), maxEnumBuckets = 20))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(grouped.getOrElse(qid, Set.empty) == single, s"query $qid diverged")
     }
@@ -3495,17 +3529,19 @@ class LlmSpec extends AnyFunSuite {
     def grouped(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
-    val ivfBatch = grouped(Similarity.ivfTopKBatch(emb, "vec_id", "embedding",
-      queries, 5, kLists = 8, nprobe = 3, trainSample = 256))
-    val lshBatch = grouped(Similarity.lshTopKBatch(emb, "vec_id", "embedding",
-      queries, 5, minCandidates = 20))
+    val ivfBatch = grouped(Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding",
+        Ann.Build("ivf", kLists = 8, trainSample = 256)),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5), tuning = Some(3))))
+    val lshBatch = grouped(Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding", Ann.Build("lsh")),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5), tuning = Some(20))))
     queries.foreach { case (qid, q) =>
-      val ivfSingle = Similarity.ivfTopK(emb, "vec_id", "embedding", q, 5,
-        kLists = 8, nprobe = 3, trainSample = 256)
+      val ivfSingle = Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding",
+          Ann.Build("ivf", kLists = 8, trainSample = 256)),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(3)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(ivfBatch(qid) == ivfSingle, s"ivf query $qid")
-      val lshSingle = Similarity.lshTopK(emb, "vec_id", "embedding", q, 5,
-        minCandidates = 20)
+      val lshSingle = Ann.probe(Ann.Adhoc(emb, "vec_id", "embedding", Ann.Build("lsh")),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(20)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(lshBatch(qid) == lshSingle, s"lsh query $qid")
     }

@@ -79,17 +79,19 @@ class PqSpec extends AnyFunSuite {
       .head().getSeq[Float](0).map(_.toDouble)
     // identical vectors co-assign (same nearest centroid) and share
     // codes, so nprobe=1 already covers the whole clique
-    val top = Pq.ivfPqQuery(spark, dir, q, 6, nprobe = 1)
+    val top = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(6), tuning = Some(1)))
       .collect().map(r => r.getLong(0) -> r.getDouble(1))
     assert(top.map(_._1).toSet == (Set(0L) ++ (1 to 5).map(_ + 100000L)))
     assert(top.map(_._2).distinct.length == 1)
     // the probe read is partition-pruned to the probed lists
-    val probe = Pq.ivfPqQuery(spark, dir, q, 6, nprobe = 1)
+    val probe = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(6), tuning = Some(1)))
     val scan = probe.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") && scan.contains("list"),
       s"probe must prune list partitions:\n$scan")
     // a wider probe still serves the clique; results identical
-    val wide = Pq.ivfPqQuery(spark, dir, q, 6, nprobe = 8)
+    val wide = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(6), tuning = Some(8)))
       .collect().map(_.getLong(0)).toSet
     assert(wide == top.map(_._1).toSet)
   }
@@ -124,7 +126,8 @@ class PqSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(ql)
     val probe =
-      try Pq.ivfPqQueryFiltered(spark, dir, q, 6, col("flag") === 0, nprobe = 1)
+      try Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(6), filter = Some(col("flag") === 0), tuning = Some(1)))
       finally spark.listenerManager.unregister(ql)
     val deadline = System.currentTimeMillis() + 10000
     import scala.jdk.CollectionConverters._
@@ -140,8 +143,8 @@ class PqSpec extends AnyFunSuite {
     assert(top.map(_._2).distinct.length == 1, "even clique ADC must tie")
     // a selective predicate widens to the full probe and still answers:
     // the only eligible rows are served even though list 0's slice is dry
-    val selective = Pq.ivfPqQueryFiltered(spark, dir, q, 3,
-      col("id") % 100 === 37L, nprobe = 1)
+    val selective = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(3), filter = Some(col("id") % 100 === 37L), tuning = Some(1)))
       .collect().map(_.getLong(0))
     assert(selective.length == 3 && selective.forall(_ % 100 == 37L))
     // reserved-name guard
@@ -264,7 +267,8 @@ class PqSpec extends AnyFunSuite {
           .head().getSeq[Double](0)
         val exact = Similarity.bruteForceTopK(clustered, "vec_id", "embedding", q, 10)
           .collect().map(_.getLong(0)).toSet
-        val got = Pq.ivfPqQuery(spark, dir, q, 10, nprobe = 8)
+        val got = Ann.probe(Ann.Dir(spark, dir),
+          Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(8)))
           .collect().map(_.getLong(0)).toSet
         (exact & got).size / 10.0
       }
@@ -320,7 +324,8 @@ class PqSpec extends AnyFunSuite {
           .head().getSeq[Float](0).map(_.toDouble)
         val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
           .collect().map(_.getLong(0)).toSet
-        val got = Pq.ivfPqQuery(spark, dir, q, 10, nprobe = 8)
+        val got = Ann.probe(Ann.Dir(spark, dir),
+          Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(8)))
           .collect().map(_.getLong(0)).toSet
         (exact & got).size / 10.0
       }
@@ -350,13 +355,16 @@ class PqSpec extends AnyFunSuite {
       "an appended identical vector must share the original's OPQ codes")
     val q0 = emb.filter($"vec_id" === 0).select("embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    val top = Pq.ivfPqQuery(spark, dirP, q0, 6, nprobe = 1)
+    val top = Ann.probe(Ann.Dir(spark, dirP),
+      Ann.Probe(Ann.One(q0), Ann.TopK(6), tuning = Some(1)))
       .collect().map(_.getLong(0)).toSet
     assert(top == (Set(0L) ++ (1 to 5).map(_ + 100000L)), s"clique: $top")
     // batch ≡ single over the opq index (tables rotate identically)
-    val batch = Pq.ivfPqQueryBatch(spark, dirP, Seq(7L -> q0), 6, nprobe = 1)
+    val batch = Ann.probe(Ann.Dir(spark, dirP),
+      Ann.Probe(Ann.Batch(Seq(7L -> q0)), Ann.TopK(6), tuning = Some(1)))
       .collect().map(r2 => (r2.getLong(1), r2.getDouble(2))).toSet
-    val single = Pq.ivfPqQuery(spark, dirP, q0, 6, nprobe = 1)
+    val single = Ann.probe(Ann.Dir(spark, dirP),
+      Ann.Probe(Ann.One(q0), Ann.TopK(6), tuning = Some(1)))
       .collect().map(r2 => (r2.getLong(0), r2.getDouble(1))).toSet
     assert(batch == single)
     // the ADC ALGEBRA IDENTITY under rotation: every probe-reported
@@ -364,9 +372,9 @@ class PqSpec extends AnyFunSuite {
     // (v̂ = c_list + Rᵀ·ẑ, no ADC tables anywhere) — this pins the
     // rotated crossTable/query-table bookkeeping, not just recall
     val (reconP, _) = decodeAll(dirOpq)
-    val probed = Pq.ivfPqQuery(spark, dirOpq,
-        emb.filter($"vec_id" === 5).select("embedding")
-          .head().getSeq[Float](0).map(_.toDouble), 20, nprobe = 8)
+    val probed = Ann.probe(Ann.Dir(spark, dirOpq),
+      Ann.Probe(Ann.One(emb.filter($"vec_id" === 5).select("embedding") .head().getSeq[Float](0).map(_.toDouble)),
+        Ann.TopK(20), tuning = Some(8)))
       .collect().map(r2 => (r2.getLong(0), r2.getDouble(1)))
     val q5 = emb.filter($"vec_id" === 5).select("embedding")
       .head().getSeq[Float](0).map(_.toDouble).toArray
@@ -400,10 +408,11 @@ class PqSpec extends AnyFunSuite {
       }
       rs.sum / rs.size
     }
-    val recAdc = recall(q => Pq.ivfPqQuery(spark, dir, q, 10, nprobe = 8)
+    val recAdc = recall(q => Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(8)))
       .collect().map(_.getLong(0)).toSet)
-    val recRef = recall(q => Pq.ivfPqQueryRefined(spark, dir, q, 10,
-        nprobe = 8, rerankFactor = 4)
+    val recRef = recall(q => Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(8), refine = Some(4)))
       .collect().map(_.getLong(0)).toSet)
     assert(recRef >= recAdc,
       s"refined recall must not regress: refined=$recRef adc=$recAdc")
@@ -412,18 +421,21 @@ class PqSpec extends AnyFunSuite {
     // cosine instead)
     val q3 = emb.filter($"vec_id" === 3).select("embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    val self = Pq.ivfPqQueryRefined(spark, dir, q3, 1, nprobe = 8)
+    val self = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q3), Ann.TopK(1), tuning = Some(8), refine = Some(4)))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(self.toSeq == Seq((3L, 1.0)), s"self-probe: ${self.toSeq}")
     // batch ≡ per-query
     val queries = (1L to 3L).map(qid => qid ->
       emb.filter($"vec_id" === qid).select("embedding")
         .head().getSeq[Float](0).map(_.toDouble).toSeq)
-    val batch = Pq.ivfPqQueryBatchRefined(spark, dir, queries, 5, nprobe = 8)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5), tuning = Some(8), refine = Some(4)))
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSet).toMap
     queries.foreach { case (qid, q) =>
-      val single = Pq.ivfPqQueryRefined(spark, dir, q, 5, nprobe = 8)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(8), refine = Some(4)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(batch.getOrElse(qid, Set.empty) == single, s"refined batch $qid")
     }
@@ -431,11 +443,11 @@ class PqSpec extends AnyFunSuite {
     val bare = s"$root/bare"
     Pq.ivfPqBuild(emb, "vec_id", "embedding", bare, kLists = 8, m = 8, k = 16)
     val e = intercept[IllegalArgumentException](
-      Pq.ivfPqQueryRefined(spark, bare, q3, 5))
+      Ann.probe(Ann.Dir(spark, bare), Ann.Probe(Ann.One(q3), Ann.TopK(5), refine = Some(4))))
     assert(e.getMessage.contains("keepVectors"))
     // param guards
     intercept[IllegalArgumentException](
-      Pq.ivfPqQueryRefined(spark, dir, q3, 5, rerankFactor = 0))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q3), Ann.TopK(5), refine = Some(0))))
   }
 
   test("filtered refined probes: exact cosines over eligible rows; widening; batch parity") {
@@ -454,15 +466,16 @@ class PqSpec extends AnyFunSuite {
     val want = Similarity.bruteForceTopK(eligible, "vec_id", "embedding",
         q0, 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val got = Pq.ivfPqQueryFilteredRefined(spark, dir, q0, 5, pred,
-        nprobe = 8, rerankFactor = 64)
+    val got = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q0), Ann.TopK(5), filter = Some(pred), tuning = Some(8),
+        refine = Some(64)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       .sortBy { case (id, c) => (-c, id) }
     assert(got == want, s"filtered refined $got != filtered brute $want")
     // an eligible self-query comes back at exactly 1.0 (true cosines,
     // not reconstructions — the refined contract under a predicate)
-    val self = Pq.ivfPqQueryFilteredRefined(spark, dir, q0, 1, pred,
-        nprobe = 8).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val self = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q0), Ann.TopK(1), filter = Some(pred), tuning = Some(8), refine = Some(4))).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(self.toSeq == Seq((4L, 1.0)), s"self-probe: ${self.toSeq}")
     // refined recall (vs the eligible brute force) must not regress the
     // plain filtered probe's at the same nprobe
@@ -478,31 +491,36 @@ class PqSpec extends AnyFunSuite {
       rs.sum / rs.size
     }
     val recPlain = recall(q =>
-      Pq.ivfPqQueryFiltered(spark, dir, q, 10, pred, nprobe = 4)
+      Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(10), filter = Some(pred), tuning = Some(4)))
         .collect().map(_.getLong(0)).toSet)
     val recRef = recall(q =>
-      Pq.ivfPqQueryFilteredRefined(spark, dir, q, 10, pred, nprobe = 4,
-          rerankFactor = 4)
+      Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(10), filter = Some(pred), tuning = Some(4),
+          refine = Some(4)))
         .collect().map(_.getLong(0)).toSet)
     assert(recRef >= recPlain,
       s"filtered refined recall must not regress: $recRef < $recPlain")
     // WIDENING: a selective predicate (one id) at nprobe=1 must widen to
     // the full probe and still find its single eligible row at 1.0
-    val gotSel = Pq.ivfPqQueryFilteredRefined(spark, dir, q0, 5,
-        col("id") === 4L, nprobe = 1)
+    val gotSel = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q0), Ann.TopK(5), filter = Some(col("id") === 4L), tuning = Some(1),
+        refine = Some(4)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(gotSel == Seq((4L, 1.0)), s"widened: $gotSel")
     // batch ≡ per-query
     val queries = (1L to 3L).map(qid => qid ->
       emb.filter($"vec_id" === qid).select("embedding")
         .head().getSeq[Float](0).map(_.toDouble).toSeq)
-    val batch = Pq.ivfPqQueryBatchFilteredRefined(spark, dir, queries, 5,
-        pred, nprobe = 4)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5), filter = Some(pred), tuning = Some(4),
+        refine = Some(4)))
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSet).toMap
     queries.foreach { case (qid, q) =>
-      val single = Pq.ivfPqQueryFilteredRefined(spark, dir, q, 5, pred,
-          nprobe = 4)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(pred), tuning = Some(4),
+          refine = Some(4)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(batch.getOrElse(qid, Set.empty) == single,
         s"filtered refined batch $qid")
@@ -512,11 +530,13 @@ class PqSpec extends AnyFunSuite {
     Pq.ivfPqBuild(flagged, "vec_id", "embedding", bare, kLists = 8, m = 8,
       k = 16, metaCols = Seq("flag"))
     assert(intercept[IllegalArgumentException](
-      Pq.ivfPqQueryFilteredRefined(spark, bare, q0, 5, pred))
+      Ann.probe(Ann.Dir(spark, bare),
+        Ann.Probe(Ann.One(q0), Ann.TopK(5), filter = Some(pred), refine = Some(4))))
       .getMessage.contains("keepVectors"))
     intercept[IllegalArgumentException](
-      Pq.ivfPqQueryBatchFilteredRefined(spark, dir,
-        Seq(1L -> q0.toSeq, 1L -> q0.toSeq), 5, pred))
+      Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.Batch(Seq(1L -> q0.toSeq, 1L -> q0.toSeq)), Ann.TopK(5),
+          filter = Some(pred), refine = Some(4))))
   }
 
   test("refined range probes: exact threshold from the sidecar; batch parity; codes-only refuses") {
@@ -533,15 +553,16 @@ class PqSpec extends AnyFunSuite {
     val t = 0.55
     val want = Similarity.bruteForceRange(emb, "vec_id", "embedding", q, t)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val got = Pq.ivfPqRangeRefined(spark, dir, q, t, nprobe = kLists,
-        slack = 2.0)
+    val got = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.Range(t), tuning = Some(kLists), refine = Some(40)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(got == want && want.nonEmpty,
       s"refined range (full net) $got != brute $want")
     // PRECISION at the default slack: every answer is a TRUE cosine
     // clearing the threshold (⊆ exact range; the unrefined probe's
     // reconstruction cosines can violate both directions)
-    val gotDef = Pq.ivfPqRangeRefined(spark, dir, q, t, nprobe = kLists)
+    val gotDef = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.Range(t), tuning = Some(kLists), refine = Some(1)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(gotDef.subsetOf(want), s"precision: ${gotDef -- want} not in exact")
     assert(gotDef.contains((7L, 1.0)), "self id at exactly 1.0")
@@ -549,12 +570,13 @@ class PqSpec extends AnyFunSuite {
     val queries = (5L to 7L).map(qid => qid ->
       emb.filter($"vec_id" === qid).select("embedding")
         .head().getSeq[Float](0).map(_.toDouble).toSeq)
-    val batch = Pq.ivfPqRangeBatchRefined(spark, dir, queries, t,
-        nprobe = 4)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.Range(t), tuning = Some(4), refine = Some(1)))
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSet).toMap
     queries.foreach { case (qid, qv) =>
-      val single = Pq.ivfPqRangeRefined(spark, dir, qv, t, nprobe = 4)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(qv), Ann.Range(t), tuning = Some(4), refine = Some(1)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(batch.getOrElse(qid, Set.empty) == single,
         s"refined range batch $qid")
@@ -563,12 +585,13 @@ class PqSpec extends AnyFunSuite {
     val bare = s"$root/bare"
     Pq.ivfPqBuild(emb, "vec_id", "embedding", bare, kLists = 8, m = 8, k = 16)
     assert(intercept[IllegalArgumentException](
-      Pq.ivfPqRangeRefined(spark, bare, q, t)).getMessage
+      Ann.probe(Ann.Dir(spark, bare),
+        Ann.Probe(Ann.One(q), Ann.Range(t), refine = Some(1)))).getMessage
       .contains("keepVectors"))
     intercept[IllegalArgumentException](
-      Pq.ivfPqRangeRefined(spark, dir, q, t, slack = -0.1))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.Range(t), refine = Some(-2))))
     intercept[IllegalArgumentException](
-      Pq.ivfPqRangeRefined(spark, dir, q, 1.5))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.Range(1.5), refine = Some(1))))
   }
 
   test("a raw-encoded index (no enc marker) still probes correctly — backward compat") {
@@ -589,7 +612,7 @@ class PqSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
     val q = emb.filter($"vec_id" === 0).select("embedding")
       .head().getSeq[Float](0).map(_.toDouble)
-    val top = Pq.ivfPqQuery(spark, dir, q, 6, nprobe = 1)
+    val top = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(6), tuning = Some(1)))
       .collect().map(_.getLong(0)).toSet
     assert(top == (Set(0L) ++ (1 to 5).map(_ + 100000L)))
   }
@@ -612,12 +635,14 @@ class PqSpec extends AnyFunSuite {
 
   test("ivfPqQueryBatch: one pruned pass, per-query ≡ single probes, chunking preserves answers") {
     val (dir, queries) = plantedDir()
-    val batch = Pq.ivfPqQueryBatch(spark, dir, queries, 6, nprobe = 2)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(6), tuning = Some(2)))
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSet).toMap
     assert(batch.keySet == queries.map(_._1).toSet)
     queries.foreach { case (qid, q) =>
-      val single = Pq.ivfPqQuery(spark, dir, q, 6, nprobe = 2)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(6), tuning = Some(2)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(batch(qid) == single, s"batch ≡ single for qid $qid")
       // each query's clique (query row + 5 identical copies) is served
@@ -625,16 +650,16 @@ class PqSpec extends AnyFunSuite {
       assert(batch(qid).map(_._1) == clique, s"clique for qid $qid: ${batch(qid)}")
     }
     // chunked plans answer identically
-    val chunked = Pq.ivfPqQueryBatch(spark, dir, queries, 6, nprobe = 2,
-        chunkSize = 1)
+    val chunked = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(6), tuning = Some(2), chunkSize = 1))
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSet).toMap
     assert(chunked == batch)
     // guards
     intercept[IllegalArgumentException](
-      Pq.ivfPqQueryBatch(spark, dir, Nil, 5))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.Batch(Nil), Ann.TopK(5))))
     intercept[IllegalArgumentException](
-      Pq.ivfPqQueryBatch(spark, dir, Seq((0L, Seq(1.0, 2.0))), 5))
+      Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.Batch(Seq((0L, Seq(1.0, 2.0)))), Ann.TopK(5))))
   }
 
   test("ivfPqQueryBatchFiltered: pred-filtered widening, per-query ≡ single filtered probes") {
@@ -649,13 +674,14 @@ class PqSpec extends AnyFunSuite {
       metaCols = Seq("flag"))
     val queries = emb.filter($"vec_id" < 2).orderBy("vec_id").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-    val batch = Pq.ivfPqQueryBatchFiltered(spark, dir, queries, 5,
-        col("flag") === 0, nprobe = 1)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.TopK(5), filter = Some(col("flag") === 0),
+        tuning = Some(1)))
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSet).toMap
     queries.foreach { case (qid, q) =>
-      val single = Pq.ivfPqQueryFiltered(spark, dir, q, 5,
-          col("flag") === 0, nprobe = 1)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), filter = Some(col("flag") === 0), tuning = Some(1)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(batch(qid) == single, s"filtered batch ≡ single for qid $qid")
       assert(batch(qid).forall(_._1 % 2 == 0), s"flag==0 violated: ${batch(qid)}")
@@ -680,7 +706,8 @@ class PqSpec extends AnyFunSuite {
         id -> math.rint(cos * 1e6) / 1e6
     }.filter { case (_, c) => !c.isNaN && c >= t }.toMap
     val t = 0.5
-    val probe = Pq.ivfPqRange(spark, dir, q, t, nprobe)
+    val probe = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.Range(t), tuning = Some(nprobe)))
     val got = probe.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val exp = expect(t)
     assert(got.keySet == exp.keySet,
@@ -698,16 +725,19 @@ class PqSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters"), plan.take(2000))
     assert(!plan.contains("Exchange"), s"range probe must be map-only:\n$plan")
     // batch ≡ per-query
-    val batch = Pq.ivfPqRangeBatch(spark, dir, queries, t, nprobe)
+    val batch = Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.Batch(queries), Ann.Range(t), tuning = Some(nprobe)))
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSet).toMap
     queries.foreach { case (qid, qv) =>
-      val single = Pq.ivfPqRange(spark, dir, qv, t, nprobe)
+      val single = Ann.probe(Ann.Dir(spark, dir),
+        Ann.Probe(Ann.One(qv), Ann.Range(t), tuning = Some(nprobe)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(batch.getOrElse(qid, Set.empty) == single, s"range batch qid $qid")
     }
     // threshold guard
-    intercept[IllegalArgumentException](Pq.ivfPqRange(spark, dir, q, -1.5))
+    intercept[IllegalArgumentException](Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.Range(-1.5))))
   }
 
   test("keepVectors sidecar: build/append stay aligned, compaction carries it, retrain re-encodes from it") {
@@ -773,7 +803,7 @@ class PqSpec extends AnyFunSuite {
     // so the cos-1.0 tie set tops the ADC ranking
     val q = Array.tabulate(64)(d =>
       if (d == 0) 10.0 else (((7 * 31 + d) % 7) - 3) * 0.1).toSeq
-    val top = Pq.ivfPqQuery(spark, dir, q, 3, nprobe = 2)
+    val top = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(3), tuning = Some(2)))
       .collect().map(_.getLong(0)).toSet
     assert(top == Set(1000L, 1007L, 1014L),
       s"retrained index must serve the drifted clique, got $top")
@@ -806,7 +836,8 @@ class PqSpec extends AnyFunSuite {
       "retrain must keep the opq encoding")
     assert(rotRows(opqDir) != rotBefore,
       "an opq retrain must re-learn the rotation, not freeze it")
-    val topOpq = Pq.ivfPqQuery(spark, opqDir, q, 3, nprobe = 2)
+    val topOpq = Ann.probe(Ann.Dir(spark, opqDir),
+      Ann.Probe(Ann.One(q), Ann.TopK(3), tuning = Some(2)))
       .collect().map(_.getLong(0)).toSet
     assert(topOpq == Set(1000L, 1007L, 1014L),
       s"retrained opq index must serve the drifted clique, got $topOpq")
@@ -848,12 +879,14 @@ class PqSpec extends AnyFunSuite {
       .head().getSeq[Float](0).map(_.toDouble)
     // codes-only refuses refined probes with the build advice
     val e = intercept[IllegalArgumentException](
-      Pq.ivfPqQueryRefined(spark, codesOnly, q, 5, nprobe = 4).collect())
+      Ann.probe(Ann.Dir(spark, codesOnly),
+        Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(4), refine = Some(4))).collect())
     assert(e.getMessage.contains("keepVectors"))
     val n = Pq.ivfPqAddSidecar(corpus, "vec_id", "embedding", codesOnly)
     assert(n == corpus.count())
     assert(Pq.hasVectorSidecar(spark, codesOnly))
-    def refined(d: String) = Pq.ivfPqQueryRefined(spark, d, q, 5, nprobe = 4)
+    def refined(d: String) = Ann.probe(Ann.Dir(spark, d),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(4), refine = Some(4)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(refined(codesOnly) == refined(kept),
       "backfilled sidecar must serve refined probes exactly as a keepVectors build")
@@ -913,6 +946,7 @@ class PqSpec extends AnyFunSuite {
     // no staging residue, no sidecar, plain probes still serve
     assert(!Pq.hasVectorSidecar(spark, dir))
     assert(!new java.io.File(s"$dir/.${Pq.vectorSidecarDir}.staging").exists())
-    assert(Pq.ivfPqQuery(spark, dir, q, 5, nprobe = 4).count() == 5)
+    assert(Ann.probe(Ann.Dir(spark, dir),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(4))).count() == 5)
   }
 }

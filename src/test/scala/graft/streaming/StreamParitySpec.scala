@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.llm.Ann
 import graft.dfl.DflFrame
 import graft.io.DataStoreIO
 import org.apache.spark.sql.functions.{col, explode, lit, sequence, unbase64}
@@ -812,8 +813,8 @@ class StreamParitySpec extends AnyFunSuite {
     assert(lshAnswers.keySet == qrows.map(_._1).toSet,
       s"answered qids: ${lshAnswers.keySet}")
     qrows.foreach { case (qid, vec) =>
-      val direct = graft.llm.Similarity.lshQuery(spark, idxDir, vec, 5,
-        minCandidates = 20)
+      val direct = Ann.probe(Ann.Dir(spark, idxDir),
+        Ann.Probe(Ann.One(vec), Ann.TopK(5), tuning = Some(20)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(lshAnswers.get(qid).contains(direct), s"lsh query $qid")
     }
@@ -823,7 +824,8 @@ class StreamParitySpec extends AnyFunSuite {
       kLists = 8, trainSample = 256)
     val ivfAnswers = serve("ivf", ivfDir, 3)
     qrows.foreach { case (qid, vec) =>
-      val direct = graft.llm.Similarity.ivfQuery(spark, ivfDir, vec, 5, nprobe = 3)
+      val direct = Ann.probe(Ann.Dir(spark, ivfDir),
+        Ann.Probe(Ann.One(vec), Ann.TopK(5), tuning = Some(3)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(ivfAnswers.get(qid).contains(direct), s"ivf query $qid")
     }
@@ -862,15 +864,16 @@ class StreamParitySpec extends AnyFunSuite {
     val topk = serve(None, None)
     assert(topk.keySet == qrows.map(_._1).toSet)
     qrows.foreach { case (qid, vec) =>
-      val direct = graft.llm.Pq.ivfPqQuery(spark, idxDir, vec, 5, nprobe = 2)
+      val direct = Ann.probe(Ann.Dir(spark, idxDir),
+        Ann.Probe(Ann.One(vec), Ann.TopK(5), tuning = Some(2)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(topk(qid) == direct, s"ivfpq serve query $qid")
     }
     // filtered: routed to the widening filtered batch probe
     val filtered = serve(None, Some("@flag == 0"))
     qrows.foreach { case (qid, vec) =>
-      val direct = graft.llm.Pq.ivfPqQueryFiltered(spark, idxDir, vec, 5,
-          col("flag") === 0, nprobe = 2)
+      val direct = Ann.probe(Ann.Dir(spark, idxDir),
+        Ann.Probe(Ann.One(vec), Ann.TopK(5), filter = Some(col("flag") === 0), tuning = Some(2)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(filtered(qid) == direct, s"ivfpq filtered serve query $qid")
       assert(filtered(qid).forall(_._1 % 2 == 0))
@@ -879,7 +882,8 @@ class StreamParitySpec extends AnyFunSuite {
     // contract), served ≡ direct ivfPqRange
     val range = serve(Some(0.5), None)
     qrows.foreach { case (qid, vec) =>
-      val direct = graft.llm.Pq.ivfPqRange(spark, idxDir, vec, 0.5, nprobe = 2)
+      val direct = Ann.probe(Ann.Dir(spark, idxDir),
+        Ann.Probe(Ann.One(vec), Ann.Range(0.5), tuning = Some(2)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(range.getOrElse(qid, Set.empty) == direct,
         s"ivfpq range serve query $qid")
@@ -907,8 +911,8 @@ class StreamParitySpec extends AnyFunSuite {
     val got = spark.read.json(s"$root/answers/batch-*").collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("id"),
         r.getAs[Double]("cos"))).toSet
-    val want = graft.llm.Pq.ivfPqQueryBatchRefined(spark, s"$root/idx",
-        qrows, 5, nprobe = 8, rerankFactor = 4)
+    val want = Ann.probe(Ann.Dir(spark, s"$root/idx"),
+      Ann.Probe(Ann.Batch(qrows), Ann.TopK(5), tuning = Some(8), refine = Some(4)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == want && got.nonEmpty,
       "refined serving must equal the direct refined batch probe")
@@ -965,8 +969,9 @@ class StreamParitySpec extends AnyFunSuite {
       answers.toSet
     }
     val gotFR = serveKv(None, Some("@flag == 0"))
-    val wantFR = graft.llm.Pq.ivfPqQueryBatchFilteredRefined(spark, kvFlag,
-        qrows, 5, col("flag") === 0, nprobe = 2, rerankFactor = 4)
+    val wantFR = Ann.probe(Ann.Dir(spark, kvFlag),
+      Ann.Probe(Ann.Batch(qrows), Ann.TopK(5), filter = Some(col("flag") === 0), tuning = Some(2),
+        refine = Some(4)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(gotFR == wantFR && gotFR.nonEmpty,
       "filtered refined serving must equal the direct filtered refined probe")
@@ -979,8 +984,8 @@ class StreamParitySpec extends AnyFunSuite {
     val gotRR = serveKv(Some(0.6), None)
     // --refine 4 loosens the nomination threshold by 0.05·4 (the factor
     // widens the net, the range counterpart of the top-k k×N budget)
-    val wantRR = graft.llm.Pq.ivfPqRangeBatchRefined(spark, kvFlag,
-        qrows, 0.6, nprobe = 2, slack = 0.2)
+    val wantRR = Ann.probe(Ann.Dir(spark, kvFlag),
+      Ann.Probe(Ann.Batch(qrows), Ann.Range(0.6), tuning = Some(2), refine = Some(4)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(gotRR == wantRR && gotRR.nonEmpty,
       "refined range serving must equal the direct refined range probe")
@@ -1107,8 +1112,8 @@ class StreamParitySpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
     // streamed answers equal the direct filtered probe, per query
     qrows.foreach { case (qid, vec) =>
-      val direct = graft.llm.Similarity.lshQueryFiltered(spark, idxDir, vec,
-        5, col("flag") === 0, minCandidates = 5)
+      val direct = Ann.probe(Ann.Dir(spark, idxDir),
+        Ann.Probe(Ann.One(vec), Ann.TopK(5), filter = Some(col("flag") === 0), tuning = Some(5)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       val got = answers.filter(_._1 == qid).map(t => (t._2, t._3)).toSet
       assert(got == direct, s"filtered serve query $qid: $got vs $direct")
@@ -1186,8 +1191,8 @@ class StreamParitySpec extends AnyFunSuite {
     assert(answers.count() > 0)
     // answers equal the direct filtered batch probe (metrics must not
     // perturb serving)
-    val direct = graft.llm.Similarity.ivfQueryBatchFiltered(spark, idxDir,
-      qrows, 5, col("flag") === 1, nprobe = 1)
+    val direct = Ann.probe(Ann.Dir(spark, idxDir),
+      Ann.Probe(Ann.Batch(qrows), Ann.TopK(5), filter = Some(col("flag") === 1), tuning = Some(1)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val got = spark.read.json(s"$root/answers/batch-*")
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("id"),
@@ -1226,7 +1231,7 @@ class StreamParitySpec extends AnyFunSuite {
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
     // answers == a direct lshRange probe per query (k played no part)
     qrows.foreach { case (qid, vec) =>
-      val direct = graft.llm.Similarity.lshRange(spark, idxDir, vec, 0.9)
+      val direct = Ann.probe(Ann.Dir(spark, idxDir), Ann.Probe(Ann.One(vec), Ann.Range(0.9)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(got.getOrElse(qid, Set.empty) == direct, s"lsh range query $qid")
     }
@@ -1249,8 +1254,8 @@ class StreamParitySpec extends AnyFunSuite {
     val ivfGot = answers.groupBy(_._1).view
       .mapValues(_.map(t => (t._2, t._3)).toSet).toMap
     qrows.foreach { case (qid, vec) =>
-      val direct = graft.llm.Similarity.ivfRange(spark, ivfDir, vec, 0.9,
-        nprobe = 4)
+      val direct = Ann.probe(Ann.Dir(spark, ivfDir),
+        Ann.Probe(Ann.One(vec), Ann.Range(0.9), tuning = Some(4)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(ivfGot.getOrElse(qid, Set.empty) == direct, s"ivf range query $qid")
     }
@@ -1273,6 +1278,59 @@ class StreamParitySpec extends AnyFunSuite {
     try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
       q.processAllAvailable())
     finally q.stop()
+  }
+
+  test("serve-ann re-resolves an index compacted twice under one served batch") {
+    // the ingest maintenance slot can compact as often as a serving
+    // attempt takes: here batch 0 serves cleanly, then two compactions
+    // land between batch 1's probe resolution and its read (one per
+    // attempt, from inside the sink, before the lazy answer executes).
+    // Each attempt dies on FileNotFound over the rewritten
+    // vectors/list=N files; the stream must re-resolve until a read
+    // sees a stable index, not give up after one retry.
+    val rnd = new scala.util.Random(7)
+    val corpus = (0L until 400L).map(id => id -> Seq.fill(16)(rnd.nextGaussian()))
+    val idxDir = Files.createTempDirectory("graft-annserve-compact").toString + "/idx"
+    graft.llm.Similarity.ivfBuild(corpus.toDF("vec_id", "embedding"), "vec_id",
+      "embedding", idxDir, kLists = 8, trainSample = 256)
+    val qdir = Files.createTempDirectory("graft-annserve-compact-q").toString
+    val qrows = corpus.take(4)
+    def writeQueries(name: String, qs: Seq[(Long, Seq[Double])]): Unit =
+      Files.writeString(java.nio.file.Paths.get(s"$qdir/$name"),
+        qs.map { case (id, v) => s"""{"qid":$id,"vec":[${v.mkString(",")}]}""" }
+          .mkString("\n"))
+    writeQueries("q0.jsonl", qrows.take(2))
+    val answers = scala.collection.mutable.Map.empty[Long, Set[(Long, Double)]]
+    var compactions = 0
+    val stream = StreamRunner.readStream(spark, qdir, "jsonl")
+    val q = StreamRunner.annServeBatches(stream, "qid", "vec", idxDir, 5,
+      method = "ivf", tuning = Some(3)) { (out, batchId) =>
+      if (batchId == 1 && compactions < 2) {
+        compactions += 1
+        graft.llm.Similarity.compactIndex(spark, idxDir, "ivf")
+      }
+      val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      answers.synchronized {
+        rows.groupBy(_._1).foreach { case (qid, rs) =>
+          answers(qid) = rs.map(r => (r._2, r._3)).toSet }
+      }
+    }
+    try {
+      q.processAllAvailable()
+      writeQueries("q1.jsonl", qrows.drop(2))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, q.exception)
+    } finally q.stop()
+    assert(compactions == 2)
+    assert(answers.keySet == qrows.map(_._1).toSet, s"answered: ${answers.keySet}")
+    // compaction rewrites files, never rows: every answer equals a
+    // direct probe of the compacted index
+    qrows.foreach { case (qid, vec) =>
+      val direct = Ann.probe(Ann.Dir(spark, idxDir),
+        Ann.Probe(Ann.One(vec), Ann.TopK(5), tuning = Some(3)))
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+      assert(answers.get(qid).contains(direct), s"query $qid")
+    }
   }
 
   test("serve-ann job: catalog-bound serving, exactly-once restart from checkpoint") {
@@ -1313,8 +1371,8 @@ class StreamParitySpec extends AnyFunSuite {
     val first = answers()
     assert(first.map(_._1).toSet == Set(0L, 1L))
     // streamed answers equal a direct probe of the same index
-    val direct = graft.llm.Similarity.lshQueryBatch(spark, idxDir,
-        qrows(Seq(0L, 1L)), 5, minCandidates = 20).collect()
+    val direct = Ann.probe(Ann.Dir(spark, idxDir),
+      Ann.Probe(Ann.Batch(qrows(Seq(0L, 1L))), Ann.TopK(5), tuning = Some(20))).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(first.toSet == direct)
     // RESTART: a new query file arrives while the job is down; the same
@@ -1540,8 +1598,8 @@ class StreamParitySpec extends AnyFunSuite {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("id").asc)
-      val sem = graft.llm.Similarity.lshQueryBatch(spark, s"$root/aidx",
-          qs.map(q => q._1 -> q._3), 2 * k, minCandidates = 100)
+      val sem = Ann.probe(Ann.Dir(spark, s"$root/aidx"),
+        Ann.Probe(Ann.Batch(qs.map(q => q._1 -> q._3)), Ann.TopK(2 * k), tuning = Some(100)))
         .withColumn("rnk",
           org.apache.spark.sql.functions.row_number().over(w).cast("long"))
         .select("qid", "id", "rnk")
@@ -1619,8 +1677,8 @@ class StreamParitySpec extends AnyFunSuite {
       .select("qid", "id", "rnk")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
-    val sem = graft.llm.Similarity.ivfQueryBatchFiltered(spark,
-        s"$root/aidx", Seq(1L -> q1), 10, pred, 8)
+    val sem = Ann.probe(Ann.Dir(spark, s"$root/aidx"),
+      Ann.Probe(Ann.Batch(Seq(1L -> q1)), Ann.TopK(10), filter = Some(pred), tuning = Some(8)))
       .withColumn("rnk",
         org.apache.spark.sql.functions.row_number().over(w).cast("long"))
       .select("qid", "id", "rnk")
@@ -1676,8 +1734,8 @@ class StreamParitySpec extends AnyFunSuite {
       .select("qid", "id", "rnk")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
-    val sem = graft.llm.Pq.ivfPqQueryBatch(spark, s"$root/aidx",
-        Seq(1L -> q1), 10)
+    val sem = Ann.probe(Ann.Dir(spark, s"$root/aidx"),
+      Ann.Probe(Ann.Batch(Seq(1L -> q1)), Ann.TopK(10)))
       .withColumn("rnk",
         org.apache.spark.sql.functions.row_number().over(w).cast("long"))
       .select("qid", "id", "rnk")
@@ -1779,8 +1837,8 @@ class StreamParitySpec extends AnyFunSuite {
       .select("qid", "id", "rnk")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
-    val sem = graft.llm.Pq.ivfPqQueryBatch(spark, s"$root/aidx",
-        Seq(1L -> q1), 10)
+    val sem = Ann.probe(Ann.Dir(spark, s"$root/aidx"),
+      Ann.Probe(Ann.Batch(Seq(1L -> q1)), Ann.TopK(10)))
       .withColumn("rnk",
         org.apache.spark.sql.functions.row_number().over(w).cast("long"))
       .select("qid", "id", "rnk")
@@ -1807,8 +1865,8 @@ class StreamParitySpec extends AnyFunSuite {
     val gotR = spark.read.json(s"$root/answersR/batch-*").collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("id"),
         r.getAs[Long]("rnk"))).toSet
-    val semR = graft.llm.Pq.ivfPqQueryBatchRefined(spark, s"$root/aidx",
-        Seq(1L -> q1), 10, rerankFactor = 4)
+    val semR = Ann.probe(Ann.Dir(spark, s"$root/aidx"),
+      Ann.Probe(Ann.Batch(Seq(1L -> q1)), Ann.TopK(10), refine = Some(4)))
       .withColumn("rnk",
         org.apache.spark.sql.functions.row_number().over(w).cast("long"))
       .select("qid", "id", "rnk")
@@ -1834,8 +1892,8 @@ class StreamParitySpec extends AnyFunSuite {
     val lexF = graft.llm.Retrieval.bm25TopKIndexedBatchFiltered(spark,
         s"$root/bidx", Seq(1L -> Seq("spark", "stream", "window")), 10, pred)
       .select("qid", "id", "rnk")
-    val semFR = graft.llm.Pq.ivfPqQueryBatchFilteredRefined(spark,
-        s"$root/aidx", Seq(1L -> q1), 10, pred, rerankFactor = 4)
+    val semFR = Ann.probe(Ann.Dir(spark, s"$root/aidx"),
+      Ann.Probe(Ann.Batch(Seq(1L -> q1)), Ann.TopK(10), filter = Some(pred), refine = Some(4)))
       .withColumn("rnk",
         org.apache.spark.sql.functions.row_number().over(w).cast("long"))
       .select("qid", "id", "rnk")
@@ -1960,7 +2018,7 @@ class StreamParitySpec extends AnyFunSuite {
     def probe(idx: String, qid: Long) = {
       val q = emb.filter($"vec_id" === qid).select($"embedding").head()
         .getSeq[Float](0).map(_.toDouble)
-      graft.llm.Similarity.lshQuery(spark, idx, q, 5, minCandidates = 20)
+      Ann.probe(Ann.Dir(spark, idx), Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(20)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
     assert(probe(s"$root/idx", 50L) == probe(fullDir, 50L))
@@ -2021,8 +2079,8 @@ class StreamParitySpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$root/idx/vectors").count() == 500L)
     val q = emb.filter($"vec_id" === 450L).select($"embedding").head()
       .getSeq[Float](0).map(_.toDouble)
-    assert(graft.llm.Similarity.lshQuery(spark, s"$root/idx", q, 5,
-      minCandidates = 20).collect().head.getLong(0) == 450L)
+    assert(Ann.probe(Ann.Dir(spark, s"$root/idx"),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(20))).collect().head.getLong(0) == 450L)
     // exactly-once holds across the rewrite: idle relaunch re-appends nothing
     graft.cli.IngestCli.run(spark, cfg)
     assert(spark.read.parquet(s"$root/idx/vectors").count() == 500L)
@@ -2069,8 +2127,8 @@ class StreamParitySpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$root/idx/vectors").count() == 400L)
     val q = emb.filter($"vec_id" === 350L).select($"embedding").head()
       .getSeq[Float](0).map(_.toDouble)
-    assert(graft.llm.Similarity.lshQuery(spark, s"$root/idx", q, 5,
-      minCandidates = 20).collect().head.getLong(0) == 350L)
+    assert(Ann.probe(Ann.Dir(spark, s"$root/idx"),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(20))).collect().head.getLong(0) == 350L)
     // an idle relaunch (EMPTY batch set) must not advance the cadence:
     // the durable counter is back at zero, so the NEXT append is 1-of-2
     graft.cli.IngestCli.run(spark, cfg)
@@ -2120,7 +2178,8 @@ class StreamParitySpec extends AnyFunSuite {
     // its list: the rank-0 probe serves the whole clique exactly
     val q = emb.filter($"vec_id" === 0L).select($"embedding").head()
       .getSeq[Float](0).map(_.toDouble)
-    val top = graft.llm.Pq.ivfPqQuery(spark, s"$root/idx", q, 11, nprobe = 1)
+    val top = Ann.probe(Ann.Dir(spark, s"$root/idx"),
+      Ann.Probe(Ann.One(q), Ann.TopK(11), tuning = Some(1)))
       .collect().map(_.getLong(0)).toSet
     assert(top == (Set(0L) ++ (1L to 10L).map(_ + 100000L)), s"clique: $top")
     // idle relaunch: committed files are not re-appended
@@ -2243,7 +2302,8 @@ class StreamParitySpec extends AnyFunSuite {
     // with a drifted-cluster query and expect drifted ids at the top
     val q = Array.tabulate(64)(d =>
       if (d == 0) 10.0 else ((13 + d) % 5 - 2) * 0.1).toSeq // i = 1
-    val top = graft.llm.Pq.ivfPqQuery(spark, s"$root/idx", q, 5, nprobe = 2)
+    val top = Ann.probe(Ann.Dir(spark, s"$root/idx"),
+      Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(2)))
       .collect().map(_.getLong(0)).toSet
     assert(top.forall(id => id >= 1000L),
       s"drifted-region query should serve drifted ids, got $top")
