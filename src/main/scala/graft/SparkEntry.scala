@@ -256,11 +256,22 @@ object SparkEntry {
     * (≈5 scheduler jobs per merge round for ≤0.1 task-seconds), so
     * overlapping them hides one loop's scheduler floor behind the
     * other's. Results are unchanged — the two computations share no
-    * state, and job submission is thread-safe. */
-  private def par2[A, B](a: => A, b: => B): (A, B) = {
+    * state, and job submission is thread-safe. Either side's failure
+    * rethrows its own exception, not a `CompletionException`; when `a`
+    * fails, `b` is still awaited first, so no job of this query keeps
+    * running detached on the shared session (its own failure rides along
+    * as a suppressed exception). */
+  private[graft] def par2[A, B](a: => A, b: => B): (A, B) = {
     val fb = java.util.concurrent.CompletableFuture.supplyAsync(() => b)
-    val ra = a
-    (ra, fb.join())
+    def joinB(): B =
+      try fb.join()
+      catch { case e: java.util.concurrent.CompletionException if e.getCause != null =>
+        throw e.getCause }
+    val ra = try a catch { case e: Throwable =>
+      try joinB() catch { case eb: Throwable => e.addSuppressed(eb) }
+      throw e
+    }
+    (ra, joinB())
   }
 
   /** Persisted tokenizer artifacts for the SERVING rows — the

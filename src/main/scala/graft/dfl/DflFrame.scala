@@ -19,8 +19,12 @@ import graft.llm.Ann
   * Scale design: consecutive row-level stages fuse into ONE Column chain —
   * a single `select` with no intermediate materialization — so a 6-stage
   * record pipeline is still one narrow codegen'd projection over the scan.
-  * Dataset stages map to native DataFrame ops, keeping Catalyst free to
-  * push filters below projections and prune parquet columns.
+  * A stage's null-drop (`c ? null : x`) does not enter that chain: its
+  * condition accumulates into a keep predicate that filters the base
+  * columns before the projection, so each kept record is built once and
+  * a dropped one never is. Dataset stages map to native DataFrame ops,
+  * keeping Catalyst free to push filters below projections and prune
+  * parquet columns.
   */
 object DflFrame {
 
@@ -53,10 +57,11 @@ object DflFrame {
 
   /** The per-record error side channel (reference: cli/process.go:167-189
     * routes records whose evaluation fails to a separate writer): input
-    * rows that the pipeline's leading row-level stages would DROP because
-    * their fused expression evaluates to null — under lenient (non-ANSI)
-    * evaluation, per-record type/shape failures surface as nulls. Scoped
-    * to the row-level prefix: dataset stages aggregate rather than drop. */
+    * rows that the pipeline's leading row-level stages would DROP — a
+    * null-drop stage's condition removes them, or their fused expression
+    * evaluates to null (under lenient, non-ANSI evaluation, per-record
+    * type/shape failures surface as nulls). Scoped to the row-level
+    * prefix: dataset stages aggregate rather than drop. */
   def droppedRows(df: DataFrame, src: String, vars: Map[String, Any] = Map.empty): DataFrame = {
     val stages = Parser.parse(src) match {
       case Pipe(ss) => ss
@@ -88,22 +93,12 @@ object DflFrame {
       // DataFrame var in a scalar position must fail the same clean way
       // on both entry points, not die in litAny
       val scalars = vars.filterNot(_._2.isInstanceOf[DataFrame])
-      var st: Option[RowState] = None
-      def ctx(): ColumnCompiler.Ctx = st match {
-        case Some(RowState(cur, lets)) => ColumnCompiler.Ctx.forValue(cur, scalars, lets)
-        case None                      => ColumnCompiler.Ctx.forDataFrame(df, scalars)
-      }
-      rowPrefix.foreach {
-        case Assign(name, value) =>
-          val c = ctx()
-          val bound = ColumnCompiler.compile(value, c)
-          st = Some(RowState(st.map(_.cur).getOrElse(c.whole()),
-            st.map(_.lets).getOrElse(Map.empty) + (name -> bound)))
-        case stage =>
-          val result = ColumnCompiler.compile(stage, ctx())
-          st = Some(RowState(result, st.map(_.lets).getOrElse(Map.empty)))
-      }
-      df.filter(st.get.cur.isNull)
+      // the same stage fold run() uses, so both entry points agree on
+      // which records a null-drop removes
+      val st = rowPrefix.foldLeft(Option.empty[RowState]) { (s, stage) =>
+        Some(rowStage(s, stage, rowCtx(df, s, scalars)))
+      }.get
+      df.filter(st.keep.fold(lit(false))(k => !k) || st.cur.isNull)
     }
   }
 
@@ -129,7 +124,56 @@ object DflFrame {
       // temporal extension stages (graft.temporal.Temporal)
       "sessionize", "cap", "asof", "topk", "rolling", "tokenize", "profile")
 
-  private final case class RowState(cur: Column, lets: Map[String, Column])
+  /** Pending row-level stages: the fused record, the `:=` bindings, and
+    * the conjunction of the null-drop keep predicates folded in so far
+    * (None keeps every record). */
+  private final case class RowState(cur: Column, lets: Map[String, Column],
+                                    keep: Option[Column] = None)
+
+  /** `@` and `$let` for the next row-level stage: the pending record, or
+    * the DataFrame's own columns when no row stage is pending. */
+  private def rowCtx(df: DataFrame, st: Option[RowState],
+                     vars: Map[String, Any]): ColumnCompiler.Ctx = st match {
+    case Some(s) => ColumnCompiler.Ctx.forValue(s.cur, vars, s.lets)
+    case None    => ColumnCompiler.Ctx.forDataFrame(df, vars)
+  }
+
+  /** Fold one row-level stage into the pending state — shared by [[run]]
+    * and [[droppedRows]].
+    *
+    * A stage `c ? null : x` or `c ? x : null` (however deeply the branch
+    * nests the same form, as geonames' `a ? null : (b ? @ : null)` does)
+    * is the reference's per-record drop (cli/process.go:184-189). Its
+    * condition joins the keep predicate, as `NOT coalesce(c, false)` or
+    * `coalesce(c, false)` so a null condition takes the else branch
+    * exactly as when() does, and the chain continues with `x` itself.
+    * The fused record then carries no `CASE WHEN … THEN null`, which
+    * Catalyst would inline — record and all — into every pushed-down
+    * reference, and a dropped record stays dropped when a later stage
+    * stops reading `@`. A ternary nested inside an expression keeps
+    * when/otherwise. */
+  private def rowStage(st: Option[RowState], stage: Node,
+                       ctx: ColumnCompiler.Ctx): RowState = {
+    val lets = st.map(_.lets).getOrElse(Map.empty[String, Column])
+    val keep0 = st.flatMap(_.keep)
+    stage match {
+      case Assign(name, value) =>
+        RowState(st.map(_.cur).getOrElse(ctx.whole()),
+          lets + (name -> ColumnCompiler.compile(value, ctx)), keep0)
+      case _ =>
+        def cond(c: Node): Column = coalesce(ColumnCompiler.compile(c, ctx), lit(false))
+        def peel(n: Node, keep: Option[Column]): (Node, Option[Column]) = {
+          def and(k: Column) = Some(keep.fold(k)(_ && k))
+          n match {
+            case Ternary(c, NullLit, x) => peel(x, and(!cond(c)))
+            case Ternary(c, x, NullLit) => peel(x, and(cond(c)))
+            case other                  => (other, keep)
+          }
+        }
+        val (body, keep) = peel(stage, keep0)
+        RowState(ColumnCompiler.compile(body, ctx), lets, keep)
+    }
+  }
 
   private def run(df0: DataFrame, stages: List[Node],
                   vars: Map[String, Any]): (DataFrame, Map[String, DataFrame]) = {
@@ -175,11 +219,6 @@ object DflFrame {
         case other => throw new DflParseException(
           s"dataset '-' needs a set/var on the right, got ${Node.render(other)}")
       }
-    }
-
-    def rowCtx(): ColumnCompiler.Ctx = row match {
-      case Some(RowState(cur, lets)) => ColumnCompiler.Ctx.forValue(cur, scalarVars, lets)
-      case None                      => ColumnCompiler.Ctx.forDataFrame(df, scalarVars)
     }
 
     /** Is `n` a dataset-producing expression (for `:=` / ternary / elvis
@@ -252,19 +291,20 @@ object DflFrame {
         s"not a dataset expression: ${Node.render(other)}")
     }
 
-    /** Materialize pending row-level stages: one narrow projection plus the
-      * dfl.Null drop filter (reference: cli/process.go:184-189 — a null
-      * result removes the record). */
+    /** Materialize pending row-level stages: the keep predicate as a
+      * filter over the base columns, then one narrow projection
+      * (reference: cli/process.go:184-189 — a null result removes the
+      * record). The `__r` null check only matters for a record Catalyst
+      * cannot prove non-null; over a `named_struct` it optimizes away. */
     def flush(): Unit = row.foreach { st =>
-      df = df.select(st.cur.as("__r")).filter(col("__r").isNotNull)
+      df = st.keep.fold(df)(df.filter).select(st.cur.as("__r"))
+        .filter(col("__r").isNotNull)
       df = df.schema.fields.head.dataType match {
         case _: StructType => df.select(col("__r.*"))
         case _             => df.select(col("__r").as("value"))
       }
       row = None
     }
-
-    def lets: Map[String, Column] = row.map(_.lets).getOrElse(Map.empty)
 
     // size proxy: the rendered SQL length (Spark 4 Columns are lazy
     // ColumnNode trees — walking catalyst children pre-resolution sees
@@ -278,13 +318,14 @@ object DflFrame {
       * times and the generated code can pass the JVM's 64 KB method limit,
       * dropping the stage out of codegen. CollapseProject will not merge
       * it back: the materialized expression is non-cheap and
-      * multiply-referenced. No null filter here — only the final flush
-      * applies the reference's null-drop. */
+      * multiply-referenced. The pending keep predicate filters first, as
+      * in [[flush]], so the projection builds only kept records; a null
+      * record is left for the final flush. */
     def compactIfLarge(): Unit = row.foreach { st =>
       val total = exprSize(st.cur) + st.lets.values.map(exprSize).sum
       if (total > 1000) {
         val letCols = st.lets.toSeq
-        df = df.select(st.cur.as("__r") +:
+        df = st.keep.fold(df)(df.filter).select(st.cur.as("__r") +:
           letCols.map { case (n, c) => c.as(s"__let_$n") }: _*)
         row = Some(RowState(col("__r"),
           letCols.map { case (n, _) => n -> col(s"__let_$n") }.toMap))
@@ -357,17 +398,11 @@ object DflFrame {
         flush()
         df = evalDatasetExpr(t)
 
-      case Assign(name, value) =>
-        compactIfLarge() // materialize first: the let then binds to a cheap attr
-        val ctx = rowCtx()
-        val bound = ColumnCompiler.compile(value, ctx)
-        row = Some(RowState(row.map(_.cur).getOrElse(ctx.whole()), lets + (name -> bound)))
-
       case stage =>
-        compactIfLarge() // materialize first: the stage references cheap attrs
-        val ctx = rowCtx()
-        val result = ColumnCompiler.compile(stage, ctx)
-        row = Some(RowState(result, lets))
+        // a row-level stage or `:=`: materialize first, so it references
+        // cheap attributes
+        compactIfLarge()
+        row = Some(rowStage(row, stage, rowCtx(df, row, scalarVars)))
     }
     flush()
     (df, dsVars)

@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Dynamic-partition sink: the output path is a FUNCTION OF THE RECORD.
   *
@@ -46,61 +47,70 @@ object DynamicSink {
     * renamed to the exact computed paths. Each computed path becomes a
     * DIRECTORY of part files (the scale-correct shape — a computed path
     * receiving 1 TB must not be a single file); `mergeShards=true`
-    * additionally concatenates parts into the exact file path for CLI
-    * parity at small scale. */
+    * additionally concatenates parts, in part-name order, into the exact
+    * file path for CLI parity at small scale.
+    *
+    * Every call stages in its own fresh directory under `outDir`, so
+    * concurrent writes to one root never share (and delete) each other's
+    * staging. A root the caller cannot write to — `ProcessCli` resolves
+    * absolute computed paths against `/` — stages under the JVM temp dir
+    * instead; merged shards are copied, so that crosses file systems. */
   def writeByComputedPath(df: DataFrame, pathCol: Column, outDir: String,
                           format: String = "jsonl",
                           mergeShards: Boolean = false,
                           compression: String = ""): Seq[String] = {
-    val tmp = outDir.stripSuffix("/") + "/__staging"
-    val w0 = df.withColumn("__path", pathCol).write
-      .mode("overwrite").partitionBy("__path")
-    // concatenated gzip members are a valid gzip stream, so merged shards
-    // stay decompressible
-    val w = if (compression.nonEmpty) w0.option("compression", compression) else w0
-    format match {
-      case "jsonl"   => w.json(tmp)
-      case "csv"     => w.option("header", true).csv(tmp)
-      case "parquet" => w.parquet(tmp)
-      case other     => throw new UnsupportedOperationException(s"dynamic sink format: $other")
-    }
-
-    // metadata-only: move each __path=<escaped> dir to its real path
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val staging = Paths.get(tmp)
-    val written = scala.collection.mutable.ListBuffer.empty[String]
-    val stream = Files.list(staging)
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    val root = Paths.get(outDir)
+    if (Files.notExists(root)) Files.createDirectories(root)
+    val staging =
+      if (Files.isWritable(root)) Files.createTempDirectory(root, "__staging-")
+      else Files.createTempDirectory("graft-sink-")
     try {
-      stream.iterator().forEachRemaining { p =>
+      val tmp = staging.toString
+      val w0 = df.withColumn("__path", pathCol).write
+        .mode("overwrite").partitionBy("__path")
+      // concatenated gzip members are a valid gzip stream, so merged shards
+      // stay decompressible
+      val w = if (compression.nonEmpty) w0.option("compression", compression) else w0
+      format match {
+        case "jsonl"   => w.json(tmp)
+        case "csv"     => w.option("header", true).csv(tmp)
+        case "parquet" => w.parquet(tmp)
+        case other     => throw new UnsupportedOperationException(s"dynamic sink format: $other")
+      }
+
+      // directory listings come back in no specified order: sort, so a
+      // merged file's record order is the same on every run
+      def list(dir: Path): Seq[Path] = {
+        val s = Files.list(dir)
+        try s.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+        finally s.close()
+      }
+      // metadata-only: move each __path=<escaped> dir to its real path
+      list(staging).flatMap { p =>
         val name = p.getFileName.toString
-        if (name.startsWith("__path=")) {
+        if (!name.startsWith("__path=")) None
+        else {
           val rel = java.net.URLDecoder.decode(name.stripPrefix("__path="), "UTF-8")
-          val target = Paths.get(outDir).resolve(rel)
+          val target = root.resolve(rel)
           Files.createDirectories(target.getParent)
           if (mergeShards) {
-            val parts = Files.list(p)
-            try {
-              val partFiles = parts.iterator()
-              val out = Files.newOutputStream(target)
-              try {
-                partFiles.forEachRemaining { f =>
-                  val fn = f.getFileName.toString
-                  if (fn.startsWith("part-")) Files.copy(f, out)
-                }
-              } finally out.close()
-            } finally parts.close()
+            val out = Files.newOutputStream(target)
+            try list(p).filter(_.getFileName.toString.startsWith("part-"))
+              .foreach(Files.copy(_, out))
+            finally out.close()
           } else {
             Files.move(p, target, StandardCopyOption.REPLACE_EXISTING)
           }
-          written += rel
+          Some(rel)
         }
-      }
-    } finally stream.close()
-    // drop staging leftovers (merge mode leaves the original dirs behind)
-    // Spark leaves _SUCCESS (+ .crc) markers at the staging root, so the
-    // directory is never empty — always delete recursively
-    deleteRecursively(staging.toFile)
-    written.toList.sorted
+      }.sorted
+    } finally {
+      // drop staging leftovers (merge mode leaves the original dirs
+      // behind, and Spark leaves _SUCCESS (+ .crc) markers at the
+      // staging root) — always delete recursively, on failure too
+      deleteRecursively(staging.toFile)
+    }
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

@@ -68,7 +68,9 @@ object Plans {
   * interval-join family, whose dim-sized build side can't be proven
   * small from plan structure — and even those must carry a join
   * CONDITION (a named query degrading to a pure cross product still
-  * fails). Plans only — nothing executes except the eager index builds
+  * fails). A Filter whose condition builds a record fails as well (a
+  * null-drop pushed down over the record it drops). Plans only —
+  * nothing executes except the eager index builds
   * some ANN query constructors run. Exit 1 on any violation: the
   * CI-able guard that a new query can't quietly reintroduce an
   * all-pairs plan. */
@@ -170,11 +172,15 @@ object PlanLint {
   /** Lint ONE query's physical plan. Returns violation strings (empty =
     * clean). `interval = true` marks the named broadcast interval-join
     * queries: their BNLJs may carry a dim-sized build side but MUST
-    * have a join condition. */
+    * have a join condition. A Filter whose condition builds a record
+    * (`CreateNamedStruct`) fails too: it is the plan a row null-drop
+    * leaves when Catalyst pushes it down over the record it drops. */
   private[tools] def lintPlan(plan: SparkPlan,
                               interval: Boolean): Seq[String] = {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.catalyst.expressions.CreateNamedStruct
     val out = scala.collection.mutable.ListBuffer.empty[String]
     def walk(node: SparkPlan): Unit = {
       node match {
@@ -202,6 +208,8 @@ object PlanLint {
           } else if (!atMostOneRow(build) && !existenceProbe)
             out += "BNLJ build side not provably <=1 row " +
               s"(${build.getClass.getSimpleName})"
+        case f: FilterExec if f.condition.exists(_.isInstanceOf[CreateNamedStruct]) =>
+          out += "filter condition builds a record (CreateNamedStruct)"
         case _ =>
       }
       node.children.foreach(walk)

@@ -58,25 +58,27 @@ class CompilerSpec extends AnyFunSuite {
     assert(kept.select("k").as[String].collect().toSeq == Seq("a", "c"))
   }
 
+  private def geonamesRows = Seq(
+    ("1", "Spot A", "-77.0", "38.9"),
+    ("2", "Spot B", "", "38.9"),       // len 0 → dropped
+    ("3", "Spot C", "-200.0", "38.9"), // out of bbox → dropped
+  ).toDF("geonameid", "name", "longitude", "latitude")
+
+  private val geonamesSrc =
+    """((@longitude == null) or (len(@longitude) == 0)) ? null :
+      |{
+      |  type: "Feature",
+      |  id: int64(@geonameid),
+      |  properties: (@ + {id: int64(@geonameid)}) - {longitude, latitude},
+      |  geometry: {type: "Point", coordinates: [float64(@longitude), float64(@latitude)]}
+      |} |
+      |($c := @geometry?.coordinates) |
+      |(@properties += {_tile_z: $z, _tile_x: tileX($c[0], $z), _tile_y: tileY($c[1], $z)}) |
+      |(not (($c[0] between -180.0 and 180.0) and ($c[1] between -85.0 and 85.0))) ? null : @
+      |""".stripMargin
+
   test("geonames-style transform: dict build, tile stamp, bbox drop") {
-    val df = Seq(
-      ("1", "Spot A", "-77.0", "38.9"),
-      ("2", "Spot B", "", "38.9"),       // len 0 → dropped
-      ("3", "Spot C", "-200.0", "38.9"), // out of bbox → dropped
-    ).toDF("geonameid", "name", "longitude", "latitude")
-    val src =
-      """((@longitude == null) or (len(@longitude) == 0)) ? null :
-        |{
-        |  type: "Feature",
-        |  id: int64(@geonameid),
-        |  properties: (@ + {id: int64(@geonameid)}) - {longitude, latitude},
-        |  geometry: {type: "Point", coordinates: [float64(@longitude), float64(@latitude)]}
-        |} |
-        |($c := @geometry?.coordinates) |
-        |(@properties += {_tile_z: $z, _tile_x: tileX($c[0], $z), _tile_y: tileY($c[1], $z)}) |
-        |(not (($c[0] between -180.0 and 180.0) and ($c[1] between -85.0 and 85.0))) ? null : @
-        |""".stripMargin
-    val out = DflFrame.pipeline(df, src, vars = Map("z" -> 10L))
+    val out = DflFrame.pipeline(geonamesRows, geonamesSrc, vars = Map("z" -> 10L))
     val rows = out.collect()
     assert(rows.length == 1)
     val r = rows.head
@@ -86,6 +88,59 @@ class CompilerSpec extends AnyFunSuite {
     assert(!props.schema.fieldNames.contains("longitude"))
     assert(props.getAs[Long]("_tile_x") == graft.geo.TileMath.lonToTile(-77.0, 10))
     assert(props.getAs[Long]("_tile_y") == graft.geo.TileMath.latToTile(38.9, 10))
+  }
+
+  test("geonames null-drops plan as filters over the base columns, never over a record") {
+    // written to parquet so the optimizer keeps the plan (a local
+    // relation would be folded to its result)
+    val dir = java.nio.file.Files.createTempDirectory("graft-geonames-").toString
+    geonamesRows.write.mode("overwrite").parquet(dir)
+    val out = DflFrame.pipeline(spark.read.parquet(dir), geonamesSrc, vars = Map("z" -> 10L))
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, CreateNamedStruct}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val filters = out.queryExecution.optimizedPlan.collect { case f: Filter => f.condition }
+    assert(filters.nonEmpty)
+    filters.foreach { c =>
+      assert(!c.exists(e => e.isInstanceOf[CaseWhen] || e.isInstanceOf[CreateNamedStruct]),
+        s"a null-drop filter rebuilds the record: $c")
+    }
+    assert(out.count() == 1)
+  }
+
+  test("a dropped record stays dropped when a later stage stops reading @") {
+    val df = Seq(1L, 2L, 3L).toDF("v")
+    val constant = "((@v > 1) ? null : @) | {b: 1}"
+    assert(DflFrame.pipeline(df, constant).toJSON.collect().toSeq == Seq("""{"b":1}"""))
+    val reads = "((@v > 1) ? null : @) | {b: @v}"
+    assert(DflFrame.pipeline(df, reads).toJSON.collect().toSeq == Seq("""{"b":1}"""))
+    // the error side channel agrees: both pipelines drop v = 2 and 3
+    Seq(constant, reads).foreach { src =>
+      assert(DflFrame.droppedRows(df, src).as[Long].collect().sorted.toSeq == Seq(2L, 3L), src)
+    }
+  }
+
+  test("droppedRows + kept rows = input for a mid-chain drop") {
+    val df = Seq(("a", 1L), ("b", 2L), ("c", 3L), ("d", 4L)).toDF("k", "v")
+    val src = "{k: @k, w: @v * 2} | ((@w > 4) ? null : @) | {k: @k, w: @w + 1}"
+    val kept = DflFrame.pipeline(df, src)
+    val dropped = DflFrame.droppedRows(df, src)
+    assert(kept.select("k").as[String].collect().sorted.toSeq == Seq("a", "b"))
+    assert(kept.select("w").as[Long].collect().sorted.toSeq == Seq(3L, 5L))
+    assert(dropped.select("k").as[String].collect().sorted.toSeq == Seq("c", "d"))
+    assert(kept.count() + dropped.count() == df.count())
+  }
+
+  test("a null drop condition takes the else branch, as when() does") {
+    val df = Seq(Some(1L), None, Some(3L)).toDF("v")
+    // `c ? null : x` keeps the record whose condition is null …
+    val keptNull = DflFrame.pipeline(df, "((@v > 1) ? null : @) | {b: @v}")
+    assert(keptNull.count() == 2)
+    assert(keptNull.filter("b is null").count() == 1)
+    assert(DflFrame.droppedRows(df, "(@v > 1) ? null : @").count() == 1)
+    // … and `c ? x : null` drops it
+    val dropNull = DflFrame.pipeline(df, "(@v > 1) ? @ : null")
+    assert(dropNull.as[Long].collect().toSeq == Seq(3L))
+    assert(DflFrame.droppedRows(df, "(@v > 1) ? @ : null").count() == 2)
   }
 
   test("bbox filter with $bbox variable (named GeometryFilter)") {

@@ -254,6 +254,43 @@ class IoSpec extends AnyFunSuite {
     assert(back.select("v").as[String].collect().toSet == Set("x", "y", "z"))
   }
 
+  test("dynamic sink: concurrent writes to one root each stage apart and complete") {
+    val dir = tmpDir()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def write(prefix: String) = Future {
+      val df = spark.range(0, 2000, 1, 4).select(col("id"), (col("id") % 4).as("k"))
+      DynamicSink.writeByComputedPath(df,
+        concat(lit(s"$prefix/"), col("k"), lit(".jsonl")), dir, "jsonl", mergeShards = true)
+    }
+    val written = Await.result(Future.sequence(Seq(write("a"), write("b"))), 2.minutes)
+    assert(written.map(_.toSet) == Seq(
+      (0 to 3).map(k => s"a/$k.jsonl").toSet, (0 to 3).map(k => s"b/$k.jsonl").toSet))
+    Seq("a", "b").foreach { p =>
+      val back = spark.read.json(s"$dir/$p/*.jsonl")
+      assert(back.count() == 2000, p)
+      assert(back.select("id").distinct().count() == 2000, p)
+    }
+    // both staging dirs are gone: only the two outputs remain
+    assert(new java.io.File(dir).list().toSet == Set("a", "b"))
+  }
+
+  test("dynamic sink: merged shards concatenate in part order, the same on every run") {
+    val dir = tmpDir()
+    // 3 partitions of 3 rows each, all routed to one computed path
+    val df = spark.range(0, 9, 1, 3).toDF("id")
+    def merged(): Seq[String] = {
+      DynamicSink.writeByComputedPath(df, lit("all.jsonl"), dir, "jsonl", mergeShards = true)
+      Files.readAllLines(java.nio.file.Paths.get(dir, "all.jsonl")).toArray.toSeq.map(_.toString)
+    }
+    val first = merged()
+    val ids = first.map(_.replaceAll("\\D", "").toLong)
+    // part-00000 first, then part-00001, then part-00002
+    assert(ids.grouped(3).map(_.toSet).toSeq == Seq(Set(0L, 1L, 2L), Set(3L, 4L, 5L), Set(6L, 7L, 8L)))
+    assert((1 to 3).forall(_ => merged() == first))
+  }
+
   test("tile-sharded write prunes partitions on tile predicates") {
     val dir = tmpDir()
     val df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")

@@ -72,6 +72,25 @@ class PlanLintSpec extends AnyFunSuite {
     assert(lint(bad).nonEmpty)
   }
 
+  test("a filter that builds a record fails; the DFL null-drop lints clean") {
+    val base = spark.range(10).select($"id".as("v"))
+    // the plan null-drops compiled into the record leave: a nullable
+    // record, a field update over it, a second drop, then the final
+    // `__r IS NOT NULL` — Catalyst pushes that check down, and the
+    // update's record construction lands in the filter condition
+    val rec = when($"v" > 5, lit(null)).otherwise(struct($"v", ($"v" * 2).as("w")))
+    val updated = rec.withField("u", rec.getField("w") + 1)
+    val dropped = when(updated.getField("u") > 8, lit(null)).otherwise(updated)
+    val bad = base.select(dropped.as("__r")).filter($"__r".isNotNull).select("__r.*")
+    val v = lint(bad)
+    assert(v.exists(_.contains("builds a record")), s"got $v")
+    // the same pipeline in DFL lowers both drops to a keep predicate
+    val good = graft.dfl.DflFrame.pipeline(base,
+      "((@v > 5) ? null : {v: @v, w: @v * 2}) | (@ + {u: @w + 1}) | ((@u > 8) ? null : @)")
+    assert(lint(good).isEmpty, s"got ${lint(good)}")
+    assert(good.count() == 4)
+  }
+
   test("cartesian products always fail") {
     val l = Seq(1, 2, 3).toDF("a")
     val r = Seq(4, 5).toDF("b")
