@@ -1477,7 +1477,7 @@ object SparkEntry {
     "ann_ivfpq_append" -> ((s, dir) => {
       // the IVFPQ append lifecycle under the clique contract: build over
       // the corpus PREFIX (codebooks + centroids trained there, vec 0 —
-      // the query's original — included), ivfPqAppend the remainder with
+      // the query's original — included), append the remainder with
       // FROZEN codebooks/centroids. Every appended clique row is a
       // bit-identical copy of the query vector, so it encodes to row 0's
       // exact codes and assigns to row 0's list — the rank-0 probe list
@@ -1487,7 +1487,7 @@ object SparkEntry {
       val idxDir = appendLifecycleIndex(dir, "ivfpq-append", corpus)(
         (prefix, d) => llm.Pq.ivfPqBuild(prefix, "vec_id", "embedding", d,
           kLists = 8, m = 8, k = 16),
-        (rest, d) => llm.Pq.ivfPqAppend(rest, "vec_id", "embedding", d))
+        (rest, d) => Ann.append(rest, "vec_id", "embedding", d))
       val top = Ann.probe(Ann.Dir(s, idxDir),
         Ann.Probe(Ann.One(q), Ann.TopK(11), tuning = Some(1)))
         .collect().map(_.getLong(0)).toSet
@@ -2148,8 +2148,8 @@ object SparkEntry {
     }),
     "ann_lsh_append" -> ((s, dir) => {
       // the APPEND lifecycle under the hard oracle: build the LSH index
-      // over a corpus PREFIX, lshAppend the remainder (planted clique
-      // included), probe. lshAppend is EXACT by construction — fixed
+      // over a corpus PREFIX, append the remainder (planted clique
+      // included), probe. An lsh append is EXACT by construction — fixed
       // seeded hyperplanes, vector multiset equals a full rebuild — so
       // the probe provably returns the same answer as ann_lsh_topk's
       // full-corpus build, and annPlantedTopkSql (brute force over the
@@ -2160,12 +2160,12 @@ object SparkEntry {
       val idxDir = appendLifecycleIndex(dir, "ann-append", corpus)(
         (prefix, d) => llm.Similarity.lshBuild(prefix, "vec_id", "embedding",
           d, nBits = 8, dim = 64, partitionBits = 4),
-        (rest, d) => llm.Similarity.lshAppend(rest, "vec_id", "embedding", d))
+        (rest, d) => Ann.append(rest, "vec_id", "embedding", d))
       Ann.probe(Ann.Dir(s, idxDir), Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(20)))
     }),
     "ann_ivf_append" -> ((s, dir) => {
       // the IVF append lifecycle under the hard oracle. Unlike LSH,
-      // ivfAppend is APPROXIMATE in general (frozen centroids), but the
+      // an ivf append is APPROXIMATE in general (frozen centroids), but the
       // planted construction makes the answer exact anyway: every
       // appended clique row is a bit-identical copy of the query vector,
       // so ivfAssign puts it in the list of the query's own nearest
@@ -2177,7 +2177,7 @@ object SparkEntry {
       val idxDir = appendLifecycleIndex(dir, "ann-ivf-append", corpus)(
         (prefix, d) => { llm.Similarity.ivfBuild(prefix, "vec_id",
           "embedding", d); () },
-        (rest, d) => llm.Similarity.ivfAppend(rest, "vec_id", "embedding", d))
+        (rest, d) => Ann.append(rest, "vec_id", "embedding", d))
       Ann.probe(Ann.Dir(s, idxDir), Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(8)))
     }),
     "dedup_cosine_bucketed" -> ((s, dir) => {
@@ -4807,7 +4807,7 @@ object SparkEntry {
     // over the same planted construction — same oracle
     "dfl_ann_range" -> annPlantedRangeSql,
     // build-on-prefix + append-the-rest probes the SAME grown corpus the
-    // full build would (lshAppend ≡ rebuild by construction), so the
+    // full build would (an lsh append ≡ rebuild by construction), so the
     // full-corpus brute force is its oracle too
     "ann_lsh_append" -> annPlantedTopkSql,
     // the IVF append's planted copies land in the query's own first-probed

@@ -160,13 +160,13 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
         else table): Any)
     }
 
-  private val indexKinds = Set("lsh", "ivf", "ivfpq", "bm25")
+  private val indexKinds = (graft.llm.Ann.methods :+ "bm25").toSet
 
   /** Resolve `index:REF` (and kind-pinned `index:KIND:REF`) string vars
     * to a REGISTERED, ALREADY-BUILT index dir — the tokenizerRefVars
     * pattern for the retrieval indexes: a catalog service/job/HTTP exec
     * probing ANN or BM25 (the DFL `annProbe`/`bm25Probe` stages) targets
-    * a persistent index built by ingest-ann/ingest-bm25/ensureIndex
+    * a persistent index built by ingest-ann/ingest-bm25/Ann.ensure
     * instead of paying the fingerprint-cache build on first exec. REF is
     * a catalog datastore name (its resolved uri) or a literal dir. The
     * var binds to the VALIDATED dir string: resolution fails LOUDLY when

@@ -23,7 +23,7 @@ import graft.util.Sessions
   *     --checkpoint DIR [--once] [--compact-every N] [--retrain-skew F]
   *     [--keep-vectors]  (ivfpq: persist the float sidecar retrain needs)
   *     [--build-opq]     (ivfpq: learn the OPQ rotation at build time)
-  *     [--build-from PARQUET_URI [--build-nbits N] [--build-dim N]
+  *     [--build-from PARQUET_URI [--build-nbits N]
   *      [--build-klists N] [--build-pbits N] [--build-pbands N]
   *      [--build-pq-m N] [--build-pq-k N]]  (pq knobs: ivfpq only)
   *
@@ -63,7 +63,7 @@ object IngestCli {
       checkpoint: String = "", once: Boolean = false, compactEvery: Int = 0,
       retrainSkew: Double = 0.0, keepVectors: Boolean = false,
       buildOpq: Boolean = false,
-      buildFrom: String = "", buildNBits: Int = 16, buildDim: Int = 64,
+      buildFrom: String = "", buildNBits: Int = 16,
       buildKLists: Int = 16, buildPBits: Int = 8, buildPBands: Int = 64,
       buildPqM: Int = 8, buildPqK: Int = 64,
       buildMeta: Seq[String] = Nil,
@@ -89,7 +89,6 @@ object IngestCli {
         case "--build-opq"   => c = c.copy(buildOpq = true)
         case "--build-from"    => c = c.copy(buildFrom = a.value())
         case "--build-nbits"   => c = c.copy(buildNBits = a.value().toInt)
-        case "--build-dim"     => c = c.copy(buildDim = a.value().toInt)
         case "--build-klists"  => c = c.copy(buildKLists = a.value().toInt)
         case "--build-pbits"   => c = c.copy(buildPBits = a.value().toInt)
         case "--build-pbands"  => c = c.copy(buildPBands = a.value().toInt)
@@ -142,12 +141,11 @@ object IngestCli {
         compactEvery = c.compactEvery)
     } else {
       if (c.buildFrom.nonEmpty)
-        graft.llm.Similarity.ensureIndex(spark, c.indexDir, c.method,
-          c.buildFrom, c.idCol, c.vecCol, nBits = c.buildNBits,
-          dim = c.buildDim, partitionBits = c.buildPBits,
-          kLists = c.buildKLists, metaCols = c.buildMeta,
-          pqM = c.buildPqM, pqK = c.buildPqK, keepVectors = c.keepVectors,
-          opq = c.buildOpq)
+        graft.llm.Ann.ensure(spark, c.indexDir, c.buildFrom, c.idCol,
+          c.vecCol, graft.llm.Ann.Build(c.method, c.buildKLists,
+            nBits = c.buildNBits, partitionBits = c.buildPBits,
+            metaCols = c.buildMeta, pqM = c.buildPqM, pqK = c.buildPqK,
+            keepVectors = c.keepVectors, opq = c.buildOpq))
       StreamRunner.annIngestJob(spark, c.corpusUri, c.corpusFormat,
         c.idCol, c.vecCol, c.indexDir, c.method, c.checkpoint, c.once,
         compactEvery = c.compactEvery, retrainSkewFactor = c.retrainSkew)

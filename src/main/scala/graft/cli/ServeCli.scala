@@ -41,7 +41,7 @@ import graft.util.Sessions
   *      | --catalog FILE --queries-datastore NAME --output-datastore NAME)
   *     --checkpoint DIR [--once]
   *     [--build-from PARQUET_URI [--build-id-col C] [--build-vec-col C]
-  *      [--build-meta c1,c2] [--build-nbits N] [--build-dim N]
+  *      [--build-meta c1,c2] [--build-nbits N]
   *      [--build-klists N] [--build-pbits N]
   *      [--build-pq-m N] [--build-pq-k N]  (pq knobs: ivfpq only)
   *      [--keep-vectors]  (ivfpq: persist the vectors_f32 float sidecar
@@ -49,8 +49,12 @@ import graft.util.Sessions
   *      [--build-opq]]    (ivfpq: learn the OPQ rotation at build time)
   *
   * `--build-from` bootstraps the index from a parquet corpus when none
-  * exists at `--index-dir` yet (an existing index is served as-is) — one
-  * relaunch-safe command from corpus to answers on a fresh host.
+  * exists at `--index-dir` yet (an existing index is served as-is; one
+  * built as another family than `--method` fails, naming both) — one
+  * relaunch-safe command from corpus to answers on a fresh host. An lsh
+  * build takes its dim from the corpus. The probe reads the family from
+  * the index layout; `--method` chooses what to build and is checked
+  * against a built layout.
   *
   * `--once` drains the currently-available query files and exits (the
   * cron shape); without it the job serves until killed. Either way the
@@ -72,8 +76,7 @@ object ServeCli {
       outputDatastore: String = "",
       buildFrom: String = "", buildIdCol: String = "vec_id",
       buildVecCol: String = "embedding", buildMeta: Seq[String] = Nil,
-      buildNBits: Int = 16,
-      buildDim: Int = 64, buildKLists: Int = 16, buildPBits: Int = 8,
+      buildNBits: Int = 16, buildKLists: Int = 16, buildPBits: Int = 8,
       buildPqM: Int = 8, buildPqK: Int = 64, keepVectors: Boolean = false,
       refine: Option[Int] = None,
       buildOpq: Boolean = false,
@@ -112,7 +115,6 @@ object ServeCli {
         case "--build-meta"        => c = c.copy(buildMeta =
           a.value().split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         case "--build-nbits"       => c = c.copy(buildNBits = a.value().toInt)
-        case "--build-dim"         => c = c.copy(buildDim = a.value().toInt)
         case "--build-klists"      => c = c.copy(buildKLists = a.value().toInt)
         case "--build-pbits"       => c = c.copy(buildPBits = a.value().toInt)
         case "--build-pq-m"        => c = c.copy(buildPqM = a.value().toInt)
@@ -178,12 +180,11 @@ object ServeCli {
     // fixed per-file cost, so a small corpus wants few dirs while 100 TB
     // wants the default 8 bits = 256.
     if (c.buildFrom.nonEmpty)
-      graft.llm.Similarity.ensureIndex(spark, c.indexDir, c.method,
-        c.buildFrom, c.buildIdCol, c.buildVecCol, nBits = c.buildNBits,
-        dim = c.buildDim, partitionBits = c.buildPBits,
-        kLists = c.buildKLists, metaCols = c.buildMeta,
-        pqM = c.buildPqM, pqK = c.buildPqK, keepVectors = c.keepVectors,
-        opq = c.buildOpq)
+      graft.llm.Ann.ensure(spark, c.indexDir, c.buildFrom, c.buildIdCol,
+        c.buildVecCol, graft.llm.Ann.Build(c.method, c.buildKLists,
+          nBits = c.buildNBits, partitionBits = c.buildPBits,
+          metaCols = c.buildMeta, pqM = c.buildPqM, pqK = c.buildPqK,
+          keepVectors = c.keepVectors, opq = c.buildOpq))
     StreamRunner.annServeJob(spark, c.queriesUri, c.queriesFormat,
       c.qidCol, c.vecCol, c.indexDir, c.method, c.k, c.tuning,
       c.outputUri, c.outputFormat, c.checkpoint, c.once, c.minCos,

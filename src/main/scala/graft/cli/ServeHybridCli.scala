@@ -42,7 +42,7 @@ import graft.util.Sessions
   *     --checkpoint DIR [--once]
   *     [--build-from PARQUET_URI [--build-id-col C] [--build-text-col C]
   *      [--build-vec-col C] [--build-meta c1,c2] [--build-pbands N]
-  *      [--build-nbits N] [--build-dim N] [--build-klists N]
+  *      [--build-nbits N] [--build-klists N]
   *      [--build-pbits N] [--build-pq-m N] [--build-pq-k N]
   *      [--keep-vectors] [--build-opq]]  (ivfpq sidecar / OPQ rotation)
   *
@@ -53,9 +53,11 @@ import graft.util.Sessions
   * `--build-from` bootstraps BOTH indexes from one parquet corpus of
   * (id, text, vec[, meta…]) rows when they don't exist yet
   * ([[graft.llm.Retrieval.ensureBm25Index]] +
-  * [[graft.llm.Similarity.ensureIndex]] — existing indexes are served
-  * as-is under the single-writer contract): one relaunch-safe command
-  * from corpus to fused answers on a fresh host. */
+  * [[graft.llm.Ann.ensure]] — existing indexes are served as-is under
+  * the single-writer contract, and an ANN dir built as another family
+  * than `--ann-method` fails, naming both): one relaunch-safe command
+  * from corpus to fused answers on a fresh host. An lsh build takes its
+  * dim from the corpus. */
 object ServeHybridCli {
 
   final case class Config(
@@ -74,7 +76,7 @@ object ServeHybridCli {
       buildFrom: String = "", buildIdCol: String = "doc_id",
       buildTextCol: String = "text", buildVecCol: String = "vec",
       buildMeta: Seq[String] = Nil, buildPBands: Int = 64,
-      buildNBits: Int = 16, buildDim: Int = 64, buildKLists: Int = 16,
+      buildNBits: Int = 16, buildKLists: Int = 16,
       buildPBits: Int = 8, buildPqM: Int = 8, buildPqK: Int = 64,
       keepVectors: Boolean = false, buildOpq: Boolean = false,
       refine: Option[Int] = None,
@@ -118,7 +120,6 @@ object ServeHybridCli {
             .map(_.trim).filter(_.nonEmpty))
         case "--build-pbands"      => c = c.copy(buildPBands = a.value().toInt)
         case "--build-nbits"       => c = c.copy(buildNBits = a.value().toInt)
-        case "--build-dim"         => c = c.copy(buildDim = a.value().toInt)
         case "--build-klists"      => c = c.copy(buildKLists = a.value().toInt)
         case "--build-pbits"       => c = c.copy(buildPBits = a.value().toInt)
         case "--build-pq-m"        => c = c.copy(buildPqM = a.value().toInt)
@@ -162,12 +163,11 @@ object ServeHybridCli {
     if (c.buildFrom.nonEmpty) {
       graft.llm.Retrieval.ensureBm25Index(spark, c.bm25IndexDir, c.buildFrom,
         c.buildIdCol, c.buildTextCol, c.buildPBands, c.buildMeta)
-      graft.llm.Similarity.ensureIndex(spark, c.annIndexDir, c.annMethod,
-        c.buildFrom, c.buildIdCol, c.buildVecCol, nBits = c.buildNBits,
-        dim = c.buildDim, partitionBits = c.buildPBits,
-        kLists = c.buildKLists, metaCols = c.buildMeta,
-        pqM = c.buildPqM, pqK = c.buildPqK, keepVectors = c.keepVectors,
-        opq = c.buildOpq)
+      graft.llm.Ann.ensure(spark, c.annIndexDir, c.buildFrom, c.buildIdCol,
+        c.buildVecCol, graft.llm.Ann.Build(c.annMethod, c.buildKLists,
+          nBits = c.buildNBits, partitionBits = c.buildPBits,
+          metaCols = c.buildMeta, pqM = c.buildPqM, pqK = c.buildPqK,
+          keepVectors = c.keepVectors, opq = c.buildOpq))
     }
     StreamRunner.hybridServeJob(spark, c.queriesUri, c.queriesFormat,
       c.qidCol, c.termsCol, c.vecCol, c.bm25IndexDir, c.annIndexDir,

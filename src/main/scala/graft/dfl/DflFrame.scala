@@ -1433,7 +1433,7 @@ object DflFrame {
         // or a literal built dir; the family comes from the index's OWN
         // layout (lsh | ivf | ivfpq). The piped dataset is NOT scanned:
         // the index already is the corpus (built by ingest-ann /
-        // ensureIndex / serve-ann --build-from), so a catalog service
+        // Ann.ensure / serve-ann --build-from), so a catalog service
         // probes at zero build cost. `tuning`: lsh → minCandidates,
         // ivf/ivfpq → nprobe. `refine` N (ivfpq + keepVectors only):
         // compressed ADC nominates k×N candidates, TRUE cosines from the
@@ -1597,10 +1597,11 @@ object DflFrame {
         val hpAnnKind = graft.llm.Similarity.indexKind(hpSpark, hpAnnDir)
         if (hpAnnKind.forall(_ == "bm25")) throw new DflParseException(
           s"hybridProbe: '$hpAnnDir' is not an ANN index (got $hpAnnKind)")
+        val hpFloats = Ann.storesFloats(hpAnnKind.get)
         // the MMR penalty cosines need floats: a keepVectors index
         // serves them from its vectors_f32 sidecar (the serve-hybrid
         // posture); a codes-only index rejects lambda loudly
-        if (hpLambda.isDefined && hpAnnKind.contains("ivfpq") &&
+        if (hpLambda.isDefined && !hpFloats &&
             !graft.llm.Pq.hasVectorSidecar(hpSpark, hpAnnDir))
           throw new DflParseException(
             "hybridProbe: lambda (MMR) needs float vectors; this " +
@@ -1611,9 +1612,8 @@ object DflFrame {
         // where an MMR vector fetch reads from: the index's own rows for
         // float layouts, the float sidecar for a keepVectors ivfpq index
         val hpVecDir =
-          if (hpAnnKind.contains("ivfpq"))
-            s"$hpAnnDir/${graft.llm.Pq.vectorSidecarDir}"
-          else s"$hpAnnDir/vectors"
+          if (hpFloats) s"$hpAnnDir/vectors"
+          else s"$hpAnnDir/${graft.llm.Pq.vectorSidecarDir}"
         val hpLex = graft.llm.Retrieval.bm25TopKIndexed(hpSpark, hpBmDir,
           hpTerms, hpPool).select("id", "rnk")
         // bounded-pool rank under a constant key — see the hybrid

@@ -2,10 +2,12 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** ONE probe path for the three persistent ANN index families — IVF
-  * (coarse lists over float vectors), LSH (Hamming balls over sign
-  * signatures) and IVFPQ (coarse lists over product-quantized codes).
+/** ONE probe path and ONE index lifecycle for the three persistent ANN
+  * index families — IVF (coarse lists over float vectors), LSH (Hamming
+  * balls over sign signatures) and IVFPQ (coarse lists over
+  * product-quantized codes).
   *
   * A [[Probe]] spec says WHAT to answer — the queries, the bound (top-k
   * or a cosine range), an optional predicate over the index's columns,
@@ -30,7 +32,18 @@ import org.apache.spark.sql.functions._
   * stamp-invalidated index snapshot), `candidates` (the pruned read plus
   * each query's list or Hamming-ball membership), `widen` (double
   * nprobe or the radius) and `score` (exact cosine, or ADC with an
-  * optional float-sidecar refine). */
+  * optional float-sidecar refine).
+  *
+  * The lifecycle verbs — [[ensure]], [[append]], [[compact]] /
+  * [[compactionDue]], [[retrain]], [[dim]] and [[streamTypes]] — read
+  * the family from the dir's layout too, and write the shared steps
+  * once: metadata-column derivation and the type fence, crash healing,
+  * the staged append and commit, replay-fence carry and tombstone drop.
+  * The families contribute their layout (`reserved` columns, partition
+  * column and count, data dirs), how new rows are assigned, encoded or
+  * signed, which sidecars a compaction carries, and how they retrain
+  * and build. A caller's `method` string is only checked against a built
+  * layout ([[checkMethod]]), never dispatched on. */
 object Ann {
 
   sealed trait Bound
@@ -59,12 +72,19 @@ object Ann {
                          chunkSize: Int = 256,
                          maxEnumBuckets: Int = 4096)
 
-  /** Build parameters of a [[Cached]] or [[Adhoc]] source (a built
-    * index dir carries its own). `method`: ivf | lsh. */
+  /** Build parameters of a [[Cached]] or [[Adhoc]] source (`method`:
+    * ivf | lsh) and of an [[ensure]] bootstrap (any family; a built index
+    * dir carries its own). `trainSample` sizes the ivf coarse-quantizer
+    * sample (ivfpq trains on its own 4096-row sample); `pqM`, `pqK`,
+    * `keepVectors` and `opq` shape an ivfpq build. An lsh build takes
+    * its dim from the corpus. */
   final case class Build(method: String, kLists: Int = 16,
                          trainSample: Int = 2048, nBits: Int = 16,
                          partitionBits: Int = 8,
-                         metaCols: Seq[String] = Nil)
+                         metaCols: Seq[String] = Nil,
+                         pqM: Int = 8, pqK: Int = 64,
+                         keepVectors: Boolean = false,
+                         opq: Boolean = false)
 
   sealed trait Source
   /** A built index dir; the family comes from its layout. */
@@ -117,14 +137,18 @@ object Ann {
         "Ann.probe: duplicate qids in one batch")
     source match {
       case Dir(spark, dir) =>
-        val f = Similarity.indexKind(spark, dir).flatMap(familyOf)
-          .getOrElse(throw new Rejected(s"'$dir' is not a built ANN index dir"))
+        val f = dirFamily(spark, dir)
         gateRefine(f, p, Some((spark, dir)))
         serve(f)(f.meta(spark, dir), p, qs, single, Some(dir))
       case Cached(df, idCol, vecCol, key, b) =>
         val f = corpusFamily(b.method)
         gateRefine(f, p, None)
-        val dir = f.cached(df, idCol, vecCol, key, b, dims.head)
+        // metaCols join the stamp: an index without them cannot serve a
+        // predicate over them
+        val dir = Similarity.cachedIndex(df, key, f.cacheParams(b, dims.head) +
+            (if (b.metaCols.isEmpty) "" else s"|m=${b.metaCols.mkString(",")}"),
+          Some((newRows, d) => append(newRows, idCol, vecCol, d)))(
+          f.build(df, idCol, vecCol, _, b))
         serve(f)(f.meta(df.sparkSession, dir), p, qs, single, Some(dir))
       case Adhoc(df, idCol, vecCol, b) =>
         val f = corpusFamily(b.method)
@@ -137,8 +161,20 @@ object Ann {
 
   private val families: Seq[IndexFamily] = Seq(IvfFamily, LshFamily, IvfPqFamily)
 
+  /** The ANN family names, as [[Similarity.indexKind]] reports them. */
+  val methods: Seq[String] = families.map(_.name)
+
   private def familyOf(kind: String): Option[IndexFamily] =
     families.find(_.name == kind)
+
+  private def methodFamily(method: String, who: String): IndexFamily =
+    familyOf(method).getOrElse(throw new IllegalArgumentException(
+      s"$who: unknown ANN method '$method' (${methods.mkString(" | ")})"))
+
+  /** The family of a built index dir, read from its layout. */
+  private[llm] def dirFamily(spark: SparkSession, indexDir: String): IndexFamily =
+    Similarity.indexKind(spark, indexDir).flatMap(familyOf)
+      .getOrElse(throw new Rejected(s"'$indexDir' is not a built ANN index dir"))
 
   private def corpusFamily(method: String): IndexFamily =
     familyOf(method).filter(f => corpusMethods.contains(f.name))
@@ -164,6 +200,224 @@ object Ann {
             "unrefined or rebuild with keepVectors")
       }
     }
+
+  // ── the index lifecycle: each verb written once over the family hooks,
+  // the family read from the dir's layout ──
+
+  /** Fail fast when a job's configured `method` names no ANN family or
+    * disagrees with the layout of an already-built `indexDir`. A dir not
+    * built yet passes: a bootstrap may still build it, and a missing
+    * index fails the job's first probe instead. */
+  def checkMethod(spark: SparkSession, indexDir: String, method: String,
+                  who: String): Unit = {
+    methodFamily(method, who)
+    Similarity.indexKind(spark, indexDir).foreach(kind => require(kind == method,
+      s"$who: method '$method' but $indexDir is a built '$kind' index"))
+  }
+
+  /** Whether `method`'s layout stores float vectors (ivf, lsh) rather
+    * than codes (ivfpq, whose floats live in the optional sidecar). */
+  def storesFloats(method: String): Boolean =
+    methodFamily(method, "Ann").floatVectors
+
+  /** The embedding dim a built index expects, from the memoized sidecar
+    * meta: zero Spark jobs warm, so a serving layer checks query dims
+    * before probing. */
+  def dim(spark: SparkSession, indexDir: String): Int = {
+    val f = dirFamily(spark, indexDir)
+    f.dim(f.meta(spark, indexDir))
+  }
+
+  /** The (id, vector) column types an appended batch must carry, modulo
+    * nullability. A code layout (ivfpq) takes array<double> vectors and
+    * encodes them, so a stream types its vector column that way (jsonl's
+    * natural shape; parquet type widening accepts narrower float files). */
+  def streamTypes(spark: SparkSession, indexDir: String): (DataType, DataType) = {
+    val f = dirFamily(spark, indexDir)
+    val rows = f.rows(f.meta(spark, indexDir))
+    (rows.schema("id").dataType,
+      if (f.floatVectors) rows.schema("v").dataType else ArrayType(DoubleType))
+  }
+
+  /** Bootstrap an index from a parquet corpus when `indexDir` holds no
+    * built index yet (the build commits atomically through
+    * [[Similarity.stagedCommit]]). An existing index is never rebuilt
+    * here — refreshing belongs to [[append]] or an explicit rebuild — and
+    * a dir built as another family than `b.method` fails, naming both. */
+  def ensure(spark: SparkSession, indexDir: String, corpusUri: String,
+             idCol: String, vecCol: String, b: Build): Unit = {
+    val f = methodFamily(b.method, "Ann.ensure")
+    Similarity.indexKind(spark, indexDir) match {
+      case Some(kind) => require(kind == f.name,
+        s"Ann.ensure: $indexDir is a built '$kind' index, not the requested " +
+          s"'${f.name}' — an existing index is never rebuilt here")
+      case None => f.build(spark.read.parquet(corpusUri), idCol, vecCol, indexDir, b)
+    }
+  }
+
+  /** APPEND rows to a built index without a rebuild: the family assigns
+    * them to its frozen lists (ivf), encodes them with its frozen
+    * codebooks too (ivfpq, floats to the sidecar when the index keeps
+    * one), or signs them with its recorded hyperplanes (lsh — exact: the
+    * grown index equals a full rebuild as a row multiset, and the
+    * occupancy histogram takes the batch's delta). One pass over the NEW
+    * rows only. The index's metadata columns are re-derived from its
+    * layout, so a batch missing one fails loudly, and a column whose type
+    * drifted (float vs double) fails before any write: it would strand
+    * the index with unmergeable parquet footers.
+    *
+    * The rows land through [[Similarity.stagedAppend]]: a retried or
+    * replayed append of the same batch is a no-op, readers are safe
+    * throughout, and a crashed earlier append is healed first. `appendId`
+    * overrides the batch identity (a fingerprint of a file-backed batch,
+    * else a fresh UUID) — pass a stable caller-side id, such as a
+    * streaming `checkpoint#batchId`, when the frame cannot prove two
+    * calls are the same batch.
+    *
+    * Drift: appended rows are probed exactly, but the frozen centroids
+    * (and codebooks) quantize a drifted distribution worse — monitor
+    * [[Similarity.ivfSkew]] and [[retrain]] on growth. */
+  def append(df: DataFrame, idCol: String, vecCol: String, indexDir: String,
+             appendId: Option[String] = None): Unit = {
+    val spark = df.sparkSession
+    val f = dirFamily(spark, indexDir)
+    val m = f.meta(spark, indexDir)
+    val live = f.rows(m)
+    val metaCols = live.columns.toSeq.filterNot(f.reserved)
+    val rows = f.assign(m, df, idCol, vecCol, metaCols)
+    // `.sql` compares modulo nullability: an in-memory batch's non-null
+    // array<float> appends safely into the index's nullable one
+    (Seq("id", "v").filter(live.columns.contains) ++ metaCols).foreach { c =>
+      require(rows.schema(c).dataType.sql == live.schema(c).dataType.sql,
+        s"Ann.append: column '$c' type ${rows.schema(c).dataType.sql} != " +
+          s"index type ${live.schema(c).dataType.sql}")
+    }
+    val dirs = f.dataDirs(spark, indexDir)
+    Similarity.healStrandedAppends(spark, indexDir, dirs)
+    Similarity.stagedAppend(spark, indexDir,
+        appendId.getOrElse(Similarity.appendBatchId(df)), dirs) { staging =>
+      f.stageAppend(m, rows, metaCols, staging, dirs)
+    }
+  }
+
+  /** The partition count of a built index (lists, or 2^pBits bands),
+    * from the memoized meta. */
+  private[llm] def partitions(spark: SparkSession, indexDir: String): Int = {
+    val f = dirFamily(spark, indexDir)
+    f.partitions(f.meta(spark, indexDir))
+  }
+
+  /** Whether an index has grown past its BUILD-SHAPE layout, so that a
+    * [[compact]] would merge something. Build shape is not one file per
+    * partition: [[Similarity.clusteredWrite]] salts each partition across
+    * up to numShufflePartitions/partitions writer tasks, so a fresh (or
+    * just-compacted) index legitimately holds that many files per
+    * partition. One FS listing plus the memoized meta: no Spark job warm. */
+  def compactionDue(spark: SparkSession, indexDir: String): Boolean = {
+    val saltN = math.max(1, spark.sessionState.conf.numShufflePartitions /
+      math.max(1, partitions(spark, indexDir)))
+    Similarity.indexFileStats(spark, indexDir)._2 > saltN
+  }
+
+  /** COMPACT an appended index: rewrite its data dirs back to the file
+    * shape a fresh build produces, recomputing nothing — no retrain, no
+    * signature pass, one clustered read-rewrite of the index's own files.
+    * Each append lands one part file per partition, so compaction bounds
+    * the probes' read amplification between (much rarer) retrains.
+    *
+    * The row multiset is preserved, so probes answer identically: the
+    * family carries its frozen sidecars over verbatim (centroids; the
+    * codebooks with their `enc` marker and, on a keepVectors ivfpq index,
+    * the float sidecar beside the codes; the lsh meta row, with the
+    * occupancy recounted from the rewritten rows). Tombstoned rows are
+    * dropped physically here and the tombstones cleared (the staged
+    * index never carries them). Crashed appends are healed first, and
+    * the `_append-<id>` replay fences are carried over, so a replay of
+    * an already-ingested batch stays a no-op. The rewrite lands through
+    * [[Similarity.stagedCommit]]: a crash leaves the previous index.
+    *
+    * Single-writer, like an in-place rebuild (run it from the index's
+    * ingest job, as [[graft.streaming.StreamRunner.annIngestJob]]'s
+    * `compactEvery` does). A reader racing the dir swap can see files
+    * vanish; the serving streams re-resolve and retry such a read. */
+  def compact(spark: SparkSession, indexDir: String): Similarity.CompactStats = {
+    val f = dirFamily(spark, indexDir)
+    val dirs = f.dataDirs(spark, indexDir)
+    Similarity.healStrandedAppends(spark, indexDir, dirs)
+    val restoreFences = Similarity.carryAppendFences(spark, indexDir)
+    val (filesBefore, _) = Similarity.indexFileStats(spark, indexDir)
+    val tombstonesCleared = Similarity.tombstoneDf(spark, indexDir)
+      .map(_.distinct().count()).getOrElse(0L)
+    val m = f.meta(spark, indexDir)
+    val n = f.partitions(m)
+    val carry = f.carrySidecars(spark, indexDir, m)
+    Similarity.stagedCommit(spark, indexDir) { staging =>
+      dirs.foreach { d =>
+        // a float sidecar is read through id-In pushdowns: it keeps the
+        // (partition, id) sort its build gave it
+        writeParts(Similarity.antiTombstoned(spark, indexDir,
+            spark.read.parquet(s"$indexDir/$d")),
+          f.partCol, n, s"$staging/$d", sortById = d != dirs.head)
+      }
+      carry(staging)
+      restoreFences(staging)
+    }
+    Similarity.CompactStats(filesBefore,
+      Similarity.indexFileStats(spark, indexDir)._1, tombstonesCleared)
+  }
+
+  /** Fail unless `indexDir` can [[retrain]] in place: lsh appends are
+    * exact and never drift, and an ivfpq index needs its float sidecar. */
+  def requireRetrainable(spark: SparkSession, indexDir: String,
+                         who: String): Unit = {
+    retrainSource(spark, indexDir, who); ()
+  }
+
+  private def retrainSource(spark: SparkSession, indexDir: String,
+                            who: String): (IndexFamily, String) = {
+    val f = dirFamily(spark, indexDir)
+    f.retrainFrom(spark, indexDir).fold(
+      why => throw new IllegalArgumentException(
+        s"$who: $indexDir cannot retrain in place — $why"),
+      source => (f, source))
+  }
+
+  /** RETRAIN a drifted index FROM ITS OWN ROWS (ivf: its vectors; ivfpq:
+    * its float sidecar — codes cannot re-encode themselves), never from
+    * the source corpus, which a long-running ingest job no longer has.
+    * New centroids train on a deterministic hash-spread sample (the
+    * build's lowest-id sample would miss the appended, usually highest-id,
+    * rows a retrain exists to absorb); an ivfpq index re-trains its
+    * codebooks (and OPQ rotation) under its declared encoding too. Every
+    * row re-assigns and the whole layout rewrites through
+    * [[Similarity.stagedCommit]], tombstoned rows dropped, replay fences
+    * carried. Keeps the list count. Single-writer, reader-quiesced, like
+    * every in-place rewrite. Returns the new centroids. */
+  def retrain(spark: SparkSession, indexDir: String): Array[Array[Double]] = {
+    val (f, source) = retrainSource(spark, indexDir, "Ann.retrain")
+    Similarity.healStrandedAppends(spark, indexDir, f.dataDirs(spark, indexDir))
+    val restoreFences = Similarity.carryAppendFences(spark, indexDir)
+    val m = f.meta(spark, indexDir)
+    val all = Similarity.antiTombstoned(spark, indexDir,
+      spark.read.parquet(s"$indexDir/$source"))
+    val metaCols = all.columns.toSeq.filterNot(f.reserved)
+    val rows = all.select("id" +: "v" +: metaCols map col: _*)
+    val (centroids, write) = f.retrain(m, rows, metaCols, f.partitions(m))
+    Similarity.stagedCommit(spark, indexDir) { staging =>
+      write(staging)
+      Similarity.writeCentroids(spark, s"$staging/centroids", centroids)
+      restoreFences(staging)
+    }
+    centroids
+  }
+
+  /** The clustered, partitioned write every layout lands through. */
+  private def writeParts(rows: DataFrame, partCol: String, n: Int,
+                         path: String, sortById: Boolean = false): Unit = {
+    val clustered = Similarity.clusteredWrite(rows, partCol, n)
+    (if (sortById) clustered.sortWithinPartitions(partCol, "id") else clustered)
+      .write.mode("overwrite").partitionBy(partCol).parquet(path)
+  }
 
   private def serve(f: IndexFamily)(m: f.Meta, p: Probe, qs: Seq[Q],
                                     single: Boolean,
@@ -337,7 +591,9 @@ object Ann {
       .filter(col("cos").isNotNull && !isnan(col("cos")))
   }
 
-  /** One index family: its snapshot type and the hooks [[probe]] drives. */
+  /** One index family: its snapshot type, the hooks [[probe]] drives
+    * and the lifecycle hooks [[append]], [[compact]], [[retrain]] and
+    * [[ensure]] drive. */
   private[llm] trait IndexFamily {
     type Meta
     /** The layout name [[Similarity.indexKind]] reports; also the
@@ -350,8 +606,8 @@ object Ann {
     def adhoc(df: DataFrame, idCol: String, vecCol: String, b: Build,
               dim: Int): Meta =
       throw new Rejected(s"$name has no ad-hoc form")
-    def cached(df: DataFrame, idCol: String, vecCol: String, key: String,
-               b: Build, dim: Int): String =
+    /** The build-parameter stamp of a [[Cached]] index. */
+    def cacheParams(b: Build, dim: Int): String =
       throw new Rejected(s"$name has no cached form")
     def dim(m: Meta): Int
     /** The (tombstone-filtered) index rows. */
@@ -372,6 +628,45 @@ object Ann {
     def refineRange(m: Meta, dir: String, qs: Seq[Q], nominated: DataFrame,
                     widths: Seq[Int], minCos: Double): DataFrame =
       throw new Rejected(s"$name cannot refine")
+
+    /** Structural layout columns; every other index column is build
+      * metadata (what a filtered probe predicates on). */
+    def reserved: Set[String]
+    /** The layout's partition column and how many values it takes. */
+    def partCol: String
+    def partitions(m: Meta): Int
+    /** The partitioned data dirs appends, heals and compactions move in
+      * lockstep; the first carries the `_append-<id>` replay fences. */
+    def dataDirs(spark: SparkSession, indexDir: String): Seq[String] =
+      Seq("vectors")
+    /** A fresh index over `df` at `indexDir`, committed atomically. */
+    def build(df: DataFrame, idCol: String, vecCol: String, indexDir: String,
+              b: Build): Unit
+    /** New (id, v, metaCols…) rows in the layout's form: assigned to the
+      * frozen lists, encoded, or signed. */
+    def assign(m: Meta, df: DataFrame, idCol: String, vecCol: String,
+               metaCols: Seq[String]): DataFrame
+    /** Stage assigned rows, and any sidecar delta, under an append's
+      * staging dir. */
+    def stageAppend(m: Meta, rows: DataFrame, metaCols: Seq[String],
+                    staging: String, dataDirs: Seq[String]): Unit =
+      writeParts(rows, partCol, partitions(m), s"$staging/vectors")
+    /** Stage a delete batch's sidecar delta; the ids sit in
+      * `staging/tombstones`. */
+    def stageDelete(spark: SparkSession, indexDir: String,
+                    staging: String): Unit = ()
+    /** Snapshot the sidecars a compaction keeps; the result writes them
+      * into the staged index (after its data dirs). */
+    def carrySidecars(spark: SparkSession, indexDir: String,
+                      m: Meta): String => Unit
+    /** The data dir holding the float rows an in-place retrain trains
+      * on, or why the index cannot retrain. */
+    def retrainFrom(spark: SparkSession, indexDir: String): Either[String, String]
+    /** Train `k` lists (and codebooks) on `rows`: the new centroids and
+      * the writer of the re-assigned layout under a staging dir. */
+    def retrain(m: Meta, rows: DataFrame, metaCols: Seq[String],
+                k: Int): (Array[Array[Double]], String => Unit) =
+      throw new Rejected(s"$name cannot retrain")
   }
 
   /** The coarse-list families (ivf, ivfpq): a query's width is its
@@ -380,6 +675,13 @@ object Ann {
   private trait ListFamily extends IndexFamily {
     def centroids(m: Meta): Array[Array[Double]]
     def maxWidth(m: Meta): Int = centroids(m).length
+    val partCol = "list"
+    def partitions(m: Meta): Int = centroids(m).length
+    def carrySidecars(spark: SparkSession, indexDir: String,
+                      m: Meta): String => Unit = {
+      val cs = centroids(m)
+      staging => Similarity.writeCentroids(spark, s"$staging/centroids", cs)
+    }
     /** `nprobe`, clamped to the list count when a filter's widening
       * loop will double it. */
     def start(m: Meta, p: Probe, qs: Seq[Q], eligible: DataFrame): Seq[Int] = {
@@ -410,6 +712,7 @@ object Ann {
     type Meta = Similarity.IvfMeta
     val name = "ivf"
     val floatVectors = true
+    val reserved = Set("id", "v", "list")
     def meta(spark: SparkSession, indexDir: String): Meta =
       Similarity.ivfMeta(spark, indexDir)
     override def adhoc(df: DataFrame, idCol: String, vecCol: String, b: Build,
@@ -419,14 +722,25 @@ object Ann {
       Similarity.IvfMeta(centroids,
         Similarity.ivfAssign(df, idCol, vecCol, centroids))
     }
-    override def cached(df: DataFrame, idCol: String, vecCol: String,
-                        key: String, b: Build, dim: Int): String =
-      Similarity.cachedIndex(df, key,
-        s"ivf|k=${b.kLists}|t=${b.trainSample}" + metaStamp(b),
-        Some((newRows, d) => Similarity.ivfAppend(newRows, idCol, vecCol, d))) { d =>
-        Similarity.ivfBuild(df, idCol, vecCol, d, b.kLists, b.trainSample,
-          b.metaCols); ()
-      }
+    override def cacheParams(b: Build, dim: Int): String =
+      s"ivf|k=${b.kLists}|t=${b.trainSample}"
+    def build(df: DataFrame, idCol: String, vecCol: String, indexDir: String,
+              b: Build): Unit = {
+      Similarity.ivfBuild(df, idCol, vecCol, indexDir, b.kLists, b.trainSample,
+        b.metaCols)
+      ()
+    }
+    def assign(m: Meta, df: DataFrame, idCol: String, vecCol: String,
+               metaCols: Seq[String]): DataFrame =
+      Similarity.ivfAssign(df, idCol, vecCol, m.centroids, metaCols)
+    def retrainFrom(spark: SparkSession, indexDir: String): Either[String, String] =
+      Right("vectors")
+    override def retrain(m: Meta, rows: DataFrame, metaCols: Seq[String],
+                         k: Int): (Array[Array[Double]], String => Unit) = {
+      val cs = Similarity.retrainCentroids(rows, k, trainSample = 2048)
+      (cs, staging => writeParts(Similarity.ivfAssign(rows, "id", "v", cs, metaCols),
+        "list", k, s"$staging/vectors"))
+    }
     def centroids(m: Meta): Array[Array[Double]] = m.centroids
     def dim(m: Meta): Int = m.centroids.head.length
     def rows(m: Meta): DataFrame = m.vectors
@@ -434,15 +748,13 @@ object Ann {
       exactScored(g.rows, "list", g.keep, queries)
   }
 
-  /** metaCols join the cache stamp: an index without them cannot serve
-    * a predicate over them. */
-  private def metaStamp(b: Build): String =
-    if (b.metaCols.isEmpty) "" else s"|m=${b.metaCols.mkString(",")}"
-
   private object LshFamily extends IndexFamily {
     type Meta = Similarity.LshMeta
     val name = "lsh"
     val floatVectors = true
+    val reserved = Set("id", "v", "bucket", "pband")
+    val partCol = "pband"
+    def partitions(m: Meta): Int = 1 << m.pBits
     def meta(spark: SparkSession, indexDir: String): Meta =
       Similarity.lshMeta(spark, indexDir)
     override def adhoc(df: DataFrame, idCol: String, vecCol: String, b: Build,
@@ -459,14 +771,59 @@ object Ann {
         else None
       }, bucketed, partitioned = false)
     }
-    override def cached(df: DataFrame, idCol: String, vecCol: String,
-                        key: String, b: Build, dim: Int): String =
-      Similarity.cachedIndex(df, key,
-        s"lsh|b=${b.nBits}|d=$dim|p=${b.partitionBits}" + metaStamp(b),
-        Some((newRows, d) => Similarity.lshAppend(newRows, idCol, vecCol, d))) { d =>
-        Similarity.lshBuild(df, idCol, vecCol, d, b.nBits, dim, b.partitionBits,
-          b.metaCols)
+    override def cacheParams(b: Build, dim: Int): String =
+      s"lsh|b=${b.nBits}|d=$dim|p=${b.partitionBits}"
+    def build(df: DataFrame, idCol: String, vecCol: String, indexDir: String,
+              b: Build): Unit =
+      Similarity.lshBuild(df, idCol, vecCol, indexDir, b.nBits,
+        Similarity.firstVectorDim(df, vecCol, "lshBuild"), b.partitionBits,
+        b.metaCols)
+    def assign(m: Meta, df: DataFrame, idCol: String, vecCol: String,
+               metaCols: Seq[String]): DataFrame =
+      Similarity.lshBuckets(df, idCol, vecCol, m.nBits, m.dim, metaCols)
+        .withColumn("pband", shiftrightunsigned(col("bucket"), m.nBits - m.pBits))
+    /** The batch's per-bucket occupancy delta stages beside its rows, so
+      * the histogram merge survives a crash after the part-file moves.
+      * It is read back from the staged write under an explicit schema: an
+      * all-filtered-out batch stages no part file to infer one from. */
+    override def stageAppend(m: Meta, rows: DataFrame, metaCols: Seq[String],
+                             staging: String, dataDirs: Seq[String]): Unit = {
+      super.stageAppend(m, rows, metaCols, staging, dataDirs)
+      rows.sparkSession.read.schema(rows.schema).parquet(s"$staging/vectors")
+        .filter(col("bucket").isNotNull).groupBy("bucket").count()
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/delta")
+    }
+    /** The deleted rows' negative per-bucket counts, when the index keeps
+      * an occupancy histogram (one without it counts probes exactly). */
+    override def stageDelete(spark: SparkSession, indexDir: String,
+                             staging: String): Unit = {
+      val occupancy = new org.apache.hadoop.fs.Path(s"$indexDir/occupancy")
+      if (occupancy.getFileSystem(spark.sessionState.newHadoopConf())
+          .exists(occupancy)) {
+        val tomb = spark.read.schema("id LONG")
+          .parquet(s"$staging/${Similarity.tombstonesName}")
+        spark.read.parquet(s"$indexDir/vectors")
+          .join(tomb, Seq("id"))
+          .filter(col("bucket").isNotNull)
+          .groupBy("bucket").agg((-count(lit(1))).as("count"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$staging/delta")
       }
+    }
+    /** The meta row verbatim; the occupancy recounted from the rewritten
+      * rows (which also repairs a histogram lost to an earlier crash). */
+    def carrySidecars(spark: SparkSession, indexDir: String,
+                      m: Meta): String => Unit = staging => {
+      import spark.implicits._
+      Seq((m.nBits, m.dim, m.pBits)).toDF("n_bits", "dim", "partition_bits")
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/meta")
+      spark.read.parquet(s"$staging/vectors")
+        .filter(col("bucket").isNotNull)
+        .groupBy("bucket").count()
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/occupancy")
+    }
+    def retrainFrom(spark: SparkSession, indexDir: String): Either[String, String] =
+      Left("lsh appends are exact and never drift, so there is no " +
+        "quantizer to retrain")
     def dim(m: Meta): Int = m.dim
     def rows(m: Meta): DataFrame = m.vectors
     def maxWidth(m: Meta): Int = m.nBits
@@ -524,8 +881,53 @@ object Ann {
     type Meta = Pq.IvfPqIndex
     val name = "ivfpq"
     val floatVectors = false
+    val reserved = Set("id", "v", "list", "codes")
     def meta(spark: SparkSession, indexDir: String): Meta =
       Pq.ivfPqMeta(spark, indexDir)
+    /** A keepVectors index appends, heals and compacts its float sidecar
+      * in lockstep with the codes. */
+    override def dataDirs(spark: SparkSession, indexDir: String): Seq[String] =
+      if (Pq.hasVectorSidecar(spark, indexDir)) Seq("vectors", Pq.vectorSidecarDir)
+      else Seq("vectors")
+    def build(df: DataFrame, idCol: String, vecCol: String, indexDir: String,
+              b: Build): Unit =
+      Pq.ivfPqBuild(df, idCol, vecCol, indexDir, b.kLists, b.pqM, b.pqK,
+        metaCols = b.metaCols, keepVectors = b.keepVectors, opq = b.opq)
+    /** Frozen lists AND frozen codebooks, encoded under the index's own
+      * formulation (its `enc`: raw, residual or rotated residual). */
+    def assign(m: Meta, df: DataFrame, idCol: String, vecCol: String,
+               metaCols: Seq[String]): DataFrame =
+      Similarity.ivfAssign(df, idCol, vecCol, m.centroids, metaCols)
+        .withColumn("codes", Pq.codesFor(m.residual, m.model, m.centroids, m.rot))
+    override def stageAppend(m: Meta, rows: DataFrame, metaCols: Seq[String],
+                             staging: String, dataDirs: Seq[String]): Unit =
+      if (dataDirs.contains(Pq.vectorSidecarDir))
+        Pq.writeCodesAndFloats(rows, metaCols, m.centroids.length,
+          s"$staging/vectors", s"$staging/${Pq.vectorSidecarDir}")
+      else
+        writeParts(rows.select("id" +: "list" +: "codes" +: metaCols map col: _*),
+          "list", m.centroids.length, s"$staging/vectors")
+    /** The centroids, and the codebooks snapshotted rows AND schema: the
+      * `enc` marker must survive, or residual codes would re-read as raw. */
+    override def carrySidecars(spark: SparkSession, indexDir: String,
+                               m: Meta): String => Unit = {
+      val writeCentroids = super.carrySidecars(spark, indexDir, m)
+      val books = spark.read.parquet(s"$indexDir/codebooks")
+      val (rows, schema) = (books.collect(), books.schema)
+      staging => {
+        writeCentroids(staging)
+        Similarity.localFrame(spark, rows, schema)
+          .coalesce(1).write.mode("overwrite").parquet(s"$staging/codebooks")
+      }
+    }
+    def retrainFrom(spark: SparkSession, indexDir: String): Either[String, String] =
+      if (Pq.hasVectorSidecar(spark, indexDir)) Right(Pq.vectorSidecarDir)
+      else Left(s"it carries no ${Pq.vectorSidecarDir} float sidecar (built " +
+        "without keepVectors, --keep-vectors) and codes cannot re-encode " +
+        "themselves; rebuild from the source corpus instead")
+    override def retrain(m: Meta, rows: DataFrame, metaCols: Seq[String],
+                         k: Int): (Array[Array[Double]], String => Unit) =
+      Pq.retrainLayout(m, rows, metaCols, k)
     def centroids(m: Meta): Array[Array[Double]] = m.centroids
     def dim(m: Meta): Int = m.model.m * m.model.subDim
     def rows(m: Meta): DataFrame = m.vectors

@@ -354,18 +354,17 @@ object Pq {
     * (vectors + both sidecars) lands through [[Similarity.stagedCommit]]
     * — a crash anywhere leaves the previous index untouched, and a
     * reader never sees a half-written dir — and the list partitions are
-    * salt-clustered ([[Similarity.clusteredWrite]]) so [[Similarity
-    * .compactIndex]] / [[Similarity.compactionDue]] (method "ivfpq")
-    * bound the append-path read amplification. Grow it with
-    * [[ivfPqAppend]]; retrain in place via [[ivfPqRetrain]] when built
-    * with `keepVectors = true`, else via a fresh build on drift cadence
-    * (monitor [[Similarity.ivfListStats]]).
+    * salt-clustered ([[Similarity.clusteredWrite]]) so [[Ann.compact]] /
+    * [[Ann.compactionDue]] bound the append-path read amplification.
+    * Grow it with [[Ann.append]]; retrain in place via [[Ann.retrain]]
+    * when built with `keepVectors = true`, else via a fresh build on
+    * drift cadence (monitor [[Similarity.ivfListStats]]).
     *
     * `keepVectors` (opt-in) additionally persists a `vectors_f32` FLOAT
     * sidecar — (id, list, v, meta…) partitioned by the same list
     * assignment as the codes. It is never read on the probe path (ADC
     * stays code-only), but it is what makes two lifecycle verbs possible
-    * on a compressed index: a skew-triggered [[ivfPqRetrain]] (codes
+    * on a compressed index: a skew-triggered [[Ann.retrain]] (codes
     * cannot re-encode themselves) and exact MMR diversification over
     * served candidates (answer-sized id-joins against the sidecar). The
     * cost is storing the floats the compression otherwise discards —
@@ -400,9 +399,7 @@ object Pq {
         (pqTrainResidual(df, idCol, vecCol, centroids, m, k, trainSample), None)
       else (pqTrain(df, idCol, vecCol, m, k, trainSample), None)
     Similarity.stagedCommit(spark, indexDir) { staging =>
-      val codes =
-        if (residual) codesColRes("v", "list", model, centroids, rot)
-        else codesCol("v", model)
+      val codes = codesFor(residual, model, centroids, rot)
       val assigned = Similarity.ivfAssign(df, idCol, vecCol, centroids, metaCols)
       if (!keepVectors)
         Similarity.clusteredWrite(
@@ -411,31 +408,38 @@ object Pq {
             "list", kLists)
           .write.mode("overwrite").partitionBy("list").parquet(s"$staging/vectors")
       else
-        writeCodesAndFloats(assigned, codes, metaCols, kLists,
-          s"$staging/vectors", s"$staging/$vectorSidecarDir")
+        writeCodesAndFloats(assigned.withColumn("codes", codes), metaCols,
+          kLists, s"$staging/vectors", s"$staging/$vectorSidecarDir")
       Similarity.writeCentroids(spark, s"$staging/centroids", centroids)
       writeCodebooks(spark, s"$staging/codebooks", model,
         if (opq) "opq" else if (residual) "res" else "raw", rot)
     }
   }
 
-  /** The two-layout write of a sidecar-carrying index: materialize the
-    * assigned+encoded frame ONCE (persist, spill-tolerant) and land the
-    * codes and float layouts from the cached pass — without it, each
-    * layout's write re-executed the full corpus scan, nearest-centroid
-    * assignment, and PQ encode, doubling the dominant cost of every
-    * keepVectors build/append/retrain. */
-  private def writeCodesAndFloats(assigned: DataFrame, codes: Column,
-                                  metaCols: Seq[String], kLists: Int,
-                                  codesDir: String, floatsDir: String): Unit = {
+  /** The PQ-codes expression of column `v` under an index's formulation:
+    * residual (optionally rotated, OPQ) against `centroids`, or raw. */
+  private[llm] def codesFor(residual: Boolean, model: PqModel,
+                            centroids: Array[Array[Double]],
+                            rot: Option[Array[Array[Double]]]): Column =
+    if (residual) codesColRes("v", "list", model, centroids, rot)
+    else codesCol("v", model)
+
+  /** The two-layout write of a sidecar-carrying index, from assigned and
+    * encoded (id, list, codes, v, metaCols…) rows: materialize them ONCE
+    * (persist, spill-tolerant) and land the codes and float layouts from
+    * the cached pass — without it, each layout's write re-executed the
+    * full corpus scan, nearest-centroid assignment, and PQ encode,
+    * doubling the dominant cost of every keepVectors build/append/retrain. */
+  private[llm] def writeCodesAndFloats(encoded: DataFrame,
+                                       metaCols: Seq[String], kLists: Int,
+                                       codesDir: String, floatsDir: String): Unit = {
     // the sidecar stores FLOAT32 — what the name promises, and half the
     // bytes of double at sidecar scale. Lossless for float32 sources
     // (every embedding table here); a double-valued corpus quantizes to
     // float32 once at build, and every sidecar consumer (retrain
     // training, MMR cosines, refined rerank) reads that same
     // representation, so they stay mutually consistent.
-    val combined = assigned.select(col("id") +: col("list") +:
-        codes.as("codes") +:
+    val combined = encoded.select(col("id") +: col("list") +: col("codes") +:
         col("v").cast("array<float>").as("v") +: metaCols.map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -464,7 +468,7 @@ object Pq {
   val vectorSidecarDir = "vectors_f32"
 
   /** Whether `indexDir` carries the opt-in float sidecar — the gate for
-    * [[ivfPqRetrain]] and for exact MMR over a compressed serving leg.
+    * [[Ann.retrain]] and for exact MMR over a compressed serving leg.
     * Pure FS existence check, no Spark job. */
   def hasVectorSidecar(spark: org.apache.spark.sql.SparkSession,
                        indexDir: String): Boolean = {
@@ -483,7 +487,7 @@ object Pq {
     * list-pruned rerank — and land the (list, id)-sorted float32
     * layout the `keepVectors` builds write ([[writeCodesAndFloats]]'
     * sort contract, byte-compatible consumers). The index's metadata
-    * columns ride along from the CODES side (a later [[ivfPqRetrain]]
+    * columns ride along from the CODES side (a later [[Ann.retrain]]
     * reconstructs the whole index from this sidecar — backfilling
     * without them would strip the filtered probes).
     *
@@ -494,7 +498,7 @@ object Pq {
     * single dir rename; a crash before it leaves the index codes-only
     * and fully servable, a retry re-stages from scratch. After the
     * backfill, refined/MMR/retrain all serve as if the index had been
-    * built with `keepVectors`, and [[ivfPqAppend]] maintains the
+    * built with `keepVectors`, and [[Ann.append]] maintains the
     * sidecar from the next batch on.
     *
     * Cost honesty at scale: one co-shuffle of (source ⋈ assignment) on
@@ -616,118 +620,17 @@ object Pq {
       .coalesce(1).write.mode("overwrite").parquet(dir)
   }
 
-  /** APPEND rows to a built IVF+PQ index WITHOUT retraining: encode the
-    * new rows with the FROZEN codebooks, assign them to the FROZEN
-    * coarse centroids, and move the m-byte code rows into the list
-    * partitions via the same crash/retry-safe [[Similarity.stagedAppend]]
-    * commit the float indexes use — a retried or replayed append of the
-    * same file-backed batch (or the same explicit `appendId`) is a
-    * no-op, never a double-append, and readers stay safe throughout (no
-    * existing file is removed or rewritten). Cost is one pass over the
-    * NEW rows only.
-    *
-    * DRIFT BOUND, compounded: beyond the frozen-centroid recall drift of
-    * [[Similarity.ivfAppend]], the frozen CODEBOOKS quantize drifted
-    * appends with growing reconstruction error — ADC scores degrade
-    * before list assignment does. Rebuild (or [[ivfPqRetrain]], when the
-    * index carries the float sidecar) on retrain cadence; the skew
-    * monitor ([[Similarity.ivfListStats]] / [[Similarity.ivfSkew]])
-    * reads this index's list column the same way.
-    *
-    * A sidecar-carrying index ([[ivfPqBuild]] `keepVectors`) appends the
-    * batch's FLOATS alongside its codes in the SAME staged commit
-    * (`dataDirs = vectors, vectors_f32`) — the two layouts can never
-    * diverge on a crash, and the replay fence covers both. */
-  def ivfPqAppend(df: DataFrame, idCol: String, vecCol: String,
-                  indexDir: String, appendId: Option[String] = None): Unit = {
-    val sess = df.sparkSession
-    val idx = ivfPqMeta(sess, indexDir)
-    val (centroids, model, vectors) = (idx.centroids, idx.model, idx.vectors)
-    val sidecar = hasVectorSidecar(sess, indexDir)
-    // carry the index's metadata columns (filtered-ANN layouts), as the
-    // float appends do — re-derived from the live index schema
-    val metaCols = vectors.schema.map(_.name)
-      .filterNot(Set("id", "list", "codes"))
-    // encode to MATCH the index's own formulation (the enc sidecar
-    // column): appending raw codes into a residual index would score
-    // garbage under the residual ADC tables, and an OPQ index's stored
-    // rotation rides into the encode the same way
-    val codes =
-      if (idx.residual) codesColRes("v", "list", model, centroids, idx.rot)
-      else codesCol("v", model)
-    val assignedAll = Similarity.ivfAssign(df, idCol, vecCol, centroids, metaCols)
-    val assigned = assignedAll
-      .select(col("id") +: col("list") +:
-        codes.as("codes") +: metaCols.map(col): _*)
-    // schema fence, as ivfAppend: a drifted type in ANY carried column
-    // (id or metadata) would strand the index with unmergeable parquet
-    // footers (codes are always array<tinyint> by construction)
-    ("id" +: metaCols).foreach { c =>
-      require(assigned.schema(c).dataType.sql == vectors.schema(c).dataType.sql,
-        s"ivfPqAppend: column '$c' type ${assigned.schema(c).dataType.sql} != " +
-          s"index type ${vectors.schema(c).dataType.sql}")
-    }
-    val dataDirs =
-      if (sidecar) Seq("vectors", vectorSidecarDir) else Seq("vectors")
-    Similarity.healStrandedAppends(sess, indexDir, dataDirs)
-    Similarity.stagedAppend(sess, indexDir,
-        appendId.getOrElse(Similarity.appendBatchId(df)),
-        dataDirs) { staging =>
-      if (!sidecar)
-        Similarity.clusteredWrite(assigned, "list", centroids.length)
-          .write.mode("overwrite").partitionBy("list")
-          .parquet(s"$staging/vectors")
-      else
-        writeCodesAndFloats(assignedAll, codes, metaCols, centroids.length,
-          s"$staging/vectors", s"$staging/$vectorSidecarDir")
-    }
-  }
-
-  /** RETRAIN a drifted IVFPQ index from its own FLOAT sidecar — the
-    * compressed counterpart of [[Similarity.ivfRetrain]], and the verb
-    * that closes the compressed lifecycle: codes cannot re-encode
-    * themselves, so it exists only for indexes built/grown with
-    * `keepVectors = true` (anything else fails loudly with the rebuild
-    * advice). New coarse centroids train on the same deterministic
-    * hash-spread sample discipline as the float retrain (the build's
-    * lowest-id sample would systematically exclude appended rows — the
-    * drifted data a retrain exists to absorb), NEW codebooks train on
-    * the new residuals (re-clustering changes every residual, so frozen
-    * codebooks would mis-model the re-assigned lists), and every row
-    * re-assigns + re-encodes from the sidecar floats. The whole layout —
-    * codes, sidecar, centroids, codebooks — rewrites through one
-    * [[Similarity.stagedCommit]] with the `_append` replay fences
-    * carried over. Cost: two bounded training passes plus one
-    * assignment/encode rewrite of the index — never a source-corpus
-    * rescan, which a long-running ingest job no longer has. */
-  def ivfPqRetrain(spark: org.apache.spark.sql.SparkSession,
-                   indexDir: String, kLists: Int = 0,
-                   trainSample: Int = 4096): Array[Array[Double]] = {
-    require(hasVectorSidecar(spark, indexDir),
-      s"ivfPqRetrain: $indexDir carries no $vectorSidecarDir float " +
-        "sidecar (built without keepVectors) — codes cannot re-encode " +
-        "themselves; rebuild from the source corpus instead")
-    val dataDirs = Seq("vectors", vectorSidecarDir)
-    Similarity.healStrandedAppends(spark, indexDir, dataDirs)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val liveVec = new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-    val restoreFences = Similarity.carryAppendFences(fs, liveVec)
-    val idx = ivfPqMeta(spark, indexDir)
-    val k = if (kLists > 0) kLists else idx.centroids.length
-    // tombstoned rows are excluded from training AND the re-encode — a
-    // retrain is a physical-drop point (the staged index never carries
-    // the tombstones dir, so the probes' anti-join plans away after)
-    val floats = Similarity.antiTombstoned(spark, indexDir,
-      spark.read.parquet(s"$indexDir/$vectorSidecarDir"))
-    val metaCols = floats.schema.map(_.name)
-      .filterNot(Set("id", "list", "v"))
-    val rows = floats.select("id" +: "v" +: metaCols map col: _*)
+  /** The ivfpq half of [[Ann.retrain]], from the float sidecar's rows:
+    * new coarse centroids on the hash-spread sample, NEW codebooks on the
+    * new residuals (re-clustering changes every residual, so frozen
+    * codebooks would mis-model the re-assigned lists) under the encoding
+    * the index declares (residual, OPQ with a re-learned rotation, or
+    * raw), and the writer of the re-encoded codes + sidecar layout. */
+  private[llm] def retrainLayout(idx: IvfPqIndex, rows: DataFrame,
+                                 metaCols: Seq[String], k: Int)
+      : (Array[Array[Double]], String => Unit) = {
+    val trainSample = 4096
     val centroids = Similarity.retrainCentroids(rows, k, trainSample)
-    // the codebooks retrain under the SAME encoding the index declares
-    // (enc sidecar) — a residual index gets residual books against the
-    // NEW centroids, an OPQ index re-learns its rotation too, a raw
-    // index keeps the raw formulation
     val (model, rot) =
       if (idx.rot.isDefined) {
         val (mdl, r) = pqTrainOpq(rows, "id", "v", centroids,
@@ -739,19 +642,14 @@ object Pq {
           idx.model.m, idx.model.k, trainSample), None)
       else (pqTrain(rows, "id", "v", idx.model.m, idx.model.k, trainSample),
         None)
-    Similarity.stagedCommit(spark, indexDir) { staging =>
-      val codes =
-        if (idx.residual) codesColRes("v", "list", model, centroids, rot)
-        else codesCol("v", model)
-      val assigned = Similarity.ivfAssign(rows, "id", "v", centroids, metaCols)
-      writeCodesAndFloats(assigned, codes, metaCols, k,
-        s"$staging/vectors", s"$staging/$vectorSidecarDir")
-      Similarity.writeCentroids(spark, s"$staging/centroids", centroids)
-      writeCodebooks(spark, s"$staging/codebooks", model,
+    (centroids, staging => {
+      writeCodesAndFloats(
+        Similarity.ivfAssign(rows, "id", "v", centroids, metaCols)
+          .withColumn("codes", codesFor(idx.residual, model, centroids, rot)),
+        metaCols, k, s"$staging/vectors", s"$staging/$vectorSidecarDir")
+      writeCodebooks(rows.sparkSession, s"$staging/codebooks", model,
         if (rot.isDefined) "opq" else if (idx.residual) "res" else "raw", rot)
-      restoreFences(s"$staging/vectors")
-    }
-    centroids
+    })
   }
 
   /** Driver-memoized IVFPQ index state (centroids + codebooks + resolved
@@ -861,14 +759,6 @@ object Pq {
       ivfPqMetaCache.put(key, (stamp, meta))
       meta
     }
-  }
-
-  /** The embedding dimension a built IVFPQ index expects — memoized
-    * sidecar meta, zero Spark jobs warm (the serving layer's dim fence). */
-  def ivfPqDim(spark: org.apache.spark.sql.SparkSession,
-               indexDir: String): Int = {
-    val idx = ivfPqMeta(spark, indexDir)
-    idx.model.m * idx.model.subDim
   }
 
   /** Per-query ADC tables, flat (queries × m × k): entry (qi, mi, ki) =

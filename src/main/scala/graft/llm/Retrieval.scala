@@ -370,7 +370,7 @@ object Retrieval {
     }
 
   /** APPEND new documents to a [[bm25Build]] index WITHOUT re-scanning
-    * the indexed corpus — the lexical twin of [[Similarity.ivfAppend]]:
+    * the indexed corpus — the lexical twin of [[Ann.append]]:
     * tokenize ONLY the new rows, land their postings and df deltas into
     * the existing hash-band partitions, and fold (count, Σdl) into the
     * additive stats sidecar. Everything in a BM25 index is additive —
@@ -386,7 +386,7 @@ object Retrieval {
     * fresh full-corpus build — the contract the `bm25_append` oracle
     * row pins. `appendId` overrides the batch identity for IN-MEMORY
     * batches (whose rows a plan-derived fingerprint cannot see) — the
-    * streaming-ingest shape, same as [[Similarity.lshAppend]]. */
+    * streaming-ingest shape, same as [[Ann.append]]. */
   def bm25Append(df: DataFrame, idCol: String, textCol: String,
                  indexDir: String, appendId: Option[String] = None): Unit = {
     val spark = df.sparkSession
@@ -406,7 +406,7 @@ object Retrieval {
       .filterNot(Set("id", "dl", "w", "tf", "pband")).toSeq
     val base = prepared(df, idCol, textCol, metaCols)
     val tf = bandedTf(base, pbands, metaCols)
-    // schema fence (the ivfAppend posture, modulo nullability): a
+    // schema fence (the Ann.append posture, modulo nullability): a
     // meta column whose TYPE drifted from the index's would strand the
     // postings with unmergeable parquet footers
     metaCols.foreach { c =>
@@ -482,7 +482,7 @@ object Retrieval {
         bm25StatsApply) { staging =>
       fresh.coalesce(1).write.mode("overwrite")
         .parquet(s"$staging/${Similarity.tombstonesName}")
-      // deltas from the staged tombstones (the lshAppend read-back
+      // deltas from the staged tombstones (the lsh append read-back
       // idiom) joined against the RAW postings — prior tombstones are
       // already excluded from `fresh`, so nothing double-subtracts
       val tomb = spark.read.schema("id LONG")
@@ -534,10 +534,7 @@ object Retrieval {
   def bm25Compact(spark: org.apache.spark.sql.SparkSession,
                   indexDir: String): Similarity.CompactStats = {
     Similarity.healStrandedAppends(spark, indexDir, bm25DataDirs, bm25StatsApply)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val livePostings = new org.apache.hadoop.fs.Path(s"$indexDir/postings")
-    val restoreFences = Similarity.carryAppendFences(fs, livePostings)
+    val restoreFences = Similarity.carryAppendFences(spark, indexDir, "postings")
     val (filesBefore, _) =
       Similarity.indexFileStats(spark, indexDir, "postings")
     // the physical-drop point for deletes, as in the ANN compaction:
@@ -548,7 +545,7 @@ object Retrieval {
     val tombstonesCleared = Similarity.tombstoneDf(spark, indexDir)
       .map(_.distinct().count()).getOrElse(0L)
     val postings = Similarity.antiTombstoned(spark, indexDir,
-      spark.read.parquet(livePostings.toString))
+      spark.read.parquet(s"$indexDir/postings"))
     val dfT = spark.read.parquet(s"$indexDir/df")
     // snapshot the frozen sidecar BEFORE the swap so the staged write
     // doesn't read through the dir rename
@@ -575,7 +572,7 @@ object Retrieval {
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$staging/$emptyDocsName")
       }
-      restoreFences(s"$staging/postings")
+      restoreFences(staging)
     }
     Similarity.CompactStats(filesBefore,
       Similarity.indexFileStats(spark, indexDir, "postings")._1,
@@ -583,7 +580,7 @@ object Retrieval {
   }
 
   /** Whether a BM25 index has grown past its build-shape postings layout
-    * — the [[Similarity.compactionDue]] gate for the lexical family
+    * — the [[Ann.compactionDue]] gate for the lexical family
     * (pure FS listing + one stats read, no Spark job over data). */
   def bm25CompactionDue(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String): Boolean = {
@@ -839,7 +836,7 @@ object Retrieval {
   }
 
   /** Build-if-missing bootstrap for the serving job ([[graft.cli
-    * .ServeBm25Cli]] `--build-from`) — the [[Similarity.ensureIndex]]
+    * .ServeBm25Cli]] `--build-from`) — the [[Ann.ensure]]
     * twin: an existing index (stats sidecar present) is served as-is;
     * refreshing a live index belongs to [[bm25Append]]/[[bm25Build]]
     * under the single-writer contract. */

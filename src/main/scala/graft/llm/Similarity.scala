@@ -216,14 +216,6 @@ object Similarity {
         element_at(graft.functions.HyperplaneF.bands(col("v"), 1, nBits, planes), 1))
   }
 
-  /** Columns an index carries beyond its structural ones — the metadata
-    * a filtered probe predicates on; appends re-derive the set from the
-    * live index so a metadata-carrying index stays append-able without
-    * the caller restating the list. */
-  private def indexMetaCols(vectors: DataFrame,
-                            reserved: Set[String]): Seq[String] =
-    vectors.schema.map(_.name).filterNot(reserved)
-
   private[llm] def requireValidMetaCols(metaCols: Seq[String],
                                    reserved: Set[String], what: String): Unit =
     metaCols.foreach(c => require(!reserved(c),
@@ -563,7 +555,7 @@ object Similarity {
     (org.apache.spark.sql.SparkSession, String,
       org.apache.hadoop.fs.Path, String) => Unit
 
-  /** Crash/retry-safe append commit shared by [[ivfAppend]], [[lshAppend]],
+  /** Crash/retry-safe append commit shared by [[Ann.append]], [[annDelete]]
     * and [[graft.llm.Retrieval.bm25Append]] — the append-path counterpart
     * of [[stagedCommit]]. A bare `mode("append")` into the live dir was
     * NOT retry-safe: the cached lifecycle retries a failed append (lazy
@@ -738,8 +730,8 @@ object Similarity {
     * per-bucket counts into the histogram the same way an append folds
     * positive ones. Probes honor the tombstones immediately (the meta
     * stamps include the tombstones listing); the rows are physically
-    * dropped, and the tombstones cleared, by the next [[compactIndex]],
-    * [[ivfRetrain]], or [[graft.llm.Pq.ivfPqRetrain]].
+    * dropped, and the tombstones cleared, by the next [[Ann.compact]] or
+    * [[Ann.retrain]].
     *
     * Returns the number of NEWLY tombstoned ids (ids already tombstoned
     * are excluded up front — which is also what makes the LSH occupancy
@@ -752,30 +744,20 @@ object Similarity {
     * lives (the anti-join would hide the new row): compact first. */
   def annDelete(ids: DataFrame, idCol: String, indexDir: String): Long = {
     val spark = ids.sparkSession
-    healStrandedAppends(spark, indexDir)
+    val family = Ann.dirFamily(spark, indexDir)
+    val dataDirs = family.dataDirs(spark, indexDir)
+    healStrandedAppends(spark, indexDir, dataDirs)
     val wanted = ids.select(col(idCol).cast("long").as("id")).distinct()
     val fresh = tombstoneDf(spark, indexDir)
       .fold(wanted)(t => wanted.join(t.distinct(), Seq("id"), "left_anti"))
     val (nFresh, fenceId) = deleteBatchInfo(fresh)
     if (nFresh == 0) return 0L
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val hasOccupancy =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/occupancy"))
-    stagedAppend(spark, indexDir, s"del-$fenceId") { staging =>
+    stagedAppend(spark, indexDir, s"del-$fenceId", dataDirs) { staging =>
       fresh.coalesce(1).write.mode("overwrite")
         .parquet(s"$staging/$tombstonesName")
-      if (hasOccupancy) {
-        // negative per-bucket delta, read back from the staged write
-        // (the lshAppend idiom — survives a crash after the move)
-        val tomb = spark.read.schema("id LONG")
-          .parquet(s"$staging/$tombstonesName")
-        spark.read.parquet(s"$indexDir/vectors")
-          .join(tomb, Seq("id"))
-          .filter(col("bucket").isNotNull)
-          .groupBy("bucket").agg((-count(lit(1))).as("count"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/delta")
-      }
+      // the family's delta (lsh: negative occupancy counts) is read back
+      // from the staged write, so it survives a crash after the move
+      family.stageDelete(spark, indexDir, staging)
     }
     nFresh
   }
@@ -831,7 +813,7 @@ object Similarity {
   }
 
   /** The ANN families' sidecar phase: merge a staged occupancy delta
-    * (`staging/delta`, written by [[lshAppend]] — positive — and
+    * (`staging/delta`, written by an lsh [[Ann.append]] — positive — and
     * [[annDelete]] — negative) into the live occupancy histogram,
     * guarded against double-apply by an `_applied-<id>` marker written
     * atomically with the merged sidecar; move any staged tombstone
@@ -864,9 +846,9 @@ object Similarity {
       }
     }
 
-  /** Snapshot a live vectors dir's `_append-<id>` replay fences and
-    * return the action that recreates them inside a STAGED vectors dir —
-    * shared by the in-place rewrites ([[compactIndex]], [[ivfRetrain]]),
+  /** Snapshot a live data dir's `_append-<id>` replay fences and return
+    * the action that recreates them inside a STAGED index root —
+    * shared by the in-place rewrites ([[Ann.compact]], [[Ann.retrain]]),
     * whose rewritten index must keep fencing replays of batches it
     * already contains. Original mtimes are restored ([[commitStagedAppend]]
     * prunes oldest-first by mtime; recreating every fence at "now" would
@@ -883,22 +865,25 @@ object Similarity {
     * wanted-minus-tombstones anti-join is a set filter); it only fences
     * one crash/retry window, which cannot span a compaction (both are
     * single-writer maintenance verbs). */
-  private[llm] def carryAppendFences(fs: org.apache.hadoop.fs.FileSystem,
-                                liveVec: org.apache.hadoop.fs.Path)
+  private[llm] def carryAppendFences(spark: org.apache.spark.sql.SparkSession,
+                                     indexDir: String,
+                                     dataDir: String = "vectors")
       : String => Unit = {
-    val fences = fs.listStatus(liveVec)
+    val live = new org.apache.hadoop.fs.Path(s"$indexDir/$dataDir")
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    val fences = fs.listStatus(live)
       .filter(_.getPath.getName.startsWith("_append-"))
       .filterNot(_.getPath.getName.startsWith("_append-del-"))
       .map(st => (st.getPath.getName, st.getModificationTime))
-    stagedVec => fences.foreach { case (n, mtime) =>
-      val p = new org.apache.hadoop.fs.Path(s"$stagedVec/$n")
+    staging => fences.foreach { case (n, mtime) =>
+      val p = new org.apache.hadoop.fs.Path(s"$staging/$dataDir/$n")
       fs.create(p, true).close()
       fs.setTimes(p, mtime, -1)
     }
   }
 
-  /** The centroid sidecar write shared by [[ivfBuild]], [[ivfRetrain]],
-    * and [[compactIndex]] — one place to evolve the format. */
+  /** The centroid sidecar write shared by [[ivfBuild]], [[Ann.retrain]],
+    * and [[Ann.compact]] — one place to evolve the format. */
   private[llm] def writeCentroids(spark: org.apache.spark.sql.SparkSession,
                              dir: String,
                              centroids: Array[Array[Double]]): Unit = {
@@ -944,58 +929,6 @@ object Similarity {
     }
   }
 
-  /** APPEND rows to a built IVF index WITHOUT retraining: assign the new
-    * rows to the EXISTING centroids (standard IVF practice — the coarse
-    * quantizer is fixed at build time) and move them into the list
-    * partitions via the crash/retry-safe [[stagedAppend]] commit (a
-    * retried or replayed append of the same file-backed batch is a
-    * no-op, never a double-append). Cost is one pass over the NEW data
-    * only — no training, no rewrite of the existing corpus — which is
-    * what a daily-ingest pipeline needs at 100 TB. Readers are safe
-    * throughout: append never removes or rewrites a file an in-flight
-    * probe references.
-    *
-    * DRIFT BOUND: probes stay exact over whatever lands in the probed
-    * lists — appended vectors are found exactly as built ones are — but
-    * RECALL tracks how well the frozen centroids quantize the grown
-    * distribution. Appends drawn from the build-time distribution leave
-    * recall unchanged in expectation; drifted appends concentrate in few
-    * lists, shrinking the effective probed fraction. Retrain (full
-    * [[ivfBuild]]) once appended data is a significant fraction of the
-    * corpus — the cached lifecycle does this automatically at
-    * [[appendRebuildFactor]] growth; monitor [[ivfListStats]] for skew
-    * when driving the explicit lifecycle. `appendId` as in
-    * [[lshAppend]]: a stable caller-side batch identity that makes a
-    * replayed append a no-op. */
-  def ivfAppend(df: DataFrame, idCol: String, vecCol: String,
-                indexDir: String, appendId: Option[String] = None): Unit = {
-    val sess = df.sparkSession
-    val idx = ivfMeta(sess, indexDir)
-    // a metadata-carrying index (filtered-ANN builds) appends the same
-    // metadata columns, re-derived from the live layout — a batch
-    // missing one fails the select below loudly, never a silent
-    // null-metadata append
-    val metaCols = indexMetaCols(idx.vectors, Set("id", "v", "list"))
-    val assigned = ivfAssign(df, idCol, vecCol, idx.centroids, metaCols)
-    // schema fence: a mismatched id/vector type would strand the index
-    // with unmergeable parquet footers
-    ("id" +: "v" +: metaCols).foreach { c =>
-      // `.sql` compares modulo nullability: an in-memory batch's
-      // non-null array<float> appends safely into the index's nullable
-      // one — the fence is against TYPE drift (float vs double), which
-      // would strand the index with unmergeable footers
-      require(assigned.schema(c).dataType.sql == idx.vectors.schema(c).dataType.sql,
-        s"ivfAppend: column '$c' type ${assigned.schema(c).dataType.sql} != " +
-          s"index type ${idx.vectors.schema(c).dataType.sql}")
-    }
-    healStrandedAppends(sess, indexDir)
-    stagedAppend(sess, indexDir, appendId.getOrElse(appendBatchId(df))) { staging =>
-      clusteredWrite(assigned, "list", idx.centroids.length)
-        .write.mode("overwrite").partitionBy("list")
-        .parquet(s"$staging/vectors")
-    }
-  }
-
   /** Rows per IVF list — the skew monitor for the append lifecycle: one
     * column-pruned aggregation over the list partition column. */
   def ivfListStats(spark: org.apache.spark.sql.SparkSession,
@@ -1012,56 +945,14 @@ object Similarity {
               indexDir: String): Double = {
     val counts = ivfListStats(spark, indexDir)
       .collect().map(_.getAs[Long]("count"))
-    val k = readCentroids(spark, indexDir).length
+    // the list count from the memoized meta: no sidecar read per check
+    val k = Ann.partitions(spark, indexDir)
     if (counts.isEmpty || k == 0) 1.0
     else counts.max.toDouble * k / counts.sum.toDouble
   }
 
-  /** RETRAIN a drifted IVF index FROM ITS OWN ROWS: the index stores
-    * (id, vector), so the full corpus needed for retraining is the index
-    * itself — no access to the original source files, which a
-    * long-running ingest job no longer has (its increments are spread
-    * over an unbounded file history). New centroids are trained on a
-    * deterministic HASH-SPREAD sample — the build's lowest-id sample
-    * ([[trainCentroids]]) would systematically exclude appended rows
-    * (appends usually carry the highest ids), i.e. exactly the drifted
-    * data a retrain exists to absorb — then every row is reassigned and
-    * the whole index rewritten through [[stagedCommit]]. The `_append`
-    * replay fences are carried over, so a streaming replay of a batch
-    * the retrain already absorbed stays a no-op. Cost is one training
-    * pass over the bounded sample plus one assignment rewrite of the
-    * index — same order as [[compactIndex]] plus k-means, still never a
-    * source-corpus rescan. Single-writer, reader-quiesced, like every
-    * in-place rewrite. */
-  def ivfRetrain(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                 kLists: Int = 0, trainSample: Int = 2048): Array[Array[Double]] = {
-    healStrandedAppends(spark, indexDir)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val liveVec = new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-    val restoreFences = carryAppendFences(fs, liveVec)
-    val k = if (kLists > 0) kLists else readCentroids(spark, indexDir).length
-    // keep any metadata columns the build carried (filtered-ANN layouts)
-    // — a retrain must not silently strip the columns predicates serve
-    // on. Tombstoned rows are excluded from BOTH the training sample and
-    // the rewrite (the retrain is a physical-drop point, like compaction
-    // — the staged index never carries the tombstones dir)
-    val all = antiTombstoned(spark, indexDir,
-      spark.read.parquet(liveVec.toString))
-    val metaCols = indexMetaCols(all, Set("id", "v", "list"))
-    val rows = all.select("id" +: "v" +: metaCols map col: _*)
-    val centroids = retrainCentroids(rows, k, trainSample)
-    stagedCommit(spark, indexDir) { staging =>
-      clusteredWrite(ivfAssign(rows, "id", "v", centroids, metaCols), "list", k)
-        .write.mode("overwrite").partitionBy("list").parquet(s"$staging/vectors")
-      writeCentroids(spark, s"$staging/centroids", centroids)
-      restoreFences(s"$staging/vectors")
-    }
-    centroids
-  }
-
-  /** The retrain-time coarse-centroid trainer shared by [[ivfRetrain]]
-    * and [[graft.llm.Pq.ivfPqRetrain]]: a deterministic HASH-SPREAD
+  /** The retrain-time coarse-centroid trainer of [[Ann.retrain]] (ivf,
+    * and ivfpq from its float sidecar): a deterministic HASH-SPREAD
     * sample (ties under the hash broken by id, so a recomputed partition
     * mid-training feeds identical rows — the same property
     * [[trainCentroids]] gets from its id ordering) fed to the
@@ -1095,7 +986,7 @@ object Similarity {
       .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   /** Data-file count and per-partition max of an index's vectors dir —
-    * the read-amplification monitor that decides when [[compactIndex]]
+    * the read-amplification monitor that decides when [[Ann.compact]]
     * is worth running. Pure FS listing, no Spark job. */
   def indexFileStats(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String,
@@ -1112,146 +1003,9 @@ object Similarity {
     (perPart.sum, if (perPart.isEmpty) 0L else perPart.max)
   }
 
-  /** File counts before and after a [[compactIndex]] run. */
+  /** File counts before and after an [[Ann.compact]] run. */
   final case class CompactStats(filesBefore: Long, filesAfter: Long,
                                 tombstonesCleared: Long = 0L)
-
-  /** Whether an index has grown past its BUILD-SHAPE layout and a
-    * [[compactIndex]] would actually merge something. Build shape is NOT
-    * one file per partition: [[clusteredWrite]] salts each partition
-    * across up to numShufflePartitions/numValues writer tasks, so a
-    * freshly built (or just-compacted) index legitimately holds that
-    * many files per partition — gating on `> 1` would report a
-    * just-compacted index as perpetually due. One FS listing + one
-    * sidecar read (memoized warm), no Spark job. */
-  def compactionDue(spark: org.apache.spark.sql.SparkSession,
-                    indexDir: String, method: String): Boolean = {
-    val numValues = method match {
-      case "ivf" | "ivfpq" => readCentroids(spark, indexDir).length
-      case "lsh" => 1 << lshMeta(spark, indexDir).pBits
-      case other =>
-        throw new IllegalArgumentException(s"compactionDue: unknown method $other")
-    }
-    val saltN = math.max(1,
-      spark.sessionState.conf.numShufflePartitions / math.max(1, numValues))
-    indexFileStats(spark, indexDir)._2 > saltN
-  }
-
-  /** COMPACT an appended index: rewrite the vectors layout back to the
-    * file shape a fresh build would produce, WITHOUT recomputing anything
-    * — no k-means retrain, no signature pass, one clustered read-rewrite
-    * of the index's own files. Streaming ingest lands one part file per
-    * partition per micro-batch, so after N appends every probe of a
-    * partition reads N small files; compaction bounds that read
-    * amplification, which is what keeps an always-appending index
-    * servable at 100 TB between (much rarer, much costlier) retrains.
-    *
-    * The row MULTISET is preserved exactly, so probe results are
-    * unchanged — for LSH this is trivially true (signatures are stored,
-    * not recomputed); for IVF the centroid sidecar is carried over
-    * verbatim, so list assignments stay frozen exactly as [[ivfAppend]]
-    * left them. Sidecars are rewritten from the index itself (the LSH
-    * occupancy recount is the same column-pruned scan a build does —
-    * also repairing any histogram lost to an earlier crash), and the
-    * `vectors/_append-<id>` replay fences are CARRIED OVER so a
-    * streaming replay of an already-ingested batch stays a no-op across
-    * the compaction. The whole rewrite lands through [[stagedCommit]]:
-    * a crash anywhere leaves the previous index in place.
-    *
-    * Same contract as an explicit in-place rebuild: single-WRITER (run
-    * it from the index's owning ingest job, as [[graft.streaming
-    * .StreamRunner.annIngestJob]]'s `compactEvery` does). Readers racing
-    * the dir swap can see files vanish mid-scan; memoized probe
-    * snapshots ([[lshMeta]]/[[ivfMeta]]) re-resolve on their next use
-    * (every sidecar in their stamps is rewritten), and the serving
-    * stream ([[graft.streaming.StreamRunner.annServeBatches]]) treats a
-    * mid-rewrite FileNotFound as the self-healing shape it is — one
-    * re-resolve-and-retry — so serving survives a concurrent rewrite. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-                   indexDir: String, method: String): CompactStats = {
-    require(method == "lsh" || method == "ivf" || method == "ivfpq",
-      s"compactIndex: unknown method $method")
-    // an ivfpq index may carry the opt-in float sidecar — it appends,
-    // heals, and compacts in lockstep with the codes (losing it here
-    // would silently strip the index of its retrain/MMR capability)
-    val f32 = method == "ivfpq" &&
-      graft.llm.Pq.hasVectorSidecar(spark, indexDir)
-    val dataDirs =
-      if (f32) Seq("vectors", graft.llm.Pq.vectorSidecarDir)
-      else Seq("vectors")
-    // finish any crashed-but-committed append first: its rows must be
-    // live (and its fence marker durable) before the rewrite snapshots
-    // the vectors dir; un-committed stagings wrote nothing live and are
-    // re-staged from scratch by their owner's retry
-    healStrandedAppends(spark, indexDir, dataDirs)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val liveVec = new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-    val restoreFences = carryAppendFences(fs, liveVec)
-    val (filesBefore, _) = indexFileStats(spark, indexDir)
-    // the rewrite is where tombstoned rows are PHYSICALLY dropped — the
-    // staged index never carries them (nor the tombstones dir itself,
-    // which the stagedCommit swap discards), so after compaction the
-    // probes' anti-join plans away and a previously deleted id may be
-    // legitimately re-appended
-    val tombstonesCleared =
-      tombstoneDf(spark, indexDir).map(_.distinct().count()).getOrElse(0L)
-    val vectors = antiTombstoned(spark, indexDir,
-      spark.read.parquet(liveVec.toString))
-    val lsh = if (method == "lsh") Some(lshMeta(spark, indexDir)) else None
-    val centroids =
-      if (method == "ivf" || method == "ivfpq") readCentroids(spark, indexDir)
-      else Array.empty[Array[Double]]
-    // ivfpq: the codebooks sidecar is frozen data — snapshot it (rows AND
-    // schema: the `enc` encoding marker must survive, or a residual index
-    // would silently re-read as raw after compaction) before the swap so
-    // the staged index carries it over verbatim
-    val codebooks =
-      if (method == "ivfpq") {
-        val df = spark.read.parquet(s"$indexDir/codebooks")
-        Some((df.collect(), df.schema))
-      } else None
-    val (partCol, numValues) = lsh match {
-      case Some(m) => ("pband", 1 << m.pBits)
-      case None    => ("list", centroids.length)
-    }
-    stagedCommit(spark, indexDir) { staging =>
-      clusteredWrite(vectors, partCol, numValues)
-        .write.mode("overwrite").partitionBy(partCol)
-        .parquet(s"$staging/vectors")
-      if (f32)
-        // sorted by (partCol, id), as the build/append/retrain writes:
-        // the sidecar's consumers read it through id-In pushdowns, and
-        // a compaction must not trade their tight row-group stats away
-        clusteredWrite(
-            antiTombstoned(spark, indexDir, spark.read.parquet(
-              s"$indexDir/${graft.llm.Pq.vectorSidecarDir}")),
-            partCol, numValues)
-          .sortWithinPartitions(partCol, "id")
-          .write.mode("overwrite").partitionBy(partCol)
-          .parquet(s"$staging/${graft.llm.Pq.vectorSidecarDir}")
-      if (method == "ivf" || method == "ivfpq") {
-        writeCentroids(spark, s"$staging/centroids", centroids)
-        codebooks.foreach { case (rows, schema) =>
-          spark.createDataFrame(
-              java.util.Arrays.asList(rows: _*), schema)
-            .coalesce(1).write.mode("overwrite").parquet(s"$staging/codebooks")
-        }
-      }
-      else lsh.foreach { m =>
-        import spark.implicits._
-        Seq((m.nBits, m.dim, m.pBits)).toDF("n_bits", "dim", "partition_bits")
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/meta")
-        spark.read.parquet(s"$staging/vectors")
-          .filter(col("bucket").isNotNull)
-          .groupBy("bucket").count()
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/occupancy")
-      }
-      restoreFences(s"$staging/vectors")
-    }
-    CompactStats(filesBefore, indexFileStats(spark, indexDir)._1,
-      tombstonesCleared)
-  }
 
   /** Driver-memoized IVF index state — the exact counterpart of
     * [[lshMeta]]: the centroid sidecar (whose read is otherwise a Spark
@@ -1575,16 +1329,7 @@ object Similarity {
     // (NULL bucket) and commit a silently-useless index whose probes
     // return zero rows forever — fail the build loudly instead (one
     // first-non-null-row peek; the IVF family's centroid-dim require)
-    val sample = df.select(col(vecCol)).filter(col(vecCol).isNotNull)
-      .head(1)
-    // an empty corpus would commit an index whose vectors dir has no
-    // files — every later read dies on parquet schema inference with an
-    // unrelated-looking error (the lshAppend explicit-schema lesson);
-    // fail the build with the real reason
-    require(sample.nonEmpty,
-      "lshBuild: corpus has no non-null vectors — refusing to commit an " +
-        "empty index (bootstrap from a non-empty backfill)")
-    val got = sample.head.getSeq[Any](0).size
+    val got = firstVectorDim(df, vecCol, "lshBuild")
     require(got == dim,
       s"lshBuild: corpus vector dim $got != configured dim $dim — " +
         "probes over a mismatched hyperplane family would silently " +
@@ -1617,65 +1362,17 @@ object Similarity {
     }
   }
 
-  /** APPEND rows to a built LSH index WITHOUT a rebuild — and, unlike the
-    * IVF append, EXACTLY: the hyperplanes are a fixed seeded function of
-    * (nBits, dim) recorded in the meta sidecar, so signing the new rows
-    * with the recorded family and appending into the pband partitions
-    * yields an index bit-identical (as a row multiset) to a full rebuild
-    * over the grown corpus. One signature pass over the NEW data only;
-    * readers are safe throughout (no existing file is touched), and the
-    * whole append goes through the crash/retry-safe [[stagedAppend]]
-    * commit — a retried or replayed append of the same file-backed batch
-    * is a no-op, never a double-append. The occupancy sidecar is MERGED
-    * (old histogram + the batch's STAGED per-bucket delta — durable in
-    * the staging dir, so the merge survives a crash after the part-file
-    * moves) and swapped atomically with its `_applied-<id>` marker via
-    * [[replaceSidecar]]; its rewrite is also what advances the meta
-    * stamp for ZERO-job warm radius planning over the grown index. A
-    * legacy index with no occupancy sidecar (or one lost to a crash
-    * mid-swap) gets a full recount from the index's bucket column — a
-    * column-pruned scan, not a corpus signature pass. Appends accumulate
-    * part files; rebuild to compact once growth is large (the cached
-    * lifecycle does so at [[appendRebuildFactor]]).
-    *
-    * `appendId` overrides the default batch identity (a fingerprint of
-    * the file-backed batch's plan+files, or a fresh UUID for in-memory
-    * frames). Pass a STABLE caller-side identity — e.g. streaming
-    * `checkpoint#batchId`, as [[graft.streaming.StreamRunner.annIngestJob]]
-    * does — when the frame itself can't prove two calls are the same
-    * logical batch: the applied marker then makes a replay a no-op. */
-  def lshAppend(df: DataFrame, idCol: String, vecCol: String,
-                indexDir: String, appendId: Option[String] = None): Unit = {
-    val sess = df.sparkSession
-    val idx = lshMeta(sess, indexDir)
-    // carry the index's metadata columns, as ivfAppend does
-    val metaCols = indexMetaCols(idx.vectors, Set("id", "v", "bucket", "pband"))
-    val sigs = lshBuckets(df, idCol, vecCol, idx.nBits, idx.dim, metaCols)
-      .withColumn("pband",
-        shiftrightunsigned(col("bucket"), idx.nBits - idx.pBits))
-    ("id" +: "v" +: metaCols).foreach { c =>
-      // modulo nullability, as in ivfAppend's fence
-      require(sigs.schema(c).dataType.sql == idx.vectors.schema(c).dataType.sql,
-        s"lshAppend: column '$c' type ${sigs.schema(c).dataType.sql} != " +
-          s"index type ${idx.vectors.schema(c).dataType.sql}")
-    }
-    healStrandedAppends(sess, indexDir)
-    stagedAppend(sess, indexDir, appendId.getOrElse(appendBatchId(df))) { staging =>
-      clusteredWrite(sigs, "pband", 1 << idx.pBits)
-        .write.mode("overwrite").partitionBy("pband")
-        .parquet(s"$staging/vectors")
-      // the per-bucket DELTA stages alongside the vectors: the occupancy
-      // merge must survive a crash AFTER the part-file moves, when the
-      // staged vectors are gone from staging and nothing is left to
-      // recount cheaply. Read back from the staged write (column-pruned)
-      // rather than recomputing signatures over the corpus. The read
-      // carries an EXPLICIT schema: an all-filtered-out (empty) batch
-      // stages zero part files, and a schema-inferring read of a
-      // footerless dir would throw where the append should no-op.
-      sess.read.schema(sigs.schema).parquet(s"$staging/vectors")
-        .filter(col("bucket").isNotNull).groupBy("bucket").count()
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/delta")
-    }
+  /** The dim of the corpus's first non-null vector (one-row peek). An
+    * empty corpus fails here: it would commit an index whose vectors dir
+    * has no files, and every later read would die on parquet schema
+    * inference with an unrelated-looking error. */
+  private[llm] def firstVectorDim(df: DataFrame, vecCol: String,
+                                  who: String): Int = {
+    val sample = df.select(col(vecCol)).filter(col(vecCol).isNotNull).head(1)
+    require(sample.nonEmpty,
+      s"$who: corpus has no non-null vectors — refusing to commit an " +
+        "empty index (bootstrap from a non-empty backfill)")
+    sample.head.getSeq[Any](0).size
   }
 
   /** Driver-memoized LSH index metadata: the (n_bits, dim, partition_bits)
@@ -1865,55 +1562,6 @@ object Similarity {
     r
   }
 
-  /** The embedding dimension a built index expects — from the memoized
-    * sidecar meta (LSH: the (n_bits, dim) row; IVF: the centroid width),
-    * so a serving layer can validate query dims BEFORE probing at zero
-    * Spark jobs on the warm path. */
-  def indexDim(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-               method: String): Int = method match {
-    case "lsh"   => lshMeta(spark, indexDir).dim
-    case "ivf"   => ivfMeta(spark, indexDir).centroids.head.length
-    case "ivfpq" => Pq.ivfPqDim(spark, indexDir)
-    case other => throw new IllegalArgumentException(s"indexDim: unknown method $other")
-  }
-
-  /** The (id, vector) column TYPES of a built index — what an appended
-    * batch must carry (modulo nullability). The streaming ingest job uses
-    * this to type its file stream from the index itself, so a watched
-    * directory that is still EMPTY at job start needs no schema
-    * inference, and jsonl's array<double> vectors get cast to the index's
-    * element type before the append fence sees them. */
-  def indexVectorTypes(spark: org.apache.spark.sql.SparkSession,
-                       indexDir: String, method: String)
-      : (org.apache.spark.sql.types.DataType, org.apache.spark.sql.types.DataType) = {
-    // ivfpq stores CODES, not vectors — appended increments still arrive
-    // as float/double arrays (ivfPqAppend encodes them), so the stream
-    // types its vector column array<double> (jsonl's natural shape;
-    // Spark 4's parquet type widening accepts narrower float files)
-    if (method == "ivfpq") {
-      val vectors = Pq.ivfPqMeta(spark, indexDir).vectors
-      return (vectors.schema("id").dataType,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType))
-    }
-    val vectors = method match {
-      case "lsh" => lshMeta(spark, indexDir).vectors
-      case "ivf" => ivfMeta(spark, indexDir).vectors
-      case other =>
-        throw new IllegalArgumentException(s"indexVectorTypes: unknown method $other")
-    }
-    (vectors.schema("id").dataType, vectors.schema("v").dataType)
-  }
-
-  /** Bootstrap an index from a parquet corpus when none exists at
-    * `indexDir` yet (the method's always-written sidecar — `meta` for
-    * LSH, `centroids` for IVF — is the built marker; the build itself
-    * commits atomically via [[stagedCommit]]) — the shared
-    * entry the serving ([[graft.cli.ServeCli]]) and ingest
-    * ([[graft.cli.IngestCli]]) jobs use so one relaunch-safe command
-    * takes a fresh host from "corpus on disk" to a live index. An
-    * EXISTING index is never rebuilt here: refreshing belongs to
-    * [[lshAppend]]/[[ivfAppend]] or an explicit rebuild. */
   /** Detect a BUILT index dir's kind from its layout sidecars — the
     * self-describing dispatch the `index:REF` catalog vars and the DFL
     * probe stages use (an index dir always knows what it is; callers
@@ -1931,35 +1579,6 @@ object Similarity {
     else if (has("centroids") && has("vectors")) Some("ivf")
     else if (has("meta") && has("vectors")) Some("lsh")
     else None
-  }
-
-  def ensureIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                  method: String, corpusUri: String, idCol: String,
-                  vecCol: String, nBits: Int = 16, dim: Int = 64,
-                  partitionBits: Int = 8, kLists: Int = 16,
-                  metaCols: Seq[String] = Nil,
-                  pqM: Int = 8, pqK: Int = 64,
-                  keepVectors: Boolean = false,
-                  opq: Boolean = false): Unit = {
-    require(method == "lsh" || method == "ivf" || method == "ivfpq",
-      s"ensureIndex: unknown method $method")
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val builtMarker = if (method == "lsh") "meta" else "centroids"
-    if (fs.exists(new org.apache.hadoop.fs.Path(indexDir, builtMarker))) return
-    val corpus = spark.read.parquet(corpusUri)
-    method match {
-      case "ivf" =>
-        ivfBuild(corpus, idCol, vecCol, indexDir, kLists, metaCols = metaCols)
-        ()
-      case "ivfpq" =>
-        Pq.ivfPqBuild(corpus, idCol, vecCol, indexDir, kLists, pqM, pqK,
-          metaCols = metaCols, keepVectors = keepVectors, opq = opq)
-      case _ =>
-        lshBuild(corpus, idCol, vecCol, indexDir, nBits, dim, partitionBits,
-          metaCols)
-        ()
-    }
   }
 
 }

@@ -946,8 +946,9 @@ object StreamRunner {
                metricsSink: Option[ServeBatchMetrics => Unit] = None,
                refine: Option[Int] = None)
               (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(method == "lsh" || method == "ivf" || method == "ivfpq",
-      s"annServe: unknown method $method")
+    // the family is read from the layout; `method` is only checked
+    // against a built one, once, here
+    Ann.checkMethod(queries.sparkSession, indexDir, method, "annServe")
     require(maxQueriesPerBatch > 0,
       s"annServe: maxQueriesPerBatch must be positive, got $maxQueriesPerBatch")
     // REFINED serving (the FAISS refine pattern): compressed ADC
@@ -959,7 +960,7 @@ object StreamRunner {
     // exact verify) — a sidecar-less index still rejects loudly.
     refine.foreach { f =>
       require(f >= 1, s"annServe: refine factor must be >= 1, got $f")
-      require(method == "ivfpq",
+      require(!Ann.storesFloats(method),
         "annServe: --refine applies only to ivfpq (float layouts " +
           "already rank by true cosines)")
       require(graft.llm.Pq.hasVectorSidecar(queries.sparkSession, indexDir),
@@ -1051,8 +1052,7 @@ object StreamRunner {
             // ...and so does the telemetry: without the re-begin, a
             // stale-read retry would double-record every probe leg
             if (metricsSink.isDefined) graft.llm.ProbeStats.begin()
-            val expectDim =
-              graft.llm.Similarity.indexDim(batch.sparkSession, indexDir, method)
+            val expectDim = Ann.dim(batch.sparkSession, indexDir)
             qs.groupBy(_._2.size).foreach { case (dim, group) =>
               if (dim != expectDim)
                 log.warn(s"annServe: skipping ${group.size} queries with dim " +
@@ -1351,8 +1351,7 @@ object StreamRunner {
                refine: Option[Int] = None)
               (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(annMethod == "lsh" || annMethod == "ivf" || annMethod == "ivfpq",
-      s"hybridServe: unknown ann method $annMethod")
+    val annFloats = Ann.storesFloats(annMethod)
     require(k > 0, s"hybridServe: k must be positive, got $k")
     require(pool >= k, s"hybridServe: pool ($pool) must be >= k ($k)")
     lambda.foreach(l => require(l >= 0.0 && l <= 1.0,
@@ -1364,7 +1363,7 @@ object StreamRunner {
     // priced reads. Without the sidecar the compressed index serves the
     // RRF-fused form only and rejects --lambda loudly instead of
     // silently reconstructing approximate vectors from codes.
-    require(lambda.isEmpty || annMethod != "ivfpq" ||
+    require(lambda.isEmpty || annFloats ||
         graft.llm.Pq.hasVectorSidecar(queries.sparkSession, annIndexDir),
       "hybridServe: --lambda (MMR) needs float vectors; this ivfpq " +
         "index carries no vectors_f32 sidecar — build it with " +
@@ -1372,8 +1371,8 @@ object StreamRunner {
     // where the MMR vector fetch reads from: the index's own vectors for
     // float layouts, the sidecar for a keepVectors ivfpq index
     val mmrVectorsDir =
-      if (annMethod == "ivfpq") s"$annIndexDir/${graft.llm.Pq.vectorSidecarDir}"
-      else s"$annIndexDir/vectors"
+      if (annFloats) s"$annIndexDir/vectors"
+      else s"$annIndexDir/${graft.llm.Pq.vectorSidecarDir}"
     require(maxQueriesPerBatch > 0,
       s"hybridServe: maxQueriesPerBatch must be positive, got $maxQueriesPerBatch")
     // REFINED semantic leg (the annServe --refine contract): compressed
@@ -1383,7 +1382,7 @@ object StreamRunner {
     // at pool×refine per round, same exact-rerank finalize).
     refine.foreach { f =>
       require(f >= 1, s"hybridServe: refine factor must be >= 1, got $f")
-      require(annMethod == "ivfpq",
+      require(!annFloats,
         "hybridServe: --refine applies only to ivfpq (float layouts " +
           "already rank by true cosines)")
       require(graft.llm.Pq.hasVectorSidecar(queries.sparkSession, annIndexDir),
@@ -1391,16 +1390,13 @@ object StreamRunner {
           s"($annIndexDir/${graft.llm.Pq.vectorSidecarDir} is missing) — " +
           "build with keepVectors (--keep-vectors)")
     }
-    // the user-supplied annMethod must MATCH the dir's self-described
-    // layout: a mismatch would otherwise fail every micro-batch with an
-    // opaque meta/parquet read error deep in the probe, instead of
-    // failing job construction with a sentence (the DFL hybridProbe
-    // stage self-dispatches via indexKind; a serving job pins the method
-    // in its launch config, so it verifies instead)
-    graft.llm.Similarity.indexKind(queries.sparkSession, annIndexDir)
-      .foreach(kind => require(kind == annMethod,
-        s"hybridServe: --ann-method $annMethod but $annIndexDir is a " +
-          s"built '$kind' index"))
+    // `annMethod` must MATCH the dir's self-described layout: a mismatch
+    // would otherwise fail every micro-batch with an opaque meta/parquet
+    // read error deep in the probe, instead of failing job construction
+    // with a sentence (the DFL hybridProbe stage self-dispatches via
+    // indexKind; a serving job pins the method in its launch config, so
+    // it verifies instead)
+    Ann.checkMethod(queries.sparkSession, annIndexDir, annMethod, "hybridServe")
     graft.llm.Similarity.indexKind(queries.sparkSession, bm25IndexDir)
       .foreach(kind => require(kind == "bm25",
         s"hybridServe: $bm25IndexDir is a built '$kind' index, not bm25"))
@@ -1448,8 +1444,7 @@ object StreamRunner {
             served = 0 // reset on retry — the counter reports ONE attempt
             // ...and the telemetry with it (no double-recorded legs)
             if (metricsSink.isDefined) graft.llm.ProbeStats.begin()
-            val expectDim =
-              graft.llm.Similarity.indexDim(spark, annIndexDir, annMethod)
+            val expectDim = Ann.dim(spark, annIndexDir)
             val (good, badDim) = qs.partition(_._3.size == expectDim)
             served = good.size
             if (badDim.nonEmpty)
@@ -1561,7 +1556,7 @@ object StreamRunner {
     * JSON array; vec array<double>), so an empty queries dir at job
     * start works. Both indexes must already exist — bootstrap with
     * [[graft.llm.Retrieval.ensureBm25Index]] +
-    * [[graft.llm.Similarity.ensureIndex]] (the CLI's `--build-from`
+    * [[graft.llm.Ann.ensure]] (the CLI's `--build-from`
     * does). `once = true` drains the available queries and stops. */
   def hybridServeJob(spark: SparkSession, queriesUri: String, format: String,
                      qidCol: String, termsCol: String, vecCol: String,
@@ -1613,9 +1608,10 @@ object StreamRunner {
     * loop "bulk build → streaming appends → streaming serving": a
     * watched directory of corpus files (parquet/jsonl/csv/tsv rows of
     * (idCol, vecCol)) whose every new file becomes a micro-batch
-    * appended to a LIVE index via [[graft.llm.Similarity.lshAppend]] /
-    * [[ivfAppend]] — one signature/assignment pass over the NEW rows
-    * only, never a corpus rescan.
+    * appended to a LIVE index via [[graft.llm.Ann.append]] — one
+    * signature/assignment/encode pass over the NEW rows only, never a
+    * corpus rescan. The family is read from the index layout; `method`
+    * is checked against it at construction.
     *
     * EXACTLY-ONCE appends end to end: the checkpoint stops committed
     * files from being re-read across restarts, and each batch's append
@@ -1627,7 +1623,7 @@ object StreamRunner {
     * index dir, and rebuild/retrain only while it is stopped.
     *
     * The index must already exist — bootstrap with
-    * [[graft.llm.Similarity.ensureIndex]] (the `ingest-ann` CLI's
+    * [[graft.llm.Ann.ensure]] (the `ingest-ann` CLI's
     * `--build-from` does) so the stream appends against the bulk-built
     * backfill. LSH appends reproduce a full rebuild exactly; IVF appends
     * assign to frozen centroids (monitor drift via `ivfListStats`,
@@ -1640,10 +1636,10 @@ object StreamRunner {
     * each append lands one part file per partition, so a
     * long-running ingest otherwise grows probe read amplification
     * without bound. In the slot the job normally runs
-    * [[graft.llm.Similarity.compactIndex]]; for an IVF index with
-    * `retrainSkewFactor > 0` it first checks [[graft.llm.Similarity
-    * .ivfSkew]] and, past the factor, runs [[graft.llm.Similarity
-    * .ivfRetrain]] INSTEAD (a retrain rewrites everything — compacting
+    * [[graft.llm.Ann.compact]]; for an ivf (or keepVectors ivfpq) index
+    * with `retrainSkewFactor > 0` it first checks [[graft.llm.Similarity
+    * .ivfSkew]] and, past the factor, runs [[graft.llm.Ann.retrain]]
+    * INSTEAD (a retrain rewrites everything — compacting
     * the same batch would be redundant) — closing the drift loop the
     * frozen-centroid append otherwise leaves to ops. Maintenance inside
     * `foreachBatch` is serialized with the appends (the job owns the
@@ -1701,8 +1697,7 @@ object StreamRunner {
                    once: Boolean, compactEvery: Int = 0,
                    retrainSkewFactor: Double = 0.0)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(method == "lsh" || method == "ivf" || method == "ivfpq",
-      s"annIngestJob: unknown method $method")
+    Ann.checkMethod(spark, indexDir, method, "annIngestJob")
     // csv/tsv carry vectors as strings — there is no lossless cast to an
     // array column, so only the two formats that really append are offered
     require(format == "parquet" || format == "jsonl",
@@ -1712,26 +1707,19 @@ object StreamRunner {
     require(retrainSkewFactor <= 0 || compactEvery > 0,
       "annIngestJob: retrainSkewFactor requires compactEvery > 0 (the " +
         "maintenance cadence the skew check runs on)")
-    require(retrainSkewFactor <= 0 || method == "ivf" || method == "ivfpq",
-      "annIngestJob: retrainSkewFactor applies only to ivf/ivfpq (lsh " +
-        "appends are exact and never drift)")
-    // an ivfpq retrain re-encodes from the float sidecar — codes cannot
-    // re-encode themselves. The index exists at job construction (the
-    // CLI bootstraps via --build-from first), so a missing sidecar fails
-    // HERE with the build advice, not hours in at the first skew firing.
-    if (method == "ivfpq" && retrainSkewFactor > 0)
-      require(graft.llm.Pq.hasVectorSidecar(spark, indexDir),
-        s"annIngestJob: --retrain-skew on an ivfpq index needs the float " +
-          s"sidecar ($indexDir/${graft.llm.Pq.vectorSidecarDir} is " +
-          "missing) — build with keepVectors (--keep-vectors)")
+    // an lsh index never drifts, and an ivfpq retrain re-encodes from the
+    // float sidecar — codes cannot re-encode themselves. The index exists
+    // at job construction (the CLI bootstraps via --build-from first), so
+    // either fails HERE, not hours in at the first skew firing.
+    if (retrainSkewFactor > 0)
+      Ann.requireRetrainable(spark, indexDir, "annIngestJob")
     // the stream's schema comes from the INDEX, not file inference: the
     // watched dir is legitimately EMPTY on first launch (the backfill was
     // --build-from; increments arrive later), and inference over an empty
     // dir would fail the job before its checkpoint exists. jsonl parses
     // numbers as array<double>; cast to the index's element type so the
     // append fence compares true types, not formats.
-    val (idType, vecType) =
-      graft.llm.Similarity.indexVectorTypes(spark, indexDir, method)
+    val (idType, vecType) = Ann.streamTypes(spark, indexDir)
     val streamSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(idCol, idType),
       org.apache.spark.sql.types.StructField(vecCol,
@@ -1747,18 +1735,8 @@ object StreamRunner {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           if (!batch.isEmpty) {
             val t0 = System.nanoTime()
-            val id = Some(graft.util.Md5.hex(s"$checkpoint#$batchId").take(16))
-            method match {
-              case "ivf" => graft.llm.Similarity.ivfAppend(batch.toDF(),
-                idCol, vecCol, indexDir, appendId = id)
-              // frozen coarse centroids AND frozen codebooks — the
-              // compounded drift bound ivfPqAppend documents; the
-              // compact/GC maintenance below already speaks "ivfpq"
-              case "ivfpq" => graft.llm.Pq.ivfPqAppend(batch.toDF(),
-                idCol, vecCol, indexDir, appendId = id)
-              case _ => graft.llm.Similarity.lshAppend(batch.toDF(),
-                idCol, vecCol, indexDir, appendId = id)
-            }
+            Ann.append(batch.toDF(), idCol, vecCol, indexDir,
+              appendId = Some(graft.util.Md5.hex(s"$checkpoint#$batchId").take(16)))
             val appendMs = (System.nanoTime() - t0) / 1000000
             var skewSeen: Option[Double] = None
             var action = "none"
@@ -1771,39 +1749,33 @@ object StreamRunner {
             if (slotOpened) {
               val mt0 = System.nanoTime()
               // the skew monitor reads the shared `list` column, so one
-              // check serves both quantized families; the retrain verb
-              // dispatches — ivf re-trains from its own (id, v) rows,
-              // ivfpq re-trains + re-encodes from its float sidecar
-              // (presence verified at job construction)
-              val retrained = (method == "ivf" || method == "ivfpq") &&
-                retrainSkewFactor > 0 && {
+              // check serves both quantized families (retrainability was
+              // verified at job construction)
+              val retrained = retrainSkewFactor > 0 && {
                 val skew = graft.llm.Similarity.ivfSkew(spark, indexDir)
                 skewSeen = Some(skew)
                 skew > retrainSkewFactor && {
                   log.warn(s"$method skew $skew > $retrainSkewFactor at " +
                     s"$indexDir; retraining from index rows")
-                  if (method == "ivfpq") graft.llm.Pq.ivfPqRetrain(spark, indexDir)
-                  else graft.llm.Similarity.ivfRetrain(spark, indexDir)
+                  Ann.retrain(spark, indexDir)
                   action = "retrain"
                   true
                 }
               }
-              if (!retrained) {
-                // compaction rewrites the WHOLE index (cost ~ index
-                // size, not batch size) — skip it while every partition
-                // is still at build-shape file count (salt-aware:
-                // Similarity.compactionDue), so an aggressive cadence
-                // over small/empty increments stays listing-only
-                if (graft.llm.Similarity.compactionDue(spark, indexDir, method)) {
-                  val st = graft.llm.Similarity.compactIndex(spark, indexDir, method)
-                  action = "compact"
-                  tombsCleared = st.tombstonesCleared
-                  log.info(s"compacted $indexDir after batch $batchId: " +
-                    s"${st.filesBefore} -> ${st.filesAfter} data files" +
-                    (if (st.tombstonesCleared > 0)
-                       s", ${st.tombstonesCleared} tombstones cleared"
-                     else ""))
-                }
+              // compaction rewrites the WHOLE index (cost ~ index size,
+              // not batch size) — skip it while every partition is still
+              // at build-shape file count (salt-aware: Ann.compactionDue),
+              // so an aggressive cadence over small/empty increments stays
+              // listing-only
+              if (!retrained && Ann.compactionDue(spark, indexDir)) {
+                val st = Ann.compact(spark, indexDir)
+                action = "compact"
+                tombsCleared = st.tombstonesCleared
+                log.info(s"compacted $indexDir after batch $batchId: " +
+                  s"${st.filesBefore} -> ${st.filesAfter} data files" +
+                  (if (st.tombstonesCleared > 0)
+                     s", ${st.tombstonesCleared} tombstones cleared"
+                   else ""))
               }
               actionMs = (System.nanoTime() - mt0) / 1000000
             }

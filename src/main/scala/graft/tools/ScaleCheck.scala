@@ -341,18 +341,18 @@ object ScaleCheck {
         .select((col("vec_id") + lit(900000000L)).as("vec_id"),
           col("embedding"))
       time("lsh_append")({
-        graft.llm.Similarity.lshAppend(inc, "vec_id", "embedding", lshDir,
+        Ann.append(inc, "vec_id", "embedding", lshDir,
           appendId = Some(s"scale-$mult")); 200L
       })
       time("ivf_append")({
-        graft.llm.Similarity.ivfAppend(inc, "vec_id", "embedding", idxDir,
+        Ann.append(inc, "vec_id", "embedding", idxDir,
           appendId = Some(s"scale-$mult")); 200L
       })
       // the compressed-index append: frozen codebooks + frozen
       // centroids, one encode pass over the NEW rows only — same
       // flat-in-mult contract as the float appends
       time("ivfpq_append")({
-        graft.llm.Pq.ivfPqAppend(inc, "vec_id", "embedding", pqDir,
+        Ann.append(inc, "vec_id", "embedding", pqDir,
           appendId = Some(s"scale-$mult")); 200L
       })
       // the RETRAIN posture (keepVectors lifecycle): the rewrite is one
@@ -367,7 +367,7 @@ object ScaleCheck {
       // timed block holds ONLY the retrain (a corpus count here would
       // inflate the ~linear-in-mult posture with an unrelated pass)
       time("ivfpq_retrain")(
-        graft.llm.Pq.ivfPqRetrain(spark, kvDir).length.toLong)
+        Ann.retrain(spark, kvDir).length.toLong)
       time("ivfpq_probe_retrained")(
         Ann.probe(Ann.Dir(spark, kvDir), Ann.Probe(Ann.One(q), Ann.TopK(10))).count())
       // the REFINED probe must stay probe-flat too: the rerank touches
@@ -415,7 +415,7 @@ object ScaleCheck {
       // built-index flat cost, and answers must be unchanged. rows=
       // data-file delta
       time("lsh_compact")({
-        val st = graft.llm.Similarity.compactIndex(spark, lshDir, "lsh")
+        val st = Ann.compact(spark, lshDir)
         st.filesBefore - st.filesAfter
       })
       time("lsh_probe_compacted")(Ann.probe(Ann.Dir(spark, lshDir),

@@ -96,7 +96,7 @@ class DeleteSpec extends AnyFunSuite {
     val q = qVec(0)
     val before = Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(10)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val st = Similarity.compactIndex(spark, dir, "lsh")
+    val st = Ann.compact(spark, dir)
     assert(st.tombstonesCleared == 3L)
     assert(!new java.io.File(s"$dir/tombstones").exists(),
       "compaction must clear the tombstone sidecar")
@@ -111,7 +111,7 @@ class DeleteSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/occupancy")
       .agg(sum("count")).head().getLong(0) == 297L)
     // a compaction with no tombstones reports zero cleared
-    assert(Similarity.compactIndex(spark, dir, "lsh").tombstonesCleared == 0L)
+    assert(Ann.compact(spark, dir).tombstonesCleared == 0L)
   }
 
   test("re-issued delete after compact+re-append takes effect (del fences do not outlive their tombstones)") {
@@ -128,10 +128,10 @@ class DeleteSpec extends AnyFunSuite {
       nBits = 8, dim = 64, partitionBits = 4)
     val victims = Seq(5L, 6L, 7L)
     assert(Similarity.annDelete(spark, dir, victims) == 3L)
-    Similarity.compactIndex(spark, dir, "lsh")
+    Ann.compact(spark, dir)
     assert(!new java.io.File(s"$dir/tombstones").exists())
     // the documented supported sequence: re-append after the clear
-    Similarity.lshAppend(corpus.filter($"vec_id".isin(victims: _*)),
+    Ann.append(corpus.filter($"vec_id".isin(victims: _*)),
       "vec_id", "embedding", dir)
     assert(ids(Ann.probe(Ann.Dir(spark, dir),
       Ann.Probe(Ann.One(qVec(5)), Ann.TopK(10)))).contains(5L),
@@ -148,7 +148,7 @@ class DeleteSpec extends AnyFunSuite {
     Similarity.ivfBuild(emb.filter($"vec_id" < 300), "vec_id", "embedding",
       dir, kLists = 4)
     Similarity.annDelete(spark, dir, Seq(10L, 11L))
-    Similarity.ivfRetrain(spark, dir)
+    Ann.retrain(spark, dir)
     assert(!new java.io.File(s"$dir/tombstones").exists())
     val raw = spark.read.parquet(s"$dir/vectors")
       .select("id").collect().map(_.getLong(0)).toSet
@@ -181,7 +181,7 @@ class DeleteSpec extends AnyFunSuite {
       Ann.Probe(Ann.One(q), Ann.TopK(10), tuning = Some(4))))
     assert(victims.forall(v => !plain.contains(v)), "leaked into ADC topk")
     // compaction drops the rows from BOTH the codes and the float sidecar
-    val st = Similarity.compactIndex(spark, dir, "ivfpq")
+    val st = Ann.compact(spark, dir)
     assert(st.tombstonesCleared == victims.size.toLong)
     val rawCodes = spark.read.parquet(s"$dir/vectors")
       .select("id").collect().map(_.getLong(0)).toSet
@@ -301,7 +301,7 @@ class DeleteSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(got == brute, s"$got != $brute")
     // compaction keeps the metadata columns AND drops the tombstones
-    Similarity.compactIndex(spark, dir, "ivf")
+    Ann.compact(spark, dir)
     val cols = spark.read.parquet(s"$dir/vectors").columns.toSet
     assert(cols.contains("flag"))
     assert(Ann.probe(Ann.Dir(spark, dir),

@@ -965,7 +965,7 @@ class LlmSpec extends AnyFunSuite {
         emb.filter($"vec_id" === 0)
           .select(($"vec_id" + 900000L).as("vec_id"), $"embedding"), "embedding")
       .select($"vec_id", $"q_codes")
-    Similarity.lshAppend(inc, "vec_id", "q_codes", qDir)
+    Ann.append(inc, "vec_id", "q_codes", qDir)
     assert(Ann.probe(Ann.Dir(spark, qDir), Ann.Probe(Ann.One(q), Ann.TopK(3)))
       .collect().map(_.getLong(0)).contains(900000L))
     // IVF: kmeans + assignment + probe over codes run mechanically, but
@@ -2013,7 +2013,7 @@ class LlmSpec extends AnyFunSuite {
     val extra = emb.filter($"vec_id" === 0)
       .select(lit(200002L).as("vec_id"), $"embedding",
         lit(0).cast("int").as("flag"))
-    Similarity.ivfAppend(extra, "vec_id", "embedding", ivfDir)
+    Ann.append(extra, "vec_id", "embedding", ivfDir)
     // all 7 eligible clique members — the appended 200002 included —
     // now serve at cos 1.0
     val afterAppend = Ann.probe(Ann.Dir(spark, ivfDir),
@@ -2023,7 +2023,7 @@ class LlmSpec extends AnyFunSuite {
       100010L, 200002L).map(id => (id, 1.0)), s"after append: $afterAppend")
     // a batch MISSING the metadata column is rejected loudly
     intercept[org.apache.spark.sql.AnalysisException](
-      Similarity.ivfAppend(
+      Ann.append(
         emb.filter($"vec_id" === 1).select($"vec_id", $"embedding"),
         "vec_id", "embedding", ivfDir))
 
@@ -2202,7 +2202,7 @@ class LlmSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(Seq(1.0, 2.0)), Ann.TopK(3))))
     // the serving layers' pre-check reads the same memoized meta
-    assert(Similarity.indexDim(spark, dir, "ivf") == 64)
+    assert(Ann.dim(spark, dir) == 64)
     // one pruned union read feeding the bounded-heap aggregate — never a
     // per-query window sort
     val plan = Ann.probe(Ann.Dir(spark, dir),
@@ -2566,7 +2566,7 @@ class LlmSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Ann.probe(Ann.Dir(spark, dir),
         Ann.Probe(Ann.Batch(Seq(1L -> Seq(1.0), 2L -> Seq(1.0, 2.0))), Ann.TopK(3))))
-    assert(Similarity.indexDim(spark, dir, "lsh") == 64)
+    assert(Ann.dim(spark, dir) == 64)
     // one pruned union read feeding the bounded-heap aggregate — never a
     // per-query window sort
     val plan = Ann.probe(Ann.Dir(spark, dir),
@@ -2645,7 +2645,7 @@ class LlmSpec extends AnyFunSuite {
     val a = emb.filter($"vec_id" < 150).select($"vec_id", $"embedding")
     val b = emb.filter($"vec_id" >= 150).select($"vec_id", $"embedding")
     Similarity.lshBuild(a, "vec_id", "embedding", s"$root/inc", nBits = 16, dim = 64)
-    Similarity.lshAppend(b, "vec_id", "embedding", s"$root/inc")
+    Ann.append(b, "vec_id", "embedding", s"$root/inc")
     Similarity.lshBuild(emb.select($"vec_id", $"embedding"), "vec_id", "embedding",
       s"$root/full", nBits = 16, dim = 64)
     // identical occupancy histograms → identical radius decisions;
@@ -2680,7 +2680,7 @@ class LlmSpec extends AnyFunSuite {
       grouped(Ann.probe(Ann.Dir(spark, s"$root/full"),
         Ann.Probe(Ann.Batch(queries), Ann.TopK(5)))))
     // appending a mismatched vector type is rejected before any write
-    intercept[IllegalArgumentException](Similarity.lshAppend(
+    intercept[IllegalArgumentException](Ann.append(
       emb.select($"vec_id", $"embedding".cast("array<double>").as("embedding")),
       "vec_id", "embedding", s"$root/inc"))
   }
@@ -2700,7 +2700,7 @@ class LlmSpec extends AnyFunSuite {
     val planted = Seq(9001L, 9002L, 9003L).toDF("vec_id")
       .withColumn("embedding",
         typedLit(q.map(_.toFloat)).cast("array<float>"))
-    Similarity.ivfAppend(
+    Ann.append(
       emb.filter($"vec_id" >= 180).select($"vec_id", $"embedding")
         .unionByName(planted),
       "vec_id", "embedding", dir)
@@ -2791,14 +2791,14 @@ class LlmSpec extends AnyFunSuite {
     val bDf = spark.read.parquet(s"$root/batchB")
     Similarity.lshBuild(emb.filter($"vec_id" >= 150).select($"vec_id", $"embedding"),
       "vec_id", "embedding", dir, nBits = 16, dim = 64)
-    Similarity.lshAppend(bDf, "vec_id", "embedding", dir)
+    Ann.append(bDf, "vec_id", "embedding", dir)
     val count1 = spark.read.parquet(s"$dir/vectors").count()
     val occ1 = spark.read.parquet(s"$dir/occupancy")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(count1 == emb.count())
     // the retry shape: the SAME file-backed batch appended again — the
     // durable _append-<id> marker makes it a no-op, never a double-append
-    Similarity.lshAppend(bDf, "vec_id", "embedding", dir)
+    Ann.append(bDf, "vec_id", "embedding", dir)
     assert(spark.read.parquet(s"$dir/vectors").count() == count1)
     assert(spark.read.parquet(s"$dir/occupancy")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == occ1)
@@ -2806,8 +2806,8 @@ class LlmSpec extends AnyFunSuite {
     val ivfDir = s"$root/ivf"
     Similarity.ivfBuild(emb.filter($"vec_id" >= 150).select($"vec_id", $"embedding"),
       "vec_id", "embedding", ivfDir, kLists = 4, trainSample = 64)
-    Similarity.ivfAppend(bDf, "vec_id", "embedding", ivfDir)
-    Similarity.ivfAppend(bDf, "vec_id", "embedding", ivfDir)
+    Ann.append(bDf, "vec_id", "embedding", ivfDir)
+    Ann.append(bDf, "vec_id", "embedding", ivfDir)
     assert(spark.read.parquet(s"$ivfDir/vectors").count() == emb.count())
   }
 
@@ -2824,17 +2824,17 @@ class LlmSpec extends AnyFunSuite {
       .select($"vec_id", $"embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
     val inMem = rows.toDF("vec_id", "embedding")
-    Similarity.lshAppend(inMem, "vec_id", "embedding", dir, appendId = Some("batch7"))
+    Ann.append(inMem, "vec_id", "embedding", dir, appendId = Some("batch7"))
     val count1 = spark.read.parquet(s"$dir/vectors").count()
     assert(count1 == 450L)
     // the replay: SAME logical batch, same id → no-op
-    Similarity.lshAppend(inMem, "vec_id", "embedding", dir, appendId = Some("batch7"))
+    Ann.append(inMem, "vec_id", "embedding", dir, appendId = Some("batch7"))
     assert(spark.read.parquet(s"$dir/vectors").count() == count1)
     // a genuinely new batch under a new id still lands
     val rows2 = emb.filter($"vec_id" >= 450 && $"vec_id" < 460)
       .select($"vec_id", $"embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    Similarity.lshAppend(rows2.toDF("vec_id", "embedding"),
+    Ann.append(rows2.toDF("vec_id", "embedding"),
       "vec_id", "embedding", dir, appendId = Some("batch8"))
     assert(spark.read.parquet(s"$dir/vectors").count() == 460L)
   }
@@ -2853,7 +2853,7 @@ class LlmSpec extends AnyFunSuite {
     // write emits zero part files, and the delta read-back must not die
     // trying to infer a schema from a footerless directory
     val empty = emb.filter($"vec_id" < 0).select($"vec_id", $"embedding")
-    Similarity.lshAppend(empty, "vec_id", "embedding", dir, appendId = Some("e1"))
+    Ann.append(empty, "vec_id", "embedding", dir, appendId = Some("e1"))
     assert(spark.read.parquet(s"$dir/vectors").count() == before)
     assert(spark.read.parquet(s"$dir/occupancy")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == occBefore)
@@ -2866,7 +2866,7 @@ class LlmSpec extends AnyFunSuite {
     val ivfDir = s"$root/ivf"
     Similarity.ivfBuild(emb.select($"vec_id", $"embedding"),
       "vec_id", "embedding", ivfDir, kLists = 4, trainSample = 64)
-    Similarity.ivfAppend(empty, "vec_id", "embedding", ivfDir, appendId = Some("e2"))
+    Ann.append(empty, "vec_id", "embedding", ivfDir, appendId = Some("e2"))
     assert(spark.read.parquet(s"$ivfDir/vectors").count() == before)
   }
 
@@ -2882,7 +2882,7 @@ class LlmSpec extends AnyFunSuite {
     def occSet() = spark.read.parquet(s"$dir/occupancy")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val preOcc = occSet()
-    Similarity.lshAppend(bDf, "vec_id", "embedding", dir)
+    Ann.append(bDf, "vec_id", "embedding", dir)
     val postOcc = occSet()
     val postCount = spark.read.parquet(s"$dir/vectors").count()
     assert(postCount == emb.count())
@@ -2901,7 +2901,7 @@ class LlmSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$dir/occupancy")
     delta.coalesce(1).write.parquet(s"$dir/.append-$id/delta")
     touch(s"$dir/.append-$id/_COMMITTING")
-    Similarity.lshAppend(bDf, "vec_id", "embedding", dir) // the retry
+    Ann.append(bDf, "vec_id", "embedding", dir) // the retry
     assert(spark.read.parquet(s"$dir/vectors").count() == postCount,
       "retry after the moves must not re-append the batch")
     assert(occSet() == postOcc,
@@ -2917,7 +2917,7 @@ class LlmSpec extends AnyFunSuite {
     touch(s"$dir/.append-$id/_COMMITTING")
     assert(new java.io.File(s"$dir/occupancy")
       .listFiles().exists(_.getName == s"_applied-$id"))
-    Similarity.lshAppend(bDf, "vec_id", "embedding", dir)
+    Ann.append(bDf, "vec_id", "embedding", dir)
     assert(occSet() == postOcc,
       "a merged delta must never merge twice (double-counted occupancy)")
     assert(spark.read.parquet(s"$dir/vectors").count() == postCount)
@@ -2951,7 +2951,7 @@ class LlmSpec extends AnyFunSuite {
     touch(s"$dir/.append-$idB/_COMMITTING")
     // a LATER append of a different batch heals B before appending C:
     // B's rows land exactly once and B's delta reaches the occupancy
-    Similarity.lshAppend(cDf, "vec_id", "embedding", dir)
+    Ann.append(cDf, "vec_id", "embedding", dir)
     assert(spark.read.parquet(s"$dir/vectors").count() == emb.count())
     assert(new java.io.File(s"$dir/vectors/_append-$idB").exists())
     assert(!new java.io.File(s"$dir/.append-$idB").exists())
@@ -2971,7 +2971,7 @@ class LlmSpec extends AnyFunSuite {
     // three appends, each landing its own part files into the pband dirs
     Seq((200L, 300L, "c1"), (300L, 400L, "c2"), (400L, 500L, "c3")).foreach {
       case (lo, hi, id) =>
-        Similarity.lshAppend(
+        Ann.append(
           emb.filter($"vec_id" >= lo && $"vec_id" < hi)
             .select($"vec_id", $"embedding"),
           "vec_id", "embedding", dir, appendId = Some(id))
@@ -2986,7 +2986,7 @@ class LlmSpec extends AnyFunSuite {
     }
     val (qids, occBefore) = (Seq(5L, 250L, 499L), occ())
     val before = qids.map(probe)
-    val st = Similarity.compactIndex(spark, dir, "lsh")
+    val st = Ann.compact(spark, dir)
     // the whole point: strictly fewer data files, same 500-row multiset
     assert(st.filesAfter < st.filesBefore,
       s"no compaction happened: ${st.filesBefore} -> ${st.filesAfter}")
@@ -2997,7 +2997,7 @@ class LlmSpec extends AnyFunSuite {
     // the replay fences were carried over: a streaming replay of an
     // already-ingested batch stays a no-op AFTER the rewrite
     assert(new java.io.File(s"$dir/vectors/_append-c3").exists())
-    Similarity.lshAppend(
+    Ann.append(
       emb.filter($"vec_id" >= 400).select($"vec_id", $"embedding"),
       "vec_id", "embedding", dir, appendId = Some("c3"))
     assert(spark.read.parquet(s"$dir/vectors").count() == emb.count(),
@@ -3012,7 +3012,7 @@ class LlmSpec extends AnyFunSuite {
     val dir = s"$root/idx"
     Similarity.ivfBuild(emb.filter($"vec_id" < 300).select($"vec_id", $"embedding"),
       "vec_id", "embedding", dir)
-    Similarity.ivfAppend(
+    Ann.append(
       emb.filter($"vec_id" >= 300).select($"vec_id", $"embedding"),
       "vec_id", "embedding", dir, appendId = Some("iv1"))
     val centroidsBefore = Similarity.readCentroids(spark, dir).map(_.toSeq).toSeq
@@ -3021,7 +3021,7 @@ class LlmSpec extends AnyFunSuite {
     val before = Ann.probe(Ann.Dir(spark, dir),
       Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(8)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val st = Similarity.compactIndex(spark, dir, "ivf")
+    val st = Ann.compact(spark, dir)
     assert(st.filesAfter < st.filesBefore)
     assert(spark.read.parquet(s"$dir/vectors").count() == emb.count())
     // frozen centroids stay frozen — compaction must never retrain
@@ -3059,7 +3059,7 @@ class LlmSpec extends AnyFunSuite {
     Pq.ivfPqBuild(corpus.filter($"vec_id" < 250), "vec_id", "embedding",
       dir, kLists = 8, m = 8, k = 16)
     assert(!new java.io.File(s"$root/.idx.staging").exists())
-    Pq.ivfPqAppend(bDf, "vec_id", "embedding", dir)
+    Ann.append(bDf, "vec_id", "embedding", dir)
     assert(spark.read.parquet(s"$dir/vectors").count() == corpus.count())
     // the bit-identical appended clique encodes to vec 0's codes and
     // lands in its list: nprobe=1 still serves the whole clique exactly
@@ -3072,7 +3072,7 @@ class LlmSpec extends AnyFunSuite {
     // replayed file-backed append is a no-op (durable _append-<id> fence)
     val id = Similarity.appendBatchId(bDf)
     assert(new java.io.File(s"$dir/vectors/_append-$id").exists())
-    Pq.ivfPqAppend(bDf, "vec_id", "embedding", dir)
+    Ann.append(bDf, "vec_id", "embedding", dir)
     assert(spark.read.parquet(s"$dir/vectors").count() == corpus.count(),
       "replayed append must not double-append")
     // codebook sidecar frozen across the append
@@ -3112,7 +3112,7 @@ class LlmSpec extends AnyFunSuite {
       .write.partitionBy("list").parquet(s"$dir/.append-$id/vectors")
     touch(s"$dir/.append-$id/_COMMITTING")
     // the retry resumes the commit: rows land exactly once, staging swept
-    Pq.ivfPqAppend(bDf, "vec_id", "embedding", dir)
+    Ann.append(bDf, "vec_id", "embedding", dir)
     val postCount = spark.read.parquet(s"$dir/vectors").count()
     assert(postCount == emb.count(),
       "retry of a half-committed ivfpq append must land the batch exactly once")
@@ -3125,7 +3125,7 @@ class LlmSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(served.nonEmpty && served.distinct == served)
     // a SECOND retry (fence now durable) is a pure no-op
-    Pq.ivfPqAppend(bDf, "vec_id", "embedding", dir)
+    Ann.append(bDf, "vec_id", "embedding", dir)
     assert(spark.read.parquet(s"$dir/vectors").count() == postCount,
       "retry after the fence must not double-append")
     // ORPHANED RENAME-ASIDE — the stagedCommit crash window between the
@@ -3142,7 +3142,7 @@ class LlmSpec extends AnyFunSuite {
     // rewrite too, or a residual index silently re-reads as raw
     val cbBefore = spark.read.parquet(s"$dir/codebooks")
       .collect().map(_.toSeq).toSet
-    val st = Similarity.compactIndex(spark, dir, "ivfpq")
+    val st = Ann.compact(spark, dir)
     assert(st.filesAfter <= st.filesBefore)
     assert(spark.read.parquet(s"$dir/vectors").count() == postCount)
     assert(spark.read.parquet(s"$dir/codebooks")
@@ -3153,7 +3153,7 @@ class LlmSpec extends AnyFunSuite {
       "replay fences must survive compaction")
     assert(Ann.probe(Ann.Dir(spark, dir), Ann.Probe(Ann.One(q), Ann.TopK(5), tuning = Some(8)))
       .collect().map(_.getLong(0)).toSeq == served)
-    Pq.ivfPqAppend(bDf, "vec_id", "embedding", dir) // replay across compact
+    Ann.append(bDf, "vec_id", "embedding", dir) // replay across compact
     assert(spark.read.parquet(s"$dir/vectors").count() == postCount)
   }
 
@@ -3171,12 +3171,12 @@ class LlmSpec extends AnyFunSuite {
           if (d == 0) 10.0f else (((i * 31 + d) % 7) - 3) * 0.1f).toSeq)
       }).toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-    Similarity.ivfAppend(drifted, "vec_id", "embedding", dir,
+    Ann.append(drifted, "vec_id", "embedding", dir,
       appendId = Some("drift1"))
     val skewBefore = Similarity.ivfSkew(spark, dir)
     assert(skewBefore > 2.0,
       s"drifted appends should concentrate in few lists, skew $skewBefore")
-    Similarity.ivfRetrain(spark, dir)
+    Ann.retrain(spark, dir)
     // retraining saw the appended region (hash-spread sample, not
     // lowest-id) and split it across fresh lists
     val skewAfter = Similarity.ivfSkew(spark, dir)
@@ -3197,7 +3197,7 @@ class LlmSpec extends AnyFunSuite {
       s"planted clique must be served exactly, got ${got.toSeq}")
     // the replay fence survived the rewrite: re-appending the absorbed
     // batch is still a no-op
-    Similarity.ivfAppend(drifted, "vec_id", "embedding", dir,
+    Ann.append(drifted, "vec_id", "embedding", dir,
       appendId = Some("drift1"))
     assert(spark.read.parquet(s"$dir/vectors").count() == 400L,
       "replayed append double-appended after retrain")
@@ -3215,11 +3215,11 @@ class LlmSpec extends AnyFunSuite {
       dir, nBits = 8, dim = 64, partitionBits = 4)
     Seq((200L, 300L, "op1"), (300L, 400L, "op2"), (400L, 500L, "op3")).foreach {
       case (lo, hi, id) =>
-        Similarity.lshAppend(
+        Ann.append(
           corpus.filter($"vec_id" >= lo && $"vec_id" < hi),
           "vec_id", "embedding", dir, appendId = Some(id))
     }
-    val st = Similarity.compactIndex(spark, dir, "lsh")
+    val st = Ann.compact(spark, dir)
     assert(st.filesAfter < st.filesBefore)
     // retention: a superseded same-key generation is swept, the live
     // index survives and keeps answering
@@ -3269,11 +3269,11 @@ class LlmSpec extends AnyFunSuite {
       ivfDir)
     Seq((250L, 375L, "ov1"), (375L, 100000L, "ov2"),
         (100000L, Long.MaxValue, "ov3")).foreach { case (lo, hi, id) =>
-      Similarity.ivfAppend(
+      Ann.append(
         clique.filter($"vec_id" >= lo && $"vec_id" < hi),
         "vec_id", "embedding", ivfDir, appendId = Some(id))
     }
-    assert(Similarity.compactIndex(spark, ivfDir, "ivf").filesAfter <
+    assert(Ann.compact(spark, ivfDir).filesAfter <
       Similarity.indexFileStats(spark, ivfDir)._1 + 1) // compacted, sane
     val freshIvf = java.nio.file.Files
       .createTempDirectory("graft-opsloop-ivffresh").toString + "/idx"
@@ -3350,7 +3350,7 @@ class LlmSpec extends AnyFunSuite {
       "vec_id", "embedding", dir, kLists = 8, m = 8, k = 16,
       keepVectors = true)
     // fragment both layouts with an append so the compaction has work
-    graft.llm.Pq.ivfPqAppend(
+    graft.llm.Ann.append(
       emb.filter($"vec_id" >= 300).select($"vec_id", $"embedding"),
       "vec_id", "embedding", dir, appendId = Some("gcside-1"))
     val queries = (1L to 3L).map(qid => qid ->
@@ -3391,7 +3391,7 @@ class LlmSpec extends AnyFunSuite {
     // the detector (its rerank joins nominee ids against the sidecar's
     // list partitions; a misaligned rewrite would drop nominees and
     // change the true-cosine answers)
-    val st = Similarity.compactIndex(spark, dir, "ivfpq")
+    val st = Ann.compact(spark, dir)
     assert(st.filesAfter <= st.filesBefore)
     assert(f32Rows() == f32Before,
       "compaction must carry the sidecar content byte-for-byte")

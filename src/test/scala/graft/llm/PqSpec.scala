@@ -109,7 +109,7 @@ class PqSpec extends AnyFunSuite {
       .head().getSeq[Float](0).map(_.toDouble)
     // append the last clique copy WITH its metadata (re-derived from the
     // live index) — it must serve through the filtered probe
-    Pq.ivfPqAppend(corpus.filter($"vec_id" === 100010L),
+    Ann.append(corpus.filter($"vec_id" === 100010L),
       "vec_id", "embedding", dir)
     // the probe collects per widening round (one scoring pass per round)
     // and returns a local frame — observe the executed pruned plan via a
@@ -346,7 +346,7 @@ class PqSpec extends AnyFunSuite {
       dirP, kLists = 8, m = 8, k = 16, opq = true)
     // the APPEND path is enc-fenced: the appended clone encodes through
     // the STORED rotation, so it lands on the same codes as its original
-    Pq.ivfPqAppend(corpus.filter($"vec_id" === 100005L),
+    Ann.append(corpus.filter($"vec_id" === 100005L),
       "vec_id", "embedding", dirP)
     val codesOf = spark.read.parquet(s"$dirP/vectors")
       .filter(col("id") === 0L || col("id") === 100005L)
@@ -772,16 +772,16 @@ class PqSpec extends AnyFunSuite {
           if (d == 0) 10.0f else (((i * 31 + d) % 7) - 3) * 0.1f).toSeq)
       }).toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-    Pq.ivfPqAppend(drifted, "vec_id", "embedding", dir,
+    Ann.append(drifted, "vec_id", "embedding", dir,
       appendId = Some("drift1"))
     assert(codes().count() == 400L && f32().count() == 400L)
     // replayed append = no-op for BOTH layouts
-    Pq.ivfPqAppend(drifted, "vec_id", "embedding", dir,
+    Ann.append(drifted, "vec_id", "embedding", dir,
       appendId = Some("drift1"))
     assert(codes().count() == 400L && f32().count() == 400L)
     // COMPACTION carries the sidecar (losing it would silently strip the
     // index of its retrain/MMR capability)
-    val st = Similarity.compactIndex(spark, dir, "ivfpq")
+    val st = Ann.compact(spark, dir)
     assert(st.filesAfter <= st.filesBefore)
     assert(Pq.hasVectorSidecar(spark, dir))
     assert(codes().count() == 400L && f32().count() == 400L)
@@ -790,7 +790,7 @@ class PqSpec extends AnyFunSuite {
     val skewBefore = Similarity.ivfSkew(spark, dir)
     assert(skewBefore > 2.0,
       s"drifted appends should concentrate in few lists, skew $skewBefore")
-    Pq.ivfPqRetrain(spark, dir)
+    Ann.retrain(spark, dir)
     val skewAfter = Similarity.ivfSkew(spark, dir)
     assert(skewAfter < skewBefore,
       s"retrain did not reduce skew: $skewBefore -> $skewAfter")
@@ -808,13 +808,13 @@ class PqSpec extends AnyFunSuite {
     assert(top == Set(1000L, 1007L, 1014L),
       s"retrained index must serve the drifted clique, got $top")
     // replay fence survives the retrain rewrite
-    Pq.ivfPqAppend(drifted, "vec_id", "embedding", dir,
+    Ann.append(drifted, "vec_id", "embedding", dir,
       appendId = Some("drift1"))
     assert(codes().count() == 400L && f32().count() == 400L)
     // a sidecar-less index refuses the retrain with the rebuild advice
     val bare = s"$root/bare"
     Pq.ivfPqBuild(base, "vec_id", "embedding", bare, kLists = 8, m = 8, k = 16)
-    val e = intercept[IllegalArgumentException](Pq.ivfPqRetrain(spark, bare))
+    val e = intercept[IllegalArgumentException](Ann.retrain(spark, bare))
     assert(e.getMessage.contains("keepVectors"))
     // an OPQ index retrains under its OWN encoding: enc stays "opq",
     // the rotation RE-LEARNS against the new centroids (re-clustering
@@ -823,14 +823,14 @@ class PqSpec extends AnyFunSuite {
     val opqDir = s"$root/opq"
     Pq.ivfPqBuild(base, "vec_id", "embedding", opqDir,
       kLists = 16, m = 8, k = 16, keepVectors = true, opq = true)
-    Pq.ivfPqAppend(drifted, "vec_id", "embedding", opqDir,
+    Ann.append(drifted, "vec_id", "embedding", opqDir,
       appendId = Some("drift-opq"))
     def rotRows(dir: String) = spark.read.parquet(s"$dir/codebooks")
       .filter(col("m") === -1).orderBy("k")
       .collect().map(_.getSeq[Double](2)).toSeq
     val rotBefore = rotRows(opqDir)
     assert(rotBefore.nonEmpty, "opq index must carry rotation rows")
-    Pq.ivfPqRetrain(spark, opqDir)
+    Ann.retrain(spark, opqDir)
     assert(spark.read.parquet(s"$opqDir/codebooks")
       .select("enc").head().getString(0) == "opq",
       "retrain must keep the opq encoding")
@@ -905,13 +905,13 @@ class PqSpec extends AnyFunSuite {
     }
     // the upgrade is COMPLETE: append maintains the sidecar, retrain is
     // unlocked (both were keepVectors-only before the backfill)
-    Pq.ivfPqAppend(emb.filter($"vec_id" >= 300 && $"vec_id" < 320),
+    Ann.append(emb.filter($"vec_id" >= 300 && $"vec_id" < 320),
       "vec_id", "embedding", codesOnly, appendId = Some("post-backfill"))
     val f32Ids = spark.read.parquet(s"$codesOnly/${Pq.vectorSidecarDir}")
       .select("id").collect().map(_.getLong(0)).toSet
     assert((300L until 320L).forall(f32Ids.contains),
       "append after backfill must land floats in the sidecar")
-    Pq.ivfPqRetrain(spark, codesOnly)
+    Ann.retrain(spark, codesOnly)
     assert(refined(codesOnly).map(_._1).toSet.contains(0L))
     // a second backfill refuses (the sidecar is live)
     val e2 = intercept[IllegalArgumentException](

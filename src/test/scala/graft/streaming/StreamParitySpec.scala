@@ -1307,7 +1307,7 @@ class StreamParitySpec extends AnyFunSuite {
       method = "ivf", tuning = Some(3)) { (out, batchId) =>
       if (batchId == 1 && compactions < 2) {
         compactions += 1
-        graft.llm.Similarity.compactIndex(spark, idxDir, "ivf")
+        graft.llm.Ann.compact(spark, idxDir)
       }
       val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       answers.synchronized {
@@ -1579,8 +1579,7 @@ class StreamParitySpec extends AnyFunSuite {
       "--checkpoint", s"$root/ckpt", "--once",
       "--build-from", s"$root/corpus", "--build-id-col", "doc_id",
       "--build-text-col", "text", "--build-vec-col", "vec",
-      "--build-meta", "lang", "--build-nbits", "8", "--build-pbits", "4",
-      "--build-dim", "16"))
+      "--build-meta", "lang", "--build-nbits", "8", "--build-pbits", "4"))
     graft.cli.ServeHybridCli.run(spark, cfg)
     def answers(dir: String) = spark.read.json(s"$dir/batch-*").collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("id"),
