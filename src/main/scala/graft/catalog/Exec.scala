@@ -17,8 +17,8 @@ import graft.io.DataStoreIO
   *  - workflow job: service.defaults ← job.variables ← workflow.variables
   *    (reference: handlers/WorkflowExecHandler.go:90-99)
   *
-  * DataStore reads cache the loaded DataFrame keyed by resolved URI +
-  * source mtime — a stale file invalidates the entry, like the
+  * DataStore reads cache the loaded DataFrame keyed by resolved URI, read
+  * options and source mtime — a stale file invalidates the entry, like the
   * mtime/LastModified cache key in the reference
   * (handlers/ServiceExecHandler.go:159-232, cache/Cache.go:25-75).
   */
@@ -32,29 +32,33 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
   private val serviceVarCache =
     scala.collection.concurrent.TrieMap.empty[String, (Long, Map[String, Any])]
 
-  // resolvedUri → (mtimeMillis, persisted DataFrame); guarded by its own
-  // lock so two concurrent requests don't double-read + double-persist
-  private val dataFrameCache = scala.collection.mutable.Map.empty[String, (Long, DataFrame)]
+  // (resolved uri, format, compression) → (mtimeMillis, persisted
+  // DataFrame): a datastore redefined in place with other read options
+  // misses by construction. Guarded by its own lock so two concurrent
+  // requests don't double-read + double-persist
+  private val dataFrameCache =
+    scala.collection.mutable.Map.empty[(String, String, String), (Long, DataFrame)]
   private val dfCacheLock = new Object
 
-  // bumped on every invalidation; serviceExec write-backs are fenced on it
-  // so an exec in flight across a catalog mutation cannot re-publish
+  // bumped on every catalog mutation; serviceExec write-backs are fenced
+  // on it so an exec in flight across a mutation cannot re-publish
   // dataset vars planned over the old definition after the clear
   private val varEpoch = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Drop all cached service variables — called after a catalog mutation,
-    * since cached dataset-valued vars may have been planned over an entity
-    * (process expression, datastore URI) that just changed. */
-  def invalidateServiceVars(): Unit = {
+  /** Drop what a catalog mutation of `kind` (add, update or delete) can
+    * make stale. Cached service vars always go: a dataset-valued var may
+    * have been planned over the entity that just changed. Cached
+    * DataFrames go only when a datastore or workspace changed — their key
+    * already misses on a redefined datastore, so this only releases the
+    * entries of a deleted or re-uri'd one. Any other mutation (a service's
+    * defaults, a layer) leaves the persisted tables cached. */
+  def catalogChanged(kind: String): Unit = {
     varEpoch.incrementAndGet()
     serviceVarCache.clear()
+    if (kind == "datastores" || kind == "workspaces") invalidateDataFrames()
   }
 
-  /** Drop and unpersist every cached datastore DataFrame. The mtime cache
-    * key cannot see a datastore definition updated in place (same uri and
-    * mtime, different format/header options), and a deleted or re-uri'd
-    * datastore would otherwise leak its persisted DataFrame for the
-    * server's lifetime. */
+  /** Drop and unpersist every cached datastore DataFrame. */
   def invalidateDataFrames(): Unit = dfCacheLock.synchronized {
     dataFrameCache.values.foreach(_._2.unpersist())
     dataFrameCache.clear()
@@ -99,15 +103,16 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
   /** Cached datastore read (persist + mtime invalidation). */
   def readDataStore(ds: DataStore, vars: Map[String, Any]): DataFrame = {
     val uri = resolveUri(ds.uri, vars)
+    val key = (uri, ds.format, ds.compression)
     val mtime = mtimeOf(uri)
     dfCacheLock.synchronized {
-      dataFrameCache.get(uri) match {
+      dataFrameCache.get(key) match {
         case Some((t, df)) if t == mtime => df
         case stale =>
           stale.foreach(_._2.unpersist())
           val df = DataStoreIO.read(spark, uri, DataStoreIO.ReadOptions(
             format = ds.format, compression = ds.compression)).persist()
-          dataFrameCache(uri) = (mtime, df)
+          dataFrameCache(key) = (mtime, df)
           df
       }
     }

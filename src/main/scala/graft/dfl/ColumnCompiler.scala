@@ -3,6 +3,7 @@ package graft.dfl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.BoundLit
 import graft.geo.TileMath
 
 import Node._
@@ -225,7 +226,7 @@ object ColumnCompiler {
         lc.isin(items.map { case Lit(v: String) => fold(v); case Lit(v) => v }: _*)
       case Var(name) if ctx.vars.get(name).exists(_.isInstanceOf[Seq[_]]) =>
         lc.isin(ctx.vars(name).asInstanceOf[Seq[Any]]
-          .map { case s: String => fold(s); case v => v }: _*)
+          .map { case s: String => fold(s); case v => v }.map(litAny): _*)
       case _ =>
         val rc = compile(r, ctx)
         val rcFolded = if (caseInsensitive) transform(rc, x => lower(x.cast(StringType))) else rc
@@ -268,13 +269,16 @@ object ColumnCompiler {
     case _              => false
   }
 
-  /** Bind a Scala value (a `$var`) as a literal Column. */
+  /** Bind a Scala value (a `$var`) as a literal Column. Scalars bind by
+    * reference ([[graft.functions.BoundLit]]), so a request's values
+    * never change the plan's generated code; literals written in DFL
+    * source stay `lit`. */
   def litAny(v: Any): Column = v match {
     case null      => lit(null)
     case s: Seq[_] => array(s.map(litAny): _*)
     case m: Map[_, _] =>
       struct(m.toSeq.map { case (k, value) => litAny(value).as(k.toString) }: _*)
-    case other => lit(other)
+    case other => BoundLit(other)
   }
 }
 

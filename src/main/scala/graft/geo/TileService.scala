@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.{Catalog, Exec, Layer}
 import graft.dfl.DflFrame
+import graft.functions.BoundLit
 
 /** Vector-tile and raster-mask query paths (reference:
   * handlers/LayerTileHandler.go:85-264, handlers/LayerMaskHandler.go:44-218).
@@ -91,13 +92,16 @@ final class TileService(spark: SparkSession, exec: Exec) {
         val lonC = col("geometry").getField("coordinates").getItem(0)
         val latC = col("geometry").getField("coordinates").getItem(1)
         // global sub-tile index minus the tile's origin → local grid cell
+        // request values bind by reference: one generated class serves
+        // every tile of a zoom level
+        val last = BoundLit(n - 1L)
         val cells = df
           .groupBy(
-            (TileMath.tileY(latC, lit(subZ)) - lit(y * n)).as("row"),
-            (TileMath.tileX(lonC, lit(subZ)) - lit(x * n)).as("col"))
+            (TileMath.tileY(latC, BoundLit(subZ)) - BoundLit(y * n)).as("row"),
+            (TileMath.tileX(lonC, BoundLit(subZ)) - BoundLit(x * n)).as("col"))
           .count()
-          .filter(col("count") >= threshold)
-          .filter(col("row").between(0, n - 1) && col("col").between(0, n - 1))
+          .filter(col("count") >= BoundLit(threshold))
+          .filter(col("row").between(0L, last) && col("col").between(0L, last))
           .collect()
           .map(r => (r.getLong(0).toInt, r.getLong(1).toInt))
           .toSet

@@ -287,8 +287,7 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
         exec.catalog.add(added)
         // add overwrites an existing entity of the same name, so the same
         // staleness rules as update apply
-        exec.invalidateServiceVars()
-        exec.invalidateDataFrames()
+        exec.catalogChanged(kind)
         persist()
         respondDoc(x, 200, ext, Map("added" -> nameOf(added)))
 
@@ -312,11 +311,8 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
         val tmp = Catalog.fromMaps(Map(kind -> List(doc)) ++ referenced(kind))
         val updated = tmp.list(kind).head
         exec.catalog.update(updated)
-        // cached dataset vars may be planned over the old definition, and
-        // the mtime-keyed DataFrame cache cannot see an in-place datastore
-        // redefinition (same uri+mtime, different read options)
-        exec.invalidateServiceVars()
-        exec.invalidateDataFrames()
+        // cached dataset vars may be planned over the old definition
+        exec.catalogChanged(kind)
         persist()
         respondDoc(x, 200, ext, Map("updated" -> name))
 
@@ -331,8 +327,7 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
           return
         }
         if (exec.catalog.delete(kind, name)) {
-          exec.invalidateServiceVars()
-          exec.invalidateDataFrames()
+          exec.catalogChanged(kind)
           persist()
           respondDoc(x, 200, ext, Map("deleted" -> name))
         } else respondErr(x, 404, s"$kind/$name not found")

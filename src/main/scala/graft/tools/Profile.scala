@@ -1,6 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import graft.util.Sessions
 
@@ -10,7 +12,11 @@ import graft.util.Sessions
   * counters instead: jobs / stages / tasks launched, summed executor
   * task time (CPU-proportional), and shuffle bytes written. Each query
   * runs twice; the SECOND run is reported (warm JIT/codegen, the bench's
-  * warm-pass posture).
+  * warm-pass posture). `compiles`/`compile_ms` are the whole-stage and
+  * expression classes Janino compiled during that warm run: Spark caches
+  * generated classes by their source text, so a nonzero warm count flags
+  * a plan whose generated code depends on values (a literal inlined per
+  * run instead of bound by reference).
   *
   * Usage: runMain graft.tools.Profile <sfDir> <query> [query ...]
   */
@@ -45,7 +51,9 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
     println(f"${"query"}%-30s ${"wall_s"}%7s ${"jobs"}%5s ${"stages"}%6s " +
-      f"${"tasks"}%6s ${"tasktime_s"}%10s ${"shufW_MB"}%8s")
+      f"${"tasks"}%6s ${"tasktime_s"}%10s ${"shufW_MB"}%8s ${"compiles"}%8s ${"compile_ms"}%10s")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def compileNs = CodeGenerator.compileTime
     // a query that throws must not pollute the attribution data: its row
     // is marked FAILED (partial counters suppressed) and the process
     // exits nonzero so a broken query can't be mistaken for a measurement
@@ -55,6 +63,7 @@ object Profile {
         jobs.set(0); stages.set(0); tasks.set(0)
         taskTimeMs.set(0); shufWrite.set(0); shufRead.set(0)
         var failed = false
+        val (c0, cNs0) = (compiles, compileNs)
         val t0 = System.nanoTime()
         try graft.SparkEntry.queries(n)(spark, dir).count()
         catch { case e: Throwable =>
@@ -67,7 +76,7 @@ object Profile {
           if (failed) println(f"$n%-30s  FAILED (counters suppressed)")
           else println(f"$n%-30s $wall%7.2f ${jobs.get}%5d ${stages.get}%6d " +
             f"${tasks.get}%6d ${taskTimeMs.get / 1e3}%10.2f " +
-            f"${shufWrite.get / 1e6}%8.1f")
+            f"${shufWrite.get / 1e6}%8.1f ${compiles - c0}%8d ${(compileNs - cNs0) / 1e6}%10.1f")
         }
       }
     }

@@ -369,4 +369,42 @@ class CompilerSpec extends AnyFunSuite {
     // pipelines with a leading dataset stage have no row-level prefix
     assert(DflFrame.droppedRows(df, "filter(@, '@v > 0')").count() == 0)
   }
+
+  test("bound vars keep partition pruning and parquet pushdown of a lit build") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bound").toString + "/t"
+    spark.range(0, 400).selectExpr("id % 5 AS p", "CAST(id AS DOUBLE) / 100 AS v", "id")
+      .write.partitionBy("p").parquet(dir)
+    val df = spark.read.parquet(dir)
+    val src = "filter(@, '(@p == $pv) and (@v > $lo)')"
+    val vars = Map[String, Any]("pv" -> 3L, "lo" -> 2.5)
+    val bound = DflFrame.pipeline(df, src, vars)
+    val viaLit = DflFrame.pipeline(df, LitBuild.inline(src, vars))
+    assert(LitBuild.bindsByReference(bound) && !LitBuild.bindsByReference(viaLit))
+    val scans = LitBuild.scanFilters(bound)
+    assert(scans == LitBuild.scanFilters(viaLit))
+    assert(scans.exists { case (part, pushed) =>
+      part.contains("(p = 3)") && pushed.contains("GreaterThan(v,2.5)") }, scans)
+    val got = bound.collect().toSet
+    assert(got.nonEmpty && got == viaLit.collect().toSet)
+  }
+
+  test("an 11-item bound list still plans as InSet and pushes down like a lit build") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bound").toString + "/t"
+    spark.range(0, 200).selectExpr("id", "id * 2 AS w").write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    val src = "filter(@, '@id in $list')"
+    val vars = Map[String, Any]("list" -> (1L to 21L by 2).toSeq)
+    val bound = DflFrame.pipeline(df, src, vars)
+    val viaLit = DflFrame.pipeline(df, LitBuild.inline(src, vars))
+    assert(LitBuild.bindsByReference(bound) && !LitBuild.bindsByReference(viaLit))
+    def inSet(d: org.apache.spark.sql.DataFrame) = d.queryExecution.optimizedPlan
+      .exists(_.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.InSet])))
+    assert(inSet(bound) && inSet(viaLit))
+    val scans = LitBuild.scanFilters(bound)
+    assert(scans == LitBuild.scanFilters(viaLit))
+    assert(scans.exists(_._2.contains("In(id,")), scans)
+    assert(bound.collect().toSet == viaLit.collect().toSet)
+    assert(bound.count() == 11)
+  }
 }

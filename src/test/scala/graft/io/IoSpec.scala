@@ -308,4 +308,27 @@ class IoSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters") &&
       (plan.contains("_tile_x#") || plan.contains("_tile_x =")), plan.take(2000))
   }
+
+  test("tile-sharded layout still prunes on bound $z/$x/$y like a lit build") {
+    import graft.dfl.{DflFrame, LitBuild}
+    val dir = tmpDir()
+    val df = spark.range(0, 500).select(col("id").as("event_id"),
+      (col("id") * 7.3 % 360.0 - 180.0).as("lon"), (col("id") * 3.1 % 170.0 - 85.0).as("lat"))
+    DynamicSink.writeTileSharded(df, s"$dir/tiles", "parquet",
+      lit(4), graft.geo.TileMath.tileX(col("lon"), lit(4)),
+      graft.geo.TileMath.tileY(col("lat"), lit(4)))
+    val back = spark.read.parquet(s"$dir/tiles")
+    val first = back.select("_tile_x", "_tile_y").head()
+    val src = "filter(@, '(@_tile_z == $z) and (@_tile_x == $x) and (@_tile_y == $y)')"
+    val vars = Map[String, Any]("z" -> 4L,
+      "x" -> first.getInt(0).toLong, "y" -> first.getInt(1).toLong)
+    val bound = DflFrame.pipeline(back, src, vars)
+    val viaLit = DflFrame.pipeline(back, LitBuild.inline(src, vars))
+    assert(LitBuild.bindsByReference(bound) && !LitBuild.bindsByReference(viaLit))
+    val scans = LitBuild.scanFilters(bound)
+    assert(scans == LitBuild.scanFilters(viaLit))
+    assert(scans.exists(_._1.contains(s"(_tile_x = ${first.getInt(0)})")), scans)
+    val got = bound.collect().toSet
+    assert(got.nonEmpty && got == viaLit.collect().toSet)
+  }
 }

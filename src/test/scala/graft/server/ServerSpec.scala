@@ -425,6 +425,30 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a catalog mutation drops only the caches it can make stale") {
+    val (srv, client, dir) = startServer()
+    try {
+      val (_, body) = client.authenticate("root", "pw")
+      val token = """"token":"([^"]+)"""".r.findFirstMatchIn(body).get.group(1)
+      val authed = new Client(s"http://localhost:${srv.boundPort}", Some(token))
+      def feat = srv.exec.readDataStore(srv.exec.catalog.datastores("feat"), Map.empty)
+      val cached = feat
+      assert(cached.count() == 2)
+      // a service edit cannot stale a table: the persisted read survives it
+      assert(authed.update("services", "svc",
+        """{"datastore":"feat","process":"by_amenity","defaults":{"kind":"cafe"}}""")._1 == 200)
+      assert(feat eq cached)
+      val (_, after) = client.exec("services", "svc")
+      assert(after.contains("dc2") && !after.contains("dc1"))
+      // the same file redefined in place as a whole-document json store
+      // (same uri and mtime, other read options) is read again
+      assert(authed.update("datastores", "feat",
+        s"""{"workspace":"ws","uri":"$dir/features.jsonl","format":"json"}""")._1 == 200)
+      assert(!(feat eq cached))
+      assert(feat.count() == 1)
+    } finally srv.stop()
+  }
+
   test("mutations persist to the catalog uri and survive a restart") {
     val dir = Files.createTempDirectory("graft-cat").toString
     val catPath = s"$dir/catalog.json"
