@@ -27,4 +27,10 @@ private[graft] final class Argv(args: Array[String]) {
       throw new IllegalArgumentException(s"flag $cur requires a value")
     val v = args(i); i += 1; v
   }
+  /** [[value]] as an Int — a non-integer fails naming the flag. */
+  def int(): Int = {
+    val v = value()
+    v.toIntOption.getOrElse(
+      throw new IllegalArgumentException(s"flag $cur requires an integer, got '$v'"))
+  }
 }

@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.server.Server.encodeSegment
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
@@ -40,31 +41,32 @@ object ClientCli {
 
     def list(kind: String): (Int, String) = send(req(s"/$kind.json").GET().build())
     def get(kind: String, name: String): (Int, String) =
-      send(req(s"/$kind/$name.json").GET().build())
+      send(req(s"/$kind/${encodeSegment(name)}.json").GET().build())
     def delete(kind: String, name: String): (Int, String) =
-      send(req(s"/$kind/$name.json").DELETE().build())
+      send(req(s"/$kind/${encodeSegment(name)}.json").DELETE().build())
     def add(kind: String, json: String): (Int, String) =
       send(req(s"/$kind.json").POST(HttpRequest.BodyPublishers.ofString(json)).build())
     def update(kind: String, name: String, json: String): (Int, String) =
-      send(req(s"/$kind/$name.json")
+      send(req(s"/$kind/${encodeSegment(name)}.json")
         .PUT(HttpRequest.BodyPublishers.ofString(json)).build())
     def exec(kind: String, name: String, body: String = ""): (Int, String) =
-      send(req(s"/$kind/$name/exec.json")
+      send(req(s"/$kind/${encodeSegment(name)}/exec.json")
         .POST(HttpRequest.BodyPublishers.ofString(body)).build())
     // the streaming serving-job lifecycle verbs (the CLI serve-* jobs'
     // catalog-driven form): start/stop are auth'd mutations, status a read
     def servingStart(name: String): (Int, String) =
-      send(req(s"/servingjobs/$name/start.json")
+      send(req(s"/servingjobs/${encodeSegment(name)}/start.json")
         .POST(HttpRequest.BodyPublishers.noBody()).build())
     def servingStatus(name: String): (Int, String) =
-      send(req(s"/servingjobs/$name/status.json").GET().build())
+      send(req(s"/servingjobs/${encodeSegment(name)}/status.json").GET().build())
     def servingStop(name: String): (Int, String) =
-      send(req(s"/servingjobs/$name/stop.json")
+      send(req(s"/servingjobs/${encodeSegment(name)}/stop.json")
         .POST(HttpRequest.BodyPublishers.noBody()).build())
     def tile(layer: String, z: Int, x: Long, y: Long, qs: String = ""): (Int, String) =
-      send(req(s"/layers/$layer/tiles/data/$z/$x/$y.json$qs").GET().build())
+      send(req(s"/layers/${encodeSegment(layer)}/tiles/data/$z/$x/$y.json$qs").GET().build())
     def maskBytes(layer: String, z: Int, x: Long, y: Long): (Int, Array[Byte]) = {
-      val resp = http.send(req(s"/layers/$layer/tiles/mask/$z/$x/$y.png").GET().build(),
+      val resp = http.send(
+        req(s"/layers/${encodeSegment(layer)}/tiles/mask/$z/$x/$y.png").GET().build(),
         HttpResponse.BodyHandlers.ofByteArray())
       (resp.statusCode(), resp.body())
     }

@@ -1,6 +1,7 @@
 package graft.server
 
 import graft.catalog._
+import graft.cli.Argv
 import graft.util.Sessions
 
 /** `serve` entry point: load (or demo-build) a catalog and serve it.
@@ -8,19 +9,24 @@ import graft.util.Sessions
   *        [--root-password pw] [--demo]
   */
 object Main {
-  def main(args: Array[String]): Unit = {
-    var port = 8080; var catalogPath = ""; var rootPassword = "secret"; var demo = false
-    var i = 0
-    while (i < args.length) {
-      args(i) match {
-        case "--port"          => i += 1; port = args(i).toInt
-        case "--catalog"       => i += 1; catalogPath = args(i)
-        case "--root-password" => i += 1; rootPassword = args(i)
-        case "--demo"          => demo = true
-        case other             => throw new IllegalArgumentException(s"unknown flag: $other")
-      }
-      i += 1
+  final case class Config(port: Int = 8080, catalogPath: String = "",
+                          rootPassword: String = "secret", demo: Boolean = false)
+
+  def parseArgs(args: Array[String]): Config = {
+    var c = Config()
+    val a = new Argv(args)
+    while (a.more) a.flag() match {
+      case "--port"          => c = c.copy(port = a.int())
+      case "--catalog"       => c = c.copy(catalogPath = a.value())
+      case "--root-password" => c = c.copy(rootPassword = a.value())
+      case "--demo"          => c = c.copy(demo = true)
+      case other             => throw new IllegalArgumentException(s"unknown flag: $other")
     }
+    c
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Config(port, catalogPath, rootPassword, demo) = parseArgs(args)
     val spark = Sessions.create("graft-serve", Sessions.master(4))
     spark.sparkContext.setLogLevel("WARN")
 

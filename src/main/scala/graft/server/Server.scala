@@ -6,8 +6,10 @@ import graft.catalog._
 import graft.geo.TileService
 import graft.io.TextFormats
 
-import java.net.InetSocketAddress
+import java.net.{InetSocketAddress, URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Catalog-driven HTTP query server — the Spark-native mirror of
   * `railgun serve` (reference: router/RailgunRouter.go:50-135). Pure-JDK
@@ -39,19 +41,30 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
   private val jwt = Jwt.generate()
   private val tiles = new TileService(spark, exec)
   private var http: HttpServer = _
+  private var pool: ExecutorService = _
 
   val formats: Seq[String] =
     Seq("csv", "tsv", "json", "jsonl", "yaml", "toml", "properties", "hcl",
       "bson", "parquet")
 
   def start(): Unit = {
-    http = HttpServer.create(new InetSocketAddress(port), 0)
+    http = Server.newHttpServer(new InetSocketAddress(port))
     http.createContext("/", (x: HttpExchange) => handle(x))
-    http.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    val ids = new AtomicInteger
+    pool = Executors.newFixedThreadPool(8,
+      (r: Runnable) => new Thread(r, s"graft-http-${ids.incrementAndGet()}"))
+    http.setExecutor(pool)
     http.start()
   }
 
-  def stop(): Unit = if (http != null) http.stop(0)
+  /** Stop listening, then shut the handler pool down: `HttpServer.stop`
+    * never shuts down an executor its caller supplied, so without this
+    * each stopped server would keep its idle, non-daemon handler threads. */
+  def stop(): Unit = if (http != null) {
+    http.stop(0)
+    pool.shutdown()
+    pool.awaitTermination(5, TimeUnit.SECONDS)
+  }
 
   def boundPort: Int = http.getAddress.getPort
 
@@ -70,12 +83,15 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
   }
 
   private def respondErr(x: HttpExchange, code: Int, msg: String): Unit =
-    respondDoc(x, code, extOf(x.getRequestURI.getPath), Map("error" -> msg))
+    respondDoc(x, code, extOf(x.getRequestURI.getRawPath), Map("error" -> msg))
 
   private def route(x: HttpExchange): Unit = {
-    val path = x.getRequestURI.getPath
+    // split the RAW path on '/' then decode each segment once: getPath
+    // pre-decodes, which turns a name's %2F into a path separator
+    val path = x.getRequestURI.getRawPath
     val ext = extOf(path)
-    val parts = stripExt(path).split('/').filter(_.nonEmpty).toList
+    val parts = stripExt(path).split('/').filter(_.nonEmpty)
+      .map(Server.decodeSegment).toList
     val method = x.getRequestMethod
 
     // CORS preflight: the reference registers OPTIONS on its entity and
@@ -105,7 +121,7 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
           // URL-encode for the href (a quote or slash must neither break
           // out of the attribute nor produce a dead link)
           val n = htmlEscape(raw)
-          val u = urlEncode(raw)
+          val u = Server.encodeSegment(raw)
           s"""<li><b>$n</b> — <a href="/layers/$u/tiles/data/0/0/0.json">tile data</a>
              | · <a href="/layers/$u/tiles/mask/0/0/0.png">tile mask</a>
              | · <a href="/layers/$u.json">definition</a></li>""".stripMargin
@@ -485,9 +501,6 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
       .replace("\"", "&quot;").replace("'", "&#39;")
 
-  private def urlEncode(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8").replace("+", "%20")
-
   // Inline slippy-map driver for the home page. One tile fills the canvas;
   // zoom/pan change (z, x, y); every render draws the raster mask tile
   // under the GeoJSON data tile, both fetched live with the current DFL.
@@ -607,8 +620,10 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
     // (router/CorsMiddleware.go:10-11) + optional gzip encoding
     // (router/RailgunRouter.go:44-45)
     x.getResponseHeaders.set("Access-Control-Allow-Origin", corsOrigin)
+    // image bodies (the mask route's png/gif/jpeg) are compressed already
     val body =
-      if (gzipResponses && body0.nonEmpty && acceptsGzip(x)) {
+      if (gzipResponses && body0.nonEmpty && !contentType.startsWith("image/") &&
+          acceptsGzip(x)) {
         x.getResponseHeaders.set("Content-Encoding", "gzip")
         val bos = new java.io.ByteArrayOutputStream()
         val gz = new java.util.zip.GZIPOutputStream(bos)
@@ -619,4 +634,39 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
     val os = x.getResponseBody
     try { if (body.nonEmpty) os.write(body) } finally os.close()
   }
+}
+
+object Server {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** A JDK `HttpServer` on `addr` whose connections have Nagle's algorithm
+    * off. Every `com.sun.net.httpserver.HttpServer` in graft is created
+    * here.
+    *
+    * `sendResponseHeaders` flushes the status line and headers as a TCP
+    * segment of their own, before the handler writes the body. With Nagle
+    * on (the JDK's default) the body segment then waits until the client
+    * ACKs the headers, and on a keep-alive connection Linux delays that
+    * ACK by at least 40 ms: each request after a connection's first
+    * would wait that long. Go's net/http, which railgun serves through,
+    * turns Nagle off by default too.
+    *
+    * The JDK reads `sun.net.httpserver.nodelay` once per JVM, when the
+    * first `HttpServer` is created; a server created earlier elsewhere
+    * fixes the setting for all later ones. A value the operator set with
+    * `-Dsun.net.httpserver.nodelay=...` is left as it is. */
+  def newHttpServer(addr: InetSocketAddress): HttpServer = {
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+    HttpServer.create(addr, 0)
+  }
+
+  /** A name as one URL path segment: `/` and spaces are escaped, so any
+    * catalog name round-trips through [[decodeSegment]]. */
+  def encodeSegment(name: String): String =
+    URLEncoder.encode(name, UTF_8).replace("+", "%20")
+
+  /** One raw path segment, %-decoded once; a `+` in a path is a literal
+    * plus, not the form encoding's space. */
+  def decodeSegment(raw: String): String =
+    URLDecoder.decode(raw.replace("+", "%2B"), UTF_8)
 }

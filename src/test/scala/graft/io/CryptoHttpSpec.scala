@@ -72,8 +72,7 @@ class CryptoHttpSpec extends AnyFunSuite {
   }
 
   test("http endpoint reads as a table") {
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress(0), 0)
+    val server = graft.server.Server.newHttpServer(new java.net.InetSocketAddress(0))
     server.createContext("/api/data", (x: com.sun.net.httpserver.HttpExchange) => {
       val body = """[{"id":1,"name":"a"},{"id":2,"name":"b"},{"id":3,"name":"c"}]"""
         .getBytes("UTF-8")

@@ -31,15 +31,17 @@ class ServerSpec extends AnyFunSuite {
       defaults = Map("kind" -> "bar")))
     c.add(Job("job_bad", "svc_missing"))
     c.add(Workflow("wf", Seq("job_bad", "job_ok")))
-    val port = {
-      val s = new java.net.ServerSocket(0)
-      try s.getLocalPort finally s.close()
-    }
-    val srv = new Server(spark, new Exec(spark, c), port, rootPassword = "pw",
+    val srv = new Server(spark, new Exec(spark, c), 0, rootPassword = "pw",
       catalogUri = catalogUri)
     srv.start()
-    (srv, new Client(s"http://localhost:$port"), dir)
+    (srv, new Client(s"http://localhost:${srv.boundPort}"), dir)
   }
+
+  private def get(srv: Server, path: String,
+                  http: java.net.http.HttpClient = java.net.http.HttpClient.newHttpClient()) =
+    http.send(java.net.http.HttpRequest.newBuilder(
+      java.net.URI.create(s"http://localhost:${srv.boundPort}$path")).GET().build(),
+      java.net.http.HttpResponse.BodyHandlers.ofByteArray())
 
   test("health, introspection, list, get, content negotiation") {
     val (srv, client, _) = startServer()
@@ -557,7 +559,79 @@ class ServerSpec extends AnyFunSuite {
         new java.io.ByteArrayInputStream(z.body()))
       val plain = new String(try in.readAllBytes() finally in.close(), "UTF-8")
       assert(plain.contains("\"svc\""))
+
+      // an image body is compressed already: a mask is never gzipped
+      val m = req(java.net.http.HttpRequest.newBuilder(uri("/layers/all/tiles/mask/0/0/0.png"))
+        .header("Accept-Encoding", "gzip").GET())
+      assert(m.statusCode() == 200)
+      assert(m.headers().firstValue("Content-Encoding").isEmpty)
+      assert(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.body())) != null)
     } finally srv.stop()
+  }
+
+  test("keep-alive requests answer without waiting for the client's delayed ACK") {
+    val (srv, _, _) = startServer()
+    try {
+      // one HTTP/1.1 connection, reused: with Nagle on, every response's
+      // body segment waited ~40 ms for the ACK of its header segment
+      val http = java.net.http.HttpClient.newBuilder()
+        .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+      (1 to 5).foreach(_ => assert(get(srv, "/health.json", http).statusCode() == 200))
+      val ms = (1 to 21).map { _ =>
+        val t0 = System.nanoTime()
+        assert(get(srv, "/health.json", http).statusCode() == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(10) < 20.0, s"median ${ms(10)} ms over ${ms.mkString(", ")}")
+    } finally srv.stop()
+  }
+
+  test("stop shuts the handler pool down") {
+    // graft-http-N, or the JDK's default pool-N-thread-M for an unnamed pool
+    def handlerThreads(): Set[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.toSet
+        .filter(t => t.getName.matches("graft-http-\\d+|pool-\\d+-thread-\\d+"))
+    }
+    val before = handlerThreads()
+    val (srv, client, _) = startServer()
+    (1 to 3).foreach(_ => assert(client.list("services")._1 == 200))
+    srv.stop()
+    val left = handlerThreads() -- before
+    left.foreach(_.join(2000))
+    assert(!left.exists(_.isAlive), left.map(_.getName))
+  }
+
+  test("names with '/' and ' ' are reachable through the home page links and the client") {
+    val (srv, client, _) = startServer()
+    try {
+      srv.exec.catalog.add(Layer("a/b c", "feat", "", extent = Seq(-180.0, -85.0, 180.0, 85.0)))
+      srv.exec.catalog.add(Service("x y", "feat", "by_amenity", defaults = Map("kind" -> "bar")))
+      val home = new String(get(srv, "/").body(), "UTF-8")
+      val hrefs = "href=\"(/layers/a%2Fb%20c[^\"]*)\"".r.findAllMatchIn(home).map(_.group(1)).toList
+      assert(hrefs.size == 3, home)
+      hrefs.foreach { h =>
+        val r = get(srv, h)
+        assert(r.statusCode() == 200, s"$h -> ${r.statusCode()} ${new String(r.body(), "UTF-8")}")
+      }
+      val (tc, tb) = client.tile("a/b c", 0, 0, 0)
+      assert(tc == 200 && tb.contains("\"numberOfFeatures\":2"), tb)
+      assert(client.maskBytes("a/b c", 0, 0, 0)._1 == 200)
+      val (gc, gb) = client.get("layers", "a/b c")
+      assert(gc == 200 && gb.contains("a/b c"), gb)
+      val (ec, eb) = client.exec("services", "x y")
+      assert(ec == 200 && eb.contains("dc1") && !eb.contains("dc2"), eb)
+    } finally srv.stop()
+  }
+
+  test("serve rejects a dangling or non-integer --port, naming the flag") {
+    assert(Main.parseArgs(Array("--port", "9090", "--demo")) ==
+      Main.Config(port = 9090, demo = true))
+    val dangling = intercept[IllegalArgumentException](Main.parseArgs(Array("--port")))
+    assert(dangling.getMessage.contains("--port requires a value"), dangling.getMessage)
+    val nonInt = intercept[IllegalArgumentException](Main.parseArgs(Array("--port", "abc")))
+    assert(nonInt.getMessage.contains("--port") && nonInt.getMessage.contains("abc"),
+      nonInt.getMessage)
   }
 
   test("serving jobs: catalog CRUD + HTTP start/status/stop lifecycle, answers land, conflicts 409") {
