@@ -28,9 +28,15 @@ private[graft] final class Argv(args: Array[String]) {
     val v = args(i); i += 1; v
   }
   /** [[value]] as an Int — a non-integer fails naming the flag. */
-  def int(): Int = {
+  def int(): Int = parsed("an integer")(_.toIntOption)
+  /** [[value]] as a Long — a non-integer fails naming the flag. */
+  def long(): Long = parsed("an integer")(_.toLongOption)
+  /** [[value]] as a Double — a non-number fails naming the flag. */
+  def double(): Double = parsed("a number")(_.toDoubleOption)
+
+  private def parsed[A](what: String)(parse: String => Option[A]): A = {
     val v = value()
-    v.toIntOption.getOrElse(
-      throw new IllegalArgumentException(s"flag $cur requires an integer, got '$v'"))
+    parse(v).getOrElse(
+      throw new IllegalArgumentException(s"flag $cur requires $what, got '$v'"))
   }
 }

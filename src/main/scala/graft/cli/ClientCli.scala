@@ -72,38 +72,59 @@ object ClientCli {
     }
   }
 
-  def main(args: Array[String]): Unit = {
+  /** Parsed argv: where to send the request, and the request itself. */
+  final case class Config(base: String, token: Option[String],
+                          request: Client => (Int, String))
+
+  /** Spark-free argv parsing: a dangling `--base`/`--token`, an unknown
+    * command or a non-integer tile coordinate fails here, naming it. */
+  def parseArgs(args: Array[String]): Config = {
     var base = "http://localhost:8080"; var token: Option[String] = None
-    var rest = List.empty[String]
-    var i = 0
-    while (i < args.length) {
-      args(i) match {
-        case "--base"  => i += 1; base = args(i)
-        case "--token" => i += 1; token = Some(args(i))
-        case other     => rest = rest :+ other
-      }
-      i += 1
+    val rest = List.newBuilder[String]
+    val a = new Argv(args)
+    while (a.more) a.flag() match {
+      case "--base"  => base = a.value()
+      case "--token" => token = Some(a.value())
+      case other     => rest += other
     }
-    val c = new Client(base, token)
-    val (code, body) = rest match {
-      case "authenticate" :: u :: p :: Nil => c.authenticate(u, p)
-      case "list" :: kind :: Nil           => c.list(kind)
-      case "get" :: kind :: name :: Nil    => c.get(kind, name)
-      case "delete" :: kind :: name :: Nil => c.delete(kind, name)
-      case "add" :: kind :: json :: Nil    => c.add(kind, json)
-      case "update" :: kind :: name :: json :: Nil => c.update(kind, name, json)
-      case "exec" :: kind :: name :: tail  => c.exec(kind, name, tail.mkString(" "))
-      case "serving" :: "start" :: name :: Nil  => c.servingStart(name)
-      case "serving" :: "status" :: name :: Nil => c.servingStatus(name)
-      case "serving" :: "stop" :: name :: Nil   => c.servingStop(name)
-      case "tile" :: layer :: z :: tx :: ty :: Nil =>
-        c.tile(layer, z.toInt, tx.toLong, ty.toLong)
-      case "mask" :: layer :: z :: tx :: ty :: out :: Nil =>
-        val (code, bytes) = c.maskBytes(layer, z.toInt, tx.toLong, ty.toLong)
+    Config(base, token, request(rest.result()))
+  }
+
+  private def coord[A](name: String, v: String)(parse: String => Option[A]): A =
+    parse(v).getOrElse(throw new IllegalArgumentException(
+      s"tile coordinate $name must be an integer, got '$v'"))
+
+  private def tileArgs(z: String, x: String, y: String): (Int, Long, Long) =
+    (coord("z", z)(_.toIntOption), coord("x", x)(_.toLongOption),
+      coord("y", y)(_.toLongOption))
+
+  private def request(command: List[String]): Client => (Int, String) = command match {
+    case "authenticate" :: u :: p :: Nil => _.authenticate(u, p)
+    case "list" :: kind :: Nil           => _.list(kind)
+    case "get" :: kind :: name :: Nil    => _.get(kind, name)
+    case "delete" :: kind :: name :: Nil => _.delete(kind, name)
+    case "add" :: kind :: json :: Nil    => _.add(kind, json)
+    case "update" :: kind :: name :: json :: Nil => _.update(kind, name, json)
+    case "exec" :: kind :: name :: tail  => _.exec(kind, name, tail.mkString(" "))
+    case "serving" :: "start" :: name :: Nil  => _.servingStart(name)
+    case "serving" :: "status" :: name :: Nil => _.servingStatus(name)
+    case "serving" :: "stop" :: name :: Nil   => _.servingStop(name)
+    case "tile" :: layer :: z :: x :: y :: Nil =>
+      val (zi, xi, yi) = tileArgs(z, x, y)
+      _.tile(layer, zi, xi, yi)
+    case "mask" :: layer :: z :: x :: y :: out :: Nil =>
+      val (zi, xi, yi) = tileArgs(z, x, y)
+      c => {
+        val (code, bytes) = c.maskBytes(layer, zi, xi, yi)
         java.nio.file.Files.write(java.nio.file.Paths.get(out), bytes)
         (code, s"wrote ${bytes.length} bytes to $out")
-      case other => throw new IllegalArgumentException(s"unknown command: $other")
-    }
+      }
+    case other => throw new IllegalArgumentException(s"unknown command: $other")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val c = parseArgs(args)
+    val (code, body) = c.request(new Client(c.base, c.token))
     println(body)
     if (code >= 400) sys.exit(1)
   }

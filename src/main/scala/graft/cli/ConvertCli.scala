@@ -45,12 +45,12 @@ object ConvertCli {
           if (v.isEmpty)
             throw new IllegalArgumentException("--input-comment needs a non-empty character")
           c = c.copy(inputComment = Some(v.head))
-        case "--input-skip"         => c = c.copy(inputSkip = a.value().toInt)
-        case "--input-limit"        => c = c.copy(inputLimit = Some(a.value().toInt))
+        case "--input-skip"         => c = c.copy(inputSkip = a.int())
+        case "--input-limit"        => c = c.copy(inputLimit = Some(a.int()))
         case "--output-uri"         => c = c.copy(outputUri = a.value())
         case "--output-format"      => c = c.copy(outputFormat = a.value())
         case "--output-compression" => c = c.copy(outputCompression = a.value())
-        case "--output-limit"       => c = c.copy(outputLimit = Some(a.value().toInt))
+        case "--output-limit"       => c = c.copy(outputLimit = Some(a.int()))
         case other => throw new IllegalArgumentException(s"unknown flag: $other")
       }
     }

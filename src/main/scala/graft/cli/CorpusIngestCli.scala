@@ -65,9 +65,9 @@ object CorpusIngestCli {
       case "--id-col"        => c = c.copy(idCol = a.value())
       case "--text-col"      => c = c.copy(textCol = a.value())
       case "--weight-col"    => c = c.copy(weightCol = a.value())
-      case "--threshold"     => c = c.copy(threshold = a.value().toDouble)
-      case "--ngram"         => c = c.copy(ngram = a.value().toInt)
-      case "--shard-weight"  => c = c.copy(shardWeight = a.value().toLong)
+      case "--threshold"     => c = c.copy(threshold = a.double())
+      case "--ngram"         => c = c.copy(ngram = a.int())
+      case "--shard-weight"  => c = c.copy(shardWeight = a.long())
       case "--no-self-dedup" => c = c.copy(selfDedup = false)
       case "--out-uri"       => c = c.copy(outUri = a.value())
       // streaming mode: --new-uri becomes the WATCHED directory

@@ -83,17 +83,17 @@ object IngestCli {
         case "--method"        => c = c.copy(method = a.value())
         case "--checkpoint"    => c = c.copy(checkpoint = a.value())
         case "--once"          => c = c.copy(once = true)
-        case "--compact-every" => c = c.copy(compactEvery = a.value().toInt)
-        case "--retrain-skew"  => c = c.copy(retrainSkew = a.value().toDouble)
+        case "--compact-every" => c = c.copy(compactEvery = a.int())
+        case "--retrain-skew"  => c = c.copy(retrainSkew = a.double())
         case "--keep-vectors"  => c = c.copy(keepVectors = true)
         case "--build-opq"   => c = c.copy(buildOpq = true)
         case "--build-from"    => c = c.copy(buildFrom = a.value())
-        case "--build-nbits"   => c = c.copy(buildNBits = a.value().toInt)
-        case "--build-klists"  => c = c.copy(buildKLists = a.value().toInt)
-        case "--build-pbits"   => c = c.copy(buildPBits = a.value().toInt)
-        case "--build-pbands"  => c = c.copy(buildPBands = a.value().toInt)
-        case "--build-pq-m"    => c = c.copy(buildPqM = a.value().toInt)
-        case "--build-pq-k"    => c = c.copy(buildPqK = a.value().toInt)
+        case "--build-nbits"   => c = c.copy(buildNBits = a.int())
+        case "--build-klists"  => c = c.copy(buildKLists = a.int())
+        case "--build-pbits"   => c = c.copy(buildPBits = a.int())
+        case "--build-pbands"  => c = c.copy(buildPBands = a.int())
+        case "--build-pq-m"    => c = c.copy(buildPqM = a.int())
+        case "--build-pq-k"    => c = c.copy(buildPqK = a.int())
         case "--build-meta"    => c = c.copy(buildMeta =
           a.value().split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         case "--catalog"          => c = c.copy(catalogPath = a.value())

@@ -119,8 +119,8 @@ object ProcessCli {
             throw new IllegalArgumentException(
               "--input-comment needs a non-empty character")
           c = c.copy(inputComment = Some(v.head))
-        case "--input-skip"    => c = c.copy(inputSkip = a.value().toInt)
-        case "--input-limit"   => c = c.copy(inputLimit = Some(a.value().toInt))
+        case "--input-skip"    => c = c.copy(inputSkip = a.int())
+        case "--input-limit"   => c = c.copy(inputLimit = Some(a.int()))
         case "--dfl"           => c = c.copy(dfl = a.value())
         case "--dfl-uri"       => c = c.copy(dfl = new String(
           java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(a.value()))))
@@ -138,9 +138,9 @@ object ProcessCli {
         case "--output-uri"    => c = c.copy(outputUri = a.value())
         case "--output-cluster-by" => c = c.copy(outputClusterBy = a.value())
         case "--output-zorder-by"  => c = c.copy(outputZorderBy = a.value())
-        case "--output-files"      => c = c.copy(outputFiles = a.value().toInt)
+        case "--output-files"      => c = c.copy(outputFiles = a.int())
         case "--output-format" => c = c.copy(outputFormat = a.value())
-        case "--output-limit"       => c = c.copy(outputLimit = Some(a.value().toInt))
+        case "--output-limit"       => c = c.copy(outputLimit = Some(a.int()))
         case "--output-compression" => c = c.copy(outputCompression = a.value())
         case "--output-mode"        => c = c.copy(outputMode = a.value())
         case "--error-uri"          => c = c.copy(errorUri = a.value())
@@ -153,7 +153,7 @@ object ProcessCli {
         case "--stream-decontam-text" =>
           c = c.copy(streamDecontamText = a.value())
         case "--stream-decontam-n" =>
-          c = c.copy(streamDecontamN = a.value().toInt)
+          c = c.copy(streamDecontamN = a.int())
         // streaming sessionization AFTER the DFL stages: event-time
         // session windows with watermark-bounded state (the streaming
         // twin of the batch `sessionize(@, …)` stage, which is fenced

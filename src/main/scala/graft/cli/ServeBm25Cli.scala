@@ -68,9 +68,9 @@ object ServeBm25Cli {
         case "--qid-col"           => c = c.copy(qidCol = a.value())
         case "--terms-col"         => c = c.copy(termsCol = a.value())
         case "--index-dir"         => c = c.copy(indexDir = a.value())
-        case "--k"                 => c = c.copy(k = a.value().toInt)
-        case "--k1"                => c = c.copy(k1 = a.value().toDouble)
-        case "--b"                 => c = c.copy(b = a.value().toDouble)
+        case "--k"                 => c = c.copy(k = a.int())
+        case "--k1"                => c = c.copy(k1 = a.double())
+        case "--b"                 => c = c.copy(b = a.double())
         // verbatim — plain()'s quote-stripping is for catalog URIs and
         // would corrupt a DFL expression that starts and ends with
         // quoted literals ("'en' == @lang || @lang == 'de'")
@@ -85,7 +85,7 @@ object ServeBm25Cli {
         case "--build-from"        => c = c.copy(buildFrom = a.value())
         case "--build-id-col"      => c = c.copy(buildIdCol = a.value())
         case "--build-text-col"    => c = c.copy(buildTextCol = a.value())
-        case "--build-pbands"      => c = c.copy(buildPBands = a.value().toInt)
+        case "--build-pbands"      => c = c.copy(buildPBands = a.int())
         case "--build-meta"        => c = c.copy(buildMeta =
           a.value().split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         case other => throw new IllegalArgumentException(s"unknown flag: $other")

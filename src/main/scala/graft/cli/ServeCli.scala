@@ -93,9 +93,9 @@ object ServeCli {
         case "--vec-col"           => c = c.copy(vecCol = a.value())
         case "--index-dir"         => c = c.copy(indexDir = a.value())
         case "--method"            => c = c.copy(method = a.value())
-        case "--k"                 => c = c.copy(k = a.value().toInt)
-        case "--tuning"            => c = c.copy(tuning = Some(a.value().toInt))
-        case "--min-cos"           => c = c.copy(minCos = Some(a.value().toDouble))
+        case "--k"                 => c = c.copy(k = a.int())
+        case "--tuning"            => c = c.copy(tuning = Some(a.int()))
+        case "--min-cos"           => c = c.copy(minCos = Some(a.double()))
         // a DFL boolean over index columns (id + --build-meta metadata):
         // routes each micro-batch to the FILTERED batch probes. Passed
         // VERBATIM — plain()'s quote-stripping is for catalog URIs and
@@ -114,17 +114,17 @@ object ServeCli {
         case "--build-vec-col"     => c = c.copy(buildVecCol = a.value())
         case "--build-meta"        => c = c.copy(buildMeta =
           a.value().split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        case "--build-nbits"       => c = c.copy(buildNBits = a.value().toInt)
-        case "--build-klists"      => c = c.copy(buildKLists = a.value().toInt)
-        case "--build-pbits"       => c = c.copy(buildPBits = a.value().toInt)
-        case "--build-pq-m"        => c = c.copy(buildPqM = a.value().toInt)
-        case "--build-pq-k"        => c = c.copy(buildPqK = a.value().toInt)
+        case "--build-nbits"       => c = c.copy(buildNBits = a.int())
+        case "--build-klists"      => c = c.copy(buildKLists = a.int())
+        case "--build-pbits"       => c = c.copy(buildPBits = a.int())
+        case "--build-pq-m"        => c = c.copy(buildPqM = a.int())
+        case "--build-pq-k"        => c = c.copy(buildPqK = a.int())
         case "--keep-vectors"      => c = c.copy(keepVectors = true)
-        case "--refine"            => c = c.copy(refine = Some(a.value().toInt))
+        case "--refine"            => c = c.copy(refine = Some(a.int()))
         case "--build-opq"   => c = c.copy(buildOpq = true)
         // per-micro-batch query budget: queries collect to the driver,
         // so an unbounded file fails loudly instead of OOMing it
-        case "--max-batch-queries" => c = c.copy(maxBatchQueries = a.value().toInt)
+        case "--max-batch-queries" => c = c.copy(maxBatchQueries = a.int())
         case other => throw new IllegalArgumentException(s"unknown flag: $other")
       }
     }

@@ -95,12 +95,12 @@ object ServeHybridCli {
         case "--bm25-index-dir"    => c = c.copy(bm25IndexDir = a.value())
         case "--ann-index-dir"     => c = c.copy(annIndexDir = a.value())
         case "--ann-method"        => c = c.copy(annMethod = a.value())
-        case "--k"                 => c = c.copy(k = a.value().toInt)
-        case "--pool"              => c = c.copy(pool = a.value().toInt)
-        case "--lambda"            => c = c.copy(lambda = Some(a.value().toDouble))
-        case "--k1"                => c = c.copy(k1 = a.value().toDouble)
-        case "--b"                 => c = c.copy(b = a.value().toDouble)
-        case "--tuning"            => c = c.copy(tuning = Some(a.value().toInt))
+        case "--k"                 => c = c.copy(k = a.int())
+        case "--pool"              => c = c.copy(pool = a.int())
+        case "--lambda"            => c = c.copy(lambda = Some(a.double()))
+        case "--k1"                => c = c.copy(k1 = a.double())
+        case "--b"                 => c = c.copy(b = a.double())
+        case "--tuning"            => c = c.copy(tuning = Some(a.int()))
         // verbatim — plain()'s quote-stripping would corrupt a DFL
         // expression bracketed by quoted literals (the ServeBm25Cli note)
         case "--filter"            => c = c.copy(filterDfl = Some(a.value()))
@@ -118,16 +118,16 @@ object ServeHybridCli {
         case "--build-meta"        =>
           c = c.copy(buildMeta = a.value().split(",").toSeq
             .map(_.trim).filter(_.nonEmpty))
-        case "--build-pbands"      => c = c.copy(buildPBands = a.value().toInt)
-        case "--build-nbits"       => c = c.copy(buildNBits = a.value().toInt)
-        case "--build-klists"      => c = c.copy(buildKLists = a.value().toInt)
-        case "--build-pbits"       => c = c.copy(buildPBits = a.value().toInt)
-        case "--build-pq-m"        => c = c.copy(buildPqM = a.value().toInt)
-        case "--build-pq-k"        => c = c.copy(buildPqK = a.value().toInt)
+        case "--build-pbands"      => c = c.copy(buildPBands = a.int())
+        case "--build-nbits"       => c = c.copy(buildNBits = a.int())
+        case "--build-klists"      => c = c.copy(buildKLists = a.int())
+        case "--build-pbits"       => c = c.copy(buildPBits = a.int())
+        case "--build-pq-m"        => c = c.copy(buildPqM = a.int())
+        case "--build-pq-k"        => c = c.copy(buildPqK = a.int())
         case "--keep-vectors"      => c = c.copy(keepVectors = true)
-        case "--refine"            => c = c.copy(refine = Some(a.value().toInt))
+        case "--refine"            => c = c.copy(refine = Some(a.int()))
         case "--build-opq"   => c = c.copy(buildOpq = true)
-        case "--max-batch-queries" => c = c.copy(maxBatchQueries = a.value().toInt)
+        case "--max-batch-queries" => c = c.copy(maxBatchQueries = a.int())
         case other => throw new IllegalArgumentException(s"unknown flag: $other")
       }
     }

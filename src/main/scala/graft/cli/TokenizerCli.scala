@@ -54,10 +54,10 @@ object TokenizerCli {
         case "--text-col"      => c = c.copy(textCol = a.value())
         case "--tokenizer-dir" => c = c.copy(tokenizerDir = a.value())
         case "--output-uri"    => c = c.copy(outputUri = a.value())
-        case "--merges"        => c = c.copy(merges = a.value().toInt)
-        case "--vocab-size"    => c = c.copy(vocabSize = a.value().toInt)
-        case "--max-piece-len" => c = c.copy(maxPieceLen = a.value().toInt)
-        case "--min-count"     => c = c.copy(minCount = a.value().toLong)
+        case "--merges"        => c = c.copy(merges = a.int())
+        case "--vocab-size"    => c = c.copy(vocabSize = a.int())
+        case "--max-piece-len" => c = c.copy(maxPieceLen = a.int())
+        case "--min-count"     => c = c.copy(minCount = a.long())
         case other => throw new IllegalArgumentException(s"unknown flag: $other")
       }
     }

@@ -255,25 +255,27 @@ object DataStoreIO {
     val compression = if (opts.compression.nonEmpty) opts.compression
       else if (inf.compression.nonEmpty) inf.compression else "none"
     val df = opts.limit.fold(df0)(df0.limit)
+    def writer = df.write.mode(opts.mode)
+      .options(NioLocalFileSystem.writerOptions(df.sparkSession))
     format match {
       // columnar codecs ride the writer option (snappy default; zstd is
       // the modern storage/scan trade, gzip the max-ratio archive one)
       case "parquet" =>
         val w = if (opts.compression.nonEmpty)
-          df.write.option("compression", opts.compression) else df.write
-        w.mode(opts.mode).parquet(uri)
+          writer.option("compression", opts.compression) else writer
+        w.parquet(uri)
       case "orc" =>
         val w = if (opts.compression.nonEmpty)
-          df.write.option("compression", opts.compression) else df.write
-        w.mode(opts.mode).orc(uri)
+          writer.option("compression", opts.compression) else writer
+        w.orc(uri)
       case "csv" | "tsv" =>
-        df.write.mode(opts.mode)
+        writer
           .option("sep", if (format == "tsv") "\t" else ",")
           .option("header", opts.header)
           .option("compression", compression)
           .csv(uri)
       case "jsonl" =>
-        df.write.mode(opts.mode).option("compression", compression).json(uri)
+        writer.option("compression", compression).json(uri)
       case "json" =>
         // whole-document array: driver-side assembly (CLI-sized results
         // only — engine paths use jsonl/parquet)

@@ -32,6 +32,7 @@ object DynamicSink {
       .withColumn("_tile_x", x)
       .withColumn("_tile_y", y)
     val w = withTiles.write.mode("overwrite")
+      .options(NioLocalFileSystem.writerOptions(df.sparkSession))
       .partitionBy("_tile_z", "_tile_x", "_tile_y")
     format match {
       case "parquet" => w.parquet(outDir)
@@ -68,6 +69,7 @@ object DynamicSink {
     try {
       val tmp = staging.toString
       val w0 = df.withColumn("__path", pathCol).write
+        .options(NioLocalFileSystem.writerOptions(df.sparkSession))
         .mode("overwrite").partitionBy("__path")
       // concatenated gzip members are a valid gzip stream, so merged shards
       // stay decompressible

@@ -27,7 +27,7 @@ object IndexCompact {
     while (a.more) {
       a.flag() match {
         case "--index-dir"          => indexDir = a.value()
-        case "--min-files-per-part" => minFilesPerPart = a.value().toLong
+        case "--min-files-per-part" => minFilesPerPart = a.long()
         case other => throw new IllegalArgumentException(s"unknown flag: $other")
       }
     }

@@ -4,7 +4,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-import graft.util.Sessions
+import graft.util.{ProcessStarts, Sessions}
 
 /** Per-query WORK profile — the measurement harness behind the round-21
   * optimization pass (guide §1: measure first). Wall-clock on a loaded
@@ -16,7 +16,9 @@ import graft.util.Sessions
   * expression classes Janino compiled during that warm run: Spark caches
   * generated classes by their source text, so a nonzero warm count flags
   * a plan whose generated code depends on values (a literal inlined per
-  * run instead of bound by reference).
+  * run instead of bound by reference). `forks` counts the child processes
+  * the JVM started during that run (`ProcessStarts`, an in-process JFR
+  * probe): a per-file `chmod` or other per-file fork shows up there.
   *
   * Usage: runMain graft.tools.Profile <sfDir> <query> [query ...]
   */
@@ -51,7 +53,7 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
     println(f"${"query"}%-30s ${"wall_s"}%7s ${"jobs"}%5s ${"stages"}%6s " +
-      f"${"tasks"}%6s ${"tasktime_s"}%10s ${"shufW_MB"}%8s ${"compiles"}%8s ${"compile_ms"}%10s")
+      f"${"tasks"}%6s ${"tasktime_s"}%10s ${"shufW_MB"}%8s ${"compiles"}%8s ${"compile_ms"}%10s ${"forks"}%5s")
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def compileNs = CodeGenerator.compileTime
     // a query that throws must not pollute the attribution data: its row
@@ -64,19 +66,22 @@ object Profile {
         taskTimeMs.set(0); shufWrite.set(0); shufRead.set(0)
         var failed = false
         val (c0, cNs0) = (compiles, compileNs)
-        val t0 = System.nanoTime()
-        try graft.SparkEntry.queries(n)(spark, dir).count()
-        catch { case e: Throwable =>
-          failed = true; anyFailed = true
-          System.err.println(s"[profile] $n failed: ${e.getMessage}") }
-        val wall = (System.nanoTime() - t0) / 1e9
+        val (wall, forks) = ProcessStarts.during {
+          val t0 = System.nanoTime()
+          try graft.SparkEntry.queries(n)(spark, dir).count()
+          catch { case e: Throwable =>
+            failed = true; anyFailed = true
+            System.err.println(s"[profile] $n failed: ${e.getMessage}") }
+          (System.nanoTime() - t0) / 1e9
+        }
         // listener events drain asynchronously — settle before reading
         Thread.sleep(300)
         if (round == 2) {
           if (failed) println(f"$n%-30s  FAILED (counters suppressed)")
           else println(f"$n%-30s $wall%7.2f ${jobs.get}%5d ${stages.get}%6d " +
             f"${tasks.get}%6d ${taskTimeMs.get / 1e3}%10.2f " +
-            f"${shufWrite.get / 1e6}%8.1f ${compiles - c0}%8d ${(compileNs - cNs0) / 1e6}%10.1f")
+            f"${shufWrite.get / 1e6}%8.1f ${compiles - c0}%8d ${(compileNs - cNs0) / 1e6}%10.1f " +
+            f"${forks.size}%5d")
         }
       }
     }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * its app name and its master — `SPARK_MASTER` when set, else local mode
   * on `SPARK_GRAFT_CPUS` cores (the main's own default when unset).
   * Shuffle partitions follow the local core count (4 on a cluster
-  * master). */
+  * master). `file:` writes set permissions without forking `chmod`
+  * ([[graft.io.NioLocalFileSystem]]). */
 object Sessions {
 
   val conf: Seq[(String, String)] = Seq(
@@ -23,7 +24,8 @@ object Sessions {
     // threshold (10) Spark pushes only the ids' min/max range. Set once
     // here, never flipped mid-session by a probe.
     "spark.sql.parquet.pushdown.inFilterThreshold" -> "262144",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false") ++
+    graft.io.NioLocalFileSystem.conf.toSeq.map { case (k, v) => s"spark.hadoop.$k" -> v }
 
   private lazy val envCpus: Option[Int] = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
 

@@ -1,0 +1,52 @@
+package graft.cli
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Numeric flags across the `Argv` CLIs: a malformed value fails naming
+  * the flag and the value, never as a bare `NumberFormatException`. */
+class ArgvSpec extends AnyFunSuite {
+
+  private val malformed: Seq[(String, Array[String] => Any, Seq[String])] = Seq(
+    ("convert", ConvertCli.parseArgs, Seq("--input-skip", "abc")),
+    ("convert", ConvertCli.parseArgs, Seq("--output-limit", "ten")),
+    ("process", ProcessCli.parseArgs, Seq("--input-limit", "1.5")),
+    ("process", ProcessCli.parseArgs, Seq("--output-files", "x")),
+    ("serve-ann", ServeCli.parseArgs, Seq("--k", "two")),
+    ("serve-ann", ServeCli.parseArgs, Seq("--min-cos", "high")),
+    ("serve-hybrid", ServeHybridCli.parseArgs, Seq("--lambda", "0,7")),
+    ("serve-hybrid", ServeHybridCli.parseArgs, Seq("--pool", "")),
+    ("serve-bm25", ServeBm25Cli.parseArgs, Seq("--k1", "1.2x")),
+    ("ingest-ann", IngestCli.parseArgs, Seq("--retrain-skew", "big")),
+    ("ingest-ann", IngestCli.parseArgs, Seq("--compact-every", "3.0")),
+    ("corpus-ingest", CorpusIngestCli.parseArgs, Seq("--threshold", "abc")),
+    ("corpus-ingest", CorpusIngestCli.parseArgs, Seq("--shard-weight", "1e3")),
+    ("tokenizer", (a: Array[String]) => TokenizerCli.parseArgs("train" +: a),
+      Seq("--min-count", "many")))
+
+  malformed.foreach { case (cli, parse, args @ Seq(flag, v)) =>
+    test(s"$cli ${args.mkString(" ")} fails naming the flag and the value") {
+      val e = intercept[IllegalArgumentException](parse(args.toArray))
+      assert(!e.isInstanceOf[NumberFormatException], e)
+      assert(e.getMessage.contains(s"flag $flag requires"), e.getMessage)
+      assert(e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
+  test("a numeric flag left dangling fails naming the flag") {
+    val e = intercept[IllegalArgumentException](ServeCli.parseArgs(Array("--k")))
+    assert(e.getMessage == "flag --k requires a value")
+  }
+
+  test("well-formed numeric values parse to their types") {
+    val a = new Argv(Array("--n", "-3", "--big", "1099511627776", "--x", "1e-3", "--y", "2"))
+    assert(a.flag() == "--n" && a.int() == -3)
+    assert(a.flag() == "--big" && a.long() == (1L << 40))
+    assert(a.flag() == "--x" && a.double() == 0.001)
+    assert(a.flag() == "--y" && a.double() == 2.0)
+    assert(!a.more)
+    val b = new Argv(Array("--n", "1099511627776"))
+    b.flag()
+    val e = intercept[IllegalArgumentException](b.int())
+    assert(e.getMessage == "flag --n requires an integer, got '1099511627776'")
+  }
+}

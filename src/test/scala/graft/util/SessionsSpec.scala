@@ -15,6 +15,19 @@ class SessionsSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold") == "262144")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.hadoop.fs.file.impl") == "graft.io.NioLocalFileSystem")
+    assert(spark.conf.get("spark.hadoop.fs.file.impl.disable.cache") == "true")
+  }
+
+  test("file: resolves to the fork-free local file system, uncached") {
+    val hc = TestSpark.spark.sessionState.newHadoopConf()
+    assert(hc.get("fs.file.impl") == classOf[graft.io.NioLocalFileSystem].getName)
+    assert(hc.getBoolean("fs.file.impl.disable.cache", false))
+    val p = new org.apache.hadoop.fs.Path("file:///tmp")
+    val fs = p.getFileSystem(hc)
+    assert(fs.isInstanceOf[graft.io.NioLocalFileSystem], fs.getClass)
+    // not cached: a stock instance cached by anyone else can never shadow it
+    assert(!(p.getFileSystem(hc) eq fs))
   }
 
   test("SPARK_GRAFT_CPUS parses once to a positive Int; a bad value names the variable") {
