@@ -119,6 +119,20 @@ object SparkEntry {
     2L -> Seq("merge", "sort", "stream"),
     3L -> Seq("vector", "hash"))
 
+  /** BM25 top-k of the documents corpus by direct scan. */
+  private def bm25Scan(docs: DataFrame, q: llm.Retrieval.Queries,
+                       k: Int): DataFrame =
+    llm.Retrieval.probe(llm.Retrieval.Scan(docs, "doc_id", "text"),
+      llm.Retrieval.Probe(q, k))
+
+  /** BM25 top-k served from the built index at `idxDir`. */
+  private def bm25Index(s: SparkSession, idxDir: String,
+                        q: llm.Retrieval.Queries, k: Int,
+                        filter: Option[org.apache.spark.sql.Column] = None)
+      : DataFrame =
+    llm.Retrieval.probe(llm.Retrieval.Dir(s, idxDir),
+      llm.Retrieval.Probe(q, k, filter))
+
   /** Deterministic graded judgments for the retrieval_eval rows: query
     * q judges every doc with doc_id % (10+q) == 0 at rel 1 + doc_id%3
     * — replayed literally by [[retrievalQrelsSql]]. */
@@ -2612,12 +2626,13 @@ object SparkEntry {
     // BM25 top-10 for a fixed query over the documents corpus: one
     // corpus scan, term-filtered BEFORE the shuffle, bounded-heap top-k
     "bm25_topk" -> ((s, dir) =>
-      llm.Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-        Seq("spark", "stream", "window"), k = 10)),
-    // three queries in ONE corpus pass; contract: each slice ≡ bm25TopK
+      bm25Scan(t(s, dir, "documents"),
+        llm.Retrieval.One(Seq("spark", "stream", "window")), k = 10)),
+    // three queries in ONE corpus pass; contract: each slice ≡ its
+    // single-query probe
     "bm25_batch" -> ((s, dir) =>
-      llm.Retrieval.bm25TopKBatch(t(s, dir, "documents"), "doc_id", "text",
-        bm25BatchQueries, k = 5)),
+      bm25Scan(t(s, dir, "documents"),
+        llm.Retrieval.Batch(bm25BatchQueries), k = 5)),
     "dfl_bm25" -> ((s, dir) =>
       DflFrame.pipeline(t(s, dir, "documents"),
         "bm25(@, '@doc_id', '@text', 'spark stream window', 10)")),
@@ -2628,8 +2643,8 @@ object SparkEntry {
       val idxDir = memoIndexDir(dir, "bm25idx", table = "documents") { d =>
         llm.Retrieval.bm25Build(t(s, dir, "documents"), "doc_id", "text", d)
       }
-      llm.Retrieval.bm25TopKIndexed(s, idxDir,
-        Seq("spark", "stream", "window"), k = 10)
+      bm25Index(s, idxDir, llm.Retrieval.One(Seq("spark", "stream", "window")),
+        k = 10)
     }),
     // the batch twin: one pruned posting read for the union of all
     // query terms, each slice value-identical to the direct batch scan
@@ -2637,7 +2652,7 @@ object SparkEntry {
       val idxDir = memoIndexDir(dir, "bm25idx", table = "documents") { d =>
         llm.Retrieval.bm25Build(t(s, dir, "documents"), "doc_id", "text", d)
       }
-      llm.Retrieval.bm25TopKIndexedBatch(s, idxDir, bm25BatchQueries, k = 5)
+      bm25Index(s, idxDir, llm.Retrieval.Batch(bm25BatchQueries), k = 5)
     }),
     // FILTERED indexed serving: a metadata-carrying build probed under
     // a language predicate — corpus-GLOBAL statistics (a surviving
@@ -2649,8 +2664,8 @@ object SparkEntry {
         llm.Retrieval.bm25Build(t(s, dir, "documents"), "doc_id", "text", d,
           metaCols = Seq("lang"))
       }
-      llm.Retrieval.bm25TopKIndexedFiltered(s, idxDir,
-        Seq("spark", "stream", "window"), k = 10, col("lang") === "en")
+      bm25Index(s, idxDir, llm.Retrieval.One(Seq("spark", "stream", "window")),
+        k = 10, Some(col("lang") === "en"))
     }),
     // the filtered BATCH twin (the serve-bm25 --filter shape): one
     // pruned read for the union terms, every slice ≡ the single
@@ -2660,8 +2675,8 @@ object SparkEntry {
         llm.Retrieval.bm25Build(t(s, dir, "documents"), "doc_id", "text", d,
           metaCols = Seq("lang"))
       }
-      llm.Retrieval.bm25TopKIndexedBatchFiltered(s, idxDir,
-        bm25BatchQueries, k = 5, col("lang") === "en")
+      bm25Index(s, idxDir, llm.Retrieval.Batch(bm25BatchQueries), k = 5,
+        Some(col("lang") === "en"))
     }),
     // the index APPEND lifecycle: build on a doc_id prefix, append the
     // rest (increment-only scans, additive df/stats merge, staged
@@ -2675,8 +2690,8 @@ object SparkEntry {
         llm.Retrieval.bm25Append(docs.filter(col("doc_id") >= 300L),
           "doc_id", "text", d)
       }
-      llm.Retrieval.bm25TopKIndexed(s, idxDir,
-        Seq("merge", "sort", "stream"), k = 10)
+      bm25Index(s, idxDir, llm.Retrieval.One(Seq("merge", "sort", "stream")),
+        k = 10)
     }),
     // the id-DELETE lifecycle verb: every doc_id ≡ 3 (mod 10) is
     // tombstoned, its postings anti-joined away, its per-term df
@@ -2694,8 +2709,8 @@ object SparkEntry {
           docs.filter(col("doc_id") % 10 === 3).select("doc_id"),
           "doc_id", d); ()
       }
-      llm.Retrieval.bm25TopKIndexed(s, idxDir,
-        Seq("spark", "stream", "window"), k = 10)
+      bm25Index(s, idxDir, llm.Retrieval.One(Seq("spark", "stream", "window")),
+        k = 10)
     }),
     // TREC-style rank-quality evaluation: the batch BM25 run measured
     // against a deterministic graded judgment set (qid q judges docs
@@ -2704,24 +2719,21 @@ object SparkEntry {
     // replayed in SQL
     "retrieval_eval" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val run = llm.Retrieval.bm25TopKBatch(docs, "doc_id", "text",
-        bm25BatchQueries, k = 10)
+      val run = bm25Scan(docs, llm.Retrieval.Batch(bm25BatchQueries), k = 10)
       llm.Retrieval.evalRun(run, retrievalQrels(docs), k = 10)
     }),
     // the leaderboard row: query-averaged MAP / MRR / mean-nDCG over
     // the same run and judgments — ONE number set per corpus
     "retrieval_eval_macro" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val run = llm.Retrieval.bm25TopKBatch(docs, "doc_id", "text",
-        bm25BatchQueries, k = 10)
+      val run = bm25Scan(docs, llm.Retrieval.Batch(bm25BatchQueries), k = 10)
       llm.Retrieval.evalRunMacro(run, retrievalQrels(docs), k = 10)
     }),
     // the same evaluation through the DFL stage (judgments bound as a
     // dataset var) — shares the oracle
     "dfl_rank_eval" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val run = llm.Retrieval.bm25TopKBatch(docs, "doc_id", "text",
-        bm25BatchQueries, k = 10)
+      val run = bm25Scan(docs, llm.Retrieval.Batch(bm25BatchQueries), k = 10)
       DflFrame.pipeline(run,
         "rankEval(@, '@qid', '@id', '@rnk', $qrels, 10)",
         Map("qrels" -> retrievalQrels(docs)))
@@ -2731,10 +2743,10 @@ object SparkEntry {
     "rrf_fuse" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       llm.Retrieval.rrfFuse(Seq(
-        llm.Retrieval.bm25TopK(docs, "doc_id", "text",
-          Seq("spark", "stream", "window"), k = 20).select("id", "rnk"),
-        llm.Retrieval.bm25TopK(docs, "doc_id", "text",
-          Seq("merge", "vector", "hash"), k = 20).select("id", "rnk")),
+        bm25Scan(docs, llm.Retrieval.One(Seq("spark", "stream", "window")),
+          k = 20).select("id", "rnk"),
+        bm25Scan(docs, llm.Retrieval.One(Seq("merge", "vector", "hash")),
+          k = 20).select("id", "rnk")),
         k = 10)
     }),
     // the hybrid retrieval serving shape: BM25 lexical run ⊕ semantic
@@ -2745,8 +2757,8 @@ object SparkEntry {
     "pipeline_hybrid_retrieval" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val qtext = "spark stream window merge"
-      val lex = llm.Retrieval.bm25TopK(docs, "doc_id", "text",
-        qtext.split(" ").toSeq, k = 20).select("id", "rnk")
+      val lex = bm25Scan(docs, llm.Retrieval.One(qtext.split(" ").toSeq),
+        k = 20).select("id", "rnk")
       val emb = llm.TextAnalysis.hashEmbed(docs, "doc_id", "text",
         dim = 16, seed = 7L)
       import s.implicits._
@@ -2777,8 +2789,8 @@ object SparkEntry {
       val idxDir = memoIndexDir(dir, "bm25idx", table = "documents") { d =>
         llm.Retrieval.bm25Build(docs, "doc_id", "text", d)
       }
-      val lex = llm.Retrieval.bm25TopKIndexed(s, idxDir,
-        qtext.split(" ").toSeq, k = 20).select("id", "rnk")
+      val lex = bm25Index(s, idxDir, llm.Retrieval.One(qtext.split(" ").toSeq),
+        k = 20).select("id", "rnk")
       // lazy localCheckpoint: emb feeds the cosine leg AND the MMR
       // candidate join — hashEmbed (explode+agg+reassembly) ran twice
       val emb = llm.TextAnalysis.hashEmbed(docs, "doc_id", "text",

@@ -134,7 +134,7 @@ object IngestCli {
     val c = resolve(c0)
     if (c.method == "bm25") {
       if (c.buildFrom.nonEmpty)
-        graft.llm.Retrieval.ensureBm25Index(spark, c.indexDir, c.buildFrom,
+        graft.llm.Retrieval.ensure(spark, c.indexDir, c.buildFrom,
           c.idCol, c.textCol, c.buildPBands, c.buildMeta)
       StreamRunner.bm25IngestJob(spark, c.corpusUri, c.corpusFormat,
         c.idCol, c.textCol, c.indexDir, c.checkpoint, c.once,

@@ -91,6 +91,7 @@ object ServeBm25Cli {
         case other => throw new IllegalArgumentException(s"unknown flag: $other")
       }
     }
+    graft.llm.Retrieval.requireKnobs(c.k1, c.b, "--k1", "--b")
     require(c.indexDir.nonEmpty, "--index-dir is required")
     require(c.checkpoint.nonEmpty,
       "--checkpoint is required (it is what makes the job restartable)")
@@ -117,7 +118,7 @@ object ServeBm25Cli {
   def run(spark: SparkSession, c0: Config): org.apache.spark.sql.streaming.StreamingQuery = {
     val c = resolve(c0)
     if (c.buildFrom.nonEmpty)
-      graft.llm.Retrieval.ensureBm25Index(spark, c.indexDir, c.buildFrom,
+      graft.llm.Retrieval.ensure(spark, c.indexDir, c.buildFrom,
         c.buildIdCol, c.buildTextCol, c.buildPBands, c.buildMeta)
     StreamRunner.bm25ServeJob(spark, c.queriesUri, c.queriesFormat,
       c.qidCol, c.termsCol, c.indexDir, c.k, c.outputUri, c.outputFormat,

@@ -52,7 +52,7 @@ import graft.util.Sessions
   *
   * `--build-from` bootstraps BOTH indexes from one parquet corpus of
   * (id, text, vec[, meta…]) rows when they don't exist yet
-  * ([[graft.llm.Retrieval.ensureBm25Index]] +
+  * ([[graft.llm.Retrieval.ensure]] +
   * [[graft.llm.Ann.ensure]] — existing indexes are served as-is under
   * the single-writer contract, and an ANN dir built as another family
   * than `--ann-method` fails, naming both): one relaunch-safe command
@@ -131,6 +131,7 @@ object ServeHybridCli {
         case other => throw new IllegalArgumentException(s"unknown flag: $other")
       }
     }
+    graft.llm.Retrieval.requireKnobs(c.k1, c.b, "--k1", "--b")
     require(c.bm25IndexDir.nonEmpty, "--bm25-index-dir is required")
     require(c.annIndexDir.nonEmpty, "--ann-index-dir is required")
     require(c.annMethod == "ivfpq" || (!c.keepVectors && !c.buildOpq),
@@ -161,7 +162,7 @@ object ServeHybridCli {
   def run(spark: SparkSession, c0: Config): org.apache.spark.sql.streaming.StreamingQuery = {
     val c = resolve(c0)
     if (c.buildFrom.nonEmpty) {
-      graft.llm.Retrieval.ensureBm25Index(spark, c.bm25IndexDir, c.buildFrom,
+      graft.llm.Retrieval.ensure(spark, c.bm25IndexDir, c.buildFrom,
         c.buildIdCol, c.buildTextCol, c.buildPBands, c.buildMeta)
       graft.llm.Ann.ensure(spark, c.annIndexDir, c.buildFrom, c.buildIdCol,
         c.buildVecCol, graft.llm.Ann.Build(c.annMethod, c.buildKLists,

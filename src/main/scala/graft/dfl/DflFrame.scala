@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import Node._
-import graft.llm.Ann
+import graft.llm.{Ann, Retrieval}
 
 /** Executes a DFL pipeline against a DataFrame.
   *
@@ -563,6 +563,16 @@ object DflFrame {
           s"$stage: '$dir' is not a built index dir")
         case _ => Ann.Dir(df.sparkSession, dir)
       }
+    // a PREBUILT bm25 dir probed for a stage: a dir of another kind, or
+    // none, keeps the stage's own error, naming its ANN twin
+    def lexDirStage(stage: String, dir: String, annTwin: String,
+                    p: Retrieval.Probe): DataFrame =
+      try Retrieval.probe(Retrieval.Dir(df.sparkSession, dir), p)
+      catch {
+        case e: Retrieval.Rejected => throw new DflParseException(
+          e.kind.fold(s"$stage: '$dir' is not a built index dir")(k =>
+            s"$stage: '$dir' is a '$k' index — use $annTwin"))
+      }
     def vecArg(i: Int): Seq[Double] = argAt(i) match {
       case Var(n2) => vars.getOrElse(n2,
         throw new DflParseException(s"unbound $$$n2")) match {
@@ -794,12 +804,12 @@ object DflFrame {
 
       case "bm25" =>
         // `bm25(@, '@id', '@text', 'terms', k[, k1, b])` — lexical
-        // ranked retrieval: for a FILE-BACKED corpus the query runs
-        // through the cached inverted-index lifecycle (bm25TopKCached,
-        // the annTopK posture — build once per fingerprint, every later
+        // ranked retrieval over the stage's [[lexCorpus]]: a FILE-BACKED
+        // corpus runs through the cached inverted-index lifecycle (the
+        // annTopK posture — build once per fingerprint, every later
         // service exec is a partition-pruned posting probe instead of a
         // corpus rescan, value-identical by the index contract);
-        // in-memory corpora take the direct one-scan bm25TopK. Corpus
+        // in-memory corpora take the direct one-scan probe. Corpus
         // statistics either way → stream-fenced.
         if (args.size < 5 || args.size > 7) throw new DflParseException(
           "bm25 takes (@, idExpr, textExpr, 'terms', k[, k1, b])")
@@ -807,16 +817,13 @@ object DflFrame {
         if (bmTerms.isEmpty)
           throw new DflParseException("bm25: empty query terms")
         val bmK = intArg(4)
+        if (bmK <= 0) throw new DflParseException("bm25: k must be positive")
         val bmK1 = if (args.size > 5) numArg(5) else 1.2
         val bmB = if (args.size > 6) numArg(6) else 0.75
         val bmBase = df.withColumn("__gid", subCol(1))
           .withColumn("__gtext", subCol(2))
-        if (dflIndexable(bmBase.select(col("__gid"), col("__gtext"))))
-          graft.llm.Retrieval.bm25TopKCached(bmBase, "__gid", "__gtext",
-            dflCorpusKey(bmBase, "bm25"), bmTerms, bmK, k1 = bmK1, b = bmB)
-        else
-          graft.llm.Retrieval.bm25TopK(bmBase, "__gid", "__gtext", bmTerms,
-            bmK, bmK1, bmB)
+        Retrieval.probe(lexCorpus(bmBase, "bm25"),
+          Retrieval.Probe(Retrieval.One(bmTerms), bmK, k1 = bmK1, b = bmB))
 
       case "lineDedup" =>
         // `lineDedup(@, '@id', '@text'[, sep])` — corpus-wide line-level
@@ -1318,13 +1325,9 @@ object DflFrame {
         val pool = 2 * hyK
         val hyBase = df.withColumn("__gid", subCol(1))
           .withColumn("__gtext", subCol(2)).withColumn("__gvec", subCol(3))
-        val lexBase = hyBase.select(col("__gid"), col("__gtext"))
-        val lex = (if (dflIndexable(lexBase))
-            graft.llm.Retrieval.bm25TopKCached(lexBase, "__gid", "__gtext",
-              dflCorpusKey(lexBase, "bm25"), hyTerms, pool)
-          else
-            graft.llm.Retrieval.bm25TopK(lexBase, "__gid", "__gtext",
-              hyTerms, pool)).select("id", "rnk")
+        val lex = Retrieval.probe(lexCorpus(hyBase, "bm25"),
+            Retrieval.Probe(Retrieval.One(hyTerms), pool))
+          .select("id", "rnk")
         // this ranks ONLY bruteForceTopK's already-bounded ≤2k pool
         // (the heap ran distributed; this numbers its tiny output), so
         // the single-partition move is serving-sized by construction.
@@ -1394,16 +1397,10 @@ object DflFrame {
           whole = () => struct(hfBase.columns.map(col).toIndexedSeq: _*),
           vars = vars,
           attrType = nm => hfSchema.fields.find(_.name == nm).map(_.dataType)))
-        val hfLexBase = hfBase.select(
-          col("__gid") +: col("__gtext") +: hfMeta.map(col): _*)
-        val hfLex = (if (dflIndexable(hfLexBase))
-            graft.llm.Retrieval.bm25TopKCachedFiltered(hfLexBase, "__gid",
-              "__gtext",
-              dflCorpusKey(hfLexBase, s"bm25-filtered|${hfMeta.mkString(",")}"),
-              hfTerms, hfPool, hfPred, hfMeta)
-          else
-            graft.llm.Retrieval.bm25TopKFiltered(hfLexBase, "__gid",
-              "__gtext", hfTerms, hfPool, hfPred)).select("id", "rnk")
+        val hfLex = Retrieval.probe(
+            lexCorpus(hfBase, s"bm25-filtered|${hfMeta.mkString(",")}", hfMeta),
+            Retrieval.Probe(Retrieval.One(hfTerms), hfPool, Some(hfPred)))
+          .select("id", "rnk")
         // bounded-pool rank under a constant key — see the hybrid
         // stage's note
         val hfSemW = org.apache.spark.sql.expressions.Window
@@ -1507,15 +1504,8 @@ object DflFrame {
         if (bpK <= 0) throw new DflParseException("bm25Probe: k must be positive")
         val bpK1 = if (args.size > 4) numArg(4) else 1.2
         val bpB = if (args.size > 5) numArg(5) else 0.75
-        val bpSpark = df.sparkSession
-        graft.llm.Similarity.indexKind(bpSpark, bpDir) match {
-          case Some("bm25") => graft.llm.Retrieval.bm25TopKIndexed(bpSpark,
-            bpDir, bpTerms, bpK, bpK1, bpB)
-          case Some(other) => throw new DflParseException(
-            s"bm25Probe: '$bpDir' is a '$other' index — use annProbe")
-          case None => throw new DflParseException(
-            s"bm25Probe: '$bpDir' is not a built index dir")
-        }
+        lexDirStage("bm25Probe", bpDir, "annProbe",
+          Retrieval.Probe(Retrieval.One(bpTerms), bpK, k1 = bpK1, b = bpB))
 
       case "annProbeBatch" =>
         // `annProbeBatch(@, $idx, $qs, k[, tuning[, refine]])` — the
@@ -1549,15 +1539,8 @@ object DflFrame {
           throw new DflParseException("bm25ProbeBatch: k must be positive")
         val bbK1 = if (args.size > 4) numArg(4) else 1.2
         val bbB = if (args.size > 5) numArg(5) else 0.75
-        val bbSpark = df.sparkSession
-        graft.llm.Similarity.indexKind(bbSpark, bbDir) match {
-          case Some("bm25") => graft.llm.Retrieval.bm25TopKIndexedBatch(
-            bbSpark, bbDir, bbQs, bbK, bbK1, bbB)
-          case Some(other) => throw new DflParseException(
-            s"bm25ProbeBatch: '$bbDir' is a '$other' index — use annProbeBatch")
-          case None => throw new DflParseException(
-            s"bm25ProbeBatch: '$bbDir' is not a built index dir")
-        }
+        lexDirStage("bm25ProbeBatch", bbDir, "annProbeBatch",
+          Retrieval.Probe(Retrieval.Batch(bbQs), bbK, k1 = bbK1, b = bbB))
 
       case "hybridProbe" =>
         // `hybridProbe(@, $bmIdx, $annIdx, 'terms', $qvec, k[, lambda])`
@@ -1589,11 +1572,12 @@ object DflFrame {
             s"hybridProbe: lambda must be in [0,1], got $l"))
         val hpPool = 2 * hpK
         val hpSpark = df.sparkSession
-        graft.llm.Similarity.indexKind(hpSpark, hpBmDir) match {
-          case Some("bm25") =>
-          case other => throw new DflParseException(
-            s"hybridProbe: '$hpBmDir' is not a bm25 index (got $other)")
-        }
+        val hpLex = (try Retrieval.probe(Retrieval.Dir(hpSpark, hpBmDir),
+            Retrieval.Probe(Retrieval.One(hpTerms), hpPool))
+          catch {
+            case e: Retrieval.Rejected => throw new DflParseException(
+              s"hybridProbe: '$hpBmDir' is not a bm25 index (got ${e.kind})")
+          }).select("id", "rnk")
         val hpAnnKind = graft.llm.Similarity.indexKind(hpSpark, hpAnnDir)
         if (hpAnnKind.forall(_ == "bm25")) throw new DflParseException(
           s"hybridProbe: '$hpAnnDir' is not an ANN index (got $hpAnnKind)")
@@ -1614,8 +1598,6 @@ object DflFrame {
         val hpVecDir =
           if (hpFloats) s"$hpAnnDir/vectors"
           else s"$hpAnnDir/${graft.llm.Pq.vectorSidecarDir}"
-        val hpLex = graft.llm.Retrieval.bm25TopKIndexed(hpSpark, hpBmDir,
-          hpTerms, hpPool).select("id", "rnk")
         // bounded-pool rank under a constant key — see the hybrid
         // stage's note
         val hpW = org.apache.spark.sql.expressions.Window
@@ -2090,6 +2072,19 @@ object DflFrame {
     if (dflIndexable(base))
       Ann.Cached(base, "id", "v", dflCorpusKey(base, keyTag), b)
     else Ann.Adhoc(base, "id", "v", b)
+  }
+
+  /** The lexical twin of [[annCorpus]]: a DFL stage's (`__gid`,
+    * `__gtext`[, metaCols]) corpus as a BM25 probe source — the cached
+    * index lifecycle past the [[dflIndexable]] size bound, else the
+    * direct scan. */
+  private def lexCorpus(base: DataFrame, keyTag: String,
+                        metaCols: Seq[String] = Nil): Retrieval.Source = {
+    val lex = base.select(col("__gid") +: col("__gtext") +: metaCols.map(col): _*)
+    if (dflIndexable(lex))
+      Retrieval.Cached(lex, "__gid", "__gtext", dflCorpusKey(lex, keyTag),
+        metaCols = metaCols)
+    else Retrieval.Scan(lex, "__gid", "__gtext")
   }
 
   /** Stable index-cache key for a DFL-invoked ANN stage (DFL callers have

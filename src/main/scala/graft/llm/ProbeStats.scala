@@ -4,7 +4,7 @@ package graft.llm
   * 100-TB operator tunes `nprobe` / `minCandidates` / `minCos` from.
   *
   * The probes ([[Ann.probe]] for ivf | lsh | ivfpq,
-  * [[Retrieval.bm25TopKIndexedBatch]])
+  * [[Retrieval.probe]] for bm25)
   * RECORD one [[ProbeStats.Leg]] per probe PASS — a batch larger than
   * the probe's `chunkSize` (256) chunk-recurses and records one leg
   * per chunk, so sum `queries` across legs (never count legs) to

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Lexical retrieval over the corpus — the serving-side complement of the
@@ -62,74 +62,139 @@ object Retrieval {
       (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl") / col("avgdl"))))
   }
 
-  /** BM25 top-k: `(id, score, rnk)` — the k best-scoring documents for
-    * the query `terms` (matched against normalized whitespace tokens),
-    * scored `Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))` with
+  // ── the one BM25 probe ──
+
+  sealed trait Queries
+  /** One query's terms; the answer is `(id, score, rnk)`. */
+  final case class One(terms: Seq[String]) extends Queries
+  /** `(qid, terms)` pairs; the answer is `(qid, id, score, rnk)`, each
+    * qid's slice equal to its [[One]] answer. */
+  final case class Batch(queries: Seq[(Long, Seq[String])]) extends Queries
+
+  /** What to answer: the k best documents per query, scored
+    * `Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))` with
     * `idf = ln(1 + (N-df+0.5)/(df+0.5))` (the Lucene variant — always
-    * ≥ 0, no negative-idf cliff for terms in >half the corpus). Ranks
-    * are 1-based over (score desc, id asc); only documents matching at
-    * least one term appear (SQL semantics: no zero-score padding). */
-  def bm25TopK(df: DataFrame, idCol: String, textCol: String,
-               terms: Seq[String], k: Int, k1: Double = 1.2,
-               b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty, "bm25TopK: empty query")
-    require(k > 0, s"bm25TopK: k must be positive, got $k")
-    directTopK(df, idCol, textCol, terms, k, k1, b, None)
-  }
+    * ≥ 0, no negative-idf cliff for terms in >half the corpus). Terms
+    * match normalized whitespace tokens; repeated terms count once.
+    * Ranks are 1-based over (score desc, id asc); only documents
+    * matching at least one term appear (SQL semantics: no zero-score
+    * padding). `filter` restricts the CANDIDATES only: N, avgdl and df
+    * stay corpus-global, so a survivor's score is bit-identical to its
+    * unfiltered score and the answer is exactly filter∘rank — BM25
+    * scoring is exact over the matching docs, so unlike filtered ANN
+    * there is no widening. */
+  final case class Probe(queries: Queries, k: Int,
+                         filter: Option[Column] = None,
+                         k1: Double = 1.2, b: Double = 0.75)
 
-  /** The shared direct-scan tail (the [[indexedTopK]] pattern for the
-    * scan family): score, optionally restrict to `pred` rows (an
-    * id-level LEFT SEMI after scoring — commutes with the per-id sum
-    * and can never leak into the df window), bounded heap, 1-based
-    * ranks. ONE copy of the engine-identical tie-order/rounding tail. */
-  private def directTopK(df: DataFrame, idCol: String, textCol: String,
-                         terms: Seq[String], k: Int, k1: Double, b: Double,
-                         pred: Option[org.apache.spark.sql.Column])
-      : DataFrame = {
-    val scored0 = scorePerDoc(df, idCol, textCol, terms.distinct, k1, b)
-    val scored = pred.fold(scored0) { p =>
-      scored0.join(df.filter(p).select(col(idCol).cast("long").as("id")),
-        Seq("id"), "left_semi")
+  sealed trait Source
+  /** A direct corpus scan: ONE tf pass term-filtered at the scan, df as
+    * a count window over tf's term exchange, (N, avgdl) a broadcast
+    * one-row stat. A filter is a boolean over the corpus's own columns,
+    * applied as an id-level LEFT SEMI join after scoring (it commutes
+    * with the per-id sum and can never leak into the df window). */
+  final case class Scan(corpus: DataFrame, idCol: String,
+                        textCol: String) extends Source
+  /** An index over a file-backed corpus through the fingerprint-fenced
+    * [[Similarity.cachedIndex]] lifecycle: the first probe per
+    * `cacheKey` pays a [[bm25Build]], unchanged corpora are pure cache
+    * hits, a corpus grown by FILE ADDITION appends just the new files
+    * ([[bm25Append]]), any other change re-lands a fresh stamp-named dir
+    * under `graft.ivf.indexBase` (the [[graft.tools.IndexGc]] retention
+    * family). `metaCols` ride into the postings and join the stamp; a
+    * filter may reference only them. The cache holds ONE slot per key,
+    * so give a metaCols layout its own key. Then it serves as a [[Dir]]. */
+  final case class Cached(corpus: DataFrame, idCol: String, textCol: String,
+                          cacheKey: String, pbands: Int = 64,
+                          metaCols: Seq[String] = Nil) extends Source
+  /** A built [[bm25Build]] index dir: band-pruned postings/df reads and
+    * memoized (N, avgdl) — the corpus is never touched and warm probes
+    * plan at zero Spark jobs. A filter is a boolean over the postings'
+    * `id` and the build's metaCols, applied to the postings read. */
+  final case class Dir(spark: SparkSession, indexDir: String) extends Source
+
+  /** A [[Dir]] that holds no bm25 index; `kind` is its layout's
+    * [[Similarity.indexKind]], None when it holds no built index. */
+  final class Rejected(val kind: Option[String], msg: String)
+      extends IllegalArgumentException(msg)
+
+  /** BM25 top-k of `p` over `source`. Validation, the cache stamp, the
+    * query fan-out, the per-doc score and the bounded-heap
+    * [[graft.functions.TopKByScore]] tail are written once; only the
+    * (doc, term) row source differs per kind. A [[Batch]] answers in
+    * ONE pass for the union of its terms: a broadcast (qid, term) join
+    * fans each matched (doc, term) row out to the queries that asked for
+    * it, and a per-qid heap keeps the best k. */
+  def probe(source: Source, p: Probe): DataFrame = {
+    val (qs, single) = p.queries match {
+      case One(terms) => (Seq(0L -> terms), true)
+      case Batch(b)   => (b, false)
     }
+    // validated BEFORE a cache resolves: bad arguments must not pay an
+    // index build they could never use
+    require(qs.nonEmpty, "Retrieval.probe: empty query batch")
+    require(qs.forall(_._2.nonEmpty), "Retrieval.probe: a query has no terms")
+    require(p.k > 0, s"Retrieval.probe: k must be positive, got ${p.k}")
+    // a duplicated qid would double-join its terms and silently double
+    // (or merge) its scores — reject, never corrupt
+    require(qs.map(_._1).distinct.size == qs.size,
+      "Retrieval.probe: duplicate qid in batch")
+    requireKnobs(p.k1, p.b)
+    val terms = qs.flatMap(_._2).distinct
+    val lex = source match {
+      case Scan(df, idCol, textCol) => scanRows(df, idCol, textCol, terms, p.filter)
+      case Dir(spark, dir) => dirRows(spark, dir, terms, p.filter, qs.size)
+      case c: Cached =>
+        dirRows(c.corpus.sparkSession, cachedDir(c, p.filter), terms,
+          p.filter, qs.size)
+    }
+    val keys = if (single) Nil else Seq(col("qid"))
+    val fanned = if (single) lex.rows else {
+      val spark = lex.rows.sparkSession
+      import spark.implicits._
+      val qterms = qs.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
+        .toDF("qid", "w")
+      lex.rows.join(broadcast(qterms), "w")
+    }
+    val scored = lex.restrict(lex.withStats(fanned)
+      .groupBy(keys :+ col("id"): _*)
+      .agg(round(sum(contribution(p.k1, p.b)), 6).as("score")))
     import graft.functions.TopKF
-    scored.agg(TopKF.topKByScore(col("score"), col("id"), k).as("topk"))
-      .select(posexplode(col("topk")).as(Seq("r", "hit")))
-      .select(col("hit.id").as("id"), col("hit.score").as("score"),
-        (col("r") + 1).cast("long").as("rnk"))
+    scored.groupBy(keys: _*)
+      .agg(TopKF.topKByScore(col("score"), col("id"), p.k).as("topk"))
+      .select(keys :+ posexplode(col("topk")).as(Seq("r", "hit")): _*)
+      .select(keys ++ Seq(col("hit.id").as("id"), col("hit.score").as("score"),
+        (col("r") + 1).cast("long").as("rnk")): _*)
   }
 
-  /** FILTERED [[bm25TopK]] over a direct corpus scan: corpus-GLOBAL
-    * statistics (N, avgdl, df all from the full corpus — the
-    * [[bm25TopKIndexedFiltered]] / `bm25Sql(filterSql)` contract),
-    * predicate before ranking. `pred` is a boolean over `df`'s own
-    * columns; the candidate restriction is an id-level LEFT SEMI join
-    * AFTER scoring, which commutes with the per-id score sum and can
-    * never leak into the df window (a window is a pushdown barrier).
-    * This is the below-index-threshold leg of the filtered hybrid
-    * stage; repeated filtered probing at scale belongs to the indexed
-    * variants. */
-  def bm25TopKFiltered(df: DataFrame, idCol: String, textCol: String,
-                       terms: Seq[String], k: Int,
-                       pred: org.apache.spark.sql.Column,
-                       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty, "bm25TopKFiltered: empty query")
-    require(k > 0, s"bm25TopKFiltered: k must be positive, got $k")
-    directTopK(df, idCol, textCol, terms, k, k1, b, Some(pred))
+  /** The valid BM25 knobs: `k1 ≥ 0` and `0 ≤ b ≤ 1`. Past b = 1 the
+    * length norm `1 − b + b·dl/avgdl` reaches zero (an infinite score)
+    * or goes negative for short docs. The names label the knobs in the
+    * message (the serving CLIs pass their flags). */
+  def requireKnobs(k1: Double, b: Double, k1Name: String = "k1",
+                   bName: String = "b"): Unit = {
+    require(k1 >= 0, s"$k1Name must be >= 0, got $k1")
+    require(b >= 0 && b <= 1, s"$bName must be in [0, 1], got $b")
   }
 
-  /** `(id, score)` for every document matching ≥1 query term.
-    *
-    * The document frequency is a COUNT WINDOW over tf's term exchange —
-    * the tfidfTopTerms posture: a tf⋈df self-join would make Spark
-    * replay the whole corpus explode a second time (exchange reuse does
-    * NOT fire across those consumers — verified on the executed plan),
-    * while the window derives df on the same partitioning the join
-    * would have needed. The corpus is scanned exactly twice: once for
-    * tf (term-filtered AT the scan, so only matching docs explode into
-    * the exchange), once for the (N, avgdl) scalars. */
-  private def scorePerDoc(df: DataFrame, idCol: String, textCol: String,
-                          terms: Seq[String], k1: Double,
-                          b: Double): DataFrame = {
+  /** A source's scoring input for a term set: `rows` are
+    * (id, dl, w, tf, df), `withStats` attaches the corpus scalars
+    * (n, avgdl) after the query fan-out, and `restrict` is the
+    * post-scoring candidate restriction (a [[Scan]] filter). */
+  private final case class LexRows(rows: DataFrame,
+                                   withStats: DataFrame => DataFrame,
+                                   restrict: DataFrame => DataFrame)
+
+  /** The [[Scan]] rows. The document frequency is a COUNT WINDOW over
+    * tf's term exchange — the tfidfTopTerms posture: a tf⋈df self-join
+    * would make Spark replay the whole corpus explode a second time
+    * (exchange reuse does NOT fire across those consumers — verified on
+    * the executed plan), while the window derives df on the same
+    * partitioning the join would have needed. The corpus is scanned
+    * exactly twice: once for tf (term-filtered AT the scan, so only
+    * matching docs explode into the exchange), once for (N, avgdl). */
+  private def scanRows(df: DataFrame, idCol: String, textCol: String,
+                       terms: Seq[String], filter: Option[Column]): LexRows = {
     val base = prepared(df, idCol, textCol)
     val stats = base.agg(count(lit(1)).cast("double").as("n"),
       avg(col("dl")).as("avgdl"))
@@ -138,56 +203,55 @@ object Retrieval {
       .filter(col("w").isin(terms: _*))
       .groupBy(col("id"), col("dl"), col("w"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    val withDf = tf.withColumn("df", count(lit(1)).over(
-      org.apache.spark.sql.expressions.Window.partitionBy(col("w")))
-      .cast("double"))
-    withDf.crossJoin(broadcast(stats))
-      .groupBy(col("id"))
-      .agg(round(sum(contribution(k1, b)), 6).as("score"))
+    LexRows(tf.withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("w")))
+        .cast("double")),
+      _.crossJoin(broadcast(stats)),
+      scored => filter.fold(scored)(f => scored.join(
+        df.filter(f).select(col(idCol).cast("long").as("id")),
+        Seq("id"), "left_semi")))
   }
 
-  /** BM25 top-k for a BATCH of queries in ONE corpus pass:
-    * `(qid, id, score, rnk)`. The tf scan filters to the UNION of all
-    * query term sets; a broadcast (qid, term) join then fans each
-    * matched (doc, term) row out to the queries that asked for it, and
-    * a per-qid bounded heap keeps the best k. Document frequencies are
-    * corpus-global (query-independent), identical to the single path —
-    * each query's answer is exactly [[bm25TopK]]'s. */
-  def bm25TopKBatch(df: DataFrame, idCol: String, textCol: String,
-                    queries: Seq[(Long, Seq[String])], k: Int,
-                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(queries.nonEmpty, "bm25TopKBatch: empty query batch")
-    require(queries.forall(_._2.nonEmpty), "bm25TopKBatch: a query has no terms")
-    require(k > 0, s"bm25TopKBatch: k must be positive, got $k")
-    require(queries.map(_._1).distinct.size == queries.size,
-      "bm25TopKBatch: duplicate qid in batch")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val union = queries.flatMap(_._2).distinct
-    val qterms = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
-      .toDF("qid", "w")
-    val base = prepared(df, idCol, textCol)
-    val stats = base.agg(count(lit(1)).cast("double").as("n"),
-      avg(col("dl")).as("avgdl"))
-    val tf = base
-      .select(col("id"), col("dl"), explode(col("__toks")).as("w"))
-      .filter(col("w").isin(union: _*))
-      .groupBy(col("id"), col("dl"), col("w"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-    // df via the count window on tf's term exchange — see scorePerDoc
-    val withDf = tf.withColumn("df", count(lit(1)).over(
-      org.apache.spark.sql.expressions.Window.partitionBy(col("w")))
-      .cast("double"))
-    val scored = withDf.join(broadcast(qterms), "w")
-      .crossJoin(broadcast(stats))
-      .groupBy(col("qid"), col("id"))
-      .agg(round(sum(contribution(k1, b)), 6).as("score"))
-    import graft.functions.TopKF
-    scored.groupBy(col("qid"))
-      .agg(TopKF.topKByScore(col("score"), col("id"), k).as("topk"))
-      .select(col("qid"), posexplode(col("topk")).as(Seq("r", "hit")))
-      .select(col("qid"), col("hit.id").as("id"), col("hit.score").as("score"),
-        (col("r") + 1).cast("long").as("rnk"))
+  /** The [[Dir]] rows: the band+term-pruned postings (filtered there)
+    * joined to the summed df, with (N, avgdl) as literals. Width for a
+    * lexical probe = distinct terms (they drive the pband pruning);
+    * lexical serving never widens. */
+  private def dirRows(spark: SparkSession, indexDir: String,
+                      terms: Seq[String], filter: Option[Column],
+                      queries: Int): LexRows = {
+    healStatsSidecar(spark, indexDir)
+    Similarity.indexKind(spark, indexDir) match {
+      case Some("bm25") =>
+      case kind => throw new Rejected(kind, kind.fold(
+        s"'$indexDir' is not a built index dir")(
+        k => s"'$indexDir' is a '$k' index, not bm25"))
+    }
+    ProbeStats.record(if (filter.isDefined) "bm25_filtered" else "bm25",
+      queries, terms.size, terms.size, 0)
+    val (n, avgdl, postings, dft) = indexProbe(spark, indexDir, terms)
+    LexRows(filter.fold(postings)(postings.filter).join(broadcast(dft), "w"),
+      _.withColumn("n", lit(n)).withColumn("avgdl", lit(avgdl)),
+      identity)
+  }
+
+  /** Resolve a [[Cached]] source to its index dir. The filter's
+    * attribute set is checked first: a predicate naming a column the
+    * metaCols would not carry into the postings must not pay a build. */
+  private def cachedDir(c: Cached, filter: Option[Column]): String = {
+    filter.foreach { f =>
+      val refs = org.apache.spark.sql.graftbridge.Bridge.unresolved(f).collect {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => a.name
+      }.toSet
+      val carried = c.metaCols.toSet ++ Set("id", "dl", "w", "tf", "pband")
+      require(refs.subsetOf(carried),
+        s"Retrieval.probe: predicate references " +
+          s"${(refs -- carried).mkString(", ")} which metaCols " +
+          s"(${c.metaCols.mkString(", ")}) would not carry into the postings")
+    }
+    Similarity.cachedIndex(c.corpus, c.cacheKey, s"bm25|p=${c.pbands}" +
+        (if (c.metaCols.isEmpty) "" else s"|m=${c.metaCols.mkString(",")}"),
+      Some((newRows, d) => bm25Append(newRows, c.idCol, c.textCol, d)))(
+      bm25Build(c.corpus, c.idCol, c.textCol, _, c.pbands, c.metaCols))
   }
 
   /** Build a persistent BM25 INVERTED INDEX — the lexical twin of the
@@ -201,7 +265,7 @@ object Retrieval {
     *     partitions — the LSH pband posture; partitioning by raw term
     *     would explode the partition count at web vocabulary sizes);
     *     `metaCols` carry document metadata the FILTERED probes
-    *     ([[bm25TopKIndexedFiltered]]) prune on,
+    *     ([[probe]] with a filter) prune on,
     *   - `df/` — `(w, df)` under the same banding; appends land DELTA
     *     rows, so probes sum df per term ([[indexProbe]]),
     *   - `stats/` — one row `(n, avgdl, sum_dl, pbands)`; (n, sum_dl)
@@ -210,7 +274,7 @@ object Retrieval {
     *
     * Committed through the shared rename-aside [[Similarity.stagedCommit]]
     * (a crashed build can never leave a half-written dir a reader would
-    * trust). Probe answers are value-identical to [[bm25TopK]] on the
+    * trust). Probe answers are value-identical to a [[Scan]] probe of the
     * same corpus — the contract the oracle row checks. */
   def bm25Build(df: DataFrame, idCol: String, textCol: String,
                 indexDir: String, pbands: Int = 64,
@@ -232,17 +296,7 @@ object Retrieval {
       .withColumn("pbands", lit(pbands))
     val tf = bandedTf(base, pbands, metaCols)
     Similarity.stagedCommit(spark, indexDir) { staging =>
-      // clusteredWrite, the ANN builds' layout: a bare partitionBy would
-      // land up to tasks×pbands tiny files (the LSH pathology its
-      // scaladoc measures); clustering on (pband, bounded salt) keeps
-      // file count ≈ max(pbands, shufflePartitions)
-      Similarity.clusteredWrite(tf, "pband", pbands)
-        .write.mode("overwrite").partitionBy("pband")
-        .parquet(s"$staging/postings")
-      tf.groupBy(col("w"), col("pband"))
-        .agg(count(lit(1)).cast("double").as("df"))
-        .repartition(col("pband"))
-        .write.mode("overwrite").partitionBy("pband").parquet(s"$staging/df")
+      writePostings(tf, pbands, staging)
       stats.write.mode("overwrite").parquet(s"$staging/stats")
       // the empty-docs sidecar: ids the stats COUNT but the postings
       // cannot see (empty/null text emits zero postings rows) — without
@@ -269,6 +323,23 @@ object Retrieval {
       .agg(count(lit(1)).cast("double").as("tf"))
       .withColumn("pband",
         pmod(xxhash64(col("w")), lit(pbands.toLong)).cast("int"))
+
+  /** Land a banded tf table as the `postings` + `df` pair under
+    * `staging` — the build's layout, and an append's delta of it.
+    * clusteredWrite, the ANN builds' layout: a bare partitionBy would
+    * land up to tasks×pbands tiny files (the LSH pathology its scaladoc
+    * measures); clustering on (pband, bounded salt) keeps file count
+    * ≈ max(pbands, shufflePartitions). */
+  private def writePostings(tf: DataFrame, pbands: Int,
+                            staging: String): Unit = {
+    Similarity.clusteredWrite(tf, "pband", pbands)
+      .write.mode("overwrite").partitionBy("pband")
+      .parquet(s"$staging/postings")
+    tf.groupBy(col("w"), col("pband"))
+      .agg(count(lit(1)).cast("double").as("df"))
+      .repartition(col("pband"))
+      .write.mode("overwrite").partitionBy("pband").parquet(s"$staging/df")
+  }
 
   /** The partitioned data subdirs a BM25 index appends into — postings
     * carry the replay-fence markers ([[Similarity.stagedAppend]] fences
@@ -324,11 +395,18 @@ object Retrieval {
     if (!fs.exists(target) && fs.exists(staging)) fs.rename(staging, target)
   }
 
-  /** Every stats read goes through this chokepoint (heal, then read). */
-  private def readStatsDf(spark: org.apache.spark.sql.SparkSession,
-                          indexDir: String): DataFrame = {
+  /** The live stats row. Every stats read goes through this chokepoint
+    * (heal, then read). `additiveFor` names a verb (append, delete)
+    * whose stats merge needs the additive (n, sum_dl) format. */
+  private def statsRow(spark: SparkSession, indexDir: String,
+                       additiveFor: String = ""): org.apache.spark.sql.Row = {
     healStatsSidecar(spark, indexDir)
-    spark.read.parquet(s"$indexDir/stats")
+    val r = spark.read.parquet(s"$indexDir/stats").head()
+    require(additiveFor.isEmpty || r.schema.fieldNames.contains("sum_dl"),
+      s"bm25${additiveFor.capitalize}: $indexDir predates the additive " +
+        "stats format (no sum_dl column) — rebuild with bm25Build to " +
+        s"enable ${additiveFor}s")
+    r
   }
 
   /** BM25's sidecar phase for [[Similarity.stagedAppend]]: fold the
@@ -391,11 +469,7 @@ object Retrieval {
                  indexDir: String, appendId: Option[String] = None): Unit = {
     val spark = df.sparkSession
     Similarity.healStrandedAppends(spark, indexDir, bm25DataDirs, bm25StatsApply)
-    val statsDf = readStatsDf(spark, indexDir)
-    require(statsDf.schema.fieldNames.contains("sum_dl"),
-      s"bm25Append: $indexDir predates the additive stats format " +
-        "(no sum_dl column) — rebuild with bm25Build to enable appends")
-    val pbands = statsDf.head().getInt(statsDf.schema.fieldIndex("pbands"))
+    val pbands = statsRow(spark, indexDir, "append").getAs[Int]("pbands")
     val batchId = appendId.getOrElse(Similarity.appendBatchId(df))
     // the index is self-describing about its metadata layout: whatever
     // non-structural columns the postings carry, the increment must
@@ -416,13 +490,7 @@ object Retrieval {
     }
     Similarity.stagedAppend(spark, indexDir, batchId, bm25DataDirs,
         bm25StatsApply) { staging =>
-      Similarity.clusteredWrite(tf, "pband", pbands)
-        .write.mode("overwrite").partitionBy("pband")
-        .parquet(s"$staging/postings")
-      tf.groupBy(col("w"), col("pband"))
-        .agg(count(lit(1)).cast("double").as("df"))
-        .repartition(col("pband"))
-        .write.mode("overwrite").partitionBy("pband").parquet(s"$staging/df")
+      writePostings(tf, pbands, staging)
       base.agg(count(lit(1)).as("n_delta"),
           coalesce(sum(col("dl")), lit(0L)).as("sum_dl_delta"))
         .coalesce(1).write.mode("overwrite").parquet(s"$staging/stats_delta")
@@ -468,10 +536,7 @@ object Retrieval {
     val spark = ids.sparkSession
     Similarity.healStrandedAppends(spark, indexDir, bm25DataDirs,
       bm25StatsApply)
-    val statsDf = readStatsDf(spark, indexDir)
-    require(statsDf.schema.fieldNames.contains("sum_dl"),
-      s"bm25Delete: $indexDir predates the additive stats format " +
-        "(no sum_dl column) — rebuild with bm25Build to enable deletes")
+    statsRow(spark, indexDir, "delete")
     val wanted = ids.select(col(idCol).cast("long").as("id")).distinct()
     val fresh = Similarity.tombstoneDf(spark, indexDir)
       .fold(wanted)(t => wanted.join(t.distinct(), Seq("id"), "left_anti"))
@@ -549,10 +614,8 @@ object Retrieval {
     val dfT = spark.read.parquet(s"$indexDir/df")
     // snapshot the frozen sidecar BEFORE the swap so the staged write
     // doesn't read through the dir rename
-    val statsDf0 = readStatsDf(spark, indexDir)
-    val statsRows = statsDf0.collect()
-    val statsSchema = statsDf0.schema
-    val pbands = statsRows.head.getInt(statsSchema.fieldIndex("pbands"))
+    val stats = statsRow(spark, indexDir)
+    val pbands = stats.getAs[Int]("pbands")
     Similarity.stagedCommit(spark, indexDir) { staging =>
       Similarity.clusteredWrite(postings, "pband", pbands)
         .write.mode("overwrite").partitionBy("pband")
@@ -561,8 +624,7 @@ object Retrieval {
         .filter(col("df") =!= 0.0)
         .repartition(col("pband"))
         .write.mode("overwrite").partitionBy("pband").parquet(s"$staging/df")
-      spark.createDataFrame(
-          java.util.Arrays.asList(statsRows: _*), statsSchema)
+      spark.createDataFrame(java.util.Arrays.asList(stats), stats.schema)
         .coalesce(1).write.mode("overwrite").parquet(s"$staging/stats")
       // carry the empty-docs sidecar MINUS the cleared tombstones (the
       // physical-drop treatment postings get), merged to one file; a
@@ -584,66 +646,10 @@ object Retrieval {
     * (pure FS listing + one stats read, no Spark job over data). */
   def bm25CompactionDue(spark: org.apache.spark.sql.SparkSession,
                         indexDir: String): Boolean = {
-    val statsDf = readStatsDf(spark, indexDir)
-    val pbands = statsDf.head().getInt(statsDf.schema.fieldIndex("pbands"))
+    val pbands = statsRow(spark, indexDir).getAs[Int]("pbands")
     val saltN = math.max(1,
       spark.sessionState.conf.numShufflePartitions / math.max(1, pbands))
     Similarity.indexFileStats(spark, indexDir, "postings")._2 > saltN
-  }
-
-  /** BM25 top-k through the fingerprint-fenced cached-index lifecycle
-    * ([[Similarity.cachedIndex]] — the Ann.Cached posture): first
-    * call per `cacheKey` pays a [[bm25Build]]; unchanged corpora are
-    * pure cache hits; a corpus grown by FILE ADDITION appends just the
-    * new files via [[bm25Append]]; any other change (or growth past the
-    * rebuild factor) re-lands a fresh stamp-named dir under
-    * `graft.ivf.indexBase` — which is exactly what makes the bm25 dirs
-    * members of the [[graft.tools.IndexGc]] retention family. */
-  def bm25TopKCached(df: DataFrame, idCol: String, textCol: String,
-                     cacheKey: String, terms: Seq[String], k: Int,
-                     pbands: Int = 64, k1: Double = 1.2,
-                     b: Double = 0.75): DataFrame = {
-    val dir = Similarity.cachedIndex(df, cacheKey, s"bm25|p=$pbands",
-      Some((newRows, d) => bm25Append(newRows, idCol, textCol, d))) { d =>
-      bm25Build(df, idCol, textCol, d, pbands)
-    }
-    bm25TopKIndexed(df.sparkSession, dir, terms, k, k1, b)
-  }
-
-  /** FILTERED [[bm25TopKCached]]: the same fingerprint-fenced lifecycle
-    * with `metaCols` riding into the postings (they are the predicate's
-    * attribute set — the annTopKFiltered convention) and the probe
-    * routed to [[bm25TopKIndexedFiltered]]. The cache stamp carries the
-    * metaCols list, so a filtered probe can never be served from a
-    * layout missing its metadata columns — but the cache holds ONE slot
-    * per cacheKey, so INTERLEAVING filtered and unfiltered probes under
-    * the same key flips the stamp and pays a rebuild each time: give
-    * the filtered lifecycle its own cacheKey (the DFL stage bakes the
-    * metaCols into its key for exactly this reason). */
-  def bm25TopKCachedFiltered(df: DataFrame, idCol: String, textCol: String,
-                             cacheKey: String, terms: Seq[String], k: Int,
-                             pred: org.apache.spark.sql.Column,
-                             metaCols: Seq[String], pbands: Int = 64,
-                             k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // validate BEFORE resolving the cache (the Ann.probe
-    // rule): bad arguments — or a predicate naming a column that will
-    // never ride into the postings — must not pay a full index build
-    // they could never use
-    require(terms.nonEmpty, "bm25TopKCachedFiltered: empty query")
-    require(k > 0, s"bm25TopKCachedFiltered: k must be positive, got $k")
-    val predRefs = org.apache.spark.sql.graftbridge.Bridge
-      .expression(pred).references.map(_.name).toSet
-    val carried = metaCols.toSet ++ Set("id", "dl", "w", "tf", "pband")
-    require(predRefs.subsetOf(carried),
-      s"bm25TopKCachedFiltered: predicate references " +
-        s"${(predRefs -- carried).mkString(", ")} which metaCols " +
-        s"(${metaCols.mkString(", ")}) would not carry into the postings")
-    val dir = Similarity.cachedIndex(df,
-      cacheKey, s"bm25|p=$pbands|m=${metaCols.mkString(",")}",
-      Some((newRows, d) => bm25Append(newRows, idCol, textCol, d))) { d =>
-      bm25Build(df, idCol, textCol, d, pbands, metaCols)
-    }
-    bm25TopKIndexedFiltered(df.sparkSession, dir, terms, k, pred, k1, b)
   }
 
   /** Driver-memoized BM25 index state — the [[Similarity.lshMeta]]
@@ -670,15 +676,13 @@ object Retrieval {
     val cached = bm25MetaCache.get(key)
     if (cached != null && cached._1 == stamp) cached._2
     else {
-      val statsDf = readStatsDf(spark, indexDir)
-      val st = statsDf.head()
-      val fi = statsDf.schema.fieldIndex _
+      val st = statsRow(spark, indexDir)
       // postings tombstone-filtered at the chokepoint (the ivfMeta
       // posture); the df table needs no filter — deletes append
       // NEGATIVE df delta rows and indexProbe's per-term sum nets them
       // out, the same additive path appends ride
-      val meta = Bm25Meta(st.getDouble(fi("n")), st.getDouble(fi("avgdl")),
-        st.getInt(fi("pbands")),
+      val meta = Bm25Meta(st.getAs[Double]("n"), st.getAs[Double]("avgdl"),
+        st.getAs[Int]("pbands"),
         Similarity.antiTombstoned(spark, indexDir,
           spark.read.parquet(s"$indexDir/postings")),
         spark.read.parquet(s"$indexDir/df"))
@@ -702,9 +706,9 @@ object Retrieval {
     java.lang.Math.floorMod(h, pbands.toLong).toInt
   }
 
-  /** Shared index-probe plumbing for the single and batch indexed
-    * paths: the memoized (n, avgdl) stats and the band+term-pruned
-    * `postings`/`df` reads for a term set — bands via [[termBand]]. */
+  /** The [[Dir]] probe plumbing: the memoized (n, avgdl) stats and the
+    * band+term-pruned `postings`/`df` reads for a term set — bands via
+    * [[termBand]]. */
   private def indexProbe(spark: org.apache.spark.sql.SparkSession,
                          indexDir: String, termList: Seq[String])
       : (Double, Double, DataFrame, DataFrame) = {
@@ -718,138 +722,24 @@ object Retrieval {
       pruned(meta.dfTable).groupBy(col("w")).agg(sum(col("df")).as("df")))
   }
 
-  /** BM25 top-k served FROM a [[bm25Build]] index: `(id, score, rnk)`,
-    * value-identical to [[bm25TopK]] over the indexed corpus. The
-    * postings/df reads prune to the query terms' hash bands (partition
-    * pruning — spec-asserted) and then filter to the exact terms; the
-    * corpus itself is never touched, and warm probes plan at zero
-    * Spark jobs ([[bm25Meta]] + [[termBand]]). */
-  def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String, terms: Seq[String], k: Int,
-                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty, "bm25TopKIndexed: empty query")
-    require(k > 0, s"bm25TopKIndexed: k must be positive, got $k")
-    indexedTopK(spark, indexDir, terms, k, k1, b, None)
-  }
-
-  /** FILTERED indexed BM25 — [[bm25TopKIndexed]] restricted to
-    * documents satisfying `pred` over the index's metadata columns
-    * (carried at build time via [[bm25Build]]'s `metaCols`, preserved
-    * by appends and compaction). Scoring statistics (df, N, avgdl)
-    * stay CORPUS-GLOBAL — the standard filtered-retrieval contract: the
-    * predicate restricts the CANDIDATE SET, and a surviving document's
-    * score is bit-identical to its unfiltered score (which is what
-    * makes the answers exactly checkable as filter∘rank over the full
-    * scored set). Unlike filtered ANN there is no recall widening —
-    * BM25 scoring is exact over the matching docs, so the filtered
-    * top-k is exact by construction. */
-  def bm25TopKIndexedFiltered(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String, terms: Seq[String], k: Int,
-                              pred: org.apache.spark.sql.Column,
-                              k1: Double = 1.2,
-                              b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty, "bm25TopKIndexedFiltered: empty query")
-    require(k > 0, s"bm25TopKIndexedFiltered: k must be positive, got $k")
-    indexedTopK(spark, indexDir, terms, k, k1, b, Some(pred))
-  }
-
-  private def indexedTopK(spark: org.apache.spark.sql.SparkSession,
-                          indexDir: String, terms: Seq[String], k: Int,
-                          k1: Double, b: Double,
-                          pred: Option[org.apache.spark.sql.Column])
-      : DataFrame = {
-    val (n, avgdl, postings0, dft) = indexProbe(spark, indexDir, terms.distinct)
-    val postings = pred.fold(postings0)(postings0.filter)
-    val scored = postings
-      .join(broadcast(dft), "w")
-      .withColumn("n", lit(n)).withColumn("avgdl", lit(avgdl))
-      .groupBy(col("id"))
-      .agg(round(sum(contribution(k1, b)), 6).as("score"))
-    import graft.functions.TopKF
-    scored.agg(TopKF.topKByScore(col("score"), col("id"), k).as("topk"))
-      .select(posexplode(col("topk")).as(Seq("r", "hit")))
-      .select(col("hit.id").as("id"), col("hit.score").as("score"),
-        (col("r") + 1).cast("long").as("rnk"))
-  }
-
-  /** BM25 top-k for a BATCH of queries served FROM a [[bm25Build]]
-    * index: `(qid, id, score, rnk)`, each slice value-identical to
-    * [[bm25TopKIndexed]] (and hence to the direct scan). ONE pruned
-    * posting read for the UNION of all term bands, the broadcast
-    * (qid, term) fan-out of [[bm25TopKBatch]], a per-qid bounded heap —
-    * the corpus is never touched and the read amplification is
-    * ≤ |union terms| bands however many queries share them. */
-  def bm25TopKIndexedBatch(spark: org.apache.spark.sql.SparkSession,
-                           indexDir: String,
-                           queries: Seq[(Long, Seq[String])], k: Int,
-                           k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    indexedTopKBatch(spark, indexDir, queries, k, k1, b, None)
-
-  /** FILTERED batch serving — every query in the batch shares one
-    * `pred` over the index metadata (the serve-bm25 `--filter` shape);
-    * each slice ≡ [[bm25TopKIndexedFiltered]], same corpus-global
-    * statistics, same one-pruned-read plan as the unfiltered batch. */
-  def bm25TopKIndexedBatchFiltered(spark: org.apache.spark.sql.SparkSession,
-                                   indexDir: String,
-                                   queries: Seq[(Long, Seq[String])], k: Int,
-                                   pred: org.apache.spark.sql.Column,
-                                   k1: Double = 1.2,
-                                   b: Double = 0.75): DataFrame =
-    indexedTopKBatch(spark, indexDir, queries, k, k1, b, Some(pred))
-
-  private def indexedTopKBatch(spark: org.apache.spark.sql.SparkSession,
-                               indexDir: String,
-                               queries: Seq[(Long, Seq[String])], k: Int,
-                               k1: Double, b: Double,
-                               pred: Option[org.apache.spark.sql.Column])
-      : DataFrame = {
-    require(queries.nonEmpty, "bm25TopKIndexedBatch: empty query batch")
-    require(queries.forall(_._2.nonEmpty),
-      "bm25TopKIndexedBatch: a query has no terms")
-    require(k > 0, s"bm25TopKIndexedBatch: k must be positive, got $k")
-    // a duplicated qid would double-join its terms and silently double
-    // (or merge) its scores — reject, never corrupt
-    require(queries.map(_._1).distinct.size == queries.size,
-      "bm25TopKIndexedBatch: duplicate qid in batch")
-    val union = queries.flatMap(_._2).distinct
-    // width for a lexical probe = distinct terms (they drive the pband
-    // pruning); lexical serving never widens
-    ProbeStats.record(if (pred.isDefined) "bm25_filtered" else "bm25",
-      queries.size, union.size, union.size, 0)
-    import spark.implicits._
-    val qterms = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
-      .toDF("qid", "w")
-    val (n, avgdl, postings0, dft) = indexProbe(spark, indexDir, union)
-    val postings = pred.fold(postings0)(postings0.filter)
-    val scored = postings
-      .join(broadcast(dft), "w")
-      .join(broadcast(qterms), "w")
-      .withColumn("n", lit(n)).withColumn("avgdl", lit(avgdl))
-      .groupBy(col("qid"), col("id"))
-      .agg(round(sum(contribution(k1, b)), 6).as("score"))
-    import graft.functions.TopKF
-    scored.groupBy(col("qid"))
-      .agg(TopKF.topKByScore(col("score"), col("id"), k).as("topk"))
-      .select(col("qid"), posexplode(col("topk")).as(Seq("r", "hit")))
-      .select(col("qid"), col("hit.id").as("id"), col("hit.score").as("score"),
-        (col("r") + 1).cast("long").as("rnk"))
-  }
-
-  /** Build-if-missing bootstrap for the serving job ([[graft.cli
-    * .ServeBm25Cli]] `--build-from`) — the [[Ann.ensure]]
-    * twin: an existing index (stats sidecar present) is served as-is;
-    * refreshing a live index belongs to [[bm25Append]]/[[bm25Build]]
-    * under the single-writer contract. */
-  def ensureBm25Index(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String, corpusUri: String, idCol: String,
-                      textCol: String, pbands: Int = 64,
-                      metaCols: Seq[String] = Nil): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  /** Bootstrap a BM25 index from a parquet corpus when `indexDir` holds
+    * no built index yet — the [[Ann.ensure]] twin (the serving and
+    * ingest jobs' `--build-from`). An existing bm25 index is served
+    * as-is: refreshing a live index belongs to [[bm25Append]] /
+    * [[bm25Build]] under the single-writer contract. A dir built as an
+    * ANN family fails, naming both kinds — building over it would
+    * rename the ANN index aside and delete it. */
+  def ensure(spark: SparkSession, indexDir: String, corpusUri: String,
+             idCol: String, textCol: String, pbands: Int = 64,
+             metaCols: Seq[String] = Nil): Unit = {
     healStatsSidecar(spark, indexDir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(indexDir, "stats"))) return
-    bm25Build(spark.read.parquet(corpusUri), idCol, textCol, indexDir,
-      pbands, metaCols)
+    Similarity.indexKind(spark, indexDir) match {
+      case Some(kind) => require(kind == "bm25",
+        s"Retrieval.ensure: $indexDir is a built '$kind' index, not the " +
+          "requested 'bm25' — an existing index is never rebuilt here")
+      case None => bm25Build(spark.read.parquet(corpusUri), idCol, textCol,
+        indexDir, pbands, metaCols)
+    }
   }
 
   /** Rank-quality EVALUATION of a retrieval run against relevance
@@ -1131,11 +1021,11 @@ object Retrieval {
 
   private def sqlQuote(s: String): String = "'" + s.replace("'", "''") + "'"
 
-  /** DuckDB rendering of [[bm25TopK]] — same tokens, same arithmetic
+  /** DuckDB rendering of a [[One]] [[probe]] — same tokens, same arithmetic
     * association, same literals, same rounding, same tie order. Renders
     * as a self-contained SELECT; `idAs` renames the output id column.
     * `filterSql` renders the FILTERED contract
-    * ([[bm25TopKIndexedFiltered]]): scores over the FULL corpus
+    * (a filtered [[probe]]): scores over the FULL corpus
     * (corpus-global statistics), the predicate — a boolean over
     * `$table`'s columns — applied before ranking. */
   def bm25Sql(table: String, idCol: String, textCol: String,
@@ -1178,7 +1068,7 @@ object Retrieval {
        |$ranked""".stripMargin
   }
 
-  /** DuckDB rendering of [[bm25TopKBatch]]: one [[bm25Sql]] block per
+  /** DuckDB rendering of a [[Batch]] [[probe]]: one [[bm25Sql]] block per
     * query, unioned under its qid literal — value-identical to the
     * single path by construction, which is exactly the batch contract. */
   def bm25BatchSql(table: String, idCol: String, textCol: String,

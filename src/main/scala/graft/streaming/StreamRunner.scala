@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
 import org.apache.spark.sql.types.StructType
 import graft.dfl.DflFrame
-import graft.llm.Ann
+import graft.llm.{Ann, Retrieval}
 
 /** Batch/stream parity on ONE logical plan.
   *
@@ -1166,7 +1166,7 @@ object StreamRunner {
   /** Streaming LEXICAL serving — the BM25 twin of [[annServe]]: answer
     * a STREAM of term queries against a built, static
     * [[graft.llm.Retrieval.bm25Build]] inverted index. Each micro-batch
-    * becomes ONE [[graft.llm.Retrieval.bm25TopKIndexedBatch]] call: the
+    * becomes ONE [[graft.llm.Retrieval.probe]] of a query batch: the
     * queries collect to the driver (bounded by the micro-batch — they
     * are a few strings), and the probe is one posting read pruned to
     * the union of the batch's term bands; the corpus is never touched.
@@ -1238,12 +1238,8 @@ object StreamRunner {
           def serveBatch(): Unit = {
             // reset telemetry on retry — one attempt's legs only
             if (metricsSink.isDefined) graft.llm.ProbeStats.begin()
-            sink(pred match {
-              case Some(p) => graft.llm.Retrieval.bm25TopKIndexedBatchFiltered(
-                batch.sparkSession, indexDir, qs, k, p, k1, b)
-              case None => graft.llm.Retrieval.bm25TopKIndexedBatch(
-                batch.sparkSession, indexDir, qs, k, k1, b)
-            }, batchId)
+            sink(Retrieval.probe(Retrieval.Dir(batch.sparkSession, indexDir),
+              Retrieval.Probe(Retrieval.Batch(qs), k, pred, k1, b)), batchId)
           }
           serveRetryingStaleRead("bm25Serve", batchId, indexDir,
             metricsSink.isDefined)(serveBatch())
@@ -1452,14 +1448,10 @@ object StreamRunner {
                 s"dim != index dim $expectDim (qids " +
                 s"${badDim.take(5).map(_._1).mkString(", ")}${if (badDim.size > 5) ", …" else ""})")
             if (good.isEmpty) return None
-            val lex = (pred match {
-              case Some(p) => graft.llm.Retrieval.bm25TopKIndexedBatchFiltered(
-                spark, bm25IndexDir, good.map(q => q._1 -> q._2), pool, p,
-                k1, b)
-              case None => graft.llm.Retrieval.bm25TopKIndexedBatch(
-                spark, bm25IndexDir, good.map(q => q._1 -> q._2), pool,
-                k1, b)
-            }).select("qid", "id", "rnk")
+            val lex = Retrieval.probe(Retrieval.Dir(spark, bm25IndexDir),
+                Retrieval.Probe(Retrieval.Batch(good.map(q => q._1 -> q._2)),
+                  pool, pred, k1, b))
+              .select("qid", "id", "rnk")
             val semCos = Ann.probe(Ann.Dir(spark, annIndexDir),
               Ann.Probe(Ann.Batch(good.map(q => q._1 -> q._3)),
                 Ann.TopK(pool), pred, tuning, refine))
@@ -1555,7 +1547,7 @@ object StreamRunner {
     * `123` and `"123"` parse; terms string — whitespace-separated OR a
     * JSON array; vec array<double>), so an empty queries dir at job
     * start works. Both indexes must already exist — bootstrap with
-    * [[graft.llm.Retrieval.ensureBm25Index]] +
+    * [[graft.llm.Retrieval.ensure]] +
     * [[graft.llm.Ann.ensure]] (the CLI's `--build-from`
     * does). `once = true` drains the available queries and stops. */
   def hybridServeJob(spark: SparkSession, queriesUri: String, format: String,
@@ -1805,7 +1797,7 @@ object StreamRunner {
     * the replay of the last uncommitted batch, so the durable
     * `postings/_append-<id>` fence makes the replayed append a no-op.
     * Single-writer per index dir. The index must already exist —
-    * bootstrap with [[graft.llm.Retrieval.ensureBm25Index]] (the
+    * bootstrap with [[graft.llm.Retrieval.ensure]] (the
     * `ingest-bm25` CLI's `--build-from` does). `compactEvery = n > 0`
     * opens the maintenance slot after every n APPENDS since the last
     * slot (empty/all-dropped batches don't count) and runs

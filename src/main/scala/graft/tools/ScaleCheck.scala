@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.llm.Ann
+import graft.llm.{Ann, Retrieval}
 import org.apache.spark.sql.functions._
 import graft.util.Sessions
 
@@ -61,8 +61,10 @@ object ScaleCheck {
       // BM25: the term-filtered explode shrinks the aggregation exchange
       // to matching docs only and df rides that same exchange as a count
       // window — time must grow ~linearly in mult, output capped at k
-      time("bm25_topk")(graft.llm.Retrieval.bm25TopK(big, "doc_id", "text",
-        Seq("spark", "stream", "window"), 10).count())
+      val bmQuery =
+        Retrieval.Probe(Retrieval.One(Seq("spark", "stream", "window")), 10)
+      time("bm25_topk")(Retrieval.probe(Retrieval.Scan(big, "doc_id", "text"),
+        bmQuery).count())
       // the BM25 APPEND posture (the lexical twin of lsh_append/
       // ivf_append): untimed bm25Build over the mult× corpus, then a
       // FIXED-SIZE increment appended — one tokenize pass over the NEW
@@ -83,20 +85,19 @@ object ScaleCheck {
         graft.llm.Retrieval.bm25Append(bmInc, "doc_id", "text", bmDir,
           appendId = Some(s"scale-$mult")); 200L
       })
-      time("bm25_probe")(graft.llm.Retrieval.bm25TopKIndexed(
-        spark, bmDir, Seq("spark", "stream", "window"), 10).count())
+      time("bm25_probe")(Retrieval.probe(Retrieval.Dir(spark, bmDir),
+        bmQuery).count())
       // filtered serving: the predicate prunes rows inside the SAME
       // banded read — flat in mult like the unfiltered probe (no
       // widening loop: BM25 filtered is exact by construction)
-      time("bm25_probe_filtered")(graft.llm.Retrieval.bm25TopKIndexedFiltered(
-        spark, bmDir, Seq("spark", "stream", "window"), 10,
-        col("flag") === 0).count())
+      time("bm25_probe_filtered")(Retrieval.probe(Retrieval.Dir(spark, bmDir),
+        bmQuery.copy(filter = Some(col("flag") === 0))).count())
       time("bm25_compact")({
         val st = graft.llm.Retrieval.bm25Compact(spark, bmDir)
         st.filesBefore - st.filesAfter
       })
-      time("bm25_probe_compacted")(graft.llm.Retrieval.bm25TopKIndexed(
-        spark, bmDir, Seq("spark", "stream", "window"), 10).count())
+      time("bm25_probe_compacted")(Retrieval.probe(Retrieval.Dir(spark, bmDir),
+        bmQuery).count())
       // line dedup: two lines per doc, the footer duplicated CORPUS-wide
       // (one group of size 2·mult·base) and every doc line re-planted
       // mult× — the keep decision is one line-keyed aggregation + join,
@@ -468,8 +469,8 @@ object ScaleCheck {
           .createTempDirectory("graft-scale-hann").toString + "/idx"
         graft.llm.Similarity.ivfBuild(corpus, "doc_id", "vec", annDir)
         def fusedRun(pool: Int) = {
-          val lex = graft.llm.Retrieval.bm25TopKIndexedBatch(
-            spark, bmDir, qset, pool).select("qid", "id", "rnk")
+          val lex = Retrieval.probe(Retrieval.Dir(spark, bmDir),
+            Retrieval.Probe(Retrieval.Batch(qset), pool)).select("qid", "id", "rnk")
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
           val sem = Ann.probe(Ann.Dir(spark, annDir),
@@ -497,8 +498,9 @@ object ScaleCheck {
               (lit(1L) + pmod(col("doc_id"), lit(3L))).cast("int").as("rel")))
           .reduce(_ unionByName _).persist()
         qrels.count()
-        val run = graft.llm.Retrieval.bm25TopKIndexedBatch(
-          spark, bmDir, qset, 10).select("qid", "id", "rnk").persist()
+        val run = Retrieval.probe(Retrieval.Dir(spark, bmDir),
+            Retrieval.Probe(Retrieval.Batch(qset), 10))
+          .select("qid", "id", "rnk").persist()
         run.count()
         time("retrieval_eval")({
           graft.llm.Retrieval.evalRun(run, qrels, 10).count()
@@ -512,8 +514,8 @@ object ScaleCheck {
         time("bm25_delete")(
           graft.llm.Retrieval.bm25Delete(spark, bmDir, (1L to 32L).toSeq))
         time("bm25_probe_deleted")(
-          graft.llm.Retrieval.bm25TopKIndexed(spark, bmDir,
-            Seq("spark", "stream", "window"), 10).count())
+          Retrieval.probe(Retrieval.Dir(spark, bmDir), Retrieval.Probe(
+            Retrieval.One(Seq("spark", "stream", "window")), 10)).count())
         qrels.unpersist(); run.unpersist(); corpus.unpersist()
       }
     }

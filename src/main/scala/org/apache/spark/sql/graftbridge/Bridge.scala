@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Classic-mode Column <-> Catalyst Expression bridge.
   *
@@ -15,4 +15,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** `c`'s own Catalyst tree, attributes still unresolved (by name) —
+    * [[expression]] wraps a user Column in an opaque leaf instead. */
+  def unresolved(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 }

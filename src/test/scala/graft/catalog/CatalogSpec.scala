@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.llm.Ann
+import graft.llm.{Ann, Retrieval}
 import java.nio.file.{Files, Paths}
 
 class CatalogSpec extends AnyFunSuite {
@@ -231,8 +231,8 @@ class CatalogSpec extends AnyFunSuite {
       defaults = Map("idx" -> "index:bm25:bmstore")))
     val bmGot = exec.serviceExec("bmsvc").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
-    val bmWant = graft.llm.Retrieval.bm25TopKIndexed(spark, bmDir,
-        Seq("spark", "stream", "window"), 5).collect()
+    val bmWant = Retrieval.probe(Retrieval.Dir(spark, bmDir), Retrieval.Probe(
+        Retrieval.One(Seq("spark", "stream", "window")), 5)).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     assert(bmGot == bmWant && bmGot.nonEmpty)
     // kind-pinned ref bound to the WRONG index kind fails loudly

@@ -32,6 +32,20 @@ class ArgvSpec extends AnyFunSuite {
     }
   }
 
+  private val outOfRange: Seq[(String, Array[String] => Any, Seq[String])] = Seq(
+    ("serve-bm25", ServeBm25Cli.parseArgs, Seq("--k1", "-0.5")),
+    ("serve-bm25", ServeBm25Cli.parseArgs, Seq("--b", "1.5")),
+    ("serve-hybrid", ServeHybridCli.parseArgs, Seq("--k1", "-2.0")),
+    ("serve-hybrid", ServeHybridCli.parseArgs, Seq("--b", "-0.25")))
+
+  outOfRange.foreach { case (cli, parse, args @ Seq(flag, v)) =>
+    test(s"$cli ${args.mkString(" ")} is out of range, named before the job starts") {
+      val e = intercept[IllegalArgumentException](parse(args.toArray))
+      assert(e.getMessage.contains(s"$flag must be"), e.getMessage)
+      assert(e.getMessage.endsWith(s"got $v"), e.getMessage)
+    }
+  }
+
   test("a numeric flag left dangling fails naming the flag") {
     val e = intercept[IllegalArgumentException](ServeCli.parseArgs(Array("--k")))
     assert(e.getMessage == "flag --k requires a value")

@@ -3,7 +3,7 @@ package graft.dfl
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import graft.llm.{Ann, Dedup, Similarity}
+import graft.llm.{Ann, Dedup, Retrieval, Similarity}
 
 /** The LLM dataset operators THROUGH the DFL surface (parser → DflFrame
   * dataset-op dispatch): each stage must produce exactly what the backing
@@ -425,8 +425,9 @@ class DflLlmSpec extends AnyFunSuite {
     val got = DflFrame.pipeline(docs,
         s"hybridProbe(@, $$bm, $$ann, '$qtext', $$q, 5)", vars)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
-    val lex = graft.llm.Retrieval.bm25TopKIndexed(spark, bmDir,
-      qtext.split(" ").toSeq, 10).select("id", "rnk")
+    val lex = Retrieval.probe(Retrieval.Dir(spark, bmDir),
+        Retrieval.Probe(Retrieval.One(qtext.split(" ").toSeq), 10))
+      .select("id", "rnk")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cos").desc, col("id").asc)
     val sem = Ann.probe(Ann.Dir(spark, ivfDir), Ann.Probe(Ann.One(qvec), Ann.TopK(10)))
@@ -744,6 +745,25 @@ class DflLlmSpec extends AnyFunSuite {
       assert(idxDirs() >= 1, "minBytes=0 must restore index-always")
       assert(indexed == direct,
         "direct and indexed paths must be value-identical")
+    } finally {
+      spark.conf.unset("graft.ivf.indexBase")
+      spark.conf.unset("graft.dfl.index.minBytes")
+    }
+  }
+
+  test("bm25 stage: k <= 0 is a parse error and bad knobs fail before any index build") {
+    val idxBase = java.nio.file.Files.createTempDirectory("graft-dflbm25bad").toString
+    spark.conf.set("graft.ivf.indexBase", idxBase)
+    spark.conf.set("graft.dfl.index.minBytes", "0")
+    try {
+      assert(intercept[DflParseException](DflFrame.pipeline(docs,
+        "bm25(@, '@doc_id', '@text', 'spark stream', 0)"))
+        .getMessage == "bm25: k must be positive")
+      assert(intercept[IllegalArgumentException](DflFrame.pipeline(docs,
+        "bm25(@, '@doc_id', '@text', 'spark stream', 5, 1.2, 2)"))
+        .getMessage.contains("b must be in [0, 1]"))
+      assert(new java.io.File(idxBase).list().isEmpty,
+        "a rejected bm25 stage must not build an index")
     } finally {
       spark.conf.unset("graft.ivf.indexBase")
       spark.conf.unset("graft.dfl.index.minBytes")
@@ -1143,8 +1163,9 @@ class DflLlmSpec extends AnyFunSuite {
       .join(hEmb.select(col("doc_id"), col("vec")), Seq("doc_id"))
     // API composition at the stage's own pools (2k = 20 per run)
     def apiStack(k: Int): org.apache.spark.sql.DataFrame = {
-      val lex = graft.llm.Retrieval.bm25TopK(corpus, "doc_id", "text",
-        qtext.split(" ").toSeq, 2 * k).select("id", "rnk")
+      val lex = Retrieval.probe(Retrieval.Scan(corpus, "doc_id", "text"),
+          Retrieval.Probe(Retrieval.One(qtext.split(" ").toSeq), 2 * k))
+        .select("id", "rnk")
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("cos").desc, col("id").asc)
       val sem = Similarity.bruteForceTopK(
@@ -1206,8 +1227,10 @@ class DflLlmSpec extends AnyFunSuite {
     // API composition: filtered lexical leg (corpus-global stats,
     // predicate before ranking), pre-filtered semantic leg, RRF, MMR
     def apiStack(k: Int): org.apache.spark.sql.DataFrame = {
-      val lex = graft.llm.Retrieval.bm25TopKFiltered(corpus, "doc_id",
-        "text", qtext.split(" ").toSeq, 2 * k, pred).select("id", "rnk")
+      val lex = Retrieval.probe(Retrieval.Scan(corpus, "doc_id", "text"),
+          Retrieval.Probe(Retrieval.One(qtext.split(" ").toSeq), 2 * k,
+            Some(pred)))
+        .select("id", "rnk")
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("cos").desc, col("id").asc)
       val sem = Similarity.bruteForceTopK(

@@ -239,7 +239,8 @@ class DeleteSpec extends AnyFunSuite {
         $"doc_id" =!= 9001L && $"doc_id" =!= 9002L),
       "doc_id", "text", freshDir)
     val terms = Seq("spark", "stream", "window")
-    def run(d: String) = Retrieval.bm25TopKIndexed(spark, d, terms, 10)
+    def run(d: String) = Retrieval.probe(Retrieval.Dir(spark, d),
+      Retrieval.Probe(Retrieval.One(terms), 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     assert(run(dir) == run(freshDir),
       "post-delete scores must equal a fresh build over the survivors")
@@ -278,7 +279,8 @@ class DeleteSpec extends AnyFunSuite {
     Retrieval.bm25Build(corpus.filter($"doc_id" % 11 =!= 4),
       "doc_id", "text", freshDir)
     val terms = Seq("spark", "stream", "window")
-    def run(d: String) = Retrieval.bm25TopKIndexed(spark, d, terms, 10)
+    def run(d: String) = Retrieval.probe(Retrieval.Dir(spark, d),
+      Retrieval.Probe(Retrieval.One(terms), 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     assert(run(dir) == run(freshDir))
   }
@@ -317,7 +319,8 @@ class DeleteSpec extends AnyFunSuite {
     val nVictims = victims.count()
     Retrieval.bm25Delete(victims, "doc_id", dir)
     val terms = Seq("spark", "stream", "window")
-    def run() = Retrieval.bm25TopKIndexed(spark, dir, terms, 10)
+    def run() = Retrieval.probe(Retrieval.Dir(spark, dir),
+      Retrieval.Probe(Retrieval.One(terms), 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     val before = run()
     val st = Retrieval.bm25Compact(spark, dir)

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
@@ -18,6 +19,16 @@ class RetrievalSpec extends AnyFunSuite {
     (1L, "cat dog cat"), (2L, "dog fish"), (3L, "bird"),
   ).toDF("doc_id", "text")
 
+  private def scan(df: DataFrame): Retrieval.Source =
+    Retrieval.Scan(df, "doc_id", "text")
+  private def dir(d: String): Retrieval.Source = Retrieval.Dir(spark, d)
+  private def one(src: Retrieval.Source, terms: Seq[String], k: Int,
+                  filter: Option[Column] = None): DataFrame =
+    Retrieval.probe(src, Retrieval.Probe(Retrieval.One(terms), k, filter))
+  private def batch(src: Retrieval.Source, qs: Seq[(Long, Seq[String])],
+                    k: Int, filter: Option[Column] = None): DataFrame =
+    Retrieval.probe(src, Retrieval.Probe(Retrieval.Batch(qs), k, filter))
+
   private def bm25Contribution(tf: Double, df: Double, n: Double, dl: Double,
                                avgdl: Double, k1: Double = 1.2,
                                b: Double = 0.75): Double = {
@@ -25,8 +36,8 @@ class RetrievalSpec extends AnyFunSuite {
     idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * (dl / avgdl)))
   }
 
-  test("bm25TopK matches the hand-computed formula exactly") {
-    val got = Retrieval.bm25TopK(tiny, "doc_id", "text", Seq("cat", "dog"), 3)
+  test("bm25 probe matches the hand-computed formula exactly") {
+    val got = one(scan(tiny), Seq("cat", "dog"), 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
     // doc 1: cat tf=2 df=1, dog tf=1 df=2; doc 2: dog tf=1 df=2
     def s(x: Double) = BigDecimal(x)
@@ -37,35 +48,57 @@ class RetrievalSpec extends AnyFunSuite {
       s"got ${got.toSeq}, want hand-computed ($d1, $d2)")
   }
 
-  test("bm25TopK: absent terms score nothing; k caps; matches-only rows") {
-    assert(Retrieval.bm25TopK(tiny, "doc_id", "text", Seq("absent"), 5)
-      .collect().isEmpty)
-    val capped = Retrieval.bm25TopK(tiny, "doc_id", "text",
-      Seq("cat", "dog", "fish", "bird"), 2).collect()
+  test("bm25 probe: absent terms score nothing; k caps; matches-only rows") {
+    assert(one(scan(tiny), Seq("absent"), 5).collect().isEmpty)
+    val capped = one(scan(tiny), Seq("cat", "dog", "fish", "bird"), 2).collect()
     assert(capped.length == 2)
     // doc 3 matches only "bird": still present when k allows
-    val all = Retrieval.bm25TopK(tiny, "doc_id", "text",
-      Seq("cat", "dog", "fish", "bird"), 10).collect()
+    val all = one(scan(tiny), Seq("cat", "dog", "fish", "bird"), 10).collect()
     assert(all.map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
   }
 
-  test("bm25TopK: duplicate query terms do not double-count") {
-    val once = Retrieval.bm25TopK(tiny, "doc_id", "text", Seq("dog"), 3).collect()
-    val twice = Retrieval.bm25TopK(tiny, "doc_id", "text", Seq("dog", "dog"), 3)
-      .collect()
+  test("bm25 probe: duplicate query terms do not double-count") {
+    val once = one(scan(tiny), Seq("dog"), 3).collect()
+    val twice = one(scan(tiny), Seq("dog", "dog"), 3).collect()
     assert(once.map(_.getDouble(1)).toSeq == twice.map(_.getDouble(1)).toSeq)
   }
 
-  test("bm25TopKBatch slices equal the single-query path on the real corpus") {
-    val queries = Seq(1L -> Seq("spark", "window"), 2L -> Seq("merge", "sort"))
-    val batch = Retrieval.bm25TopKBatch(docs, "doc_id", "text", queries, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .groupBy(_._1)
-    queries.foreach { case (qid, terms) =>
-      val single = Retrieval.bm25TopK(docs, "doc_id", "text", terms, 5)
-        .collect().map(r => (qid, r.getLong(0), r.getDouble(1), r.getLong(2)))
-      assert(batch(qid).sortBy(_._4).toSeq == single.toSeq,
-        s"batch slice for qid $qid diverges from single path")
+  test("bm25 parity: every Source × {One, Batch} × {filter, none} cell equals the Scan answer") {
+    val root = java.nio.file.Files.createTempDirectory("graft-bm25par").toString
+    docs.select($"doc_id", $"text", $"lang").write.parquet(s"$root/corpus")
+    val corpus = spark.read.parquet(s"$root/corpus")
+    val idxDir = s"$root/idx"
+    Retrieval.bm25Build(corpus, "doc_id", "text", idxDir, pbands = 16,
+      metaCols = Seq("lang"))
+    val qs = Seq(1L -> Seq("spark", "window"), 2L -> Seq("merge", "sort"),
+      3L -> Seq("stream", "stream", "window"))
+    val pred = col("lang") === "en"
+    val en = corpus.filter(pred).select("doc_id").as[Long].collect().toSet
+    val k = 5
+    // the reference: the unfiltered Scan ranking of EVERY matching doc;
+    // a filtered cell is filter∘rank over it (corpus-global scores)
+    def want(terms: Seq[String], filtered: Boolean): Seq[(Long, Double, Long)] =
+      one(scan(corpus), terms, 100000).collect()
+        .map(r => (r.getLong(0), r.getDouble(1)))
+        .filter(x => !filtered || en(x._1)).take(k).toSeq
+        .zipWithIndex.map { case ((id, sc), i) => (id, sc, i + 1L) }
+    val sources = Seq("Scan" -> scan(corpus), "Dir" -> dir(idxDir),
+      "Cached" -> Retrieval.Cached(corpus, "doc_id", "text",
+        s"bm25parity-$root", pbands = 16, metaCols = Seq("lang")))
+    for ((name, src) <- sources; filtered <- Seq(false, true)) {
+      val f = if (filtered) Some(pred) else None
+      val gotB = batch(src, qs, k, f).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+        .groupBy(_._1)
+      qs.foreach { case (qid, terms) =>
+        val w = want(terms, filtered)
+        assert(w.nonEmpty, s"qid $qid matches nothing")
+        val gotOne = one(src, terms, k, f).collect()
+          .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
+        assert(gotOne == w, s"$name One filtered=$filtered qid $qid")
+        assert(gotB(qid).sortBy(_._4).map(t => (t._2, t._3, t._4)).toSeq == w,
+          s"$name Batch filtered=$filtered qid $qid")
+      }
     }
   }
 
@@ -93,8 +126,8 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("bm25 plan: bounded-heap ranking (no row_number), no cartesian") {
-    val plan = Retrieval.bm25TopK(docs, "doc_id", "text",
-      Seq("spark", "window"), 10).queryExecution.executedPlan.toString
+    val plan = one(scan(docs), Seq("spark", "window"), 10)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("topk_by_score"), "top-k must be the heap aggregate")
     // the only window is the df count on tf's term exchange — ranking
     // itself never goes through a row_number window
@@ -106,22 +139,21 @@ class RetrievalSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-bm25idx").toString + "/idx"
     Retrieval.bm25Build(docs, "doc_id", "text", dir, pbands = 16)
     Seq(Seq("spark", "window"), Seq("merge", "sort", "stream")).foreach { terms =>
-      val direct = Retrieval.bm25TopK(docs, "doc_id", "text", terms, 10)
+      val direct = one(scan(docs), terms, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
-      val probed = Retrieval.bm25TopKIndexed(spark, dir, terms, 10)
+      val probed = one(this.dir(dir), terms, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
       assert(probed == direct, s"terms $terms: index diverges from scan")
     }
     // the postings scan prunes to the query terms' hash bands
-    val plan = Retrieval.bm25TopKIndexed(spark, dir, Seq("spark"), 5)
+    val plan = one(this.dir(dir), Seq("spark"), 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("pband"),
       s"expected pband partition pruning in:\n$plan")
     // rebuild over a live dir is the staged-commit path: still correct
     Retrieval.bm25Build(docs.limit(100), "doc_id", "text", dir, pbands = 16)
-    val small = Retrieval.bm25TopKIndexed(spark, dir, Seq("spark"), 5).collect()
-    val smallDirect = Retrieval.bm25TopK(docs.limit(100), "doc_id", "text",
-      Seq("spark"), 5).collect()
+    val small = one(this.dir(dir), Seq("spark"), 5).collect()
+    val smallDirect = one(scan(docs.limit(100)), Seq("spark"), 5).collect()
     assert(small.map(_.getLong(0)).toSeq == smallDirect.map(_.getLong(0)).toSeq)
   }
 
@@ -129,19 +161,19 @@ class RetrievalSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-bm25idxb").toString + "/idx"
     Retrieval.bm25Build(docs, "doc_id", "text", dir, pbands = 16)
     val qs = Seq(1L -> Seq("spark", "window"), 2L -> Seq("merge", "stream"))
-    val direct = Retrieval.bm25TopKBatch(docs, "doc_id", "text", qs, 5)
+    val direct = batch(scan(docs), qs, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSet
-    val probed = Retrieval.bm25TopKIndexedBatch(spark, dir, qs, 5)
+    val probed = batch(this.dir(dir), qs, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSet
     assert(probed == direct && probed.nonEmpty)
     // still pruned to the union terms' bands
-    val plan = Retrieval.bm25TopKIndexedBatch(spark, dir, qs, 5)
+    val plan = batch(this.dir(dir), qs, 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("pband"))
     intercept[IllegalArgumentException] {
-      Retrieval.bm25TopKIndexedBatch(spark, dir, Seq(1L -> Seq.empty), 5)
+      batch(this.dir(dir), Seq(1L -> Seq.empty), 5)
     }
   }
 
@@ -176,9 +208,9 @@ class RetrievalSpec extends AnyFunSuite {
     assert(avgdl == sumDl.toDouble / n)
     // probes are value-identical to the full-corpus direct scan
     Seq(Seq("spark", "window"), Seq("merge", "sort", "stream")).foreach { terms =>
-      val direct = Retrieval.bm25TopK(docs, "doc_id", "text", terms, 10)
+      val direct = one(scan(docs), terms, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
-      val probed = Retrieval.bm25TopKIndexed(spark, dir, terms, 10)
+      val probed = one(this.dir(dir), terms, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
       assert(probed == direct, s"terms $terms: appended index diverges")
     }
@@ -243,7 +275,7 @@ class RetrievalSpec extends AnyFunSuite {
     Retrieval.bm25Append(spark.read.parquet(s"$root/incB"), "doc_id", "text", dir)
     assert(Retrieval.bm25CompactionDue(spark, dir))
     val terms = Seq("spark", "merge", "window")
-    val before = Retrieval.bm25TopKIndexed(spark, dir, terms, 10)
+    val before = one(this.dir(dir), terms, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // df carries one delta row per (term, band) per batch before compaction
     val dfRowsBefore = spark.read.parquet(s"$dir/df").count()
@@ -254,7 +286,7 @@ class RetrievalSpec extends AnyFunSuite {
     assert(st.filesAfter <= st.filesBefore)
     // df merged back to one row per (term, band)
     assert(spark.read.parquet(s"$dir/df").count() == dfTermsBefore)
-    val after = Retrieval.bm25TopKIndexed(spark, dir, terms, 10)
+    val after = one(this.dir(dir), terms, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(after == before, "compaction changed probe answers")
     // fences carried: a replay of an already-ingested batch is a no-op
@@ -263,7 +295,7 @@ class RetrievalSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/postings").count() == postingsCount,
       "replayed append double-appended after compaction")
     // and the full direct scan still agrees
-    val direct = Retrieval.bm25TopK(docs, "doc_id", "text", terms, 10)
+    val direct = one(scan(docs), terms, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(after == direct)
   }
@@ -284,10 +316,10 @@ class RetrievalSpec extends AnyFunSuite {
     rmrfLocal(s"$dir/stats")
     java.nio.file.Files.move(java.nio.file.Paths.get(s"$root/legstats"),
       java.nio.file.Paths.get(s"$dir/stats"))
-    val probed = Retrieval.bm25TopKIndexed(spark, dir, Seq("spark"), 5)
+    val probed = one(this.dir(dir), Seq("spark"), 5)
       .collect().map(_.getLong(0)).toSeq
-    val direct = Retrieval.bm25TopK(docs.limit(200), "doc_id", "text",
-      Seq("spark"), 5).collect().map(_.getLong(0)).toSeq
+    val direct = one(scan(docs.limit(200)), Seq("spark"), 5)
+      .collect().map(_.getLong(0)).toSeq
     assert(probed == direct, "legacy-format index must still serve")
     val ex = intercept[IllegalArgumentException] {
       Retrieval.bm25Append(docs.limit(10), "doc_id", "text", dir)
@@ -301,27 +333,24 @@ class RetrievalSpec extends AnyFunSuite {
     f.delete(); ()
   }
 
-  test("bm25TopKCached: build-once lifecycle appends on pure file growth and matches the direct scan") {
+  test("bm25 Cached source: build-once lifecycle appends on pure file growth and matches the direct scan") {
     val root = java.nio.file.Files.createTempDirectory("graft-bm25cache").toString
     docs.filter($"doc_id" < 300).select($"doc_id", $"text")
       .write.parquet(s"$root/corpus")
     val key = s"bm25cache-$root"
     def corpus = spark.read.parquet(s"$root/corpus")
-    val r1 = Retrieval.bm25TopKCached(corpus, "doc_id", "text", key,
-      Seq("spark", "window"), 5, pbands = 8)
+    def cached = Retrieval.Cached(corpus, "doc_id", "text", key, pbands = 8)
+    val r1 = one(cached, Seq("spark", "window"), 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val d1 = Retrieval.bm25TopK(corpus, "doc_id", "text",
-      Seq("spark", "window"), 5)
+    val d1 = one(scan(corpus), Seq("spark", "window"), 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(r1 == d1)
     // grow the corpus by file addition → the cached lifecycle appends
     docs.filter($"doc_id" >= 300 && $"doc_id" < 330).select($"doc_id", $"text")
       .write.mode("append").parquet(s"$root/corpus")
-    val r2 = Retrieval.bm25TopKCached(corpus, "doc_id", "text", key,
-      Seq("spark", "window"), 5, pbands = 8)
+    val r2 = one(cached, Seq("spark", "window"), 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val d2 = Retrieval.bm25TopK(corpus, "doc_id", "text",
-      Seq("spark", "window"), 5)
+    val d2 = one(scan(corpus), Seq("spark", "window"), 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(r2 == d2, "cached index stale after corpus file growth")
   }
@@ -343,7 +372,7 @@ class RetrievalSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-bm25heal").toString
     val dir = s"$root/idx"
     Retrieval.bm25Build(docs.limit(200), "doc_id", "text", dir, pbands = 8)
-    val expect = Retrieval.bm25TopKIndexed(spark, dir, Seq("spark"), 5)
+    val expect = one(this.dir(dir), Seq("spark"), 5)
       .collect().map(_.getLong(0)).toSeq
     // simulate replaceSidecar's loss window: the fully-written merged
     // sidecar sits at .stats.staging, the live dir is gone
@@ -354,7 +383,7 @@ class RetrievalSpec extends AnyFunSuite {
     // a probe heals and serves (fresh session-state: bust the memo by
     // touching the postings listing? — the stamp covers stats, which
     // just vanished, so the memo invalidates on its own)
-    val healed = Retrieval.bm25TopKIndexed(spark, dir, Seq("spark"), 5)
+    val healed = one(this.dir(dir), Seq("spark"), 5)
       .collect().map(_.getLong(0)).toSeq
     assert(healed == expect && new java.io.File(s"$dir/stats").exists(),
       "stats must be restored from the staged copy and serve identically")
@@ -378,26 +407,25 @@ class RetrievalSpec extends AnyFunSuite {
     Retrieval.bm25Append(spark.read.parquet(s"$root/inc"), "doc_id", "text", dir)
     // expectation = filter ∘ rank over the FULL scored set: every
     // matching doc's unfiltered score, langs joined, 'en' only, top 10
-    val full = Retrieval.bm25TopKIndexed(spark, dir, terms, 100000)
+    val full = one(this.dir(dir), terms, 100000)
       .select($"id", $"score")
       .join(docs.select($"doc_id".as("id"), $"lang"), Seq("id"))
       .filter($"lang" === "en")
       .orderBy($"score".desc, $"id".asc).limit(10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    def probeF() = Retrieval.bm25TopKIndexedFiltered(spark, dir, terms, 10,
-        col("lang") === "en")
+    def probeF() = one(this.dir(dir), terms, 10, Some(col("lang") === "en"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probeF() == full && full.nonEmpty,
       "filtered probe must equal filter-then-rank over unfiltered scores")
     // survivors' scores are bit-identical to their unfiltered scores
-    val unfiltered = Retrieval.bm25TopKIndexed(spark, dir, terms, 1000)
+    val unfiltered = one(this.dir(dir), terms, 1000)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     probeF().foreach { case (id, s) => assert(unfiltered(id) == s) }
     // batch slice ≡ single filtered probe
-    val batch = Retrieval.bm25TopKIndexedBatchFiltered(spark, dir,
-        Seq(1L -> terms), 10, col("lang") === "en")
+    val batchF = batch(this.dir(dir), Seq(1L -> terms), 10,
+        Some(col("lang") === "en"))
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
-    assert(batch == probeF())
+    assert(batchF == probeF())
     // compaction preserves the metadata columns and the answers
     Retrieval.bm25Compact(spark, dir)
     assert(probeF() == full, "filtered answers changed across compaction")
@@ -418,20 +446,17 @@ class RetrievalSpec extends AnyFunSuite {
     }
     // a duplicated qid would double-count scores: rejected, never served
     intercept[IllegalArgumentException] {
-      Retrieval.bm25TopKIndexedBatch(spark, dir,
-        Seq(1L -> Seq("spark"), 1L -> Seq("spark")), 5)
+      batch(this.dir(dir), Seq(1L -> Seq("spark"), 1L -> Seq("spark")), 5)
     }
     intercept[IllegalArgumentException] {
-      Retrieval.bm25TopKBatch(docs, "doc_id", "text",
-        Seq(1L -> Seq("spark"), 1L -> Seq("merge")), 5)
+      batch(scan(docs), Seq(1L -> Seq("spark"), 1L -> Seq("merge")), 5)
     }
   }
 
-  test("bm25TopKFiltered (direct scan): corpus-global stats, predicate before ranking — equals the filtered index probe") {
+  test("bm25 filtered Scan: corpus-global stats, predicate before ranking — equals the filtered index probe") {
     val terms = Seq("spark", "stream", "window")
     val pred = col("lang") === "en"
-    val direct = Retrieval.bm25TopKFiltered(docs, "doc_id", "text",
-        terms, 10, pred)
+    val direct = one(scan(docs), terms, 10, Some(pred))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     // the filtered INDEX probe is the already-oracle-checked semantics
     // (corpus-global scores, predicate-restricted candidates) — the
@@ -440,13 +465,12 @@ class RetrievalSpec extends AnyFunSuite {
       .createTempDirectory("graft-bm25fdir").toString + "/idx"
     Retrieval.bm25Build(docs, "doc_id", "text", idxDir, pbands = 16,
       metaCols = Seq("lang"))
-    val indexed = Retrieval.bm25TopKIndexedFiltered(spark, idxDir, terms,
-        10, pred)
+    val indexed = one(dir(idxDir), terms, 10, Some(pred))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
     assert(direct == indexed && direct.nonEmpty)
     // scores are the UNFILTERED corpus's (global df/N/avgdl): every
     // served (id, score) appears in the unfiltered ranking's scores
-    val unfScores = Retrieval.bm25TopK(docs, "doc_id", "text", terms, 1000)
+    val unfScores = one(scan(docs), terms, 1000)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(direct.forall { case (id, s, _) => unfScores(id) == s },
       "filtered candidates must keep their corpus-global scores")
@@ -496,19 +520,114 @@ class RetrievalSpec extends AnyFunSuite {
     }
   }
 
+  /** Probes every source must refuse: empty queries and batches, a
+    * query without terms, k ≤ 0, duplicate qids, k1 < 0, b outside
+    * [0, 1] and NaN knobs. */
+  private val badProbes: Seq[Retrieval.Probe] = {
+    import Retrieval.{Batch, One, Probe}
+    val q = One(Seq("cat"))
+    Seq(Probe(One(Nil), 5), Probe(q, 0), Probe(q, -1),
+      Probe(Batch(Nil), 5), Probe(Batch(Seq(1L -> Nil)), 5),
+      Probe(Batch(Seq(1L -> Seq("cat"), 1L -> Seq("dog"))), 5),
+      Probe(q, 5, k1 = -0.1), Probe(q, 5, k1 = Double.NaN),
+      Probe(q, 5, b = -0.1), Probe(q, 5, b = 1.5), Probe(q, 5, b = Double.NaN))
+  }
+
+  /** `tiny` as a file-backed corpus under a fresh root (the Cached shape). */
+  private def tinyOnDisk(tag: String): (String, DataFrame) = {
+    val root = java.nio.file.Files.createTempDirectory(tag).toString
+    tiny.write.parquet(s"$root/corpus")
+    (root, spark.read.parquet(s"$root/corpus"))
+  }
+
   test("bm25 rejects bad arguments") {
-    intercept[IllegalArgumentException] {
-      Retrieval.bm25TopK(tiny, "doc_id", "text", Seq.empty, 5)
-    }
-    intercept[IllegalArgumentException] {
-      Retrieval.bm25TopK(tiny, "doc_id", "text", Seq("x"), 0)
-    }
+    val (root, corpus) = tinyOnDisk("graft-bm25bad")
+    Retrieval.bm25Build(tiny, "doc_id", "text", s"$root/idx", pbands = 4)
+    val sources = Seq(scan(tiny), dir(s"$root/idx"),
+      Retrieval.Cached(corpus, "doc_id", "text", s"bm25bad-$root", pbands = 4))
+    for (src <- sources; p <- badProbes)
+      intercept[IllegalArgumentException](Retrieval.probe(src, p))
     intercept[IllegalArgumentException] {
       Retrieval.rrfFuse(Seq.empty, 5)
     }
-    intercept[IllegalArgumentException] {
-      Retrieval.bm25TopKBatch(tiny, "doc_id", "text", Seq(1L -> Seq.empty), 5)
+  }
+
+  test("a Cached probe with bad arguments creates no index dir") {
+    val (root, corpus) = tinyOnDisk("graft-bm25nobuild")
+    val base = new java.io.File(s"$root/base")
+    base.mkdirs()
+    spark.conf.set("graft.ivf.indexBase", base.toString)
+    try {
+      val cached = Retrieval.Cached(corpus, "doc_id", "text",
+        s"bm25nobuild-$root", pbands = 4)
+      badProbes.foreach { p =>
+        intercept[IllegalArgumentException](Retrieval.probe(cached, p))
+      }
+      // so does a predicate over a column no metaCols carry into the
+      // postings — it could never be served from the built layout
+      intercept[IllegalArgumentException](
+        one(cached, Seq("cat"), 5, Some(col("text") === "bird")))
+      assert(base.list().isEmpty, s"index dirs built: ${base.list().toSeq}")
+      // a good probe builds its one stamp dir there
+      assert(one(cached, Seq("cat"), 5).count() == 1)
+      assert(base.list().count(_.startsWith("idx-")) == 1)
+    } finally spark.conf.unset("graft.ivf.indexBase")
+  }
+
+  test("k1 and b out of range are rejected") {
+    // b = 2 drives the length norm 1 − b + b·dl/avgdl negative for
+    // short docs (dl/avgdl < 1/2), and to zero at dl/avgdl = 1/12 —
+    // an infinite score at k1 = 1.2
+    Seq((-0.5, 0.75, "k1 must be >= 0, got -0.5"),
+      (1.2, 2.0, "b must be in [0, 1], got 2.0"),
+      (1.2, -0.25, "b must be in [0, 1], got -0.25")).foreach {
+      case (k1, b, msg) =>
+        val e = intercept[IllegalArgumentException](Retrieval.probe(scan(tiny),
+          Retrieval.Probe(Retrieval.One(Seq("cat", "dog")), 3, k1 = k1, b = b)))
+        assert(e.getMessage.contains(msg), e.getMessage)
     }
+    // the range ends themselves serve finite scores
+    Seq((0.0, 0.0), (0.0, 1.0), (1.2, 1.0), (3.0, 0.0)).foreach { case (k1, b) =>
+      val got = Retrieval.probe(scan(tiny),
+          Retrieval.Probe(Retrieval.One(Seq("cat", "dog")), 3, k1 = k1, b = b))
+        .collect().map(_.getDouble(1))
+      assert(got.length == 2 && got.forall(s => s >= 0 && !s.isInfinite),
+        s"k1 $k1 b $b: ${got.toSeq}")
+    }
+  }
+
+  test("the bm25 ensure refuses an ANN dir and leaves it intact") {
+    val root = java.nio.file.Files.createTempDirectory("graft-bm25ens").toString
+    val lshDir = s"$root/lsh"
+    Ann.ensure(spark, lshDir, s"$sf/embeddings.parquet", "vec_id", "embedding",
+      Ann.Build("lsh", nBits = 8, partitionBits = 4))
+    val q = spark.read.parquet(s"$sf/embeddings.parquet")
+      .filter($"vec_id" === 0).select($"embedding").head()
+      .getSeq[Float](0).map(_.toDouble)
+    def answer() = Ann.probe(Ann.Dir(spark, lshDir),
+        Ann.Probe(Ann.One(q), Ann.TopK(5)))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val before = answer()
+    val e = intercept[IllegalArgumentException](Retrieval.ensure(spark, lshDir,
+      s"$sf/documents.parquet", "doc_id", "text"))
+    assert(e.getMessage.contains("'lsh'") && e.getMessage.contains("'bm25'"),
+      e.getMessage)
+    assert(Similarity.indexKind(spark, lshDir) == Some("lsh"))
+    assert(answer() == before && before.nonEmpty)
+    // probing it as a bm25 dir is Rejected, naming the kind
+    val r = intercept[Retrieval.Rejected](one(dir(lshDir), Seq("spark"), 5))
+    assert(r.kind == Some("lsh") && r.getMessage.contains("'lsh'"))
+    assert(intercept[Retrieval.Rejected](
+      one(dir(s"$root/none"), Seq("spark"), 5)).kind.isEmpty)
+    // a missing dir bootstraps; a built bm25 dir is served as-is
+    val bmDir = s"$root/bm"
+    Retrieval.ensure(spark, bmDir, s"$sf/documents.parquet", "doc_id", "text",
+      pbands = 8)
+    assert(Similarity.indexKind(spark, bmDir) == Some("bm25"))
+    val statsFiles = new java.io.File(s"$bmDir/stats").list().toSet
+    Retrieval.ensure(spark, bmDir, s"$sf/documents.parquet", "doc_id", "text",
+      pbands = 8)
+    assert(new java.io.File(s"$bmDir/stats").list().toSet == statsFiles)
   }
 
   // ---- TREC-style run evaluation ----

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.llm.Ann
+import graft.llm.{Ann, Retrieval}
 import graft.dfl.DflFrame
 import graft.io.DataStoreIO
 import org.apache.spark.sql.functions.{col, explode, lit, sequence, unbase64}
@@ -1464,14 +1464,15 @@ class StreamParitySpec extends AnyFunSuite {
       "array-shaped terms must answer identically to the string shape")
     // streamed answers equal the direct indexed batch probe AND the
     // full direct corpus scan
-    val direct = graft.llm.Retrieval.bm25TopKIndexedBatch(spark, idxDir,
-        Seq(1L -> Seq("spark", "stream", "window"), 2L -> Seq("merge", "sort"),
-          4L -> Seq("merge", "sort")),
-        5).collect()
+    val direct = Retrieval.probe(Retrieval.Dir(spark, idxDir), Retrieval.Probe(
+        Retrieval.Batch(Seq(1L -> Seq("spark", "stream", "window"),
+          2L -> Seq("merge", "sort"), 4L -> Seq("merge", "sort"))),
+        5)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     assert(first.toSet == direct)
-    val scan = graft.llm.Retrieval.bm25TopK(docs, "doc_id", "text",
-      Seq("spark", "stream", "window"), 5).collect()
+    val scan = Retrieval.probe(Retrieval.Scan(docs, "doc_id", "text"),
+        Retrieval.Probe(Retrieval.One(Seq("spark", "stream", "window")), 5))
+      .collect()
       .map(r => (1L, r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
     assert(first.filter(_._1 == 1L).toSet == scan)
     // RESTART: a new query file (quoted qid) arrives while the job is
@@ -1503,8 +1504,9 @@ class StreamParitySpec extends AnyFunSuite {
     val got = spark.read.parquet(s"$root/answers/batch-*")
       .orderBy("rnk").collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[Double]("score")))
-    val direct = graft.llm.Retrieval.bm25TopK(docs, "doc_id", "text",
-      Seq("spark", "stream", "window"), 4).collect()
+    val direct = Retrieval.probe(Retrieval.Scan(docs, "doc_id", "text"),
+        Retrieval.Probe(Retrieval.One(Seq("spark", "stream", "window")), 4))
+      .collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
     assert(got.toSeq == direct.toSeq,
       "bootstrapped index + array terms must equal the direct scan")
@@ -1531,9 +1533,9 @@ class StreamParitySpec extends AnyFunSuite {
     val fgot = spark.read.parquet(s"$root/fanswers/batch-*")
       .orderBy("rnk").collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[Double]("score"))).toSeq
-    val fdirect = graft.llm.Retrieval.bm25TopKIndexedFiltered(spark,
-        s"$root/fidx", Seq("spark", "stream", "window"), 4,
-        org.apache.spark.sql.functions.col("lang") === "en")
+    val fdirect = Retrieval.probe(Retrieval.Dir(spark, s"$root/fidx"),
+        Retrieval.Probe(Retrieval.One(Seq("spark", "stream", "window")), 4,
+          Some(col("lang") === "en")))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(fgot == fdirect && fgot.nonEmpty,
       "filtered serving must equal the filtered batch probe")
@@ -1591,8 +1593,8 @@ class StreamParitySpec extends AnyFunSuite {
     val qs = Seq((1L, Seq("spark", "stream", "window"), q1),
       (2L, Seq("merge", "sort", "vector"), q2))
     def direct(k: Int) = {
-      val lex = graft.llm.Retrieval.bm25TopKIndexedBatch(spark,
-        s"$root/bidx", qs.map(q => q._1 -> q._2), 2 * k)
+      val lex = Retrieval.probe(Retrieval.Dir(spark, s"$root/bidx"),
+          Retrieval.Probe(Retrieval.Batch(qs.map(q => q._1 -> q._2)), 2 * k))
         .select("qid", "id", "rnk")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid"))
@@ -1671,8 +1673,9 @@ class StreamParitySpec extends AnyFunSuite {
         r.getAs[Double]("score"), r.getAs[Long]("rnk"))).toSet
     // direct filtered composition
     val pred = col("lang") === "en"
-    val lex = graft.llm.Retrieval.bm25TopKIndexedBatchFiltered(spark,
-        s"$root/bidx", Seq(1L -> Seq("spark", "stream", "window")), 10, pred)
+    val lex = Retrieval.probe(Retrieval.Dir(spark, s"$root/bidx"),
+        Retrieval.Probe(Retrieval.Batch(Seq(1L -> Seq("spark", "stream", "window"))),
+          10, Some(pred)))
       .select("qid", "id", "rnk")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
@@ -1728,8 +1731,9 @@ class StreamParitySpec extends AnyFunSuite {
     val got = spark.read.json(s"$root/answers/batch-*").collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("id"),
         r.getAs[Double]("score"), r.getAs[Long]("rnk"))).toSet
-    val lex = graft.llm.Retrieval.bm25TopKIndexedBatch(spark, s"$root/bidx",
-        Seq(1L -> Seq("spark", "stream", "window")), 10)
+    val lex = Retrieval.probe(Retrieval.Dir(spark, s"$root/bidx"),
+        Retrieval.Probe(Retrieval.Batch(Seq(1L -> Seq("spark", "stream", "window"))),
+          10))
       .select("qid", "id", "rnk")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
@@ -1831,8 +1835,9 @@ class StreamParitySpec extends AnyFunSuite {
     // direct composition: compressed probes for the pool, RRF fuse at
     // pool width, exact MMR over the fused pool with TRUE floats from
     // the sidecar — serve-hybrid must equal it term for term
-    val lex = graft.llm.Retrieval.bm25TopKIndexedBatch(spark, s"$root/bidx",
-        Seq(1L -> Seq("spark", "stream", "window")), 10)
+    val lex = Retrieval.probe(Retrieval.Dir(spark, s"$root/bidx"),
+        Retrieval.Probe(Retrieval.Batch(Seq(1L -> Seq("spark", "stream", "window"))),
+          10))
       .select("qid", "id", "rnk")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
@@ -1888,8 +1893,9 @@ class StreamParitySpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("id"),
         r.getAs[Long]("rnk"))).toSet
     val pred = graft.dfl.DflFrame.indexPredicate("@id < 300")
-    val lexF = graft.llm.Retrieval.bm25TopKIndexedBatchFiltered(spark,
-        s"$root/bidx", Seq(1L -> Seq("spark", "stream", "window")), 10, pred)
+    val lexF = Retrieval.probe(Retrieval.Dir(spark, s"$root/bidx"),
+        Retrieval.Probe(Retrieval.Batch(Seq(1L -> Seq("spark", "stream", "window"))),
+          10, Some(pred)))
       .select("qid", "id", "rnk")
     val semFR = Ann.probe(Ann.Dir(spark, s"$root/aidx"),
       Ann.Probe(Ann.Batch(Seq(1L -> q1)), Ann.TopK(10), filter = Some(pred), refine = Some(4)))
@@ -1932,10 +1938,12 @@ class StreamParitySpec extends AnyFunSuite {
       "--build-from", s"$root/backfill", "--compact-every", "1"))
     graft.cli.IngestCli.run(spark, cfg)
     val terms = Seq("spark", "stream", "window")
-    def probe() = graft.llm.Retrieval.bm25TopKIndexed(spark, idx, terms, 10)
+    def probe() = Retrieval.probe(Retrieval.Dir(spark, idx),
+        Retrieval.Probe(Retrieval.One(terms), 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val direct400 = graft.llm.Retrieval.bm25TopK(
-      docs.filter($"doc_id" < 400L), "doc_id", "text", terms, 10)
+    val direct400 = Retrieval.probe(
+      Retrieval.Scan(docs.filter($"doc_id" < 400L), "doc_id", "text"),
+      Retrieval.Probe(Retrieval.One(terms), 10))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probe() == direct400,
       "backfill + streamed increment must serve exactly the 400-doc corpus")
@@ -1948,8 +1956,9 @@ class StreamParitySpec extends AnyFunSuite {
     docs.filter($"doc_id" >= 400L).coalesce(1)
       .write.mode("append").parquet(incDir)
     graft.cli.IngestCli.run(spark, cfg)
-    val directAll = graft.llm.Retrieval.bm25TopK(docs, "doc_id", "text",
-      terms, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val directAll = Retrieval.probe(Retrieval.Scan(docs, "doc_id", "text"),
+      Retrieval.Probe(Retrieval.One(terms), 10))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probe() == directAll,
       "the grown index must equal the full-corpus direct scan")
     // retrain-skew is an IVF knob: rejected for bm25, never ignored
@@ -1970,12 +1979,11 @@ class StreamParitySpec extends AnyFunSuite {
       "--id-col", "doc_id", "--text-col", "text",
       "--checkpoint", s"$root/mckpt", "--once",
       "--build-from", s"$root/mbf", "--build-meta", "lang")))
-    val mProbe = graft.llm.Retrieval.bm25TopKIndexedFiltered(spark,
-        s"$root/midx", terms, 10,
-        org.apache.spark.sql.functions.col("lang") === "en")
+    val mProbe = Retrieval.probe(Retrieval.Dir(spark, s"$root/midx"),
+        Retrieval.Probe(Retrieval.One(terms), 10, Some(col("lang") === "en")))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val mWant = graft.llm.Retrieval.bm25TopKIndexed(spark, s"$root/midx",
-        terms, 100000).select($"id", $"score")
+    val mWant = Retrieval.probe(Retrieval.Dir(spark, s"$root/midx"),
+        Retrieval.Probe(Retrieval.One(terms), 100000)).select($"id", $"score")
       .join(mdocs.select($"doc_id".as("id"), $"lang"), Seq("id"))
       .filter($"lang" === "en")
       .orderBy($"score".desc, $"id".asc).limit(10)
