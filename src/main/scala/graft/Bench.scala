@@ -68,7 +68,7 @@ object Bench {
     // the driver's artifact capture keeps only the output TAIL, which has
     // truncated away cold totals in past rounds — persist the UNTRUNCATED
     // record into the repo as BENCH_SUMMARY_r{N}_c{cpus}.json (N = current
-    // round, inferred from the driver's committed per-round artifacts; the
+    // round, inferred from the committed per-round boards — `round`; the
     // core count qualifies the name so a low-core scaling run can never
     // clobber the round's full-core board — in round 21 the driver's
     // 8-core run overwrote the 32-core board under one name) so every
@@ -79,12 +79,8 @@ object Bench {
       try {
         val repo = new java.io.File(
           sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"))
-        val rounds = Option(repo.list()).getOrElse(Array.empty[String])
-          .flatMap { f =>
-            "^(?:BENCH|CORRECTNESS|VERDICT)_r(\\d+)\\.(?:json|md)$".r
-              .findFirstMatchIn(f).map(_.group(1).toInt)
-          }
-        val round = if (rounds.isEmpty) 0 else rounds.max + 1
+        val round = Bench.round(
+          Option(repo.list()).getOrElse(Array.empty[String]).toSeq)
         val name = s"BENCH_SUMMARY_r${round}_c$cpus.json"
         java.nio.file.Files.write(
           repo.toPath.resolve(name),
@@ -102,5 +98,15 @@ object Bench {
     // detail lives untruncated in `detail`. Same values, same methodology
     // — this is a measurement-REPORTING fix only (round-21 verdict #2).
     println(s"""{"metric":"total","value":$coldTotal,"unit":"sec","sf":"$sfDir","cpus":$cpus,"warm_total":$warmTotal,"warm_min_total":$warmMinTotal,"n":${cold.size},"detail":"$detail"}""")
+  }
+
+  /** The round a full board belongs to, from a repo listing: one past the
+    * last committed board `BENCH_rNN.json`. Only boards count — a round's
+    * CORRECTNESS/VERDICT files can land before its board runs (round 22's
+    * CORRECTNESS_r22.json did, and its board was named r23). */
+  def round(fileNames: Seq[String]): Int = {
+    val board = "^BENCH_r(\\d+)\\.json$".r
+    val rounds = fileNames.flatMap(board.findFirstMatchIn(_).map(_.group(1).toInt))
+    if (rounds.isEmpty) 0 else rounds.max + 1
   }
 }

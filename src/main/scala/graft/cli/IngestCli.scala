@@ -121,14 +121,11 @@ object IngestCli {
   /** Resolve the corpus binding, preferring the catalog datastore when a
     * catalog is given (same contract as ServeCli: plain-path URIs, the
     * datastore's format wins when set). */
-  def resolve(c: Config): Config =
-    if (c.catalogPath.isEmpty) c
-    else {
-      val ds = ServeCli.datastore(c.catalogPath, c.corpusDatastore)
-      c.copy(
-        corpusUri = ServeCli.plain(ds.uri),
-        corpusFormat = if (ds.format.nonEmpty) ds.format else c.corpusFormat)
-    }
+  def resolve(c: Config): Config = {
+    val (uri, format) = ServeCli.bind(c.catalogPath, "--corpus-datastore",
+      c.corpusDatastore, c.corpusUri, c.corpusFormat)
+    c.copy(corpusUri = uri, corpusFormat = format)
+  }
 
   def run(spark: SparkSession, c0: Config): org.apache.spark.sql.streaming.StreamingQuery = {
     val c = resolve(c0)

@@ -100,20 +100,15 @@ object ServeBm25Cli {
 
   /** Resolve the query/output bindings, preferring catalog datastores
     * when a catalog is given — the [[ServeCli.resolve]] contract. */
-  def resolve(c: Config): Config =
-    if (c.catalogPath.isEmpty) {
-      require(c.queriesUri.nonEmpty && c.outputUri.nonEmpty,
-        "either --catalog + datastore names or --queries-uri/--output-uri")
-      c
-    } else {
-      val qds = ServeCli.datastore(c.catalogPath, c.queriesDatastore)
-      val ods = ServeCli.datastore(c.catalogPath, c.outputDatastore)
-      c.copy(
-        queriesUri = ServeCli.plain(qds.uri),
-        queriesFormat = if (qds.format.nonEmpty) qds.format else c.queriesFormat,
-        outputUri = ServeCli.plain(ods.uri),
-        outputFormat = if (ods.format.nonEmpty) ods.format else c.outputFormat)
-    }
+  def resolve(c: Config): Config = {
+    val (qUri, qFormat) = ServeCli.bind(c.catalogPath, "--queries-datastore",
+      c.queriesDatastore, c.queriesUri, c.queriesFormat)
+    val (oUri, oFormat) = ServeCli.bind(c.catalogPath, "--output-datastore",
+      c.outputDatastore, c.outputUri, c.outputFormat)
+    ServeCli.requireServing(qUri, oUri)
+    c.copy(queriesUri = qUri, queriesFormat = qFormat,
+      outputUri = oUri, outputFormat = oFormat)
+  }
 
   def run(spark: SparkSession, c0: Config): org.apache.spark.sql.streaming.StreamingQuery = {
     val c = resolve(c0)

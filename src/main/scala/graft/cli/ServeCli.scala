@@ -139,20 +139,33 @@ object ServeCli {
 
   /** Resolve the query/output bindings, preferring catalog datastores
     * when a catalog is given. Exposed for the spec. */
-  def resolve(c: Config): Config =
-    if (c.catalogPath.isEmpty) {
-      require(c.queriesUri.nonEmpty && c.outputUri.nonEmpty,
-        "either --catalog + datastore names or --queries-uri/--output-uri")
-      c
-    } else {
-      val qds = datastore(c.catalogPath, c.queriesDatastore)
-      val ods = datastore(c.catalogPath, c.outputDatastore)
-      c.copy(
-        queriesUri = plain(qds.uri),
-        queriesFormat = if (qds.format.nonEmpty) qds.format else c.queriesFormat,
-        outputUri = plain(ods.uri),
-        outputFormat = if (ods.format.nonEmpty) ods.format else c.outputFormat)
+  def resolve(c: Config): Config = {
+    val (qUri, qFormat) = bind(c.catalogPath, "--queries-datastore",
+      c.queriesDatastore, c.queriesUri, c.queriesFormat)
+    val (oUri, oFormat) = bind(c.catalogPath, "--output-datastore",
+      c.outputDatastore, c.outputUri, c.outputFormat)
+    requireServing(qUri, oUri)
+    c.copy(queriesUri = qUri, queriesFormat = qFormat,
+      outputUri = oUri, outputFormat = oFormat)
+  }
+
+  /** The (uri, format) pair a streaming CLI binds: with a catalog, the
+    * datastore `name` given by `flag` (its URI as a plain path, its
+    * format when set, else `format`); without one, `uri` and `format`
+    * as given. */
+  private[cli] def bind(catalogPath: String, flag: String, name: String,
+                        uri: String, format: String): (String, String) =
+    if (catalogPath.isEmpty) (uri, format)
+    else {
+      require(name.nonEmpty, s"$flag is required with --catalog")
+      val ds = datastore(catalogPath, name)
+      (plain(ds.uri), if (ds.format.nonEmpty) ds.format else format)
     }
+
+  /** A serving CLI needs both its queries and its output bound. */
+  private[cli] def requireServing(queriesUri: String, outputUri: String): Unit =
+    require(queriesUri.nonEmpty && outputUri.nonEmpty,
+      "either --catalog + datastore names or --queries-uri/--output-uri")
 
   private[cli] def datastore(catalogPath: String, name: String): graft.catalog.DataStore = {
     val cat = graft.catalog.Catalog.load(catalogPath)

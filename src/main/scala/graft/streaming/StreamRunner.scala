@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType,
+  StringType, StructField, StructType}
 import graft.dfl.DflFrame
 import graft.llm.{Ann, Retrieval}
 
@@ -634,7 +636,7 @@ object StreamRunner {
   /** The serving jobs' per-micro-batch query budget: each batch's
     * queries collect to the driver (the small side by design), so a
     * misdelivered FILE — a corpus dropped into the queries dir — must
-    * fail loudly before the collect, not OOM the driver. 65 536 queries
+    * fail loudly after max+1 rows, not OOM the driver. 65 536 queries
     * × a 1 KB vector row ≈ 64 MB: generous for any real query stream,
     * far under driver heap. Override per job when a deployment
     * legitimately batches bigger. */
@@ -762,20 +764,24 @@ object StreamRunner {
     case _ => None
   }
 
-  /** Reject an oversized query micro-batch BEFORE the driver collect.
-    * The count is LIMIT-BOUNDED (max+1): a multi-GB file dropped in the
-    * queries dir is rejected after reading at most max+1 rows, never
-    * scanned end-to-end just to count it. */
-  private def guardBatchSize(batch: org.apache.spark.sql.Dataset[_],
-                             batchId: Long, max: Int, job: String): Unit =
+  /** Collect a query micro-batch to the driver, rejecting it when it
+    * carries more than `max` rows. The collect is LIMIT-BOUNDED (max+1):
+    * a multi-GB file dropped in the queries dir is rejected after reading
+    * at most max+1 rows, never scanned end-to-end, and the guard runs no
+    * Spark job of its own. */
+  private def collectBounded(batch: DataFrame, batchId: Long, max: Int,
+                             job: String): Array[Row] = {
     // max+1 would overflow at Int.MaxValue — the natural "disable the
-    // guard" override — and a negative limit fails every batch
-    if (max != Int.MaxValue &&
-        batch.limit(max + 1).count() > max) throw new IllegalStateException(
+    // guard" override
+    val rows =
+      (if (max == Int.MaxValue) batch else batch.limit(max + 1)).collect()
+    if (rows.length > max) throw new IllegalStateException(
       s"$job: micro-batch $batchId carries more than " +
         s"max-queries-per-batch $max query rows — a query batch collects " +
         "to the driver, so an unbounded file must be rejected, not " +
         "collected; split the input files or raise the limit if intended")
+    rows
+  }
 
   /** One serving micro-batch's observability record: how many query
     * rows arrived, how many were actually probed (the rest skipped —
@@ -900,219 +906,262 @@ object StreamRunner {
 
   private val staleReadAttempts = 3
 
-  /** Streaming ANN serving: answer a STREAM of query vectors against a
-    * built, static index (LSH, IVF, or IVFPQ) — the streaming member of the
-    * serving matrix (single / batch / stream × brute / ivf / lsh). Each
-    * micro-batch becomes ONE batched [[Ann.probe]] call (the
-    * family read from the index layout): the query vectors
-    * collect to the driver (bounded by the micro-batch, and they are the
-    * SMALL side — a few k×dim doubles; the corpus never moves), probe
-    * selection runs at zero Spark jobs against the memoized sidecars
-    * (occupancy histogram / centroids), and the probe is one pruned
-    * union read. `tuning` is the method's query-time knob (lsh →
-    * minCandidates, ivf → nprobe), defaulting to the recall-gated
-    * defaults. `sink` receives each micro-batch's (qid, id, cos) answer
-    * frame — write it to a topic, table, or memory sink as the
-    * deployment needs. The index must outlive the stream; rebuilds under
-    * the stream are the single-writer contract of the index lifecycle. */
-  def annServe(queries: DataFrame, qidCol: String, vecCol: String,
-               indexDir: String, k: Int, method: String = "lsh",
-               tuning: Option[Int] = None,
-               options: Map[String, String] = Map.empty,
-               trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-               minCos: Option[Double] = None,
-               filterDfl: Option[String] = None,
-               maxQueriesPerBatch: Int = defaultMaxQueriesPerBatch,
-               refine: Option[Int] = None)
-              (sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    annServeBatches(queries, qidCol, vecCol, indexDir, k, method, tuning,
-      options, trigger, minCos, filterDfl,
-      maxQueriesPerBatch, refine = refine)((answer, _) => sink(answer))
+  /** A `once` job drains the currently-available input and stops (the
+    * cron / drive-by shape); any other job is handed back running. */
+  private def drain(q: StreamingQuery, once: Boolean): StreamingQuery = {
+    if (once) {
+      try q.processAllAvailable() finally q.stop()
+    }
+    q
+  }
 
-  /** [[annServe]] with the micro-batch id handed to the sink — the hook an
-    * idempotent sink needs: a stream restarted from its checkpoint may
-    * REPLAY the last uncommitted batch, and a sink that writes keyed by
-    * batchId (e.g. `mode("overwrite")` into a `batch-<id>` dir, as
-    * [[annServeJob]] does) turns that at-least-once replay into
-    * exactly-once output. */
-  def annServeBatches(queries: DataFrame, qidCol: String, vecCol: String,
-               indexDir: String, k: Int, method: String = "lsh",
-               tuning: Option[Int] = None,
-               options: Map[String, String] = Map.empty,
-               trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-               minCos: Option[Double] = None,
-               filterDfl: Option[String] = None,
-               maxQueriesPerBatch: Int = defaultMaxQueriesPerBatch,
-               metricsSink: Option[ServeBatchMetrics => Unit] = None,
-               refine: Option[Int] = None)
-              (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    // the family is read from the layout; `method` is only checked
-    // against a built one, once, here
-    Ann.checkMethod(queries.sparkSession, indexDir, method, "annServe")
+  /** Field `i` of a collected query row through one of the
+    * `coerce*Value` tolerances — a null field is malformed too. */
+  private def field[T](r: Row, i: Int)(coerce: Any => Option[T]): Option[T] =
+    if (r.isNullAt(i)) None else coerce(r.get(i))
+
+  /** What one serving kind plugs into [[serveBatches]]: its query
+    * columns after the qid (typed as a jsonl queries dir reads them),
+    * the coercion of a collected row's columns (None = malformed), where
+    * its index lives (named by the stale-read warning) and its answer to
+    * one micro-batch's queries on the micro-batch's own session — how
+    * many it served and their answer frame, None when it served none. */
+  private[streaming] final case class ServeKind[Q](
+      name: String, where: String, fields: Seq[StructField],
+      parse: Row => Option[Q],
+      answer: (SparkSession, Long, Seq[(Long, Q)]) => (Int, Option[DataFrame]))
+
+  /** The serving micro-batch loop of every kind. A micro-batch's queries
+    * COLLECT to the driver — they are the small side, the corpus never
+    * moves — bounded by `maxQueriesPerBatch` ([[collectBounded]]: an
+    * unbounded query file fails loudly instead of OOMing the driver). A
+    * serving stream must not die on one bad record: a row whose qid or
+    * columns do not coerce (null, fractional qid, non-numeric vector
+    * element, empty terms) is skipped with a warning, and a qid
+    * duplicated within one micro-batch keeps its first occurrence (the
+    * rest would duplicate, or silently merge, its answer rows). The kind
+    * answers the rest inside [[serveRetryingStaleRead]], and `sink` runs
+    * INSIDE that retry: an answer whose lazy read dies on a maintenance
+    * rewrite is re-resolved and sunk again, so a sink may be invoked more
+    * than once for one batchId and must write keyed by it (the job sinks
+    * overwrite `batch-<id>`). Every other failure — missing index,
+    * genuine bug, sink error — fails the stream. `metricsSink` receives
+    * one [[ServeBatchMetrics]] per micro-batch that sank answers. */
+  private[streaming] def serveBatches[Q](queries: DataFrame, qidCol: String,
+      kind: ServeKind[Q], options: Map[String, String] = Map.empty,
+      trigger: Option[Trigger] = None,
+      maxQueriesPerBatch: Int = defaultMaxQueriesPerBatch,
+      metricsSink: Option[ServeBatchMetrics => Unit] = None)
+      (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     require(maxQueriesPerBatch > 0,
-      s"annServe: maxQueriesPerBatch must be positive, got $maxQueriesPerBatch")
-    // REFINED serving (the FAISS refine pattern): compressed ADC
-    // nominates, true cosines from the keepVectors float sidecar rerank
-    // (top-k / filtered) or verify the threshold exactly (range).
-    // ivfpq-only (float layouts already score true cosines); composes
-    // with --filter-dfl (the filtered widening loop nominates at
-    // k×refine per round) and with --min-cos (loosened nomination +
-    // exact verify) — a sidecar-less index still rejects loudly.
+      s"${kind.name}: maxQueriesPerBatch must be positive, got $maxQueriesPerBatch")
+    val metrics = metricsSink.isDefined
+    val writer0 = queries.writeStream.options(options)
+    val writer = trigger.fold(writer0)(writer0.trigger)
+    writer.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      val batchT0 = System.nanoTime()
+      val queryRows = collectBounded(
+        batch.select((qidCol +: kind.fields.map(_.name)).map(col): _*),
+        batchId, maxQueriesPerBatch, kind.name)
+      val seen = scala.collection.mutable.Set.empty[Long]
+      val qs = queryRows.toSeq.flatMap { r =>
+        field(r, 0)(coerceQidValue).zip(kind.parse(r)) match {
+          case None =>
+            log.warn(s"${kind.name}: skipping malformed query row $r")
+            None
+          case Some((qid, _)) if !seen.add(qid) =>
+            log.warn(s"${kind.name}: skipping duplicate qid $qid within one batch")
+            None
+          case q => q
+        }
+      }
+      var served = 0
+      if (qs.nonEmpty)
+        serveRetryingStaleRead(kind.name, batchId, kind.where, metrics) {
+          // one attempt's count and telemetry: a stale-read retry must
+          // not double-record the probe legs
+          if (metrics) graft.llm.ProbeStats.begin()
+          val (n, answer) = kind.answer(batch.sparkSession, batchId, qs)
+          served = n
+          answer.foreach(sink(_, batchId))
+        }
+      // metrics only when answers were actually sunk: the sidecar lands
+      // INSIDE the batch dir, so an all-malformed batch must not conjure
+      // an answer-less batch-N/ that dir-listing consumers would read as
+      // a committed (empty) answer batch
+      if (served > 0) metricsSink.foreach { ms =>
+        ms(ServeBatchMetrics(batchId, queryRows.length, served,
+          queryRows.length - served,
+          (System.nanoTime() - batchT0) / 1000000,
+          graft.llm.ProbeStats.end()))
+      }
+      else if (metrics) { graft.llm.ProbeStats.end(); () }
+    }.start()
+  }
+
+  /** The PRODUCT shell of every serving kind — a watched directory of
+    * query files in, answer files out; the shape a catalog serving job
+    * ([[graft.catalog.Exec]]) or a `serve-*` CLI verb configures.
+    *
+    *  - `queriesUri`: a directory Structured Streaming watches; every new
+    *    jsonl/parquet file is a micro-batch of queries. jsonl reads under
+    *    an explicit schema — qid as STRING (the JSON reader renders both
+    *    `123` and `"123"` into it, and the qid coercion accepts either),
+    *    the kind's columns at their jsonl types — so a queries dir that
+    *    is still EMPTY at job start works (the cron / fresh-host shape).
+    *    Parquet keeps file inference (query files define their own
+    *    types, which the row coercion normalizes), so it needs a file
+    *    present at start. csv/tsv would carry vectors as strings, so
+    *    only the two array-typed formats serve.
+    *  - `outUri`: each micro-batch's answers land as `batch-<id>/part-*`
+    *    (jsonl or parquet) plus its `_metrics.json` sidecar, written
+    *    keyed by batch id with `mode("overwrite")`, so a batch REPLAYED
+    *    after a crash (or sunk again by a stale-read retry) overwrites
+    *    its own output instead of duplicating it: exactly-once answers
+    *    end to end. Read the answer stream back with
+    *    `spark.read.json(s"$outUri/batch-*")`.
+    *  - `checkpoint`: a RESTARTED job (same checkpoint) resumes with the
+    *    query files that arrived while it was down and never re-answers
+    *    files it already committed.
+    *  - `once = true` drains the available queries and stops; `false`
+    *    serves until stopped.
+    *
+    * The kind is built (its index and configuration checked) after the
+    * format checks and before the stream is read. The index must outlive
+    * the stream: rebuilds under it are the single-writer contract of the
+    * index lifecycle. */
+  private def serveJob[Q](job: String, spark: SparkSession,
+      queriesUri: String, format: String, qidCol: String, outUri: String,
+      outFormat: String, checkpoint: String, once: Boolean,
+      maxQueriesPerBatch: Int)(kind: => ServeKind[Q]): StreamingQuery = {
+    require(outFormat == "jsonl" || outFormat == "parquet",
+      s"$job: output format must be jsonl or parquet, got $outFormat")
+    require(format == "jsonl" || format == "parquet",
+      s"$job: queries format must be jsonl or parquet, got $format")
+    val k = kind
+    val schema =
+      if (format == "jsonl")
+        Some(StructType(StructField(qidCol, StringType) +: k.fields))
+      else None
+    val queries = readStream(spark, queriesUri, format, schema)
+    drain(serveBatches(queries, qidCol, k,
+      options = Map("checkpointLocation" -> checkpoint),
+      maxQueriesPerBatch = maxQueriesPerBatch,
+      metricsSink = Some(m => writeBatchMetrics(spark, outUri, m))) {
+      (answer, batchId) =>
+        val w = answer.write.mode("overwrite")
+        if (outFormat == "parquet") w.parquet(s"$outUri/batch-$batchId")
+        else w.json(s"$outUri/batch-$batchId")
+    }, once)
+  }
+
+  /** The queries whose vector matches the ANN index's OWN dim (memoized
+    * sidecar meta — zero Spark jobs warm), answered by `probe`; the rest
+    * are skipped with a warning, so a wrong-dim query never poisons the
+    * well-formed ones. The dim resolves only when a micro-batch has
+    * queries to serve: a batch of malformed rows must not fail the
+    * stream while the index is still being built or a sidecar swap is
+    * in flight. */
+  private def dimMatching[Q](job: String, spark: SparkSession,
+      annIndexDir: String, qs: Seq[(Long, Q)])(vec: Q => Seq[Double])
+      (probe: Seq[(Long, Q)] => DataFrame): (Int, Option[DataFrame]) = {
+    val expectDim = Ann.dim(spark, annIndexDir)
+    val (good, badDim) = qs.partition(q => vec(q._2).size == expectDim)
+    if (badDim.nonEmpty)
+      log.warn(s"$job: skipping ${badDim.size} queries with dim != index " +
+        s"dim $expectDim (qids ${badDim.take(5).map(_._1).mkString(", ")}" +
+        s"${if (badDim.size > 5) ", …" else ""})")
+    (good.size, if (good.isEmpty) None else Some(probe(good)))
+  }
+
+  /** The ANN serving kind: a micro-batch of (qid, vec) queries is ONE
+    * batched [[Ann.probe]] of a built, static index (lsh, ivf or ivfpq —
+    * the family read from the layout; `method` is only checked against
+    * it, here). Probe selection runs at zero Spark jobs against the
+    * memoized sidecars (occupancy histogram / centroids), and the probe
+    * is one pruned union read. `tuning` is the method's query-time knob
+    * (lsh → minCandidates, ivf → nprobe; under `minCos`, lsh →
+    * slackBits), defaulting to the recall-gated defaults.
+    *
+    *  - `minCos = Some(t)`: RANGE serving — every id at `cos >= t`
+    *    instead of the top-k (k is ignored). ivfpq thresholds the
+    *    RECONSTRUCTED cosine unless `refine` upgrades it to an exact one.
+    *  - `filterDfl`: a DFL boolean over the index's columns (id + the
+    *    metadata the build carried), routed to the widening filtered
+    *    batch probe. Top-k only: range + filter is rejected rather than
+    *    the filter silently ignored. Compiled AND resolved against the
+    *    index layout here, so a malformed expression or a column the
+    *    index never carried fails job construction, not the first
+    *    non-empty micro-batch hours in.
+    *  - `refine = Some(n)`: the FAISS refine pattern, ivfpq-only (float
+    *    layouts already score true cosines) — compressed ADC nominates,
+    *    true cosines from the keepVectors float sidecar rerank (top-k,
+    *    filtered) or verify the threshold exactly (range, 0.05·n
+    *    loosened nomination). A sidecar-less index rejects loudly. */
+  private[streaming] def annKind(spark: SparkSession, vecCol: String,
+      indexDir: String, k: Int, method: String, tuning: Option[Int],
+      minCos: Option[Double], filterDfl: Option[String],
+      refine: Option[Int]): ServeKind[Seq[Double]] = {
+    Ann.checkMethod(spark, indexDir, method, "annServe")
     refine.foreach { f =>
       require(f >= 1, s"annServe: refine factor must be >= 1, got $f")
       require(!Ann.storesFloats(method),
         "annServe: --refine applies only to ivfpq (float layouts " +
           "already rank by true cosines)")
-      require(graft.llm.Pq.hasVectorSidecar(queries.sparkSession, indexDir),
+      require(graft.llm.Pq.hasVectorSidecar(spark, indexDir),
         s"annServe: --refine needs the float sidecar " +
           s"($indexDir/${graft.llm.Pq.vectorSidecarDir} is missing) — " +
           "build with keepVectors (--keep-vectors)")
     }
-    // FILTERED serving: `filterDfl` is a DFL boolean over the index's
-    // columns (id + whatever metadata the build carried) — each
-    // micro-batch routes to the batch FILTERED probes, whose per-query
-    // widening answers the filtered-recall caveat. Range + filter is
-    // not offered: the range probes would need the metadata columns in
-    // their answer shape to compose; reject loudly rather than silently
-    // ignore the filter. Compiled EAGERLY so a malformed expression
-    // fails job construction, not the first micro-batch.
     require(filterDfl.isEmpty || minCos.isEmpty,
       "annServe: --filter composes with top-k serving only, not --min-cos range")
-    val pred = filterDfl.map(graft.dfl.DflFrame.indexPredicate)
-    // ...and RESOLVED eagerly against the index layout (the bm25/hybrid
-    // posture): a filter naming a column the index never carried fails
-    // here, not at the first non-empty micro-batch hours in
-    pred.foreach(p => queries.sparkSession.read
+    val pred = filterDfl.map(DflFrame.indexPredicate)
+    pred.foreach(p => spark.read
       .parquet(s"$indexDir/vectors").filter(p).queryExecution.analyzed)
-    // RANGE serving: `minCos = Some(t)` answers every id at `cos >= t`
-    // instead of the top-k (k is ignored). Each micro-batch is ONE
-    // batched pruned probe — a union-of-Hamming-balls (lsh) or
-    // union-of-nprobe-lists (ivf, ivfpq) read, per-query membership
-    // filters keeping batch ≡ per-query range probes. `tuning`
-    // re-keys to the range probes' knob: lsh → slackBits, ivf → nprobe
-    // (as the DFL annRange stage).
     minCos.foreach(t => require(t > -1.0 && t <= 1.0,
       s"annServe: minCos must be in (-1, 1], got $t"))
-    // `options` passes writeStream options through — set
-    // `checkpointLocation` for a recoverable serving stream (without it a
-    // restart re-reads and re-answers every historical query); `trigger`
-    // tunes micro-batch cadence.
-    val writer0 = queries.writeStream.options(options)
-    val writer = trigger.fold(writer0)(writer0.trigger)
-    writer.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // the queries of a micro-batch COLLECT to the driver (they are
-        // the small side — the corpus never moves), so an unbounded
-        // query file must fail LOUDLY before the collect, not OOM the
-        // driver: the guard is one LIMIT-BOUNDED count (≤ max+1 rows read)
-        guardBatchSize(batch, batchId, maxQueriesPerBatch, "annServe")
-        val batchT0 = System.nanoTime()
-        if (metricsSink.isDefined) graft.llm.ProbeStats.begin()
-        // A SERVING stream must not die on one bad record (every other
-        // streaming operator here tolerates malformed rows too): null or
-        // non-integral qids and null / null-element vectors are SKIPPED.
-        val queryRows = batch.select(col(qidCol), col(vecCol)).collect()
-        val qs = queryRows.iterator
-          .flatMap { r =>
-            // the shared malformed-row tolerance (coerceQidValue/
-            // coerceVecValue — fractional qids and non-numeric vector
-            // elements SKIP with a warning, never kill the stream)
-            val qid = if (r.isNullAt(0)) None else coerceQidValue(r.get(0))
-            val vec = if (r.isNullAt(1)) None else coerceVecValue(r.get(1))
-            val q = qid.zip(vec)
-            if (q.isEmpty)
-              log.warn(s"annServe: skipping malformed query row $r")
-            q
-          }.toSeq
-          // a qid duplicated WITHIN one micro-batch would duplicate (or,
-          // with different vectors, silently merge) its answer rows —
-          // first occurrence wins, the rest are skipped with a warning
-          // (the bm25Serve posture)
-          .foldLeft((scala.collection.mutable.Set.empty[Long],
-            Seq.newBuilder[(Long, Seq[Double])])) { case ((seen, acc), q) =>
-            if (seen.add(q._1)) acc += q
-            else log.warn(s"annServe: skipping duplicate qid ${q._1} " +
-              "within one batch")
-            (seen, acc)
-          }._2.result()
-        // group by dimension and validate each group against the index's
-        // OWN dim (memoized sidecar meta — zero Spark jobs warm) BEFORE
-        // probing: a wrong-dim group is skipped with a warning so it can
-        // never poison the well-formed queries, while every OTHER probe
-        // failure (missing index, genuine bug) PROPAGATES and fails the
-        // stream — a blanket exception catch here would silently drop
-        // real faults along with the bad dims. The dim resolves ONLY when
-        // a probe would actually run: a batch with zero valid queries
-        // must not fail the stream while the index is still being built
-        // or a sidecar swap is momentarily in flight.
-        var served = 0
-        if (qs.nonEmpty) {
-          def serveBatch(): Unit = {
-            served = 0 // reset on retry — the counter reports ONE attempt
-            // ...and so does the telemetry: without the re-begin, a
-            // stale-read retry would double-record every probe leg
-            if (metricsSink.isDefined) graft.llm.ProbeStats.begin()
-            val expectDim = Ann.dim(batch.sparkSession, indexDir)
-            qs.groupBy(_._2.size).foreach { case (dim, group) =>
-              if (dim != expectDim)
-                log.warn(s"annServe: skipping ${group.size} queries with dim " +
-                  s"$dim != index dim $expectDim (qids " +
-                  s"${group.take(5).map(_._1).mkString(", ")}${if (group.size > 5) ", …" else ""})")
-              else {
-                // ONE probe per dim group; the family comes from the
-                // index layout. Range thresholds the ivfpq RECONSTRUCTED
-                // cosine unless --refine N upgrades it to an exact
-                // threshold (0.05·N loosened nomination, true-cosine
-                // verify from the sidecar)
-                val answer = Ann.probe(Ann.Dir(batch.sparkSession, indexDir),
-                  Ann.Probe(Ann.Batch(group),
-                    minCos.fold[Ann.Bound](Ann.TopK(k))(Ann.Range(_)),
-                    pred, tuning, refine))
-                served += group.size
-                sink(answer, batchId) // sink failures still surface — deliberately
-              }
-            }
-          }
-          serveRetryingStaleRead("annServe", batchId, indexDir,
-            metricsSink.isDefined)(serveBatch())
-        }
-        // metrics only when answers were actually sunk: the sidecar
-        // lands INSIDE the batch dir, so an all-malformed batch must not
-        // conjure an answer-less batch-N/ that dir-listing consumers
-        // would read as a committed (empty) answer batch
-        if (served > 0) metricsSink.foreach { ms =>
-          ms(ServeBatchMetrics(batchId, queryRows.length, served,
-            queryRows.length - served,
-            (System.nanoTime() - batchT0) / 1000000,
-            graft.llm.ProbeStats.end()))
-        }
-        else if (metricsSink.isDefined) { graft.llm.ProbeStats.end(); () }
-    }.start()
+    val bound = minCos.fold[Ann.Bound](Ann.TopK(k))(Ann.Range(_))
+    ServeKind[Seq[Double]]("annServe", indexDir,
+      Seq(StructField(vecCol, ArrayType(DoubleType))),
+      r => field(r, 1)(coerceVecValue),
+      (spark, _, qs) => dimMatching("annServe", spark, indexDir, qs)(identity) {
+        good => Ann.probe(Ann.Dir(spark, indexDir),
+          Ann.Probe(Ann.Batch(good), bound, pred, tuning, refine))
+      })
   }
 
-  /** The PRODUCT surface of [[annServe]]: a fully configured ANN serving
-    * JOB — a watched directory of query files in, (qid, id, cos) answer
-    * files out — the shape a catalog datastore pair or the `serve-ann`
-    * CLI verb ([[graft.cli.ServeCli]]) configures.
-    *
-    *  - `queriesUri`: a directory Structured Streaming watches; every new
-    *    jsonl/csv/tsv file of (qidCol, vecCol) rows is a micro-batch of
-    *    queries (schema inferred from the files present at start).
-    *  - `outUri`: each micro-batch's answers land as
-    *    `batch-<id>/part-*` (jsonl or parquet) — read the whole answer
-    *    stream back with `spark.read.json(s"$outUri/batch-*")`. Writes are
-    *    keyed by batch id with `mode("overwrite")`, so a batch REPLAYED
-    *    after a crash overwrites its own output instead of duplicating
-    *    it: exactly-once answers end to end.
-    *  - `checkpoint`: the streaming checkpoint — a RESTARTED job (same
-    *    checkpoint) resumes with the query files that arrived while it
-    *    was down and never re-answers files it already committed.
-    *  - `once = true` drains the currently-available queries and stops
-    *    (the cron / drive-by shape); `false` serves until stopped.
-    *
-    * The index must outlive the stream (single-writer rebuild contract);
-    * malformed query rows and wrong-dim groups are skipped with warnings
-    * exactly as in [[annServe]]. */
+  /** Streaming ANN serving: answer a STREAM of query vectors against a
+    * built, static index (the [[annKind]] answer over the
+    * [[serveBatches]] loop). `sink` receives each micro-batch's
+    * (qid, id, cos) answer frame with the micro-batch id — the hook an
+    * idempotent sink needs: a stream restarted from its checkpoint may
+    * REPLAY the last uncommitted batch, and a stale-read retry sinks a
+    * batch again, so a sink that writes keyed by batchId (e.g.
+    * `mode("overwrite")` into a `batch-<id>` dir, as [[annServeJob]]
+    * does) turns that at-least-once delivery into exactly-once output.
+    * `options` passes writeStream options through — set
+    * `checkpointLocation` for a recoverable serving stream (without it a
+    * restart re-reads and re-answers every historical query); `trigger`
+    * tunes micro-batch cadence. */
+  def annServeBatches(queries: DataFrame, qidCol: String, vecCol: String,
+               indexDir: String, k: Int, method: String = "lsh",
+               tuning: Option[Int] = None,
+               options: Map[String, String] = Map.empty,
+               trigger: Option[Trigger] = None,
+               minCos: Option[Double] = None,
+               filterDfl: Option[String] = None,
+               maxQueriesPerBatch: Int = defaultMaxQueriesPerBatch,
+               metricsSink: Option[ServeBatchMetrics => Unit] = None,
+               refine: Option[Int] = None)
+              (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    serveBatches(queries, qidCol,
+      annKind(queries.sparkSession, vecCol, indexDir, k, method, tuning,
+        minCos, filterDfl, refine),
+      options, trigger, maxQueriesPerBatch, metricsSink)(sink)
+
+  /** The `serve-ann` job ([[graft.cli.ServeCli]]): (qidCol, vecCol)
+    * query files in, (qid, id, cos) answer files out — the
+    * [[serveJob]] shell over the [[annKind]] answer. */
   def annServeJob(spark: SparkSession, queriesUri: String, format: String,
                   qidCol: String, vecCol: String, indexDir: String,
                   method: String, k: Int, tuning: Option[Int],
@@ -1121,246 +1170,85 @@ object StreamRunner {
                   filterDfl: Option[String] = None,
                   maxQueriesPerBatch: Int = defaultMaxQueriesPerBatch,
                   refine: Option[Int] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(outFormat == "jsonl" || outFormat == "parquet",
-      s"annServeJob: output format must be jsonl or parquet, got $outFormat")
-    // csv/tsv would carry the query vector as a STRING column, which the
-    // probe extraction cannot interpret — only array-typed formats serve
-    require(format == "jsonl" || format == "parquet",
-      s"annServeJob: queries format must be jsonl or parquet, got $format")
-    // jsonl gets the canonical explicit schema (vector numbers parse as
-    // doubles), so a queries dir that is still EMPTY at job start works —
-    // the cron/fresh-host shape. qid reads as STRING — the JSON reader
-    // renders both `123` and `"123"` into it, and the probe extraction's
-    // toLongOption accepts either (a LongType field would silently
-    // null-skip quoted ids that schema inference previously served).
-    // Parquet keeps file inference (query files define their own
-    // id/vector types, which the probe extraction normalizes), so it
-    // needs at least one file present at start.
-    val schema =
-      if (format == "jsonl") Some(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(qidCol,
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(vecCol,
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))))
-      else None
-    val queries = readStream(spark, queriesUri, format, schema)
-    val q = annServeBatches(queries, qidCol, vecCol, indexDir, k, method,
-      tuning, options = Map("checkpointLocation" -> checkpoint),
-      minCos = minCos, filterDfl = filterDfl,
-      maxQueriesPerBatch = maxQueriesPerBatch,
-      metricsSink = Some(m => writeBatchMetrics(spark, outUri, m)),
-      refine = refine) {
-      (answer, batchId) =>
-        val w = answer.write.mode("overwrite")
-        if (outFormat == "parquet") w.parquet(s"$outUri/batch-$batchId")
-        else w.json(s"$outUri/batch-$batchId")
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    serveJob("annServeJob", spark, queriesUri, format, qidCol, outUri,
+      outFormat, checkpoint, once, maxQueriesPerBatch) {
+      annKind(spark, vecCol, indexDir, k, method, tuning, minCos, filterDfl,
+        refine)
     }
-    if (once) {
-      try q.processAllAvailable() finally q.stop()
-    }
-    q
-  }
 
-  /** Streaming LEXICAL serving — the BM25 twin of [[annServe]]: answer
-    * a STREAM of term queries against a built, static
-    * [[graft.llm.Retrieval.bm25Build]] inverted index. Each micro-batch
-    * becomes ONE [[graft.llm.Retrieval.probe]] of a query batch: the
-    * queries collect to the driver (bounded by the micro-batch — they
-    * are a few strings), and the probe is one posting read pruned to
-    * the union of the batch's term bands; the corpus is never touched.
-    * `termsCol` may hold a whitespace-separated string or an array of
-    * strings. Malformed rows (null/fractional qid, null/empty terms)
-    * are SKIPPED with a warning — a serving stream must not die on one
-    * bad record — while genuine probe failures propagate. A probe that
-    * dies on FileNotFound mid-scan raced a maintenance rewrite
-    * ([[graft.llm.Retrieval.bm25Compact]]'s atomic dir swap) and is
-    * re-resolved ([[serveRetryingStaleRead]], shared with annServe). The
-    * index must outlive the stream (single-writer rebuild contract). */
-  def bm25ServeBatches(queries: DataFrame, qidCol: String, termsCol: String,
-               indexDir: String, k: Int, k1: Double = 1.2, b: Double = 0.75,
-               options: Map[String, String] = Map.empty,
-               trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-               filterDfl: Option[String] = None,
-               maxQueriesPerBatch: Int = defaultMaxQueriesPerBatch,
-               metricsSink: Option[ServeBatchMetrics => Unit] = None)
-              (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+  /** The LEXICAL serving kind: a micro-batch of (qid, terms) queries is
+    * ONE [[graft.llm.Retrieval.probe]] of a query batch against a built,
+    * static [[graft.llm.Retrieval.bm25Build]] inverted index — one
+    * posting read pruned to the union of the batch's term bands; the
+    * corpus is never touched. Terms may be a whitespace-separated string
+    * or an array of strings (a jsonl JSON array arrives as its raw text
+    * and is parsed back). `filterDfl` is a DFL boolean over the index's
+    * metadata columns (bm25Build's metaCols), routed to the filtered
+    * batch probe with corpus-global statistics; compiled and resolved
+    * against the postings schema here. */
+  private[streaming] def bm25Kind(spark: SparkSession, termsCol: String,
+      indexDir: String, k: Int, k1: Double, b: Double,
+      filterDfl: Option[String]): ServeKind[Seq[String]] = {
     require(k > 0, s"bm25Serve: k must be positive, got $k")
-    require(maxQueriesPerBatch > 0,
-      s"bm25Serve: maxQueriesPerBatch must be positive, got $maxQueriesPerBatch")
-    // FILTERED serving: a DFL boolean over the index's metadata columns
-    // (bm25Build's metaCols), routed to the filtered batch probe —
-    // corpus-global statistics, the annServe --filter posture. Compiled
-    // AND resolved against the index's postings schema EAGERLY, so a
-    // malformed expression OR a column the index never carried fails
-    // job construction, not the first non-empty micro-batch hours in.
-    val pred = filterDfl.map(graft.dfl.DflFrame.indexPredicate)
-    pred.foreach(p => queries.sparkSession.read
+    val pred = filterDfl.map(DflFrame.indexPredicate)
+    pred.foreach(p => spark.read
       .parquet(s"$indexDir/postings").filter(p).queryExecution.analyzed)
-    val writer0 = queries.writeStream.options(options)
-    val writer = trigger.fold(writer0)(writer0.trigger)
-    writer.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // bounded-collect guard — see annServeBatches
-        guardBatchSize(batch, batchId, maxQueriesPerBatch, "bm25Serve")
-        val batchT0 = System.nanoTime()
-        if (metricsSink.isDefined) graft.llm.ProbeStats.begin()
-        val queryRows = batch.select(col(qidCol), col(termsCol)).collect()
-        val qsAll = queryRows.iterator
-          .flatMap { r =>
-            // the shared malformed-row tolerance: fractional qids skip
-            // (never merge two queries), string-or-array terms both
-            // parse (a jsonl JSON array arrives as raw text)
-            val qid =
-              if (r.isNullAt(0)) None else coerceQidValue(r.get(0))
-            val terms =
-              if (r.isNullAt(1)) None else coerceTermsValue(r.get(1))
-            if (qid.isEmpty || terms.isEmpty)
-              log.warn(s"bm25Serve: skipping malformed query row $r")
-            qid.zip(terms)
-          }.toSeq
-        // a qid duplicated WITHIN one micro-batch would double-count its
-        // scores in the batch probe (the probe rejects duplicates) —
-        // first occurrence wins, the rest are skipped with a warning,
-        // the malformed-row tolerance
-        val qs = {
-          val seen = scala.collection.mutable.Set.empty[Long]
-          qsAll.filter { case (qid, _) =>
-            val fresh = seen.add(qid)
-            if (!fresh) log.warn(
-              s"bm25Serve: skipping duplicate qid $qid within one batch")
-            fresh
-          }
-        }
-        if (qs.nonEmpty) {
-          def serveBatch(): Unit = {
-            // reset telemetry on retry — one attempt's legs only
-            if (metricsSink.isDefined) graft.llm.ProbeStats.begin()
-            sink(Retrieval.probe(Retrieval.Dir(batch.sparkSession, indexDir),
-              Retrieval.Probe(Retrieval.Batch(qs), k, pred, k1, b)), batchId)
-          }
-          serveRetryingStaleRead("bm25Serve", batchId, indexDir,
-            metricsSink.isDefined)(serveBatch())
-        }
-        // sidecar only when the batch dir exists (answers were sunk)
-        if (qs.nonEmpty) metricsSink.foreach { ms =>
-          ms(ServeBatchMetrics(batchId, queryRows.length, qs.size,
-            queryRows.length - qs.size,
-            (System.nanoTime() - batchT0) / 1000000,
-            graft.llm.ProbeStats.end()))
-        }
-        else if (metricsSink.isDefined) { graft.llm.ProbeStats.end(); () }
-    }.start()
+    ServeKind[Seq[String]]("bm25Serve", indexDir,
+      Seq(StructField(termsCol, StringType)),
+      r => field(r, 1)(coerceTermsValue),
+      (spark, _, qs) => (qs.size, Some(Retrieval.probe(
+        Retrieval.Dir(spark, indexDir),
+        Retrieval.Probe(Retrieval.Batch(qs), k, pred, k1, b)))))
   }
 
-  /** The PRODUCT surface of [[bm25ServeBatches]] — the `serve-bm25` CLI
-    * job ([[graft.cli.ServeBm25Cli]]), mirroring [[annServeJob]]: a
-    * watched directory of (qid, terms) query files in, (qid, id, score,
-    * rnk) answer files out, each micro-batch's answers landing as
-    * `batch-<id>/part-*` under `mode("overwrite")` so a replayed batch
-    * overwrites its own output (exactly-once answers end to end), and a
-    * restart from `checkpoint` never re-answers committed files.
-    * jsonl queries read under an explicit (string, string) schema — an
-    * empty queries dir at job start works, and both `123` and `"123"`
-    * qids parse. jsonl terms take EITHER shape: a whitespace-separated
-    * string (`{"terms":"spark stream"}`) or a JSON array
-    * (`{"terms":["spark","stream"]}`) — the array arrives as its raw
-    * text under the string schema and is parsed back, matching the
-    * parquet path's array<string> shape. `once = true` drains the
-    * available queries and stops (the cron shape). */
+  /** The `serve-bm25` job ([[graft.cli.ServeBm25Cli]]): (qid, terms)
+    * query files in, (qid, id, score, rnk) answer files out — the
+    * [[serveJob]] shell over the [[bm25Kind]] answer. */
   def bm25ServeJob(spark: SparkSession, queriesUri: String, format: String,
                    qidCol: String, termsCol: String, indexDir: String,
                    k: Int, outUri: String, outFormat: String,
                    checkpoint: String, once: Boolean,
                    k1: Double = 1.2, b: Double = 0.75,
                    filterDfl: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(outFormat == "jsonl" || outFormat == "parquet",
-      s"bm25ServeJob: output format must be jsonl or parquet, got $outFormat")
-    require(format == "jsonl" || format == "parquet",
-      s"bm25ServeJob: queries format must be jsonl or parquet, got $format")
-    val schema =
-      if (format == "jsonl") Some(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(qidCol,
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(termsCol,
-          org.apache.spark.sql.types.StringType))))
-      else None
-    val queries = readStream(spark, queriesUri, format, schema)
-    val q = bm25ServeBatches(queries, qidCol, termsCol, indexDir, k, k1, b,
-      options = Map("checkpointLocation" -> checkpoint),
-      filterDfl = filterDfl,
-      metricsSink = Some(m => writeBatchMetrics(spark, outUri, m))) {
-      (answer, batchId) =>
-        val w = answer.write.mode("overwrite")
-        if (outFormat == "parquet") w.parquet(s"$outUri/batch-$batchId")
-        else w.json(s"$outUri/batch-$batchId")
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    serveJob("bm25ServeJob", spark, queriesUri, format, qidCol, outUri,
+      outFormat, checkpoint, once, defaultMaxQueriesPerBatch) {
+      bm25Kind(spark, termsCol, indexDir, k, k1, b, filterDfl)
     }
-    if (once) {
-      try q.processAllAvailable() finally q.stop()
-    }
-    q
-  }
 
-  /** HYBRID streaming serving — the fused twin of [[annServeBatches]]
-    * and [[bm25ServeBatches]], closing the composite a deployment
-    * actually runs (lexical ⊕ semantic ⊕ RRF [⊕ MMR]) as ONE query
-    * stream: each micro-batch of `(qid, terms, qvec)` queries probes a
-    * BUILT BM25 inverted index AND a BUILT ANN index (lsh | ivf |
-    * ivfpq — the compressed layout serves the RRF-fused form, the
-    * 10⁹-vector deployment shape; `lambda` needs float vectors for the
-    * MMR penalty cosines, so ivfpq serves it only from a keepVectors
-    * build's vectors_f32 sidecar and rejects a codes-only index
-    * loudly), derives `(qid, id, rnk)` runs of `pool`
-    * candidates per leg, fuses per qid by reciprocal-rank fusion
-    * ([[graft.llm.Retrieval.rrfFuseBatch]] — every qid's slice ≡ the
-    * batch DFL `hybrid` stage's single-query fusion), and with `lambda`
-    * MMR-re-ranks each qid's fused pool using vectors fetched from the
-    * ANN index itself ([[graft.llm.Retrieval.mmrRerankBatch]] — one
-    * grouped bounded aggregate, never a per-query job).
-    *
-    * `filterDfl` routes BOTH legs to their FILTERED batch probes
-    * (corpus-global statistics; both indexes must carry the
-    * predicate's metadata columns — resolved EAGERLY against both
-    * layouts so a bad filter fails job construction). The query-side
-    * postures are [[annServeBatches]]'s verbatim: malformed rows skip
-    * with warnings, duplicate qids within a batch keep first, a
-    * wrong-dim group skips without poisoning the rest, the batch size
-    * guard fails loudly before the driver collect, and a mid-rewrite
-    * stale read is re-resolved ([[serveRetryingStaleRead]]). Exactly-once via
-    * batch-keyed sinks. Single-reader contract as the other serving
-    * jobs: rebuilds of either index belong to their owning writers. */
-  def hybridServeBatches(queries: DataFrame, qidCol: String,
-               termsCol: String, vecCol: String,
-               bm25IndexDir: String, annIndexDir: String,
-               annMethod: String, k: Int, pool: Int,
-               lambda: Option[Double] = None,
-               k1: Double = 1.2, b: Double = 0.75,
-               tuning: Option[Int] = None,
-               options: Map[String, String] = Map.empty,
-               trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-               filterDfl: Option[String] = None,
-               maxQueriesPerBatch: Int = defaultMaxQueriesPerBatch,
-               metricsSink: Option[ServeBatchMetrics => Unit] = None,
-               refine: Option[Int] = None)
-              (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+  /** The HYBRID serving kind — lexical ⊕ semantic ⊕ RRF [⊕ MMR], the
+    * composite a deployment actually runs, as ONE query stream: each
+    * micro-batch of (qid, terms, vec) queries probes a BUILT BM25 index
+    * AND a BUILT ANN index (lsh | ivf | ivfpq), derives (qid, id, rnk)
+    * runs of `pool` candidates per leg, fuses them per qid by
+    * reciprocal-rank fusion ([[graft.llm.Retrieval.rrfFuseBatch]] —
+    * every qid's slice ≡ the batch DFL `hybrid` stage's single-query
+    * fusion), and with `lambda` MMR-re-ranks each qid's fused pool with
+    * vectors fetched from the ANN index itself
+    * ([[graft.llm.Retrieval.mmrRerankBatch]] — one grouped bounded
+    * aggregate, never a per-query job). The MMR penalty cosines need
+    * FLOAT vectors: an ivfpq index serves them only from a keepVectors
+    * build's vectors_f32 sidecar and rejects `lambda` loudly without one.
+    * `refine` is the [[annKind]] contract for the semantic leg (pool×n
+    * nomination, exact rerank). `filterDfl` routes BOTH legs to their
+    * filtered batch probes; both indexes must carry the predicate's
+    * columns, resolved against both layouts here. `annMethod` must match
+    * the ANN dir's self-described layout and the BM25 dir must be a bm25
+    * layout — a mismatch fails job construction with a sentence instead
+    * of every micro-batch with an opaque read error. */
+  private[streaming] def hybridKind(spark: SparkSession, termsCol: String,
+      vecCol: String, bm25IndexDir: String, annIndexDir: String,
+      annMethod: String, k: Int, pool: Int, lambda: Option[Double],
+      k1: Double, b: Double, tuning: Option[Int], filterDfl: Option[String],
+      refine: Option[Int]): ServeKind[(Seq[String], Seq[Double])] = {
     val annFloats = Ann.storesFloats(annMethod)
     require(k > 0, s"hybridServe: k must be positive, got $k")
     require(pool >= k, s"hybridServe: pool ($pool) must be >= k ($k)")
     lambda.foreach(l => require(l >= 0.0 && l <= 1.0,
       s"hybridServe: lambda must be in [0,1], got $l"))
-    // the MMR penalty cosines need FLOAT vectors — an ivfpq layout
-    // stores m-byte codes, so the diversified form needs the opt-in
-    // float sidecar (keepVectors): candidate vectors then come from
-    // answer-sized id-joins against vectors_f32, exact MMR at probe-
-    // priced reads. Without the sidecar the compressed index serves the
-    // RRF-fused form only and rejects --lambda loudly instead of
-    // silently reconstructing approximate vectors from codes.
     require(lambda.isEmpty || annFloats ||
-        graft.llm.Pq.hasVectorSidecar(queries.sparkSession, annIndexDir),
+        graft.llm.Pq.hasVectorSidecar(spark, annIndexDir),
       "hybridServe: --lambda (MMR) needs float vectors; this ivfpq " +
         "index carries no vectors_f32 sidecar — build it with " +
         "keepVectors (--keep-vectors), or use a float layout (lsh | ivf)")
@@ -1369,187 +1257,87 @@ object StreamRunner {
     val mmrVectorsDir =
       if (annFloats) s"$annIndexDir/vectors"
       else s"$annIndexDir/${graft.llm.Pq.vectorSidecarDir}"
-    require(maxQueriesPerBatch > 0,
-      s"hybridServe: maxQueriesPerBatch must be positive, got $maxQueriesPerBatch")
-    // REFINED semantic leg (the annServe --refine contract): compressed
-    // nomination at pool×refine, true-cosine rerank from the keepVectors
-    // sidecar — the fused pool then ranks on exact cosines. ivfpq-only;
-    // composes with --filter-dfl (the filtered widening loop nominates
-    // at pool×refine per round, same exact-rerank finalize).
     refine.foreach { f =>
       require(f >= 1, s"hybridServe: refine factor must be >= 1, got $f")
       require(!annFloats,
         "hybridServe: --refine applies only to ivfpq (float layouts " +
           "already rank by true cosines)")
-      require(graft.llm.Pq.hasVectorSidecar(queries.sparkSession, annIndexDir),
+      require(graft.llm.Pq.hasVectorSidecar(spark, annIndexDir),
         s"hybridServe: --refine needs the float sidecar " +
           s"($annIndexDir/${graft.llm.Pq.vectorSidecarDir} is missing) — " +
           "build with keepVectors (--keep-vectors)")
     }
-    // `annMethod` must MATCH the dir's self-described layout: a mismatch
-    // would otherwise fail every micro-batch with an opaque meta/parquet
-    // read error deep in the probe, instead of failing job construction
-    // with a sentence (the DFL hybridProbe stage self-dispatches via
-    // indexKind; a serving job pins the method in its launch config, so
-    // it verifies instead)
-    Ann.checkMethod(queries.sparkSession, annIndexDir, annMethod, "hybridServe")
-    graft.llm.Similarity.indexKind(queries.sparkSession, bm25IndexDir)
+    Ann.checkMethod(spark, annIndexDir, annMethod, "hybridServe")
+    graft.llm.Similarity.indexKind(spark, bm25IndexDir)
       .foreach(kind => require(kind == "bm25",
         s"hybridServe: $bm25IndexDir is a built '$kind' index, not bm25"))
-    val pred = filterDfl.map(graft.dfl.DflFrame.indexPredicate)
-    // eager resolution against BOTH index layouts — a predicate column
-    // either index never carried fails here, not hours into the stream
+    val pred = filterDfl.map(DflFrame.indexPredicate)
     pred.foreach { p =>
-      queries.sparkSession.read
+      spark.read
         .parquet(s"$bm25IndexDir/postings").filter(p).queryExecution.analyzed
-      queries.sparkSession.read
+      spark.read
         .parquet(s"$annIndexDir/vectors").filter(p).queryExecution.analyzed
     }
-    val writer0 = queries.writeStream.options(options)
-    val writer = trigger.fold(writer0)(writer0.trigger)
-    writer.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        guardBatchSize(batch, batchId, maxQueriesPerBatch, "hybridServe")
-        val batchT0 = System.nanoTime()
-        if (metricsSink.isDefined) graft.llm.ProbeStats.begin()
-        val queryRows = batch.select(col(qidCol), col(termsCol), col(vecCol))
-          .collect()
-        val qsAll = queryRows.iterator
-          .flatMap { r =>
-            val qid = if (r.isNullAt(0)) None else coerceQidValue(r.get(0))
-            val terms = if (r.isNullAt(1)) None else coerceTermsValue(r.get(1))
-            val vec = if (r.isNullAt(2)) None else coerceVecValue(r.get(2))
-            val q = for (i <- qid; t <- terms; v <- vec) yield (i, t, v)
-            if (q.isEmpty)
-              log.warn(s"hybridServe: skipping malformed query row $r")
-            q
-          }.toSeq
-        val qs = {
-          val seen = scala.collection.mutable.Set.empty[Long]
-          qsAll.filter { q =>
-            val fresh = seen.add(q._1)
-            if (!fresh) log.warn(
-              s"hybridServe: skipping duplicate qid ${q._1} within one batch")
-            fresh
-          }
-        }
-        var served = 0
-        if (qs.nonEmpty) {
-          val spark = batch.sparkSession
-          def computeAnswer(): Option[DataFrame] = {
-            served = 0 // reset on retry — the counter reports ONE attempt
-            // ...and the telemetry with it (no double-recorded legs)
-            if (metricsSink.isDefined) graft.llm.ProbeStats.begin()
-            val expectDim = Ann.dim(spark, annIndexDir)
-            val (good, badDim) = qs.partition(_._3.size == expectDim)
-            served = good.size
-            if (badDim.nonEmpty)
-              log.warn(s"hybridServe: skipping ${badDim.size} queries with " +
-                s"dim != index dim $expectDim (qids " +
-                s"${badDim.take(5).map(_._1).mkString(", ")}${if (badDim.size > 5) ", …" else ""})")
-            if (good.isEmpty) return None
-            val lex = Retrieval.probe(Retrieval.Dir(spark, bm25IndexDir),
-                Retrieval.Probe(Retrieval.Batch(good.map(q => q._1 -> q._2)),
-                  pool, pred, k1, b))
-              .select("qid", "id", "rnk")
-            val semCos = Ann.probe(Ann.Dir(spark, annIndexDir),
-              Ann.Probe(Ann.Batch(good.map(q => q._1 -> q._3)),
+    def mmr(spark: SparkSession, batchId: Long, fused: DataFrame,
+            l: Double): DataFrame = {
+      // the fused pool is serving-sized BY CONSTRUCTION (≤ pool×queries
+      // rows), so it COLLECTS once — re-deriving it lazily would re-run
+      // both index probes for every consumer — and its ids push into the
+      // vectors read via Similarity.candidateVectors (id-In pruned — a
+      // broadcast join alone would re-read the ENTIRE corpus-sized
+      // vectors/sidecar parquet per micro-batch)
+      import spark.implicits._
+      val poolRows = fused.select("qid", "id", "score").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      val vecs = graft.llm.Similarity.candidateVectors(spark,
+        mmrVectorsDir, poolRows.map(_._2).distinct)
+      val candsDf = vecs.join(broadcast(poolRows.toDF("qid", "id", "score")),
+        Seq("id"))
+      // serving-sized (pool rows that HAVE vectors): collect ONCE so the
+      // missing-count and the MMR input share one vectors scan
+      val candRows = candsDf.collect()
+      // the two indexes are separately-appendable artifacts: a candidate
+      // the BM25 index ranked but the ANN index does not yet carry has no
+      // vector and cannot be diversified — observable, never silent
+      val missing = poolRows.size - candRows.length
+      if (missing > 0)
+        log.warn(s"hybridServe: batch $batchId dropped $missing fused " +
+          s"candidate(s) with no vector in $annIndexDir (BM25/ANN index " +
+          "contents diverge — run the ANN ingest to catch up)")
+      Retrieval.mmrRerankBatch(
+        graft.llm.Similarity.localFrame(spark, candRows, candsDf.schema),
+        "qid", "id", "score", "v", k, l)
+    }
+    ServeKind[(Seq[String], Seq[Double])]("hybridServe",
+      s"$bm25IndexDir | $annIndexDir",
+      Seq(StructField(termsCol, StringType),
+        StructField(vecCol, ArrayType(DoubleType))),
+      r => field(r, 1)(coerceTermsValue).zip(field(r, 2)(coerceVecValue)),
+      (spark, batchId, qs) =>
+        dimMatching("hybridServe", spark, annIndexDir, qs)(_._2) { good =>
+          val lex = Retrieval.probe(Retrieval.Dir(spark, bm25IndexDir),
+              Retrieval.Probe(Retrieval.Batch(good.map(q => q._1 -> q._2._1)),
+                pool, pred, k1, b))
+            .select("qid", "id", "rnk")
+          val semW = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
+          val sem = Ann.probe(Ann.Dir(spark, annIndexDir),
+              Ann.Probe(Ann.Batch(good.map(q => q._1 -> q._2._2)),
                 Ann.TopK(pool), pred, tuning, refine))
-            val semW = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
-            val sem = semCos
-              .withColumn("rnk", row_number().over(semW).cast("long"))
-              .select("qid", "id", "rnk")
-            val fused = graft.llm.Retrieval.rrfFuseBatch(Seq(lex, sem),
-              if (lambda.isDefined) pool else k)
-            val answer = lambda match {
-              case None => fused
-              case Some(l) =>
-                // the MMR penalty cosines need float vectors: fetch the
-                // fused candidates' rows from the ANN index itself. The
-                // pool is serving-sized BY CONSTRUCTION (≤ pool×queries
-                // rows), so it COLLECTS once — re-deriving it lazily
-                // would re-run both index probes for every consumer —
-                // and re-materializes as a local frame for the ONE
-                // vectors-scan join.
-                import spark.implicits._
-                val poolRows = fused.select("qid", "id", "score").collect()
-                  .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-                  .toSeq
-                val poolDf = poolRows.toDF("qid", "id", "score")
-                // the collected pool's ids push into the vectors read
-                // via Similarity.candidateVectors (id-In pruned — a
-                // broadcast join alone would re-read the ENTIRE
-                // corpus-sized vectors/sidecar parquet per micro-batch)
-                val vecs = graft.llm.Similarity.candidateVectors(spark,
-                  mmrVectorsDir, poolRows.map(_._2).distinct)
-                val candsDf = vecs.join(broadcast(poolDf), Seq("id"))
-                // serving-sized (pool rows that HAVE vectors): collect
-                // ONCE so the missing-count and the MMR input share one
-                // vectors scan
-                val candRows = candsDf.collect()
-                // the two indexes are separately-appendable artifacts: a
-                // candidate the BM25 index ranked but the ANN index does
-                // not yet carry has no vector and cannot be diversified.
-                // That coverage change must be OBSERVABLE (every other
-                // degraded input here warns), never silent.
-                val missing = poolRows.size - candRows.length
-                if (missing > 0)
-                  log.warn(s"hybridServe: batch $batchId dropped " +
-                    s"$missing fused candidate(s) with no vector in " +
-                    s"$annIndexDir (BM25/ANN index contents diverge — " +
-                    "run the ANN ingest to catch up)")
-                graft.llm.Retrieval.mmrRerankBatch(
-                  graft.llm.Similarity.localFrame(spark, candRows,
-                    candsDf.schema),
-                  "qid", "id", "score", "v", k, l)
-            }
-            // MATERIALIZE inside the retry scope: the probe frames are
-            // lazy over index files, so a mid-rewrite FileNotFound would
-            // otherwise surface during the SINK's execution — after a
-            // partial write, where a whole-serveBatch retry would invoke
-            // the caller's sink twice for one batchId (a contract the
-            // sink never signed). Answers are serving-sized (≤ k×queries
-            // rows) by construction, so the collect is driver-safe.
-            val rows = answer.collect()
-            Some(graft.llm.Similarity.localFrame(spark, rows, answer.schema))
-          }
-          val answer = serveRetryingStaleRead("hybridServe", batchId,
-            s"$bm25IndexDir | $annIndexDir", metricsSink.isDefined)(computeAnswer())
-          // exactly ONE sink call per batch, over a LOCAL frame — no
-          // index read can fail under the caller's write (a sink failure
-          // still discards the begin()'d buffer before propagating)
-          try answer.foreach(a => sink(a, batchId))
-          catch {
-            case t: Throwable =>
-              if (metricsSink.isDefined) { graft.llm.ProbeStats.end(); () }
-              throw t
-          }
-        }
-        // sidecar only when the batch dir exists (answers were sunk)
-        if (served > 0) metricsSink.foreach { ms =>
-          ms(ServeBatchMetrics(batchId, queryRows.length, served,
-            queryRows.length - served,
-            (System.nanoTime() - batchT0) / 1000000,
-            graft.llm.ProbeStats.end()))
-        }
-        else if (metricsSink.isDefined) { graft.llm.ProbeStats.end(); () }
-    }.start()
+            .withColumn("rnk", row_number().over(semW).cast("long"))
+            .select("qid", "id", "rnk")
+          val fused = Retrieval.rrfFuseBatch(Seq(lex, sem),
+            if (lambda.isDefined) pool else k)
+          lambda.fold(fused)(mmr(spark, batchId, fused, _))
+        })
   }
 
-  /** The PRODUCT surface of [[hybridServeBatches]] — the `serve-hybrid`
-    * CLI job ([[graft.cli.ServeHybridCli]]), mirroring [[annServeJob]] /
-    * [[bm25ServeJob]]: a watched directory of `(qid, terms, qvec)`
-    * query files in, fused `(qid, id, score[, mmr], rnk)` answer files
-    * out as `batch-<id>/part-*` under `mode("overwrite")` (exactly-once
-    * answers across crash replays), restartable from `checkpoint`.
-    * jsonl queries read under an explicit schema (qid string — both
-    * `123` and `"123"` parse; terms string — whitespace-separated OR a
-    * JSON array; vec array<double>), so an empty queries dir at job
-    * start works. Both indexes must already exist — bootstrap with
-    * [[graft.llm.Retrieval.ensure]] +
-    * [[graft.llm.Ann.ensure]] (the CLI's `--build-from`
-    * does). `once = true` drains the available queries and stops. */
+  /** The `serve-hybrid` job ([[graft.cli.ServeHybridCli]]): (qid, terms,
+    * vec) query files in, fused (qid, id, score[, mmr], rnk) answer files
+    * out — the [[serveJob]] shell over the [[hybridKind]] answer. Both
+    * indexes must already exist — bootstrap with
+    * [[graft.llm.Retrieval.ensure]] + [[graft.llm.Ann.ensure]] (the CLI's
+    * `--build-from` does). */
   def hybridServeJob(spark: SparkSession, queriesUri: String, format: String,
                      qidCol: String, termsCol: String, vecCol: String,
                      bm25IndexDir: String, annIndexDir: String,
@@ -1562,82 +1350,13 @@ object StreamRunner {
                      filterDfl: Option[String] = None,
                      maxQueriesPerBatch: Int = defaultMaxQueriesPerBatch,
                      refine: Option[Int] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(outFormat == "jsonl" || outFormat == "parquet",
-      s"hybridServeJob: output format must be jsonl or parquet, got $outFormat")
-    require(format == "jsonl" || format == "parquet",
-      s"hybridServeJob: queries format must be jsonl or parquet, got $format")
-    val schema =
-      if (format == "jsonl") Some(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(qidCol,
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(termsCol,
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(vecCol,
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))))
-      else None
-    val queries = readStream(spark, queriesUri, format, schema)
-    val q = hybridServeBatches(queries, qidCol, termsCol, vecCol,
-      bm25IndexDir, annIndexDir, annMethod, k, pool, lambda, k1, b, tuning,
-      options = Map("checkpointLocation" -> checkpoint),
-      filterDfl = filterDfl,
-      maxQueriesPerBatch = maxQueriesPerBatch,
-      metricsSink = Some(m => writeBatchMetrics(spark, outUri, m)),
-      refine = refine) {
-      (answer, batchId) =>
-        val w = answer.write.mode("overwrite")
-        if (outFormat == "parquet") w.parquet(s"$outUri/batch-$batchId")
-        else w.json(s"$outUri/batch-$batchId")
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    serveJob("hybridServeJob", spark, queriesUri, format, qidCol, outUri,
+      outFormat, checkpoint, once, maxQueriesPerBatch) {
+      hybridKind(spark, termsCol, vecCol, bm25IndexDir, annIndexDir,
+        annMethod, k, pool, lambda, k1, b, tuning, filterDfl, refine)
     }
-    if (once) {
-      try q.processAllAvailable() finally q.stop()
-    }
-    q
-  }
 
-  /** The INGEST counterpart of [[annServeJob]], closing the product
-    * loop "bulk build → streaming appends → streaming serving": a
-    * watched directory of corpus files (parquet/jsonl/csv/tsv rows of
-    * (idCol, vecCol)) whose every new file becomes a micro-batch
-    * appended to a LIVE index via [[graft.llm.Ann.append]] — one
-    * signature/assignment/encode pass over the NEW rows only, never a
-    * corpus rescan. The family is read from the index layout; `method`
-    * is checked against it at construction.
-    *
-    * EXACTLY-ONCE appends end to end: the checkpoint stops committed
-    * files from being re-read across restarts, and each batch's append
-    * id is `md5(checkpoint '#' batchId)` — stable across the REPLAY of
-    * the last uncommitted batch after a crash, so the append machinery's
-    * durable applied marker makes the replayed append a no-op (a fresh
-    * checkpoint gets fresh ids and can legitimately re-append). Appends
-    * keep the single-writer-per-index contract: run ONE ingest job per
-    * index dir, and rebuild/retrain only while it is stopped.
-    *
-    * The index must already exist — bootstrap with
-    * [[graft.llm.Ann.ensure]] (the `ingest-ann` CLI's
-    * `--build-from` does) so the stream appends against the bulk-built
-    * backfill. LSH appends reproduce a full rebuild exactly; IVF appends
-    * assign to frozen centroids (monitor drift via `ivfListStats`,
-    * retrain on growth).
-    *
-    * `compactEvery = n > 0` opens a MAINTENANCE SLOT after every n
-    * APPENDS since the last slot (empty batches don't count — the
-    * cadence is appends, not batch ids — and the count is durable
-    * under the checkpoint, so restarts and `--once` cron runs keep it):
-    * each append lands one part file per partition, so a
-    * long-running ingest otherwise grows probe read amplification
-    * without bound. In the slot the job normally runs
-    * [[graft.llm.Ann.compact]]; for an ivf (or keepVectors ivfpq) index
-    * with `retrainSkewFactor > 0` it first checks [[graft.llm.Similarity
-    * .ivfSkew]] and, past the factor, runs [[graft.llm.Ann.retrain]]
-    * INSTEAD (a retrain rewrites everything — compacting
-    * the same batch would be redundant) — closing the drift loop the
-    * frozen-centroid append otherwise leaves to ops. Maintenance inside
-    * `foreachBatch` is serialized with the appends (the job owns the
-    * index — exactly the single-writer window in-place rewrites
-    * require); both rewrites preserve the row multiset and the replay
-    * fences, so exactly-once holds across them. */
   /** Continuous corpus ingest — the streaming twin of the batch
     * `ingest-corpus` CLI: watch a directory for incoming corpus files
     * and, per micro-batch, (1) drop rows whose normalized fingerprint
@@ -1683,6 +1402,92 @@ object StreamRunner {
     q
   }
 
+  /** What a maintenance slot did: the action (`retrain` | `compact` |
+    * `none`), the skew it measured (ivf/ivfpq with a retrain factor) and
+    * the tombstones a compaction cleared. */
+  private final case class Maintenance(action: String = "none",
+                                       skew: Option[Double] = None,
+                                       tombstonesCleared: Long = 0L)
+
+  private def compacted(indexDir: String, batchId: Long,
+                        st: graft.llm.Similarity.CompactStats): Maintenance = {
+    log.info(s"compacted $indexDir after batch $batchId: " +
+      s"${st.filesBefore} -> ${st.filesAfter} data files" +
+      (if (st.tombstonesCleared > 0)
+         s", ${st.tombstonesCleared} tombstones cleared"
+       else ""))
+    Maintenance("compact", tombstonesCleared = st.tombstonesCleared)
+  }
+
+  /** The ingest micro-batch loop of every index family. `lend` hands the
+    * loop a micro-batch's rows to append for the span of the call (ann:
+    * the batch itself; bm25: ids cast to long, uncastable rows dropped,
+    * persisted while in use). Non-empty rows are appended once by
+    * `append`, under the append id `md5(checkpoint '#' batchId)` — stable across the REPLAY of the last uncommitted batch
+    * after a crash, so the family's durable append fence makes the
+    * replayed append a no-op (a fresh checkpoint gets fresh ids and can
+    * legitimately re-append); the checkpoint stops committed files from
+    * being re-read across restarts. `compactEvery = n > 0` opens a
+    * MAINTENANCE SLOT after every n APPENDS since the last slot (empty
+    * batches don't count, and the count is durable under the checkpoint
+    * — [[appendOpensSlot]] — so restarts and `--once` cron runs keep it),
+    * where `maintain` runs; maintenance inside `foreachBatch` is
+    * serialized with the appends, the single-writer window in-place
+    * rewrites require. Each appended batch leaves its
+    * [[IngestBatchMetrics]] record under the checkpoint. */
+  private def ingestJob(spark: SparkSession, corpus: DataFrame,
+      checkpoint: String, once: Boolean, compactEvery: Int)
+      (lend: (DataFrame, Long, DataFrame => Unit) => Unit,
+       append: (DataFrame, String) => Unit,
+       maintain: Long => Maintenance): StreamingQuery =
+    drain(corpus.writeStream
+      .options(Map("checkpointLocation" -> checkpoint))
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        lend(batch.toDF(), batchId, rows => if (!rows.isEmpty) {
+          val t0 = System.nanoTime()
+          append(rows, graft.util.Md5.hex(s"$checkpoint#$batchId").take(16))
+          val appendMs = (System.nanoTime() - t0) / 1000000
+          val slotOpened = appendOpensSlot(spark, checkpoint, compactEvery)
+          val mt0 = System.nanoTime()
+          val m = if (slotOpened) maintain(batchId) else Maintenance()
+          val actionMs =
+            if (slotOpened) (System.nanoTime() - mt0) / 1000000 else 0L
+          writeIngestMetrics(spark, checkpoint, IngestBatchMetrics(
+            batchId, appendMs, slotOpened, m.skew, m.action, actionMs,
+            m.tombstonesCleared))
+        })
+      }.start(), once)
+
+  /** The INGEST counterpart of [[annServeJob]], closing the product
+    * loop "bulk build → streaming appends → streaming serving": a
+    * watched directory of corpus files (parquet/jsonl rows of
+    * (idCol, vecCol)) whose every new file becomes a micro-batch
+    * appended to a LIVE index via [[graft.llm.Ann.append]] — one
+    * signature/assignment/encode pass over the NEW rows only, never a
+    * corpus rescan — through the [[ingestJob]] loop (exactly-once
+    * appends, the maintenance slot). The family is read from the index
+    * layout; `method` is checked against it at construction. Appends
+    * keep the single-writer-per-index contract: run ONE ingest job per
+    * index dir, and rebuild/retrain only while it is stopped.
+    *
+    * The index must already exist — bootstrap with
+    * [[graft.llm.Ann.ensure]] (the `ingest-ann` CLI's `--build-from`
+    * does) so the stream appends against the bulk-built backfill. LSH
+    * appends reproduce a full rebuild exactly; IVF appends assign to
+    * frozen centroids (monitor drift via `ivfListStats`, retrain on
+    * growth).
+    *
+    * In the maintenance slot the job normally runs
+    * [[graft.llm.Ann.compact]] (each append lands one part file per
+    * partition, so a long-running ingest otherwise grows probe read
+    * amplification without bound); for an ivf (or keepVectors ivfpq)
+    * index with `retrainSkewFactor > 0` it first checks
+    * [[graft.llm.Similarity.ivfSkew]] and, past the factor, runs
+    * [[graft.llm.Ann.retrain]] INSTEAD (a retrain rewrites everything —
+    * compacting the same batch would be redundant), closing the drift
+    * loop the frozen-centroid append otherwise leaves to ops. Both
+    * rewrites preserve the row multiset and the replay fences, so
+    * exactly-once holds across them. */
   def annIngestJob(spark: SparkSession, corpusUri: String, format: String,
                    idCol: String, vecCol: String, indexDir: String,
                    method: String, checkpoint: String,
@@ -1712,95 +1517,53 @@ object StreamRunner {
     // numbers as array<double>; cast to the index's element type so the
     // append fence compares true types, not formats.
     val (idType, vecType) = Ann.streamTypes(spark, indexDir)
-    val streamSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(idCol, idType),
-      org.apache.spark.sql.types.StructField(vecCol,
-        if (format == "jsonl")
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)
-        else vecType)))
+    val streamSchema = StructType(Seq(StructField(idCol, idType),
+      StructField(vecCol,
+        if (format == "jsonl") ArrayType(DoubleType) else vecType)))
     val corpus = readStream(spark, corpusUri, format, Some(streamSchema))
       .withColumn(vecCol, col(vecCol).cast(vecType))
-    val q = corpus.writeStream
-      .options(Map("checkpointLocation" -> checkpoint))
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            val t0 = System.nanoTime()
-            Ann.append(batch.toDF(), idCol, vecCol, indexDir,
-              appendId = Some(graft.util.Md5.hex(s"$checkpoint#$batchId").take(16)))
-            val appendMs = (System.nanoTime() - t0) / 1000000
-            var skewSeen: Option[Double] = None
-            var action = "none"
-            var actionMs = 0L
-            var tombsCleared = 0L
-            // appends-since-last-slot cadence (durable under the
-            // checkpoint — see appendOpensSlot): empty batches never
-            // advance it and the n-th append fires it, batch ids aside
-            val slotOpened = appendOpensSlot(spark, checkpoint, compactEvery)
-            if (slotOpened) {
-              val mt0 = System.nanoTime()
-              // the skew monitor reads the shared `list` column, so one
-              // check serves both quantized families (retrainability was
-              // verified at job construction)
-              val retrained = retrainSkewFactor > 0 && {
-                val skew = graft.llm.Similarity.ivfSkew(spark, indexDir)
-                skewSeen = Some(skew)
-                skew > retrainSkewFactor && {
-                  log.warn(s"$method skew $skew > $retrainSkewFactor at " +
-                    s"$indexDir; retraining from index rows")
-                  Ann.retrain(spark, indexDir)
-                  action = "retrain"
-                  true
-                }
-              }
-              // compaction rewrites the WHOLE index (cost ~ index size,
-              // not batch size) — skip it while every partition is still
-              // at build-shape file count (salt-aware: Ann.compactionDue),
-              // so an aggressive cadence over small/empty increments stays
-              // listing-only
-              if (!retrained && Ann.compactionDue(spark, indexDir)) {
-                val st = Ann.compact(spark, indexDir)
-                action = "compact"
-                tombsCleared = st.tombstonesCleared
-                log.info(s"compacted $indexDir after batch $batchId: " +
-                  s"${st.filesBefore} -> ${st.filesAfter} data files" +
-                  (if (st.tombstonesCleared > 0)
-                     s", ${st.tombstonesCleared} tombstones cleared"
-                   else ""))
-              }
-              actionMs = (System.nanoTime() - mt0) / 1000000
-            }
-            writeIngestMetrics(spark, checkpoint, IngestBatchMetrics(
-              batchId, appendMs, slotOpened, skewSeen, action, actionMs,
-              tombsCleared))
-          }
-      }.start()
-    if (once) {
-      try q.processAllAvailable() finally q.stop()
-    }
-    q
+    ingestJob(spark, corpus, checkpoint, once, compactEvery)(
+      (batch, _, use) => use(batch),
+      (rows, id) => Ann.append(rows, idCol, vecCol, indexDir,
+        appendId = Some(id)),
+      batchId => {
+        // the skew monitor reads the shared `list` column, so one check
+        // serves both quantized families (retrainability was verified at
+        // job construction)
+        val skew =
+          if (retrainSkewFactor > 0)
+            Some(graft.llm.Similarity.ivfSkew(spark, indexDir))
+          else None
+        if (skew.exists(_ > retrainSkewFactor)) {
+          log.warn(s"$method skew ${skew.get} > $retrainSkewFactor at " +
+            s"$indexDir; retraining from index rows")
+          Ann.retrain(spark, indexDir)
+          Maintenance("retrain", skew)
+        }
+        // compaction rewrites the WHOLE index (cost ~ index size, not
+        // batch size) — skip it while every partition is still at
+        // build-shape file count (salt-aware: Ann.compactionDue), so an
+        // aggressive cadence over small/empty increments stays
+        // listing-only
+        else if (Ann.compactionDue(spark, indexDir))
+          compacted(indexDir, batchId, Ann.compact(spark, indexDir))
+            .copy(skew = skew)
+        else Maintenance(skew = skew)
+      })
   }
 
   /** The LEXICAL ingest job — [[annIngestJob]] for the BM25 inverted
-    * index, closing the same product loop "bulk build → streaming
-    * appends → streaming serving" ([[bm25ServeJob]] being the serving
-    * side): a watched directory of corpus files (parquet/jsonl rows of
-    * (idCol, textCol)) whose every new file becomes a micro-batch
-    * appended to a LIVE index via [[graft.llm.Retrieval.bm25Append]] —
-    * one tokenize pass over the NEW rows plus banded delta landings
-    * and an O(1) additive stats merge, never a corpus rescan.
-    *
-    * Exactly-once appends end to end, the annIngestJob contract: the
-    * checkpoint stops committed files from being re-read, and each
-    * batch's append id is `md5(checkpoint '#' batchId)` — stable across
-    * the replay of the last uncommitted batch, so the durable
-    * `postings/_append-<id>` fence makes the replayed append a no-op.
+    * index ([[bm25ServeJob]] being the serving side): a watched
+    * directory of corpus files (parquet/jsonl rows of (idCol, textCol)
+    * plus the index's metadata columns) whose every new file becomes a
+    * micro-batch appended to a LIVE index via
+    * [[graft.llm.Retrieval.bm25Append]] — one tokenize pass over the NEW
+    * rows plus banded delta landings and an O(1) additive stats merge,
+    * never a corpus rescan — through the [[ingestJob]] loop (the
+    * `postings/_append-<id>` fence makes a replayed append a no-op).
     * Single-writer per index dir. The index must already exist —
-    * bootstrap with [[graft.llm.Retrieval.ensure]] (the
-    * `ingest-bm25` CLI's `--build-from` does). `compactEvery = n > 0`
-    * opens the maintenance slot after every n APPENDS since the last
-    * slot (empty/all-dropped batches don't count) and runs
+    * bootstrap with [[graft.llm.Retrieval.ensure]] (the `ingest-bm25`
+    * CLI's `--build-from` does). The maintenance slot runs
     * [[graft.llm.Retrieval.bm25Compact]] when
     * [[graft.llm.Retrieval.bm25CompactionDue]] says the postings have
     * grown past build shape (listing-only otherwise). Appends are
@@ -1832,63 +1595,27 @@ object StreamRunner {
       spark.read.parquet(s"$indexDir/postings").schema
     val metaFields = postingsSchema.fields.toSeq
       .filterNot(f => Set("id", "dl", "w", "tf", "pband")(f.name))
-    val streamSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField(idCol,
-        if (format == "jsonl") org.apache.spark.sql.types.StringType
-        else org.apache.spark.sql.types.LongType) +:
-      org.apache.spark.sql.types.StructField(textCol,
-        org.apache.spark.sql.types.StringType) +: metaFields)
+    val streamSchema = StructType(
+      StructField(idCol, if (format == "jsonl") StringType else LongType) +:
+      StructField(textCol, StringType) +: metaFields)
     val corpus = readStream(spark, corpusUri, format, Some(streamSchema))
-    val q = corpus.writeStream
-      .options(Map("checkpointLocation" -> checkpoint))
-      .foreachBatch {
-        (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val batch = batch0.toDF()
-            .withColumn(idCol, col(idCol).cast("long")).persist()
-          try {
-            val dropped = batch.filter(col(idCol).isNull).count()
-            if (dropped > 0)
-              log.warn(s"bm25Ingest: batch $batchId dropped $dropped rows " +
-                s"whose '$idCol' could not cast to long")
-            val rows = batch.filter(col(idCol).isNotNull)
-            if (!rows.isEmpty) {
-              val t0 = System.nanoTime()
-              val id =
-                Some(graft.util.Md5.hex(s"$checkpoint#$batchId").take(16))
-              graft.llm.Retrieval.bm25Append(rows, idCol, textCol,
-                indexDir, appendId = id)
-              val appendMs = (System.nanoTime() - t0) / 1000000
-              var action = "none"
-              var actionMs = 0L
-              var tombsCleared = 0L
-              // appends-since-last-slot cadence, durable under the
-              // checkpoint (appendOpensSlot): empty/all-dropped batches
-              // never advance it, the n-th append always fires it
-              val slotOpened = appendOpensSlot(spark, checkpoint, compactEvery)
-              if (slotOpened) {
-                val mt0 = System.nanoTime()
-                if (graft.llm.Retrieval.bm25CompactionDue(spark, indexDir)) {
-                  val st = graft.llm.Retrieval.bm25Compact(spark, indexDir)
-                  action = "compact"
-                  tombsCleared = st.tombstonesCleared
-                  log.info(s"compacted $indexDir after batch $batchId: " +
-                    s"${st.filesBefore} -> ${st.filesAfter} data files" +
-                    (if (st.tombstonesCleared > 0)
-                       s", ${st.tombstonesCleared} tombstones cleared"
-                     else ""))
-                }
-                actionMs = (System.nanoTime() - mt0) / 1000000
-              }
-              writeIngestMetrics(spark, checkpoint, IngestBatchMetrics(
-                batchId, appendMs, slotOpened, None, action, actionMs,
-                tombsCleared))
-            }
-          } finally batch.unpersist()
-      }.start()
-    if (once) {
-      try q.processAllAvailable() finally q.stop()
-    }
-    q
+    ingestJob(spark, corpus, checkpoint, once, compactEvery)(
+      (batch0, batchId, use) => {
+        val batch = batch0.withColumn(idCol, col(idCol).cast("long")).persist()
+        try {
+          val dropped = batch.filter(col(idCol).isNull).count()
+          if (dropped > 0)
+            log.warn(s"bm25Ingest: batch $batchId dropped $dropped rows " +
+              s"whose '$idCol' could not cast to long")
+          use(batch.filter(col(idCol).isNotNull))
+        } finally batch.unpersist()
+      },
+      (rows, id) => Retrieval.bm25Append(rows, idCol, textCol, indexDir,
+        appendId = Some(id)),
+      batchId =>
+        if (Retrieval.bm25CompactionDue(spark, indexDir))
+          compacted(indexDir, batchId, Retrieval.bm25Compact(spark, indexDir))
+        else Maintenance())
   }
 
   /** Custom streaming state via `mapGroupsWithState`: running count per

@@ -23,8 +23,8 @@ object Plans {
       // plan and run a separate aggregate tree, leaving df's adaptive
       // plan un-finalized — with no stages and no codegen spans to count)
       df.queryExecution.toRdd.count()
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val formatted = normalize(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
       println(s"\n======== $n ========")
       println(formatted)
       // the same STRUCTURAL verdict PlanLint enforces (a string match
@@ -44,6 +44,18 @@ object Plans {
         s"broadcastHash=$broadcast codegenStages=$codegen")
     }
     spark.stop()
+  }
+
+  /** A formatted plan with its `[codegen id : N]` markers renumbered
+    * 1, 2, … in order of first appearance. When AQE materializes two
+    * query stages concurrently, the codegen ids of their spans follow
+    * whichever finishes first, so two runs of one plan can print swapped
+    * ids; renumbering makes the printed plan reproducible. Expression
+    * ids are left as printed. */
+  def normalize(plan: String): String = {
+    val ids = scala.collection.mutable.Map.empty[String, Int]
+    "\\[codegen id : (\\d+)\\]".r.replaceAllIn(plan, m =>
+      s"[codegen id : ${ids.getOrElseUpdate(m.group(1), ids.size + 1)}]")
   }
 
   private def countCodegen(p: org.apache.spark.sql.execution.SparkPlan): Int = {

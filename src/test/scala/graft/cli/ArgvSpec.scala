@@ -46,6 +46,46 @@ class ArgvSpec extends AnyFunSuite {
     }
   }
 
+  // one catalog holding every datastore the streaming CLIs bind
+  private lazy val catalogPath: String = {
+    val cat = new graft.catalog.Catalog
+    cat.add(graft.catalog.Workspace("ws"))
+    Seq("q", "out", "corpus").foreach(n =>
+      cat.add(graft.catalog.DataStore("ws", n, s"'/tmp/$n'", format = "jsonl")))
+    val p = java.nio.file.Files.createTempDirectory("graft-argv-catalog")
+      .resolve("catalog.json").toString
+    cat.save(p)
+    p
+  }
+
+  // (cli, parse + resolve, flags binding everything but one datastore,
+  // the missing datastore flag, the name it would bind)
+  private val missingDatastore
+      : Seq[(String, Array[String] => Any, Seq[String], String, String)] = Seq(
+    ("serve-ann", a => ServeCli.resolve(ServeCli.parseArgs(a)),
+      Seq("--index-dir", "i", "--checkpoint", "c", "--output-datastore", "out"),
+      "--queries-datastore", "q"),
+    ("serve-bm25", a => ServeBm25Cli.resolve(ServeBm25Cli.parseArgs(a)),
+      Seq("--index-dir", "i", "--checkpoint", "c", "--queries-datastore", "q"),
+      "--output-datastore", "out"),
+    ("serve-hybrid", a => ServeHybridCli.resolve(ServeHybridCli.parseArgs(a)),
+      Seq("--bm25-index-dir", "b", "--ann-index-dir", "a", "--checkpoint", "c",
+        "--output-datastore", "out"),
+      "--queries-datastore", "q"),
+    ("ingest-ann", a => IngestCli.resolve(IngestCli.parseArgs(a)),
+      Seq("--corpus-uri", "x", "--index-dir", "i", "--checkpoint", "c"),
+      "--corpus-datastore", "corpus"))
+
+  missingDatastore.foreach { case (cli, resolve, args, flag, name) =>
+    test(s"$cli --catalog without $flag fails naming the flag") {
+      val withCatalog = args ++ Seq("--catalog", catalogPath)
+      val e = intercept[IllegalArgumentException](resolve(withCatalog.toArray))
+      assert(e.getMessage.contains(flag), e.getMessage)
+      // the same flags plus the datastore name bind
+      resolve((withCatalog ++ Seq(flag, name)).toArray)
+    }
+  }
+
   test("a numeric flag left dangling fails naming the flag") {
     val e = intercept[IllegalArgumentException](ServeCli.parseArgs(Array("--k")))
     assert(e.getMessage == "flag --k requires a value")

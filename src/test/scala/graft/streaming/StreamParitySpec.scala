@@ -797,8 +797,8 @@ class StreamParitySpec extends AnyFunSuite {
       val stream = StreamRunner.readStream(spark, qdir, "jsonl")
       val answers = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Double)]
-      val q = StreamRunner.annServe(stream, "qid", "vec", dir, 5,
-        method = method, tuning = Some(tuning)) { out =>
+      val q = StreamRunner.annServeBatches(stream, "qid", "vec", dir, 5,
+        method = method, tuning = Some(tuning)) { (out, _) =>
         answers.synchronized {
           answers ++= out.collect().map(r =>
             (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -849,9 +849,9 @@ class StreamParitySpec extends AnyFunSuite {
       val stream = StreamRunner.readStream(spark, qdir, "jsonl")
       val answers = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Double)]
-      val q = StreamRunner.annServe(stream, "qid", "vec", idxDir, 5,
+      val q = StreamRunner.annServeBatches(stream, "qid", "vec", idxDir, 5,
         method = "ivfpq", tuning = Some(2), minCos = minCos,
-        filterDfl = filterDfl) { out =>
+        filterDfl = filterDfl) { (out, _) =>
         answers.synchronized {
           answers ++= out.collect().map(r =>
             (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -940,9 +940,9 @@ class StreamParitySpec extends AnyFunSuite {
         "--queries-uri", qdir, "--output-uri", s"$root/a2",
         "--checkpoint", s"$root/c2", "--once"))))
     assert(e1.getMessage.contains("keep-vectors"), e1.getMessage)
-    intercept[IllegalArgumentException](StreamRunner.annServe(
+    intercept[IllegalArgumentException](StreamRunner.annServeBatches(
       StreamRunner.readStream(spark, qdir, "jsonl"), "qid", "vec",
-      s"$root/idx", 5, method = "lsh", refine = Some(4))(_ => ()))
+      s"$root/idx", 5, method = "lsh", refine = Some(4))((_, _) => ()))
 
     // --refine COMPOSES with --filter and --min-cos (r19): a flagged
     // keepVectors index serves both refined twins, answers ≡ the direct
@@ -957,9 +957,9 @@ class StreamParitySpec extends AnyFunSuite {
       val stream = StreamRunner.readStream(spark, qdir, "jsonl")
       val answers = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Double)]
-      val q = StreamRunner.annServe(stream, "qid", "vec", kvFlag, 5,
+      val q = StreamRunner.annServeBatches(stream, "qid", "vec", kvFlag, 5,
         method = "ivfpq", tuning = Some(2), minCos = minCos,
-        filterDfl = filterDfl, refine = Some(4)) { out =>
+        filterDfl = filterDfl, refine = Some(4)) { (out, _) =>
         answers.synchronized {
           answers ++= out.collect().map(r =>
             (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -1006,8 +1006,8 @@ class StreamParitySpec extends AnyFunSuite {
       (0 until 5).map(i =>
         s"""{"qid":$i,"vec":[${q0.mkString(",")}]}""").mkString("\n"))
     val stream = StreamRunner.readStream(spark, qdir, "jsonl")
-    val q = StreamRunner.annServe(stream, "qid", "vec", idxDir, 5,
-      method = "lsh", maxQueriesPerBatch = 3)(_ => ())
+    val q = StreamRunner.annServeBatches(stream, "qid", "vec", idxDir, 5,
+      method = "lsh", maxQueriesPerBatch = 3)((_, _) => ())
     val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       try q.processAllAvailable() finally q.stop()
     }
@@ -1018,9 +1018,9 @@ class StreamParitySpec extends AnyFunSuite {
       s"expected the batch-size guard, got: ${rootMsg(err)}")
     // the guard is configurable: the same file serves under a higher cap
     val answers = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ok = StreamRunner.annServe(
+    val ok = StreamRunner.annServeBatches(
       StreamRunner.readStream(spark, qdir, "jsonl"), "qid", "vec", idxDir, 5,
-      method = "lsh", maxQueriesPerBatch = 5) { out =>
+      method = "lsh", maxQueriesPerBatch = 5) { (out, _) =>
       answers.synchronized { answers ++= out.collect().map(_.getLong(0)) }
     }
     try ok.processAllAvailable() finally ok.stop()
@@ -1030,9 +1030,108 @@ class StreamParitySpec extends AnyFunSuite {
       "--queries-uri", qdir, "--index-dir", idxDir, "--output-uri", "/tmp/x",
       "--checkpoint", "/tmp/c", "--max-batch-queries", "123"))
     assert(cfg.maxBatchQueries == 123)
-    intercept[IllegalArgumentException](StreamRunner.annServe(
+    intercept[IllegalArgumentException](StreamRunner.annServeBatches(
       StreamRunner.readStream(spark, qdir, "jsonl"), "qid", "vec", idxDir, 5,
-      maxQueriesPerBatch = 0)(_ => ()))
+      maxQueriesPerBatch = 0)((_, _) => ()))
+  }
+
+  // One fixture for the per-kind serving tables: a small (doc_id, text,
+  // vec) corpus with a bm25 and an lsh index over it, and two jsonl query
+  // dirs every kind reads (each kind selects only its own columns):
+  // `mixed` holds two good queries, a row malformed for every kind and a
+  // duplicate qid; `five` holds five good queries.
+  private lazy val kindsRoot: String = {
+    val words = Seq("spark", "stream", "window", "merge", "sort", "vector",
+      "hash", "index", "query", "batch")
+    val docs = (0L until 60L).map(i => i -> Seq.tabulate(5)(j =>
+      words(((i * 7 + j * 3) % words.size).toInt)).mkString(" "))
+      .toDF("doc_id", "text")
+    val emb = graft.llm.TextAnalysis.hashEmbed(docs, "doc_id", "text",
+      dim = 16, seed = 7L)
+    val corpus = docs.select(col("doc_id"), col("text"))
+      .join(emb.select(col("doc_id"), col("vec")), Seq("doc_id"))
+    val root = Files.createTempDirectory("graft-kinds").toString
+    Retrieval.bm25Build(corpus, "doc_id", "text", s"$root/bidx", pbands = 16)
+    graft.llm.Similarity.lshBuild(corpus, "doc_id", "vec", s"$root/aidx",
+      nBits = 8, dim = 16, partitionBits = 4)
+    def qvec(text: String): String =
+      graft.llm.TextAnalysis.hashEmbed(Seq((0L, text)).toDF("doc_id", "text"),
+        "doc_id", "text", dim = 16, seed = 7L)
+        .select("vec").as[Seq[Double]].head().mkString("[", ",", "]")
+    def row(qid: Long, terms: String) =
+      s"""{"qid":$qid,"terms":"$terms","vec":${qvec(terms)}}"""
+    def write(dir: String, rows: Seq[String]): Unit = {
+      new java.io.File(s"$root/$dir").mkdirs()
+      Files.writeString(java.nio.file.Paths.get(s"$root/$dir/q.jsonl"),
+        rows.mkString("\n"))
+    }
+    write("mixed", Seq(row(1, "spark stream window"), row(2, "merge sort"),
+      """{"qid":3}""", row(1, "window")))
+    write("five", (0L until 5L).map(row(_, "spark stream window")))
+    root
+  }
+
+  private def serveKind(name: String): StreamRunner.ServeKind[_] = name match {
+    case "ann" => StreamRunner.annKind(spark, "vec", s"$kindsRoot/aidx", 5,
+      "lsh", Some(50), None, None, None)
+    case "bm25" => StreamRunner.bm25Kind(spark, "terms", s"$kindsRoot/bidx",
+      5, 1.2, 0.75, None)
+    case "hybrid" => StreamRunner.hybridKind(spark, "terms", "vec",
+      s"$kindsRoot/bidx", s"$kindsRoot/aidx", "lsh", 5, 10, None, 1.2, 0.75,
+      Some(50), None, None)
+  }
+
+  private def serveJob(name: String, queries: String, out: String,
+                       ckpt: String) = name match {
+    case "ann" => StreamRunner.annServeJob(spark, queries, "jsonl", "qid",
+      "vec", s"$kindsRoot/aidx", "lsh", 5, Some(50), out, "jsonl", ckpt,
+      once = true)
+    case "bm25" => StreamRunner.bm25ServeJob(spark, queries, "jsonl", "qid",
+      "terms", s"$kindsRoot/bidx", 5, out, "jsonl", ckpt, once = true)
+    case "hybrid" => StreamRunner.hybridServeJob(spark, queries, "jsonl",
+      "qid", "terms", "vec", s"$kindsRoot/bidx", s"$kindsRoot/aidx", "lsh",
+      5, 10, out, "jsonl", ckpt, once = true, tuning = Some(50))
+  }
+
+  Seq("ann", "bm25", "hybrid").foreach { name =>
+    test(s"$name serving rejects an oversized query micro-batch; Int.MaxValue lifts the cap") {
+      def serve(max: Int)(sink: (org.apache.spark.sql.DataFrame, Long) => Unit) =
+        StreamRunner.serveBatches(
+          StreamRunner.readStream(spark, s"$kindsRoot/five", "jsonl"), "qid",
+          serveKind(name), maxQueriesPerBatch = max)(sink)
+      val q = serve(4)((_, _) => ())
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        try q.processAllAvailable() finally q.stop()
+      }
+      def rootMsg(e: Throwable): String =
+        if (e.getCause == null) String.valueOf(e.getMessage)
+        else rootMsg(e.getCause)
+      assert(rootMsg(err).contains("max-queries-per-batch 4"),
+        s"expected the batch-size guard, got: ${rootMsg(err)}")
+      val answered = scala.collection.mutable.Set.empty[Long]
+      val ok = serve(Int.MaxValue) { (out, _) =>
+        answered.synchronized { answered ++= out.select("qid").as[Long].collect() }
+      }
+      try ok.processAllAvailable() finally ok.stop()
+      assert(answered == (0L until 5L).toSet)
+    }
+
+    test(s"$name serving skips a malformed row and a duplicate qid, counted in _metrics.json") {
+      val root = Files.createTempDirectory(s"graft-kinds-$name").toString
+      serveJob(name, s"$kindsRoot/mixed", s"$root/answers", s"$root/ckpt")
+        .awaitTermination()
+      val batchDirs = new java.io.File(s"$root/answers").listFiles()
+        .filter(_.getName.startsWith("batch-"))
+      assert(batchDirs.length == 1, batchDirs.toSeq)
+      val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+        Files.readString(batchDirs.head.toPath.resolve("_metrics.json")))
+      assert(m.get("queries_seen").asInt == 4, m.toString)
+      assert(m.get("queries_served").asInt == 2, m.toString)
+      assert(m.get("queries_skipped").asInt == 2, m.toString)
+      val qids = spark.read.json(batchDirs.head.getPath)
+        .select("qid").as[Long].collect().toSet
+      assert(qids == Set(1L, 2L), qids)
+    }
   }
 
   test("streaming image dedup drops perceptual copies of a static reference, keeps fresh and undecodable") {
@@ -1102,8 +1201,8 @@ class StreamParitySpec extends AnyFunSuite {
         s"""{"qid":$id,"vec":[${v.mkString(",")}]}""" }.mkString("\n"))
     val stream = StreamRunner.readStream(spark, qdir, "jsonl")
     val answers = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val q = StreamRunner.annServe(stream, "qid", "vec", idxDir, 5,
-      method = "lsh", tuning = Some(5), filterDfl = Some("@flag == 0")) { out =>
+    val q = StreamRunner.annServeBatches(stream, "qid", "vec", idxDir, 5,
+      method = "lsh", tuning = Some(5), filterDfl = Some("@flag == 0")) { (out, _) =>
       answers.synchronized {
         answers ++= out.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -1120,13 +1219,13 @@ class StreamParitySpec extends AnyFunSuite {
       assert(got.forall(_._1 % 2 == 0), s"odd id served through flag==0: $got")
     }
     // filter + range serving is rejected at job construction
-    intercept[IllegalArgumentException](StreamRunner.annServe(
+    intercept[IllegalArgumentException](StreamRunner.annServeBatches(
       StreamRunner.readStream(spark, qdir, "jsonl"), "qid", "vec", idxDir, 5,
-      minCos = Some(0.9), filterDfl = Some("@flag == 0"))(_ => ()))
+      minCos = Some(0.9), filterDfl = Some("@flag == 0"))((_, _) => ()))
     // a malformed filter fails eagerly too
-    intercept[Exception](StreamRunner.annServe(
+    intercept[Exception](StreamRunner.annServeBatches(
       StreamRunner.readStream(spark, qdir, "jsonl"), "qid", "vec", idxDir, 5,
-      filterDfl = Some("@flag =="))(_ => ()))
+      filterDfl = Some("@flag =="))((_, _) => ()))
     // CLI plumbing: --filter and --build-meta parse
     val cfg = graft.cli.ServeCli.parseArgs(Array(
       "--queries-uri", qdir, "--index-dir", idxDir, "--output-uri", "/tmp/x",
@@ -1243,8 +1342,8 @@ class StreamParitySpec extends AnyFunSuite {
       kLists = 8, trainSample = 256)
     val stream = StreamRunner.readStream(spark, qdir, "jsonl")
     val answers = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val q = StreamRunner.annServe(stream, "qid", "vec", ivfDir, 5,
-      method = "ivf", tuning = Some(4), minCos = Some(0.9)) { out =>
+    val q = StreamRunner.annServeBatches(stream, "qid", "vec", ivfDir, 5,
+      method = "ivf", tuning = Some(4), minCos = Some(0.9)) { (out, _) =>
       answers.synchronized {
         answers ++= out.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -1261,8 +1360,8 @@ class StreamParitySpec extends AnyFunSuite {
     }
     // a bad threshold is rejected before any stream starts
     intercept[IllegalArgumentException](
-      StreamRunner.annServe(stream, "qid", "vec", ivfDir, 5,
-        minCos = Some(1.5)) { _ => () })
+      StreamRunner.annServeBatches(stream, "qid", "vec", ivfDir, 5,
+        minCos = Some(1.5)) { (_, _) => () })
   }
 
   test("annServe propagates non-dim probe failures instead of swallowing them") {
@@ -1273,8 +1372,8 @@ class StreamParitySpec extends AnyFunSuite {
     Files.writeString(java.nio.file.Paths.get(s"$qdir/q.jsonl"),
       """{"qid":1,"vec":[1.0,2.0,3.0]}""")
     val stream = StreamRunner.readStream(spark, qdir, "jsonl")
-    val q = StreamRunner.annServe(stream, "qid", "vec",
-      s"$qdir/no-such-index", 5, method = "lsh") { _ => () }
+    val q = StreamRunner.annServeBatches(stream, "qid", "vec",
+      s"$qdir/no-such-index", 5, method = "lsh") { (_, _) => () }
     try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
       q.processAllAvailable())
     finally q.stop()
