@@ -1,9 +1,12 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 import graft.dfl.{ColumnCompiler, DflFrame, Parser}
-import graft.io.DataStoreIO
+import graft.io.{DataStoreIO, FormatInfer}
 
 /** Service/job/workflow execution with the reference's variable-precedence
   * and caching semantics.
@@ -20,7 +23,9 @@ import graft.io.DataStoreIO
   * DataStore reads cache the loaded DataFrame keyed by resolved URI, read
   * options and source mtime — a stale file invalidates the entry, like the
   * mtime/LastModified cache key in the reference
-  * (handlers/ServiceExecHandler.go:159-232, cache/Cache.go:25-75).
+  * (handlers/ServiceExecHandler.go:159-232, cache/Cache.go:25-75). A small
+  * datastore is held as driver-side rows, the way the reference serves
+  * from in-process objects; a larger one is persisted.
   */
 final class Exec(spark: SparkSession, val catalog: Catalog) {
 
@@ -32,10 +37,10 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
   private val serviceVarCache =
     scala.collection.concurrent.TrieMap.empty[String, (Long, Map[String, Any])]
 
-  // (resolved uri, format, compression) → (mtimeMillis, persisted
-  // DataFrame): a datastore redefined in place with other read options
-  // misses by construction. Guarded by its own lock so two concurrent
-  // requests don't double-read + double-persist
+  // (resolved uri, format, compression) → (mtimeMillis, driver-held or
+  // persisted DataFrame): a datastore redefined in place with other read
+  // options misses by construction. Guarded by its own lock so two
+  // concurrent requests don't double-read + double-load
   private val dataFrameCache =
     scala.collection.mutable.Map.empty[(String, String, String), (Long, DataFrame)]
   private val dfCacheLock = new Object
@@ -51,14 +56,14 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
     * DataFrames go only when a datastore or workspace changed — their key
     * already misses on a redefined datastore, so this only releases the
     * entries of a deleted or re-uri'd one. Any other mutation (a service's
-    * defaults, a layer) leaves the persisted tables cached. */
+    * defaults, a layer) leaves the loaded tables cached. */
   def catalogChanged(kind: String): Unit = {
     varEpoch.incrementAndGet()
     serviceVarCache.clear()
     if (kind == "datastores" || kind == "workspaces") invalidateDataFrames()
   }
 
-  /** Drop and unpersist every cached datastore DataFrame. */
+  /** Drop (and unpersist) every cached datastore DataFrame. */
   def invalidateDataFrames(): Unit = dfCacheLock.synchronized {
     dataFrameCache.values.foreach(_._2.unpersist())
     dataFrameCache.clear()
@@ -87,35 +92,61 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
           resolveAttr = n => throw new IllegalArgumentException(s"@$n not valid in uri"),
           whole = () => throw new IllegalArgumentException("@ not valid in uri"),
           vars = vars.filterNot(_._2.isInstanceOf[DataFrame]))
-        spark.range(1).select(ColumnCompiler.compile(node, ctx).cast("string"))
+        // over one driver-held row the projection folds in the
+        // optimizer: resolving a template starts no job
+        oneRow.select(ColumnCompiler.compile(node, ctx).cast("string"))
           .head().getString(0)
     }
   }
 
-  private def mtimeOf(uri: String): Long = {
+  private lazy val oneRow =
+    Bridge.localFrame(spark, new StructType(), Seq(InternalRow.empty))
+
+  /** (newest mtime, total bytes) of the file, or the files directly in the
+    * directory, that `uri` names. Bytes are -1 when they are unknown: no
+    * such local path, or a directory with subdirectories. */
+  private def statOf(uri: String): (Long, Long) = {
     val f = new java.io.File(uri.stripPrefix("file:"))
-    if (f.isDirectory)
-      Option(f.listFiles()).map(_.map(_.lastModified()).foldLeft(0L)(math.max))
-        .getOrElse(0L)
-    else f.lastModified()
+    if (f.isDirectory) {
+      val fs = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
+      (fs.map(_.lastModified()).foldLeft(0L)(math.max),
+        if (fs.exists(_.isDirectory)) -1L else fs.map(_.length).sum)
+    } else if (f.exists) (f.lastModified(), f.length())
+    else (0L, -1L)
   }
 
-  /** Cached datastore read (persist + mtime invalidation). */
+  /** Cached datastore read, invalidated by mtime. A small uncompressed
+    * datastore is held on the driver as rows ([[Bridge.collectLocal]]), so
+    * the filters, projections and limits of a tile or service request
+    * fold in the optimizer and start no job. Any other is persisted. */
   def readDataStore(ds: DataStore, vars: Map[String, Any]): DataFrame = {
     val uri = resolveUri(ds.uri, vars)
     val key = (uri, ds.format, ds.compression)
-    val mtime = mtimeOf(uri)
+    val (mtime, bytes) = statOf(uri)
     dfCacheLock.synchronized {
       dataFrameCache.get(key) match {
         case Some((t, df)) if t == mtime => df
         case stale =>
           stale.foreach(_._2.unpersist())
-          val df = DataStoreIO.read(spark, uri, DataStoreIO.ReadOptions(
-            format = ds.format, compression = ds.compression)).persist()
+          val read = DataStoreIO.read(spark, uri, DataStoreIO.ReadOptions(
+            format = ds.format, compression = ds.compression))
+          val df =
+            if (heldLocally(uri, ds.compression, bytes)) Bridge.collectLocal(read)
+            else read.persist()
           dataFrameCache(key) = (mtime, df)
           df
       }
     }
+  }
+
+  /** A datastore is held on the driver only when it is uncompressed and
+    * its bytes on disk are under both 1/64 of the driver heap and the
+    * `graft.dfl.index.minBytes` bound, so a corpus large enough for the
+    * file-backed ANN/BM25 index path still has a file-backed plan. */
+  private def heldLocally(uri: String, compression: String, bytes: Long): Boolean = {
+    val codec = if (compression.nonEmpty) compression else FormatInfer.split(uri).compression
+    (codec.isEmpty || codec == "none") && bytes >= 0 &&
+      bytes < math.min(Runtime.getRuntime.maxMemory / 64, DflFrame.indexMinBytes(spark))
   }
 
   private val tokenizerKinds = Set("bpe", "byte-bpe", "wordpiece", "unigram")
@@ -205,7 +236,7 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
       throw new NoSuchElementException(s"unknown service: $serviceName"))
     val ds = catalog.datastores(service.datastore)
     val scalarDefaults = service.defaults ++ requestVars
-    val mtimeNow = mtimeOf(resolveUri(ds.uri, scalarDefaults))
+    val mtimeNow = statOf(resolveUri(ds.uri, scalarDefaults))._1
     val cached = serviceVarCache.get(serviceName) match {
       case Some((t, m)) if t == mtimeNow => m
       case Some((_, m)) => // source changed: keep scalars, drop stale datasets
@@ -217,7 +248,7 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
     // (cached, mtime-invalidated) DataFrame — how a service binds a
     // SECOND table for the two-dataset stages (dedupAgainst, decontam,
     // diff, asof, join). Resolved fresh each exec and NEVER written back
-    // to the var cache: readDataStore owns the caching, and a persisted
+    // to the var cache: readDataStore owns the caching, and a cached
     // DataFrame would go stale when the referenced store changes.
     val dsRefVars: Map[String, Any] = vars.collect {
       case (k, v: String) if v.startsWith("datastore:") =>

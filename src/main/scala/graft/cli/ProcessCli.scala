@@ -301,7 +301,7 @@ object ProcessCli {
         else graft.io.Layout.clusterBy(limited0,
           c.outputClusterBy.split(',').map(_.trim).toSeq, c.outputFiles)
       if (c.outputUri == "-" || c.outputUri == "stdout") {
-        limited.toJSON.collect().foreach(println)
+        DataStoreIO.jsonRows(limited).foreach(println)
       } else if (c.outputUri.contains("@")) {
         // record-dependent output URI (reference: cli/process.go:231-235 +
         // examples/geonames.sh:49): the DFL expression becomes a path

@@ -1,6 +1,6 @@
 package graft.dfl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -2173,11 +2173,14 @@ object DflFrame {
     * partition-pruned probes. */
   private def dflIndexable(base: DataFrame): Boolean =
     graft.llm.Similarity.fileBackedCorpus(base) && {
-      val min = base.sparkSession.conf
-        .getOption("graft.dfl.index.minBytes").map(_.toLong)
-        .getOrElse(32L * 1024 * 1024)
+      val min = indexMinBytes(base.sparkSession)
       min <= 0 || graft.llm.Similarity.corpusInputBytes(base) >= min
     }
+
+  /** The `graft.dfl.index.minBytes` bound of [[dflIndexable]]. */
+  private[graft] def indexMinBytes(spark: SparkSession): Long =
+    spark.conf.getOption("graft.dfl.index.minBytes").map(_.toLong)
+      .getOrElse(32L * 1024 * 1024)
 
   private def assembleDict(df: DataFrame, d: DictLit, vars: Map[String, Any]): DataFrame = {
     val aggs = scala.collection.mutable.ListBuffer.empty[Column]

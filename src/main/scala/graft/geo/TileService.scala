@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.catalog.{Catalog, Exec, Layer}
 import graft.dfl.DflFrame
 import graft.functions.BoundLit
+import graft.io.DataStoreIO
 
 /** Vector-tile and raster-mask query paths (reference:
   * handlers/LayerTileHandler.go:85-264, handlers/LayerMaskHandler.go:44-218).
@@ -14,14 +15,18 @@ import graft.functions.BoundLit
   *     datastore's declared extent, return empty WITHOUT reading data
   *     (reference: LayerTileHandler.go:117-140) — the metadata analogue of
   *     partition pruning;
-  *  2. resolve + read the datastore (cached, mtime-keyed);
+  *  2. resolve + read the datastore (cached, mtime-keyed; a small one is
+  *     held as driver-side rows, see [[graft.catalog.Exec.readDataStore]]);
   *  3. bbox filter (always) + layer filter + optional user DFL + limit —
-  *     all compiled into ONE Catalyst plan so the bbox predicate reaches
-  *     the scan; on a tile-sharded parquet layout (`_tile_z/_tile_x/
-  *     _tile_y`, see [[graft.io.DynamicSink.writeTileSharded]]) the same
-  *     predicates partition-prune;
+  *     all compiled into ONE Catalyst plan. Over driver-held rows the
+  *     optimizer evaluates it and a tile, rendered through
+  *     [[graft.io.DataStoreIO.jsonRows]], starts no Spark job; over a
+  *     persisted or file-backed read the bbox predicate reaches the scan,
+  *     and on a tile-sharded parquet layout (`_tile_z/_tile_x/_tile_y`,
+  *     see [[graft.io.DynamicSink.writeTileSharded]]) it partition-prunes;
   *  4. tiles: GeoJSON-style wrap; masks: `groupBy` sub-tile indexes →
-  *     count ≥ threshold → binary grid (two-phase partial agg for free).
+  *     count ≥ threshold → binary grid (two-phase partial agg for free;
+  *     an aggregate does not fold on the driver, so a mask runs jobs).
   */
 final class TileService(spark: SparkSession, exec: Exec) {
 
@@ -69,7 +74,7 @@ final class TileService(spark: SparkSession, exec: Exec) {
     tileQuery(layerName, z, x, y, buffer, userDfl, limit) match {
       case None => """{"type":"FeatureCollection","features":[],"numberOfFeatures":0}"""
       case Some(df) =>
-        val feats = df.toJSON.collect()
+        val feats = DataStoreIO.jsonRows(df)
         s"""{"type":"FeatureCollection","features":[${feats.mkString(",")}],"numberOfFeatures":${feats.length}}"""
     }
   }

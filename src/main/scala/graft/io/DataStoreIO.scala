@@ -1,7 +1,11 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, DayTimeIntervalType, MapType,
+  StructType, YearMonthIntervalType}
 
 /** Reader/writer layer: URI + format + options → DataFrame and back.
   *
@@ -225,14 +229,37 @@ object DataStoreIO {
     opts.limit.fold(df)(df.limit)
   }
 
+  /** `df`'s rows as JSON objects, byte-equal to `df.toJSON.collect()`.
+    * They are rendered by one `to_json(struct(<every output attribute>))`
+    * column instead of `toJSON`'s typed `mapPartitions`, so a query over
+    * driver-held rows (a `LocalRelation`) folds whole in the optimizer
+    * and the collect starts no job. `to_json` writes a year-month or
+    * day-time interval in a shorter form than `toJSON`, so a frame with
+    * one keeps `toJSON`. */
+  def jsonRows(df: DataFrame): Array[String] =
+    if (ansiInterval(df.schema)) df.toJSON.collect()
+    else {
+      val record = CreateNamedStruct(
+        df.queryExecution.analyzed.output.flatMap(a => Seq(Literal(a.name), a)))
+      df.select(to_json(Bridge.column(record))).collect().map(_.getString(0))
+    }
+
+  private def ansiInterval(t: DataType): Boolean = t match {
+    case _: YearMonthIntervalType | _: DayTimeIntervalType => true
+    case s: StructType => s.fields.exists(f => ansiInterval(f.dataType))
+    case a: ArrayType  => ansiInterval(a.elementType)
+    case m: MapType    => ansiInterval(m.keyType) || ansiInterval(m.valueType)
+    case _             => false
+  }
+
   /** Encrypt a small serialized result to `uri` (IV ++ AES-CFB bytes).
     * Incompatible with streaming, enforced like the reference
     * (cli/process.go:662-664). */
   def writeEncrypted(df: DataFrame, uri: String, passphrase: String,
                      salt: String = "graft", format: String = "jsonl"): Unit = {
     val text = format match {
-      case "jsonl" => df.toJSON.collect().mkString("\n")
-      case "json"  => df.toJSON.collect().mkString("[", ",", "]")
+      case "jsonl" => jsonRows(df).mkString("\n")
+      case "json"  => jsonRows(df).mkString("[", ",", "]")
       case other   => throw new UnsupportedOperationException(s"encrypted write format: $other")
     }
     val path = java.nio.file.Paths.get(uri.stripPrefix("file:"))
@@ -279,10 +306,10 @@ object DataStoreIO {
       case "json" =>
         // whole-document array: driver-side assembly (CLI-sized results
         // only — engine paths use jsonl/parquet)
-        val rows = df.toJSON.collect()
+        val rows = jsonRows(df)
         writeDriverFile(uri, rows.mkString("[", ",", "]"), compression)
       case "yaml" | "toml" | "properties" | "hcl" | "hcl2" =>
-        val recs = df.toJSON.collect().map(parseJsonToMap)
+        val recs = jsonRows(df).map(parseJsonToMap)
         val text = format match {
           case "yaml"       => TextFormats.renderYaml(recs.toList)
           case "toml"       => recs.zipWithIndex.map { case (r, i) =>
@@ -298,7 +325,7 @@ object DataStoreIO {
         }
         writeDriverFile(uri, text, compression)
       case "bson" =>
-        val recs = df.toJSON.collect().map(parseJsonToMap)
+        val recs = jsonRows(df).map(parseJsonToMap)
         val path = java.nio.file.Paths.get(uri.stripPrefix("file:"))
         Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
         java.nio.file.Files.write(path, Bson.renderAll(recs.toIndexedSeq))
@@ -329,7 +356,7 @@ object DataStoreIO {
     try out.write(bytes) finally out.close()
   }
 
-  /** Parse one flat JSON record (output of df.toJSON) to a Scala map. */
+  /** Parse one flat JSON record (output of [[jsonRows]]) to a Scala map. */
   private def parseJsonToMap(json: String): Map[String, Any] = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(json)

@@ -4,7 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 import graft.catalog._
 import graft.geo.TileService
-import graft.io.TextFormats
+import graft.io.{DataStoreIO, TextFormats}
 
 import java.net.{InetSocketAddress, URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -353,11 +353,11 @@ final class Server(spark: SparkSession, val exec: Exec, port: Int,
         val vars = if (body.trim.isEmpty) Map.empty[String, Any]
           else Catalog.parseJsonDoc(body)
             .getOrElse("variables", Map.empty).asInstanceOf[Map[String, Any]]
-        val rows = exec.serviceExec(name, vars).toJSON.collect()
+        val rows = DataStoreIO.jsonRows(exec.serviceExec(name, vars))
         respondJsonRows(x, ext, rows)
 
       case ("POST", "jobs" :: name :: "exec" :: Nil) =>
-        respondJsonRows(x, ext, exec.jobExec(name).toJSON.collect())
+        respondJsonRows(x, ext, DataStoreIO.jsonRows(exec.jobExec(name)))
 
       // streaming serving-job lifecycle — the reference routes every
       // entity's verbs through the catalog (router/RailgunRouter.go:

@@ -393,6 +393,42 @@ class CatalogSpec extends AnyFunSuite {
     assert(uri == "/data/tiles/4-7.jsonl")
   }
 
+  test("resolving a uri template starts no Spark job") {
+    val dir = Files.createTempDirectory("graft-cat").toString
+    val exec = new Exec(spark, fixtureCatalog(dir))
+    var uri = ""
+    val jobs = TestSpark.jobsStartedBy {
+      uri = exec.resolveUri("'/data/tiles/' + $z + '-' + $x + '.jsonl'",
+        Map("z" -> 4L, "x" -> 7L))
+    }
+    assert(uri == "/data/tiles/4-7.jsonl")
+    assert(jobs == 0, s"$jobs Spark jobs to resolve a uri template")
+  }
+
+  test("with graft.dfl.index.minBytes=0 an ivf service over a small datastore builds its index") {
+    val dir = Files.createTempDirectory("graft-cat").toString
+    val idxBase = Files.createTempDirectory("graft-cat-idx").toString
+    Files.writeString(Paths.get(s"$dir/vecs.jsonl"), (0 until 8).map(i =>
+      s"""{"vec_id": $i, "embedding": [${Seq(i * 1.0, 1.0, 0.5 * i).mkString(", ")}]}""")
+      .mkString("\n"))
+    val c = fixtureCatalog(dir)
+    c.add(DataStore("ws", "vecs", s"$dir/vecs.jsonl"))
+    c.add(Process("ann_ivf", "annTopK(@, '@vec_id', '@embedding', $q, 3, 'ivf')"))
+    c.add(Service("ann_ivf_svc", "vecs", "ann_ivf"))
+    spark.conf.set("graft.ivf.indexBase", idxBase)
+    spark.conf.set("graft.dfl.index.minBytes", "0")
+    try {
+      val top = new Exec(spark, c).serviceExec("ann_ivf_svc", Map("q" -> List(2.0, 1.0, 1.0)))
+        .collect().head
+      assert(top.getAs[Any]("id").toString == "2") // vec 2 is [2, 1, 1]
+      assert(new java.io.File(idxBase).listFiles().exists(f =>
+        f.isDirectory && f.getName.startsWith("idx-")), "no index stamp dir was built")
+    } finally {
+      spark.conf.unset("graft.ivf.indexBase")
+      spark.conf.unset("graft.dfl.index.minBytes")
+    }
+  }
+
   test("datastore cache invalidates on mtime change") {
     val dir = Files.createTempDirectory("graft-cat").toString
     val exec = new Exec(spark, fixtureCatalog(dir))

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -8,12 +9,15 @@ import graft.TestSpark
 import graft.catalog._
 import graft.dfl.{DflFrame, LitBuild, Named}
 import graft.geo.{TileMath, TileService}
+import graft.io.DataStoreIO
 import java.nio.file.{Files, Paths}
 
 /** Request variables bind by reference: two requests of one shape that
   * differ only in their values generate byte-identical code (one class
   * compile serves both), and return the rows a `lit`-bound build of the
-  * same DFL returns. */
+  * same DFL returns. Over the fixture's driver-held datastore a tile or
+  * `by_kind` request has no whole-stage code: its filter runs in the
+  * optimizer's generated predicate, so those cases count Janino compiles. */
 class BoundLitSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -58,6 +62,17 @@ class BoundLitSpec extends AnyFunSuite {
     LitBuild.codegen(df.queryExecution)
   }
 
+  /** Janino classes compiled while `body` runs. */
+  private def compiles(body: => Any): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** Varies run to run, so a value built from it is one no earlier build
+    * in this JVM has inlined into its code. */
+  private def fresh: Long = System.nanoTime() % 1000000
+
   private def assertSameCode(a: Seq[String], b: Seq[String]): Unit = {
     assert(a.nonEmpty, "no whole-stage code generated")
     val firstDiff = a.zipAll(b, "", "").iterator.flatMap { case (x, y) =>
@@ -68,17 +83,24 @@ class BoundLitSpec extends AnyFunSuite {
   test("tile requests share generated code and match a lit build") {
     val (_, svc) = fixture
     val tiles = Seq((8, -76.95, 38.95), (9, 2.45, 48.9))
-    val built = tiles.map { case (z, lon, lat) =>
+    val counts = tiles.map { case (z, lon, lat) =>
       val (x, y) = (TileMath.lonToTile(lon, z), TileMath.latToTile(lat, z))
+      val n = compiles(DataStoreIO.jsonRows(svc.tileQuery("points", z, x, y, buffer = 0).get))
       val df = svc.tileQuery("points", z, x, y, buffer = 0).get
       val b = TileMath.bufferedTileBoundingBox(z, x, y, 0)
       val vars = Map[String, Any]("bbox" -> Seq(b._1, b._2, b._3, b._4))
       val viaLit = DflFrame.pipeline(points, LitBuild.inline(Named.geometryFilter, vars))
       assert(rows(df).nonEmpty)
       assert(rows(df) == rows(viaLit))
-      codegenOf(df)
+      n
     }
-    assertSameCode(built(0), built(1))
+    // the counter sees this path: a lit build with a fresh value compiles
+    val b = TileMath.bufferedTileBoundingBox(8, TileMath.lonToTile(-76.95, 8),
+      TileMath.latToTile(38.95, 8), 0)
+    val freshVars = Map[String, Any]("bbox" -> Seq(b._1 + fresh * 1e-12, b._2, b._3, b._4))
+    assert(compiles(DataStoreIO.jsonRows(DflFrame.pipeline(points,
+      LitBuild.inline(Named.geometryFilter, freshVars)))) >= 1)
+    assert(counts(1) == 0, "the second bound tile request compiled new classes")
   }
 
   test("mask requests share generated code and match a lit build") {
@@ -118,15 +140,20 @@ class BoundLitSpec extends AnyFunSuite {
   test("a by_kind service with a long $cl shares generated code across requests") {
     val (exec, _) = fixture
     val expr = exec.catalog.processes("by_kind").expression
-    val built = Seq(("k1", 2L), ("k2", 3L)).map { case (kind, cl) =>
+    val counts = Seq(("k1", 2L), ("k2", 3L)).map { case (kind, cl) =>
       val vars = Map[String, Any]("kind" -> kind, "cl" -> cl)
+      val n = compiles(DataStoreIO.jsonRows(exec.serviceExec("by_kind", vars)))
       val df = exec.serviceExec("by_kind", vars)
       val viaLit = DflFrame.pipeline(points, LitBuild.inline(expr, vars), vars)
       assert(rows(df).nonEmpty)
       assert(rows(df) == rows(viaLit))
-      codegenOf(df)
+      n
     }
-    assertSameCode(built(0), built(1))
+    // the counter sees this path: a lit build with a fresh value compiles
+    val freshVars = Map[String, Any]("kind" -> "k1", "cl" -> (fresh + 4))
+    assert(compiles(DataStoreIO.jsonRows(DflFrame.pipeline(points,
+      LitBuild.inline(expr, freshVars), freshVars))) >= 1)
+    assert(counts(1) == 0, "the second bound by_kind request compiled new classes")
   }
 
   test("a cached `$c := ($c ?: filter(...))` service shares generated code across requests") {

@@ -331,4 +331,33 @@ class IoSpec extends AnyFunSuite {
     val got = bound.collect().toSet
     assert(got.nonEmpty && got == viaLit.collect().toSet)
   }
+
+  test("jsonRows renders the bytes toJSON renders") {
+    val wide = spark.sql("""
+      SELECT id AS `a.b`, concat('q"', CAST(id AS STRING), '\n') AS `c``d`,
+        named_struct('x', id, 'y', IF(id = 1, NULL, 'v'),
+          'z', named_struct('q', array(1.5D, NULL, CAST('NaN' AS DOUBLE)))) AS s,
+        IF(id = 2, NULL, array(id, id + 1)) AS arr,
+        array(named_struct('k', id), NULL) AS recs,
+        map('k', id, 'n', CAST(NULL AS BIGINT)) AS m,
+        map(CAST(id AS INT), array('one')) AS im,
+        IF(id = 0, NULL, TIMESTAMP '2024-03-01 12:34:56.789') AS ts,
+        DATE '2024-02-29' + CAST(id AS INT) AS d,
+        CAST(id AS DECIMAL(20, 4)) / 3 AS dec,
+        CAST(-12345678901234567.5 AS DECIMAL(38, 2)) AS big,
+        CAST(NULL AS STRING) AS none,
+        CAST(id AS FLOAT) / 7 AS f,
+        X'CAFE' AS bin,
+        id = 1 AS flag
+      FROM range(3)""")
+    val zeroColumns = spark.range(3).select()
+    val intervals = spark.sql(
+      "SELECT INTERVAL '1' DAY AS d, array(INTERVAL '2' YEAR) AS y, 1 AS k")
+    val sameNames = spark.range(2).select(col("id"), (col("id") * 2).as("id"))
+    for (df <- Seq(wide, zeroColumns, wide.limit(0), intervals, sameNames))
+      assert(DataStoreIO.jsonRows(df).toSeq == df.toJSON.collect().toSeq)
+    assert(DataStoreIO.jsonRows(zeroColumns).toSeq == Seq("{}", "{}", "{}"))
+    // null fields are left out, as toJSON leaves them out
+    assert(!DataStoreIO.jsonRows(wide).exists(_.contains("\"none\"")))
+  }
 }

@@ -436,7 +436,7 @@ class ServerSpec extends AnyFunSuite {
       def feat = srv.exec.readDataStore(srv.exec.catalog.datastores("feat"), Map.empty)
       val cached = feat
       assert(cached.count() == 2)
-      // a service edit cannot stale a table: the persisted read survives it
+      // a service edit cannot stale a table: the cached read survives it
       assert(authed.update("services", "svc",
         """{"datastore":"feat","process":"by_amenity","defaults":{"kind":"cafe"}}""")._1 == 200)
       assert(feat eq cached)
