@@ -1,7 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
@@ -37,13 +36,37 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
   private val serviceVarCache =
     scala.collection.concurrent.TrieMap.empty[String, (Long, Map[String, Any])]
 
-  // (resolved uri, format, compression) → (mtimeMillis, driver-held or
-  // persisted DataFrame): a datastore redefined in place with other read
-  // options misses by construction. Guarded by its own lock so two
-  // concurrent requests don't double-read + double-load
+  // (resolved uri, format, compression) → the loaded datastore: a
+  // datastore redefined in place with other read options misses by
+  // construction. Guarded by dfCacheLock, which a cold load does not
+  // hold while it reads, so it stalls no request for another datastore
   private val dataFrameCache =
-    scala.collection.mutable.Map.empty[(String, String, String), (Long, DataFrame)]
+    scala.collection.mutable.Map.empty[(String, String, String), Loaded]
   private val dfCacheLock = new Object
+
+  /** A cached datastore: its source mtime, its frame (driver-held or
+    * persisted) and the bytes on disk it holds on the driver (0 when
+    * persisted). */
+  private final class Loaded(val mtime: Long, val df: DataFrame, val heldBytes: Long)
+
+  // the on-disk bytes of every driver-held entry and of every cold load
+  // that will be held, kept ≤ heldBudget; guarded by dfCacheLock. Held
+  // rows cannot be evicted or spilled the way persisted blocks can, so
+  // a datastore past the budget is persisted however small it is
+  private var heldBytes = 0L
+  private[catalog] var heldBudget: Long = Runtime.getRuntime.maxMemory / 64
+
+  private[catalog] def heldBytesNow: Long = dfCacheLock.synchronized(heldBytes)
+
+  // the largest datastore held on the driver. Held rows save a request
+  // its job, but every plan over them walks each row several times
+  // (analysis and optimizer passes map over LocalRelation.data) and
+  // evaluates the filter over all of them, so past some size persisting
+  // is faster. Measured with perfbench's serve_http request mix over
+  // point features of ~165 bytes a row (4 vCPU): requests per second are
+  // 20% higher held at 20 000 rows (3.3 MB), even at 30 000 (5 MB) and
+  // 15% lower at 40 000 (6.6 MB)
+  private val heldMaxBytes = 4L << 20
 
   // bumped on every catalog mutation; serviceExec write-backs are fenced
   // on it so an exec in flight across a mutation cannot re-publish
@@ -65,8 +88,15 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
 
   /** Drop (and unpersist) every cached datastore DataFrame. */
   def invalidateDataFrames(): Unit = dfCacheLock.synchronized {
-    dataFrameCache.values.foreach(_._2.unpersist())
+    dataFrameCache.values.foreach(release)
     dataFrameCache.clear()
+  }
+
+  /** Unpersist `e`'s frame and return its held bytes to the budget.
+    * Callers hold dfCacheLock. */
+  private def release(e: Loaded): Unit = {
+    e.df.unpersist()
+    heldBytes -= e.heldBytes
   }
 
   /** Evaluate a DFL URI template with variables bound (a table location is
@@ -100,7 +130,7 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
   }
 
   private lazy val oneRow =
-    Bridge.localFrame(spark, new StructType(), Seq(InternalRow.empty))
+    graft.llm.Similarity.localFrame(spark, Array(Row.empty), new StructType())
 
   /** (newest mtime, total bytes) of the file, or the files directly in the
     * directory, that `uri` names. Bytes are -1 when they are unknown: no
@@ -118,35 +148,68 @@ final class Exec(spark: SparkSession, val catalog: Catalog) {
   /** Cached datastore read, invalidated by mtime. A small uncompressed
     * datastore is held on the driver as rows ([[Bridge.collectLocal]]), so
     * the filters, projections and limits of a tile or service request
-    * fold in the optimizer and start no job. Any other is persisted. */
+    * fold in the optimizer and start no job. Any other is persisted.
+    *
+    * A cold load reads (and collects) outside dfCacheLock; when two
+    * requests load the same key at once, the first to land is kept. */
   def readDataStore(ds: DataStore, vars: Map[String, Any]): DataFrame = {
     val uri = resolveUri(ds.uri, vars)
     val key = (uri, ds.format, ds.compression)
     val (mtime, bytes) = statOf(uri)
     dfCacheLock.synchronized {
       dataFrameCache.get(key) match {
-        case Some((t, df)) if t == mtime => df
+        case Some(e) if e.mtime == mtime => Some(e.df)
         case stale =>
-          stale.foreach(_._2.unpersist())
-          val read = DataStoreIO.read(spark, uri, DataStoreIO.ReadOptions(
-            format = ds.format, compression = ds.compression))
-          val df =
-            if (heldLocally(uri, ds.compression, bytes)) Bridge.collectLocal(read)
-            else read.persist()
-          dataFrameCache(key) = (mtime, df)
+          stale.foreach { e => release(e); dataFrameCache -= key }
+          None
+      }
+    }.getOrElse(load(ds, uri, key, mtime, bytes))
+  }
+
+  private def load(ds: DataStore, uri: String, key: (String, String, String),
+                   mtime: Long, bytes: Long): DataFrame = {
+    val held = holdable(ds, uri, bytes) && dfCacheLock.synchronized {
+      heldBytes + bytes <= heldBudget && { heldBytes += bytes; true }
+    }
+    val heldNow = if (held) bytes else 0L
+    val read = try {
+      val r = DataStoreIO.read(spark, uri, DataStoreIO.ReadOptions(
+        format = ds.format, compression = ds.compression))
+      if (held) Bridge.collectLocal(r) else r
+    } catch {
+      case e: Throwable =>
+        dfCacheLock.synchronized(heldBytes -= heldNow)
+        throw e
+    }
+    dfCacheLock.synchronized {
+      dataFrameCache.get(key) match {
+        case Some(first) if first.mtime == mtime =>
+          heldBytes -= heldNow
+          first.df
+        case other =>
+          other.foreach(release)
+          // persist() only once this load is kept, after any stale
+          // entry's unpersist: a re-read of the same plan shares its cache
+          val df = if (held) read else read.persist()
+          dataFrameCache(key) = new Loaded(mtime, df, heldNow)
           df
       }
     }
   }
 
-  /** A datastore is held on the driver only when it is uncompressed and
-    * its bytes on disk are under both 1/64 of the driver heap and the
-    * `graft.dfl.index.minBytes` bound, so a corpus large enough for the
-    * file-backed ANN/BM25 index path still has a file-backed plan. */
-  private def heldLocally(uri: String, compression: String, bytes: Long): Boolean = {
-    val codec = if (compression.nonEmpty) compression else FormatInfer.split(uri).compression
-    (codec.isEmpty || codec == "none") && bytes >= 0 &&
-      bytes < math.min(Runtime.getRuntime.maxMemory / 64, DflFrame.indexMinBytes(spark))
+  /** A datastore may be held on the driver only when it is uncompressed,
+    * row-oriented text (parquet and orc compress internally, so their
+    * bytes on disk understate the rows) and its bytes on disk are under
+    * both `heldMaxBytes` and the `graft.dfl.index.minBytes` bound, so a
+    * corpus large enough for the file-backed ANN/BM25 index path still
+    * has a file-backed plan. [[load]] then holds it only while the held
+    * budget has room. */
+  private def holdable(ds: DataStore, uri: String, bytes: Long): Boolean = {
+    val inf = FormatInfer.split(uri)
+    val codec = if (ds.compression.nonEmpty) ds.compression else inf.compression
+    val format = if (ds.format.nonEmpty) ds.format else inf.format
+    (codec.isEmpty || codec == "none") && format != "parquet" && format != "orc" &&
+      bytes >= 0 && bytes < math.min(heldMaxBytes, DflFrame.indexMinBytes(spark))
   }
 
   private val tokenizerKinds = Set("bpe", "byte-bpe", "wordpiece", "unigram")

@@ -3,7 +3,10 @@ package graft.catalog
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.llm.{Ann, Retrieval}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
 class CatalogSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -437,6 +440,63 @@ class CatalogSpec extends AnyFunSuite {
     Files.writeString(Paths.get(s"$dir/places.jsonl"),
       """{"amenity":"bar","name":"A","qty":5}""")
     assert(exec.serviceExec("svc").count() == 1)
+  }
+
+  test("driver-held datastores stay within the held budget; the rest are persisted") {
+    val dir = Files.createTempDirectory("graft-cat").toString
+    val exec = new Exec(spark, fixtureCatalog(dir))
+    val tiles = 0 until 12
+    for (t <- tiles) Files.writeString(Paths.get(s"$dir/tile-$t.jsonl"),
+      (0 until 20).map(i => s"""{"t": $t, "i": $i}""").mkString("\n"))
+    val size = tiles.map(t => Files.size(Paths.get(s"$dir/tile-$t.jsonl"))).max
+    exec.heldBudget = 3 * size + 1
+    exec.catalog.add(DataStore("ws", "tiles", s"'$dir/tile-' + $$t + '.jsonl'"))
+    val ds = exec.catalog.datastores("tiles")
+    val frames = tiles.map { t =>
+      val df = exec.readDataStore(ds, Map("t" -> t.toLong))
+      assert(exec.heldBytesNow <= exec.heldBudget)
+      assert(df.where("t = " + t).count() == 20)
+      df
+    }
+    val persisted = frames.count(_.storageLevel != StorageLevel.NONE)
+    assert(persisted >= tiles.size - 3, s"$persisted of ${tiles.size} tiles persisted")
+    assert(exec.heldBytesNow > 0)
+    exec.invalidateDataFrames()
+    assert(exec.heldBytesNow == 0)
+    exec.heldBudget = Long.MaxValue
+    // parquet compresses internally: never held, however small
+    spark.range(5).write.parquet(s"$dir/small.parquet")
+    exec.catalog.add(DataStore("ws", "pq", s"'$dir/small.parquet'"))
+    val pq = exec.readDataStore(exec.catalog.datastores("pq"), Map.empty)
+    assert(pq.storageLevel != StorageLevel.NONE && exec.heldBytesNow == 0)
+    assert(pq.count() == 5)
+    // past the size where held rows stop paying for their planning, a
+    // datastore is persisted with budget to spare
+    Files.writeString(Paths.get(s"$dir/big.jsonl"),
+      s"""{"pad": "${"x" * 1000}"}\n""" * 4200) // 4.2 MB
+    exec.catalog.add(DataStore("ws", "big", s"'$dir/big.jsonl'"))
+    val big = exec.readDataStore(exec.catalog.datastores("big"), Map.empty)
+    assert(big.storageLevel != StorageLevel.NONE && exec.heldBytesNow == 0)
+    assert(big.count() == 4200)
+    exec.invalidateDataFrames()
+  }
+
+  test("concurrent cold reads of one datastore keep one held copy") {
+    val dir = Files.createTempDirectory("graft-cat").toString
+    val exec = new Exec(spark, fixtureCatalog(dir))
+    val ds = exec.catalog.datastores("places")
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val start = new CountDownLatch(1)
+      val reads = (0 until 4).map(_ => pool.submit(new Callable[DataFrame] {
+        def call(): DataFrame = { start.await(); exec.readDataStore(ds, Map.empty) }
+      }))
+      start.countDown()
+      val frames = reads.map(_.get(120, TimeUnit.SECONDS))
+      assert(frames.forall(_ eq frames.head), "each request kept its own load")
+      assert(exec.heldBytesNow == Files.size(Paths.get(s"$dir/places.jsonl")))
+    } finally pool.shutdown()
+    exec.invalidateDataFrames()
   }
 
   test("catalog persists to json and yaml and round-trips") {
